@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import java.util.concurrent.atomic.{AtomicLong, LongAdder}
 
@@ -70,6 +70,103 @@ object Bench {
     }
     threads.foreach(_.join())
     (System.nanoTime() - t0) / 1e9
+  }
+
+  /** One query's timings: median and min of its reps, summed task GC ms,
+    * max single-task execution-memory peak, session storage bytes after
+    * its last rep, the per-rep wall and global-GC series, and the wall of
+    * its untimed warm rep.
+    */
+  final case class Row(name: String, median: Double, min: Double,
+      gcMs: Long, peakMem: Long, storageAfter: Long, repSec: Vector[Double],
+      repGcMs: Vector[Long], warmSec: Double)
+
+  /** Timed rows, plus every query that threw, by name, with its first
+    * error. A failed query has no row: a rep that throws is never timed
+    * as a sample, so a broken query cannot read as a speedup.
+    */
+  final case class Measured(rows: Seq[Row], failed: Map[String, String])
+
+  /** Rep visit structure: `SPARK_GRAFT_BENCH_VISITS` groups of reps per
+    * query, interleaved across the query set; default 1 (all reps
+    * back-to-back), which keeps the median−min gap smallest: reps of
+    * other queries in between evict JIT/code-cache warmth (the A/B is in
+    * OPTIMIZATION_r16.md).
+    */
+  def visitSizes(reps: Int): Seq[Int] = {
+    val nVisits = sys.env.get("SPARK_GRAFT_BENCH_VISITS")
+      .flatMap(_.toIntOption).filter(v => v >= 1 && v <= reps)
+      .getOrElse(1)
+    (0 until nVisits)
+      .map(v => reps / nVisits + (if (v < reps % nVisits) 1 else 0))
+  }
+
+  /** Median-of-`reps` `count()` timings per query, after one untimed warm
+    * rep per query at `sfDir`: the session's sf0.001 warm pass compiles
+    * codegen classes but doesn't push the per-query hot loops through
+    * tiered JIT, so without it the first timed reps measure compilation.
+    */
+  def measure(spark: SparkSession,
+      queries: Seq[(String, (SparkSession, String) => DataFrame)],
+      sfDir: String, reps: Int): Measured = {
+    val failed = collection.mutable.LinkedHashMap.empty[String, String]
+    def run(name: String, fn: (SparkSession, String) => DataFrame): Boolean =
+      try { fn(spark, sfDir).count(); true } catch { case e: Throwable =>
+        failed.getOrElseUpdate(name, String.valueOf(e)); false }
+    val warmSecs = queries.map { case (name, fn) =>
+      val w0 = System.nanoTime()
+      run(name, fn)
+      name -> (System.nanoTime() - w0) / 1e9
+    }.toMap
+    val listener = new BenchListener
+    spark.sparkContext.addSparkListener(listener)
+    // Global JVM GC time (all collectors) — unlike the task-metric sum,
+    // this also sees collections that run BETWEEN tasks or concurrently
+    // with driver-side planning, which is where cross-query interference
+    // hides.
+    def jvmGcMs(): Long = {
+      import scala.jdk.CollectionConverters._
+      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
+        .asScala.map(b => math.max(b.getCollectionTime, 0L)).sum
+    }
+    val repSec = collection.mutable.Map.empty[String, Vector[Double]]
+    val repGc = collection.mutable.Map.empty[String, Vector[Long]]
+    val taskGc = collection.mutable.Map.empty[String, Long]
+    val peakMem = collection.mutable.Map.empty[String, Long]
+    val storageAfter = collection.mutable.Map.empty[String, Long]
+    val sizes = visitSizes(reps)
+    try for (v <- sizes.indices; (name, fn) <- queries;
+         k <- 1 to sizes(v) if !failed.contains(name)) {
+      listener.reset()
+      val gc0 = jvmGcMs()
+      val t0 = System.nanoTime()
+      if (run(name, fn)) {
+        val sec = (System.nanoTime() - t0) / 1e9
+        repSec(name) = repSec.getOrElse(name, Vector.empty) :+ sec
+        repGc(name) =
+          repGc.getOrElse(name, Vector.empty) :+ (jvmGcMs() - gc0)
+        taskGc(name) = taskGc.getOrElse(name, 0L) + listener.gcMs.sum()
+        peakMem(name) =
+          math.max(peakMem.getOrElse(name, 0L), listener.peakExecMem.get())
+        // Storage gauge after the query's last rep: a query that leaks
+        // cached/checkpointed blocks shows up as a monotone climb across
+        // the bench run.
+        if (v == sizes.size - 1 && k == sizes(v))
+          storageAfter(name) =
+            try spark.sparkContext.getRDDStorageInfo.map(_.memSize).sum
+            catch { case _: Throwable => -1L }
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val rows = queries.collect { case (name, _) if !failed.contains(name) =>
+      val times = repSec(name).sorted
+      val median =
+        if (reps % 2 == 1) times(reps / 2)
+        else (times(reps / 2 - 1) + times(reps / 2)) / 2.0
+      Row(name, median, times.head, taskGc(name), peakMem(name),
+        storageAfter.getOrElse(name, -1L), repSec(name), repGc(name),
+        warmSecs(name))
+    }
+    Measured(rows, failed.toMap)
   }
 
   def main(args: Array[String]): Unit = {
@@ -479,121 +576,21 @@ object Bench {
       selected.toSeq.sortBy(_._1).foreach { case (_, fn) =>
         try fn(spark, warmDir).count() catch { case _: Throwable => }
       }
-    // Median-of-N per query: one timed pass cannot distinguish a real
-    // regression from driver-side contention (observed swings up to 4.5x
-    // between identical runs). Report the median (robust central tendency)
-    // and the min (best-case floor) per query; total = sum of medians.
     val reps = sys.env.get("SPARK_GRAFT_BENCH_REPS").flatMap(_.toIntOption)
       .filter(_ >= 1).getOrElse(5)
-    val listener = new BenchListener
-    spark.sparkContext.addSparkListener(listener)
-    // Global JVM GC time (all collectors) — unlike the task-metric sum,
-    // this also sees collections that run BETWEEN tasks or concurrently
-    // with driver-side planning, which is where cross-query interference
-    // hides (the r4 `unstable` flags had task gc_ms ~0).
-    def jvmGcMs(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(b => math.max(b.getCollectionTime, 0L)).sum
-    }
-    val ordered = selected.toSeq.sortBy(_._1)
-    // Per-query untimed warm rep at the TARGET SF before the timed
-    // passes: the sf0.001 session warm pass compiles codegen classes but
-    // doesn't push the per-query hot loops through tiered JIT (C2 needs
-    // data-scale invocation counts), so without this the first timed
-    // reps of a query can measure compilation/deopt recovery instead of
-    // data-proportional work (the r5 driver run showed q_ts_resample
-    // reps decaying 0.748→0.144 s — classic warm-down the median doesn't
-    // hide). The warm rep's wall time is kept as telemetry (warm_sec)
-    // so first-run cost stays visible instead of silently discarded.
-    val warmSecs = ordered.map { case (name, fn) =>
-      val w0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      name -> (System.nanoTime() - w0) / 1e9
-    }.toMap
     // host-speed calibration brackets the timed region (see calibSec /
     // calibParSec — single-core for frequency epochs, all-core for
     // contention epochs)
     val calibBefore = calibSec()
     val calibParBefore = calibParSec()
-    // INTERLEAVED VISITS (the r6 lesson): three driver rounds in a row
-    // showed host-contention windows marching through the run and
-    // inflating whichever queries happened to execute inside them 8-13x
-    // (alphabetically clustered, per-rep GC flat — not a plan property).
-    // With N consecutive reps per query, a contention window lands ALL
-    // of one query's reps inside it and the median is polluted. Full
-    // rep-major interleaving fixes that but costs ~1.4x on sub-second
-    // queries (measured: 185 other queries between two reps evict the
-    // JIT/code-cache warmth the back-to-back spelling enjoyed, while
-    // CPU-bound codec queries stayed flat at 0.92-0.99x — the inflation
-    // is locality loss, not data work). Compromise: reps group into 3
-    // visits (2+2+1 for reps=5) interleaved across the headline — each
-    // visit's second rep runs warm, and a contention window can pollute
-    // at most one visit (2 of 5 reps), which the median still rejects.
-    // min-of-reps is reported alongside as the contention-immune floor.
-    val repSec = collection.mutable.Map.empty[String, Vector[Double]]
-    val repGc = collection.mutable.Map.empty[String, Vector[Long]]
-    val taskGc = collection.mutable.Map.empty[String, Long]
-    val peakMem = collection.mutable.Map.empty[String, Long]
-    val storageAfter = collection.mutable.Map.empty[String, Long]
-    // Rep-order adjudication (r16, VERDICT item 4): a same-binary,
-    // same-epoch A/B of three visit structures over the full headline —
-    // 3 visits (the r6 2+2+1 compromise) vs 1 (all reps back-to-back
-    // per query) vs 5 (fully interleaved singles) — measured total
-    // med/min gaps of 30.9% / 10.5% / 21.7% (174.9/120.9 vs 122.2/109.4
-    // vs 137.0/107.3 s; calib_par brackets 0.74→0.48, 0.71→0.49,
-    // 1.10→0.56). Back-to-back reps minimize the med−min gap BY FAR:
-    // the r6 interleave was paying a ~30% locality-eviction tax on the
-    // median (273 other queries between two reps evict JIT/code-cache
-    // warmth) that dwarfs the contention-window robustness it bought.
-    // ADOPTED default: 1 visit. The trade (a contention window now can
-    // pollute all reps of the rows inside it) stays covered by the
-    // unstable flag (med > 2x min), the regression self-flags vs the
-    // prior file, and the published min floors. "value" stays the
-    // median-sum — the metric's MEANING is unchanged, only the noise
-    // structure; both old and new rep-order numbers are published in
-    // OPTIMIZATION_r16.md. SPARK_GRAFT_BENCH_VISITS re-selects any
-    // structure for future studies.
-    val nVisits = sys.env.get("SPARK_GRAFT_BENCH_VISITS")
-      .flatMap(_.toIntOption).filter(v => v >= 1 && v <= reps)
-      .getOrElse(1)
-    val visitSizes = (0 until nVisits)
-      .map(v => reps / nVisits + (if (v < reps % nVisits) 1 else 0))
-    for (v <- 0 until nVisits; (name, fn) <- ordered;
-         k <- 1 to visitSizes(v)) {
-      listener.reset()
-      val gc0 = jvmGcMs()
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      val sec = (System.nanoTime() - t0) / 1e9
-      repSec(name) = repSec.getOrElse(name, Vector.empty) :+ sec
-      repGc(name) = repGc.getOrElse(name, Vector.empty) :+ (jvmGcMs() - gc0)
-      taskGc(name) = taskGc.getOrElse(name, 0L) + listener.gcMs.sum()
-      peakMem(name) =
-        math.max(peakMem.getOrElse(name, 0L), listener.peakExecMem.get())
-      // Storage gauge after the query's rep in the final visit: a query
-      // that leaks cached/checkpointed blocks shows up as a monotone
-      // climb across the bench run.
-      if (v == nVisits - 1 && k == visitSizes(v))
-        storageAfter(name) =
-          try spark.sparkContext.getRDDStorageInfo.map(_.memSize).sum
-          catch { case _: Throwable => -1L }
-    }
-    // (name, median, min, gcMs, peakExecMem, storageBytesAfter,
-    //  perRepSec, perRepGcMs, warmSec)
-    val results = ordered.map { case (name, _) =>
-      val times = repSec(name).sorted
-      val median =
-        if (reps % 2 == 1) times(reps / 2)
-        else (times(reps / 2 - 1) + times(reps / 2)) / 2.0
-      (name, median, times.head, taskGc(name), peakMem(name),
-        storageAfter.getOrElse(name, -1L), repSec(name), repGc(name),
-        warmSecs(name))
-    }
-    val qs = results.map { case (k, med, _, _, _, _, _, _, _) =>
-      "\"" + k + "\":" + med }.mkString("{", ",", "}")
-    val mins = results.map { case (k, _, mn, _, _, _, _, _, _) =>
-      "\"" + k + "\":" + mn }.mkString("{", ",", "}")
+    val Measured(rows, failed) =
+      measure(spark, selected.toSeq.sortBy(_._1), sfDir, reps)
+    failed.foreach { case (k, e) =>
+      System.err.println(s"[bench] $k FAILED (left out of the totals): $e") }
+    val qs = rows.map(r => "\"" + r.name + "\":" + r.median)
+      .mkString("{", ",", "}")
+    val mins = rows.map(r => "\"" + r.name + "\":" + r.min)
+      .mkString("{", ",", "}")
     // Per-query telemetry: summed task GC ms over the reps, max single-task
     // execution-memory peak, session storage bytes after the query, an
     // instability flag (median > 2x min = contention/GC, not the plan), and
@@ -603,15 +600,15 @@ object Bench {
     // comma-decimal locales would emit "0,123" — invalid JSON.
     def f3(t: Double) =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(t))
-    val telem = results.map { case (k, med, mn, gc, pk, st, rs, rg, ws) =>
-      val unstable = mn > 0 && med > 2 * mn
-      val repsS = rs.map(f3).mkString("[", ",", "]")
-      val repsG = rg.mkString("[", ",", "]")
-      s""""$k":{"gc_ms":$gc,"peak_exec_mem":$pk,"storage_bytes_after":$st,"unstable":$unstable,"warm_sec":${f3(ws)},"rep_sec":$repsS,"rep_gc_ms":$repsG}"""
+    val telem = rows.map { r =>
+      val unstable = r.min > 0 && r.median > 2 * r.min
+      val repsS = r.repSec.map(f3).mkString("[", ",", "]")
+      val repsG = r.repGcMs.mkString("[", ",", "]")
+      s""""${r.name}":{"gc_ms":${r.gcMs},"peak_exec_mem":${r.peakMem},"storage_bytes_after":${r.storageAfter},"unstable":$unstable,"warm_sec":${f3(r.warmSec)},"rep_sec":$repsS,"rep_gc_ms":$repsG}"""
     }.mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    val totalMin = results.map(_._3).sum
-    val nq = results.size
+    val total = rows.map(_.median).sum
+    val totalMin = rows.map(_.min).sum
+    val nq = rows.size
     // r16 (the round-15 verdict's top item): the stdout `queries` map now
     // carries EVERY per-query median (plus a `queries_min` map of the
     // contention-immune floors) so the driver's round-over-round diff can
@@ -628,12 +625,14 @@ object Bench {
     // tail-truncated regex read recover the headline number.
     def f4(t: Double) =
       String.format(java.util.Locale.ROOT, "%.4f", Double.box(t))
-    val qMed4 = results.map { case (k, med, _, _, _, _, _, _, _) =>
-      "\"" + k + "\":" + f4(med) }.mkString(",")
-    val qMin4 = results.map { case (k, _, mn, _, _, _, _, _, _) =>
-      "\"" + k + "\":" + f4(mn) }.mkString(",")
+    val qMed4 =
+      rows.map(r => "\"" + r.name + "\":" + f4(r.median)).mkString(",")
+    val qMin4 =
+      rows.map(r => "\"" + r.name + "\":" + f4(r.min)).mkString(",")
+    val failedJs = failed.keys.toSeq.sorted.map("\"" + _ + "\"")
+      .mkString("[", ",", "]")
     val compact =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":{"all_$nq":$total,$qMed4},"queries_min":{$qMin4},"reps":$reps,"sf":"$sfDir","metric":"total","value":$total,"unit":"sec"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":{"all_$nq":$total,$qMed4},"queries_min":{$qMin4},"failed":$failedJs,"reps":$reps,"sf":"$sfDir","metric":"total","value":$total,"unit":"sec"}"""
     // Full detail to the file sink. Default is cwd-relative so the path works
     // wherever the repo is checked out; SPARK_GRAFT_BENCH_OUT overrides.
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
@@ -676,9 +675,9 @@ object Bench {
                 .map(g => g.group(1) -> g.group(2).toDouble).toMap
           }
       } catch { case _: Throwable => Map.empty }
-    val regressed = results.flatMap { case (k, _, mn, _, _, _, _, _, _) =>
-      prevMins.get(k).filter(p => p > 0 && mn > 1.5 * p).map(p =>
-        s""""$k":{"prev_min":${f3(p)},"min":${f3(mn)},"ratio":${f3(mn / p)}}""")
+    val regressed = rows.flatMap { r =>
+      prevMins.get(r.name).filter(p => p > 0 && r.min > 1.5 * p).map(p =>
+        s""""${r.name}":{"prev_min":${f3(p)},"min":${f3(r.min)},"ratio":${f3(r.min / p)}}""")
     }.mkString("{", ",", "}")
     // Per-slot pinned-checkpoint storage ledger (bytes, mem+disk): a
     // future memo addition that pins a fact-scale frame shows up here at
@@ -697,7 +696,7 @@ object Bench {
     val memoBypass =
       sys.env.get("SPARK_GRAFT_MEMO_BYPASS").exists(_.nonEmpty)
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","total_min":$totalMin,"queries":$qs,"queries_min":$mins,"telemetry":$telem,"regressed_vs_prev":$regressed,"storage_by_slot":$slotLedger,"calib_sec_before":${f3(calibBefore)},"calib_sec_after":${f3(calibAfter)},"calib_par_sec_before":${f3(calibParBefore)},"calib_par_sec_after":${f3(calibParAfter)},"memo_bypass":$memoBypass,"reps":$reps,"rep_order":"interleaved_visits_${visitSizes.mkString("_")}","sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","total_min":$totalMin,"queries":$qs,"queries_min":$mins,"telemetry":$telem,"regressed_vs_prev":$regressed,"storage_by_slot":$slotLedger,"calib_sec_before":${f3(calibBefore)},"calib_sec_after":${f3(calibAfter)},"calib_par_sec_before":${f3(calibParBefore)},"calib_par_sec_after":${f3(calibParAfter)},"failed":$failedJs,"memo_bypass":$memoBypass,"reps":$reps,"rep_order":"interleaved_visits_${visitSizes(reps).mkString("_")}","sf":"$sfDir"}"""
     try {
       val w = new java.io.PrintWriter(outPath)
       try w.println(full) finally w.close()
@@ -708,5 +707,6 @@ object Bench {
     // Print last, after spark.stop(), so no late INFO/WARN line can land
     // between this and process exit.
     println(compact)
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

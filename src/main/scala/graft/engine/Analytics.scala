@@ -18,8 +18,8 @@ object Analytics {
 
   private def revenue = col("l_extendedprice") * (lit(1) - col("l_discount"))
 
-  /** Unpersist the blocks behind a localCheckpoint'd frame (same helper as
-    * Vectors.freeCheckpoint — see the rationale there).
+  /** Unpersist the blocks behind a localCheckpoint'd frame (see
+    * Checkpoints.free).
     */
   private def freeCheckpoint(df: DataFrame): Unit = Checkpoints.free(df)
 

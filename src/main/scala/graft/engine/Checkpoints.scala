@@ -71,6 +71,16 @@ object Checkpoints {
     df
   }
 
+  /** Free every frame `s` pinned. Sessions made by `newSession()` share
+    * one SparkContext, so one of them cannot be stopped alone; a caller
+    * done with such a session releases its pins here instead of holding
+    * them until the context stops.
+    */
+  def release(s: SparkSession): Unit =
+    pinnedFrames.foreach { case (k, df) =>
+      if ((df.sparkSession eq s) && pinnedFrames.remove(k, df)) free(df)
+    }
+
   /** When set (any non-empty value), memo() rebuilds on every invocation
     * instead of serving the session-cached frame — so a timing run
     * measures the cold derivation the query label implies, not a read of

@@ -23,17 +23,31 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * instead of the fold's 0/0 = NaN — NaN inverts between `desc` sorts (NaN
   * greatest) and `min(struct(-cos, id))` argmins (NaN last), so a defined
   * "no similarity" value is the only ordering-stable choice.
+  *
+  * A bigint-array input is read as its elements' double casts (the
+  * conversion `CAST(x AS DOUBLE)` makes), so cosine_sim over integer
+  * micros equals cosine_sim over their `transform(.., double)` without
+  * building that array — inside a lambda over centroids it would
+  * otherwise be rebuilt once per centroid.
   */
 case class CosineSimilarity(left: Expression, right: Expression)
     extends BinaryExpression {
+  import org.apache.spark.sql.types.LongType
+
+  private def isLong(e: Expression): Boolean = e.dataType match {
+    case ArrayType(LongType, _) => true
+    case _ => false
+  }
+  @transient private lazy val lx = isLong(left)
+  @transient private lazy val ly = isLong(right)
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (Seq(left, right).forall(_.dataType match {
-      case ArrayType(DoubleType, _) => true
+      case ArrayType(DoubleType | LongType, _) => true
       case _ => false
     })) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"cosine_sim expects array<double> inputs, got " +
+      s"cosine_sim expects array<double|bigint> inputs, got " +
         s"${left.dataType.sql} / ${right.dataType.sql}")
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
@@ -49,8 +63,8 @@ case class CosineSimilarity(left: Expression, right: Expression)
     var nb = 0.0
     var i = 0
     while (i < n) {
-      val xi = x.getDouble(i)
-      val yi = y.getDouble(i)
+      val xi = if (lx) x.getLong(i).toDouble else x.getDouble(i)
+      val yi = if (ly) y.getLong(i).toDouble else y.getDouble(i)
       dot += xi * yi
       na += xi * xi
       nb += yi * yi
@@ -70,6 +84,8 @@ case class CosineSimilarity(left: Expression, right: Expression)
       val nb = ctx.freshName("nb")
       val xi = ctx.freshName("xi")
       val yi = ctx.freshName("yi")
+      def get(e: Expression, arr: String) =
+        if (isLong(e)) s"(double) $arr.getLong($i)" else s"$arr.getDouble($i)"
       s"""
          |if ($a.numElements() != $b.numElements()) {
          |  ${ev.isNull} = true;
@@ -77,8 +93,8 @@ case class CosineSimilarity(left: Expression, right: Expression)
          |  int $n = $a.numElements();
          |  double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
          |  for (int $i = 0; $i < $n; $i++) {
-         |    double $xi = $a.getDouble($i);
-         |    double $yi = $b.getDouble($i);
+         |    double $xi = ${get(left, a)};
+         |    double $yi = ${get(right, b)};
          |    $dot += $xi * $yi; $na += $xi * $xi; $nb += $yi * $yi;
          |  }
          |  ${ev.value} = ($na == 0.0 || $nb == 0.0) ? 0.0 : $dot /

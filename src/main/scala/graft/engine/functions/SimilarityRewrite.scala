@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType}
 
 /** Opt-in marker for approximate similarity joins: `graft_approx(e)` is
   * the identity on its argument, but tells [[SimilarityJoinRewrite]]
@@ -32,7 +32,9 @@ case class GraftApprox(child: Expression) extends UnaryExpression {
       newChild: Expression): Expression = copy(newChild)
 }
 
-/** 16-bit hyperplane (SimHash) signature of a float/double vector:
+/** 16-bit hyperplane (SimHash) signature of a float/double/bigint vector
+  * (bigint elements are read as their double casts, as cosine_sim reads
+  * them, so a rewrite over integer micros buckets on the same values):
   * bit p = sign of the dot product with a deterministic Rademacher (±1)
   * hyperplane derived by hashing (p, i) — no plane matrix is stored or
   * shipped. Two identical vectors always share the signature; vectors at
@@ -44,27 +46,29 @@ case class GraftApprox(child: Expression) extends UnaryExpression {
 case class SimHashBucket(child: Expression) extends UnaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) =>
+    case ArrayType(FloatType | DoubleType | LongType, _) =>
       TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
-      s"simhash_bucket expects array<float|double>, got ${other.sql}")
+      s"simhash_bucket expects array<float|double|bigint>, got ${other.sql}")
   }
   override def dataType: DataType = IntegerType
   override def prettyName: String = "simhash_bucket"
 
-  private def isFloat = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
+  /** Element kind handed to [[SimHashBucket.signature]]. */
+  private def kind: Int = child.dataType match {
+    case ArrayType(FloatType, _) => SimHashBucket.FloatElems
+    case ArrayType(LongType, _) => SimHashBucket.LongElems
+    case _ => SimHashBucket.DoubleElems
   }
 
   override def nullSafeEval(v: Any): Any =
-    SimHashBucket.signature(v.asInstanceOf[ArrayData], isFloat)
+    SimHashBucket.signature(v.asInstanceOf[ArrayData], kind)
 
   override protected def doGenCode(ctx: CodegenContext,
       ev: ExprCode): ExprCode = {
     val helper = SimHashBucket.getClass.getName.stripSuffix("$") + "$.MODULE$"
     nullSafeCodeGen(ctx, ev, v =>
-      s"${ev.value} = $helper.signature($v, $isFloat);")
+      s"${ev.value} = $helper.signature($v, $kind);")
   }
 
   override protected def withNewChildInternal(
@@ -72,6 +76,10 @@ case class SimHashBucket(child: Expression) extends UnaryExpression {
 }
 
 object SimHashBucket {
+  final val DoubleElems = 0
+  final val FloatElems = 1
+  final val LongElems = 2
+
   /** splitmix64-style finalizer over the (plane, element) pair. */
   def mix(p: Int, i: Int): Long = {
     var h = p.toLong * 0x9E3779B97F4A7C15L + i.toLong * 0xC2B2AE3D27D4EB4FL
@@ -81,7 +89,7 @@ object SimHashBucket {
   }
 
   /** Shared by interpreted eval and generated code. */
-  def signature(arr: ArrayData, isFloat: Boolean): Int = {
+  def signature(arr: ArrayData, kind: Int): Int = {
     val n = arr.numElements()
     var sig = 0
     var p = 0
@@ -89,7 +97,11 @@ object SimHashBucket {
       var dot = 0.0
       var i = 0
       while (i < n) {
-        val x = if (isFloat) arr.getFloat(i).toDouble else arr.getDouble(i)
+        val x = kind match {
+          case FloatElems => arr.getFloat(i).toDouble
+          case LongElems => arr.getLong(i).toDouble
+          case _ => arr.getDouble(i)
+        }
         dot += (if ((mix(p, i) & 1L) == 0L) x else -x)
         i += 1
       }

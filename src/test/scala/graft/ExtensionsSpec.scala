@@ -125,4 +125,34 @@ class ExtensionsSpec extends SparkSuite {
     assert(df.collect().toSeq === exact.collect().toSeq)
     assert(df.count() === 10L, "exactly the ten planted copy pairs")
   }
+
+  test("similarity-join rewrite over bigint micros buckets their double casts") {
+    import org.apache.spark.sql.functions._
+    graft.engine.functions.GraftFunctions.register(spark)
+    val emb = graft.engine.Tables.embeddings(spark, sf)
+      .filter(col("vec_id") < 300)
+      .select(col("vec_id"), expr("int_micros(embedding)").as("q"))
+    val corpus = emb.unionByName(emb.filter(col("vec_id") < 10)
+      .select((col("vec_id") + 1000000L).as("vec_id"), col("q")))
+    // cosine_sim reads bigint elements as their double casts, so the
+    // bucket the rewrite joins on must read them the same way
+    val split = corpus.filter(expr("simhash_bucket(q)") =!=
+      expr("simhash_bucket(transform(q, x -> CAST(x AS DOUBLE)))"))
+    assert(split.count() === 0L)
+    val a = corpus.select(col("vec_id").as("id_a"), col("q").as("qa"))
+    val b = corpus.select(col("vec_id").as("id_b"), col("q").as("qb"))
+    def pairs(cos: String): org.apache.spark.sql.DataFrame = a.crossJoin(b)
+      .filter(col("id_a") < col("id_b") && expr(cos) >= 0.99)
+      .select(col("id_a"), col("id_b"))
+      .orderBy(col("id_a"), col("id_b"))
+    val approx = pairs("graft_approx(cosine_sim(qa, qb))")
+    val physical = approx.queryExecution.executedPlan.toString
+    assert(physical.contains("simhash_bucket")
+      && !physical.contains("CartesianProduct")
+      && !physical.contains("BroadcastNestedLoopJoin"),
+      s"rewrite did not fire:\n$physical")
+    assert(approx.collect().toSeq ===
+      pairs("cosine_sim(qa, qb)").collect().toSeq)
+    assert(approx.count() === 10L, "exactly the ten planted copy pairs")
+  }
 }
