@@ -87,24 +87,13 @@ object Bench {
     */
   final case class Measured(rows: Seq[Row], failed: Map[String, String])
 
-  /** Rep visit structure: `SPARK_GRAFT_BENCH_VISITS` groups of reps per
-    * query, interleaved across the query set; default 1 (all reps
-    * back-to-back), which keeps the median−min gap smallest: reps of
-    * other queries in between evict JIT/code-cache warmth (the A/B is in
-    * OPTIMIZATION_r16.md).
-    */
-  def visitSizes(reps: Int): Seq[Int] = {
-    val nVisits = sys.env.get("SPARK_GRAFT_BENCH_VISITS")
-      .flatMap(_.toIntOption).filter(v => v >= 1 && v <= reps)
-      .getOrElse(1)
-    (0 until nVisits)
-      .map(v => reps / nVisits + (if (v < reps % nVisits) 1 else 0))
-  }
-
   /** Median-of-`reps` `count()` timings per query, after one untimed warm
     * rep per query at `sfDir`: the session's sf0.001 warm pass compiles
     * codegen classes but doesn't push the per-query hot loops through
     * tiered JIT, so without it the first timed reps measure compilation.
+    * A query's reps run back-to-back, which keeps the median−min gap
+    * smallest: reps of other queries in between evict JIT/code-cache
+    * warmth (the A/B is in OPTIMIZATION_r16.md).
     */
   def measure(spark: SparkSession,
       queries: Seq[(String, (SparkSession, String) => DataFrame)],
@@ -134,9 +123,8 @@ object Bench {
     val taskGc = collection.mutable.Map.empty[String, Long]
     val peakMem = collection.mutable.Map.empty[String, Long]
     val storageAfter = collection.mutable.Map.empty[String, Long]
-    val sizes = visitSizes(reps)
-    try for (v <- sizes.indices; (name, fn) <- queries;
-         k <- 1 to sizes(v) if !failed.contains(name)) {
+    try for ((name, fn) <- queries; k <- 1 to reps
+         if !failed.contains(name)) {
       listener.reset()
       val gc0 = jvmGcMs()
       val t0 = System.nanoTime()
@@ -151,7 +139,7 @@ object Bench {
         // Storage gauge after the query's last rep: a query that leaks
         // cached/checkpointed blocks shows up as a monotone climb across
         // the bench run.
-        if (v == sizes.size - 1 && k == sizes(v))
+        if (k == reps)
           storageAfter(name) =
             try spark.sparkContext.getRDDStorageInfo.map(_.memSize).sum
             catch { case _: Throwable => -1L }
@@ -170,29 +158,8 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    // estimator-study knobs are legitimate here (bench-only studies),
-    // but announce them so a knob leaked from a shell profile can't
-    // silently skew the centrality rows' timings (ADVICE r14)
-    Seq("SPARK_GRAFT_CENTRALITY_SOURCES", "SPARK_GRAFT_CENTRALITY_HOPS",
-      "SPARK_GRAFT_DEDUP_DEMO_BOUND")
-      .filter(sys.env.contains).foreach(k => System.err.println(
-        s"[bench] NOTE: $k=${sys.env(k)} — affected rows run with " +
-          "overridden estimator/demo parameters (oracle parity off)"))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // register native functions once via extensions so per-query
-      // createOrReplaceTempFunction replacement warnings don't fire
-      .withExtensions(new graft.engine.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries nanosecond timestamps (INT64 nanos);
-      // surface them as long so Tables.events can DIV to micros exactly.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     // Warm the session (JIT, codegen, parquet footer caches) with one small
     // untimed query so startup cost isn't attributed to the first query.
     try SparkEntry.entry(spark).count() catch { case _: Throwable => }
@@ -696,7 +663,7 @@ object Bench {
     val memoBypass =
       sys.env.get("SPARK_GRAFT_MEMO_BYPASS").exists(_.nonEmpty)
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","total_min":$totalMin,"queries":$qs,"queries_min":$mins,"telemetry":$telem,"regressed_vs_prev":$regressed,"storage_by_slot":$slotLedger,"calib_sec_before":${f3(calibBefore)},"calib_sec_after":${f3(calibAfter)},"calib_par_sec_before":${f3(calibParBefore)},"calib_par_sec_after":${f3(calibParAfter)},"failed":$failedJs,"memo_bypass":$memoBypass,"reps":$reps,"rep_order":"interleaved_visits_${visitSizes(reps).mkString("_")}","sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","total_min":$totalMin,"queries":$qs,"queries_min":$mins,"telemetry":$telem,"regressed_vs_prev":$regressed,"storage_by_slot":$slotLedger,"calib_sec_before":${f3(calibBefore)},"calib_sec_after":${f3(calibAfter)},"calib_par_sec_before":${f3(calibParBefore)},"calib_par_sec_after":${f3(calibParAfter)},"failed":$failedJs,"memo_bypass":$memoBypass,"reps":$reps,"rep_order":"interleaved_visits_$reps","sf":"$sfDir"}"""
     try {
       val w = new java.io.PrintWriter(outPath)
       try w.println(full) finally w.close()

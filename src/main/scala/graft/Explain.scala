@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev aid: print the formatted physical plan and wall-clock for one query.
   * Usage: runMain graft.Explain <queryName> [sfDir]
@@ -8,31 +7,13 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // register native functions once via extensions so per-query
-      // createOrReplaceTempFunction replacement warnings don't fire
-      .withExtensions(new graft.engine.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries nanosecond timestamps (INT64 nanos);
-      // surface them as long so Tables.events can DIV to micros exactly.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     val reps = if (args.length > 2) args(2).toInt else 1
-    // rebuild=1 re-invokes the query builder inside the timed region,
-    // like Bench does — the honest number for queries with eager
-    // localCheckpoints, whose build cost a build-once loop would hide
-    val rebuild = sys.env.get("SPARK_GRAFT_EXPLAIN_REBUILD").contains("1")
     val df = SparkEntry.queries(name)(spark, sfDir)
     df.explain("formatted")
     (1 to reps).foreach { k =>
       val t0 = System.nanoTime()
-      val n = (if (rebuild) SparkEntry.queries(name)(spark, sfDir) else df)
-        .count()
+      val n = df.count()
       println(
         f"[explain] $name rows=$n time=${(System.nanoTime() - t0) / 1e9}%.2fs rep=$k")
     }

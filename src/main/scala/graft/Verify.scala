@@ -28,35 +28,7 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    // Estimator-study knobs silently change q_graph_closeness (and the
-    // memoized estimate feeding the stability ledger) away from the
-    // oracle-matched defaults — a correctness dump under them would
-    // diverge from DuckDB with no visible cause. Abort, loudly
-    // (ADVICE r14): the knobs stay usable for explicit Bench/Explain
-    // estimator studies only.
-    val knobs = Seq("SPARK_GRAFT_CENTRALITY_SOURCES",
-      "SPARK_GRAFT_CENTRALITY_HOPS", "SPARK_GRAFT_DEDUP_DEMO_BOUND")
-      .filter(sys.env.contains)
-    if (knobs.nonEmpty) {
-      System.err.println(s"[verify] FATAL: ${knobs.mkString(", ")} " +
-        "set — estimator/demo-bound overrides break oracle parity by " +
-        "design; unset them for a correctness dump")
-      sys.exit(2)
-    }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // register native functions once via extensions so per-query
-      // createOrReplaceTempFunction replacement warnings don't fire
-      .withExtensions(new graft.engine.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries nanosecond timestamps (INT64 nanos);
-      // surface them as long so Tables.events can DIV to micros exactly.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     new java.io.File(outDir).mkdirs()
     // warm the session (JIT, codegen, parquet footer caches) so the first
     // dumped query isn't billed several seconds of startup cost

@@ -1,7 +1,8 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 /** §2.9 Event-time windows, batch-checkable subset (SURVEY.md).
   *
@@ -18,9 +19,6 @@ import org.apache.spark.sql.functions._
 object Events {
   import Fx._
 
-  /** Shared localCheckpoint hygiene (see [[Checkpoints.free]]). */
-  private def freeCheckpoint(df: DataFrame): Unit = Checkpoints.free(df)
-
   /** Recursive delete for a replay protocol's staging dirs. */
   private def rmTree(p: java.io.File): Unit = {
     if (p.isDirectory)
@@ -28,30 +26,83 @@ object Events {
     p.delete(); ()
   }
 
-  /** Build-once / restart-later harness for the Trigger.Once replay
-    * protocols (the r11 "reuse one checkpoint root across the bench
-    * reps" task). The protocol's micro-batch sequence runs IN FULL
-    * exactly once per (fixture dir, tag, fixture signature): `build`
-    * clears the tag's staging dirs, writes the input batches and drives
-    * the watermark-advance sequence. Every later invocation exercises
-    * the OTHER half of the streaming contract instead — `restart`
-    * reopens the query on the durable checkpoint, where the file source
-    * finds no new files and the run commits nothing: the idempotent
+  /** The events table in the camelCase shape of [[Ev]], the input of
+    * every streaming builder and of the replay protocols' staged files.
+    */
+  private def streamEvents(s: SparkSession, d: String): DataFrame =
+    Tables.events(s, d)
+      .select(col("ts"), col("user_id").as("userId"),
+        col("event_type").as("eventType"), col("value"),
+        col("event_id").as("eventId"))
+
+  /** One event type of the events table, as a stream-join side. */
+  private def joinSide(s: SparkSession, d: String, t: String): DataFrame =
+    Tables.events(s, d)
+      .filter(col("event_type") === t)
+      .select(col("ts"), col("user_id").as("userId"),
+        col("event_id").as("eventId"))
+
+  /** One far-future event at `ts` whose user and event id are the
+    * negative `uid`: a batch holding only it advances the watermark past
+    * every real event, and the outputs filter its user away.
+    */
+  private def sentinel(s: SparkSession, ts: String, uid: Long): DataFrame =
+    s.range(1).select(lit(ts).cast("timestamp").as("ts"),
+      lit(uid).as("userId"), lit("sentinel").as("eventType"),
+      lit(0.0).as("value"), lit(uid).as("eventId"))
+
+  /** The event time of the watermark-advancing sentinel. */
+  private val FarFuture = "2030-01-01 00:00:00"
+
+  /** The W1 late re-delivery: every event strictly behind W1 = the
+    * ms-floored max event time − 10 min. W1 rides a broadcast 1-row
+    * scalar, so the batch is built distributed, never collected.
+    */
+  private def lateRedelivery(ev: DataFrame): DataFrame = {
+    val wm = ev.agg(
+      (expr("unix_micros(max(ts)) DIV 1000") - lit(600000L)).as("wm_ms"))
+    ev.crossJoin(broadcast(wm))
+      .filter(expr("unix_micros(ts) DIV 1000") < col("wm_ms"))
+      .select(col("ts"), col("userId"), col("eventType"), col("value"),
+        col("eventId"))
+  }
+
+  /** A parquet staging dir as a file stream, on its files' schema. */
+  private def stagedStream(s: SparkSession, dir: String): DataFrame =
+    s.readStream.schema(s.read.parquet(dir).schema).parquet(dir)
+
+  /** Start `writer` under Trigger.Once at 4 state partitions, wait for
+    * its one micro-batch, and stop it.
+    */
+  private def triggerOnce(s: SparkSession)(
+      writer: => DataStreamWriter[Row]): Unit =
+    Streaming.withStatePartitions(s, 4) {
+      val q = writer.trigger(Trigger.Once()).start()
+      try q.awaitTermination() finally if (q.isActive) q.stop()
+    }
+
+  /** Build-once / restart-later harness for the replay protocols. The
+    * protocol's micro-batch sequence runs IN FULL exactly once per
+    * (fixture dir, tag, fixture signature): `build` runs on cleared
+    * `<tag>_*` staging dirs, writes the input batches and drives the
+    * watermark-advance sequence. Every later invocation exercises the
+    * OTHER half of the streaming contract instead — `restart` reopens
+    * the query on the durable checkpoint, where the file source finds no
+    * new files and the run commits nothing: the idempotent
     * crash-recovery no-op a production Structured Streaming job lives
     * by, which is also why the sink can be read back unchanged.
     * No-data micro-batches are disabled around the restart (they exist
     * to flush surviving state on a LIVE stream; here they would evict
     * the deliberately-open tail windows the protocols exclude, changing
-    * the sink). A marker file carries the fixture's events.parquet
-    * (name, size, mtime) signature plus a protocol version, so a
-    * regenerated fixture or a protocol change invalidates the reuse and
-    * rebuilds from scratch. At 100 TB this is exactly the recommended
-    * deployment shape: one durable checkpoint root, restarts resume
-    * from state instead of re-reading the backlog.
+    * the sink). A `<tag>.done` marker carries the fixture's
+    * events.parquet (name, size, mtime) signature plus the protocol
+    * version, so a regenerated fixture or a protocol change invalidates
+    * the reuse and rebuilds from scratch. At 100 TB this is exactly the
+    * recommended deployment shape: one durable checkpoint root, restarts
+    * resume from state instead of re-reading the backlog.
     */
-  private def replayReuse(s: SparkSession, d: String, tag: String,
-      version: String)(build: String => Unit)(restart: String => Unit)
-      : String = {
+  private def replayReuse(s: SparkSession, d: String, tag: String)(
+      build: String => Unit)(restart: String => Unit): String = {
     val slug = d.replaceAll("[^A-Za-z0-9_]", "_")
     val base =
       s"${System.getProperty("java.io.tmpdir")}/graft_stream/$slug"
@@ -61,8 +112,7 @@ object Events {
         Option(f.listFiles()).getOrElse(Array.empty).sortBy(_.getName)
           .map(fileSig).mkString(",")
       else s"${f.getName}:${f.length}:${f.lastModified}"
-    val sig =
-      version + "|" + fileSig(new java.io.File(d, "events.parquet"))
+    val sig = "v2|" + fileSig(new java.io.File(d, "events.parquet"))
     val marker = new java.io.File(base, s"$tag.done")
     val have =
       if (marker.isFile)
@@ -77,12 +127,76 @@ object Events {
       try restart(base) finally s.conf.set(key, prev)
     } else {
       marker.delete()
+      // a surviving checkpoint would treat re-written input as new files
+      // and append a second copy of every row to the sink; clear input,
+      // sink and checkpoint together
+      Option(new java.io.File(base).listFiles()).getOrElse(Array.empty)
+        .filter(_.getName.startsWith(tag + "_")).foreach(rmTree)
       build(base)
       java.nio.file.Files.write(marker.toPath,
         sig.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       ()
     }
     base
+  }
+
+  /** TRUE STREAMING replay of one stateful operator under the oracle
+    * gate. Spark rejects these operators on batch frames, so the builder
+    * runs an actual Structured Streaming job (the q_scan_binaryfile
+    * eager-side-effect precedent): `batches(events)` lands one by one in
+    * `<tag>_in` (the first overwrites, the rest append), and after each
+    * landing one Trigger.Once run of `op` over the `<tag>_in` file
+    * stream appends to the `<tag>_out` parquet sink on the `<tag>_ckpt`
+    * checkpoint, at 4 state partitions. Later invocations restart on
+    * that checkpoint ([[replayReuse]]). Returns the sink; callers filter
+    * the sentinels out and project.
+    *
+    * Trigger.Once (deprecated in favor of AvailableNow) is chosen
+    * DELIBERATELY: AvailableNow may split one landing across several
+    * micro-batches, and a watermark advancing between them could drop
+    * rows that sorted behind it — nondeterministic output under
+    * file-order changes. Once makes every landing exactly one
+    * micro-batch, so the watermark moves only BETWEEN landings.
+    *
+    * The watermark-advance protocol: append-mode windows emit only when
+    * the watermark passes their end, and a landing of the real events
+    * alone builds state and emits nothing (watermark 0). A second landing
+    * of one far-future [[sentinel]] moves the eviction watermark to
+    * W1 = ms-floored max event time − 10 min, which closes and emits
+    * every real window ending before W1. Windows inside the final
+    * 10-minute horizon stay open and are EXCLUDED on both sides — the
+    * steady-state semantics of the operator. Both W1 and the close
+    * predicate are exact integer arithmetic the oracle replays.
+    *
+    * The late-data protocol adds a third landing, the [[lateRedelivery]]
+    * of every event behind W1. Spark's stateful operators carry TWO
+    * watermark values per batch (the SPARK-40925 contract): late-input
+    * filtering uses the PREVIOUS batch's watermark, eviction the current
+    * one. A re-delivery in the same batch as the sentinel would be judged
+    * by watermark 0 and sail through (verified empirically: it doubles
+    * every window), so it lands one batch behind the sentinel, where it
+    * is judged by W1 while eviction runs at W2 = sentinel − 10 min. An
+    * un-dropped late row would re-create evicted state and append a
+    * duplicate row, so a late filter failure shows as a hash mismatch.
+    */
+  private def replay(s: SparkSession, d: String, tag: String)(
+      op: DataFrame => DataFrame)(batches: DataFrame => Seq[DataFrame])
+      : DataFrame = {
+    def run(base: String): Unit = triggerOnce(s) {
+      op(stagedStream(s, s"$base/${tag}_in"))
+        .writeStream.format("parquet")
+        .option("path", s"$base/${tag}_out")
+        .option("checkpointLocation", s"$base/${tag}_ckpt")
+        .outputMode("append")
+    }
+    val base = replayReuse(s, d, tag) { base =>
+      batches(streamEvents(s, d)).zipWithIndex.foreach { case (b, i) =>
+        b.write.mode(if (i == 0) "overwrite" else "append")
+          .parquet(s"$base/${tag}_in")
+        run(base)
+      }
+    }(run)
+    s.read.parquet(s"$base/${tag}_out")
   }
 
   /** Checkpointed per-(event_type, hour) count series — shared by
@@ -126,7 +240,6 @@ object Events {
       case None => aggd
     }
   }
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // BATCH REPLAY of Streaming.runningMax — the typed arbitrary-state
     // operator (KeyValueGroupedDataset.mapGroupsWithState) under the
@@ -140,12 +253,7 @@ object Events {
     // streams each group's iterator with O(1) state per key.
     "q_stream_state_replay" -> { (s, d) =>
       import s.implicits._
-      val ev = Tables.events(s, d)
-        .select(col("ts"), col("user_id").as("userId"),
-          col("event_type").as("eventType"), col("value"),
-          col("event_id").as("eventId"))
-        .as[Ev]
-      Streaming.runningMax(ev).toDF()
+      Streaming.runningMax(streamEvents(s, d).as[Ev]).toDF()
         .select(col("userId").as("user_id"),
           col("total").as("max_value"))
         .orderBy(col("user_id"))
@@ -170,11 +278,7 @@ object Events {
       // conf and the returned frame is plain checkpointed blocks.
       val s2 = s.newSession()
       import s2.implicits._
-      val ev = Tables.events(s2, d)
-        .select(col("ts"), col("user_id").as("userId"),
-          col("event_type").as("eventType"), col("value"),
-          col("event_id").as("eventId"))
-        .as[Ev]
+      val ev = streamEvents(s2, d).as[Ev]
       // Batch TransformWithStateExec still resolves the driver-side
       // StateStoreCoordinator RPC endpoint, which only a STREAMING
       // query normally instantiates (StreamingQueryManager.
@@ -209,73 +313,24 @@ object Events {
     // key shuffle, O(1) state per key, group iterators stream.
     "q_stream_fmgs_replay" -> { (s, d) =>
       import s.implicits._
-      val ev = Tables.events(s, d)
-        .select(col("ts"), col("user_id").as("userId"),
-          col("event_type").as("eventType"), col("value"),
-          col("event_id").as("eventId"))
-        .as[Ev]
-      Streaming.runningCounts(ev).toDF()
+      Streaming.runningCounts(streamEvents(s, d).as[Ev]).toDF()
         .select(col("userId").as("user_id"),
           col("running").as("n_events"))
         .orderBy(col("user_id"))
     },
 
-    // TRUE STREAMING RUN of Streaming.dedupWithinWatermark under the
-    // oracle gate (r6 verdict item 7; Spark REJECTS the operator on
-    // batch frames, so a batch replay is impossible — instead the query
-    // executes an actual Structured Streaming job at build time, the
-    // q_scan_binaryfile eager-side-effect precedent): the re-delivered
-    // event stream (every 10th event re-enters as a byte-identical
-    // copy, the at-least-once duplication this operator absorbs) lands
-    // in a parquet staging dir, a readStream file source feeds the
-    // SAME builder StreamingSpec exercises, and the deduped stream
-    // writes through a parquet sink. Trigger.Once processes everything
-    // in ONE micro-batch, so the watermark never drops rows mid-run
-    // and the surviving set is value-deterministic (duplicates are
-    // identical copies). Nothing funnels through the driver — both
-    // sides of the stream are distributed file IO.
+    // Streaming.dedupWithinWatermark over ONE landing: the events plus
+    // every 10th event re-delivered as a byte-identical copy (the
+    // at-least-once duplication this operator absorbs). In a single
+    // micro-batch the watermark never drops a row, and the surviving
+    // set is value-deterministic (duplicates are identical copies).
     "q_stream_dedup_replay" -> { (s, d) =>
-      def runOnce(base: String): Unit = Streaming.withStatePartitions(s, 4) {
-        val in = s.readStream
-          .schema(s.read.parquet(s"$base/dedup_in").schema)
-          .parquet(s"$base/dedup_in")
-        val q = Streaming.dedupWithinWatermark(in)
-          .writeStream.format("parquet")
-          .option("path", s"$base/dedup_out")
-          .option("checkpointLocation", s"$base/dedup_ckpt")
-          .outputMode("append")
-          // Trigger.Once (deprecated in favor of AvailableNow) is chosen
-          // DELIBERATELY: AvailableNow may split the files across several
-          // micro-batches, and with a 10-minute watermark a later batch
-          // could legitimately drop rows that sorted behind the advanced
-          // watermark — nondeterministic output under file-order changes.
-          // Once processes everything in a single micro-batch, which is
-          // the deterministic replay of an at-least-once backlog.
-          .trigger(org.apache.spark.sql.streaming.Trigger.Once())
-          .start()
-        try q.awaitTermination() finally if (q.isActive) q.stop()
-      }
-      val base = replayReuse(s, d, "dedup", "v1") { base =>
-        // Fresh build: a surviving checkpoint would treat re-written
-        // input as new files and APPEND a second copy of every row to
-        // the sink; clear input, sink and checkpoint together.
-        Seq("dedup_in", "dedup_out", "dedup_ckpt")
-          .foreach(n => rmTree(new java.io.File(s"$base/$n")))
-        val ev = Tables.events(s, d)
-          .select(col("ts"), col("user_id").as("userId"),
-            col("event_type").as("eventType"), col("value"),
-            col("event_id").as("eventId"))
-        val redelivered = ev.filter(pmod(col("eventId"), lit(10)) === 0)
-        ev.unionAll(redelivered).write.mode("overwrite")
-          .parquet(s"$base/dedup_in")
-        runOnce(base)
-      }(runOnce)
-      val out = s.read.parquet(s"$base/dedup_out")
-        .select(col("eventId").as("event_id"), col("ts"),
+      replay(s, d, "dedup")(Streaming.dedupWithinWatermark) { ev =>
+        Seq(ev.unionAll(ev.filter(pmod(col("eventId"), lit(10)) === 0)))
+      }.select(col("eventId").as("event_id"), col("ts"),
           col("userId").as("user_id"),
           col("eventType").as("event_type"), col("value"))
         .orderBy(col("event_id"))
-      out
     },
 
     // LATE-DATA DROPPING for STATEFUL DEDUP — the fourth stateful shape
@@ -284,473 +339,143 @@ object Events {
     // once the watermark passes its horizon, so an at-least-once
     // redelivery arriving AFTER eviction can no longer be recognized by
     // state — the operator stays correct only because the late filter
-    // drops sub-watermark input outright. This protocol pins exactly
-    // that: batch 1 = events plus every-10th byte-identical duplicates
-    // (absorbed by dedup state); batch 2 = far-future sentinel →
-    // watermark W1 evicts all real dedup state; batch 3 = a late
-    // re-delivery of EVERY sub-W1 event. If the late filter failed,
-    // the evicted state couldn't block them and every copy would
-    // append as "new" — duplicate rows, hash mismatch. Oracle = the
-    // distinct original events, untouched by either duplication wave.
+    // drops sub-watermark input outright. Landing 1 = the
+    // q_stream_dedup_replay input (duplicates absorbed by state); the
+    // sentinel's W1 evicts all real dedup state; the late re-delivery
+    // of every sub-W1 event would append as "new" if the late filter
+    // failed. Oracle = the distinct original events.
     "q_stream_dedup_late" -> { (s, d) =>
-      def runOnce(base: String): Unit = Streaming.withStatePartitions(s, 4) {
-        val in = s.readStream
-          .schema(s.read.parquet(s"$base/dlate_in").schema)
-          .parquet(s"$base/dlate_in")
-        val q = Streaming.dedupWithinWatermark(in)
-          .writeStream.format("parquet")
-          .option("path", s"$base/dlate_out")
-          .option("checkpointLocation", s"$base/dlate_ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.Once())
-          .start()
-        try q.awaitTermination() finally if (q.isActive) q.stop()
-      }
-      val base = replayReuse(s, d, "dlate", "v1") { base =>
-        Seq("dlate_in", "dlate_out", "dlate_ckpt")
-          .foreach(n => rmTree(new java.io.File(s"$base/$n")))
-        val ev = Tables.events(s, d)
-          .select(col("ts"), col("user_id").as("userId"),
-            col("event_type").as("eventType"), col("value"),
-            col("event_id").as("eventId"))
-        ev.unionAll(ev.filter(pmod(col("eventId"), lit(10)) === 0))
-          .coalesce(4).write.mode("overwrite").parquet(s"$base/dlate_in")
-        runOnce(base)
-        s.range(1).select(
-            lit("2030-01-01 00:00:00").cast("timestamp").as("ts"),
-            lit(-1L).as("userId"), lit("sentinel").as("eventType"),
-            lit(0.0).as("value"), lit(-1L).as("eventId"))
-          .write.mode("append").parquet(s"$base/dlate_in")
-        runOnce(base)
-        val wm = ev.agg(
-          (expr("unix_micros(max(ts)) DIV 1000") - lit(600000L))
-            .as("wm_ms"))
-        ev.crossJoin(broadcast(wm))
-          .filter(expr("unix_micros(ts) DIV 1000") < col("wm_ms"))
-          .select(col("ts"), col("userId"), col("eventType"),
-            col("value"), col("eventId"))
-          .coalesce(4).write.mode("append").parquet(s"$base/dlate_in")
-        runOnce(base)
-      }(runOnce)
-      s.read.parquet(s"$base/dlate_out")
-        .filter(col("userId") >= 0)
+      replay(s, d, "dlate")(Streaming.dedupWithinWatermark) { ev =>
+        Seq(ev.unionAll(ev.filter(pmod(col("eventId"), lit(10)) === 0))
+            .coalesce(4),
+          sentinel(s, FarFuture, -1L), lateRedelivery(ev).coalesce(4))
+      }.filter(col("userId") >= 0)
         .select(col("eventId").as("event_id"), col("ts"),
           col("userId").as("user_id"),
           col("eventType").as("event_type"), col("value"))
         .orderBy(col("event_id"))
     },
 
-    // TRUE STREAMING RUN of Streaming.slidingCounts — the THIRD window
-    // shape under the watermark-advance protocol (tumbling = fixed
-    // grid, session = gap-merged, sliding = overlapping): each event
-    // lives in FOUR 1h/15min windows, and the protocol's single
-    // watermark advance closes exactly those windows whose own end
-    // precedes it — the overlap means the open tail holds up to four
-    // partially-open windows, not one. Oracle replays the 4-offset
-    // grid + the eviction predicate exactly.
+    // Streaming.slidingCounts under the watermark-advance protocol — the
+    // THIRD window shape (tumbling = fixed grid, session = gap-merged,
+    // sliding = overlapping): each event lives in FOUR 1h/15min windows,
+    // so the open tail holds up to four partially-open windows, not one.
+    // The sentinel's own four windows stay open (their ends are far
+    // beyond W1), so no sentinel row can leak. Oracle replays the
+    // 4-offset grid + the eviction predicate exactly.
     "q_stream_sliding_replay" -> { (s, d) =>
-      def runOnce(base: String): Unit = Streaming.withStatePartitions(s, 4) {
-        val in = s.readStream
-          .schema(s.read.parquet(s"$base/slide_in").schema)
-          .parquet(s"$base/slide_in")
-        val q = Streaming.slidingCounts(in)
-          .writeStream.format("parquet")
-          .option("path", s"$base/slide_out")
-          .option("checkpointLocation", s"$base/slide_ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.Once())
-          .start()
-        try q.awaitTermination() finally if (q.isActive) q.stop()
-      }
-      val base = replayReuse(s, d, "slide", "v1") { base =>
-        Seq("slide_in", "slide_out", "slide_ckpt")
-          .foreach(n => rmTree(new java.io.File(s"$base/$n")))
-        val ev = Tables.events(s, d)
-          .select(col("ts"), col("user_id").as("userId"),
-            col("event_type").as("eventType"), col("value"),
-            col("event_id").as("eventId"))
-        ev.coalesce(4).write.mode("overwrite").parquet(s"$base/slide_in")
-        runOnce(base)
-        s.range(1).select(
-            lit("2030-01-01 00:00:00").cast("timestamp").as("ts"),
-            lit(-1L).as("userId"), lit("sentinel").as("eventType"),
-            lit(0.0).as("value"), lit(-1L).as("eventId"))
-          .write.mode("append").parquet(s"$base/slide_in")
-        runOnce(base)
-      }(runOnce)
-      // the sentinel's own four windows stay open (their ends are far
-      // beyond the batch-1 watermark), so no sentinel row can leak
-      s.read.parquet(s"$base/slide_out")
-        .select(col("w_start"), col("w_end"), col("n"))
+      replay(s, d, "slide")(Streaming.slidingCounts) { ev =>
+        Seq(ev.coalesce(4), sentinel(s, FarFuture, -1L))
+      }.select(col("w_start"), col("w_end"), col("n"))
         .orderBy(col("w_start"))
     },
 
-    // LATE-DATA DROPPING for SLIDING windows — the third shape of the
-    // late matrix (tumbling = one window per row, session = gap-merge;
-    // sliding = each row lives in FOUR windows and lateness is judged
-    // PER (row, window) pair after the grid expansion): a re-delivered
+    // LATE-DATA DROPPING for SLIDING windows: lateness is judged PER
+    // (row, window) pair after the grid expansion, so a re-delivered
     // row's four window entries split independently — entries whose
     // window closed under W1 DROP, entries whose window end clears W1
-    // are ACCEPTED, so one late row can simultaneously be dropped from
-    // its three older windows and counted in its newest one. Same
-    // three-batch protocol as q_stream_tumbling_late (the SPARK-40925
-    // two-watermark contract forces the re-delivery one batch behind
-    // the sentinel); the sentinels' own windows stay open forever, so
-    // no sentinel row can leak. Oracle = the 4-offset grid over the
-    // original events plus the accepted (copy, window) contributions,
-    // exact integer-ms arithmetic; an un-dropped entry would re-create
-    // evicted window state and append a duplicate window row.
+    // are ACCEPTED; one late row can be dropped from its three older
+    // windows and counted in its newest one. The sentinels' windows stay
+    // open forever, so no sentinel row can leak. Oracle = the 4-offset
+    // grid over the original events plus the accepted (copy, window)
+    // contributions, exact integer-ms arithmetic.
     "q_stream_sliding_late" -> { (s, d) =>
-      def runOnce(base: String): Unit = Streaming.withStatePartitions(s, 4) {
-        val in = s.readStream
-          .schema(s.read.parquet(s"$base/sllate_in").schema)
-          .parquet(s"$base/sllate_in")
-        val q = Streaming.slidingCounts(in)
-          .writeStream.format("parquet")
-          .option("path", s"$base/sllate_out")
-          .option("checkpointLocation", s"$base/sllate_ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.Once())
-          .start()
-        try q.awaitTermination() finally if (q.isActive) q.stop()
-      }
-      val base = replayReuse(s, d, "sllate", "v1") { base =>
-        Seq("sllate_in", "sllate_out", "sllate_ckpt")
-          .foreach(n => rmTree(new java.io.File(s"$base/$n")))
-        val ev = Tables.events(s, d)
-          .select(col("ts"), col("user_id").as("userId"),
-            col("event_type").as("eventType"), col("value"),
-            col("event_id").as("eventId"))
-        ev.coalesce(4).write.mode("overwrite").parquet(s"$base/sllate_in")
-        runOnce(base)
-        s.range(1).select(
-            lit("2030-01-01 00:00:00").cast("timestamp").as("ts"),
-            lit(-1L).as("userId"), lit("sentinel").as("eventType"),
-            lit(0.0).as("value"), lit(-1L).as("eventId"))
-          .write.mode("append").parquet(s"$base/sllate_in")
-        runOnce(base)
-        val wm = ev.agg(
-          (expr("unix_micros(max(ts)) DIV 1000") - lit(600000L))
-            .as("wm_ms"))
-        ev.crossJoin(broadcast(wm))
-          .filter(expr("unix_micros(ts) DIV 1000") < col("wm_ms"))
-          .select(col("ts"), col("userId"), col("eventType"),
-            col("value"), col("eventId"))
-          .coalesce(4).write.mode("append").parquet(s"$base/sllate_in")
-        runOnce(base)
-      }(runOnce)
-      s.read.parquet(s"$base/sllate_out")
-        .select(col("w_start"), col("w_end"), col("n"))
+      replay(s, d, "sllate")(Streaming.slidingCounts) { ev =>
+        Seq(ev.coalesce(4), sentinel(s, FarFuture, -1L),
+          lateRedelivery(ev).coalesce(4))
+      }.select(col("w_start"), col("w_end"), col("n"))
         .orderBy(col("w_start"))
     },
 
-    // TRUE STREAMING RUN of Streaming.tumblingCounts through the same
-    // two-micro-batch watermark-advance protocol as the session replay
-    // below — tumbling windows are the OTHER append-mode stateful
-    // window shape (fixed grid vs gap-merged), and their eviction
-    // predicate (window end < watermark) gets the identical exact
-    // replay: batch 1 builds window state, the sentinel batch closes
-    // and emits every window ending before batch-1's watermark. The
-    // final partial hour stays open on both sides.
+    // Streaming.tumblingCounts under the watermark-advance protocol —
+    // the fixed-grid window shape, whose eviction predicate (window
+    // end < watermark) the oracle replays exactly. The final partial
+    // hour stays open on both sides.
     "q_stream_tumbling_replay" -> { (s, d) =>
-      def runOnce(base: String): Unit = Streaming.withStatePartitions(s, 4) {
-        val in = s.readStream
-          .schema(s.read.parquet(s"$base/tumb_in").schema)
-          .parquet(s"$base/tumb_in")
-        val q = Streaming.tumblingCounts(in)
-          .writeStream.format("parquet")
-          .option("path", s"$base/tumb_out")
-          .option("checkpointLocation", s"$base/tumb_ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.Once())
-          .start()
-        try q.awaitTermination() finally if (q.isActive) q.stop()
-      }
-      val base = replayReuse(s, d, "tumb", "v1") { base =>
-        Seq("tumb_in", "tumb_out", "tumb_ckpt")
-          .foreach(n => rmTree(new java.io.File(s"$base/$n")))
-        val ev = Tables.events(s, d)
-          .select(col("ts"), col("user_id").as("userId"),
-            col("event_type").as("eventType"), col("value"),
-            col("event_id").as("eventId"))
-        ev.coalesce(4).write.mode("overwrite").parquet(s"$base/tumb_in")
-        runOnce(base)
-        s.range(1).select(
-            lit("2030-01-01 00:00:00").cast("timestamp").as("ts"),
-            lit(-1L).as("userId"), lit("sentinel").as("eventType"),
-            lit(0.0).as("value"), lit(-1L).as("eventId"))
-          .write.mode("append").parquet(s"$base/tumb_in")
-        runOnce(base)
-      }(runOnce)
-      s.read.parquet(s"$base/tumb_out")
-        .filter(col("userId") >= 0)
+      replay(s, d, "tumb")(Streaming.tumblingCounts) { ev =>
+        Seq(ev.coalesce(4), sentinel(s, FarFuture, -1L))
+      }.filter(col("userId") >= 0)
         .select(col("userId").as("user_id"), col("w_start"), col("n"))
         .orderBy(col("user_id"), col("w_start"))
     },
 
-    // LATE-DATA DROPPING under the oracle gate — the one watermark
-    // behavior the advance protocol above can't show (it only builds
-    // and EVICTS state; no row ever arrives behind the watermark).
-    // Spark's stateful operators carry TWO watermark values per batch
-    // (the SPARK-40925 contract): late-input filtering uses the
-    // PREVIOUS batch's watermark, eviction the current one — so a late
-    // row is dropped only when an EARLIER batch could already have
-    // finalized its window, and a re-delivery arriving in the same
-    // trigger that advances the watermark is still accepted (verified
-    // empirically: a same-batch re-delivery doubles every window).
-    // Hence three Trigger.Once batches on one checkpoint:
-    //   batch 1: real events → pure state build (watermark 0).
-    //   batch 2: a far-future sentinel (user −1) → eviction watermark
-    //     W1 = ms-floored batch-1 max event time − 10 min emits every
-    //     hour ending before W1 at its ORIGINAL count; the global
-    //     watermark then advances to W2 = 2030-01-01 − 10 min.
-    //   batch 3: the late re-delivery — every real event with
-    //     ts < W1 re-enters. Late filtering now uses W1, and judges
-    //     lateness PER WINDOW, not per row (the documented aggregation
-    //     contract: late rows keep aggregating while their window's
-    //     end is ahead of the watermark): re-deliveries into hours
-    //     that closed under W1 are DROPPED; re-deliveries into the
-    //     hour STRADDLING W1 — late rows, still-open window — are
-    //     ACCEPTED and double that hour's sub-W1 population. Eviction
-    //     (watermark W2) then closes every remaining real window.
-    // The sink therefore holds: closed-before-W1 hours at ORIGINAL
-    // counts (the drop, observable because an un-dropped re-delivery
-    // would re-create evicted state and append a duplicate window row),
-    // the straddling hour with its accepted late copies, tail hours
-    // unchanged. The oracle replays W1 and the per-window accept
-    // predicate in exact integer-ms arithmetic. The late re-delivery is
-    // built distributed — W1 rides a 1-row broadcast scalar, never a
-    // driver-side collect.
+    // LATE-DATA DROPPING for TUMBLING windows — the one watermark
+    // behavior the advance protocol can't show (it only builds and
+    // EVICTS state). Late filtering judges lateness PER WINDOW, not per
+    // row (late rows keep aggregating while their window's end is ahead
+    // of the watermark): re-deliveries into hours that closed under W1
+    // are DROPPED; re-deliveries into the hour STRADDLING W1 are
+    // ACCEPTED and double that hour's sub-W1 population. The sink holds
+    // the closed-before-W1 hours at ORIGINAL counts, the straddling hour
+    // with its accepted late copies, and the tail hours unchanged. The
+    // oracle replays W1 and the per-window accept predicate in exact
+    // integer-ms arithmetic.
     "q_stream_tumbling_late" -> { (s, d) =>
-      def runOnce(base: String): Unit = Streaming.withStatePartitions(s, 4) {
-        val in = s.readStream
-          .schema(s.read.parquet(s"$base/late_in").schema)
-          .parquet(s"$base/late_in")
-        val q = Streaming.tumblingCounts(in)
-          .writeStream.format("parquet")
-          .option("path", s"$base/late_out")
-          .option("checkpointLocation", s"$base/late_ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.Once())
-          .start()
-        try q.awaitTermination() finally if (q.isActive) q.stop()
-      }
-      val base = replayReuse(s, d, "late", "v1") { base =>
-        Seq("late_in", "late_out", "late_ckpt")
-          .foreach(n => rmTree(new java.io.File(s"$base/$n")))
-        val ev = Tables.events(s, d)
-          .select(col("ts"), col("user_id").as("userId"),
-            col("event_type").as("eventType"), col("value"),
-            col("event_id").as("eventId"))
-        ev.coalesce(4).write.mode("overwrite").parquet(s"$base/late_in")
-        runOnce(base)
-        // batch 2 = the watermark-advancing sentinel alone (a same-batch
-        // re-delivery would be judged by batch 1's zero watermark and
-        // sail through — the SPARK-40925 two-watermark contract above)
-        s.range(1).select(
-            lit("2030-01-01 00:00:00").cast("timestamp").as("ts"),
-            lit(-1L).as("userId"), lit("sentinel").as("eventType"),
-            lit(0.0).as("value"), lit(-1L).as("eventId"))
-          .write.mode("append").parquet(s"$base/late_in")
-        runOnce(base)
-        // batch 3 = the late re-delivery (ts strictly behind W1); W1 as
-        // a broadcast 1-row scalar keeps the build distributed
-        val wm = ev.agg(
-          (expr("unix_micros(max(ts)) DIV 1000") - lit(600000L))
-            .as("wm_ms"))
-        ev.crossJoin(broadcast(wm))
-          .filter(expr("unix_micros(ts) DIV 1000") < col("wm_ms"))
-          .select(col("ts"), col("userId"), col("eventType"),
-            col("value"), col("eventId"))
-          .coalesce(4).write.mode("append").parquet(s"$base/late_in")
-        runOnce(base)
-      }(runOnce)
-      s.read.parquet(s"$base/late_out")
-        .filter(col("userId") >= 0)
+      replay(s, d, "late")(Streaming.tumblingCounts) { ev =>
+        Seq(ev.coalesce(4), sentinel(s, FarFuture, -1L),
+          lateRedelivery(ev).coalesce(4))
+      }.filter(col("userId") >= 0)
         .select(col("userId").as("user_id"), col("w_start"), col("n"))
         .orderBy(col("user_id"), col("w_start"))
     },
 
-    // TRUE STREAMING RUN of Streaming.sessionCounts under the oracle
-    // gate — the watermark-ADVANCE protocol the single-batch replays
-    // can't exercise: session windows in append mode emit only when the
-    // watermark passes the session end, and the watermark only moves
-    // BETWEEN micro-batches, so a Trigger.Once run of the real events
-    // builds state and emits nothing. The query therefore runs TWO
-    // deterministic micro-batches against one checkpoint: batch 1 =
-    // the real events (watermark still at 0 → pure state build);
-    // batch 2 = one far-future sentinel row (user −1) that triggers a
-    // batch whose input watermark = batch-1 max event time − 10 min,
-    // closing and emitting every real session that ended before it.
-    // Both the watermark (ms-floored max − delay) and the close
-    // predicate (session_end < watermark) are exact integer arithmetic
-    // the oracle replays; sessions inside the final 10-minute horizon
-    // stay open and are EXCLUDED on both sides — precisely the
-    // steady-state semantics of the streaming operator.
-    // EVENT-TIME TIMER eviction under the replay protocol (r13,
-    // closing the r12 backlog's last streaming surface): a TRUE
-    // Trigger.Once stream over transformWithState + TimeMode.EventTime
-    // where the ONLY output rows are timer firings — per user, one
-    // (user_id, n_events, evict_ms = lastSeen + 30min) row emitted when
-    // the watermark passes the idle deadline. Deterministic BECAUSE the
-    // timers are event-time: expiry is a pure function of the data's
-    // own timestamps and the sentinel-driven watermark walk (a
-    // processing-time timer would be wall-clock-coupled — that variant
-    // is exactly what stays undemonstrable under a replay oracle).
-    // Protocol: batch 1 = real events (arms every timer, emits
-    // nothing); batch 2 = sentinel A (2030, user −1) advances the
-    // eviction watermark to maxTs(real) − 10min, firing the early
-    // timers; batch 3 = sentinel B (2031, user −2) advances it to
+    // EVENT-TIME TIMER eviction: a stream over transformWithState +
+    // TimeMode.EventTime where the ONLY output rows are timer firings —
+    // per user, one (user_id, n_events, evict_ms = lastSeen + 30min) row
+    // emitted when the watermark passes the idle deadline. Deterministic
+    // BECAUSE the timers are event-time: expiry is a pure function of
+    // the data's own timestamps and the sentinel-driven watermark walk
+    // (a processing-time timer would be wall-clock-coupled — that
+    // variant is exactly what stays undemonstrable under a replay
+    // oracle). Two sentinels: A (2030, user −1) moves the watermark to
+    // W1, firing the early timers; B (2031, user −2) moves it to
     // 2030 − 10min, firing every remaining real timer (the sentinels'
-    // own timers sit past their batch's watermark and never fire —
-    // their users are filtered). Restart invocations reopen the durable
-    // checkpoint and commit nothing (the crash-recovery no-op).
+    // own timers never fire). Only the RocksDB provider hosts the timer
+    // state, on the build and the restart alike.
     "q_stream_timer_replay" -> { (s, d) =>
-      def runOnce(base: String): Unit =
-        Streaming.withRocksDB(s) {
-          Streaming.withStatePartitions(s, 4) {
-            import s.implicits._
-            val in = s.readStream
-              .schema(s.read.parquet(s"$base/timer_in").schema)
-              .parquet(s"$base/timer_in")
-            val q = Streaming.idleEvictions(in.as[Ev])
-              .toDF()
-              .writeStream.format("parquet")
-              .option("path", s"$base/timer_out")
-              .option("checkpointLocation", s"$base/timer_ckpt")
-              .outputMode("append")
-              .trigger(org.apache.spark.sql.streaming.Trigger.Once())
-              .start()
-            try q.awaitTermination() finally if (q.isActive) q.stop()
-          }
+      import s.implicits._
+      Streaming.withRocksDB(s) {
+        replay(s, d, "timer") { in =>
+          Streaming.idleEvictions(in.as[Ev]).toDF()
+        } { ev =>
+          Seq(ev.coalesce(4), sentinel(s, FarFuture, -1L),
+            sentinel(s, "2031-01-01 00:00:00", -2L))
         }
-      def sentinel(ts: String, uid: Long) =
-        s.range(1).select(
-          lit(ts).cast("timestamp").as("ts"),
-          lit(uid).as("userId"), lit("sentinel").as("eventType"),
-          lit(0.0).as("value"), lit(uid).as("eventId"))
-      val base = replayReuse(s, d, "timer", "v1") { base =>
-        Seq("timer_in", "timer_out", "timer_ckpt")
-          .foreach(n => rmTree(new java.io.File(s"$base/$n")))
-        val ev = Tables.events(s, d)
-          .select(col("ts"), col("user_id").as("userId"),
-            col("event_type").as("eventType"), col("value"),
-            col("event_id").as("eventId"))
-        ev.coalesce(4).write.mode("overwrite").parquet(s"$base/timer_in")
-        runOnce(base)
-        sentinel("2030-01-01 00:00:00", -1L)
-          .write.mode("append").parquet(s"$base/timer_in")
-        runOnce(base)
-        sentinel("2031-01-01 00:00:00", -2L)
-          .write.mode("append").parquet(s"$base/timer_in")
-        runOnce(base)
-      }(runOnce)
-      s.read.parquet(s"$base/timer_out")
-        .filter(col("userId") >= 0)
+      }.filter(col("userId") >= 0)
         .select(col("userId").as("user_id"), col("n").as("n_events"),
           col("evictMs").as("evict_ms"))
         .orderBy(col("user_id"))
     },
 
+    // Streaming.sessionCounts under the watermark-advance protocol:
+    // session windows emit when the watermark passes the session end
+    // (session_end < W1); sessions inside the final 10-minute horizon
+    // stay open on both sides.
     "q_stream_session_replay" -> { (s, d) =>
-      def runOnce(base: String): Unit = Streaming.withStatePartitions(s, 4) {
-        val in = s.readStream
-          .schema(s.read.parquet(s"$base/sess_in").schema)
-          .parquet(s"$base/sess_in")
-        val q = Streaming.sessionCounts(in)
-          .writeStream.format("parquet")
-          .option("path", s"$base/sess_out")
-          .option("checkpointLocation", s"$base/sess_ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.Once())
-          .start()
-        try q.awaitTermination() finally if (q.isActive) q.stop()
-      }
-      val base = replayReuse(s, d, "sess", "v1") { base =>
-        Seq("sess_in", "sess_out", "sess_ckpt")
-          .foreach(n => rmTree(new java.io.File(s"$base/$n")))
-        val ev = Tables.events(s, d)
-          .select(col("ts"), col("user_id").as("userId"),
-            col("event_type").as("eventType"), col("value"),
-            col("event_id").as("eventId"))
-        ev.coalesce(4).write.mode("overwrite").parquet(s"$base/sess_in")
-        runOnce(base)
-        s.range(1).select(
-            lit("2030-01-01 00:00:00").cast("timestamp").as("ts"),
-            lit(-1L).as("userId"), lit("sentinel").as("eventType"),
-            lit(0.0).as("value"), lit(-1L).as("eventId"))
-          .write.mode("append").parquet(s"$base/sess_in")
-        runOnce(base)
-      }(runOnce)
-      s.read.parquet(s"$base/sess_out")
-        .filter(col("userId") >= 0)
+      replay(s, d, "sess")(Streaming.sessionCounts) { ev =>
+        Seq(ev.coalesce(4), sentinel(s, FarFuture, -1L))
+      }.filter(col("userId") >= 0)
         .select(col("userId").as("user_id"), col("s_start"),
           col("s_end"), col("n"))
         .orderBy(col("user_id"), col("s_start"))
     },
 
     // LATE-DATA DROPPING for SESSION windows — the gap-merged half of
-    // the late matrix (q_stream_tumbling_late is the fixed-grid half),
-    // whose semantics differ in BOTH directions: a late row is judged
-    // by its OWN provisional interval [ts, ts+30min) (dropped only when
-    // that interval's end is already behind W1, i.e. ts < W1 − gap),
-    // and an ACCEPTED late row doesn't just increment a counter — it
-    // re-enters session-merge, fusing with whatever open-session state
-    // survived eviction (interval-overlap connected components are
-    // order-independent, so the merged result equals re-sessionizing
-    // the surviving rows ∪ accepted copies — which is exactly how the
-    // oracle replays it). Protocol = the tumbling_late three batches:
-    // real events → build; sentinel (user −1) → W1 eviction emits every
-    // session ending before W1, watermark advances to W2; late
-    // re-delivery of every sub-W1 row → sub-(W1−gap) copies DROP
-    // (un-dropped they would re-create evicted sessions and append
-    // duplicate rows), the [W1−gap, W1) tail merges into the open
-    // sessions, and W2 eviction closes everything real. The sink is
-    // closed-under-W1 sessions at original counts ∪ the re-merged tail
-    // sessions — all exact integer-ms arithmetic.
+    // the late matrix, whose semantics differ in BOTH directions: a late
+    // row is judged by its OWN provisional interval [ts, ts+30min)
+    // (dropped only when that interval's end is already behind W1, i.e.
+    // ts < W1 − gap), and an ACCEPTED late row re-enters session-merge,
+    // fusing with whatever open-session state survived eviction
+    // (interval-overlap connected components are order-independent, so
+    // the merged result equals re-sessionizing the surviving rows ∪
+    // accepted copies — which is exactly how the oracle replays it). The
+    // sink is the closed-under-W1 sessions at original counts ∪ the
+    // re-merged tail sessions — all exact integer-ms arithmetic.
     "q_stream_session_late" -> { (s, d) =>
-      def runOnce(base: String): Unit = Streaming.withStatePartitions(s, 4) {
-        val in = s.readStream
-          .schema(s.read.parquet(s"$base/slate_in").schema)
-          .parquet(s"$base/slate_in")
-        val q = Streaming.sessionCounts(in)
-          .writeStream.format("parquet")
-          .option("path", s"$base/slate_out")
-          .option("checkpointLocation", s"$base/slate_ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.Once())
-          .start()
-        try q.awaitTermination() finally if (q.isActive) q.stop()
-      }
-      val base = replayReuse(s, d, "slate", "v1") { base =>
-        Seq("slate_in", "slate_out", "slate_ckpt")
-          .foreach(n => rmTree(new java.io.File(s"$base/$n")))
-        val ev = Tables.events(s, d)
-          .select(col("ts"), col("user_id").as("userId"),
-            col("event_type").as("eventType"), col("value"),
-            col("event_id").as("eventId"))
-        ev.coalesce(4).write.mode("overwrite").parquet(s"$base/slate_in")
-        runOnce(base)
-        s.range(1).select(
-            lit("2030-01-01 00:00:00").cast("timestamp").as("ts"),
-            lit(-1L).as("userId"), lit("sentinel").as("eventType"),
-            lit(0.0).as("value"), lit(-1L).as("eventId"))
-          .write.mode("append").parquet(s"$base/slate_in")
-        runOnce(base)
-        // batch 3 = the late re-delivery (ts strictly behind W1; the
-        // drop/merge split happens inside the streaming operator)
-        val wm = ev.agg(
-          (expr("unix_micros(max(ts)) DIV 1000") - lit(600000L))
-            .as("wm_ms"))
-        ev.crossJoin(broadcast(wm))
-          .filter(expr("unix_micros(ts) DIV 1000") < col("wm_ms"))
-          .select(col("ts"), col("userId"), col("eventType"),
-            col("value"), col("eventId"))
-          .coalesce(4).write.mode("append").parquet(s"$base/slate_in")
-        runOnce(base)
-      }(runOnce)
-      s.read.parquet(s"$base/slate_out")
-        .filter(col("userId") >= 0)
+      replay(s, d, "slate")(Streaming.sessionCounts) { ev =>
+        Seq(ev.coalesce(4), sentinel(s, FarFuture, -1L),
+          lateRedelivery(ev).coalesce(4))
+      }.filter(col("userId") >= 0)
         .select(col("userId").as("user_id"), col("s_start"),
           col("s_end"), col("n"))
         .orderBy(col("user_id"), col("s_start"), col("s_end"), col("n"))
@@ -789,64 +514,49 @@ object Events {
     // path MemoryStream exercises. Clicks probe purchases by the same
     // user within the following 30 minutes (the attribution shape).
     "q_stream_join_replay" -> { (s, d) =>
-      def side(t: String) = Tables.events(s, d)
-        .filter(col("event_type") === t)
-        .select(col("ts"), col("user_id").as("userId"),
-          col("event_id").as("eventId"))
-      Streaming.streamStreamJoin(side("click"), side("purchase"))
+      Streaming.streamStreamJoin(joinSide(s, d, "click"),
+          joinSide(s, d, "purchase"))
         .select(col("l_user").as("user_id"), col("l_id").as("click_id"),
           col("r_id").as("purchase_id"), col("l_ts"), col("r_ts"))
         .orderBy(col("click_id"), col("purchase_id"))
     },
 
-    // TRUE STREAMING stream-stream LEFT OUTER join under the oracle
-    // gate — the semantic the inner replay can't show: a click with no
-    // purchase inside its 30-minute horizon NULL-emits only once the
-    // watermark PROVES no future purchase can pair with it (wm past
-    // l_ts + 30 min), while matches emit as they join. Two Trigger.Once
-    // batches per side on one checkpoint: batch 1 = the real clicks and
-    // purchases (all matches emit, watermark still 0 → no null rows);
-    // batch 2 = one far-future sentinel per side (users −1/−2, no
-    // cross-match) advancing the GLOBAL watermark to W1 =
-    // min(max click ts, max purchase ts) − 10 min (multi-watermark
-    // min policy), which evicts-and-null-emits every unmatched click
-    // whose horizon closed under W1; unmatched clicks still inside the
-    // horizon stay open and are EXCLUDED on both sides. Oracle =
-    // the inner join's matched pairs UNION the horizon-closed
-    // NOT-EXISTS clicks with NULL purchase columns, exact integer-ms.
+    // TRUE STREAMING stream-stream LEFT OUTER join — the semantic the
+    // inner replay can't show: a click with no purchase inside its
+    // 30-minute horizon NULL-emits only once the watermark PROVES no
+    // future purchase can pair with it (wm past l_ts + 30 min), while
+    // matches emit as they join. Two sources, so it drives
+    // [[triggerOnce]] itself: landing 1 = the real clicks and purchases
+    // (all matches emit, no null rows); landing 2 = one sentinel per
+    // side (users −1/−2, no cross-match) moving the GLOBAL watermark to
+    // W1 = min(max click ts, max purchase ts) − 10 min (multi-watermark
+    // min policy), which null-emits every unmatched click whose horizon
+    // closed under W1; clicks still inside the horizon are EXCLUDED on
+    // both sides. Oracle = the inner join's matched pairs UNION the
+    // horizon-closed NOT-EXISTS clicks with NULL purchase columns.
     "q_stream_join_outer_replay" -> { (s, d) =>
-      def runOnce(base: String): Unit = Streaming.withStatePartitions(s, 4) {
+      def run(base: String): Unit = triggerOnce(s) {
         val schema = s.read.parquet(s"$base/sjo_l").schema
         val l = s.readStream.schema(schema).parquet(s"$base/sjo_l")
         val r = s.readStream.schema(schema).parquet(s"$base/sjo_r")
-        val q = Streaming.streamStreamJoinOuter(l, r)
+        Streaming.streamStreamJoinOuter(l, r)
           .writeStream.format("parquet")
           .option("path", s"$base/sjo_out")
           .option("checkpointLocation", s"$base/sjo_ckpt")
           .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.Once())
-          .start()
-        try q.awaitTermination() finally if (q.isActive) q.stop()
       }
-      val base = replayReuse(s, d, "sjo", "v1") { base =>
-        Seq("sjo_l", "sjo_r", "sjo_out", "sjo_ckpt")
-          .foreach(n => rmTree(new java.io.File(s"$base/$n")))
-        def side(t: String) = Tables.events(s, d)
-          .filter(col("event_type") === t)
-          .select(col("ts"), col("user_id").as("userId"),
-            col("event_id").as("eventId"))
-        side("click").coalesce(4).write.mode("overwrite")
+      def sentinelSide(uid: Long) = sentinel(s, FarFuture, uid)
+        .select(col("ts"), col("userId"), col("eventId"))
+      val base = replayReuse(s, d, "sjo") { base =>
+        joinSide(s, d, "click").coalesce(4).write.mode("overwrite")
           .parquet(s"$base/sjo_l")
-        side("purchase").coalesce(4).write.mode("overwrite")
+        joinSide(s, d, "purchase").coalesce(4).write.mode("overwrite")
           .parquet(s"$base/sjo_r")
-        runOnce(base)
-        def sentinel(uid: Long) = s.range(1).select(
-          lit("2030-01-01 00:00:00").cast("timestamp").as("ts"),
-          lit(uid).as("userId"), lit(uid).as("eventId"))
-        sentinel(-1L).write.mode("append").parquet(s"$base/sjo_l")
-        sentinel(-2L).write.mode("append").parquet(s"$base/sjo_r")
-        runOnce(base)
-      }(runOnce)
+        run(base)
+        sentinelSide(-1L).write.mode("append").parquet(s"$base/sjo_l")
+        sentinelSide(-2L).write.mode("append").parquet(s"$base/sjo_r")
+        run(base)
+      }(run)
       s.read.parquet(s"$base/sjo_out")
         .filter(col("l_user") >= 0)
         .select(col("l_user").as("user_id"), col("l_id").as("click_id"),
@@ -855,31 +565,26 @@ object Events {
     },
 
     // TRUE STREAMING foreachBatch UPSERT — the production streaming
-    // SINK pattern (promoted from its StreamingSpec-only row): when the
-    // target is a plain table (no transactional sink), exactly-once
-    // reduces to IDEMPOTENT MERGE — every per-key aggregate the sink
-    // maintains must be a semilattice join (here max over the
-    // lexicographic (ts, event_id, value) struct = "latest event wins",
-    // the classic last-write upsert), so re-processing a batch after a
-    // failure converges to the same target instead of double-counting
-    // (a count column would need batchId bookkeeping — documented, not
-    // maintained). Two Trigger.Once batches (even event_ids, then the
-    // odd delta) drive the SAME merge body a production foreachBatch
-    // ships: aggregate the batch, union with the current target,
-    // re-reduce, write to a staging dir, swap — the read of the old
-    // target materializes fully into staging BEFORE the swap, so a
-    // crash between write and swap leaves the old target intact.
-    // Oracle = per-user argmax over all events.
+    // SINK pattern: when the target is a plain table (no transactional
+    // sink), exactly-once reduces to IDEMPOTENT MERGE — every per-key
+    // aggregate the sink maintains must be a semilattice join (here max
+    // over the lexicographic (ts, event_id, value) struct = "latest
+    // event wins", the classic last-write upsert), so re-processing a
+    // batch after a failure converges to the same target instead of
+    // double-counting. Its sink is the merge itself, so it drives
+    // [[triggerOnce]] itself: two landings (even event_ids, then the odd
+    // delta) run the SAME merge body a production foreachBatch ships:
+    // aggregate the batch, union with the current target, re-reduce,
+    // write to a staging dir, swap — the read of the old target
+    // materializes fully into staging BEFORE the swap, so a crash
+    // between write and swap leaves the old target intact. Oracle =
+    // per-user argmax over all events.
     "q_stream_foreachbatch_upsert" -> { (s, d) =>
-      import Events.upsertMerge
-      def runOnce(base: String): Unit = Streaming.withStatePartitions(s, 4) {
+      def run(base: String): Unit = triggerOnce(s) {
         val tgt = s"$base/fbu_tgt"
-        val in = s.readStream
-          .schema(s.read.parquet(s"$base/fbu_in").schema)
-          .parquet(s"$base/fbu_in")
-        val q = in.writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-              org.apache.spark.sql.Row], _: Long) =>
+        stagedStream(s, s"$base/fbu_in").writeStream
+          .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row],
+              _: Long) =>
             val cur =
               if (new java.io.File(tgt).isDirectory)
                 Some(batch.sparkSession.read.parquet(tgt))
@@ -892,24 +597,16 @@ object Events {
             ()
           }
           .option("checkpointLocation", s"$base/fbu_ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.Once())
-          .start()
-        try q.awaitTermination() finally if (q.isActive) q.stop()
       }
-      val base = replayReuse(s, d, "fbu", "v1") { base =>
-        Seq("fbu_in", "fbu_tgt", "fbu_tgt_next", "fbu_ckpt")
-          .foreach(n => rmTree(new java.io.File(s"$base/$n")))
-        val ev = Tables.events(s, d)
-          .select(col("ts"), col("user_id").as("userId"),
-            col("event_type").as("eventType"), col("value"),
-            col("event_id").as("eventId"))
+      val base = replayReuse(s, d, "fbu") { base =>
+        val ev = streamEvents(s, d)
         ev.filter(pmod(col("eventId"), lit(2)) === 0)
           .coalesce(4).write.mode("overwrite").parquet(s"$base/fbu_in")
-        runOnce(base)
+        run(base)
         ev.filter(pmod(col("eventId"), lit(2)) === 1)
           .coalesce(4).write.mode("append").parquet(s"$base/fbu_in")
-        runOnce(base)
-      }(runOnce)
+        run(base)
+      }(run)
       s.read.parquet(s"$base/fbu_tgt")
         .select(col("userId").as("user_id"),
           col("m.ts").as("last_ts"),

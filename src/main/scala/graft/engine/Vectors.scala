@@ -770,16 +770,11 @@ object Vectors {
     // generation is DELIBERATELY bounded (vec_id < 300, exact all-pairs) so
     // a recursive-CTE oracle can replay it; q_dedup_groups_lsh below is the
     // unbounded scale path consuming LSH candidate pairs. The fixture graph
-    // converges in a handful of rounds. The bound is env-overridable
-    // (SPARK_GRAFT_DEDUP_DEMO_BOUND, estimator studies ONLY — the oracle
-    // hardcodes 300, so Verify aborts when the knob is set) to measure
-    // the quadratic demo against the linear LSH twin as the corpus
-    // widens; the measured crossover is recorded in SURVEY §6.
+    // converges in a handful of rounds. The crossover of this quadratic
+    // demo against the linear LSH twin is recorded in SURVEY §6.
     "q_dedup_groups" -> { (s, d) =>
       GraftFunctions.register(s)
-      val bound = sys.env.get("SPARK_GRAFT_DEDUP_DEMO_BOUND")
-        .flatMap(_.toLongOption).filter(_ > 0).getOrElse(300L)
-      val emb = Tables.embeddings(s, d).filter(col("vec_id") < bound)
+      val emb = Tables.embeddings(s, d).filter(col("vec_id") < 300L)
         .select(col("vec_id"), vd(col("embedding")).as("v"))
       val a = emb.select(col("vec_id").as("id_a"), col("v").as("va"))
       val b = emb.select(col("vec_id").as("id_b"), col("v").as("vb"))

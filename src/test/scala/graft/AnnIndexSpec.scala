@@ -9,7 +9,7 @@ import graft.engine.Checkpoints
 /** The trained ANN indexes (the IVF lists, the IVF-PQ codebook and encoded
   * corpus): what their first build schedules, that later invocations serve
   * them instead of training, and that two live sessions on one fixture
-  * keep their own pins.
+  * keep their own pins (those and the k-core peel rounds).
   */
 class AnnIndexSpec extends SparkSuite {
 
@@ -50,13 +50,18 @@ class AnnIndexSpec extends SparkSuite {
       } finally Checkpoints.release(s)
     }
 
+  private val pinnedBy = Seq(
+    "q_sim_topk_ivf" -> Seq("ivf_cents", "ivf_asg"),
+    "q_vec_ivfpq" -> Seq("ivfpq", "ivfpq_enc", "ivfpq_sl"),
+    "q_graph_kcore" -> (1 to 5).map(k => s"kcore$k"))
+
   test("two live sessions get identical ANN results and ending one leaves " +
       "the other's pinned frames readable") {
     val s1 = spark.newSession()
     val s2 = spark.newSession()
     try {
-      for (q <- Seq("q_sim_topk_ivf", "q_vec_ivfpq")) {
-        // session 1's result reads its pinned shortlist lazily, after
+      for ((q, _) <- pinnedBy) {
+        // session 1's result reads its pinned frames lazily, after
         // session 2 has built (and rebuilt) the same query on the fixture
         val a = SparkEntry.queries(q)(s1, sf)
         val b = rows(SparkEntry.queries(q)(s2, sf))
@@ -66,10 +71,9 @@ class AnnIndexSpec extends SparkSuite {
       }
       Checkpoints.release(s2)
       assert(Checkpoints.storageBySlot(s2).isEmpty)
-      for (k <- Seq("ivf_cents", "ivf_asg", "ivfpq", "ivfpq_enc",
-          "ivfpq_sl")) {
+      for ((q, slots) <- pinnedBy; k <- slots) {
         val df = Checkpoints.serving(s"$k:$sf", s1)
-        assert(df.isDefined, s"session 1 lost $k")
+        assert(df.isDefined, s"session 1 lost $q's $k")
         assert(df.get.count() > 0, s"session 1's $k is empty")
       }
     } finally {

@@ -5,23 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared single session for all suites (sbt forks one JVM for tests). */
 object SparkSuite {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      // same extension set as the Verify/Bench/Explain entry points, so
-      // tests exercise the injected functions AND the similarity-join
-      // optimizer rule exactly as the driver's sessions do
-      .withExtensions(new graft.engine.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries nanosecond timestamps (INT64 nanos);
-      // surface them as long so Tables.events can DIV to micros exactly.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // the entry points' session recipe, so tests exercise the injected
+  // functions AND the similarity-join optimizer rule exactly as
+  // Verify's and Bench's sessions do
+  lazy val session: SparkSession = Sessions.local("4")
 }
 
 trait SparkSuite extends AnyFunSuite {
