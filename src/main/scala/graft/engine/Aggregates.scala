@@ -738,13 +738,7 @@ object Aggregates {
         .groupBy(col("event_type"),
           date_trunc("hour", col("ts")).as("h"))
         .agg(count(lit(1)).as("x"))
-      val grid = hourly.groupBy(col("event_type"))
-        .agg(min(col("h")).as("h0"), max(col("h")).as("h1"))
-        .select(col("event_type"),
-          explode(expr("sequence(h0, h1, interval 1 hour)")).as("h"))
-      val dense = grid.join(hourly, Seq("event_type", "h"), "left")
-        .na.fill(0L, Seq("x"))
-      dense.groupBy(col("event_type"))
+      Events.denseHourly(hourly).groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_hours"), sum(col("x")).as("sx"),
           sum(col("x") * col("x")).as("qx"))
         .select(col("event_type"), col("n_hours"), col("sx").as("n_events"),
@@ -3191,20 +3185,10 @@ object Aggregates {
         | FROM rj, s2 ORDER BY rj.event_type"""
         .stripMargin.replaceAll("\n", " "),
 
-    // Same dense hourly grid as the Ljung-Box oracle; D and VMR as the
-    // pure integer ratios, sqrt-only z, 1.645 literal on the rounded z.
+    // The shared dense hourly grid; D and VMR as the pure integer
+    // ratios, sqrt-only z, 1.645 literal on the rounded z.
     "q_agg_dispersion" ->
-      """WITH hourly AS (SELECT event_type,
-        |   date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h,
-        |   CAST(count(*) AS BIGINT) AS x FROM events GROUP BY 1, 2),
-        | bounds AS (SELECT event_type, min(h) AS h0, max(h) AS h1
-        |  FROM hourly GROUP BY 1),
-        | grid AS (SELECT event_type,
-        |   unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS h
-        |  FROM bounds),
-        | dense AS (SELECT g.event_type, g.h, COALESCE(hl.x, 0) AS x
-        |  FROM grid g LEFT JOIN hourly hl
-        |   ON hl.event_type = g.event_type AND hl.h = g.h),
+      s"""WITH ${Events.oDenseHourly()},
         | st AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_hours,
         |   CAST(sum(x) AS BIGINT) AS sx, CAST(sum(x * x) AS BIGINT) AS qx
         |  FROM dense GROUP BY event_type),

@@ -81,61 +81,52 @@ object Events {
       try q.awaitTermination() finally if (q.isActive) q.stop()
     }
 
+  /** The replay protocols' staging root for session `s` and fixture
+    * `d`: under the driver's temp dir (`SparkFiles.getRootDirectory()`,
+    * deleted recursively when the context stops), one dir per fixture
+    * and session identity. No other JVM, context or live session reads
+    * or clears it.
+    */
+  private[graft] def stagingRoot(s: SparkSession, d: String): String =
+    s"${org.apache.spark.SparkFiles.getRootDirectory()}/graft_stream/" +
+      d.replaceAll("[^A-Za-z0-9_]", "_") + "_" +
+      java.lang.System.identityHashCode(s).toHexString
+
   /** Build-once / restart-later harness for the replay protocols. The
     * protocol's micro-batch sequence runs IN FULL exactly once per
-    * (fixture dir, tag, fixture signature): `build` runs on cleared
-    * `<tag>_*` staging dirs, writes the input batches and drives the
-    * watermark-advance sequence. Every later invocation exercises the
-    * OTHER half of the streaming contract instead — `restart` reopens
-    * the query on the durable checkpoint, where the file source finds no
-    * new files and the run commits nothing: the idempotent
-    * crash-recovery no-op a production Structured Streaming job lives
-    * by, which is also why the sink can be read back unchanged.
-    * No-data micro-batches are disabled around the restart (they exist
-    * to flush surviving state on a LIVE stream; here they would evict
-    * the deliberately-open tail windows the protocols exclude, changing
-    * the sink). A `<tag>.done` marker carries the fixture's
-    * events.parquet (name, size, mtime) signature plus the protocol
-    * version, so a regenerated fixture or a protocol change invalidates
-    * the reuse and rebuilds from scratch. At 100 TB this is exactly the
-    * recommended deployment shape: one durable checkpoint root, restarts
-    * resume from state instead of re-reading the backlog.
+    * (session, fixture dir, tag): `build` runs on cleared `<tag>_*`
+    * staging dirs under [[stagingRoot]], writes the input batches and
+    * drives the watermark-advance sequence, then leaves a `<tag>.done`
+    * marker. Every later invocation in the session exercises the OTHER
+    * half of the streaming contract instead — `restart` reopens the
+    * query on the durable checkpoint, where the file source finds no new
+    * files and the run commits nothing: the idempotent crash-recovery
+    * no-op a production Structured Streaming job lives by, which is also
+    * why the sink can be read back unchanged. No-data micro-batches are
+    * disabled around the restart (they exist to flush surviving state on
+    * a LIVE stream; here they would evict the deliberately-open tail
+    * windows the protocols exclude, changing the sink). At 100 TB this
+    * is exactly the recommended deployment shape: one durable checkpoint
+    * root, restarts resume from state instead of re-reading the backlog.
     */
   private def replayReuse(s: SparkSession, d: String, tag: String)(
       build: String => Unit)(restart: String => Unit): String = {
-    val slug = d.replaceAll("[^A-Za-z0-9_]", "_")
-    val base =
-      s"${System.getProperty("java.io.tmpdir")}/graft_stream/$slug"
+    val base = stagingRoot(s, d)
     new java.io.File(base).mkdirs()
-    def fileSig(f: java.io.File): String =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).sortBy(_.getName)
-          .map(fileSig).mkString(",")
-      else s"${f.getName}:${f.length}:${f.lastModified}"
-    val sig = "v2|" + fileSig(new java.io.File(d, "events.parquet"))
     val marker = new java.io.File(base, s"$tag.done")
-    val have =
-      if (marker.isFile)
-        try new String(java.nio.file.Files.readAllBytes(marker.toPath),
-          java.nio.charset.StandardCharsets.UTF_8)
-        catch { case _: Throwable => "" }
-      else ""
-    if (have == sig) {
+    if (marker.isFile) {
       val key = "spark.sql.streaming.noDataMicroBatches.enabled"
       val prev = s.conf.get(key)
       s.conf.set(key, "false")
       try restart(base) finally s.conf.set(key, prev)
     } else {
-      marker.delete()
       // a surviving checkpoint would treat re-written input as new files
       // and append a second copy of every row to the sink; clear input,
       // sink and checkpoint together
       Option(new java.io.File(base).listFiles()).getOrElse(Array.empty)
         .filter(_.getName.startsWith(tag + "_")).foreach(rmTree)
       build(base)
-      java.nio.file.Files.write(marker.toPath,
-        sig.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      ()
+      marker.createNewFile()
     }
     base
   }
@@ -199,27 +190,81 @@ object Events {
     s.read.parquet(s"$base/${tag}_out")
   }
 
-  /** Checkpointed per-(event_type, hour) count series — shared by
-    * q_ts_acf / q_ts_cross_corr / q_ts_outage_detect (factored per the
-    * r6 advice, mirroring Analytics.supportEdges): the hourly aggregate
-    * is tiny (types × hours) but referenced several times downstream,
-    * so it is localCheckpoint'd once per invocation — the fact-scale
-    * events table is scanned exactly once — and pinned per
-    * (slot, fixture) with the usual replace-previous hygiene.
+  /** The per-(event_type, hour) event count series `(event_type, h, x)`
+    * that about fifteen q_ts_* rows read. It is tiny (types x hours) and a
+    * pure function of the fixture, so it is built with one scan of the
+    * events table and localCheckpoint'd once per session, under the one
+    * `hourly:<dir>` memo slot.
     */
-  private def hourlySeries(s: SparkSession, d: String, slot: String)
-      : DataFrame =
-    // ONE memoized frame per dataset (r13): fifteen q_ts_* rows ride
-    // this identical per-(type, hour) count; `slot` stays for call-site
-    // documentation only. The frame is tiny (types x hours) and a pure
-    // function of the fixture, so one corpus scan per session serves
-    // every invocation of the family.
+  private def hourlySeries(s: SparkSession, d: String): DataFrame =
     Checkpoints.memo("hourly:" + d, s) {
       Tables.events(s, d)
         .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("h"))
         .agg(count(lit(1)).as("x"))
         .localCheckpoint()
     }
+
+  /** Every hour of each event type's calendar span in `sparse`
+    * `(event_type, h, ..)`: `(event_type, h0, h)`, one row per hour from
+    * the type's first hour `h0` to its last.
+    */
+  private[engine] def hourGrid(sparse: DataFrame): DataFrame =
+    sparse.groupBy(col("event_type"))
+      .agg(min(col("h")).as("h0"), max(col("h")).as("h1"))
+      .select(col("event_type"), col("h0"),
+        explode(expr("sequence(h0, h1, interval 1 hour)")).as("h"))
+
+  /** The dense hourly series: `sparse` `(event_type, h, v)` on its
+    * [[hourGrid]], with `v` = 0 in the hours `sparse` lacks. A series over
+    * gappy hours would make lags, runs and spectra meaningless; a zero
+    * hour is evidence.
+    */
+  private[engine] def denseHourly(sparse: DataFrame, v: String = "x")
+      : DataFrame =
+    hourGrid(sparse).join(sparse, Seq("event_type", "h"), "left")
+      .na.fill(0L, Seq(v))
+
+  /** `dense` with its type's hour count `n`, count total `sx` and the
+    * n-scaled deviation dev = n·x − sx, all DECIMAL(38,0): the exact
+    * integer lift of x − mean, so moments of dev need no float mean
+    * (dev² sums pass 2⁶³ once n·x nears 1e9·1e3).
+    */
+  private[engine] def hourlyDevs(dense: DataFrame): DataFrame = {
+    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
+    val st = dense.groupBy(col("event_type"))
+      .agg(count(lit(1)).cast(dec).as("n"), sum(col("x")).cast(dec).as("sx"))
+    dense.join(broadcast(st), Seq("event_type"))
+      .withColumn("dev", col("n") * col("x").cast(dec) - col("sx"))
+  }
+
+  /** The DuckDB twin of [[denseHourly]] over the events table's hourly
+    * counts: the CTEs `hourly`, `bounds`, `grid` and `dense`
+    * `(event_type, h0, h, v)`, plus with `devs` the [[hourlyDevs]] pair
+    * `st` and `devs` `(event_type, h, n, dev)` in HUGEINT. One line, to
+    * interpolate after a `WITH`.
+    */
+  private[engine] def oDenseHourly(v: String = "x", devs: Boolean = false)
+      : String = {
+    val dv = if (!devs) "" else
+      s""",
+         | st AS (SELECT event_type, CAST(count(*) AS HUGEINT) AS n,
+         |   CAST(sum($v) AS HUGEINT) AS sx FROM dense GROUP BY 1),
+         | devs AS (SELECT d.event_type, d.h, st.n,
+         |   st.n * d.$v - st.sx AS dev
+         |  FROM dense d JOIN st USING (event_type))"""
+    s"""hourly AS (SELECT event_type,
+       |   date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h,
+       |   CAST(count(*) AS BIGINT) AS $v FROM events GROUP BY 1, 2),
+       | bounds AS (SELECT event_type, min(h) AS h0, max(h) AS h1
+       |  FROM hourly GROUP BY 1),
+       | grid AS (SELECT event_type, h0,
+       |   unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS h
+       |  FROM bounds),
+       | dense AS (SELECT g.event_type, g.h0, g.h, COALESCE(hl.$v, 0) AS $v
+       |  FROM grid g LEFT JOIN hourly hl
+       |   ON g.event_type = hl.event_type AND g.h = hl.h)$dv"""
+      .stripMargin.replaceAll("\n", " ")
+  }
 
   /** The q_stream_foreachbatch_upsert merge body, factored so the
     * EngineLaws idempotency row can replay it outside the streaming
@@ -1062,17 +1107,6 @@ object Events {
         .orderBy(col("event_type"))
     },
 
-    // Sample autocorrelation of the hourly arrival-count series at lags
-    // 1..6 per event type — the periodicity probe run before picking a
-    // seasonal-naive lag (see q_ts_backtest). The series is the DENSE
-    // hourly grid (empty hours count 0 — ACF over a gappy series is
-    // meaningless), built per type from sequence(min,max,1h). EXACT
-    // integer spelling: with counts x_t and totals (n, S), the n-scaled
-    // deviation d_t = n·x_t − S is integral, so r_k = Σ d_t·d_{t−k} /
-    // Σ d_t² divides two exactly-computed integers (DECIMAL(38,0) state:
-    // d² sums pass 2⁶³ once n·x nears 1e9·1e3). |r_k| ≤ 1 by
-    // Cauchy–Schwarz; a constant series (den 0) yields null, not NaN.
-    // One grid join + one type-partitioned lag window + one partial agg.
     // Seasonal-naive forecast BACKTEST — the capacity-planning baseline
     // every fancier model must beat: ŷ(t) = y(t−168h) (same hour last
     // week) evaluated against the persistence baseline ŷ(t) = y(t−1h)
@@ -1083,16 +1117,9 @@ object Events {
     // both lags on the SAME exchange.
     "q_ts_forecast_snaive" -> { (s, d) =>
       val W = org.apache.spark.sql.expressions.Window
-      val hourly = hourlySeries(s, d, "snaive")
-        .select(col("event_type"), col("h"), col("x").as("y"))
-      val grid = hourly.groupBy(col("event_type"))
-        .agg(min(col("h")).as("h0"), max(col("h")).as("h1"))
-        .select(col("event_type"),
-          explode(expr("sequence(h0, h1, interval 1 hour)")).as("h"))
-      val dense = grid.join(hourly, Seq("event_type", "h"), "left")
-        .na.fill(0L, Seq("y"))
       val w = W.partitionBy(col("event_type")).orderBy(col("h"))
-      dense
+      denseHourly(hourlySeries(s, d)
+          .select(col("event_type"), col("h"), col("x").as("y")), "y")
         .withColumn("y168", lag(col("y"), 168).over(w))
         .withColumn("y1", lag(col("y"), 1).over(w))
         .filter(col("y168").isNotNull)
@@ -1109,16 +1136,6 @@ object Events {
         .orderBy(col("event_type"))
     },
 
-    // Theil–Sen robust trend — the median-of-pairwise-slopes estimator
-    // that shrugs off the outage spikes OLS (q_win_slope) bends toward:
-    // per event type, slope = median over all hour-pairs of
-    // (yj−yi)/(xj−xi), intercept = median of (yi − m·xi) using the
-    // ROUNDED slope so both engines derive the identical residuals.
-    // Pair count is O(T²) in the TIME-AXIS length (≤720 hours here —
-    // bounded by calendar span, never by event volume; the raw fact
-    // collapses through one hash aggregate first). Slope division is
-    // IEEE-deterministic; medians interpolate identical multisets;
-    // one epsilon-round per surfaced stat.
     // AR(2) Yule–Walker fit + in-sample one-step forecast error (r13)
     // — the MODEL tier on top of the ACF/PACF diagnostics: φ₁, φ₂ in
     // closed form from the 6dp-rounded r₁, r₂ (the PACF recipe — the
@@ -1129,22 +1146,10 @@ object Events {
     // ε-rounded decimal squares. Everything rides the calendar-bounded
     // dense grid; one corpus scan.
     "q_ts_ar2_forecast" -> { (s, d) =>
-      val dec = org.apache.spark.sql.types.DecimalType(38, 0)
       val dec4 = org.apache.spark.sql.types.DecimalType(38, 4)
       val W = org.apache.spark.sql.expressions.Window
-      val hourly = hourlySeries(s, d, "ar2")
-      val grid = hourly.groupBy(col("event_type"))
-        .agg(min(col("h")).as("h0"), max(col("h")).as("h1"))
-        .select(col("event_type"),
-          explode(expr("sequence(h0, h1, interval 1 hour)")).as("h"))
-      val dense = grid.join(hourly, Seq("event_type", "h"), "left")
-        .na.fill(0L, Seq("x"))
-      val st = dense.groupBy(col("event_type"))
-        .agg(count(lit(1)).cast(dec).as("n"),
-          sum(col("x")).cast(dec).as("sx"))
       val w = W.partitionBy(col("event_type")).orderBy(col("h"))
-      val lagged = dense.join(broadcast(st), Seq("event_type"))
-        .withColumn("dev", col("n") * col("x").cast(dec) - col("sx"))
+      val lagged = hourlyDevs(denseHourly(hourlySeries(s, d)))
         .withColumn("d1", lag(col("dev"), 1).over(w))
         .withColumn("d2", lag(col("dev"), 2).over(w))
       val mo = lagged.groupBy(col("event_type"))
@@ -1265,14 +1270,9 @@ object Events {
     "q_ts_durbin_watson" -> { (s, d) =>
       val W = org.apache.spark.sql.expressions.Window
       val dec6 = org.apache.spark.sql.types.DecimalType(38, 6)
-      val hourly = hourlySeries(s, d, "dw")
+      val hourly = hourlySeries(s, d)
         .select(col("event_type"), col("h"), col("x").as("y"))
-      val grid = hourly.groupBy(col("event_type"))
-        .agg(min(col("h")).as("h0"), max(col("h")).as("h1"))
-        .select(col("event_type"), col("h0"),
-          explode(expr("sequence(h0, h1, interval 1 hour)")).as("h"))
-      val dense = grid.join(hourly, Seq("event_type", "h"), "left")
-        .na.fill(0L, Seq("y"))
+      val dense = denseHourly(hourly, "y")
         .withColumn("x",
           expr("(unix_micros(h) - unix_micros(h0)) DIV 3600000000"))
       val m = dense.groupBy(col("event_type"))
@@ -1305,8 +1305,18 @@ object Events {
         .orderBy(col("event_type"))
     },
 
+    // Theil–Sen robust trend — the median-of-pairwise-slopes estimator
+    // that shrugs off the outage spikes OLS (q_win_slope) bends toward:
+    // per event type, slope = median over all hour-pairs of
+    // (yj−yi)/(xj−xi), intercept = median of (yi − m·xi) using the
+    // ROUNDED slope so both engines derive the identical residuals.
+    // Pair count is O(T²) in the TIME-AXIS length (≤720 hours here —
+    // bounded by calendar span, never by event volume; the raw fact
+    // collapses through one hash aggregate first). Slope division is
+    // IEEE-deterministic; medians interpolate identical multisets;
+    // one epsilon-round per surfaced stat.
     "q_ts_theil_sen" -> { (s, d) =>
-      val hourly = hourlySeries(s, d, "theil")
+      val hourly = hourlySeries(s, d)
         .select(col("event_type"), col("h"), col("x").as("y"))
         .withColumn("x", expr("unix_micros(h) DIV 3600000000"))
       val a = hourly.select(col("event_type"), col("x").as("xi"),
@@ -1344,7 +1354,7 @@ object Events {
     // the ROUNDED z, so the 1.96 boundary is decided on identical 6dp
     // values in both engines.
     "q_ts_mann_kendall" -> { (s, d) =>
-      val hourly = hourlySeries(s, d, "mk")
+      val hourly = hourlySeries(s, d)
         .select(col("event_type"), col("h"), col("x").as("y"))
       val a = hourly.select(col("event_type"), col("h").as("hi"),
         col("y").as("yi"))
@@ -1377,25 +1387,21 @@ object Events {
         .orderBy(col("event_type"))
     },
 
+    // Sample autocorrelation of the hourly arrival-count series at lags
+    // 1..6 per event type — the periodicity probe run before picking a
+    // seasonal-naive lag (see q_ts_backtest). The series is the DENSE
+    // hourly grid (empty hours count 0 — ACF over a gappy series is
+    // meaningless). EXACT integer spelling: with counts x_t and totals
+    // (n, S), the n-scaled deviation d_t = n·x_t − S is integral, so
+    // r_k = Σ d_t·d_{t−k} / Σ d_t² divides two exactly-computed integers
+    // ([[hourlyDevs]]). |r_k| ≤ 1 by Cauchy–Schwarz; a constant series
+    // (den 0) yields null, not NaN.
+    // One grid join + one type-partitioned lag window + one partial agg.
     "q_ts_acf" -> { (s, d) =>
-      val dec = org.apache.spark.sql.types.DecimalType(38, 0)
       val W = org.apache.spark.sql.expressions.Window
       val lags = 1 to 6
-      // Hourly series referenced three times below (grid bounds, the
-      // dense left-join, series totals) — shared checkpointed helper.
-      val hourly = hourlySeries(s, d, "acf")
-      val grid = hourly.groupBy(col("event_type"))
-        .agg(min(col("h")).as("h0"), max(col("h")).as("h1"))
-        .select(col("event_type"),
-          explode(expr("sequence(h0, h1, interval 1 hour)")).as("h"))
-      val dense = grid.join(hourly, Seq("event_type", "h"), "left")
-        .na.fill(0L, Seq("x"))
-      val st = dense.groupBy(col("event_type"))
-        .agg(count(lit(1)).cast(dec).as("n"),
-          sum(col("x")).cast(dec).as("sx"))
       val w = W.partitionBy(col("event_type")).orderBy(col("h"))
-      val devs = dense.join(broadcast(st), Seq("event_type"))
-        .withColumn("dev", col("n") * col("x").cast(dec) - col("sx"))
+      val devs = hourlyDevs(denseHourly(hourlySeries(s, d)))
       val lagged = lags.foldLeft(devs) { (df, k) =>
         df.withColumn(s"d$k", lag(col("dev"), k).over(w))
       }
@@ -1423,22 +1429,10 @@ object Events {
     // oracle is generated from the same index math, so the expression
     // trees match op for op). Each φ_{k,k} ε-rounds at 6dp on output.
     "q_ts_pacf" -> { (s, d) =>
-      val dec = org.apache.spark.sql.types.DecimalType(38, 0)
       val W = org.apache.spark.sql.expressions.Window
       val lags = 1 to 5
-      val hourly = hourlySeries(s, d, "pacf")
-      val grid = hourly.groupBy(col("event_type"))
-        .agg(min(col("h")).as("h0"), max(col("h")).as("h1"))
-        .select(col("event_type"),
-          explode(expr("sequence(h0, h1, interval 1 hour)")).as("h"))
-      val dense = grid.join(hourly, Seq("event_type", "h"), "left")
-        .na.fill(0L, Seq("x"))
-      val st = dense.groupBy(col("event_type"))
-        .agg(count(lit(1)).cast(dec).as("n"),
-          sum(col("x")).cast(dec).as("sx"))
       val w = W.partitionBy(col("event_type")).orderBy(col("h"))
-      val devs = dense.join(broadcast(st), Seq("event_type"))
-        .withColumn("dev", col("n") * col("x").cast(dec) - col("sx"))
+      val devs = hourlyDevs(denseHourly(hourlySeries(s, d)))
       val lagged = lags.foldLeft(devs) { (df, k) =>
         df.withColumn(s"d$k", lag(col("dev"), k).over(w))
       }
@@ -1537,22 +1531,10 @@ object Events {
     // every series loudly non-white — the test firing is the demo
     // working.
     "q_ts_ljung_box" -> { (s, d) =>
-      val dec = org.apache.spark.sql.types.DecimalType(38, 0)
       val W = org.apache.spark.sql.expressions.Window
       val lags = 1 to 6
-      val hourly = hourlySeries(s, d, "lb")
-      val grid = hourly.groupBy(col("event_type"))
-        .agg(min(col("h")).as("h0"), max(col("h")).as("h1"))
-        .select(col("event_type"),
-          explode(expr("sequence(h0, h1, interval 1 hour)")).as("h"))
-      val dense = grid.join(hourly, Seq("event_type", "h"), "left")
-        .na.fill(0L, Seq("x"))
-      val st = dense.groupBy(col("event_type"))
-        .agg(count(lit(1)).cast(dec).as("n"),
-          sum(col("x")).cast(dec).as("sx"))
       val w = W.partitionBy(col("event_type")).orderBy(col("h"))
-      val devs = dense.join(broadcast(st), Seq("event_type"))
-        .withColumn("dev", col("n") * col("x").cast(dec) - col("sx"))
+      val devs = hourlyDevs(denseHourly(hourlySeries(s, d)))
       val lagged = lags.foldLeft(devs) { (df, k) =>
         df.withColumn(s"d$k", lag(col("dev"), k).over(w))
       }
@@ -1585,19 +1567,7 @@ object Events {
     // DECIMAL(28,4) (relative 1e-9 at cell scale) so A and B are exact
     // order-free decimal sums. Frame = the dense calendar-bounded grid.
     "q_ts_dft_power" -> { (s, d) =>
-      val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-      val hourly = hourlySeries(s, d, "dft")
-      val grid = hourly.groupBy(col("event_type"))
-        .agg(min(col("h")).as("h0"), max(col("h")).as("h1"))
-        .select(col("event_type"),
-          explode(expr("sequence(h0, h1, interval 1 hour)")).as("h"))
-      val dense = grid.join(hourly, Seq("event_type", "h"), "left")
-        .na.fill(0L, Seq("x"))
-      val st = dense.groupBy(col("event_type"))
-        .agg(count(lit(1)).cast(dec).as("n"),
-          sum(col("x")).cast(dec).as("sx"))
-      val devs = dense.join(broadcast(st), Seq("event_type"))
-        .withColumn("dev", col("n") * col("x").cast(dec) - col("sx"))
+      val devs = hourlyDevs(denseHourly(hourlySeries(s, d)))
       val cosA = array(Fx.cos24.map(x => lit(x.toDouble)): _*)
       val sinA = array(Fx.sin24.map(x => lit(x.toDouble)): _*)
       val idx = (pmod(pmod(expr("unix_micros(h) DIV 3600000000"),
@@ -1636,20 +1606,8 @@ object Events {
     // ordering with the m tiebreak. One corpus scan to the pinned
     // hourly frame; everything after is (types × 11) arithmetic.
     "q_ts_spectral_entropy" -> { (s, d) =>
-      val dec = org.apache.spark.sql.types.DecimalType(38, 0)
       val W = org.apache.spark.sql.expressions.Window
-      val hourly = hourlySeries(s, d, "spent")
-      val grid = hourly.groupBy(col("event_type"))
-        .agg(min(col("h")).as("h0"), max(col("h")).as("h1"))
-        .select(col("event_type"),
-          explode(expr("sequence(h0, h1, interval 1 hour)")).as("h"))
-      val dense = grid.join(hourly, Seq("event_type", "h"), "left")
-        .na.fill(0L, Seq("x"))
-      val st = dense.groupBy(col("event_type"))
-        .agg(count(lit(1)).cast(dec).as("n"),
-          sum(col("x")).cast(dec).as("sx"))
-      val devs = dense.join(broadcast(st), Seq("event_type"))
-        .withColumn("dev", col("n") * col("x").cast(dec) - col("sx"))
+      val devs = hourlyDevs(denseHourly(hourlySeries(s, d)))
       val cosA = array(Fx.cos24.map(x => lit(x.toDouble)): _*)
       val sinA = array(Fx.sin24.map(x => lit(x.toDouble)): _*)
       val idx = (pmod(pmod(expr("unix_micros(h) DIV 3600000000"),
@@ -1758,13 +1716,7 @@ object Events {
     "q_ts_variance_ratio" -> { (s, d) =>
       val W = org.apache.spark.sql.expressions.Window
       val q = 4
-      val hourly = hourlySeries(s, d, "vr")
-      val grid = hourly.groupBy(col("event_type"))
-        .agg(min(col("h")).as("h0"), max(col("h")).as("h1"))
-        .select(col("event_type"),
-          explode(expr("sequence(h0, h1, interval 1 hour)")).as("h"))
-      val dense = grid.join(hourly, Seq("event_type", "h"), "left")
-        .na.fill(0L, Seq("x"))
+      val dense = denseHourly(hourlySeries(s, d))
       val w = W.partitionBy(col("event_type")).orderBy(col("h"))
       val diffs = dense
         .withColumn("d1", col("x") - lag(col("x"), 1).over(w))
@@ -1801,13 +1753,7 @@ object Events {
     // rounded z.
     "q_ts_turning_points" -> { (s, d) =>
       val W = org.apache.spark.sql.expressions.Window
-      val hourly = hourlySeries(s, d, "tp")
-      val grid = hourly.groupBy(col("event_type"))
-        .agg(min(col("h")).as("h0"), max(col("h")).as("h1"))
-        .select(col("event_type"),
-          explode(expr("sequence(h0, h1, interval 1 hour)")).as("h"))
-      val dense = grid.join(hourly, Seq("event_type", "h"), "left")
-        .na.fill(0L, Seq("x"))
+      val dense = denseHourly(hourlySeries(s, d))
       val w = W.partitionBy(col("event_type")).orderBy(col("h"))
       val tp = dense
         .withColumn("pv", lag(col("x"), 1).over(w))
@@ -1846,13 +1792,7 @@ object Events {
     // hourly series, never the corpus.
     "q_ts_hurst" -> { (s, d) =>
       val W = org.apache.spark.sql.expressions.Window
-      val hourly = hourlySeries(s, d, "hurst")
-      val grid = hourly.groupBy(col("event_type"))
-        .agg(min(col("h")).as("h0"), max(col("h")).as("h1"))
-        .select(col("event_type"), col("h0"),
-          explode(expr("sequence(h0, h1, interval 1 hour)")).as("h"))
-      val dense = grid.join(hourly, Seq("event_type", "h"), "left")
-        .na.fill(0L, Seq("x"))
+      val dense = denseHourly(hourlySeries(s, d))
         .withColumn("i", expr(
           "(unix_micros(h) - unix_micros(h0)) DIV 3600000000"))
       val blocked = dense
@@ -1918,13 +1858,7 @@ object Events {
     // stream; series are hour-cardinality, tiny next to the corpus.
     "q_ts_cross_corr" -> { (s, d) =>
       val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-      val hourly = hourlySeries(s, d, "xc")
-      val dense = hourly.groupBy(col("event_type"))
-        .agg(min(col("h")).as("h0"), max(col("h")).as("h1"))
-        .select(col("event_type"),
-          explode(expr("sequence(h0, h1, interval 1 hour)")).as("h"))
-        .join(hourly, Seq("event_type", "h"), "left")
-        .na.fill(0L, Seq("x"))
+      val dense = denseHourly(hourlySeries(s, d))
       val xs = dense.select(col("event_type").as("type_a"), col("h"),
         col("x").cast(dec).as("xa"))
       val ys = dense
@@ -1967,11 +1901,8 @@ object Events {
     // only, a subset of the tiny grid.
     "q_ts_outage_detect" -> { (s, d) =>
       val W = org.apache.spark.sql.expressions.Window
-      val hourly = hourlySeries(s, d, "out")
-      val zeros = hourly.groupBy(col("event_type"))
-        .agg(min(col("h")).as("h0"), max(col("h")).as("h1"))
-        .select(col("event_type"),
-          explode(expr("sequence(h0, h1, interval 1 hour)")).as("h"))
+      val hourly = hourlySeries(s, d)
+      val zeros = hourGrid(hourly)
         .join(hourly, Seq("event_type", "h"), "left")
         .filter(col("x").isNull)
       val w = W.partitionBy(col("event_type")).orderBy(col("h"))
@@ -2733,17 +2664,7 @@ object Events {
         .stripMargin.replaceAll("\n", " "),
 
     "q_ts_forecast_snaive" ->
-      """WITH hourly AS (SELECT event_type,
-        |   date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h,
-        |   CAST(count(*) AS BIGINT) AS y FROM events GROUP BY 1, 2),
-        | bounds AS (SELECT event_type, min(h) AS h0, max(h) AS h1
-        |  FROM hourly GROUP BY 1),
-        | grid AS (SELECT event_type,
-        |   unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS h
-        |  FROM bounds),
-        | dense AS (SELECT g.event_type, g.h, COALESCE(hl.y, 0) AS y
-        |  FROM grid g LEFT JOIN hourly hl
-        |   ON g.event_type = hl.event_type AND g.h = hl.h),
+      s"""WITH ${oDenseHourly("y")},
         | lagd AS (SELECT event_type, y, lag(y, 168) OVER w AS y168,
         |   lag(y, 1) OVER w AS y1 FROM dense
         |  WINDOW w AS (PARTITION BY event_type ORDER BY h))
@@ -2829,21 +2750,7 @@ object Events {
            |  ELSE round(CAST(num$k AS DOUBLE) / CAST(den AS DOUBLE)
            |   + 5e-10, 6) END AS r FROM ag""".stripMargin)
         .mkString(" UNION ALL ")
-      s"""WITH hourly AS (SELECT event_type,
-         |   date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h,
-         |   CAST(count(*) AS BIGINT) AS x FROM events GROUP BY 1, 2),
-         | bounds AS (SELECT event_type, min(h) AS h0, max(h) AS h1
-         |  FROM hourly GROUP BY 1),
-         | grid AS (SELECT event_type,
-         |   unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS h
-         |  FROM bounds),
-         | dense AS (SELECT g.event_type, g.h, COALESCE(hl.x, 0) AS x
-         |  FROM grid g LEFT JOIN hourly hl
-         |   ON g.event_type = hl.event_type AND g.h = hl.h),
-         | st AS (SELECT event_type, CAST(count(*) AS HUGEINT) AS n,
-         |   CAST(sum(x) AS HUGEINT) AS sx FROM dense GROUP BY 1),
-         | devs AS (SELECT d.event_type, d.h, st.n,
-         |   st.n * d.x - st.sx AS dev FROM dense d JOIN st USING (event_type)),
+      s"""WITH ${oDenseHourly(devs = true)},
          | lagd AS (SELECT event_type, n, dev, $lagCols FROM devs
          |  WINDOW w AS (PARTITION BY event_type ORDER BY h)),
          | ag AS (SELECT event_type, CAST(max(n) AS BIGINT) AS n_hours,
@@ -2879,22 +2786,7 @@ object Events {
         s"""SELECT event_type, CAST($k AS BIGINT) AS "lag", n_hours,
            | round(p${k}_$k + 5e-10, 6) AS pacf FROM dl5"""
           .stripMargin).mkString(" UNION ALL ")
-      s"""WITH hourly AS (SELECT event_type,
-         |   date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h,
-         |   CAST(count(*) AS BIGINT) AS x FROM events GROUP BY 1, 2),
-         | bounds AS (SELECT event_type, min(h) AS h0, max(h) AS h1
-         |  FROM hourly GROUP BY 1),
-         | grid AS (SELECT event_type,
-         |   unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS h
-         |  FROM bounds),
-         | dense AS (SELECT g.event_type, g.h, COALESCE(hl.x, 0) AS x
-         |  FROM grid g LEFT JOIN hourly hl
-         |   ON g.event_type = hl.event_type AND g.h = hl.h),
-         | st AS (SELECT event_type, CAST(count(*) AS HUGEINT) AS n,
-         |   CAST(sum(x) AS HUGEINT) AS sx FROM dense GROUP BY 1),
-         | devs AS (SELECT d.event_type, d.h, st.n,
-         |   st.n * d.x - st.sx AS dev
-         |  FROM dense d JOIN st USING (event_type)),
+      s"""WITH ${oDenseHourly(devs = true)},
          | lagd AS (SELECT event_type, n, dev, $lagCols FROM devs
          |  WINDOW w AS (PARTITION BY event_type ORDER BY h)),
          | ag AS (SELECT event_type, CAST(max(n) AS BIGINT) AS n_hours,
@@ -2949,22 +2841,7 @@ object Events {
           + s" AS r$k").mkString(", ")
       val qsum = lags.map(k => s"r$k * r$k / (n_hours - $k)")
         .mkString(" + ")
-      s"""WITH hourly AS (SELECT event_type,
-         |   date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h,
-         |   CAST(count(*) AS BIGINT) AS x FROM events GROUP BY 1, 2),
-         | bounds AS (SELECT event_type, min(h) AS h0, max(h) AS h1
-         |  FROM hourly GROUP BY 1),
-         | grid AS (SELECT event_type,
-         |   unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS h
-         |  FROM bounds),
-         | dense AS (SELECT g.event_type, g.h, COALESCE(hl.x, 0) AS x
-         |  FROM grid g LEFT JOIN hourly hl
-         |   ON g.event_type = hl.event_type AND g.h = hl.h),
-         | st AS (SELECT event_type, CAST(count(*) AS HUGEINT) AS n,
-         |   CAST(sum(x) AS HUGEINT) AS sx FROM dense GROUP BY 1),
-         | devs AS (SELECT d.event_type, d.h, st.n,
-         |   st.n * d.x - st.sx AS dev
-         |  FROM dense d JOIN st USING (event_type)),
+      s"""WITH ${oDenseHourly(devs = true)},
          | lagd AS (SELECT event_type, n, dev, $lagCols FROM devs
          |  WINDOW w AS (PARTITION BY event_type ORDER BY h)),
          | ag AS (SELECT event_type, CAST(max(n) AS BIGINT) AS n_hours,
@@ -2982,22 +2859,7 @@ object Events {
     // Same dense grid and exact integer devs; the shared 24-entry trig
     // VALUES table replaces runtime cos/sin; 4dp decimal cells.
     "q_ts_dft_power" ->
-      s"""WITH hourly AS (SELECT event_type,
-         |   date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h,
-         |   CAST(count(*) AS BIGINT) AS x FROM events GROUP BY 1, 2),
-         | bounds AS (SELECT event_type, min(h) AS h0, max(h) AS h1
-         |  FROM hourly GROUP BY 1),
-         | grid AS (SELECT event_type,
-         |   unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS h
-         |  FROM bounds),
-         | dense AS (SELECT g.event_type, g.h, COALESCE(hl.x, 0) AS x
-         |  FROM grid g LEFT JOIN hourly hl
-         |   ON g.event_type = hl.event_type AND g.h = hl.h),
-         | st AS (SELECT event_type, CAST(count(*) AS HUGEINT) AS n,
-         |   CAST(sum(x) AS HUGEINT) AS sx FROM dense GROUP BY 1),
-         | devs AS (SELECT d.event_type, d.h, st.n,
-         |   st.n * d.x - st.sx AS dev
-         |  FROM dense d JOIN st USING (event_type)),
+      s"""WITH ${oDenseHourly(devs = true)},
          | tg(k, c, sn) AS (VALUES ${Fx.oTrig24}),
          | pm(m) AS (VALUES (1), (2), (3), (4)),
          | cells AS (SELECT d.event_type, pm.m, d.n, d.dev,
@@ -3022,22 +2884,7 @@ object Events {
     // ε-rounded into an exact decimal total, ln terms at 6dp into an
     // exact decimal sum, ln(11) a literal; peak by exact decimal order.
     "q_ts_spectral_entropy" ->
-      s"""WITH hourly AS (SELECT event_type,
-         |   date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h,
-         |   CAST(count(*) AS BIGINT) AS x FROM events GROUP BY 1, 2),
-         | bounds AS (SELECT event_type, min(h) AS h0, max(h) AS h1
-         |  FROM hourly GROUP BY 1),
-         | grid AS (SELECT event_type,
-         |   unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS h
-         |  FROM bounds),
-         | dense AS (SELECT g.event_type, g.h, COALESCE(hl.x, 0) AS x
-         |  FROM grid g LEFT JOIN hourly hl
-         |   ON g.event_type = hl.event_type AND g.h = hl.h),
-         | st AS (SELECT event_type, CAST(count(*) AS HUGEINT) AS n,
-         |   CAST(sum(x) AS HUGEINT) AS sx FROM dense GROUP BY 1),
-         | devs AS (SELECT d.event_type, d.h, st.n,
-         |   st.n * d.x - st.sx AS dev
-         |  FROM dense d JOIN st USING (event_type)),
+      s"""WITH ${oDenseHourly(devs = true)},
          | tg(k, c, sn) AS (VALUES ${Fx.oTrig24}),
          | pm(m) AS (VALUES (1), (2), (3), (4), (5), (6), (7), (8),
          |   (9), (10), (11)),
@@ -3077,22 +2924,12 @@ object Events {
     // block, exact decimal block means, integer log2(m) abscissae and
     // the ln2 literal — the identical closed-form 4-point slope.
     "q_ts_hurst" ->
-      """WITH hourly AS (SELECT event_type,
-        |   date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h,
-        |   CAST(count(*) AS BIGINT) AS x FROM events GROUP BY 1, 2),
-        | bounds AS (SELECT event_type, min(h) AS h0, max(h) AS h1
-        |  FROM hourly GROUP BY 1),
-        | grid AS (SELECT b.event_type, b.h0,
-        |   unnest(generate_series(b.h0, b.h1, INTERVAL 1 HOUR)) AS h
-        |  FROM bounds b),
-        | dense AS (SELECT g.event_type,
-        |   (epoch_us(g.h) - epoch_us(g.h0)) // 3600000000 AS i,
-        |   COALESCE(hl.x, 0) AS x
-        |  FROM grid g LEFT JOIN hourly hl
-        |   ON g.event_type = hl.event_type AND g.h = hl.h),
+      s"""WITH ${oDenseHourly()},
+        | di AS (SELECT event_type,
+        |   (epoch_us(h) - epoch_us(h0)) // 3600000000 AS i, x FROM dense),
         | pm(m) AS (VALUES (8), (16), (32), (64)),
         | blocked AS (SELECT event_type, pm.m, i // pm.m AS blk,
-        |   i % pm.m AS j, x FROM dense, pm),
+        |   i % pm.m AS j, x FROM di, pm),
         | perpos AS (SELECT event_type, m, blk, j, x,
         |   sum(x) OVER (PARTITION BY event_type, m, blk ORDER BY j
         |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
@@ -3135,30 +2972,13 @@ object Events {
         | FROM pv ORDER BY event_type"""
         .stripMargin.replaceAll("\n", " "),
 
-    // Same doubled-median classification, tie drop, lag-window run
-    // count, and the integer-ratio E/Var under one sqrt.
     // Same integer dev lifts, 6dp r's, closed-form phis, scaled
     // residual decimal squares, identical rmse chain.
     "q_ts_ar2_forecast" ->
-      """WITH hourly AS (SELECT event_type,
-        |   date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h,
-        |   CAST(count(*) AS BIGINT) AS x FROM events GROUP BY 1, 2),
-        | bounds AS (SELECT event_type, min(h) AS h0, max(h) AS h1
-        |  FROM hourly GROUP BY 1),
-        | grid AS (SELECT event_type,
-        |   unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS h
-        |  FROM bounds),
-        | dense AS (SELECT g.event_type, g.h, COALESCE(hl.x, 0) AS x
-        |  FROM grid g LEFT JOIN hourly hl
-        |   ON g.event_type = hl.event_type AND g.h = hl.h),
-        | st AS (SELECT event_type, CAST(count(*) AS HUGEINT) AS n,
-        |   CAST(sum(x) AS HUGEINT) AS sx FROM dense GROUP BY 1),
+      s"""WITH ${oDenseHourly(devs = true)},
         | lagd AS (SELECT event_type, n, dev,
         |   lag(dev, 1) OVER w AS d1, lag(dev, 2) OVER w AS d2
-        |  FROM (SELECT d.event_type, d.h, st.n,
-        |    st.n * d.x - st.sx AS dev
-        |   FROM dense d JOIN st USING (event_type))
-        |  WINDOW w AS (PARTITION BY event_type ORDER BY h)),
+        |  FROM devs WINDOW w AS (PARTITION BY event_type ORDER BY h)),
         | mo AS (SELECT event_type, CAST(max(n) AS BIGINT) AS n_hours,
         |   sum(dev * dev) AS den, sum(dev * d1) AS num1,
         |   sum(dev * d2) AS num2
@@ -3274,24 +3094,14 @@ object Events {
     // Same dense grid, re-based integer moments, identical IEEE
     // coefficient chain, epsilon-rounded decimal residual sums.
     "q_ts_durbin_watson" ->
-      """WITH hourly AS (SELECT event_type,
-        |   date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h,
-        |   CAST(count(*) AS BIGINT) AS y FROM events GROUP BY 1, 2),
-        | bounds AS (SELECT event_type, min(h) AS h0, max(h) AS h1
-        |  FROM hourly GROUP BY 1),
-        | grid AS (SELECT event_type, h0,
-        |   unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS h
-        |  FROM bounds),
-        | dense AS (SELECT g.event_type,
-        |   (epoch_us(g.h) - epoch_us(g.h0)) // 3600000000 AS x,
-        |   COALESCE(hl.y, 0) AS y
-        |  FROM grid g LEFT JOIN hourly hl
-        |   ON g.event_type = hl.event_type AND g.h = hl.h),
+      s"""WITH ${oDenseHourly("y")},
+        | dx AS (SELECT event_type,
+        |   (epoch_us(h) - epoch_us(h0)) // 3600000000 AS x, y FROM dense),
         | m AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
         |   CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
         |   CAST(sum(x * y) AS BIGINT) AS sxy,
         |   CAST(sum(x * x) AS BIGINT) AS sxx
-        |  FROM dense GROUP BY 1),
+        |  FROM dx GROUP BY 1),
         | co AS (SELECT event_type, n,
         |   (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
         |     - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
@@ -3305,7 +3115,7 @@ object Events {
         | resid AS (SELECT d.event_type, c.n, d.x,
         |   CAST(d.y AS DOUBLE)
         |    - (c.b0 + c.b1 * CAST(d.x AS DOUBLE)) AS e
-        |  FROM dense d JOIN co2 c USING (event_type)),
+        |  FROM dx d JOIN co2 c USING (event_type)),
         | lagd AS (SELECT event_type, n, e,
         |   lag(e) OVER (PARTITION BY event_type ORDER BY x) AS dlag
         |  FROM resid),
@@ -3322,6 +3132,8 @@ object Events {
         | FROM res ORDER BY event_type"""
         .stripMargin.replaceAll("\n", " "),
 
+    // Same doubled-median classification, tie drop, lag-window run
+    // count, and the integer-ratio E/Var under one sqrt.
     "q_ts_runs_test" ->
       """WITH daily AS (SELECT event_type,
         |   date_trunc('day', CAST(ts AS TIMESTAMP)) AS h,
@@ -3365,17 +3177,7 @@ object Events {
     // Same lag-window increments, exact integer variance lifts, the
     // rounded-VR z with the folded 42/12 literals, one sqrt.
     "q_ts_variance_ratio" ->
-      """WITH hourly AS (SELECT event_type,
-        |   date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h,
-        |   CAST(count(*) AS BIGINT) AS x FROM events GROUP BY 1, 2),
-        | bounds AS (SELECT event_type, min(h) AS h0, max(h) AS h1
-        |  FROM hourly GROUP BY 1),
-        | grid AS (SELECT event_type,
-        |   unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS h
-        |  FROM bounds),
-        | dense AS (SELECT g.event_type, g.h, COALESCE(hl.x, 0) AS x
-        |  FROM grid g LEFT JOIN hourly hl
-        |   ON g.event_type = hl.event_type AND g.h = hl.h),
+      s"""WITH ${oDenseHourly()},
         | diffs AS (SELECT event_type,
         |   x - lag(x, 1) OVER w AS d1, x - lag(x, 4) OVER w AS d4
         |  FROM dense WINDOW w AS (PARTITION BY event_type ORDER BY h)),
@@ -3405,17 +3207,7 @@ object Events {
     // Same strict-extremum predicate over lag/lead, exact rational
     // moments, one sqrt.
     "q_ts_turning_points" ->
-      """WITH hourly AS (SELECT event_type,
-        |   date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h,
-        |   CAST(count(*) AS BIGINT) AS x FROM events GROUP BY 1, 2),
-        | bounds AS (SELECT event_type, min(h) AS h0, max(h) AS h1
-        |  FROM hourly GROUP BY 1),
-        | grid AS (SELECT event_type,
-        |   unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS h
-        |  FROM bounds),
-        | dense AS (SELECT g.event_type, g.h, COALESCE(hl.x, 0) AS x
-        |  FROM grid g LEFT JOIN hourly hl
-        |   ON g.event_type = hl.event_type AND g.h = hl.h),
+      s"""WITH ${oDenseHourly()},
         | tp0 AS (SELECT event_type, x,
         |   lag(x) OVER w AS pv, lead(x) OVER w AS nx
         |  FROM dense WINDOW w AS (PARTITION BY event_type ORDER BY h)),
@@ -3439,17 +3231,7 @@ object Events {
     // Mirrors the dense grids, the shifted-hour equi-join, and the
     // /√dx/√dy division order; state HUGEINT.
     "q_ts_cross_corr" ->
-      """WITH hourly AS (SELECT event_type,
-        |   date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h,
-        |   CAST(count(*) AS BIGINT) AS x FROM events GROUP BY 1, 2),
-        | bounds AS (SELECT event_type, min(h) AS h0, max(h) AS h1
-        |  FROM hourly GROUP BY 1),
-        | grid AS (SELECT event_type,
-        |   unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS h
-        |  FROM bounds),
-        | dense AS (SELECT g.event_type, g.h, COALESCE(hl.x, 0) AS x
-        |  FROM grid g LEFT JOIN hourly hl
-        |   ON g.event_type = hl.event_type AND g.h = hl.h),
+      s"""WITH ${oDenseHourly()},
         | xs AS (SELECT event_type AS type_a, h, CAST(x AS HUGEINT) AS xa
         |  FROM dense),
         | ys AS (SELECT event_type AS type_b, CAST(x AS HUGEINT) AS xb,
@@ -3473,20 +3255,11 @@ object Events {
         | FROM m ORDER BY type_a, type_b, "lag""""
         .stripMargin.replaceAll("\n", " "),
 
-    // The islands anchor over the zero-hours of the same dense grid.
+    // The islands anchor over the zero-hours of the same dense grid (an
+    // hour the events table has counts at least 1).
     "q_ts_outage_detect" ->
-      """WITH hourly AS (SELECT event_type,
-        |   date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h,
-        |   CAST(count(*) AS BIGINT) AS x FROM events GROUP BY 1, 2),
-        | bounds AS (SELECT event_type, min(h) AS h0, max(h) AS h1
-        |  FROM hourly GROUP BY 1),
-        | grid AS (SELECT event_type,
-        |   unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS h
-        |  FROM bounds),
-        | zeros AS (SELECT g.event_type, g.h FROM grid g
-        |  LEFT JOIN hourly hl
-        |   ON g.event_type = hl.event_type AND g.h = hl.h
-        |  WHERE hl.x IS NULL),
+      s"""WITH ${oDenseHourly()},
+        | zeros AS (SELECT event_type, h FROM dense WHERE x = 0),
         | a AS (SELECT event_type, h,
         |   h - to_hours(row_number() OVER (PARTITION BY event_type
         |     ORDER BY h)) AS anchor FROM zeros),

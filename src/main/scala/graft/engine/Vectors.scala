@@ -242,8 +242,6 @@ object Vectors {
         .repartition(col("vec_id"))
         .localCheckpoint(false)
       changed = jumped.filter(col("comp") =!= col("old")).count()
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[ccdebug] slot=$slot round=$rounds changed=$changed")
       // The new round is materialized (the convergence count touched every
       // partition of the lazily-checkpointed frame, persisting its blocks)
       // — the previous round's blocks are now unreachable; free them
@@ -1271,6 +1269,40 @@ object Vectors {
   private val oVd =
     "list_transform(embedding, x -> CAST(x AS DOUBLE))"
 
+  /** The oracle twin of one [[Lloyd]] step over a long-format micros
+    * table `(vec_id, [sub_id,] dim, x)`, unrolled like the pagerank oracle
+    * (grouping inside a recursive CTE is not portable): `a<i>` the squared
+    * distance from each row of `over` to each centroid of the book `cb`
+    * `([sub_id,] c_id, dim, c)`, `b<i>` its (dist, c_id) rank and `g<i>`
+    * the argmin; with `means`, also the next book `cb<i>`, each centroid's
+    * truncating integer mean over its members in `means`. `sub` threads a
+    * `sub_id` grouping through every stage (the PQ codebooks). Integer
+    * micros keep every stage exact, so no epsilon is needed.
+    */
+  private def oLloyd(i: Int, cb: String, over: String, sub: Boolean,
+      means: Option[String] = None): String = {
+    def k(t: String) = if (sub) s"${t}sub_id, " else ""
+    def on(a: String, b: String) =
+      if (sub) s" AND $a.sub_id = $b.sub_id" else ""
+    val step =
+      s"""a$i AS (SELECT e.vec_id, ${k("e.")}c.c_id,
+         |   sum((e.x - c.c) * (e.x - c.c)) AS dist
+         |  FROM $over e JOIN $cb c ON e.dim = c.dim${on("e", "c")}
+         |  GROUP BY e.vec_id, ${k("e.")}c.c_id),
+         | b$i AS (SELECT vec_id, ${k("")}c_id, dist, row_number() OVER
+         |   (PARTITION BY ${k("")}vec_id ORDER BY dist, c_id) AS rn
+         |  FROM a$i),
+         | g$i AS (SELECT vec_id, ${k("")}c_id FROM b$i WHERE rn = 1)"""
+    val upd = means.fold("") { m =>
+      s""",
+         | cb$i AS (SELECT ${k("g.")}g.c_id, e.dim,
+         |   CAST(sum(e.x) AS BIGINT) // count(*) AS c
+         |  FROM $m e JOIN g$i g ON e.vec_id = g.vec_id${on("e", "g")}
+         |  GROUP BY ${k("g.")}g.c_id, e.dim)"""
+    }
+    (step + upd).stripMargin.replaceAll("\n", " ")
+  }
+
   val oracle: Map[String, String] = Map(
     "q_vec_matryoshka" ->
       s"""WITH e AS (SELECT vec_id, $oVd AS v FROM embeddings),
@@ -1699,18 +1731,13 @@ object Vectors {
     // (int128) and Spark's DECIMAL(38,0) both hold every intermediate
     // exactly at fixture scale, so the boolean matches bit-for-bit.
     "q_vec_outlier" ->
-      """WITH e AS (SELECT vec_id, i AS dim,
+      s"""WITH e AS (SELECT vec_id, i AS dim,
         |   CAST(round(embedding[i] * 1e6) AS BIGINT) AS x
         |  FROM embeddings,
         |  LATERAL unnest(generate_series(1, len(embedding))) u(i)),
         | c0 AS (SELECT vec_id AS c_id, dim, x AS c FROM e
         |   WHERE vec_id < 8),
-        | a1 AS (SELECT e.vec_id, c.c_id,
-        |   sum((e.x - c.c) * (e.x - c.c)) AS dist
-        |  FROM e JOIN c0 c ON e.dim = c.dim
-        |  GROUP BY e.vec_id, c.c_id),
-        | b1 AS (SELECT vec_id, c_id, dist, row_number() OVER
-        |   (PARTITION BY vec_id ORDER BY dist, c_id) AS rn FROM a1),
+        | ${oLloyd(1, "c0", "e", sub = false)},
         | g AS (SELECT vec_id, c_id AS cluster,
         |   CAST(dist AS HUGEINT) AS dist FROM b1 WHERE rn = 1),
         | st AS (SELECT cluster, CAST(count(*) AS HUGEINT) AS n,
@@ -1723,63 +1750,25 @@ object Vectors {
         | FROM g JOIN st USING (cluster) ORDER BY g.vec_id"""
         .stripMargin.replaceAll("\n", " "),
 
-    "q_vec_kmeans" -> {
-      // one assign(+argmin)+update pair per iteration, unrolled like the
-      // pagerank oracle (grouping inside a recursive CTE is not portable);
-      // integer micros keep every stage exact so no epsilon is needed
-      def asg(i: Int, cent: String) =
-        s"""a$i AS (SELECT e.vec_id, c.c_id,
-           |   sum((e.x - c.c) * (e.x - c.c)) AS dist
-           |  FROM e JOIN $cent c ON e.dim = c.dim
-           |  GROUP BY e.vec_id, c.c_id),
-           | b$i AS (SELECT vec_id, c_id, dist, row_number() OVER
-           |   (PARTITION BY vec_id ORDER BY dist, c_id) AS rn FROM a$i),
-           | g$i AS (SELECT vec_id, c_id FROM b$i WHERE rn = 1)"""
-          .stripMargin
-      def upd(i: Int) =
-        s"""c$i AS (SELECT g.c_id, e.dim,
-           |  CAST(sum(e.x) AS BIGINT) // count(*) AS c
-           | FROM e JOIN g$i g ON e.vec_id = g.vec_id
-           | GROUP BY g.c_id, e.dim)"""
-          .stripMargin
+    "q_vec_kmeans" ->
       s"""WITH e AS (SELECT vec_id, i AS dim,
          |   CAST(round(embedding[i] * 1e6) AS BIGINT) AS x
          |  FROM embeddings,
          |  LATERAL unnest(generate_series(1, len(embedding))) u(i)),
-         | c0 AS (SELECT vec_id AS c_id, dim, x AS c FROM e
+         | cb0 AS (SELECT vec_id AS c_id, dim, x AS c FROM e
          |   WHERE vec_id < 8),
-         | ${asg(1, "c0")}, ${upd(1)}, ${asg(2, "c1")}, ${upd(2)},
-         | ${asg(3, "c2")}
+         | ${oLloyd(1, "cb0", "e", sub = false, Some("e"))},
+         | ${oLloyd(2, "cb1", "e", sub = false, Some("e"))},
+         | ${oLloyd(3, "cb2", "e", sub = false)}
          | SELECT vec_id, c_id AS cluster, CAST(dist AS BIGINT) AS dist
          | FROM b3 WHERE rn = 1 ORDER BY vec_id"""
-        .stripMargin.replaceAll("\n", " ")
-    },
+        .stripMargin.replaceAll("\n", " "),
 
-    "q_vec_pq" -> {
-      // same unrolled integer-exact replay as the kmeans oracle, with a
-      // (sub_id) grouping column threaded through every stage; dims stay
-      // GLOBAL indices (each codebook row carries its subspace's dims),
-      // which joins identically to the Spark side's per-sub slices
-      // learning CTEs (asg1/2 + upd1/2) read the `es` SAMPLE; only the
-      // final encode (asg3) touches the full long-format table
-      def asg(i: Int, cb: String, over: String) =
-        s"""a$i AS (SELECT e.vec_id, e.sub_id, c.c_id,
-           |   sum((e.x - c.c) * (e.x - c.c)) AS dist
-           |  FROM $over e JOIN $cb c
-           |   ON e.sub_id = c.sub_id AND e.dim = c.dim
-           |  GROUP BY e.vec_id, e.sub_id, c.c_id),
-           | b$i AS (SELECT vec_id, sub_id, c_id, row_number() OVER
-           |   (PARTITION BY vec_id, sub_id ORDER BY dist, c_id) AS rn
-           |  FROM a$i),
-           | g$i AS (SELECT vec_id, sub_id, c_id FROM b$i WHERE rn = 1)"""
-          .stripMargin
-      def upd(i: Int) =
-        s"""cb$i AS (SELECT g.sub_id, g.c_id, e.dim,
-           |  CAST(sum(e.x) AS BIGINT) // count(*) AS c
-           | FROM es e JOIN g$i g
-           |  ON e.vec_id = g.vec_id AND e.sub_id = g.sub_id
-           | GROUP BY g.sub_id, g.c_id, e.dim)"""
-          .stripMargin
+    // The kmeans replay per sub_id subspace; dims stay GLOBAL indices
+    // (each codebook row carries its subspace's dims), which joins
+    // identically to the Spark side's per-sub slices. Training reads the
+    // `es` SAMPLE; only the final encode (step 3) reads the full table.
+    "q_vec_pq" ->
       s"""WITH e AS (SELECT vec_id,
          |   CAST((i - 1) // (len(embedding) // 4) AS BIGINT) AS sub_id,
          |   i AS dim, CAST(round(embedding[i] * 1e6) AS BIGINT) AS x
@@ -1788,8 +1777,9 @@ object Vectors {
          | es AS (SELECT * FROM e WHERE vec_id < 256),
          | cb0 AS (SELECT sub_id, vec_id AS c_id, dim, x AS c FROM e
          |   WHERE vec_id < 16),
-         | ${asg(1, "cb0", "es")}, ${upd(1)}, ${asg(2, "cb1", "es")},
-         | ${upd(2)}, ${asg(3, "cb2", "e")},
+         | ${oLloyd(1, "cb0", "es", sub = true, Some("es"))},
+         | ${oLloyd(2, "cb1", "es", sub = true, Some("es"))},
+         | ${oLloyd(3, "cb2", "e", sub = true)},
          | dt AS (SELECT e.vec_id AS probe_id, e.sub_id, c.c_id AS code,
          |   sum((e.x - c.c) * (e.x - c.c)) AS pd
          |  FROM e JOIN cb2 c ON e.sub_id = c.sub_id AND e.dim = c.dim
@@ -1817,8 +1807,7 @@ object Vectors {
          |   (PARTITION BY probe_id ORDER BY d2, vec_id) AS rnk FROM rr)
          | SELECT probe_id, rnk, vec_id, d2, ad2 FROM top
          | WHERE rnk <= 5 ORDER BY probe_id, rnk"""
-        .stripMargin.replaceAll("\n", " ")
-    },
+        .stripMargin.replaceAll("\n", " "),
 
     // Exact-integer Gram + three unrolled matvec rounds with the same
     // 4dp/6dp decimal cell grid; MATERIALIZED so the multi-referenced
@@ -1922,18 +1911,7 @@ object Vectors {
     // one PQ Lloyd iteration on the sample → encode → nprobe-2 per-list
     // residual ADC → exact rerank. Same (dist, id) tiebreaks and
     // truncating centroid division as the Spark side.
-    "q_vec_ivfpq" -> {
-      def asg(i: Int, cb: String, over: String) =
-        s"""a$i AS (SELECT e.vec_id, e.sub_id, c.c_id,
-           |   sum((e.x - c.c) * (e.x - c.c)) AS dist
-           |  FROM $over e JOIN $cb c
-           |   ON e.sub_id = c.sub_id AND e.dim = c.dim
-           |  GROUP BY e.vec_id, e.sub_id, c.c_id),
-           | b$i AS (SELECT vec_id, sub_id, c_id, row_number() OVER
-           |   (PARTITION BY vec_id, sub_id ORDER BY dist, c_id) AS rn
-           |  FROM a$i),
-           | g$i AS (SELECT vec_id, sub_id, c_id FROM b$i WHERE rn = 1)"""
-          .stripMargin
+    "q_vec_ivfpq" ->
       s"""WITH e AS (SELECT vec_id,
          |   CAST((i - 1) // (len(embedding) // 4) AS BIGINT) AS sub_id,
          |   i AS dim, CAST(round(embedding[i] * 1e6) AS BIGINT) AS x
@@ -1954,13 +1932,8 @@ object Vectors {
          | rs AS (SELECT * FROM r WHERE vec_id < 256),
          | cb0 AS (SELECT sub_id, vec_id AS c_id, dim, x AS c FROM r
          |  WHERE vec_id < 16),
-         | ${asg(1, "cb0", "rs")},
-         | cb1 AS (SELECT g.sub_id, g.c_id, e.dim,
-         |   CAST(sum(e.x) AS BIGINT) // count(*) AS c
-         |  FROM rs e JOIN g1 g
-         |   ON e.vec_id = g.vec_id AND e.sub_id = g.sub_id
-         |  GROUP BY g.sub_id, g.c_id, e.dim),
-         | ${asg(2, "cb1", "r")},
+         | ${oLloyd(1, "cb0", "rs", sub = true, Some("rs"))},
+         | ${oLloyd(2, "cb1", "r", sub = true)},
          | pl AS (SELECT vec_id AS probe_id, l_id AS list_id FROM
          |  (SELECT vec_id, l_id, row_number() OVER
          |    (PARTITION BY vec_id ORDER BY cd, l_id) AS rn FROM ca
@@ -1997,8 +1970,7 @@ object Vectors {
          |   (PARTITION BY probe_id ORDER BY d2, vec_id) AS rnk FROM rr)
          | SELECT probe_id, rnk, vec_id, d2, ad2 FROM top
          | WHERE rnk <= 5 ORDER BY probe_id, rnk"""
-        .stripMargin.replaceAll("\n", " ")
-    },
+        .stripMargin.replaceAll("\n", " "),
 
     "q_dedup_semantic" ->
       s"""WITH b AS (SELECT vec_id, embedding FROM embeddings

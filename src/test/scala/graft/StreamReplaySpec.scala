@@ -1,17 +1,20 @@
 package graft
 
 import java.io.File
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.scalatest.BeforeAndAfterAll
 
 /** The true-streaming replay rows' build/restart split: with the staging
   * root gone, a row's first invocation runs the whole protocol and its
   * second restarts on the durable checkpoint. The restart must return the
-  * same rows and commit no micro-batch of its own.
+  * same rows and commit no micro-batch of its own. Staging is per
+  * session, so another session builds its own.
   */
 class StreamReplaySpec extends SparkSuite with BeforeAndAfterAll {
 
-  private val root = new File(System.getProperty("java.io.tmpdir"),
-    "graft_stream/" + sf.replaceAll("[^A-Za-z0-9_]", "_"))
+  private lazy val root = new File(engine.Events.stagingRoot(spark, sf))
 
   private def rmTree(f: File): Unit = {
     if (f.isDirectory)
@@ -21,8 +24,8 @@ class StreamReplaySpec extends SparkSuite with BeforeAndAfterAll {
 
   override def beforeAll(): Unit = { super.beforeAll(); rmTree(root) }
 
-  private def rows(q: String): Seq[String] =
-    SparkEntry.queries(q)(spark, sf).collect().map(_.toString).toSeq
+  private def rows(q: String, s: SparkSession = spark): Seq[String] =
+    SparkEntry.queries(q)(s, sf).collect().map(_.toString).toSeq
 
   /** Row, staging tag, and the micro-batches its protocol commits. */
   private val protocols = Seq(
@@ -51,4 +54,31 @@ class StreamReplaySpec extends SparkSuite with BeforeAndAfterAll {
       assert(commits.length === batches,
         s"$q committed ${commits.sorted.mkString(",")}")
     }
+
+  test("two sessions each build a replay row fresh and get equal rows") {
+    // q_stream_sliding_replay starts two streaming queries when it builds
+    // and one when it restarts
+    val sessions = Seq(spark.newSession(), spark.newSession())
+    try {
+      val runs = sessions.map { s =>
+        val started = new AtomicInteger
+        val l = new StreamingQueryListener {
+          override def onQueryStarted(
+              e: StreamingQueryListener.QueryStartedEvent): Unit =
+            started.incrementAndGet()
+          override def onQueryProgress(
+              e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+          override def onQueryTerminated(
+              e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+        }
+        s.streams.addListener(l)
+        try (rows("q_stream_sliding_replay", s), started.get)
+        finally s.streams.removeListener(l)
+      }
+      assert(runs.map(_._2) === Seq(2, 2),
+        "each session must run the whole protocol on its own staging")
+      assert(runs.head._1.nonEmpty)
+      assert(runs(1)._1 === runs.head._1)
+    } finally sessions.foreach(engine.Checkpoints.release)
+  }
 }
