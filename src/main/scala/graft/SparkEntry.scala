@@ -14,7 +14,7 @@ object SparkEntry {
     queries("q_agg_group")(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
     Aggregates.queries ++ Relational.queries ++ Windows.queries ++
       Events.queries ++ Scalar.queries ++ Text.queries ++ Vectors.queries ++
       Ingest.queries ++ Multimodal.queries ++ Analytics.queries ++
@@ -22,7 +22,7 @@ object SparkEntry {
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
+  val oracleSql: Map[String, String] =
     Aggregates.oracle ++ Relational.oracle ++ Windows.oracle ++
       Events.oracle ++ Scalar.oracle ++ Text.oracle ++ Vectors.oracle ++
       Ingest.oracle ++ Multimodal.oracle ++ Analytics.oracle ++

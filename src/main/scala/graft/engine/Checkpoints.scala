@@ -44,13 +44,15 @@ object Checkpoints {
 
   /** Drop (and free) every entry whose owning session has stopped —
     * run before each pin/memo so cross-suite sessions don't accumulate
-    * dead frames in the slot map.
+    * dead frames in the slot map — and what [[Tables]] learned for them.
     */
-  private def sweep(): Unit =
+  private def sweep(): Unit = {
     pinnedFrames.foreach { case (k, df) =>
       if (df.sparkSession.sparkContext.isStopped &&
           pinnedFrames.remove(k, df)) free(df)
     }
+    Tables.sweep()
+  }
 
   /** Pin `df` under `slot` for its own session, freeing whatever that
     * session had pinned there before (each invocation replaces the
@@ -74,12 +76,15 @@ object Checkpoints {
   /** Free every frame `s` pinned. Sessions made by `newSession()` share
     * one SparkContext, so one of them cannot be stopped alone; a caller
     * done with such a session releases its pins here instead of holding
-    * them until the context stops.
+    * them until the context stops. Also drops the schemas and probes
+    * [[Tables]] recorded for `s`.
     */
-  def release(s: SparkSession): Unit =
+  def release(s: SparkSession): Unit = {
     pinnedFrames.foreach { case (k, df) =>
       if ((df.sparkSession eq s) && pinnedFrames.remove(k, df)) free(df)
     }
+    Tables.release(s)
+  }
 
   /** When set (any non-empty value), memo() rebuilds on every invocation
     * instead of serving the session-cached frame — so a timing run

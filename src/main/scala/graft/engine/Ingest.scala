@@ -14,8 +14,12 @@ import org.apache.spark.sql.types._
   * end-to-end sink+scan equivalence, not just a smoke read.
   *
   * Scale posture: all writes are distributed `df.write` (per-partition
-  * files, no driver funnel); reads carry explicit schemas so no inference
-  * pass over the data is needed at 100 TB.
+  * files, no driver funnel); reads carry explicit schemas — a parquet
+  * read-back the schema of the frame it wrote, whose partition columns
+  * Spark places last, typed as written — so no inference pass over the
+  * data is needed at 100 TB. Only the schema-drift
+  * rows (q_scan_merge_schema, q_scan_csv_drift) infer: merging drifted
+  * schemas is what they show.
   */
 object Ingest {
 
@@ -193,11 +197,12 @@ object Ingest {
     // the source table.
     "q_sink_parquet_zstd" -> { (s, d) =>
       val out = tmp("orders_zstd", d)
-      Tables.orders(s, d).write.mode("overwrite")
+      val orders = Tables.orders(s, d)
+      orders.write.mode("overwrite")
         .option("compression", "zstd")
         .option("maxRecordsPerFile", 5000)
         .parquet(out)
-      s.read.parquet(out)
+      s.read.schema(orders.schema).parquet(out)
         .groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n"), Fx.dsum(col("o_totalprice")).as("total"))
         .orderBy(col("o_orderstatus"))
@@ -211,9 +216,10 @@ object Ingest {
     // any row is decoded.
     "q_scan_partition_prune" -> { (s, d) =>
       val out = tmp("orders_by_priority", d)
-      Tables.orders(s, d).write.mode("overwrite")
+      val orders = Tables.orders(s, d)
+      orders.write.mode("overwrite")
         .partitionBy("o_orderpriority").parquet(out)
-      s.read.parquet(out)
+      s.read.schema(orders.schema).parquet(out)
         .filter(col("o_orderpriority") === "1-URGENT")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
           col("o_orderpriority"))
@@ -230,8 +236,8 @@ object Ingest {
     // which q_scan_partition_prune already covers on the column route)
     "q_scan_glob" -> { (s, d) =>
       val out = tmp("docs_by_lang", d)
-      Tables.documents(s, d).write.mode("overwrite")
-        .partitionBy("lang").parquet(out)
+      val docs = Tables.documents(s, d)
+      docs.write.mode("overwrite").partitionBy("lang").parquet(out)
       // r16 log hygiene: passing the glob STRING makes FileStreamSink's
       // metadata probe getFileStatus the literal "lang=e*" path and log a
       // recovered FileNotFoundException stack on every invocation (it
@@ -247,7 +253,7 @@ object Ingest {
       val dirs =
         if (globbed == null || globbed.isEmpty) Array(s"$out/lang=e*")
         else globbed.map(_.getPath.toString)
-      s.read.option("basePath", out).parquet(dirs: _*)
+      s.read.schema(docs.schema).option("basePath", out).parquet(dirs: _*)
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("chars"))
         .orderBy(col("lang"))
@@ -321,14 +327,14 @@ object Ingest {
     // absent); the oracle replays the rollup from the flat table.
     "q_scan_nested_prune" -> { (s, d) =>
       val out = tmp("docs_nested", d)
-      Tables.documents(s, d)
+      val nested = Tables.documents(s, d)
         .select(
           col("doc_id"),
           struct(col("lang"), col("source")).as("meta"),
           struct(col("text").as("body"),
             length(col("text")).as("n_chars")).as("payload"))
-        .write.mode("overwrite").parquet(out)
-      s.read.parquet(out)
+      nested.write.mode("overwrite").parquet(out)
+      s.read.schema(nested.schema).parquet(out)
         .groupBy(col("meta.lang").as("lang"))
         .agg(count(lit(1)).as("n_docs"),
           countDistinct(col("meta.source")).as("n_sources"),
@@ -345,10 +351,11 @@ object Ingest {
       // partition value lands in its own task — same one-file-per-
       // partition layout, but the writers run in parallel instead of one
       // scan task writing every partition serially
-      Tables.lineitem(s, d).repartition(col("l_returnflag"))
+      val li = Tables.lineitem(s, d)
+      li.repartition(col("l_returnflag"))
         .write.mode("overwrite")
         .partitionBy("l_returnflag").parquet(out)
-      s.read.parquet(out)
+      s.read.schema(li.schema).parquet(out)
         .groupBy(col("l_returnflag"))
         .agg(count(lit(1)).as("n"),
           Fx.dsum(col("l_extendedprice")).as("sum_price"))
@@ -541,7 +548,7 @@ object Ingest {
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("om").parquet(out)
-      s.read.parquet(out)
+      s.read.schema(orders.schema).parquet(out)
         .groupBy(col("om"))
         .agg(count(lit(1)).as("n_orders"),
           Fx.dsum(col("o_totalprice")).as("sum_price"))
@@ -587,12 +594,12 @@ object Ingest {
     "q_layout_zorder" -> { (s, d) =>
       graft.engine.functions.GraftFunctions.register(s)
       val out = tmp("lineitem_zorder", d)
-      Tables.lineitem(s, d)
+      val keyed = Tables.lineitem(s, d)
         .withColumn("zkey", expr("morton2(l_partkey, l_suppkey)"))
-        .repartitionByRange(8, col("zkey"))
+      keyed.repartitionByRange(8, col("zkey"))
         .sortWithinPartitions(col("zkey"))
         .write.mode("overwrite").parquet(out)
-      s.read.parquet(out)
+      s.read.schema(keyed.schema).parquet(out)
         // box bounds inside the smallest fixture's key ranges (sf0.001:
         // partkey 0..199, suppkey 0..9) so the result is non-empty at
         // every scale factor
@@ -617,16 +624,16 @@ object Ingest {
     "q_shape_incr_agg" -> { (s, d) =>
       val out = tmp("orders_agg_state", d)
       val cutoff = lit("1997-01-01").cast("timestamp")
-      Tables.orders(s, d).filter(col("o_orderdate") < cutoff)
+      val history = Tables.orders(s, d).filter(col("o_orderdate") < cutoff)
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n"),
           sum(col("o_totalprice").cast("decimal(18,2)")).as("tot"))
-        .write.mode("overwrite").parquet(out)
+      history.write.mode("overwrite").parquet(out)
       val delta = Tables.orders(s, d).filter(col("o_orderdate") >= cutoff)
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n"),
           sum(col("o_totalprice").cast("decimal(18,2)")).as("tot"))
-      s.read.parquet(out).unionByName(delta)
+      s.read.schema(history.schema).parquet(out).unionByName(delta)
         .groupBy(col("o_orderpriority"))
         .agg(sum(col("n")).as("n"), sum(col("tot")).as("tot"))
         .select(col("o_orderpriority"), col("n"),
@@ -665,17 +672,19 @@ object Ingest {
         .unionByName(base.filter(col("doc_id") === 1)
           .select((col("doc_id") + 1000002L).as("doc_id"), col("lang"),
             col("text")))
-      docs.filter(pmod(col("doc_id"), lit(2)) === 0) // "already ingested"
+      val ingested = docs
+        .filter(pmod(col("doc_id"), lit(2)) === 0) // "already ingested"
         .groupBy(md5(col("text")).as("h"))
         .agg(min(col("doc_id")).as("keep_id"))
-        .write.mode("overwrite").parquet(store)
+      ingested.write.mode("overwrite").parquet(store)
+      def stored = s.read.schema(ingested.schema).parquet(store)
       val delta = docs
         .filter(pmod(col("doc_id"), lit(2)) === 1)
         .withColumn("h", md5(col("text")))
       val newDelta = delta
-        .join(s.read.parquet(store), Seq("h"), "left_anti")
+        .join(stored, Seq("h"), "left_anti")
         .groupBy(col("h")).agg(min(col("doc_id")).as("keep_id"))
-      val keptIds = s.read.parquet(store).unionByName(newDelta)
+      val keptIds = stored.unionByName(newDelta)
       docs.join(keptIds.select(col("keep_id").as("doc_id")), "doc_id")
         .select(col("doc_id"), col("lang"),
           when(pmod(col("doc_id"), lit(2)) === 0, "history")
@@ -705,17 +714,17 @@ object Ingest {
       // derived key values were distinct (row counts make it smaller
       // still), and the oracle's files_before column would loudly
       // hash-fail the row if it ever happened.
-      Tables.lineitem(s, d)
-        .repartition(64, pmod(xxhash64(col("l_orderkey"),
+      val li = Tables.lineitem(s, d)
+      li.repartition(64, pmod(xxhash64(col("l_orderkey"),
           col("l_linenumber")), lit(4096)))
         .write.mode("overwrite").parquet(frag)
-      s.read.parquet(frag)
+      s.read.schema(li.schema).parquet(frag)
         .repartitionByRange(4, col("l_orderkey"))
         .sortWithinPartitions(col("l_orderkey"))
         .write.mode("overwrite").parquet(comp)
       def nFiles(p: String): Int = Option(new java.io.File(p).listFiles())
         .map(_.count(f => f.getName.startsWith("part-"))).getOrElse(-1)
-      s.read.parquet(comp)
+      s.read.schema(li.schema).parquet(comp)
         .groupBy(col("l_returnflag"))
         .agg(count(lit(1)).as("n"), Fx.dsum(col("l_quantity")).as("qty"))
         .withColumn("files_before", lit(nFiles(frag)))

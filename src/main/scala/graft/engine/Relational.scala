@@ -130,9 +130,10 @@ object Relational {
     // THIS prunes on values only known after the dim filter runs.
     "q_join_dpp" -> { (s, d) =>
       val out = Ingest.stage("orders_dpp", d)
-      Tables.orders(s, d).write.mode("overwrite")
+      val orders = Tables.orders(s, d)
+      orders.write.mode("overwrite")
         .partitionBy("o_orderpriority").parquet(out)
-      val fact = s.read.parquet(out)
+      val fact = s.read.schema(orders.schema).parquet(out)
       val dim = Tables.orders(s, d)
         .select(col("o_orderpriority").as("p")).distinct()
         .filter(col("p") < "3")

@@ -2,7 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, StructType}
 
 /** Fixture-table readers + determinism helpers shared by every operator.
   *
@@ -11,11 +11,79 @@ import org.apache.spark.sql.types.DecimalType
   * SURVEY.md §0); all implementations here are Spark-first.
   *
   * Scale posture: readers return plain parquet scans so Catalyst can push
-  * filters/column pruning into the source; no caching, no collect.
+  * filters/column pruning into the source, and no collect. The one thing
+  * cached is per live session and driver-side: each table's inferred
+  * schema and the spread probe's scan-partition counts, never data.
   */
 object Tables {
-  def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+
+  /** What one live session has learned about its inputs: the inferred
+    * schema per (path, total length, latest mtime, nanosAsLong setting —
+    * it decides whether INT64-nanosecond `events.ts` infers as long), and
+    * the scan-partition count per logical plan for [[spread]].
+    */
+  private final class Learned {
+    val schemas =
+      new scala.collection.concurrent.TrieMap[(String, Long, Long, String),
+        StructType]()
+    val scanParts = new scala.collection.concurrent.TrieMap[Int, Int]()
+  }
+
+  /** Keyed by the session object itself: SparkSession compares by
+    * identity, so two live sessions never share an entry. */
+  private val sessions =
+    new scala.collection.concurrent.TrieMap[SparkSession, Learned]()
+
+  private def learned(s: SparkSession): Learned =
+    sessions.getOrElse(s, {
+      sweep()
+      sessions.getOrElseUpdate(s, new Learned)
+    })
+
+  /** Forget every session whose SparkContext has stopped. */
+  private[engine] def sweep(): Unit =
+    sessions.keys.foreach { s =>
+      if (s.sparkContext.isStopped) sessions.remove(s)
+    }
+
+  /** Forget what `s` learned (see [[Checkpoints.release]]). */
+  private[engine] def release(s: SparkSession): Unit = sessions.remove(s)
+
+  /** Total length and latest mtime of a file, or of a directory and its
+    * entries; None when the path cannot be listed (the read then fails
+    * with Spark's own error). */
+  private def stamp(s: SparkSession, path: String): Option[(Long, Long)] =
+    try {
+      val p = new org.apache.hadoop.fs.Path(path)
+      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+      val st = fs.getFileStatus(p)
+      val all = if (st.isDirectory) st +: fs.listStatus(p).toSeq else Seq(st)
+      Some((all.map(_.getLen).sum, all.map(_.getModificationTime).max))
+    } catch { case _: java.io.IOException => None }
+
+  /** A fresh parquet scan of `<dir>/<name>.parquet`. The first read of a
+    * file version in a session infers its schema (a footer-reading Spark
+    * job) and records it; later reads pass the recorded schema and launch
+    * no job. Each call builds its own relation, so its attributes get
+    * fresh ids and self-joins stay unambiguous.
+    */
+  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    stamp(spark, path) match {
+      case None => spark.read.parquet(path)
+      case Some((len, mtime)) =>
+        val key = (path, len, mtime,
+          spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"))
+        val schemas = learned(spark).schemas
+        schemas.get(key) match {
+          case Some(schema) => spark.read.schema(schema).parquet(path)
+          case None =>
+            val df = spark.read.parquet(path)
+            schemas.put(key, df.schema)
+            df
+        }
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = t(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = t(s, d, "nation")
@@ -57,32 +125,16 @@ object Tables {
     * defaultParallelism; at production split counts (thousands of files /
     * row groups) the guard makes this a no-op, so no corpus-scale shuffle
     * is ever added. Row-wise results are partitioning-independent, so
-    * downstream values (and the oracle hash) are unchanged.
-    *
-    * r16 spread-keying probe (the r15 verdict's item 6), REJECTED with
-    * numbers: repartition(target, col("doc_id")) — the deterministic-key
-    * discipline the sink/skew scaffolding adopted in r15 — measured
-    * WORSE than round-robin across the 10 spread sites in a same-epoch
-    * isolated A/B at sf0.1 (batch med 6.67→7.20 s, min 5.57→5.95 s;
-    * q_text_dedup_span min +20%). Cause: hash-by-key buckets are
-    * multinomially imbalanced (~±2σ on ~156 rows/partition), and these
-    * stages are exactly the heavy-uniform-per-row decodes where the
-    * straggliest partition sets the stage time — round-robin's perfect
-    * balance is the feature, and its sortBeforeRepartition pass (trivial
-    * at this row width) is what makes retries reproduce the same
-    * row→partition assignment, so the SPARK-38388 concern doesn't apply.
-    * Kept from the probe: the partition-count probe is cached per
-    * (session, plan) so repeat invocations — the bench visits each
-    * builder 6+ times — skip the physical re-planning `df.rdd` forces
-    * just to read getNumPartitions.
+    * downstream values (and the oracle hash) are unchanged. Round-robin,
+    * not a keyed repartition: these stages are uniform per row, so the
+    * straggliest partition sets the stage time (the keyed probe is in
+    * OPTIMIZATION_r16.md §6). The scan-partition count is probed once per
+    * (session, plan), since `df.rdd` re-plans the frame physically.
     */
-  private val spreadProbe =
-    new scala.collection.concurrent.TrieMap[String, Int]()
   def spread(s: SparkSession, df: DataFrame): DataFrame = {
     val target = s.sparkContext.defaultParallelism
-    val pk = java.lang.System.identityHashCode(s).toHexString + "#" +
-      df.queryExecution.logical.semanticHash()
-    val scanParts = spreadProbe.getOrElseUpdate(pk, df.rdd.getNumPartitions)
+    val scanParts = learned(s).scanParts.getOrElseUpdate(
+      df.queryExecution.logical.semanticHash(), df.rdd.getNumPartitions)
     if (scanParts * 2 <= target) df.repartition(target) else df
   }
 }

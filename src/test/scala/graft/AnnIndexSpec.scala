@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.TestListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import graft.engine.Checkpoints
 
@@ -15,20 +12,6 @@ class AnnIndexSpec extends SparkSuite {
 
   private def rows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().map(_.toSeq).toSeq
-
-  /** Spark jobs launched while `body` runs. */
-  private def jobsDuring(body: => DataFrame): Int = {
-    val sc = spark.sparkContext
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
-    TestListenerBus.drain(sc)
-    sc.addSparkListener(l)
-    try { body; TestListenerBus.drain(sc); n.get }
-    finally sc.removeSparkListener(l)
-  }
 
   for ((q, bound, slots) <- Seq(
       ("q_sim_topk_ivf", 8, Seq("ivf_cents", "ivf_asg")),

@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,4 +17,18 @@ object SparkSuite {
 trait SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSuite.session
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Spark jobs launched while `body` runs. */
+  def jobsDuring(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val n = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    TestListenerBus.drain(sc)
+    sc.addSparkListener(l)
+    try { body; TestListenerBus.drain(sc); n.get }
+    finally sc.removeSparkListener(l)
+  }
 }
