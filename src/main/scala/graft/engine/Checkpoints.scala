@@ -1,10 +1,17 @@
 package graft.engine
 
+import scala.collection.concurrent.TrieMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
-/** Shared localCheckpoint hygiene for the iterative operators (connected
-  * components, Lloyd iterations, BPE merges, the hourly-series frames) —
-  * factored here so Analytics / Events / Text / Vectors share one copy.
+/** Per-session state, in one map keyed by the session object: the pinned
+  * localCheckpoint frames of the iterative operators (connected
+  * components, Lloyd iterations, BPE merges, the hourly-series frames),
+  * what [[Tables]] learned about its inputs, and the staging roots of the
+  * builders that write files. SparkSession compares by identity, so two
+  * live sessions never share an entry. [[release]], the sweep of stopped
+  * contexts and JVM exit each close a session's scope the same way: free
+  * its pins, drop its bucketed tables and delete its staging roots.
   */
 object Checkpoints {
 
@@ -20,121 +27,122 @@ object Checkpoints {
       case _ => ()
     } catch { case _: Throwable => () }
 
-  /** Pinned localCheckpoint frames, keyed per variant+fixture: the FINAL
-    * frame of an invocation must stay pinned — the returned DataFrame
-    * reads its blocks lazily, after the builder returns. Each invocation
-    * frees the previous invocation's frame under the same slot, capping
-    * steady-state checkpoint storage at one small frame per slot no
-    * matter how many times a query runs (the bench runs each 6+ times in
-    * one session).
-    */
-  private val pinnedFrames =
-    new scala.collection.concurrent.TrieMap[String, DataFrame]()
-
-  /** EVERY slot is keyed by (name, owning-session identity) — the r15
-    * unification (ADVICE r14): before it, memo() slots were suffixed but
-    * raw pin()/serving() artifact slots (PQ/IVF codebooks, BPE merges)
-    * were not, so two live sessions sharing a fixture ping-pong-evicted
-    * each other's pins — each replace leaked the foreign frame's blocks
-    * (pin refuses to free a live foreign frame) and defeated the
-    * serve-across-invocations memo.
-    */
-  private def key(slot: String, s: SparkSession): String =
-    slot + "@" + java.lang.System.identityHashCode(s).toHexString
-
-  /** Drop (and free) every entry whose owning session has stopped —
-    * run before each pin/memo so cross-suite sessions don't accumulate
-    * dead frames in the slot map — and what [[Tables]] learned for them.
-    */
-  private def sweep(): Unit = {
-    pinnedFrames.foreach { case (k, df) =>
-      if (df.sparkSession.sparkContext.isStopped &&
-          pinnedFrames.remove(k, df)) free(df)
-    }
-    Tables.sweep()
+  /** Recursive delete of a staging dir. */
+  private[engine] def rmTree(p: java.io.File): Unit = {
+    if (p.isDirectory)
+      Option(p.listFiles()).getOrElse(Array.empty).foreach(rmTree)
+    p.delete(); ()
   }
 
-  /** Pin `df` under `slot` for its own session, freeing whatever that
-    * session had pinned there before (each invocation replaces the
-    * previous one's frame, capping steady-state checkpoint storage at
-    * one frame per slot per live session). Session-keying means two
-    * live sessions sharing a fixture dir NEVER evict each other —
-    * stopped sessions' entries are swept here instead (ADVICE r13/r14).
-    * Returns `df` for chaining.
+  /** One session's state. `id` is minted with the scope, so the staging
+    * paths and catalog names that carry it are unique across sessions and
+    * JVMs.
+    */
+  private[engine] final class Scope {
+    val id: String = java.util.UUID.randomUUID().toString.replace("-", "")
+    /** Pinned frames by slot. */
+    val pins = new TrieMap[String, DataFrame]()
+    /** Inferred schema per (path, total length, latest mtime,
+      * nanosAsLong setting), for [[Tables.t]]. */
+    val schemas = new TrieMap[(String, Long, Long, String), StructType]()
+    /** Scan-partition count per logical plan, for [[Tables.spread]]. */
+    val scanParts = new TrieMap[Int, Int]()
+    /** Staging root names handed out, `<fixture slug>_<id>`. */
+    val roots = new TrieMap[String, Unit]()
+  }
+
+  private val scopes = new TrieMap[SparkSession, Scope]()
+
+  /** The scope of `s`; minting one first closes the scopes of stopped
+    * contexts, so sessions of a stopped context do not accumulate. */
+  private[engine] def scope(s: SparkSession): Scope =
+    scopes.getOrElse(s, {
+      scopes.foreach { case (o, sc) =>
+        if (o.sparkContext.isStopped && scopes.remove(o, sc)) close(o, sc)
+      }
+      scopes.getOrElseUpdate(s, new Scope)
+    })
+
+  private def stagingBase: String =
+    s"${System.getProperty("java.io.tmpdir")}/graft_ingest"
+
+  private def bucketed(root: String): String =
+    s"graft_lineitem_bucketed_$root"
+
+  private def close(s: SparkSession, sc: Scope): Unit = {
+    sc.pins.values.foreach(free)
+    sc.roots.keys.foreach { r =>
+      // a stopped context's catalog went with it
+      if (!s.sparkContext.isStopped)
+        s.sql(s"DROP TABLE IF EXISTS ${bucketed(r)}")
+      rmTree(new java.io.File(s"$stagingBase/$r"))
+    }
+  }
+
+  // JVM exit; priority 50 runs before Spark's own hooks (40) stop the
+  // context, so the tables can still be dropped
+  org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
+    () => scopes.keys.foreach(release), 50)
+
+  /** Close the scope of `s`: free its pins, drop its bucketed tables and
+    * delete its staging roots. Sessions made by `newSession()` share one
+    * SparkContext, so one of them cannot be stopped alone; a caller done
+    * with such a session releases it here. A later use of `s` starts a
+    * fresh scope.
+    */
+  def release(s: SparkSession): Unit = scopes.remove(s).foreach(close(s, _))
+
+  private def rootName(s: SparkSession, d: String): String = {
+    val sc = scope(s)
+    val r = d.replaceAll("[^A-Za-z0-9_]", "_") + "_" + sc.id
+    sc.roots.put(r, ())
+    r
+  }
+
+  /** Session `s`'s staging root for fixture `d`,
+    * `java.io.tmpdir/graft_ingest/<fixture slug>_<scope id>`: every
+    * builder that writes fixture-derived files writes under it, and the
+    * replay rows under its `stream/` subdirectory. No other session or
+    * JVM writes there.
+    */
+  def staging(s: SparkSession, d: String): String =
+    s"$stagingBase/${rootName(s, d)}"
+
+  /** The catalog name of session `s`'s bucketed lineitem table for
+    * fixture `d` (the catalog is shared by every session of a context). */
+  def bucketedTable(s: SparkSession, d: String): String =
+    bucketed(rootName(s, d))
+
+  /** Pin `df` under `slot` for its own session, freeing the frame that
+    * session had pinned there before, which caps steady-state checkpoint
+    * storage at one frame per slot per live session. The pinned frame
+    * must stay pinned: the returned DataFrame reads its blocks lazily,
+    * after the builder returns. Returns `df` for chaining.
     */
   def pin(slot: String, df: DataFrame): DataFrame = {
-    sweep()
-    pinnedFrames.put(key(slot, df.sparkSession), df).foreach { old =>
-      // same session by construction of the key; the identityHashCode-
-      // collision guard keeps a (vanishingly unlikely) foreign live
-      // frame readable rather than risking a use-after-unpersist
-      if (old.sparkSession eq df.sparkSession) free(old)
-    }
+    scope(df.sparkSession).pins.put(slot, df).foreach(free)
     df
   }
 
-  /** Free every frame `s` pinned. Sessions made by `newSession()` share
-    * one SparkContext, so one of them cannot be stopped alone; a caller
-    * done with such a session releases its pins here instead of holding
-    * them until the context stops. Also drops the schemas and probes
-    * [[Tables]] recorded for `s`.
+  /** Memoized pin: the frame `s` pinned under `slot`, else build, pin
+    * and return. For deterministic input frames shared across queries
+    * and bench reps (the graph family's support-edge list, the HITS
+    * purchase edges): the frame is a pure function of the fixture, so
+    * within one session every invocation after the first reads the
+    * materialized blocks instead of re-deriving the join/agg chain.
+    * Slots embed the dataset path; a fixture regenerated in place
+    * mid-session is served stale, so restart the session after one.
     */
-  def release(s: SparkSession): Unit = {
-    pinnedFrames.foreach { case (k, df) =>
-      if ((df.sparkSession eq s) && pinnedFrames.remove(k, df)) free(df)
-    }
-    Tables.release(s)
-  }
+  def memo(slot: String, s: SparkSession)(build: => DataFrame): DataFrame =
+    serving(slot, s).getOrElse(pin(slot, build))
 
-  /** When set (any non-empty value), memo() rebuilds on every invocation
-    * instead of serving the session-cached frame — so a timing run
-    * measures the cold derivation the query label implies, not a read of
-    * materialized blocks. Bench medians published in SURVEY §6 state
-    * which regime they were measured under (ADVICE r13).
-    */
-  private def bypass: Boolean =
-    sys.env.get("SPARK_GRAFT_MEMO_BYPASS").exists(_.nonEmpty)
-
-  /** Memoized pin: return the frame already pinned under this session's
-    * `slot` when the session is still live, else build, pin, and return.
-    * For deterministic input frames shared across queries and bench reps
-    * (the graph family's support-edge list, the HITS purchase edges):
-    * the frame is a pure function of the fixture, so within one session
-    * every invocation after the first reads the materialized blocks
-    * instead of re-deriving the join/agg chain.
-    *
-    * The memo key includes the session identity, so two LIVE sessions
-    * sharing a fixture dir each get their own slot and never evict each
-    * other (ADVICE r13); entries whose session has stopped are swept and
-    * freed on the next memo() call from any session. Slots embed the
-    * dataset path — a fixture regenerated IN-PLACE mid-session would be
-    * served stale, a scenario the harness never produces (fixtures are
-    * driver-generated before the round); restart the session after any
-    * manual regeneration.
-    */
-  def memo(slot: String, s: SparkSession)(build: => DataFrame): DataFrame = {
-    sweep()
-    // bypass still pins (frees the previous rep's blocks) but rebuilds
-    if (bypass) return pin(slot, build)
-    pinnedFrames.get(key(slot, s)) match {
-      case Some(df)
-          if (df.sparkSession eq s) && !s.sparkContext.isStopped =>
-        df
-      case _ => pin(slot, build)
-    }
-  }
-
-  /** Memo-style read of a pin()-managed slot: the pinned frame, when it
-    * belongs to the LIVE session `s` and bypass is off. For builders
-    * that pin MULTIPLE co-derived frames per fixture (the BPE walk's
-    * merges+vocab pair, the PQ/IVF codebook+encoded-corpus pairs) and
-    * want to serve them across invocations with the same session-keyed
-    * guard memo() applies to its own slots.
+  /** The frame `s` pinned under `slot`, for builders that pin several
+    * co-derived frames per fixture (the BPE walk's merges+vocab pair, the
+    * PQ/IVF codebook+encoded-corpus pairs) and serve them across
+    * invocations.
     */
   def serving(slot: String, s: SparkSession): Option[DataFrame] =
-    if (bypass) None
-    else pinnedFrames.get(key(slot, s)).filter(df =>
-      (df.sparkSession eq s) && !s.sparkContext.isStopped)
+    scope(s).pins.get(slot)
 
   /** Per-slot storage ledger: bytes of persisted blocks behind each frame
     * currently pinned by `s` (memory + disk, from the driver's
@@ -145,15 +153,12 @@ object Checkpoints {
   def storageBySlot(s: SparkSession): Map[String, Long] = {
     val sizes = s.sparkContext.getRDDStorageInfo
       .map(i => i.id -> (i.memSize + i.diskSize)).toMap
-    pinnedFrames.toMap.collect {
-      case (k, df) if df.sparkSession eq s =>
-        val bytes = df.queryExecution.analyzed.collect {
+    scopes.get(s).fold(Map.empty[String, Long])(_.pins.toMap.map {
+      case (slot, df) =>
+        slot -> df.queryExecution.analyzed.collect {
           case lr: org.apache.spark.sql.execution.LogicalRDD =>
             sizes.getOrElse(lr.rdd.id, 0L)
         }.sum
-        // drop the per-session suffix — entries are already filtered to s
-        val at = k.lastIndexOf('@')
-        (if (at >= 0) k.substring(0, at) else k) -> bytes
-    }
+    })
   }
 }

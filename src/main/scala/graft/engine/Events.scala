@@ -19,13 +19,6 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 object Events {
   import Fx._
 
-  /** Recursive delete for a replay protocol's staging dirs. */
-  private def rmTree(p: java.io.File): Unit = {
-    if (p.isDirectory)
-      Option(p.listFiles()).getOrElse(Array.empty).foreach(rmTree)
-    p.delete(); ()
-  }
-
   /** The events table in the camelCase shape of [[Ev]], the input of
     * every streaming builder and of the replay protocols' staged files.
     */
@@ -67,9 +60,11 @@ object Events {
         col("eventId"))
   }
 
-  /** A parquet staging dir as a file stream, on its files' schema. */
-  private def stagedStream(s: SparkSession, dir: String): DataFrame =
-    s.readStream.schema(s.read.parquet(dir).schema).parquet(dir)
+  /** A parquet staging dir as a file stream, read with the schema of
+    * `first`, the first frame the harness wrote there. */
+  private def stagedStream(s: SparkSession, dir: String, first: DataFrame)
+      : DataFrame =
+    s.readStream.schema(first.schema).parquet(dir)
 
   /** Start `writer` under Trigger.Once at 4 state partitions, wait for
     * its one micro-batch, and stop it.
@@ -81,23 +76,19 @@ object Events {
       try q.awaitTermination() finally if (q.isActive) q.stop()
     }
 
-  /** The replay protocols' staging root for session `s` and fixture
-    * `d`: under the driver's temp dir (`SparkFiles.getRootDirectory()`,
-    * deleted recursively when the context stops), one dir per fixture
-    * and session identity. No other JVM, context or live session reads
-    * or clears it.
+  /** The replay protocols' staging dir for session `s` and fixture `d`:
+    * `stream/` under the session's staging root ([[Checkpoints.staging]]),
+    * apart from every other builder's output.
     */
-  private[graft] def stagingRoot(s: SparkSession, d: String): String =
-    s"${org.apache.spark.SparkFiles.getRootDirectory()}/graft_stream/" +
-      d.replaceAll("[^A-Za-z0-9_]", "_") + "_" +
-      java.lang.System.identityHashCode(s).toHexString
+  private def streamRoot(s: SparkSession, d: String): String =
+    s"${Checkpoints.staging(s, d)}/stream"
 
   /** Build-once / restart-later harness for the replay protocols. The
     * protocol's micro-batch sequence runs IN FULL exactly once per
     * (session, fixture dir, tag): `build` runs on cleared `<tag>_*`
-    * staging dirs under [[stagingRoot]], writes the input batches and
-    * drives the watermark-advance sequence, then leaves a `<tag>.done`
-    * marker. Every later invocation in the session exercises the OTHER
+    * staging dirs under `base` ([[streamRoot]]), writes the input
+    * batches and drives the watermark-advance sequence, then leaves a
+    * `<tag>.done` marker. Every later invocation in the session exercises the OTHER
     * half of the streaming contract instead — `restart` reopens the
     * query on the durable checkpoint, where the file source finds no new
     * files and the run commits nothing: the idempotent crash-recovery
@@ -109,26 +100,25 @@ object Events {
     * is exactly the recommended deployment shape: one durable checkpoint
     * root, restarts resume from state instead of re-reading the backlog.
     */
-  private def replayReuse(s: SparkSession, d: String, tag: String)(
-      build: String => Unit)(restart: String => Unit): String = {
-    val base = stagingRoot(s, d)
+  private def replayReuse(s: SparkSession, base: String, tag: String)(
+      build: => Unit)(restart: => Unit): Unit = {
     new java.io.File(base).mkdirs()
     val marker = new java.io.File(base, s"$tag.done")
     if (marker.isFile) {
       val key = "spark.sql.streaming.noDataMicroBatches.enabled"
       val prev = s.conf.get(key)
       s.conf.set(key, "false")
-      try restart(base) finally s.conf.set(key, prev)
+      try restart finally s.conf.set(key, prev)
     } else {
       // a surviving checkpoint would treat re-written input as new files
       // and append a second copy of every row to the sink; clear input,
       // sink and checkpoint together
       Option(new java.io.File(base).listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith(tag + "_")).foreach(rmTree)
-      build(base)
+        .filter(_.getName.startsWith(tag + "_"))
+        .foreach(Checkpoints.rmTree)
+      build
       marker.createNewFile()
     }
-    base
   }
 
   /** TRUE STREAMING replay of one stateful operator under the oracle
@@ -173,21 +163,24 @@ object Events {
   private def replay(s: SparkSession, d: String, tag: String)(
       op: DataFrame => DataFrame)(batches: DataFrame => Seq[DataFrame])
       : DataFrame = {
-    def run(base: String): Unit = triggerOnce(s) {
-      op(stagedStream(s, s"$base/${tag}_in"))
-        .writeStream.format("parquet")
+    val base = streamRoot(s, d)
+    val in = batches(streamEvents(s, d))
+    // a file stream resolves its dir, so only after the first landing
+    lazy val out = op(stagedStream(s, s"$base/${tag}_in", in.head))
+    def run(): Unit = triggerOnce(s) {
+      out.writeStream.format("parquet")
         .option("path", s"$base/${tag}_out")
         .option("checkpointLocation", s"$base/${tag}_ckpt")
         .outputMode("append")
     }
-    val base = replayReuse(s, d, tag) { base =>
-      batches(streamEvents(s, d)).zipWithIndex.foreach { case (b, i) =>
+    replayReuse(s, base, tag) {
+      in.zipWithIndex.foreach { case (b, i) =>
         b.write.mode(if (i == 0) "overwrite" else "append")
           .parquet(s"$base/${tag}_in")
-        run(base)
+        run()
       }
-    }(run)
-    s.read.parquet(s"$base/${tag}_out")
+    }(run())
+    s.read.schema(out.schema).parquet(s"$base/${tag}_out")
   }
 
   /** The per-(event_type, hour) event count series `(event_type, h, x)`
@@ -235,6 +228,50 @@ object Events {
       .agg(count(lit(1)).cast(dec).as("n"), sum(col("x")).cast(dec).as("sx"))
     dense.join(broadcast(st), Seq("event_type"))
       .withColumn("dev", col("n") * col("x").cast(dec) - col("sx"))
+  }
+
+  /** The exact-integer ACF moments of the dense hourly series at lags
+    * 1..`lags`, one row per event type: `n_hours`, `den` = Σ dev²,
+    * `num<k>` = Σ dev_t·dev_{t−k} (one type-partitioned lag window, one
+    * partial agg), and `r<k>` = num<k>/den ε-rounded at 6dp.
+    */
+  private def acfMoments(s: SparkSession, d: String, lags: Int)
+      : DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("event_type")).orderBy(col("h"))
+    val ks = 1 to lags
+    val lagged = ks.foldLeft(hourlyDevs(denseHourly(hourlySeries(s, d)))) {
+      (df, k) => df.withColumn(s"d$k", lag(col("dev"), k).over(w))
+    }
+    val aggCols = Seq(sum(col("dev") * col("dev")).as("den")) ++
+      ks.map(k => sum(col("dev") * col(s"d$k")).as(s"num$k"))
+    val aggd = lagged.groupBy(col("event_type"))
+      .agg(max(col("n")).cast("long").as("n_hours"), aggCols: _*)
+    ks.foldLeft(aggd) { (df, k) =>
+      df.withColumn(s"r$k",
+        eround(col(s"num$k").cast("double") / col("den").cast("double"), 6))
+    }
+  }
+
+  /** The DuckDB twin of [[acfMoments]]: [[oDenseHourly]]'s CTEs, then
+    * `lagd`, `ag` `(event_type, n_hours, den, num<k>)` and `rr`
+    * `(event_type, n_hours, r<k>)`. One line, to interpolate after a
+    * `WITH`.
+    */
+  private def oAcfMoments(lags: Int): String = {
+    val ks = 1 to lags
+    val lagCols = ks.map(k => s"lag(dev, $k) OVER w AS d$k").mkString(", ")
+    val numCols = ks.map(k => s"sum(dev * d$k) AS num$k").mkString(", ")
+    val rCols = ks.map(k =>
+      s"round(CAST(num$k AS DOUBLE) / CAST(den AS DOUBLE) + 5e-10, 6)"
+        + s" AS r$k").mkString(", ")
+    s"""${oDenseHourly(devs = true)},
+       | lagd AS (SELECT event_type, n, dev, $lagCols FROM devs
+       |  WINDOW w AS (PARTITION BY event_type ORDER BY h)),
+       | ag AS (SELECT event_type, CAST(max(n) AS BIGINT) AS n_hours,
+       |   sum(dev * dev) AS den, $numCols FROM lagd GROUP BY 1),
+       | rr AS (SELECT event_type, n_hours, $rCols FROM ag)"""
+      .stripMargin.replaceAll("\n", " ")
   }
 
   /** The DuckDB twin of [[denseHourly]] over the events table's hourly
@@ -580,29 +617,29 @@ object Events {
     // both sides. Oracle = the inner join's matched pairs UNION the
     // horizon-closed NOT-EXISTS clicks with NULL purchase columns.
     "q_stream_join_outer_replay" -> { (s, d) =>
-      def run(base: String): Unit = triggerOnce(s) {
-        val schema = s.read.parquet(s"$base/sjo_l").schema
-        val l = s.readStream.schema(schema).parquet(s"$base/sjo_l")
-        val r = s.readStream.schema(schema).parquet(s"$base/sjo_r")
-        Streaming.streamStreamJoinOuter(l, r)
-          .writeStream.format("parquet")
+      val base = streamRoot(s, d)
+      val (clicks, buys) =
+        (joinSide(s, d, "click"), joinSide(s, d, "purchase"))
+      lazy val out = Streaming.streamStreamJoinOuter(
+        stagedStream(s, s"$base/sjo_l", clicks),
+        stagedStream(s, s"$base/sjo_r", buys))
+      def run(): Unit = triggerOnce(s) {
+        out.writeStream.format("parquet")
           .option("path", s"$base/sjo_out")
           .option("checkpointLocation", s"$base/sjo_ckpt")
           .outputMode("append")
       }
       def sentinelSide(uid: Long) = sentinel(s, FarFuture, uid)
         .select(col("ts"), col("userId"), col("eventId"))
-      val base = replayReuse(s, d, "sjo") { base =>
-        joinSide(s, d, "click").coalesce(4).write.mode("overwrite")
-          .parquet(s"$base/sjo_l")
-        joinSide(s, d, "purchase").coalesce(4).write.mode("overwrite")
-          .parquet(s"$base/sjo_r")
-        run(base)
+      replayReuse(s, base, "sjo") {
+        clicks.coalesce(4).write.mode("overwrite").parquet(s"$base/sjo_l")
+        buys.coalesce(4).write.mode("overwrite").parquet(s"$base/sjo_r")
+        run()
         sentinelSide(-1L).write.mode("append").parquet(s"$base/sjo_l")
         sentinelSide(-2L).write.mode("append").parquet(s"$base/sjo_r")
-        run(base)
-      }(run)
-      s.read.parquet(s"$base/sjo_out")
+        run()
+      }(run())
+      s.read.schema(out.schema).parquet(s"$base/sjo_out")
         .filter(col("l_user") >= 0)
         .select(col("l_user").as("user_id"), col("l_id").as("click_id"),
           col("r_id").as("purchase_id"), col("l_ts"), col("r_ts"))
@@ -625,34 +662,36 @@ object Events {
     // between write and swap leaves the old target intact. Oracle =
     // per-user argmax over all events.
     "q_stream_foreachbatch_upsert" -> { (s, d) =>
-      def run(base: String): Unit = triggerOnce(s) {
-        val tgt = s"$base/fbu_tgt"
-        stagedStream(s, s"$base/fbu_in").writeStream
+      val base = streamRoot(s, d)
+      val tgt = s"$base/fbu_tgt"
+      val ev = streamEvents(s, d)
+      val tgtSchema = upsertMerge(None, ev).schema
+      def run(): Unit = triggerOnce(s) {
+        stagedStream(s, s"$base/fbu_in", ev).writeStream
           .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row],
               _: Long) =>
             val cur =
               if (new java.io.File(tgt).isDirectory)
-                Some(batch.sparkSession.read.parquet(tgt))
+                Some(batch.sparkSession.read.schema(tgtSchema).parquet(tgt))
               else None
             val merged = upsertMerge(cur, batch.toDF())
             merged.write.mode("overwrite").parquet(s"${tgt}_next")
-            rmTree(new java.io.File(tgt))
+            Checkpoints.rmTree(new java.io.File(tgt))
             new java.io.File(s"${tgt}_next")
               .renameTo(new java.io.File(tgt))
             ()
           }
           .option("checkpointLocation", s"$base/fbu_ckpt")
       }
-      val base = replayReuse(s, d, "fbu") { base =>
-        val ev = streamEvents(s, d)
+      replayReuse(s, base, "fbu") {
         ev.filter(pmod(col("eventId"), lit(2)) === 0)
           .coalesce(4).write.mode("overwrite").parquet(s"$base/fbu_in")
-        run(base)
+        run()
         ev.filter(pmod(col("eventId"), lit(2)) === 1)
           .coalesce(4).write.mode("append").parquet(s"$base/fbu_in")
-        run(base)
-      }(run)
-      s.read.parquet(s"$base/fbu_tgt")
+        run()
+      }(run())
+      s.read.schema(tgtSchema).parquet(tgt)
         .select(col("userId").as("user_id"),
           col("m.ts").as("last_ts"),
           col("m.eventId").as("last_event_id"),
@@ -1398,23 +1437,12 @@ object Events {
     // (den 0) yields null, not NaN.
     // One grid join + one type-partitioned lag window + one partial agg.
     "q_ts_acf" -> { (s, d) =>
-      val W = org.apache.spark.sql.expressions.Window
-      val lags = 1 to 6
-      val w = W.partitionBy(col("event_type")).orderBy(col("h"))
-      val devs = hourlyDevs(denseHourly(hourlySeries(s, d)))
-      val lagged = lags.foldLeft(devs) { (df, k) =>
-        df.withColumn(s"d$k", lag(col("dev"), k).over(w))
-      }
-      val aggCols = Seq(sum(col("dev") * col("dev")).as("den")) ++
-        lags.map(k => sum(col("dev") * col(s"d$k")).as(s"num$k"))
-      val aggd = lagged.groupBy(col("event_type"))
-        .agg(max(col("n")).cast("long").as("n_hours"), aggCols: _*)
-      val stackExpr = lags
+      val stackExpr = (1 to 6)
         .map(k => s"${k}L, CASE WHEN den = 0 THEN CAST(NULL AS DOUBLE) " +
           s"ELSE round(CAST(num$k AS DOUBLE) / CAST(den AS DOUBLE) " +
           "+ 5e-10, 6) END")
-        .mkString(s"stack(${lags.size}, ", ", ", ") AS (lag, r)")
-      aggd.selectExpr("event_type", "n_hours", stackExpr)
+        .mkString("stack(6, ", ", ", ") AS (lag, r)")
+      acfMoments(s, d, 6).selectExpr("event_type", "n_hours", stackExpr)
         .select(col("event_type"), col("lag"), col("n_hours"), col("r"))
         .orderBy(col("event_type"), col("lag"))
     },
@@ -1429,27 +1457,11 @@ object Events {
     // oracle is generated from the same index math, so the expression
     // trees match op for op). Each φ_{k,k} ε-rounds at 6dp on output.
     "q_ts_pacf" -> { (s, d) =>
-      val W = org.apache.spark.sql.expressions.Window
-      val lags = 1 to 5
-      val w = W.partitionBy(col("event_type")).orderBy(col("h"))
-      val devs = hourlyDevs(denseHourly(hourlySeries(s, d)))
-      val lagged = lags.foldLeft(devs) { (df, k) =>
-        df.withColumn(s"d$k", lag(col("dev"), k).over(w))
-      }
-      val aggCols = Seq(sum(col("dev") * col("dev")).as("den")) ++
-        lags.map(k => sum(col("dev") * col(s"d$k")).as(s"num$k"))
-      val aggd = lagged.groupBy(col("event_type"))
-        .agg(max(col("n")).cast("long").as("n_hours"), aggCols: _*)
-      val withR = lags.foldLeft(aggd) { (df, k) =>
-        df.withColumn(s"r$k",
-          eround(col(s"num$k").cast("double") / col("den").cast("double"),
-            6))
-      }
       // Durbin–Levinson, generated: φ_{k,k} = (r_k − Σ_{j<k}
       // φ_{k−1,j}·r_{k−j}) / (1 − Σ_{j<k} φ_{k−1,j}·r_j);
       // φ_{k,j} = φ_{k−1,j} − φ_{k,k}·φ_{k−1,k−j}
       val dl = (2 to 5).foldLeft(
-        withR.withColumn("p1_1", col("r1"))) { (df, k) =>
+        acfMoments(s, d, 5).withColumn("p1_1", col("r1"))) { (df, k) =>
         def dot(f: Int => Column): Column =
           (1 until k).map(f).reduce(_ + _)
         val wkk = df.withColumn(s"p${k}_$k",
@@ -1461,9 +1473,9 @@ object Events {
               - col(s"p${k}_$k") * col(s"p${k - 1}_${k - j}"))
         }
       }
-      val stackExprP = lags
+      val stackExprP = (1 to 5)
         .map(k => s"${k}L, round(p${k}_$k + 5e-10, 6)")
-        .mkString(s"stack(${lags.size}, ", ", ", ") AS (lag, pacf)")
+        .mkString("stack(5, ", ", ", ") AS (lag, pacf)")
       dl.selectExpr("event_type", "n_hours", stackExprP)
         .select(col("event_type"), col("lag"), col("n_hours"),
           col("pacf"))
@@ -1531,26 +1543,10 @@ object Events {
     // every series loudly non-white — the test firing is the demo
     // working.
     "q_ts_ljung_box" -> { (s, d) =>
-      val W = org.apache.spark.sql.expressions.Window
-      val lags = 1 to 6
-      val w = W.partitionBy(col("event_type")).orderBy(col("h"))
-      val devs = hourlyDevs(denseHourly(hourlySeries(s, d)))
-      val lagged = lags.foldLeft(devs) { (df, k) =>
-        df.withColumn(s"d$k", lag(col("dev"), k).over(w))
-      }
-      val aggCols = Seq(sum(col("dev") * col("dev")).as("den")) ++
-        lags.map(k => sum(col("dev") * col(s"d$k")).as(s"num$k"))
-      val aggd = lagged.groupBy(col("event_type"))
-        .agg(max(col("n")).cast("long").as("n_hours"), aggCols: _*)
-      val withR = lags.foldLeft(aggd) { (df, k) =>
-        df.withColumn(s"r$k",
-          eround(col(s"num$k").cast("double") / col("den").cast("double"),
-            6))
-      }
-      val qsum = lags.map(k =>
+      val qsum = (1 to 6).map(k =>
         col(s"r$k") * col(s"r$k") / (col("n_hours") - k)).reduce(_ + _)
       val qstat = eround(col("n_hours") * (col("n_hours") + 2) * qsum, 4)
-      withR.select(col("event_type"), col("n_hours"),
+      acfMoments(s, d, 6).select(col("event_type"), col("n_hours"),
           qstat.as("q_stat"), lit(6L).as("df"),
           (qstat < 12.592).as("white_noise"))
         .orderBy(col("event_type"))
@@ -2741,20 +2737,13 @@ object Events {
     // lag products; internal state HUGEINT (output columns stay
     // BIGINT/DOUBLE so the schema audit passes).
     "q_ts_acf" -> {
-      val lags = 1 to 6
-      val lagCols = lags.map(k => s"lag(dev, $k) OVER w AS d$k").mkString(", ")
-      val numCols = lags.map(k => s"sum(dev * d$k) AS num$k").mkString(", ")
-      val branches = lags.map(k =>
+      val branches = (1 to 6).map(k =>
         s"""SELECT event_type, CAST($k AS BIGINT) AS "lag", n_hours,
            | CASE WHEN den = 0 THEN NULL
            |  ELSE round(CAST(num$k AS DOUBLE) / CAST(den AS DOUBLE)
            |   + 5e-10, 6) END AS r FROM ag""".stripMargin)
         .mkString(" UNION ALL ")
-      s"""WITH ${oDenseHourly(devs = true)},
-         | lagd AS (SELECT event_type, n, dev, $lagCols FROM devs
-         |  WINDOW w AS (PARTITION BY event_type ORDER BY h)),
-         | ag AS (SELECT event_type, CAST(max(n) AS BIGINT) AS n_hours,
-         |   sum(dev * dev) AS den, $numCols FROM lagd GROUP BY 1)
+      s"""WITH ${oAcfMoments(6)}
          | SELECT * FROM ($branches) ORDER BY event_type, "lag""""
         .stripMargin.replaceAll("\n", " ")
     },
@@ -2763,14 +2752,6 @@ object Events {
     // Durbin–Levinson CTE chain generated from the same recurrence as
     // the Spark side (term order and association identical).
     "q_ts_pacf" -> {
-      val lags = 1 to 5
-      val lagCols = lags.map(k => s"lag(dev, $k) OVER w AS d$k")
-        .mkString(", ")
-      val numCols = lags.map(k => s"sum(dev * d$k) AS num$k")
-        .mkString(", ")
-      val rCols = lags.map(k =>
-        s"round(CAST(num$k AS DOUBLE) / CAST(den AS DOUBLE) + 5e-10, 6)"
-          + s" AS r$k").mkString(", ")
       // unrolled DL: each step k adds p{k}_{k} then updates p{k}_{j}
       val dlCtes = (2 to 5).map { k =>
         def dot(f: Int => String) = (1 until k).map(f).mkString(" + ")
@@ -2782,17 +2763,12 @@ object Events {
             + s" * p${k - 1}_${k - j} AS p${k}_$j").mkString(", ")
         s"dl$k AS (SELECT *, $kk, $upd FROM dl${k - 1})"
       }.mkString(", ")
-      val branches = lags.map(k =>
+      val branches = (1 to 5).map(k =>
         s"""SELECT event_type, CAST($k AS BIGINT) AS "lag", n_hours,
            | round(p${k}_$k + 5e-10, 6) AS pacf FROM dl5"""
           .stripMargin).mkString(" UNION ALL ")
-      s"""WITH ${oDenseHourly(devs = true)},
-         | lagd AS (SELECT event_type, n, dev, $lagCols FROM devs
-         |  WINDOW w AS (PARTITION BY event_type ORDER BY h)),
-         | ag AS (SELECT event_type, CAST(max(n) AS BIGINT) AS n_hours,
-         |   sum(dev * dev) AS den, $numCols FROM lagd GROUP BY 1),
-         | dl1 AS (SELECT *, r1 AS p1_1 FROM
-         |  (SELECT event_type, n_hours, $rCols FROM ag) rr),
+      s"""WITH ${oAcfMoments(5)},
+         | dl1 AS (SELECT *, r1 AS p1_1 FROM rr),
          | $dlCtes
          | SELECT * FROM ($branches) ORDER BY event_type, "lag""""
         .stripMargin.replaceAll("\n", " ")
@@ -2831,22 +2807,9 @@ object Events {
     // Same ACF machinery; Q from the rounded r's in the identical
     // left-assoc term order; verdict vs the 12.592 literal.
     "q_ts_ljung_box" -> {
-      val lags = 1 to 6
-      val lagCols = lags.map(k => s"lag(dev, $k) OVER w AS d$k")
-        .mkString(", ")
-      val numCols = lags.map(k => s"sum(dev * d$k) AS num$k")
-        .mkString(", ")
-      val rCols = lags.map(k =>
-        s"round(CAST(num$k AS DOUBLE) / CAST(den AS DOUBLE) + 5e-10, 6)"
-          + s" AS r$k").mkString(", ")
-      val qsum = lags.map(k => s"r$k * r$k / (n_hours - $k)")
+      val qsum = (1 to 6).map(k => s"r$k * r$k / (n_hours - $k)")
         .mkString(" + ")
-      s"""WITH ${oDenseHourly(devs = true)},
-         | lagd AS (SELECT event_type, n, dev, $lagCols FROM devs
-         |  WINDOW w AS (PARTITION BY event_type ORDER BY h)),
-         | ag AS (SELECT event_type, CAST(max(n) AS BIGINT) AS n_hours,
-         |   sum(dev * dev) AS den, $numCols FROM lagd GROUP BY 1),
-         | rr AS (SELECT event_type, n_hours, $rCols FROM ag),
+      s"""WITH ${oAcfMoments(6)},
          | qq AS (SELECT event_type, n_hours,
          |   round(n_hours * (n_hours + 2) * ($qsum) + 5e-10, 4) AS q
          |  FROM rr)

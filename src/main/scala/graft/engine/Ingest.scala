@@ -13,6 +13,12 @@ import org.apache.spark.sql.types._
   * and the oracle checks the result against the original table — an
   * end-to-end sink+scan equivalence, not just a smoke read.
   *
+  * Every write goes under the session's staging root for the fixture
+  * ([[Checkpoints.staging]]), and the bucketed sink's catalog table
+  * carries the same session id, so two sessions, or two JVMs on one
+  * temp dir, never write over each other's files between build and
+  * action.
+  *
   * Scale posture: all writes are distributed `df.write` (per-partition
   * files, no driver funnel); reads carry explicit schemas — a parquet
   * read-back the schema of the frame it wrote, whose partition columns
@@ -23,20 +29,7 @@ import org.apache.spark.sql.types._
   */
 object Ingest {
 
-  /** Sink paths and table names are scoped by the source sfDir so
-    * concurrent runs at different scale factors (Verify vs Bench, or two
-    * sessions) never clobber each other's artifacts.
-    */
-  private def slug(d: String): String = d.replaceAll("[^A-Za-z0-9_]", "_")
-
-  private def tmp(name: String, d: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_ingest/${slug(d)}/$name"
-
-  /** Staging dir for engine queries OUTSIDE this module that write
-    * fixture-derived files (e.g. the DPP demo's partitioned fact). */
-  def stage(name: String, d: String): String = tmp(name, d)
-
-  def bucketedTable(d: String): String = s"graft_lineitem_bucketed_${slug(d)}"
+  import Checkpoints.{bucketedTable, staging}
 
   /** One-doc-per-line text-sink guard (q_scan_text): maps BOTH
     * line-break bytes to spaces — Hadoop's LineRecordReader splits on
@@ -61,7 +54,7 @@ object Ingest {
     // handling: one name is nulled before the write (empty cell in the
     // file) and must come back as NULL, not as an empty string.
     "q_scan_csv" -> { (s, d) =>
-      val out = tmp("nation_csv", d)
+      val out = s"${staging(s, d)}/nation_csv"
       Tables.nation(s, d)
         .select(col("n_nationkey"),
           nullif(col("n_name"), lit("NATION_3")).as("n_name"),
@@ -79,7 +72,7 @@ object Ingest {
 
     // JSON-lines round-trip with explicit schema.
     "q_scan_json" -> { (s, d) =>
-      val out = tmp("customer_json", d)
+      val out = s"${staging(s, d)}/customer_json"
       Tables.customer(s, d).write.mode("overwrite").json(out)
       val schema = StructType(Seq(
         StructField("c_custkey", LongType),
@@ -99,7 +92,7 @@ object Ingest {
     // files: it recomputes name/byte-length/md5 from the source table,
     // so the round trip through the binary source is what's checked.
     "q_scan_binaryfile" -> { (s, d) =>
-      val out = tmp("binfiles", d)
+      val out = s"${staging(s, d)}/binfiles"
       val dir = new java.io.File(out)
       dir.mkdirs()
       // Clear stale payloads first (r6 advice): a *.bin left by an
@@ -156,7 +149,7 @@ object Ingest {
     // A malformed line is planted deterministically; the query reports
     // good/bad counts. Oracle: the good rows are exactly the source table.
     "q_scan_csv_corrupt" -> { (s, d) =>
-      val out = tmp("nation_csv_corrupt", d)
+      val out = s"${staging(s, d)}/nation_csv_corrupt"
       Tables.nation(s, d)
         .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
         .write.mode("overwrite")
@@ -196,7 +189,7 @@ object Ingest {
     // 100 TB dataset storable and scannable; equivalence proven against
     // the source table.
     "q_sink_parquet_zstd" -> { (s, d) =>
-      val out = tmp("orders_zstd", d)
+      val out = s"${staging(s, d)}/orders_zstd"
       val orders = Tables.orders(s, d)
       orders.write.mode("overwrite")
         .option("compression", "zstd")
@@ -215,7 +208,7 @@ object Ingest {
     // data-skipping lever: a pruned scan reads 1/5th of the files before
     // any row is decoded.
     "q_scan_partition_prune" -> { (s, d) =>
-      val out = tmp("orders_by_priority", d)
+      val out = s"${staging(s, d)}/orders_by_priority"
       val orders = Tables.orders(s, d)
       orders.write.mode("overwrite")
         .partitionBy("o_orderpriority").parquet(out)
@@ -235,7 +228,7 @@ object Ingest {
     // never listed, let alone read (cheaper than a post-scan filter,
     // which q_scan_partition_prune already covers on the column route)
     "q_scan_glob" -> { (s, d) =>
-      val out = tmp("docs_by_lang", d)
+      val out = s"${staging(s, d)}/docs_by_lang"
       val docs = Tables.documents(s, d)
       docs.write.mode("overwrite").partitionBy("lang").parquet(out)
       // r16 log hygiene: passing the glob STRING makes FileStreamSink's
@@ -262,7 +255,7 @@ object Ingest {
     // ORC round-trip (columnar alternative to parquet; built into Spark):
     // write the table as ORC, read it back, prove scan+sink equivalence.
     "q_scan_orc" -> { (s, d) =>
-      val out = tmp("supplier_orc", d)
+      val out = s"${staging(s, d)}/supplier_orc"
       Tables.supplier(s, d).write.mode("overwrite").orc(out)
       s.read.orc(out).orderBy(col("s_suppkey"))
     },
@@ -271,7 +264,7 @@ object Ingest {
     // read together with mergeSchema — missing columns surface as NULLs.
     // The 100 TB ingestion reality: schemas drift across years of files.
     "q_scan_merge_schema" -> { (s, d) =>
-      val out = tmp("orders_evolving", d)
+      val out = s"${staging(s, d)}/orders_evolving"
       val base = Tables.orders(s, d)
       base.filter(col("o_orderkey") % 2 === 0)
         .select(col("o_orderkey"), col("o_totalprice"))
@@ -296,7 +289,7 @@ object Ingest {
     // an export. Round-trip float parity holds because Spark writes
     // shortest-repr doubles (CSV text → double is lossless both ways).
     "q_scan_csv_drift" -> { (s, d) =>
-      val out = tmp("orders_csv_drift", d)
+      val out = s"${staging(s, d)}/orders_csv_drift"
       val base = Tables.orders(s, d)
       base.filter(col("o_orderkey") % 2 === 0)
         .select(col("o_orderkey"), col("o_totalprice"))
@@ -326,7 +319,7 @@ object Ingest {
     // scanning the corpus. PlanSpec pins the pruned ReadSchema (body
     // absent); the oracle replays the rollup from the flat table.
     "q_scan_nested_prune" -> { (s, d) =>
-      val out = tmp("docs_nested", d)
+      val out = s"${staging(s, d)}/docs_nested"
       val nested = Tables.documents(s, d)
         .select(
           col("doc_id"),
@@ -345,7 +338,7 @@ object Ingest {
     // Partitioned parquet sink + read-back; oracle checks the partition
     // counts against the source table.
     "q_sink_parquet" -> { (s, d) =>
-      val out = tmp("lineitem_part", d)
+      val out = s"${staging(s, d)}/lineitem_part"
       // repartition by the partition column before the partitionBy write
       // (the q_sink_bucketed/q_sink_partition_overwrite discipline): each
       // partition value lands in its own task — same one-file-per-
@@ -370,7 +363,7 @@ object Ingest {
     // round-trips as an empty line, not a dropped row. Completes the
     // §2.1 source matrix (parquet/csv/json/jsonl/orc/xml/binary/text).
     "q_scan_text" -> { (s, d) =>
-      val out = tmp("docs_text", d)
+      val out = s"${staging(s, d)}/docs_text"
       // pin the one-doc-per-line invariant against fixture drift: a line
       // break inside text would split one doc into two physical lines
       // (and a NULL would crash the text writer) — textLineGuard maps
@@ -399,7 +392,7 @@ object Ingest {
     // convert-once to parquet (or JSONL, splittable at line level when
     // writers escape newlines) and never scan multiline CSV twice.
     "q_scan_csv_multiline" -> { (s, d) =>
-      val out = tmp("docs_multiline", d)
+      val out = s"${staging(s, d)}/docs_multiline"
       Tables.documents(s, d)
         .select(col("doc_id"),
           concat(substring(col("text"), 1, 20), lit("\n"),
@@ -430,7 +423,7 @@ object Ingest {
     // lossless including the cents and date round trips. Map-only write,
     // map-only parse, one small aggregate.
     "q_scan_fixed_width" -> { (s, d) =>
-      val out = tmp("orders_fixed", d)
+      val out = s"${staging(s, d)}/orders_fixed"
       Tables.orders(s, d).select(concat(
           lpad(col("o_orderkey").cast("string"), 12, "0"),
           lpad(col("o_custkey").cast("string"), 12, "0"),
@@ -468,7 +461,7 @@ object Ingest {
     // straight from parquet, so parity proves the JSONL path is lossless.
     // Map-only write, one small aggregate on read-back.
     "q_sink_jsonl" -> { (s, d) =>
-      val out = tmp("docs_jsonl", d)
+      val out = s"${staging(s, d)}/docs_jsonl"
       Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("source"), col("text"))
         .write.mode("overwrite").option("compression", "gzip").json(out)
@@ -532,7 +525,7 @@ object Ingest {
     // orders is absent from the batch and therefore keeps its ORIGINAL
     // rows — the oracle replays that per-partition presence rule.
     "q_sink_partition_overwrite" -> { (s, d) =>
-      val out = tmp("orders_dynpart", d)
+      val out = s"${staging(s, d)}/orders_dynpart"
       val orders = Tables.orders(s, d)
         .withColumn("om", date_format(col("o_orderdate"), "yyyy-MM"))
       // repartition by the partition column before a partitionBy write
@@ -560,7 +553,7 @@ object Ingest {
     // the exchange entirely (asserted in PlanSpec) — the co-located-join /
     // re-used-partitioning story at 100 TB.
     "q_sink_bucketed" -> { (s, d) =>
-      val tname = bucketedTable(d)
+      val tname = bucketedTable(s, d)
       s.sql(s"DROP TABLE IF EXISTS $tname")
       Tables.lineitem(s, d)
         // repartition by the bucket key with numPartitions == numBuckets
@@ -575,7 +568,7 @@ object Ingest {
         .repartition(8, col("l_orderkey"))
         .write.mode("overwrite")
         .bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-        .option("path", tmp("lineitem_bucketed", d))
+        .option("path", s"${staging(s, d)}/lineitem_bucketed")
         .saveAsTable(tname)
       s.table(tname)
         .groupBy(col("l_orderkey"))
@@ -593,7 +586,7 @@ object Ingest {
     // shift/mask sum that is bit-identical to the native expression.
     "q_layout_zorder" -> { (s, d) =>
       graft.engine.functions.GraftFunctions.register(s)
-      val out = tmp("lineitem_zorder", d)
+      val out = s"${staging(s, d)}/lineitem_zorder"
       val keyed = Tables.lineitem(s, d)
         .withColumn("zkey", expr("morton2(l_partkey, l_suppkey)"))
       keyed.repartitionByRange(8, col("zkey"))
@@ -622,7 +615,7 @@ object Ingest {
     // only the FINAL projection casts to double, so merged state is
     // bit-identical to the full recompute, which is the oracle.
     "q_shape_incr_agg" -> { (s, d) =>
-      val out = tmp("orders_agg_state", d)
+      val out = s"${staging(s, d)}/orders_agg_state"
       val cutoff = lit("1997-01-01").cast("timestamp")
       val history = Tables.orders(s, d).filter(col("o_orderdate") < cutoff)
         .groupBy(col("o_orderpriority"))
@@ -655,7 +648,7 @@ object Ingest {
     // scan when the delta is small). Refresh cost is the delta scan plus
     // one digest-keyed join — never a history rescan.
     "q_shape_incr_dedup" -> { (s, d) =>
-      val store = tmp("doc_digest_store", d)
+      val store = s"${staging(s, d)}/doc_digest_store"
       // the fixture has no exact-duplicate texts, so duplicates are
       // PLANTED deterministically (the nearDupCorpus pattern): each
       // even (history) doc_id < 20 re-arrives in the delta batch at
@@ -697,11 +690,12 @@ object Ingest {
     // into 4 range-partitioned, sorted files (clustered for downstream
     // min/max skipping on the sort key). Content must be bit-preserved:
     // the oracle recomputes the aggregate from the source table, and the
-    // before/after file counts are emitted as columns (64 and 4 by
-    // construction — a divergence hash-fails the row).
+    // before/after file counts are emitted as columns (4 after by
+    // construction, 64 before with overwhelming probability, see the
+    // NOTE below — a divergence hash-fails the row).
     "q_sink_compact" -> { (s, d) =>
-      val frag = tmp("lineitem_frag", d)
-      val comp = tmp("lineitem_compact", d)
+      val frag = s"${staging(s, d)}/lineitem_frag"
+      val comp = s"${staging(s, d)}/lineitem_compact"
       // r15: fragment via a DETERMINISTIC hash key instead of round-robin —
       // keyless repartition(n) first pays a full local sort of its input
       // (spark.sql.execution.sortBeforeRepartition, guide §2.5) so retried
@@ -735,7 +729,7 @@ object Ingest {
     // Bulkrax-style multi-valued CSV sink: arrays -> ';'-joined cells ->
     // CSV -> read back -> re-split. Oracle reproduces the aggregation.
     "q_sink_csv_multival" -> { (s, d) =>
-      val out = tmp("bulkrax_csv", d)
+      val out = s"${staging(s, d)}/bulkrax_csv"
       Tables.customer(s, d)
         .groupBy(col("c_nationkey"))
         .agg(array_join(sort_array(collect_list(col("c_name"))), ";")
@@ -763,7 +757,7 @@ object Ingest {
     // same from the source expressions, so hash parity proves lossless
     // quoting.
     "q_sink_csv_quoted" -> { (s, d) =>
-      val out = tmp("csv_quoted", d)
+      val out = s"${staging(s, d)}/csv_quoted"
       Tables.customer(s, d).filter(col("c_custkey") < 100)
         .select(col("c_custkey"),
           concat(lit("a,b\"q\"\n"), col("c_name")).as("tricky"))

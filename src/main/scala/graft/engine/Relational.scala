@@ -129,7 +129,7 @@ object Relational {
     // The column route (q_scan_partition_prune) prunes on a literal;
     // THIS prunes on values only known after the dim filter runs.
     "q_join_dpp" -> { (s, d) =>
-      val out = Ingest.stage("orders_dpp", d)
+      val out = s"${Checkpoints.staging(s, d)}/orders_dpp"
       val orders = Tables.orders(s, d)
       orders.write.mode("overwrite")
         .partitionBy("o_orderpriority").parquet(out)

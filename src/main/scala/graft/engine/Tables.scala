@@ -2,7 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, StructType}
+import org.apache.spark.sql.types.DecimalType
 
 /** Fixture-table readers + determinism helpers shared by every operator.
   *
@@ -12,42 +12,11 @@ import org.apache.spark.sql.types.{DecimalType, StructType}
   *
   * Scale posture: readers return plain parquet scans so Catalyst can push
   * filters/column pruning into the source, and no collect. The one thing
-  * cached is per live session and driver-side: each table's inferred
-  * schema and the spread probe's scan-partition counts, never data.
+  * cached is per live session and driver-side, in the session's
+  * [[Checkpoints]] scope: each table's inferred schema and the spread
+  * probe's scan-partition counts, never data.
   */
 object Tables {
-
-  /** What one live session has learned about its inputs: the inferred
-    * schema per (path, total length, latest mtime, nanosAsLong setting —
-    * it decides whether INT64-nanosecond `events.ts` infers as long), and
-    * the scan-partition count per logical plan for [[spread]].
-    */
-  private final class Learned {
-    val schemas =
-      new scala.collection.concurrent.TrieMap[(String, Long, Long, String),
-        StructType]()
-    val scanParts = new scala.collection.concurrent.TrieMap[Int, Int]()
-  }
-
-  /** Keyed by the session object itself: SparkSession compares by
-    * identity, so two live sessions never share an entry. */
-  private val sessions =
-    new scala.collection.concurrent.TrieMap[SparkSession, Learned]()
-
-  private def learned(s: SparkSession): Learned =
-    sessions.getOrElse(s, {
-      sweep()
-      sessions.getOrElseUpdate(s, new Learned)
-    })
-
-  /** Forget every session whose SparkContext has stopped. */
-  private[engine] def sweep(): Unit =
-    sessions.keys.foreach { s =>
-      if (s.sparkContext.isStopped) sessions.remove(s)
-    }
-
-  /** Forget what `s` learned (see [[Checkpoints.release]]). */
-  private[engine] def release(s: SparkSession): Unit = sessions.remove(s)
 
   /** Total length and latest mtime of a file, or of a directory and its
     * entries; None when the path cannot be listed (the read then fails
@@ -74,7 +43,7 @@ object Tables {
       case Some((len, mtime)) =>
         val key = (path, len, mtime,
           spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"))
-        val schemas = learned(spark).schemas
+        val schemas = Checkpoints.scope(spark).schemas
         schemas.get(key) match {
           case Some(schema) => spark.read.schema(schema).parquet(path)
           case None =>
@@ -133,7 +102,7 @@ object Tables {
     */
   def spread(s: SparkSession, df: DataFrame): DataFrame = {
     val target = s.sparkContext.defaultParallelism
-    val scanParts = learned(s).scanParts.getOrElseUpdate(
+    val scanParts = Checkpoints.scope(s).scanParts.getOrElseUpdate(
       df.queryExecution.logical.semanticHash(), df.rdd.getNumPartitions)
     if (scanParts * 2 <= target) df.repartition(target) else df
   }

@@ -75,6 +75,23 @@ class CheckpointsSpec extends SparkSuite {
       "previous same-session pin must be unpersisted on replacement")
   }
 
+  test("release frees the pins, deletes the staging root and drops the " +
+      "bucketed table") {
+    val s = spark.newSession()
+    SparkEntry.queries("q_sink_bucketed")(s, sf).collect()
+    Checkpoints.memo("spec:release", s)(
+      s.range(3).toDF("v").localCheckpoint())
+    val root = new java.io.File(Checkpoints.staging(s, sf))
+    val table = Checkpoints.bucketedTable(s, sf)
+    assert(root.isDirectory)
+    assert(spark.catalog.tableExists(table))
+    assert(Checkpoints.storageBySlot(s).contains("spec:release"))
+    Checkpoints.release(s)
+    assert(!root.exists, s"$root survived the release")
+    assert(!spark.catalog.tableExists(table))
+    assert(Checkpoints.storageBySlot(s).isEmpty)
+  }
+
   test("storageBySlot reports only the asking session's slots, " +
       "stripped of the session suffix") {
     val s2 = spark.newSession()

@@ -4118,7 +4118,7 @@ class EngineLawsSpec extends SparkSuite {
     // lines (no quote awareness) shred every record at its embedded
     // newline — strictly more physical lines than logical records
     val naive = spark.read.text(
-      graft.engine.Ingest.stage("docs_multiline", sf))
+      s"${graft.engine.Checkpoints.staging(spark, sf)}/docs_multiline")
     assert(naive.count() > docs.length.toLong,
       "line-split read must see the planted breaks as extra lines")
   }

@@ -27,6 +27,19 @@ class IngestSpec extends SparkSuite {
     assert(back.toSeq === src.toSeq)
   }
 
+  test("two sessions that both build the sinks before either action " +
+      "each read their own output") {
+    val qs = Seq("q_scan_csv", "q_sink_parquet", "q_sink_bucketed")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).toSeq
+    val expected = qs.map(q => rows(SparkEntry.queries(q)(spark, sf)))
+    val sessions = Seq(spark.newSession(), spark.newSession())
+    try {
+      val built = sessions.map(s => qs.map(q => SparkEntry.queries(q)(s, sf)))
+      built.foreach(dfs => assert(dfs.map(rows) === expected))
+    } finally sessions.foreach(engine.Checkpoints.release)
+  }
+
   test("xml parse extracts typed EPrints-shaped fields") {
     val rows = SparkEntry.queries("q_scan_xml")(spark, sf)
     assert(rows.count() === 100)
@@ -40,8 +53,7 @@ class IngestSpec extends SparkSuite {
   test("partitioned parquet sink partitions by return flag") {
     SparkEntry.queries("q_sink_parquet")(spark, sf).count()
     val dir = new java.io.File(
-      s"${System.getProperty("java.io.tmpdir")}/graft_ingest/" +
-        sf.replaceAll("[^A-Za-z0-9_]", "_") + "/lineitem_part")
+      s"${engine.Checkpoints.staging(spark, sf)}/lineitem_part")
     val parts = dir.listFiles().map(_.getName).filter(_.startsWith("l_returnflag="))
     assert(parts.toSet === Set("l_returnflag=A", "l_returnflag=N",
       "l_returnflag=R"))
@@ -51,8 +63,7 @@ class IngestSpec extends SparkSuite {
     import org.apache.spark.sql.types._
     // materialize the corrupt fixture via the query (plants one bad line)
     SparkEntry.queries("q_scan_csv_corrupt")(spark, sf).count()
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft_ingest/" +
-      sf.replaceAll("[^A-Za-z0-9_]", "_") + "/nation_csv_corrupt"
+    val out = s"${engine.Checkpoints.staging(spark, sf)}/nation_csv_corrupt"
     val schema = StructType(Seq(
       StructField("n_nationkey", IntegerType),
       StructField("n_name", StringType),
@@ -127,8 +138,8 @@ class IngestSpec extends SparkSuite {
     // the bucket-aligned repartition makes tasks coincide with buckets;
     // a regression back to tasks x buckets small files fails here
     SparkEntry.queries("q_sink_bucketed")(spark, sf).collect()
-    val dir = new java.io.File(graft.engine.Ingest.stage(
-      "lineitem_bucketed", sf))
+    val dir = new java.io.File(
+      s"${engine.Checkpoints.staging(spark, sf)}/lineitem_bucketed")
     val files = Option(dir.listFiles())
       .map(_.count(_.getName.endsWith(".parquet"))).getOrElse(-1)
     assert(files === 8, s"expected one file per bucket, got $files")
@@ -137,8 +148,8 @@ class IngestSpec extends SparkSuite {
   test("dynamic-partition sink lands exactly one file per partition " +
       "(r14 discipline)") {
     SparkEntry.queries("q_sink_partition_overwrite")(spark, sf).collect()
-    val root = new java.io.File(graft.engine.Ingest.stage(
-      "orders_dynpart", sf))
+    val root = new java.io.File(
+      s"${engine.Checkpoints.staging(spark, sf)}/orders_dynpart")
     val parts = Option(root.listFiles())
       .map(_.filter(f => f.isDirectory && f.getName.startsWith("om=")))
       .getOrElse(Array.empty[java.io.File])

@@ -73,7 +73,8 @@ class PlanSpec extends SparkSuite {
     // materialize the bucketed table, then check the aggregation plan
     val df = SparkEntry.queries("q_sink_bucketed")(spark, sf)
     df.collect()
-    val agg = spark.table(graft.engine.Ingest.bucketedTable(sf))
+    val agg = spark
+      .table(graft.engine.Checkpoints.bucketedTable(spark, sf))
       .groupBy("l_orderkey").count()
     val p = agg.queryExecution.executedPlan.toString
     assert(!p.contains("Exchange hashpartitioning"),
@@ -112,8 +113,7 @@ class PlanSpec extends SparkSuite {
     // filter: the filter must land in PartitionFilters (pruned directories,
     // no data read for other flags), not in PushedFilters
     SparkEntry.queries("q_sink_parquet")(spark, sf).collect()
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_ingest/" +
-      sf.replaceAll("[^A-Za-z0-9_]", "_") + "/lineitem_part"
+    val dir = s"${graft.engine.Checkpoints.staging(spark, sf)}/lineitem_part"
     val p = spark.read.parquet(dir)
       .filter(col("l_returnflag") === "R")
       .select(col("l_orderkey"))

@@ -14,7 +14,8 @@ import org.scalatest.BeforeAndAfterAll
   */
 class StreamReplaySpec extends SparkSuite with BeforeAndAfterAll {
 
-  private lazy val root = new File(engine.Events.stagingRoot(spark, sf))
+  private lazy val root =
+    new File(engine.Checkpoints.staging(spark, sf), "stream")
 
   private def rmTree(f: File): Unit = {
     if (f.isDirectory)
@@ -54,6 +55,12 @@ class StreamReplaySpec extends SparkSuite with BeforeAndAfterAll {
       assert(commits.length === batches,
         s"$q committed ${commits.sorted.mkString(",")}")
     }
+
+  test("a steady q_stream_tumbling_replay build launches no Spark job") {
+    val q = "q_stream_tumbling_replay"
+    rows(q)
+    assert(jobsDuring(SparkEntry.queries(q)(spark, sf)) === 0)
+  }
 
   test("two sessions each build a replay row fresh and get equal rows") {
     // q_stream_sliding_replay starts two streaming queries when it builds
