@@ -52,6 +52,141 @@ object Aggregates {
         .localCheckpoint()
     }
 
+  /** The Kruskal–Wallis H statistic from the per-group rank sums `rj`
+    * `(nj, rj)` and the per-value tie counts `perC` `(kc)`: one row
+    * `(k, nn, h_adj)`. The tie sum Σ(kc³ − kc) is lifted to
+    * DECIMAL(38,0) before the cross-products (it wraps int64 once a
+    * cents cell passes ~2.1M events); each group's R²/n ε-rounds into an
+    * exact decimal so the k-term sum is order-free (R² sits near 1e18 at
+    * sf0.1); nn goes to double BEFORE cubing, since int64 nn³ wraps past
+    * ~2.1M events where DuckDB errors, and doubles are identical IEEE on
+    * both engines and exact below 2^53.
+    */
+  private def kwStat(rj: DataFrame, perC: DataFrame): DataFrame = {
+    val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
+    val ties = perC.agg(sum(col("kc").cast(dec38) * col("kc")
+      * col("kc") - col("kc")).as("tc"), sum(col("kc")).as("nn"))
+    val nn = col("nn").cast("double")
+    rj.crossJoin(broadcast(ties))
+      .select(col("nn"), col("tc"),
+        eround(col("rj") * col("rj") / col("nj"), 4)
+          .cast("decimal(38,4)").as("rr"))
+      .agg(max(col("nn")).as("nn"), max(col("tc")).as("tc"),
+        sum(col("rr")).as("srr"), count(lit(1)).as("k"))
+      .select(col("k"), col("nn"),
+        eround((lit(12.0) * col("srr").cast("double") / (nn * (nn + 1.0))
+          - lit(3.0) * (nn + 1.0))
+          / (lit(1.0) - col("tc").cast("double") / (nn * nn * nn - nn)), 6)
+          .as("h_adj"))
+  }
+
+  /** Per-group exact moments of the integer column `v` (cents, or
+    * Levene's doubled deviations), grouped by `key`: `n`, `sc` = Σv and
+    * `qc` = Σv², the sums in DECIMAL(38,0), headroom past 1e12 rows per
+    * group. The per-row square stays in long: |v| is per-row cents
+    * (≤ ~2e6 at any corpus size), so v·v ≤ ~4e12 « 2^63, and only the
+    * SUM needs the decimal; a dec19×dec19 product would exceed the
+    * compact-long Decimal (18 digits) and pay a BigDecimal multiply per
+    * row. Every derived double (means, variances, t, F) is then the
+    * identical expression tree on both engines.
+    */
+  private def centsMoments(key: Column, v: String = "c")(df: DataFrame)
+      : DataFrame = {
+    val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
+    df.groupBy(key)
+      .agg(count(lit(1)).as("n"),
+        sum(col(v).cast(dec38)).as("sc"),
+        sum((col(v) * col(v)).cast(dec38)).as("qc"))
+  }
+
+  /** One-way ANOVA over [[centsMoments]] frame `st` (k groups, values
+    * at 1/100 scale): one row `(k, n, ss_between, ss_within, f_stat)`.
+    * Each group's between/within term is the identical double
+    * expression ε-rounded to DECIMAL(28,6), so the k-term sums are exact
+    * and order-free (28,6 because qc/10⁴ reaches ~5e8 at fixture scale
+    * and grows with n).
+    */
+  private def anovaF(st: DataFrame): DataFrame = {
+    val tot = st.agg(sum(col("n")).as("nn"), sum(col("sc")).as("ss"),
+      count(lit(1)).as("k"))
+    val grand = col("ss").cast("double") / col("nn") / 100.0
+    val meanI = col("sc").cast("double") / col("n") / 100.0
+    val termB = eround(col("n") * (meanI - grand) * (meanI - grand), 6)
+      .cast("decimal(28,6)")
+    val termW = eround((col("qc").cast("double")
+      - col("sc").cast("double") * col("sc").cast("double") / col("n"))
+      / 10000.0, 6).cast("decimal(28,6)")
+    st.crossJoin(broadcast(tot))
+      .select(col("k"), col("nn"), termB.as("tb"), termW.as("tw"))
+      .groupBy(col("k"), col("nn"))
+      .agg(sum(col("tb")).cast("double").as("ssb"),
+        sum(col("tw")).cast("double").as("ssw"))
+      .select(col("k"), col("nn").as("n"),
+        eround(col("ssb"), 4).as("ss_between"),
+        eround(col("ssw"), 4).as("ss_within"),
+        eround((col("ssb") / (col("k") - 1)) /
+          (col("ssw") / (col("nn") - col("k"))), 6).as("f_stat"))
+  }
+
+  /** The event-type × user-cohort (user_id mod 4) contingency frame of
+    * the categorical-association tests: each cell's observed count `o`
+    * with its row and column margins `rt`/`ct`, the total `n` and the
+    * expected count `e` = rt·ct/n. Counts and margins are exact
+    * integers; one partial-agg scan to the r×c frame, margins broadcast
+    * back, so the corpus is never shuffled.
+    */
+  private def contingency(s: SparkSession, d: String): DataFrame = {
+    val obs = Tables.events(s, d)
+      .select(col("event_type"), pmod(col("user_id"), lit(4)).as("cohort"))
+      .groupBy(col("event_type"), col("cohort"))
+      .agg(count(lit(1)).as("o"))
+    val rt = obs.groupBy(col("event_type")).agg(sum(col("o")).as("rt"))
+    val ct = obs.groupBy(col("cohort")).agg(sum(col("o")).as("ct"))
+    val n = obs.agg(sum(col("o")).as("n"))
+    obs.join(broadcast(rt), Seq("event_type"))
+      .join(broadcast(ct), Seq("cohort"))
+      .crossJoin(broadcast(n))
+      .withColumn("e", col("rt").cast("double") * col("ct") / col("n"))
+  }
+
+  /** A [[contingency]] cell's Pearson term (o−e)²/e, the identical double
+    * expression on both engines ε-rounded to DECIMAL(18,9), so the cell
+    * sum is exact and order-free.
+    */
+  private def chi2Cell: Column =
+    eround((col("o") - col("e")) * (col("o") - col("e")) / col("e"), 9)
+      .cast("decimal(18,9)")
+
+  /** Per-returnflag count `n` and exact decimal power sums `s1`..`s4`
+    * of l_quantity ([[Fx.dsum]] at the scale where each power is exact),
+    * so the moments are identical on both engines and the closed-form
+    * combinations [[momMean]], [[momM2]]..[[momM4]] (population central
+    * moments) are the same IEEE double expressions on both sides.
+    * Built-in skewness/kurtosis keep order-dependent double state and
+    * the two engines disagree on bias correction.
+    */
+  private def qtyPowerSums(s: SparkSession, d: String): DataFrame = {
+    val q = col("l_quantity")
+    Tables.lineitem(s, d)
+      .groupBy(col("l_returnflag"))
+      .agg(
+        count(lit(1)).as("n"),
+        dsum(q).as("s1"),
+        dsum(q * q, 4).as("s2"),
+        dsum(q * q * q, 6).as("s3"),
+        dsum(q * q * q * q, 8).as("s4"))
+  }
+  private def momN: Column = col("n").cast("double")
+  private def momMean: Column = col("s1") / momN
+  private def momM2: Column = col("s2") / momN - momMean * momMean
+  private def momM3: Column = col("s3") / momN -
+    lit(3) * momMean * (col("s2") / momN) +
+    lit(2) * momMean * momMean * momMean
+  private def momM4: Column = col("s4") / momN -
+    lit(4) * momMean * (col("s3") / momN) +
+    lit(6) * momMean * momMean * (col("s2") / momN) -
+    lit(3) * momMean * momMean * momMean * momMean
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_agg_global" -> { (s, d) =>
       Tables.lineitem(s, d).agg(
@@ -221,71 +356,31 @@ object Aggregates {
     },
 
     // Higher-moment shape statistics (population skewness + excess
-    // kurtosis) from exact decimal power sums — same order-independence
-    // trick as q_agg_regr: the four moments are exact and identical on
-    // both engines, and the closed-form combination is then the same IEEE
-    // double expression on both sides. (Built-in skewness/kurtosis keep
-    // order-dependent double state AND the two engines disagree on
-    // bias correction — EngineLawsSpec pins ours against Spark's.)
+    // kurtosis) from [[qtyPowerSums]]; EngineLawsSpec pins ours against
+    // Spark's built-ins.
     "q_agg_skewkurt" -> { (s, d) =>
-      val q = col("l_quantity")
-      val m = Tables.lineitem(s, d)
-        .groupBy(col("l_returnflag"))
-        .agg(
-          count(lit(1)).as("n"),
-          dsum(q).as("s1"),
-          dsum(q * q, 4).as("s2"),
-          dsum(q * q * q, 6).as("s3"),
-          dsum(q * q * q * q, 8).as("s4"))
-      val nD = col("n").cast("double")
-      val mean = col("s1") / nD
-      val m2 = col("s2") / nD - mean * mean
-      val m3 = col("s3") / nD - lit(3) * mean * (col("s2") / nD) +
-        lit(2) * mean * mean * mean
-      val m4 = col("s4") / nD - lit(4) * mean * (col("s3") / nD) +
-        lit(6) * mean * mean * (col("s2") / nD) -
-        lit(3) * mean * mean * mean * mean
-      m.select(
+      qtyPowerSums(s, d).select(
         col("l_returnflag"), col("n"),
-        eround(mean, 4).as("mean_qty"),
-        eround(m3 / sqrt(m2 * m2 * m2), 6).as("skew_qty"),
-        eround(m4 / (m2 * m2) - lit(3), 6).as("kurt_qty"))
+        eround(momMean, 4).as("mean_qty"),
+        eround(momM3 / sqrt(momM2 * momM2 * momM2), 6).as("skew_qty"),
+        eround(momM4 / (momM2 * momM2) - lit(3), 6).as("kurt_qty"))
         .orderBy(col("l_returnflag"))
     },
 
-    // Jarque–Bera normality test (r13) — the closed-form gate that
-    // turns q_agg_skewkurt's shape numbers into a decision: JB =
-    // n/6·(S² + K²/4) against χ²(2) = 5.991. Rides the identical exact
-    // decimal power sums (s1..s4 — order-free, bit-identical on both
-    // engines), with S and K carried UNROUNDED into the statistic so
-    // the whole chain is one IEEE expression tree both engines share;
-    // zero libm beyond one sqrt. One corpus scan, one partial-agg
-    // shuffle of 3 groups.
+    // Jarque–Bera normality test — the closed-form gate that turns
+    // q_agg_skewkurt's shape numbers into a decision: JB =
+    // n/6·(S² + K²/4) against χ²(2) = 5.991, on [[qtyPowerSums]], with
+    // S and K carried UNROUNDED into the statistic so the whole chain is
+    // one IEEE expression tree both engines share; zero libm beyond one
+    // sqrt.
     "q_agg_jarque_bera" -> { (s, d) =>
-      val q = col("l_quantity")
-      val m = Tables.lineitem(s, d)
-        .groupBy(col("l_returnflag"))
-        .agg(
-          count(lit(1)).as("n"),
-          dsum(q).as("s1"),
-          dsum(q * q, 4).as("s2"),
-          dsum(q * q * q, 6).as("s3"),
-          dsum(q * q * q * q, 8).as("s4"))
-      val nD = col("n").cast("double")
-      val mean = col("s1") / nD
-      val m2 = col("s2") / nD - mean * mean
-      val m3 = col("s3") / nD - lit(3) * mean * (col("s2") / nD) +
-        lit(2) * mean * mean * mean
-      val m4 = col("s4") / nD - lit(4) * mean * (col("s3") / nD) +
-        lit(6) * mean * mean * (col("s2") / nD) -
-        lit(3) * mean * mean * mean * mean
-      val sk = m3 / sqrt(m2 * m2 * m2)
-      val ku = m4 / (m2 * m2) - lit(3)
-      m.select(
+      val sk = momM3 / sqrt(momM2 * momM2 * momM2)
+      val ku = momM4 / (momM2 * momM2) - lit(3)
+      qtyPowerSums(s, d).select(
           col("l_returnflag"), col("n"),
           eround(sk, 6).as("skew"),
           eround(ku, 6).as("kurt"),
-          eround(nD / lit(6.0) * (sk * sk + ku * ku / lit(4.0)), 4)
+          eround(momN / lit(6.0) * (sk * sk + ku * ku / lit(4.0)), 4)
             .as("jb_stat"))
         .withColumn("normal", col("jb_stat") <= 5.991)
         .orderBy(col("l_returnflag"))
@@ -420,28 +515,12 @@ object Aggregates {
     },
 
     // Pearson chi-squared independence test between event type and a
-    // derived user cohort (user_id mod 4) — the categorical-association
-    // profiler beside q_agg_ttest's numeric test. Parity recipe: observed
-    // counts and marginals are exact integers; each cell's expected value
-    // and (o−e)²/e are identical double expressions ε-rounded to
-    // DECIMAL(18,9) so the final sum is exact and order-free (the JSD
-    // recipe). Scale shape: one partial-agg scan to an r×c contingency
-    // frame, marginals broadcast back — the corpus is never shuffled.
+    // derived user cohort — the categorical-association profiler beside
+    // q_agg_ttest's numeric test: the exact sum of [[chi2Cell]] over the
+    // [[contingency]] frame.
     "q_agg_chi2" -> { (s, d) =>
-      val obs = Tables.events(s, d)
-        .select(col("event_type"), pmod(col("user_id"), lit(4)).as("cohort"))
-        .groupBy(col("event_type"), col("cohort"))
-        .agg(count(lit(1)).as("o"))
-      val rt = obs.groupBy(col("event_type")).agg(sum(col("o")).as("rt"))
-      val ct = obs.groupBy(col("cohort")).agg(sum(col("o")).as("ct"))
-      val n = obs.agg(sum(col("o")).as("n"))
-      obs.join(broadcast(rt), Seq("event_type"))
-        .join(broadcast(ct), Seq("cohort"))
-        .crossJoin(broadcast(n))
-        .withColumn("e", col("rt").cast("double") * col("ct") / col("n"))
-        .withColumn("cell",
-          eround((col("o") - col("e")) * (col("o") - col("e")) / col("e"),
-            9).cast("decimal(18,9)"))
+      contingency(s, d)
+        .withColumn("cell", chi2Cell)
         .agg(count(lit(1)).as("n_cells"),
           countDistinct(col("event_type")).as("r"),
           countDistinct(col("cohort")).as("c"),
@@ -450,25 +529,14 @@ object Aggregates {
           ((col("r") - 1) * (col("c") - 1)).as("dof"), col("chi2"))
     },
 
-    // G-test (r13) — the likelihood-ratio companion to q_agg_chi2 on
-    // the SAME event-type × user-cohort contingency (G is additive
-    // across partitions and preferred at small expected counts):
-    // G = 2·Σ O·ln(O/E), each cell's O·ln(O/E) ε-rounded onto the 9dp
-    // decimal grid before the exact sum (the chi2 cell recipe with an
-    // ln in place of the square); χ²crit(12,.05) = 21.026 literal on
-    // the rounded statistic. One corpus scan to the 20-cell frame.
+    // G-test — the likelihood-ratio companion to q_agg_chi2 on the same
+    // [[contingency]] frame (G is additive across partitions and
+    // preferred at small expected counts): G = 2·Σ O·ln(O/E), each
+    // cell's O·ln(O/E) ε-rounded onto the 9dp decimal grid before the
+    // exact sum; χ²crit(12,.05) = 21.026 literal on the rounded
+    // statistic.
     "q_agg_gtest" -> { (s, d) =>
-      val obs = Tables.events(s, d)
-        .select(col("event_type"), pmod(col("user_id"), lit(4)).as("cohort"))
-        .groupBy(col("event_type"), col("cohort"))
-        .agg(count(lit(1)).as("o"))
-      val rt = obs.groupBy(col("event_type")).agg(sum(col("o")).as("rt"))
-      val ct = obs.groupBy(col("cohort")).agg(sum(col("o")).as("ct"))
-      val n = obs.agg(sum(col("o")).as("n"))
-      obs.join(broadcast(rt), Seq("event_type"))
-        .join(broadcast(ct), Seq("cohort"))
-        .crossJoin(broadcast(n))
-        .withColumn("e", col("rt").cast("double") * col("ct") / col("n"))
+      contingency(s, d)
         .withColumn("cell", when(col("o") > 0,
           eround(col("o").cast("double")
             * log(col("o").cast("double") / col("e")), 9))
@@ -483,15 +551,15 @@ object Aggregates {
         .withColumn("significant", col("g_stat") > 21.026)
     },
 
-    // Conover–Iman post-hoc (r13) — the step AFTER q_agg_kruskal_wallis
+    // Conover–Iman post-hoc — the step AFTER q_agg_kruskal_wallis
     // rejects: WHICH event-type pairs differ on ranks, with the pooled
     // rank-variance correction (the rank-side analog of Tukey after
     // ANOVA). Rides the identical cents-domain tie-averaged rank frame;
     // the integer lifts keep everything exact: 2·ar = 2·cum_before +
     // k_c + 1 is an integer, per-type doubled rank sums Σn·2ar are
     // int64, and ΣR² lifts to the quarter grid Σk·(2ar)² in
-    // DECIMAL(38,0). H replays the q_agg_kruskal_wallis chain on its
-    // 6dp contract; t_ij = (R̄i − R̄j)/√(S²·(N−1−H)/(N−k)·(1/nᵢ+1/nⱼ))
+    // DECIMAL(38,0). H is [[kwStat]];
+    // t_ij = (R̄i − R̄j)/√(S²·(N−1−H)/(N−k)·(1/nᵢ+1/nⱼ))
     // against the 1.96 literal on the rounded statistic. Scale: one
     // corpus scan to the bounded frame, then a 10-row pair join.
     "q_agg_conover" -> { (s, d) =>
@@ -516,34 +584,10 @@ object Aggregates {
         .agg(sum(col("n")).as("nj"),
           sum(col("n") * col("ar2")).as("rj2"),
           sum(col("n") * col("ar")).as("rj"))
-      // tie sum lifted to DECIMAL(38,0): Σkc³ wraps int64 once any cents
-      // cell passes ~2.1M events; the decimal sum stays exact and
-      // order-free (ADVICE r13 — cast BEFORE the cross-products)
-      val ties = perC.agg(sum(col("kc").cast(dec38) * col("kc")
-        * col("kc") - col("kc")).as("tc"), sum(col("kc")).as("nn"))
       val q2 = perC.join(ranks.select(col("c"), col("ar2")), "c")
         .agg(sum(col("kc").cast(dec38)
           * (col("ar2").cast(dec38) * col("ar2").cast(dec38))).as("q4"))
-      // the KW H statistic replayed on its own 6dp contract
-      val h = rj.crossJoin(broadcast(ties))
-        .select(col("nn"), col("tc"),
-          eround(col("rj") * col("rj") / col("nj"), 4)
-            .cast("decimal(38,4)").as("rr"))
-      val stat = h.agg(max(col("nn")).as("nn"), max(col("tc")).as("tc"),
-          sum(col("rr")).as("srr"), count(lit(1)).as("k"))
-        .select(col("k"), col("nn"),
-          // nn cast to double BEFORE cubing: nn³ on int64 silently wraps
-          // past ~2.1M total events in Spark while DuckDB errors — the
-          // engines would diverge at scale. Double products are identical
-          // IEEE on both engines, and exact below 2^53 (ADVICE r13).
-          eround((lit(12.0) * col("srr").cast("double")
-            / (col("nn").cast("double")
-              * (col("nn").cast("double") + 1.0))
-            - lit(3.0) * (col("nn").cast("double") + 1.0))
-            / (lit(1.0) - col("tc").cast("double")
-              / (col("nn").cast("double") * col("nn").cast("double")
-                * col("nn").cast("double")
-                - col("nn").cast("double"))), 6).as("h_adj"))
+      val stat = kwStat(rj, perC)
       val a = rj.select(col("event_type").as("type_a"),
         col("nj").as("n_a"), col("rj2").as("rj2_a"))
       val b = rj.select(col("event_type").as("type_b"),
@@ -573,30 +617,13 @@ object Aggregates {
     },
 
     // Welch two-sample t-test between every event-type pair — the A/B
-    // experimentation aggregate (unequal variances, no pooling). Parity
-    // recipe: per-type moments are EXACT integers (cents in
-    // DECIMAL(38,0) — headroom past 1e12 rows/type), and every derived
-    // double (mean, sample variance, t, Welch–Satterthwaite df) is the
-    // IDENTICAL expression tree on both engines, so each is the same
-    // IEEE double before the ε-round. Scale shape: one partial-agg scan
-    // to a ~5-row stats frame, then a tiny pair cross join — the corpus
-    // is read once and never shuffled.
+    // experimentation aggregate (unequal variances, no pooling) on
+    // [[centsMoments]]: one partial-agg scan to a ~5-row stats frame,
+    // then a tiny pair cross join.
     "q_agg_ttest" -> { (s, d) =>
-      val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
       val st = Tables.events(s, d)
         .withColumn("c", round(col("value") * 100).cast("long"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("c").cast(dec38)).as("sc"),
-          // per-row square in long — |c| is per-EVENT cents (≤ ~2e6 at
-          // any corpus size), so c·c ≤ ~4e12 « 2^63; only the SUM needs
-          // DECIMAL(38,0). The former dec19×dec19 spelling exceeded the
-          // compact-long Decimal (18 digits) and paid a BigDecimal
-          // multiply per row. Same discipline in levene/bartlett/
-          // tukey_hsd/cohens_d/anova/corr_matrix; q_agg_hhi deliberately
-          // keeps the DECIMAL product (its operand is a per-customer
-          // revenue SUM that grows with the corpus).
-          sum((col("c") * col("c")).cast(dec38)).as("qc"))
+        .transform(centsMoments(col("event_type")))
       def mean(sc: Column, n: Column): Column =
         sc.cast("double") / n / 100.0
       def variance(qc: Column, sc: Column, n: Column): Column =
@@ -868,17 +895,16 @@ object Aggregates {
         .withColumn("significant", abs(col("z")) > 1.96)
     },
 
-    // Kruskal–Wallis H (r12) — the k-group rank ANOVA completing the
+    // Kruskal–Wallis H — the k-group rank ANOVA completing the
     // nonparametric lattice (Mann–Whitney = 2 independent groups,
     // Friedman = blocked, Wilcoxon = paired): do the five event types
     // draw values from the same distribution, judged on ranks? NEVER a
     // corpus-ordered rank window: tie-averaged pooled ranks derive from
     // the bounded cents-domain cumulative frame (the Mann–Whitney/KS
     // machinery — avg_rank(c) = cum_before(c) + (k_c+1)/2, an exact
-    // half), per-group rank sums are exact half-integer folds, the tie
-    // correction 1 − Σ(k³−k)/(N³−N) is pure int64, and H's divisions
-    // are identical IEEE on both engines; χ²crit(4,.05) = 9.488
-    // literal. One corpus scan to the pinned (type, cents) frame.
+    // half), per-group rank sums are exact half-integer folds, and H is
+    // [[kwStat]]; χ²crit(4,.05) = 9.488 literal. One corpus scan to the
+    // pinned (type, cents) frame.
     "q_agg_kruskal_wallis" -> { (s, d) =>
       val W = org.apache.spark.sql.expressions.Window
       val cells = Checkpoints.pin("kw:" + d, Tables.events(s, d)
@@ -897,34 +923,7 @@ object Aggregates {
       val rj = cells.join(ranks.select(col("c"), col("ar")), "c")
         .groupBy(col("event_type"))
         .agg(sum(col("n")).as("nj"), sum(col("n") * col("ar")).as("rj"))
-      // tie sum lifted to DECIMAL(38,0) — Σkc³ wraps int64 at scale; the
-      // decimal sum is exact and order-free (ADVICE r13)
-      val kwDec38 = org.apache.spark.sql.types.DecimalType(38, 0)
-      val ties = perC.agg(sum(col("kc").cast(kwDec38) * col("kc")
-        * col("kc") - col("kc")).as("tc"), sum(col("kc")).as("nn"))
-      val h = rj.crossJoin(broadcast(ties))
-        .select(col("event_type"), col("nj"), col("rj"), col("nn"),
-          col("tc"),
-          // per-group R²/n ε-rounds into an exact decimal so the k-term
-          // sum is order-free (R² sits near 1e18 at sf0.1 — a raw
-          // double sum would be aggregation-order-dependent)
-          eround(col("rj") * col("rj") / col("nj"), 4)
-            .cast("decimal(38,4)").as("rr"))
-      val stat = h.agg(max(col("nn")).as("nn"), max(col("tc")).as("tc"),
-          sum(col("rr")).as("srr"), count(lit(1)).as("k"))
-        .select(col("k"), col("nn"),
-          // nn→double BEFORE cubing: int64 nn³ wraps past ~2.1M events
-          // where DuckDB errors; doubles are identical IEEE on both
-          // engines and exact below 2^53 (ADVICE r13)
-          eround((lit(12.0) * col("srr").cast("double")
-            / (col("nn").cast("double")
-              * (col("nn").cast("double") + 1.0))
-            - lit(3.0) * (col("nn").cast("double") + 1.0))
-            / (lit(1.0) - col("tc").cast("double")
-              / (col("nn").cast("double") * col("nn").cast("double")
-                * col("nn").cast("double")
-                - col("nn").cast("double"))), 6).as("h_adj"))
-      rj.crossJoin(broadcast(stat))
+      rj.crossJoin(broadcast(kwStat(rj, perC)))
         .select(col("event_type"), col("nj").as("n"),
           col("rj").as("rank_sum"),
           eround(col("rj") / col("nj"), 6).as("mean_rank"),
@@ -1068,12 +1067,11 @@ object Aggregates {
     // (q_agg_ttest, q_agg_anova) should itself be gated on. The key
     // parity move: deviations are computed at DOUBLED scale, z = |2c −
     // 2·median|, which is a pure INTEGER because the median of integer
-    // cents is an integer or an exact half — so the whole test reduces
-    // to the exact-integer-moment one-way ANOVA recipe (q_agg_anova) on
-    // z with zero float subtraction anywhere. F(4, ∞, α=.05) = 2.372 is
-    // a public-table literal; decided on the ROUNDED F.
+    // cents is an integer or an exact half — so the whole test is
+    // [[anovaF]] on z with zero float subtraction anywhere.
+    // F(4, ∞, α=.05) = 2.372 is a public-table literal; decided on the
+    // ROUNDED F.
     "q_agg_levene" -> { (s, d) =>
-      val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
       val cust = Tables.customer(s, d)
         .select(col("c_mktsegment").as("seg"),
           round(col("c_acctbal") * 100).cast("long").as("c"))
@@ -1081,29 +1079,7 @@ object Aggregates {
         .agg(round(median(col("c")) * 2).cast("long").as("med2"))
       val z = cust.join(broadcast(med), "seg")
         .select(col("seg"), abs(col("c") * 2 - col("med2")).as("z"))
-      val st = z.groupBy(col("seg"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("z").cast(dec38)).as("sc"),
-          sum((col("z") * col("z")).cast(dec38)).as("qc"))
-      val tot = st.agg(sum(col("n")).as("nn"), sum(col("sc")).as("ss"),
-        count(lit(1)).as("k"))
-      val grand = col("ss").cast("double") / col("nn") / 100.0
-      val meanI = col("sc").cast("double") / col("n") / 100.0
-      val termB = eround(col("n") * (meanI - grand) * (meanI - grand), 6)
-        .cast("decimal(28,6)")
-      val termW = eround((col("qc").cast("double")
-        - col("sc").cast("double") * col("sc").cast("double") / col("n"))
-        / 10000.0, 6).cast("decimal(28,6)")
-      st.crossJoin(broadcast(tot))
-        .select(col("k"), col("nn"), termB.as("tb"), termW.as("tw"))
-        .groupBy(col("k"), col("nn"))
-        .agg(sum(col("tb")).cast("double").as("ssb"),
-          sum(col("tw")).cast("double").as("ssw"))
-        .select(col("k"), col("nn").as("n"),
-          eround(col("ssb"), 4).as("ss_between"),
-          eround(col("ssw"), 4).as("ss_within"),
-          eround((col("ssb") / (col("k") - 1)) /
-            (col("ssw") / (col("nn") - col("k"))), 6).as("f_stat"))
+      anovaF(z.transform(centsMoments(col("seg"), "z")))
         .withColumn("heteroscedastic", col("f_stat") > 2.372)
     },
 
@@ -1214,24 +1190,20 @@ object Aggregates {
         .orderBy(col("l_returnflag"))
     },
 
-    // Bartlett's test (r13) — the PARAMETRIC variance-homogeneity
+    // Bartlett's test — the PARAMETRIC variance-homogeneity
     // companion to q_agg_levene (Bartlett is more powerful under
     // normality, Levene robust without it; shipping both is the
     // standard pairing): χ² = [(N−k)·ln(Sp²) − Σ(nᵢ−1)·ln(Sᵢ²)]/C over
-    // market segments. Every Sᵢ² derives from exact integer cents
-    // moments (nᵢqᵢ − sᵢ² lifts, the ANOVA recipe), each ln cell and
+    // market segments. Every Sᵢ² derives from [[centsMoments]]
+    // (nᵢqᵢ − sᵢ² lifts), each ln cell and
     // reciprocal ε-rounds onto a decimal grid before the k-term sums
     // (order-free — the spectral-entropy ln-cell discipline), and
     // χ²crit(4,.05) = 9.488 decides on the rounded statistic.
     "q_agg_bartlett" -> { (s, d) =>
-      val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
       val cust = Tables.customer(s, d)
         .select(col("c_mktsegment").as("seg"),
           round(col("c_acctbal") * 100).cast("long").as("c"))
-      val st = cust.groupBy(col("seg"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("c").cast(dec38)).as("sc"),
-          sum((col("c") * col("c")).cast(dec38)).as("qc"))
+      val st = cust.transform(centsMoments(col("seg")))
       val nD = col("n").cast("double")
       val s2 = (nD * col("qc").cast("double")
         - col("sc").cast("double") * col("sc").cast("double")) /
@@ -1262,17 +1234,13 @@ object Aggregates {
     // range correction that plain pairwise t-tests lack (family-wise
     // error). q_crit(k=5, df→∞, α=.05) = 3.858 is a public-table
     // LITERAL (no CDF at runtime; the fixture's df is ~corpus-sized, so
-    // the ∞-df row is the right one). Moments are the exact ANOVA
-    // integers: MSW from Σ(qc − sc²/n)/(N−k), per-pair q = |Δmean| /
+    // the ∞-df row is the right one). Moments are [[centsMoments]]:
+    // MSW from Σ(qc − sc²/n)/(N−k), per-pair q = |Δmean| /
     // sqrt(MSW/2·(1/na+1/nb)); significance decided on the ROUNDED q.
     "q_agg_tukey_hsd" -> { (s, d) =>
-      val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
       val st = Tables.events(s, d)
         .withColumn("c", round(col("value") * 100).cast("long"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("c").cast(dec38)).as("sc"),
-          sum((col("c") * col("c")).cast(dec38)).as("qc"))
+        .transform(centsMoments(col("event_type")))
       val termW = eround((col("qc").cast("double")
         - col("sc").cast("double") * col("sc").cast("double") / col("n"))
         / 10000.0, 6).cast("decimal(28,6)")
@@ -1304,19 +1272,14 @@ object Aggregates {
     // the companion number every A/B readout ships beside the t-test:
     // the t-stat says "is the difference real", d says "is it big
     // enough to matter" (0.2 small / 0.5 medium / 0.8 large). Exact
-    // integer-cents moments (the q_agg_ttest DECIMAL machinery); the
-    // only libm is the single pooled-SD sqrt feeding three 6dp outputs
-    // (the r11 single-scalar audit class, flip exposure ~1e-9). One
-    // corpus scan to a 2-row frame; constant arithmetic after.
+    // [[centsMoments]]; the only libm is the single pooled-SD sqrt
+    // feeding three 6dp outputs (flip exposure ~1e-9). One corpus scan
+    // to a 2-row frame; constant arithmetic after.
     "q_agg_cohens_d" -> { (s, d) =>
-      val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
       val st = Tables.events(s, d)
         .filter(col("event_type").isin("click", "purchase"))
         .withColumn("c", round(col("value") * 100).cast("long"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("c").cast(dec38)).as("sc"),
-          sum((col("c") * col("c")).cast(dec38)).as("qc"))
+        .transform(centsMoments(col("event_type")))
       val a = st.filter(col("event_type") === "click")
         .select(col("n").as("n_click"), col("sc").as("sc_a"),
           col("qc").as("qc_a"))
@@ -1616,27 +1579,14 @@ object Aggregates {
             .as("tau_b"))
     },
 
-    // Cramér's V — the [0,1]-normalized effect size of the chi²
-    // contingency walk (q_agg_chi2's twin; same exact decimal cell sum),
-    // the number that stays comparable across table shapes and corpus
-    // sizes where raw chi² grows with n. V = sqrt(chi² / (n·min(r−1,
-    // c−1))) from the UN-rounded decimal chi² so both engines take the
-    // identical sqrt argument. Same one-scan partial-agg shape as chi2.
+    // Cramér's V — the [0,1]-normalized effect size of q_agg_chi2's
+    // [[contingency]] walk, the number that stays comparable across table
+    // shapes and corpus sizes where raw chi² grows with n. V = sqrt(chi² /
+    // (n·min(r−1, c−1))) from the UN-rounded decimal chi² so both engines
+    // take the identical sqrt argument.
     "q_agg_cramers_v" -> { (s, d) =>
-      val obs = Tables.events(s, d)
-        .select(col("event_type"), pmod(col("user_id"), lit(4)).as("cohort"))
-        .groupBy(col("event_type"), col("cohort"))
-        .agg(count(lit(1)).as("o"))
-      val rt = obs.groupBy(col("event_type")).agg(sum(col("o")).as("rt"))
-      val ct = obs.groupBy(col("cohort")).agg(sum(col("o")).as("ct"))
-      val n = obs.agg(sum(col("o")).as("n"))
-      obs.join(broadcast(rt), Seq("event_type"))
-        .join(broadcast(ct), Seq("cohort"))
-        .crossJoin(broadcast(n))
-        .withColumn("e", col("rt").cast("double") * col("ct") / col("n"))
-        .withColumn("cell",
-          eround((col("o") - col("e")) * (col("o") - col("e")) / col("e"),
-            9).cast("decimal(18,9)"))
+      contingency(s, d)
+        .withColumn("cell", chi2Cell)
         .groupBy(col("n"))
         .agg(countDistinct(col("event_type")).as("r"),
           countDistinct(col("cohort")).as("c"),
@@ -1649,40 +1599,13 @@ object Aggregates {
     },
 
     // One-way ANOVA F across all five event types — does value differ by
-    // type at all, the k-group gate run before pairwise t-tests. Per-type
-    // moments are exact integers (the q_agg_ttest recipe); each group's
-    // between/within term is the identical double expression ε-rounded
-    // to DECIMAL(28,6) so the k-term sums are exact and order-free (the
-    // chi² cell recipe — 28,6 because qc/10⁴ reaches ~5e8 at fixture
-    // scale and grows with n). One partial-agg scan to a k-row frame;
-    // the corpus is never shuffled.
+    // type at all, the k-group gate run before pairwise t-tests:
+    // [[anovaF]] over [[centsMoments]]. One partial-agg scan to a k-row
+    // frame; the corpus is never shuffled.
     "q_agg_anova" -> { (s, d) =>
-      val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
-      val st = Tables.events(s, d)
+      anovaF(Tables.events(s, d)
         .withColumn("c", round(col("value") * 100).cast("long"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("c").cast(dec38)).as("sc"),
-          sum((col("c") * col("c")).cast(dec38)).as("qc"))
-      val tot = st.agg(sum(col("n")).as("nn"), sum(col("sc")).as("ss"),
-        count(lit(1)).as("k"))
-      val grand = col("ss").cast("double") / col("nn") / 100.0
-      val meanI = col("sc").cast("double") / col("n") / 100.0
-      val termB = eround(col("n") * (meanI - grand) * (meanI - grand), 6)
-        .cast("decimal(28,6)")
-      val termW = eround((col("qc").cast("double")
-        - col("sc").cast("double") * col("sc").cast("double") / col("n"))
-        / 10000.0, 6).cast("decimal(28,6)")
-      st.crossJoin(broadcast(tot))
-        .select(col("k"), col("nn"), termB.as("tb"), termW.as("tw"))
-        .groupBy(col("k"), col("nn"))
-        .agg(sum(col("tb")).cast("double").as("ssb"),
-          sum(col("tw")).cast("double").as("ssw"))
-        .select(col("k"), col("nn").as("n"),
-          eround(col("ssb"), 4).as("ss_between"),
-          eround(col("ssw"), 4).as("ss_within"),
-          eround((col("ssb") / (col("k") - 1)) /
-            (col("ssw") / (col("nn") - col("k"))), 6).as("f_stat"))
+        .transform(centsMoments(col("event_type"))))
     },
 
     // Population Stability Index between the even- and odd-event_id
@@ -2684,6 +2607,121 @@ object Aggregates {
         sql("GROUPING SETS ((r_name, n_name), (r_name), ())"))
   }
 
+  /** The DuckDB twin of [[contingency]]: the CTEs `obs`, `rt`, `ct`,
+    * `nn` and `cells` `(event_type, cohort, o, n, e)`. One line, to
+    * interpolate after a `WITH`.
+    */
+  private val oContingency: String =
+    """obs AS (SELECT event_type, user_id % 4 AS cohort,
+      |   CAST(count(*) AS BIGINT) AS o
+      |  FROM events GROUP BY event_type, cohort),
+      | rt AS (SELECT event_type, CAST(sum(o) AS BIGINT) AS rt
+      |  FROM obs GROUP BY event_type),
+      | ct AS (SELECT cohort, CAST(sum(o) AS BIGINT) AS ct
+      |  FROM obs GROUP BY cohort),
+      | nn AS (SELECT CAST(sum(o) AS BIGINT) AS n FROM obs),
+      | cells AS (SELECT obs.event_type, obs.cohort, obs.o, nn.n,
+      |   CAST(rt.rt AS DOUBLE) * ct.ct / nn.n AS e
+      |  FROM obs JOIN rt USING (event_type) JOIN ct USING (cohort), nn)"""
+      .stripMargin.replaceAll("\n", " ")
+
+  /** The DuckDB twin of [[qtyPowerSums]] and the `mom*` moments: the
+    * CTEs `m` (power sums), `t` (raw moments) and `u`
+    * `(l_returnflag, n, mean, m2, m3, m4)`. One line, to interpolate
+    * after a `WITH`.
+    */
+  private val oQtyMoments: String =
+    """m AS (SELECT l_returnflag,
+      |  CAST(count(*) AS DOUBLE) AS n,
+      |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS s1,
+      |  CAST(sum(CAST(l_quantity*l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS s2,
+      |  CAST(sum(CAST(l_quantity*l_quantity*l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS s3,
+      |  CAST(sum(CAST(l_quantity*l_quantity*l_quantity*l_quantity AS DECIMAL(18,8))) AS DOUBLE) AS s4
+      |  FROM lineitem GROUP BY l_returnflag),
+      | t AS (SELECT l_returnflag, n, s1/n AS mean,
+      |  s2/n AS r2, s3/n AS r3, s4/n AS r4 FROM m),
+      | u AS (SELECT l_returnflag, n, mean,
+      |  r2 - mean*mean AS m2,
+      |  r3 - 3*mean*r2 + 2*mean*mean*mean AS m3,
+      |  r4 - 4*mean*r3 + 6*mean*mean*r2 - 3*mean*mean*mean*mean AS m4
+      |  FROM t)""".stripMargin.replaceAll("\n", " ")
+
+  /** The cents-domain cells of the rank tests: the CTEs `ev`, `cells`
+    * `(event_type, c, n)` and `perc` `(c, kc)`, kc the events at cents
+    * value c. One line, to interpolate after a `WITH`.
+    */
+  private val oCentsCells: String =
+    """ev AS (SELECT event_type,
+      |   CAST(round(value * 100) AS BIGINT) AS c FROM events),
+      | cells AS (SELECT event_type, c, CAST(count(*) AS BIGINT) AS n
+      |  FROM ev GROUP BY event_type, c),
+      | perc AS (SELECT c, CAST(sum(n) AS BIGINT) AS kc
+      |  FROM cells GROUP BY c)""".stripMargin.replaceAll("\n", " ")
+
+  /** The DuckDB twin of [[kwStat]] over the CTEs `perc` and `rj`
+    * `(nj, rj)`: `ties`, `h` and `stat` `(nn, tc, k, h_adj)`. One line,
+    * to interpolate into a `WITH` list.
+    */
+  private val oKwStat: String =
+    """ties AS (SELECT sum(CAST(kc AS HUGEINT) * kc * kc - kc) AS tc,
+      |   CAST(sum(kc) AS BIGINT) AS nn FROM perc),
+      | h AS (SELECT nj, rj, nn, tc,
+      |   CAST(round(rj * rj / nj + 5e-10, 4) AS DECIMAL(38,4)) AS rr
+      |  FROM rj, ties),
+      | stat AS (SELECT CAST(max(nn) AS BIGINT) AS nn,
+      |   max(tc) AS tc,
+      |   CAST(count(*) AS BIGINT) AS k,
+      |   round((12.0 * CAST(sum(rr) AS DOUBLE)
+      |      / (CAST(max(nn) AS DOUBLE) * (CAST(max(nn) AS DOUBLE) + 1.0))
+      |     - 3.0 * (CAST(max(nn) AS DOUBLE) + 1.0))
+      |    / (1.0 - CAST(max(tc) AS DOUBLE)
+      |      / (CAST(max(nn) AS DOUBLE) * CAST(max(nn) AS DOUBLE)
+      |         * CAST(max(nn) AS DOUBLE) - CAST(max(nn) AS DOUBLE)))
+      |    + 5e-10, 6) AS h_adj
+      |  FROM h)""".stripMargin.replaceAll("\n", " ")
+
+  /** An event's value in integer cents, the DuckDB spelling. */
+  private val oCents = "CAST(round(value * 100) AS BIGINT)"
+  private val oClickPurchase =
+    "events WHERE event_type IN ('click', 'purchase')"
+
+  /** The DuckDB twin of [[centsMoments]]: the CTE `st` `(key, n, sc, qc)`
+    * of the BIGINT expression `v` over `from` (a table, or a table and
+    * its WHERE clause), sc in HUGEINT.
+    */
+  private def oCentsMoments(key: String, v: String, from: String): String =
+    s"""st AS (SELECT $key, CAST(count(*) AS BIGINT) AS n,
+       |   sum(CAST($v AS HUGEINT)) AS sc, sum($v * $v) AS qc
+       |  FROM $from GROUP BY $key)""".stripMargin.replaceAll("\n", " ")
+
+  /** The DuckDB twin of [[anovaF]] over the CTE `st`: `tot`, `terms`,
+    * `agg` and `res` `(k, n, ss_between, ss_within, f_stat)`. One line,
+    * to interpolate into a `WITH` list.
+    */
+  private val oAnovaF: String =
+    """tot AS (SELECT CAST(sum(n) AS BIGINT) AS nn,
+      |   CAST(sum(sc) AS HUGEINT) AS ss,
+      |   CAST(count(*) AS BIGINT) AS k FROM st),
+      | terms AS (SELECT k, nn,
+      |   CAST(round(n * (CAST(sc AS DOUBLE) / n / 100.0
+      |      - CAST(ss AS DOUBLE) / nn / 100.0)
+      |     * (CAST(sc AS DOUBLE) / n / 100.0
+      |      - CAST(ss AS DOUBLE) / nn / 100.0) + 5e-10, 6)
+      |    AS DECIMAL(28,6)) AS tb,
+      |   CAST(round((CAST(qc AS DOUBLE) - CAST(sc AS DOUBLE)
+      |      * CAST(sc AS DOUBLE) / n) / 10000.0 + 5e-10, 6)
+      |    AS DECIMAL(28,6)) AS tw
+      |  FROM st, tot),
+      | agg AS (SELECT k, nn, CAST(sum(tb) AS DOUBLE) AS ssb,
+      |   CAST(sum(tw) AS DOUBLE) AS ssw
+      |  FROM terms GROUP BY k, nn),
+      | res AS (SELECT k, nn AS n,
+      |   round(ssb + 5e-10, 4) AS ss_between,
+      |   round(ssw + 5e-10, 4) AS ss_within,
+      |   round((ssb / (k - 1)) / (ssw / (nn - k)) + 5e-10, 6)
+      |     AS f_stat
+      |  FROM agg)""".stripMargin.replaceAll("\n", " ")
+
   val oracle: Map[String, String] = Map(
     "q_agg_entropy_cat" ->
       """WITH c AS (SELECT o_orderstatus, o_orderpriority,
@@ -2819,20 +2857,7 @@ object Aggregates {
         .stripMargin.replaceAll("\n", " "),
 
     "q_agg_skewkurt" ->
-      """WITH m AS (SELECT l_returnflag,
-        |  CAST(count(*) AS DOUBLE) AS n,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS s1,
-        |  CAST(sum(CAST(l_quantity*l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS s2,
-        |  CAST(sum(CAST(l_quantity*l_quantity*l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS s3,
-        |  CAST(sum(CAST(l_quantity*l_quantity*l_quantity*l_quantity AS DECIMAL(18,8))) AS DOUBLE) AS s4
-        |  FROM lineitem GROUP BY l_returnflag),
-        | t AS (SELECT l_returnflag, n, s1/n AS mean,
-        |  s2/n AS r2, s3/n AS r3, s4/n AS r4 FROM m),
-        | u AS (SELECT l_returnflag, n, mean,
-        |  r2 - mean*mean AS m2,
-        |  r3 - 3*mean*r2 + 2*mean*mean*mean AS m3,
-        |  r4 - 4*mean*r3 + 6*mean*mean*r2 - 3*mean*mean*mean*mean AS m4
-        |  FROM t)
+      s"""WITH $oQtyMoments
         | SELECT l_returnflag, CAST(n AS BIGINT) AS n,
         |  round(mean + 5e-10, 4) AS mean_qty,
         |  round(m3/sqrt(m2*m2*m2) + 5e-10, 6) AS skew_qty,
@@ -2840,23 +2865,10 @@ object Aggregates {
         | FROM u ORDER BY l_returnflag"""
         .stripMargin.replaceAll("\n", " "),
 
-    // Same exact power sums and moment chains as skewkurt; S and K are
-    // carried unrounded into the identical JB expression tree.
+    // S and K are carried unrounded into the identical JB expression
+    // tree.
     "q_agg_jarque_bera" ->
-      """WITH m AS (SELECT l_returnflag,
-        |  CAST(count(*) AS DOUBLE) AS n,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS s1,
-        |  CAST(sum(CAST(l_quantity*l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS s2,
-        |  CAST(sum(CAST(l_quantity*l_quantity*l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS s3,
-        |  CAST(sum(CAST(l_quantity*l_quantity*l_quantity*l_quantity AS DECIMAL(18,8))) AS DOUBLE) AS s4
-        |  FROM lineitem GROUP BY l_returnflag),
-        | t AS (SELECT l_returnflag, n, s1/n AS mean,
-        |  s2/n AS r2, s3/n AS r3, s4/n AS r4 FROM m),
-        | u AS (SELECT l_returnflag, n, mean,
-        |  r2 - mean*mean AS m2,
-        |  r3 - 3*mean*r2 + 2*mean*mean*mean AS m3,
-        |  r4 - 4*mean*r3 + 6*mean*mean*r2 - 3*mean*mean*mean*mean AS m4
-        |  FROM t),
+      s"""WITH $oQtyMoments,
         | v AS (SELECT l_returnflag, n,
         |  m3/sqrt(m2*m2*m2) AS sk, m4/(m2*m2) - 3 AS ku FROM u),
         | res AS (SELECT l_returnflag, CAST(n AS BIGINT) AS n,
@@ -2952,16 +2964,7 @@ object Aggregates {
     // Mirrors the Spark cell expression 1:1; per-cell ε-round to
     // DECIMAL(18,9) keeps the sum exact and order-free.
     "q_agg_chi2" ->
-      """WITH obs AS (SELECT event_type, user_id % 4 AS cohort,
-        |   count(*) AS o FROM events GROUP BY 1, 2),
-        | rt AS (SELECT event_type, CAST(sum(o) AS BIGINT) AS rt
-        |  FROM obs GROUP BY 1),
-        | ct AS (SELECT cohort, CAST(sum(o) AS BIGINT) AS ct
-        |  FROM obs GROUP BY 1),
-        | nn AS (SELECT CAST(sum(o) AS BIGINT) AS n FROM obs),
-        | cells AS (SELECT obs.event_type, obs.cohort, obs.o,
-        |   CAST(rt.rt AS DOUBLE) * ct.ct / nn.n AS e
-        |  FROM obs JOIN rt USING (event_type) JOIN ct USING (cohort), nn)
+      s"""WITH $oContingency
         | SELECT count(*) AS n_cells,
         |  (count(DISTINCT event_type) - 1) * (count(DISTINCT cohort) - 1)
         |    AS dof,
@@ -2970,18 +2973,9 @@ object Aggregates {
         | FROM cells"""
         .stripMargin.replaceAll("\n", " "),
 
-    // Same contingency margins; ln cells on the 9dp decimal grid.
+    // Ln cells on the 9dp decimal grid.
     "q_agg_gtest" ->
-      """WITH obs AS (SELECT event_type, user_id % 4 AS cohort,
-        |   count(*) AS o FROM events GROUP BY 1, 2),
-        | rt AS (SELECT event_type, CAST(sum(o) AS BIGINT) AS rt
-        |  FROM obs GROUP BY 1),
-        | ct AS (SELECT cohort, CAST(sum(o) AS BIGINT) AS ct
-        |  FROM obs GROUP BY 1),
-        | nn AS (SELECT CAST(sum(o) AS BIGINT) AS n FROM obs),
-        | cells AS (SELECT obs.event_type, obs.cohort, obs.o,
-        |   CAST(rt.rt AS DOUBLE) * ct.ct / nn.n AS e
-        |  FROM obs JOIN rt USING (event_type) JOIN ct USING (cohort), nn),
+      s"""WITH $oContingency,
         | res AS (SELECT count(*) AS n_cells,
         |  (count(DISTINCT event_type) - 1) * (count(DISTINCT cohort) - 1)
         |    AS dof,
@@ -2998,12 +2992,7 @@ object Aggregates {
     // Same cents-domain rank frame, integer-doubled rank sums, HUGEINT
     // quarter-grid rank squares, KW H chain, identical t chains.
     "q_agg_conover" ->
-      """WITH ev AS (SELECT event_type,
-        |   CAST(round(value * 100) AS BIGINT) AS c FROM events),
-        | cells AS (SELECT event_type, c, CAST(count(*) AS BIGINT) AS n
-        |  FROM ev GROUP BY event_type, c),
-        | perc AS (SELECT c, CAST(sum(n) AS BIGINT) AS kc
-        |  FROM cells GROUP BY c),
+      s"""WITH $oCentsCells,
         | ranks AS (SELECT c, kc,
         |   COALESCE(sum(kc) OVER (ORDER BY c
         |     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cb
@@ -3017,24 +3006,11 @@ object Aggregates {
         |   CAST(sum(cells.n * r.ar2) AS BIGINT) AS rj2,
         |   sum(cells.n * r.ar) AS rj
         |  FROM cells JOIN ranks2 r USING (c) GROUP BY cells.event_type),
-        | ties AS (SELECT sum(CAST(kc AS HUGEINT) * kc * kc - kc) AS tc,
-        |   CAST(sum(kc) AS BIGINT) AS nn FROM perc),
+
         | q4t AS (SELECT sum(CAST(kc AS HUGEINT)
         |    * (CAST(ar2 AS HUGEINT) * CAST(ar2 AS HUGEINT))) AS q4
         |  FROM ranks2),
-        | h AS (SELECT nj, rj, nn, tc,
-        |   CAST(round(rj * rj / nj + 5e-10, 4) AS DECIMAL(38,4)) AS rr
-        |  FROM rj, ties),
-        | stat AS (SELECT CAST(max(nn) AS BIGINT) AS nn,
-        |   CAST(count(*) AS BIGINT) AS k,
-        |   round((12.0 * CAST(sum(rr) AS DOUBLE)
-        |      / (CAST(max(nn) AS DOUBLE) * (CAST(max(nn) AS DOUBLE) + 1.0))
-        |     - 3.0 * (CAST(max(nn) AS DOUBLE) + 1.0))
-        |    / (1.0 - CAST(max(tc) AS DOUBLE)
-        |      / (CAST(max(nn) AS DOUBLE) * CAST(max(nn) AS DOUBLE)
-        |         * CAST(max(nn) AS DOUBLE) - CAST(max(nn) AS DOUBLE)))
-        |    + 5e-10, 6) AS h_adj
-        |  FROM h),
+        | $oKwStat,
         | f AS (SELECT a.event_type AS type_a, b.event_type AS type_b,
         |   a.nj AS n_a, b.nj AS n_b, a.rj2 AS rj2_a, b.rj2 AS rj2_b,
         |   stat.nn, stat.k, stat.h_adj, q4t.q4
@@ -3064,12 +3040,7 @@ object Aggregates {
     // exact integer moments through the identical op sequence (division
     // order matters and is copied exactly).
     "q_agg_ttest" ->
-      """WITH st AS (SELECT event_type, count(*) AS n,
-        |   sum(CAST(CAST(round(value * 100) AS BIGINT) AS HUGEINT))
-        |     AS sc,
-        |   sum(CAST(round(value * 100) AS BIGINT)
-        |     * CAST(round(value * 100) AS BIGINT)) AS qc
-        |  FROM events GROUP BY event_type)
+      s"""WITH ${oCentsMoments("event_type", oCents, "events")}
         | SELECT a.event_type AS type_a, b.event_type AS type_b,
         |  a.n AS n_a, b.n AS n_b,
         |  round(CAST(a.sc AS DOUBLE) / a.n / 100.0 + 5e-10, 6) AS mean_a,
@@ -3358,12 +3329,7 @@ object Aggregates {
     // Same cents-domain average ranks, half-exact rank sums, decimal
     // R²/n cells, int64 tie correction, identical division chain.
     "q_agg_kruskal_wallis" ->
-      """WITH ev AS (SELECT event_type,
-        |   CAST(round(value * 100) AS BIGINT) AS c FROM events),
-        | cells AS (SELECT event_type, c, CAST(count(*) AS BIGINT) AS n
-        |  FROM ev GROUP BY event_type, c),
-        | perc AS (SELECT c, CAST(sum(n) AS BIGINT) AS kc
-        |  FROM cells GROUP BY c),
+      s"""WITH $oCentsCells,
         | ranks AS (SELECT c, kc,
         |   COALESCE(sum(kc) OVER (ORDER BY c
         |     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
@@ -3373,22 +3339,8 @@ object Aggregates {
         |   CAST(sum(cells.n) AS BIGINT) AS nj,
         |   sum(cells.n * ranks.ar) AS rj
         |  FROM cells JOIN ranks USING (c) GROUP BY cells.event_type),
-        | ties AS (SELECT sum(CAST(kc AS HUGEINT) * kc * kc - kc) AS tc,
-        |   CAST(sum(kc) AS BIGINT) AS nn FROM perc),
-        | h AS (SELECT event_type, nj, rj, nn, tc,
-        |   CAST(round(rj * rj / nj + 5e-10, 4) AS DECIMAL(38,4)) AS rr
-        |  FROM rj, ties),
-        | stat AS (SELECT CAST(max(nn) AS BIGINT) AS nn,
-        |   max(tc) AS tc,
-        |   CAST(count(*) AS BIGINT) AS k,
-        |   round((12.0 * CAST(sum(rr) AS DOUBLE)
-        |      / (CAST(max(nn) AS DOUBLE) * (CAST(max(nn) AS DOUBLE) + 1.0))
-        |     - 3.0 * (CAST(max(nn) AS DOUBLE) + 1.0))
-        |    / (1.0 - CAST(max(tc) AS DOUBLE)
-        |      / (CAST(max(nn) AS DOUBLE) * CAST(max(nn) AS DOUBLE)
-        |         * CAST(max(nn) AS DOUBLE) - CAST(max(nn) AS DOUBLE)))
-        |    + 5e-10, 6) AS h_adj
-        |  FROM h)
+
+        | $oKwStat
         | SELECT rj.event_type, rj.nj AS n, rj.rj AS rank_sum,
         |  round(rj.rj / rj.nj + 5e-10, 6) AS mean_rank,
         |  stat.k, stat.h_adj, stat.h_adj > 9.488 AS significant
@@ -3523,11 +3475,9 @@ object Aggregates {
     // Same exact cents moments, CTE-shared S_i^2 expression, 6dp ln
     // cells, decimal term sums, identical correction-factor chain.
     "q_agg_bartlett" ->
-      """WITH cust AS (SELECT c_mktsegment AS seg,
+      s"""WITH cust AS (SELECT c_mktsegment AS seg,
         |   CAST(round(c_acctbal * 100) AS BIGINT) AS c FROM customer),
-        | st AS (SELECT seg, CAST(count(*) AS BIGINT) AS n,
-        |   sum(CAST(c AS HUGEINT)) AS sc, sum(c * c) AS qc
-        |  FROM cust GROUP BY seg),
+        | ${oCentsMoments("seg", "c", "cust")},
         | s2t AS (SELECT n,
         |   (CAST(n AS DOUBLE) * CAST(qc AS DOUBLE)
         |     - CAST(sc AS DOUBLE) * CAST(sc AS DOUBLE))
@@ -3559,37 +3509,14 @@ object Aggregates {
     // Median-centered integer deviations at doubled scale (exact), then
     // the ANOVA exact-moment oracle verbatim; F vs the 2.372 literal.
     "q_agg_levene" ->
-      """WITH cust AS (SELECT c_mktsegment AS seg,
+      s"""WITH cust AS (SELECT c_mktsegment AS seg,
         |   CAST(round(c_acctbal * 100) AS BIGINT) AS c FROM customer),
         | med AS (SELECT seg, CAST(round(median(c) * 2) AS BIGINT)
         |    AS med2 FROM cust GROUP BY seg),
         | z AS (SELECT cust.seg, abs(cust.c * 2 - med.med2) AS z
         |  FROM cust JOIN med ON cust.seg = med.seg),
-        | st AS (SELECT seg, CAST(count(*) AS BIGINT) AS n,
-        |   sum(CAST(z AS HUGEINT)) AS sc, sum(z * z) AS qc
-        |  FROM z GROUP BY seg),
-        | tot AS (SELECT CAST(sum(n) AS BIGINT) AS nn,
-        |   CAST(sum(sc) AS HUGEINT) AS ss,
-        |   CAST(count(*) AS BIGINT) AS k FROM st),
-        | terms AS (SELECT k, nn,
-        |   CAST(round(n * (CAST(sc AS DOUBLE) / n / 100.0
-        |      - CAST(ss AS DOUBLE) / nn / 100.0)
-        |     * (CAST(sc AS DOUBLE) / n / 100.0
-        |      - CAST(ss AS DOUBLE) / nn / 100.0) + 5e-10, 6)
-        |    AS DECIMAL(28,6)) AS tb,
-        |   CAST(round((CAST(qc AS DOUBLE) - CAST(sc AS DOUBLE)
-        |      * CAST(sc AS DOUBLE) / n) / 10000.0 + 5e-10, 6)
-        |    AS DECIMAL(28,6)) AS tw
-        |  FROM st, tot),
-        | agg AS (SELECT k, nn, CAST(sum(tb) AS DOUBLE) AS ssb,
-        |   CAST(sum(tw) AS DOUBLE) AS ssw
-        |  FROM terms GROUP BY k, nn),
-        | res AS (SELECT k, nn AS n,
-        |   round(ssb + 5e-10, 4) AS ss_between,
-        |   round(ssw + 5e-10, 4) AS ss_within,
-        |   round((ssb / (k - 1)) / (ssw / (nn - k)) + 5e-10, 6)
-        |     AS f_stat
-        |  FROM agg)
+        | ${oCentsMoments("seg", "z", "z")},
+        | $oAnovaF
         | SELECT k, n, ss_between, ss_within, f_stat,
         |  f_stat > 2.372 AS heteroscedastic
         | FROM res"""
@@ -3598,12 +3525,7 @@ object Aggregates {
     // Same ANOVA integer moments; q vs the 3.858 literal on the
     // rounded statistic.
     "q_agg_tukey_hsd" ->
-      """WITH st AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |   sum(CAST(CAST(round(value * 100) AS BIGINT) AS HUGEINT))
-        |     AS sc,
-        |   sum(CAST(round(value * 100) AS BIGINT)
-        |     * CAST(round(value * 100) AS BIGINT)) AS qc
-        |  FROM events GROUP BY event_type),
+      s"""WITH ${oCentsMoments("event_type", oCents, "events")},
         | tw AS (SELECT n,
         |   CAST(round((CAST(qc AS DOUBLE) - CAST(sc AS DOUBLE)
         |      * CAST(sc AS DOUBLE) / n) / 10000.0 + 5e-10, 6)
@@ -3629,13 +3551,7 @@ object Aggregates {
     // Same exact integer moments as the ttest oracle; the single
     // pooled-SD sqrt is the only libm, mirrored op-for-op.
     "q_agg_cohens_d" ->
-      """WITH st AS (SELECT event_type, count(*) AS n,
-        |   sum(CAST(CAST(round(value * 100) AS BIGINT) AS HUGEINT))
-        |     AS sc,
-        |   sum(CAST(round(value * 100) AS BIGINT)
-        |     * CAST(round(value * 100) AS BIGINT)) AS qc
-        |  FROM events WHERE event_type IN ('click', 'purchase')
-        |  GROUP BY event_type),
+      s"""WITH ${oCentsMoments("event_type", oCents, oClickPurchase)},
         | a AS (SELECT n AS n_click, sc AS sc_a, qc AS qc_a FROM st
         |  WHERE event_type = 'click'),
         | b AS (SELECT n AS n_purchase, sc AS sc_b, qc AS qc_b FROM st
@@ -3854,20 +3770,10 @@ object Aggregates {
         | FROM tot, tx, ty"""
         .stripMargin.replaceAll("\n", " "),
 
-    // Same contingency walk as q_agg_chi2; V takes the sqrt of the
-    // UN-rounded decimal cell sum so both engines share the argument.
+    // V takes the sqrt of the UN-rounded decimal cell sum so both
+    // engines share the argument.
     "q_agg_cramers_v" ->
-      """WITH obs AS (SELECT event_type, user_id % 4 AS cohort,
-        |   CAST(count(*) AS BIGINT) AS o
-        |  FROM events GROUP BY event_type, cohort),
-        | rt AS (SELECT event_type, CAST(sum(o) AS BIGINT) AS rt
-        |  FROM obs GROUP BY event_type),
-        | ct AS (SELECT cohort, CAST(sum(o) AS BIGINT) AS ct
-        |  FROM obs GROUP BY cohort),
-        | nn AS (SELECT CAST(sum(o) AS BIGINT) AS n FROM obs),
-        | cells AS (SELECT obs.event_type, obs.cohort, obs.o, nn.n,
-        |   CAST(rt.rt AS DOUBLE) * ct.ct / nn.n AS e
-        |  FROM obs JOIN rt USING (event_type) JOIN ct USING (cohort), nn),
+      s"""WITH $oContingency,
         | ag AS (SELECT n AS n_obs,
         |   CAST(count(DISTINCT event_type) AS BIGINT) AS r,
         |   CAST(count(DISTINCT cohort) AS BIGINT) AS c,
@@ -3885,33 +3791,9 @@ object Aggregates {
     // the exact k-term sum (the chi² cell recipe); F mirrors the Spark
     // division order.
     "q_agg_anova" ->
-      """WITH st AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |   sum(CAST(CAST(round(value * 100) AS BIGINT) AS HUGEINT))
-        |     AS sc,
-        |   sum(CAST(round(value * 100) AS BIGINT)
-        |     * CAST(round(value * 100) AS BIGINT)) AS qc
-        |  FROM events GROUP BY event_type),
-        | tot AS (SELECT CAST(sum(n) AS BIGINT) AS nn,
-        |   CAST(sum(sc) AS HUGEINT) AS ss,
-        |   CAST(count(*) AS BIGINT) AS k FROM st),
-        | terms AS (SELECT k, nn,
-        |   CAST(round(n * (CAST(sc AS DOUBLE) / n / 100.0
-        |      - CAST(ss AS DOUBLE) / nn / 100.0)
-        |     * (CAST(sc AS DOUBLE) / n / 100.0
-        |      - CAST(ss AS DOUBLE) / nn / 100.0) + 5e-10, 6)
-        |    AS DECIMAL(28,6)) AS tb,
-        |   CAST(round((CAST(qc AS DOUBLE) - CAST(sc AS DOUBLE)
-        |      * CAST(sc AS DOUBLE) / n) / 10000.0 + 5e-10, 6)
-        |    AS DECIMAL(28,6)) AS tw
-        |  FROM st, tot),
-        | ag AS (SELECT k, nn, CAST(sum(tb) AS DOUBLE) AS ssb,
-        |   CAST(sum(tw) AS DOUBLE) AS ssw
-        |  FROM terms GROUP BY k, nn)
-        | SELECT k, nn AS n,
-        |  round(ssb + 5e-10, 4) AS ss_between,
-        |  round(ssw + 5e-10, 4) AS ss_within,
-        |  round((ssb / (k - 1)) / (ssw / (nn - k)) + 5e-10, 6) AS f_stat
-        | FROM ag"""
+      s"""WITH ${oCentsMoments("event_type", oCents, "events")},
+        | $oAnovaF
+        | SELECT k, n, ss_between, ss_within, f_stat FROM res"""
         .stripMargin.replaceAll("\n", " "),
 
     // The Mann–Whitney doubled-rank integers verbatim; AUC and Gini are

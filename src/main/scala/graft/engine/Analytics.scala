@@ -2177,15 +2177,17 @@ object Analytics {
     }
   )
 
-  /** Oracle twin of [[supportEdges]]: the distinct (order, part) pairs
-    * self-join into ordered co-purchase pairs, kept at support ≥ 2.
+  /** Oracle twin of [[supportFrame]]: the distinct (order, part) pairs
+    * `li` self-join into the ordered co-purchase edges `und` (u < v) with
+    * their `support`, kept at support ≥ 2. Opens a `WITH` list.
     */
-  private val oEdges: String =
-    """WITH pp AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-      | e AS (SELECT a.l_partkey AS u, b.l_partkey AS v FROM pp a
-      |  JOIN pp b ON a.l_orderkey = b.l_orderkey
+  private val oSupportEdges: String =
+    """WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+      | und AS (SELECT a.l_partkey AS u, b.l_partkey AS v,
+      |   count(*) AS support
+      |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
       |   AND a.l_partkey < b.l_partkey
-      |  GROUP BY 1, 2 HAVING count(*) >= 2)"""
+      |  GROUP BY u, v HAVING count(*) >= 2)"""
       .stripMargin.replaceAll("\n", " ")
 
   val oracle: Map[String, String] = Map(
@@ -2531,11 +2533,7 @@ object Analytics {
         .stripMargin.replaceAll("\n", " "),
 
     "q_graph_triangles" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        | und AS (SELECT a.l_partkey AS u, b.l_partkey AS v
-        |   FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-        |    AND a.l_partkey < b.l_partkey
-        |   GROUP BY u, v HAVING count(*) >= 2),
+      s"""$oSupportEdges,
         | deg AS (SELECT n, count(*) AS deg FROM
         |   (SELECT u AS n FROM und UNION ALL SELECT v AS n FROM und)
         |   GROUP BY n),
@@ -2651,17 +2649,12 @@ object Analytics {
         .stripMargin.replaceAll("\n", " "),
 
     "q_shape_basket_rules" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+      s"""$oSupportEdges,
         | n AS (SELECT count(DISTINCT l_orderkey) AS n_orders FROM li),
         | it AS (SELECT l_partkey AS item, count(DISTINCT l_orderkey)
         |   AS n_item FROM li GROUP BY l_partkey),
-        | pr AS (SELECT a.l_partkey AS u, b.l_partkey AS v,
-        |   count(*) AS n_ab
-        |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-        |   AND a.l_partkey < b.l_partkey
-        |  GROUP BY u, v HAVING count(*) >= 2),
-        | bo AS (SELECT u AS a, v AS b, n_ab FROM pr
-        |  UNION ALL SELECT v AS a, u AS b, n_ab FROM pr)
+        | bo AS (SELECT u AS a, v AS b, support AS n_ab FROM und
+        |  UNION ALL SELECT v AS a, u AS b, support AS n_ab FROM und)
         | SELECT a, b, n_ab,
         |  round(CAST(n_ab AS DOUBLE) / ia.n_item + 5e-10, 6)
         |   AS confidence,
@@ -2768,11 +2761,7 @@ object Analytics {
         .stripMargin.replaceAll("\n", " "),
 
     "q_graph_jaccard" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        | und AS (SELECT a.l_partkey AS u, b.l_partkey AS v
-        |   FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-        |    AND a.l_partkey < b.l_partkey
-        |   GROUP BY u, v HAVING count(*) >= 2),
+      s"""$oSupportEdges,
         | adj AS (SELECT u AS n, v AS nb FROM und
         |   UNION ALL SELECT v AS n, u AS nb FROM und),
         | deg AS (SELECT n, count(*) AS dg FROM adj GROUP BY n),
@@ -2791,11 +2780,7 @@ object Analytics {
     // orientations as exact integers (HUGEINT products), symmetry
     // Σx = Σy used exactly as the Spark side documents.
     "q_graph_assortativity" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        | und AS (SELECT a.l_partkey AS u, b.l_partkey AS v
-        |   FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-        |    AND a.l_partkey < b.l_partkey
-        |   GROUP BY u, v HAVING count(*) >= 2),
+      s"""$oSupportEdges,
         | adj AS (SELECT u AS node FROM und
         |   UNION ALL SELECT v AS node FROM und),
         | deg AS (SELECT node, CAST(count(*) AS BIGINT) AS dg FROM adj
@@ -2822,11 +2807,7 @@ object Analytics {
     // ln() (natural log — DuckDB's log() is base 10) per common neighbor,
     // ε-rounded to DECIMAL(18,9) before the pair sum like the Spark side.
     "q_graph_adamic_adar" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        | und AS (SELECT a.l_partkey AS u, b.l_partkey AS v
-        |   FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-        |    AND a.l_partkey < b.l_partkey
-        |   GROUP BY u, v HAVING count(*) >= 2),
+      s"""$oSupportEdges,
         | adj AS (SELECT u AS n, v AS nb FROM und
         |   UNION ALL SELECT v AS n, u AS nb FROM und),
         | deg AS (SELECT n, CAST(count(*) AS BIGINT) AS dg FROM adj
@@ -2852,15 +2833,9 @@ object Analytics {
            |   SELECT ed.dst AS node, p.dist + ed.w AS dist
            |   FROM $prev p JOIN ed ON ed.src = p.node)
            |  GROUP BY node)""".stripMargin
-      s"""WITH li AS (SELECT DISTINCT l_orderkey, l_partkey
-         |  FROM lineitem),
-         | und AS (SELECT a.l_partkey AS u, b.l_partkey AS v,
-         |   1000 // count(*) AS w
-         |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-         |   AND a.l_partkey < b.l_partkey
-         |  GROUP BY u, v HAVING count(*) >= 2),
-         | ed AS (SELECT u AS src, v AS dst, w FROM und
-         |  UNION ALL SELECT v AS src, u AS dst, w FROM und),
+      s"""$oSupportEdges,
+         | ed AS (SELECT u AS src, v AS dst, 1000 // support AS w
+         |  FROM und UNION ALL SELECT v, u, 1000 // support FROM und),
          | d0 AS (SELECT min(src) AS node, CAST(0 AS BIGINT) AS dist
          |  FROM ed),
          | ${round(1, "d0")}, ${round(2, "d1")},
@@ -2910,15 +2885,9 @@ object Analytics {
            |    AS l1_drift_micros
            | FROM (SELECT c_$a.c AS ca, c_$b.c AS cb
            |  FROM c_$a FULL JOIN c_$b USING (node))""".stripMargin
-      s"""WITH li AS (SELECT DISTINCT l_orderkey, l_partkey
-         |  FROM lineitem),
-         | und AS (SELECT a.l_partkey AS u, b.l_partkey AS v,
-         |   1000 // count(*) AS w
-         |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-         |   AND a.l_partkey < b.l_partkey
-         |  GROUP BY u, v HAVING count(*) >= 2),
-         | ed AS MATERIALIZED (SELECT u AS src, v AS dst, w FROM und
-         |  UNION ALL SELECT v AS src, u AS dst, w FROM und),
+      s"""$oSupportEdges,
+         | ed AS MATERIALIZED (SELECT u AS src, v AS dst, 1000 // support AS w
+         |  FROM und UNION ALL SELECT v, u, 1000 // support FROM und),
          | ${est("a", 4, 4)},
          | ${est("b", 8, 4)},
          | ${est("c", 8, 5)}
@@ -2962,12 +2931,7 @@ object Analytics {
            |  JOIN del${k + 1} dw ON dw.sg = p.sg AND dw.node = p.dst
            |  WHERE p.lu = $k GROUP BY p.sg, p.src) dn
            |  ON dn.sg = v.sg AND dn.node = v.node)""".stripMargin
-      s"""WITH li AS (SELECT DISTINCT l_orderkey, l_partkey
-         |  FROM lineitem),
-         | und AS (SELECT a.l_partkey AS u, b.l_partkey AS v
-         |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-         |   AND a.l_partkey < b.l_partkey
-         |  GROUP BY u, v HAVING count(*) >= 2),
+      s"""$oSupportEdges,
          | ed AS MATERIALIZED (SELECT u AS src, v AS dst FROM und
          |  UNION ALL SELECT v AS src, u AS dst FROM und),
          | srcs AS (SELECT DISTINCT src AS sg FROM ed
@@ -3012,15 +2976,9 @@ object Analytics {
            |   SELECT p.source, ed.dst AS node, p.dist + ed.w AS dist
            |   FROM $prev p JOIN ed ON ed.src = p.node)
            |  GROUP BY source, node)""".stripMargin
-      s"""WITH li AS (SELECT DISTINCT l_orderkey, l_partkey
-         |  FROM lineitem),
-         | und AS (SELECT a.l_partkey AS u, b.l_partkey AS v,
-         |   1000 // count(*) AS w
-         |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-         |   AND a.l_partkey < b.l_partkey
-         |  GROUP BY u, v HAVING count(*) >= 2),
-         | ed AS MATERIALIZED (SELECT u AS src, v AS dst, w FROM und
-         |  UNION ALL SELECT v AS src, u AS dst, w FROM und),
+      s"""$oSupportEdges,
+         | ed AS MATERIALIZED (SELECT u AS src, v AS dst, 1000 // support AS w
+         |  FROM und UNION ALL SELECT v, u, 1000 // support FROM und),
          | srcs AS (SELECT DISTINCT src AS source FROM ed
          |  ORDER BY source LIMIT 8),
          | d0 AS (SELECT source, source AS node, CAST(0 AS BIGINT)
@@ -3064,12 +3022,8 @@ object Analytics {
            |  AS n_nodes,
            | (SELECT CAST(count(*) AS BIGINT) FROM e$k) AS n_edges"""
           .stripMargin).mkString(" UNION ALL ")
-      s"""WITH li AS (SELECT DISTINCT l_orderkey, l_partkey
-         |  FROM lineitem),
-         | e0 AS MATERIALIZED (SELECT a.l_partkey AS u, b.l_partkey AS v
-         |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-         |   AND a.l_partkey < b.l_partkey
-         |  GROUP BY u, v HAVING count(*) >= 2),
+      s"""$oSupportEdges,
+         | e0 AS MATERIALIZED (SELECT u, v FROM und),
          | ${peel(0)}, ${peel(1)}, ${peel(2)}, ${peel(3)}, ${peel(4)}
          | SELECT * FROM ($summary) ORDER BY round"""
         .stripMargin.replaceAll("\n", " ")
@@ -3417,18 +3371,18 @@ object Analytics {
         .stripMargin.replaceAll("\n", " "),
 
     "q_graph_degree" ->
-      s"""$oEdges,
+      s"""$oSupportEdges,
          | deg AS (SELECT n, CAST(count(*) AS BIGINT) AS deg FROM
-         |  (SELECT u AS n FROM e UNION ALL SELECT v AS n FROM e)
+         |  (SELECT u AS n FROM und UNION ALL SELECT v AS n FROM und)
          |  GROUP BY n)
          | SELECT deg, count(*) AS n_nodes FROM deg
          | GROUP BY deg ORDER BY deg"""
         .stripMargin.replaceAll("\n", " "),
 
     "q_graph_khop" ->
-      s"""$oEdges,
-         | bidir AS (SELECT u AS src, v AS dst FROM e
-         |  UNION ALL SELECT v, u FROM e),
+      s"""$oSupportEdges,
+         | bidir AS (SELECT u AS src, v AS dst FROM und
+         |  UNION ALL SELECT v, u FROM und),
          | h1 AS (SELECT src AS seed, dst AS n1 FROM bidir WHERE src < 10),
          | h2 AS (SELECT h1.seed, b.dst AS n2 FROM h1
          |  JOIN bidir b ON h1.n1 = b.src),
@@ -3443,13 +3397,13 @@ object Analytics {
         .stripMargin.replaceAll("\n", " "),
 
     "q_graph_cluster_coeff" ->
-      s"""$oEdges,
+      s"""$oSupportEdges,
          | deg AS (SELECT n, CAST(count(*) AS BIGINT) AS deg FROM
-         |  (SELECT u AS n FROM e UNION ALL SELECT v AS n FROM e)
+         |  (SELECT u AS n FROM und UNION ALL SELECT v AS n FROM und)
          |  GROUP BY n),
          | tris AS (SELECT e1.u AS a, e1.v AS b, e2.v AS c
-         |  FROM e e1 JOIN e e2 ON e1.v = e2.u
-         |  JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v),
+         |  FROM und e1 JOIN und e2 ON e1.v = e2.u
+         |  JOIN und e3 ON e3.u = e1.u AND e3.v = e2.v),
          | t AS (SELECT n, CAST(count(*) AS BIGINT) AS tri FROM
          |  (SELECT a AS n FROM tris UNION ALL SELECT b FROM tris
          |   UNION ALL SELECT c FROM tris) GROUP BY n)
@@ -3468,9 +3422,9 @@ object Analytics {
            |  (SELECT b.dst, min(l.lbl) AS nl FROM bidir b
            |   JOIN l${k - 1} l ON b.src = l.n GROUP BY 1) m
            |  ON l.n = m.dst)""".stripMargin.replaceAll("\n", " ")
-      s"""$oEdges,
-         | bidir AS (SELECT u AS src, v AS dst FROM e
-         |  UNION ALL SELECT v, u FROM e),
+      s"""$oSupportEdges,
+         | bidir AS (SELECT u AS src, v AS dst FROM und
+         |  UNION ALL SELECT v, u FROM und),
          | l0 AS (SELECT DISTINCT src AS n, src AS lbl FROM bidir),
          | ${round(1)}, ${round(2)}, ${round(3)}
          | SELECT lbl, CAST(count(*) AS BIGINT) AS n_nodes,

@@ -119,8 +119,15 @@ object Checkpoints {
     * must stay pinned: the returned DataFrame reads its blocks lazily,
     * after the builder returns. Returns `df` for chaining.
     */
-  def pin(slot: String, df: DataFrame): DataFrame = {
-    scope(df.sparkSession).pins.put(slot, df).foreach(free)
+  def pin(slot: String, df: DataFrame): DataFrame =
+    pin(df.sparkSession, slot, df)
+
+  /** [[pin]] into the scope of `s`, for a frame built on a child session
+    * of `s` (`newSession()`), so the pin replaces `s`'s previous one, shows
+    * in `storageBySlot(s)` and is freed with `s`.
+    */
+  def pin(s: SparkSession, slot: String, df: DataFrame): DataFrame = {
+    scope(s).pins.put(slot, df).foreach(free)
     df
   }
 

@@ -230,6 +230,58 @@ object Events {
       .withColumn("dev", col("n") * col("x").cast(dec) - col("sx"))
   }
 
+  /** Each event type's daily cents series as one row, `(event_type, ys)`:
+    * `ys` the day sums in day order, as doubles. The smoothing rows fold
+    * it with the aggregate() HOF: their recursions are NON-ASSOCIATIVE,
+    * so they cannot be distributed aggregates, but the frame is bounded
+    * by the CALENDAR SPAN, not the corpus, so after one daily partial agg
+    * the whole series fits one row (the sanctioned bounded-fold pattern;
+    * the q_vec_mmr precedent). [[oDailySeries]] is its DuckDB twin.
+    */
+  private def dailySeries(s: SparkSession, d: String): DataFrame =
+    Tables.events(s, d)
+      .groupBy(col("event_type"), to_date(col("ts")).as("day"))
+      .agg(sum(round(col("value") * 100).cast("long")).as("c"))
+      .groupBy(col("event_type"))
+      .agg(sort_array(collect_list(struct(col("day"), col("c")))).as("sc"))
+      .select(col("event_type"),
+        expr("transform(sc, e -> CAST(e.c AS DOUBLE))").as("ys"))
+
+  /** The centred-trend and hour-of-day seasonal frame of the hourly
+    * value series (all types pooled) — the additive moving-average
+    * decomposition shared by q_ts_decompose and q_ts_strength. Per hour
+    * `h` of the gap-filled grid: the integer cents `c`, the centred
+    * 25-hour trend numerator `tsum` (full windows only), the detrended
+    * value scaled by 25, `d` = 25·c − tsum, and its hour of day `hod`
+    * with that hour's seasonal sum `ssum` over `sn` hours. Everything
+    * stays exact-integer until one constant division per output column
+    * (the residual numerator is d·sn − ssum), so no float summation
+    * order exists and both engines hash identically. One window over one
+    * hour-ordered exchange, one tiny hour-of-day aggregate.
+    */
+  private def seasonalFrame(s: SparkSession, d: String): DataFrame = {
+    val hourly = Tables.events(s, d)
+      .select(date_trunc("hour", col("ts")).as("h"),
+        round(col("value") * 100).cast("long").as("c"))
+      .groupBy(col("h")).agg(sum(col("c")).as("c"))
+    val grid = hourly.agg(min(col("h")).as("h0"), max(col("h")).as("h1"))
+      .select(explode(sequence(col("h0"), col("h1"),
+        expr("INTERVAL 1 HOUR"))).as("h"))
+      .join(hourly, Seq("h"), "left")
+      .na.fill(0L, Seq("c"))
+    val w = org.apache.spark.sql.expressions.Window
+      .orderBy(col("h")).rowsBetween(-12, 12)
+    val trended = grid
+      .withColumn("tsum", sum(col("c")).over(w))
+      .withColumn("tn", count(lit(1)).over(w))
+      .filter(col("tn") === 25)
+      .withColumn("d", col("c") * 25 - col("tsum"))
+      .withColumn("hod", hour(col("h")))
+    val seasonal = trended.groupBy(col("hod"))
+      .agg(sum(col("d")).as("ssum"), count(lit(1)).as("sn"))
+    trended.join(broadcast(seasonal), Seq("hod"))
+  }
+
   /** The exact-integer ACF moments of the dense hourly series at lags
     * 1..`lags`, one row per event type: `n_hours`, `den` = Σ dev²,
     * `num<k>` = Σ dev_t·dev_{t−k} (one type-partitioned lag window, one
@@ -357,7 +409,9 @@ object Events {
       // streaming replays — and anything else running on the shared
       // session concurrently — never observe the RocksDB setting; the
       // eager localCheckpoint executes the whole fold under the child
-      // conf and the returned frame is plain checkpointed blocks.
+      // conf and the returned frame is plain checkpointed blocks. They
+      // are pinned in the scope of `s`, so each run replaces the last
+      // one's, and the child's own scope is released once they exist.
       val s2 = s.newSession()
       import s2.implicits._
       val ev = streamEvents(s2, d).as[Ev]
@@ -377,8 +431,9 @@ object Events {
       s2.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state" +
           ".RocksDBStateStoreProvider")
-      val folded = Checkpoints.pin(s"tws:$d",
+      val folded = Checkpoints.pin(s, s"tws:$d",
         Streaming.runningCountMax(ev).toDF().localCheckpoint())
+      Checkpoints.release(s2)
       folded
         .select(col("userId").as("user_id"), col("n").as("n_events"),
           col("mx").as("max_value"))
@@ -733,23 +788,12 @@ object Events {
     // the level+trend forecaster beside the EWMA (level-only) and
     // seasonal-naive rows: per-type daily cents fold through
     // l' = y/2 + (l+b)/2, b' = (l'−l)/2 + b/2 with the textbook init
-    // (l₁ = y₁, b₁ = y₂ − y₁). The recursion is NON-ASSOCIATIVE, so it
-    // cannot be a distributed aggregate — but the per-type daily frame
-    // is bounded by the CALENDAR SPAN, not the corpus, so after the one
-    // daily partial agg the whole series collects into a single row and
-    // folds via the aggregate() HOF (the sanctioned bounded-fold
-    // pattern; the q_vec_mmr precedent). Parity is BIT-EXACT by IEEE
-    // determinism: the fold is pure +,−,/2 on doubles (no libm), and
-    // the oracle replays the identical op sequence as a recursive CTE.
+    // (l₁ = y₁, b₁ = y₂ − y₁), an aggregate() fold over
+    // [[dailySeries]]. Parity is BIT-EXACT by IEEE determinism: the fold
+    // is pure +,−,/2 on doubles (no libm), and the oracle replays the
+    // identical op sequence as a recursive CTE.
     "q_ts_holt" -> { (s, d) =>
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(sum(round(col("value") * 100).cast("long")).as("c"))
-      daily.groupBy(col("event_type"))
-        .agg(sort_array(collect_list(struct(col("day"), col("c"))))
-          .as("sc"))
-        .select(col("event_type"),
-          expr("transform(sc, e -> CAST(e.c AS DOUBLE))").as("ys"))
+      dailySeries(s, d)
         // Holt init reads ys[2]; a 1-day series has none (the recursive-
         // CTE oracle's j=2 anchor emits no row for it either) — filter
         // the <2-day series out explicitly so both engines agree on row
@@ -782,17 +826,9 @@ object Events {
     // one /7 division (IEEE-identical), and the seasonal slots ride an
     // array the lambda rotates (head = s_{t−7}, the slot the update
     // consumes) — so the recursive-CTE oracle replays every op
-    // bit-for-bit with LIST state. Per type the WHOLE series is one
-    // calendar-bounded row (the sanctioned bounded-fold pattern).
+    // bit-for-bit with LIST state, over [[dailySeries]].
     "q_ts_holt_winters" -> { (s, d) =>
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(sum(round(col("value") * 100).cast("long")).as("c"))
-      daily.groupBy(col("event_type"))
-        .agg(sort_array(collect_list(struct(col("day"), col("c"))))
-          .as("sc"))
-        .select(col("event_type"),
-          expr("transform(sc, e -> CAST(e.c AS DOUBLE))").as("ys"))
+      dailySeries(s, d)
         .filter(size(col("ys")) >= 7)
         .withColumn("l0", expr(
           """(element_at(ys, 1) + element_at(ys, 2) + element_at(ys, 3)
@@ -839,14 +875,7 @@ object Events {
     // any corpus scale.
     "q_ts_ses_fit" -> { (s, d) =>
       val W = org.apache.spark.sql.expressions.Window
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(sum(round(col("value") * 100).cast("long")).as("c"))
-      val cand = daily.groupBy(col("event_type"))
-        .agg(sort_array(collect_list(struct(col("day"), col("c"))))
-          .as("sc"))
-        .select(col("event_type"),
-          expr("transform(sc, e -> CAST(e.c AS DOUBLE))").as("ys"))
+      val cand = dailySeries(s, d)
         .select(col("event_type"),
           size(col("ys")).cast("long").as("n_days"), col("ys"),
           explode(lit(Array(0.1, 0.3, 0.5, 0.7, 0.9))).as("a"))
@@ -1969,55 +1998,22 @@ object Events {
         .orderBy(col("day"))
     },
 
-    // Classical seasonal decomposition (trend + seasonal + residual) of
-    // the hourly value series — the additive moving-average method:
-    // trend = centered 25-hour moving average over the gap-filled hour
-    // grid, seasonal = per-hour-of-day mean of the detrended series,
-    // residual = the rest. EVERYTHING stays exact-integer until one
-    // final constant division per output column: the series is integer
-    // cents, the trend numerator a 25-row integer sum (full windows
-    // only), the detrended value scaled by 25 (d = 25·c − trend_sum,
-    // exact), the seasonal a once-divided integer mean, and the residual
-    // numerator d·n_hod − seasonal_sum — so no float summation order
-    // exists anywhere and both engines hash identically. One window over
-    // one hour-ordered exchange + one tiny hour-of-day aggregate.
     // Trend/seasonal STRENGTH (Hyndman's F_T, F_S) of the hourly series
     // — the one-number diagnostics that say whether q_ts_decompose's
     // components MATTER: F_T = max(0, 1 − Var(R)/Var(deseasonalized)),
-    // F_S = max(0, 1 − Var(R)/Var(detrended)). Same construction as the
-    // decompose row (see there for the ×2500 integer scaling); each
-    // component series ε-rounds to DECIMAL(18,6) per row so the
-    // variance moments (Σx, Σx² as DECIMAL(38,12)) are EXACT and
-    // order-free — a raw double Σx² would be summation-order-dependent
-    // across engines. One bounded-grid frame, one moment aggregate.
+    // F_S = max(0, 1 − Var(R)/Var(detrended)). Each component series
+    // ε-rounds to DECIMAL(18,6) per row so the variance moments (Σx, Σx²
+    // as DECIMAL(38,12)) are EXACT and order-free — a raw double Σx²
+    // would be summation-order-dependent across engines. One
+    // bounded-grid frame, one moment aggregate.
     "q_ts_strength" -> { (s, d) =>
-      val hourly = Tables.events(s, d)
-        .select(date_trunc("hour", col("ts")).as("h"),
-          round(col("value") * 100).cast("long").as("c"))
-        .groupBy(col("h")).agg(sum(col("c")).as("c"))
-      val grid = hourly.agg(min(col("h")).as("h0"), max(col("h")).as("h1"))
-        .select(explode(sequence(col("h0"), col("h1"),
-          expr("INTERVAL 1 HOUR"))).as("h"))
-        .join(hourly, Seq("h"), "left")
-        .na.fill(0L, Seq("c"))
-      val w = org.apache.spark.sql.expressions.Window
-        .orderBy(col("h")).rowsBetween(-12, 12)
-      val trended = grid
-        .withColumn("tsum", sum(col("c")).over(w))
-        .withColumn("tn", count(lit(1)).over(w))
-        .filter(col("tn") === 25)
-        .withColumn("d", col("c") * 25 - col("tsum"))
-        .withColumn("hod", hour(col("h")))
-      val seasonal = trended.groupBy(col("hod"))
-        .agg(sum(col("d")).as("ssum"), count(lit(1)).as("sn"))
-      val joined = trended.join(broadcast(seasonal), Seq("hod"))
       val resid = (col("d") * col("sn") - col("ssum")).cast("double") /
         (col("sn") * 2500).cast("double")
       val deseason = col("c") / 100.0 -
         col("ssum").cast("double") / (col("sn") * 2500).cast("double")
       val detr = col("d") / 2500.0
       def m6(c: Column) = eround(c, 6).cast("decimal(18,6)")
-      val mom = joined
+      val mom = seasonalFrame(s, d)
         .select(m6(resid).as("r"), m6(deseason).as("u"), m6(detr).as("v"))
         .agg(count(lit(1)).as("n"),
           sum(col("r")).as("sr"),
@@ -2039,27 +2035,11 @@ object Events {
           .as("strength_seasonal"))
     },
 
+    // Classical additive decomposition: value, trend, seasonal and
+    // residual per hour, each one constant division of
+    // [[seasonalFrame]]'s exact integers.
     "q_ts_decompose" -> { (s, d) =>
-      val hourly = Tables.events(s, d)
-        .select(date_trunc("hour", col("ts")).as("h"),
-          round(col("value") * 100).cast("long").as("c"))
-        .groupBy(col("h")).agg(sum(col("c")).as("c"))
-      val grid = hourly.agg(min(col("h")).as("h0"), max(col("h")).as("h1"))
-        .select(explode(sequence(col("h0"), col("h1"),
-          expr("INTERVAL 1 HOUR"))).as("h"))
-        .join(hourly, Seq("h"), "left")
-        .na.fill(0L, Seq("c"))
-      val w = org.apache.spark.sql.expressions.Window
-        .orderBy(col("h")).rowsBetween(-12, 12)
-      val trended = grid
-        .withColumn("tsum", sum(col("c")).over(w))
-        .withColumn("tn", count(lit(1)).over(w))
-        .filter(col("tn") === 25) // full centered windows only
-        .withColumn("d", col("c") * 25 - col("tsum")) // detrended ×2500
-        .withColumn("hod", hour(col("h")))
-      val seasonal = trended.groupBy(col("hod"))
-        .agg(sum(col("d")).as("ssum"), count(lit(1)).as("sn"))
-      trended.join(broadcast(seasonal), Seq("hod"))
+      seasonalFrame(s, d)
         .select(col("h"),
           (col("c") / 100.0).as("value"),
           (col("tsum") / 2500.0).as("trend"),
@@ -2070,6 +2050,42 @@ object Events {
         .orderBy(col("h"))
     }
   )
+
+  /** The DuckDB twin of [[seasonalFrame]]: the CTEs `hourly`, `grid`,
+    * `tr`, `det` `(h, c, tsum, d, hod)` and `seas` `(hod, ssum, sn)`.
+    * One line, to interpolate after a `WITH`.
+    */
+  private val oSeasonalFrame: String =
+    """hourly AS (SELECT
+      |   date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h,
+      |   CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS c
+      |  FROM events GROUP BY 1),
+      | grid AS (SELECT g.h, coalesce(c, 0) AS c FROM
+      |   (SELECT unnest(generate_series(min(h), max(h),
+      |      INTERVAL 1 HOUR)) AS h FROM hourly) g
+      |  LEFT JOIN hourly USING (h)),
+      | tr AS (SELECT h, c, sum(c) OVER w AS tsum, count(*) OVER w AS tn
+      |  FROM grid WINDOW w AS (ORDER BY h
+      |   ROWS BETWEEN 12 PRECEDING AND 12 FOLLOWING)),
+      | det AS (SELECT h, c, tsum, c * 25 - tsum AS d, hour(h) AS hod
+      |  FROM tr WHERE tn = 25),
+      | seas AS (SELECT hod, sum(d) AS ssum, count(*) AS sn
+      |  FROM det GROUP BY 1)""".stripMargin.replaceAll("\n", " ")
+
+  /** The DuckDB twin of [[dailySeries]]: the CTEs `daily`
+    * `(event_type, day, c)` and `ser` `(event_type, j, y)`, `j` the
+    * 1-based day index and `y` the day's cents as a double. One line, to
+    * interpolate after a `WITH`.
+    */
+  private val oDailySeries: String =
+    """daily AS (SELECT event_type,
+      |   CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
+      |   CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS c
+      |  FROM events GROUP BY event_type, day),
+      | ser AS (SELECT event_type,
+      |   row_number() OVER (PARTITION BY event_type ORDER BY day) AS j,
+      |   CAST(c AS DOUBLE) AS y FROM daily)"""
+      .stripMargin.replaceAll("\n", " ")
 
   val oracle: Map[String, String] = Map(
     // Duplicates are byte-identical copies, so SELECT DISTINCT over the
@@ -2383,13 +2399,7 @@ object Events {
     // accumulates against the PRE-update level, as in the Spark lambda);
     // the winner rank mirrors the (sse, α) ordering.
     "q_ts_ses_fit" ->
-      """WITH RECURSIVE daily AS (SELECT event_type,
-        |   CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-        |   CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS c
-        |  FROM events GROUP BY event_type, day),
-        | ser AS (SELECT event_type,
-        |   row_number() OVER (PARTITION BY event_type ORDER BY day) AS j,
-        |   CAST(c AS DOUBLE) AS y FROM daily),
+      s"""WITH RECURSIVE $oDailySeries,
         | nd AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_days
         |  FROM ser GROUP BY event_type),
         | grid AS (SELECT CAST(unnest([0.1, 0.3, 0.5, 0.7, 0.9])
@@ -2417,13 +2427,7 @@ object Events {
     // (t, l, b) = state after day t; anchor l₁ = y₁, b₁ = y₂ − y₁) —
     // bit-exact vs the Spark fold by IEEE determinism (no libm calls).
     "q_ts_holt" ->
-      """WITH RECURSIVE daily AS (SELECT event_type,
-        |   CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-        |   CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS c
-        |  FROM events GROUP BY event_type, day),
-        | ser AS (SELECT event_type,
-        |   row_number() OVER (PARTITION BY event_type ORDER BY day) AS j,
-        |   CAST(c AS DOUBLE) AS y FROM daily),
+      s"""WITH RECURSIVE $oDailySeries,
         | nd AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_days
         |  FROM ser GROUP BY event_type),
         | h AS (
@@ -2448,13 +2452,7 @@ object Events {
     // The q_ts_holt recursion with LIST seasonal state: same halving
     // ops replayed exactly, s[2:7] || [s_new] rotation, /7 init.
     "q_ts_holt_winters" ->
-      """WITH RECURSIVE daily AS (SELECT event_type,
-        |   CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-        |   CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS c
-        |  FROM events GROUP BY event_type, day),
-        | ser AS (SELECT event_type,
-        |   row_number() OVER (PARTITION BY event_type ORDER BY day) AS j,
-        |   CAST(c AS DOUBLE) AS y FROM daily),
+      s"""WITH RECURSIVE $oDailySeries,
         | arr AS (SELECT event_type, list(y ORDER BY j) AS ys,
         |   CAST(count(*) AS BIGINT) AS n_days
         |  FROM ser GROUP BY event_type),
@@ -3271,24 +3269,10 @@ object Events {
         | ORDER BY day"""
         .stripMargin.replaceAll("\n", " "),
 
-    // Same construction as the decompose oracle; component rows
-    // ε-round to DECIMAL(18,6) before the exact Σx/Σx² moments.
+    // Component rows ε-round to DECIMAL(18,6) before the exact Σx/Σx²
+    // moments.
     "q_ts_strength" ->
-      """WITH hourly AS (SELECT
-        |   date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h,
-        |   CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS c
-        |  FROM events GROUP BY 1),
-        | grid AS (SELECT g.h, coalesce(c, 0) AS c FROM
-        |   (SELECT unnest(generate_series(min(h), max(h),
-        |      INTERVAL 1 HOUR)) AS h FROM hourly) g
-        |  LEFT JOIN hourly USING (h)),
-        | tr AS (SELECT h, c, sum(c) OVER w AS tsum, count(*) OVER w AS tn
-        |  FROM grid WINDOW w AS (ORDER BY h
-        |   ROWS BETWEEN 12 PRECEDING AND 12 FOLLOWING)),
-        | det AS (SELECT h, c, c * 25 - tsum AS d, hour(h) AS hod
-        |  FROM tr WHERE tn = 25),
-        | seas AS (SELECT hod, sum(d) AS ssum, count(*) AS sn
-        |  FROM det GROUP BY 1),
+      s"""WITH $oSeasonalFrame,
         | cells AS (SELECT
         |   CAST(round(CAST(d * sn - ssum AS DOUBLE)
         |     / CAST(sn * 2500 AS DOUBLE) + 5e-10, 6) AS DECIMAL(18,6))
@@ -3326,21 +3310,7 @@ object Events {
         .stripMargin.replaceAll("\n", " "),
 
     "q_ts_decompose" ->
-      """WITH hourly AS (SELECT
-        |   date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h,
-        |   CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS c
-        |  FROM events GROUP BY 1),
-        | grid AS (SELECT g.h, coalesce(c, 0) AS c FROM
-        |   (SELECT unnest(generate_series(min(h), max(h),
-        |      INTERVAL 1 HOUR)) AS h FROM hourly) g
-        |  LEFT JOIN hourly USING (h)),
-        | tr AS (SELECT h, c, sum(c) OVER w AS tsum, count(*) OVER w AS tn
-        |  FROM grid WINDOW w AS (ORDER BY h
-        |   ROWS BETWEEN 12 PRECEDING AND 12 FOLLOWING)),
-        | det AS (SELECT h, c, tsum, c * 25 - tsum AS d, hour(h) AS hod
-        |  FROM tr WHERE tn = 25),
-        | seas AS (SELECT hod, sum(d) AS ssum, count(*) AS sn
-        |  FROM det GROUP BY 1)
+      s"""WITH $oSeasonalFrame
         | SELECT h, c / 100.0 AS value, tsum / 2500.0 AS trend,
         |  CAST(ssum AS DOUBLE) / CAST(sn * 2500 AS DOUBLE) AS seasonal,
         |  CAST(d * sn - ssum AS DOUBLE) / CAST(sn * 2500 AS DOUBLE)

@@ -235,18 +235,87 @@ object Text {
     (Checkpoints.pin(s"bpeM:$slot", mergesCk),
       Checkpoints.pin(s"bpeW:$slot", words))
   }
+  /** `docs` `(doc_id, w, ..)` with `cum_w`, the running sum of `w` in
+    * `doc_id` order, by a three-level tree prefix sum: an intra-shard
+    * running sum over 1000-doc shards (`intra`), each shard's offset
+    * within its 1000-shard super-shard, and one unpartitioned window over
+    * the super-shard totals, cum_w = super offset + shard offset + intra.
+    * The only global window sees docs/10^6 rows (~10^5 rows for 10^11
+    * documents, a few MB on one task), never the per-document frame, and
+    * integer addition is exact under any grouping, so the values equal
+    * the flat cumulative sum the oracles compute.
+    */
+  private[engine] def treePrefix(docs: DataFrame): DataFrame = {
+    val wnd = org.apache.spark.sql.expressions.Window
+    val sharded = docs.withColumn("shard", expr("doc_id DIV 1000"))
+    val intra = sharded.withColumn("intra",
+      sum(col("w")).over(wnd.partitionBy(col("shard"))
+        .orderBy(col("doc_id")).rowsBetween(wnd.unboundedPreceding, 0)))
+    val shardTot = sharded.groupBy(col("shard"))
+      .agg(sum(col("w")).as("st"))
+      .withColumn("sup", expr("shard DIV 1000"))
+      .withColumn("soff", coalesce(sum(col("st")).over(
+        wnd.partitionBy(col("sup")).orderBy(col("shard"))
+          .rowsBetween(wnd.unboundedPreceding, -1)), lit(0L)))
+    val supOffs = shardTot.groupBy(col("sup"))
+      .agg(sum(col("st")).as("sut"))
+      .withColumn("sup_off", coalesce(sum(col("sut")).over(
+        wnd.orderBy(col("sup")).rowsBetween(wnd.unboundedPreceding, -1)),
+        lit(0L)))
+      .select(col("sup"), col("sup_off"))
+    val offs = shardTot.join(broadcast(supOffs), "sup")
+      .select(col("shard"), (col("sup_off") + col("soff")).as("shard_off"))
+    intra.join(broadcast(offs), "shard")
+      .withColumn("cum_w", col("shard_off") + col("intra"))
+  }
+
+  /** Clipped n-gram matches between adjacent documents (candidate
+    * doc_id p < 50, reference p + 1), the shared core of BLEU and ROUGE:
+    * one row per pair `p` with the candidate and reference lengths
+    * `c_len`/`r_len` and the clipped unigram and bigram counts `m1`/`m2`,
+    * Σ min(count_cand, count_ref) over the pair's grams — exact integers,
+    * and the clip is symmetric, so one join serves precision and recall.
+    * One explode per n-gram order, grouped per (pair, gram), never
+    * cross-pair: pairs are adjacency-bounded, so the join keys are
+    * (pair, gram) equi-keys at any corpus scale.
+    */
+  private def clippedPairs(s: SparkSession, d: String): DataFrame = {
+    val docs = Tables.documents(s, d).filter(col("doc_id") < 51)
+      .withColumn("t", toks(col("text")))
+      .withColumn("bg", slice(
+        transform(sequence(lit(1), greatest(size(col("t")) - 1, lit(1))),
+          i => concat_ws(" ", element_at(col("t"), i),
+            element_at(col("t"), i + 1))),
+        lit(1), greatest(size(col("t")) - 1, lit(0))))
+    def side(gc: String, isCand: Boolean, out: String): DataFrame = {
+      val f = if (isCand) docs.filter(col("doc_id") < 50)
+        else docs.filter(col("doc_id") >= 1)
+      val pid = if (isCand) col("doc_id") else col("doc_id") - 1
+      f.select(pid.as("p"), explode(col(gc)).as("g"))
+        .groupBy(col("p"), col("g")).agg(count(lit(1)).as(out))
+    }
+    def clipped(gc: String, out: String): DataFrame =
+      side(gc, isCand = true, "nc")
+        .join(side(gc, isCand = false, "nr"), Seq("p", "g"), "left")
+        .groupBy(col("p"))
+        .agg(sum(least(col("nc"), coalesce(col("nr"), lit(0L))))
+          .as(out))
+    val lens = docs.select(col("doc_id"),
+      size(col("t")).cast("long").as("len"))
+    val cl = lens.filter(col("doc_id") < 50)
+      .select(col("doc_id").as("p"), col("len").as("c_len"))
+    val rl = lens.filter(col("doc_id") >= 1)
+      .select((col("doc_id") - 1).as("p"), col("len").as("r_len"))
+    clipped("t", "m1").join(clipped("bg", "m2"), Seq("p"))
+      .join(cl, Seq("p")).join(rl, Seq("p"))
+  }
+
   /** Cumulative (token count, first-occurrence vocabulary) per document
     * at the every-50-docs measurement grid — shared by
-    * q_text_vocab_growth and q_text_heaps_fit. r15: the running sums use
-    * the three-level tree prefix sum (the q_sample_weighted spelling —
-    * per-shard intra window, per-super-shard offsets, one super-shard
-    * global window over data/10^6 rows) instead of a corpus-wide
-    * unpartitioned window: the per-doc frame is one row per DOCUMENT,
-    * which is unbounded at 100 TB, so pushing it through a single
-    * window task was the exact hazard the PlanSpec global-window canary
-    * exists to catch. Integer sums are exact under any partitioning,
-    * so the grid values are bit-identical to the single-window
-    * spelling.
+    * q_text_vocab_growth and q_text_heaps_fit. The two running sums are
+    * [[treePrefix]]'s three levels, spelled out for two weights: the
+    * per-doc frame is one row per DOCUMENT, so it must not cross a single
+    * window task (the PlanSpec global-window canary).
     */
   private def vocabGrowthPoints(s: SparkSession, d: String): DataFrame = {
     val W = org.apache.spark.sql.expressions.Window
@@ -588,10 +657,7 @@ object Text {
     // doc_id order. "Running distinct" is spelled relationally: each
     // term's FIRST document (min doc_id per term) turns the cumulative
     // distinct into a cumulative SUM of first-occurrence counts — no
-    // stateful scan. The running sums ride the three-level tree prefix
-    // sum (r15 — see vocabGrowthPoints): the per-doc frame is one row
-    // per DOCUMENT, unbounded at 100 TB, so it never crosses a single
-    // window task; all counts integer-exact.
+    // stateful scan. The running sums come from [[vocabGrowthPoints]].
     "q_text_vocab_growth" -> { (s, d) =>
       vocabGrowthPoints(s, d)
         .select(col("doc_id"), col("cum_tokens"), col("vocab_size"))
@@ -1103,51 +1169,20 @@ object Text {
         .limit(20)
     },
 
-    // Corpus-level BLEU-2 between adjacent document pairs (candidate
-    // doc_id p, reference p+1) — the generation-eval metric as a query,
-    // and a text-similarity signal alongside Jaccard/containment:
-    // clipped unigram/bigram precision (Σ min(count_cand, count_ref) —
-    // exact integers, the hash-bearing columns) with the brevity
-    // penalty and geometric mean. The two exp/ln sites are the only
-    // libm, ε-rounded at 6dp from integer-ratio arguments (the r11
-    // audit class). One explode per n-gram order, grouped per (pair,
-    // gram) — never cross-pair; pairs are adjacency-bounded so the join
-    // keys are (pair, gram) equi-keys at any corpus scale.
+    // Corpus-level BLEU-2 between adjacent document pairs — the
+    // generation-eval metric as a query, and a text-similarity signal
+    // alongside Jaccard/containment: [[clippedPairs]]' unigram/bigram
+    // precision with the brevity penalty and geometric mean. The two
+    // exp/ln sites are the only libm, ε-rounded at 6dp from
+    // integer-ratio arguments.
     "q_text_bleu" -> { (s, d) =>
-      val docs = Tables.documents(s, d).filter(col("doc_id") < 51)
-        .withColumn("t", toks(col("text")))
-        .withColumn("bg", slice(
-          transform(sequence(lit(1), greatest(size(col("t")) - 1, lit(1))),
-            i => concat_ws(" ", element_at(col("t"), i),
-              element_at(col("t"), i + 1))),
-          lit(1), greatest(size(col("t")) - 1, lit(0))))
-      def side(gc: String, isCand: Boolean, out: String): DataFrame = {
-        val f = if (isCand) docs.filter(col("doc_id") < 50)
-          else docs.filter(col("doc_id") >= 1)
-        val pid = if (isCand) col("doc_id") else col("doc_id") - 1
-        f.select(pid.as("p"), explode(col(gc)).as("g"))
-          .groupBy(col("p"), col("g")).agg(count(lit(1)).as(out))
-      }
-      def clipped(gc: String, out: String): DataFrame =
-        side(gc, isCand = true, "nc")
-          .join(side(gc, isCand = false, "nr"), Seq("p", "g"), "left")
-          .groupBy(col("p"))
-          .agg(sum(least(col("nc"), coalesce(col("nr"), lit(0L))))
-            .as(out))
-      val lens = docs.select(col("doc_id"),
-        size(col("t")).cast("long").as("len"))
-      val cl = lens.filter(col("doc_id") < 50)
-        .select(col("doc_id").as("p"), col("len").as("c_len"))
-      val rl = lens.filter(col("doc_id") >= 1)
-        .select((col("doc_id") - 1).as("p"), col("len").as("r_len"))
       val bp = when(col("c_len") >= col("r_len"), lit(1.0))
         .otherwise(exp(lit(1.0) - col("r_len") / col("c_len")))
       val bleu = when(col("m1") > 0 && col("m2") > 0,
         bp * exp((log(col("m1") / col("c_len"))
           + log(col("m2") / (col("c_len") - 1))) / 2))
         .otherwise(lit(0.0))
-      clipped("t", "m1").join(clipped("bg", "m2"), Seq("p"))
-        .join(cl, Seq("p")).join(rl, Seq("p"))
+      clippedPairs(s, d)
         .select(col("p").as("cand_id"), (col("p") + 1).as("ref_id"),
           col("c_len"), col("r_len"), col("m1").as("clip1"),
           col("m2").as("clip2"),
@@ -1212,45 +1247,14 @@ object Text {
         .orderBy(col("rank"))
     },
 
-    // ROUGE-1/2 (r13) — BLEU's recall-side twin over the SAME shifted
-    // candidate/reference pairs (cand i vs ref i+1), completing the
-    // generation-eval pair: BLEU asks "how much of the candidate is in
-    // the reference" (precision + brevity), ROUGE asks "how much of the
-    // reference did the candidate recover" (recall), and the F1 rows
-    // fold both through the exact integer identity 2·m/(c_len+r_len).
-    // Same clipped-count machinery (min(nc, nr) summed per pair — the
-    // clip is symmetric, so one join serves both metrics), all integers
-    // until the final divisions. Scale: two explode+groupBy passes over
-    // the bounded pair slice, keyed shuffles only.
+    // ROUGE-1/2 — BLEU's recall-side twin over the same [[clippedPairs]]:
+    // BLEU asks "how much of the candidate is in the reference"
+    // (precision + brevity), ROUGE asks "how much of the reference did
+    // the candidate recover" (recall), and the F1 rows fold both through
+    // the exact integer identity 2·m/(c_len+r_len). All integers until
+    // the final divisions.
     "q_text_rouge" -> { (s, d) =>
-      val docs = Tables.documents(s, d).filter(col("doc_id") < 51)
-        .withColumn("t", toks(col("text")))
-        .withColumn("bg", slice(
-          transform(sequence(lit(1), greatest(size(col("t")) - 1, lit(1))),
-            i => concat_ws(" ", element_at(col("t"), i),
-              element_at(col("t"), i + 1))),
-          lit(1), greatest(size(col("t")) - 1, lit(0))))
-      def side(gc: String, isCand: Boolean, out: String): DataFrame = {
-        val f = if (isCand) docs.filter(col("doc_id") < 50)
-          else docs.filter(col("doc_id") >= 1)
-        val pid = if (isCand) col("doc_id") else col("doc_id") - 1
-        f.select(pid.as("p"), explode(col(gc)).as("g"))
-          .groupBy(col("p"), col("g")).agg(count(lit(1)).as(out))
-      }
-      def clipped(gc: String, out: String): DataFrame =
-        side(gc, isCand = true, "nc")
-          .join(side(gc, isCand = false, "nr"), Seq("p", "g"), "left")
-          .groupBy(col("p"))
-          .agg(sum(least(col("nc"), coalesce(col("nr"), lit(0L))))
-            .as(out))
-      val lens = docs.select(col("doc_id"),
-        size(col("t")).cast("long").as("len"))
-      val cl = lens.filter(col("doc_id") < 50)
-        .select(col("doc_id").as("p"), col("len").as("c_len"))
-      val rl = lens.filter(col("doc_id") >= 1)
-        .select((col("doc_id") - 1).as("p"), col("len").as("r_len"))
-      clipped("t", "m1").join(clipped("bg", "m2"), Seq("p"))
-        .join(cl, Seq("p")).join(rl, Seq("p"))
+      clippedPairs(s, d)
         .select(col("p").as("cand_id"), (col("p") + 1).as("ref_id"),
           col("c_len"), col("r_len"), col("m1"), col("m2"),
           eround(col("m1") / col("r_len"), 6).as("rouge1_r"),
@@ -1624,21 +1628,17 @@ object Text {
         .orderBy(col("lang"))
     },
 
-    // weights and keep every document whose cumulative weight crosses a
+    // Size-proportional systematic sampling: token counts are the
+    // weights; keep every document whose cumulative weight crosses a
     // multiple of step = total/100 — long documents are proportionally
     // more likely to cross a boundary, giving ~100 docs sampled ∝ size
     // with ZERO randomness (pure integer window arithmetic, so the
     // sample is reproducible shard-by-shard and oracle-exact, unlike
     // u^(1/w) reservoir schemes whose libm keys can't hash-match across
     // engines). The quality-weighted mixing step of corpus construction.
-    // The cumulative weight is computed in the SCALE-SAFE hierarchical
-    // form — a three-level tree prefix sum (doc → 1000-doc shard →
-    // 1000-shard super-shard) — never a single-partition window over
-    // the data: cum_w(doc) = super_offset + shard_offset_within_super
-    // + intra-shard running sum, identical values to the global cumsum
-    // the oracle computes directly. The one unpartitioned window runs
-    // over the SUPER-shard frame: docs/10^6 rows, i.e. ~10^5 rows for
-    // 10^11 docs (~100 TB of 1 KB documents) — a few MB on one task.
+    // The cumulative weight is [[treePrefix]]'s three-level sum, spelled
+    // out here because the super-shard window also carries the corpus
+    // total.
     // step is floored at 1 so a degenerate corpus (<100 total tokens)
     // selects every document instead of dividing by zero.
     "q_sample_weighted" -> { (s, d) =>
@@ -2454,19 +2454,6 @@ object Text {
         .orderBy(col("lang"))
     },
 
-    // Sequence packing — the LAST step of a training-data pipeline: docs
-    // concatenate in doc_id order into one token stream, which is cut
-    // into fixed 512-token context windows (chunks may span documents,
-    // exactly how LLM pretraining batches are packed). Per-window fill
-    // report: contributing docs, token count (512 everywhere but the
-    // final window — PackSpec-pinned), boundary-spanning docs, first doc.
-    // The global token offset is the same three-level tree prefix sum as
-    // q_sample_weighted (intra-shard window → per-shard offsets within
-    // super-shards → one tiny super-shard window, 10^6x smaller than the
-    // data); integer addition is exact under any grouping, so the tree
-    // equals the flat cumulative sum the oracle computes. The bin explode
-    // adds one row per spanned boundary — ~n_tokens/512 extra rows
-    // corpus-wide, negligible.
     // Boundary-respecting greedy sequence packing — the OTHER standard
     // packing mode beside q_pipeline_pack (which spans documents):
     // when training forbids cross-document attention, docs pack
@@ -2514,31 +2501,19 @@ object Text {
         .orderBy(col("source"), col("sub_shard"), col("bin_id"))
     },
 
+    // Sequence packing — the LAST step of a training-data pipeline: docs
+    // concatenate in doc_id order into one token stream, which is cut
+    // into fixed 512-token context windows (chunks may span documents,
+    // exactly how LLM pretraining batches are packed). Per-window fill
+    // report: contributing docs, token count (512 everywhere but the
+    // final window — PackSpec-pinned), boundary-spanning docs, first doc.
+    // The global token offset is [[treePrefix]]'s cum_w. The bin explode
+    // adds one row per spanned boundary — ~n_tokens/512 extra rows
+    // corpus-wide, negligible.
     "q_pipeline_pack" -> { (s, d) =>
-      val wnd = org.apache.spark.sql.expressions.Window
       val B = 512L
-      val docs = Tables.documents(s, d)
-        .select(col("doc_id"), size(toks(col("text"))).cast("long").as("w"))
-        .withColumn("shard", expr("doc_id DIV 1000"))
-      val intra = docs.withColumn("intra",
-        sum(col("w")).over(wnd.partitionBy(col("shard"))
-          .orderBy(col("doc_id")).rowsBetween(wnd.unboundedPreceding, 0)))
-      val shardTot = docs.groupBy(col("shard"))
-        .agg(sum(col("w")).as("st"))
-        .withColumn("sup", expr("shard DIV 1000"))
-        .withColumn("soff", coalesce(sum(col("st")).over(
-          wnd.partitionBy(col("sup")).orderBy(col("shard"))
-            .rowsBetween(wnd.unboundedPreceding, -1)), lit(0L)))
-      val supOffs = shardTot.groupBy(col("sup"))
-        .agg(sum(col("st")).as("sut"))
-        .withColumn("sup_off", coalesce(sum(col("sut")).over(
-          wnd.orderBy(col("sup")).rowsBetween(wnd.unboundedPreceding, -1)),
-          lit(0L)))
-        .select(col("sup"), col("sup_off"))
-      val offs = shardTot.join(broadcast(supOffs), "sup")
-        .select(col("shard"), (col("sup_off") + col("soff")).as("shard_off"))
-      intra.join(broadcast(offs), "shard")
-        .withColumn("cum_w", col("shard_off") + col("intra"))
+      treePrefix(Tables.documents(s, d)
+        .select(col("doc_id"), size(toks(col("text"))).cast("long").as("w")))
         .withColumn("off", col("cum_w") - col("w"))
         .withColumn("fb", expr(s"off DIV $B"))
         .withColumn("lb", expr(s"(cum_w - 1) DIV $B"))
@@ -2558,35 +2533,13 @@ object Text {
     // tokens by their start offset, so shard files land near the target
     // size without splitting a document. A shard can exceed the budget by
     // at most one document's tail — the documented greedy bound,
-    // surfaced per shard as `n_tok`. Same three-level tree prefix sum as
-    // pack/sample_weighted (the only unpartitioned window runs at
-    // super-shard level, ~10⁶× smaller than the data); integer addition
-    // keeps every offset exact under any partitioning.
+    // surfaced per shard as `n_tok`. Start offsets come from
+    // [[treePrefix]].
     "q_pipeline_shard" -> { (s, d) =>
-      val wnd = org.apache.spark.sql.expressions.Window
       val B = 2048L
-      val docs = Tables.documents(s, d)
-        .select(col("doc_id"), size(toks(col("text"))).cast("long").as("w"))
-        .withColumn("shard", expr("doc_id DIV 1000"))
-      val intra = docs.withColumn("intra",
-        sum(col("w")).over(wnd.partitionBy(col("shard"))
-          .orderBy(col("doc_id")).rowsBetween(wnd.unboundedPreceding, 0)))
-      val shardTot = docs.groupBy(col("shard"))
-        .agg(sum(col("w")).as("st"))
-        .withColumn("sup", expr("shard DIV 1000"))
-        .withColumn("soff", coalesce(sum(col("st")).over(
-          wnd.partitionBy(col("sup")).orderBy(col("shard"))
-            .rowsBetween(wnd.unboundedPreceding, -1)), lit(0L)))
-      val supOffs = shardTot.groupBy(col("sup"))
-        .agg(sum(col("st")).as("sut"))
-        .withColumn("sup_off", coalesce(sum(col("sut")).over(
-          wnd.orderBy(col("sup")).rowsBetween(wnd.unboundedPreceding, -1)),
-          lit(0L)))
-        .select(col("sup"), col("sup_off"))
-      val offs = shardTot.join(broadcast(supOffs), "sup")
-        .select(col("shard"), (col("sup_off") + col("soff")).as("shard_off"))
-      intra.join(broadcast(offs), "shard")
-        .withColumn("off", col("shard_off") + col("intra") - col("w"))
+      treePrefix(Tables.documents(s, d)
+        .select(col("doc_id"), size(toks(col("text"))).cast("long").as("w")))
+        .withColumn("off", col("cum_w") - col("w"))
         .withColumn("shard_id", expr(s"off DIV $B"))
         .groupBy(col("shard_id"))
         .agg(count(lit(1)).as("n_docs"),
@@ -3603,6 +3556,67 @@ object Text {
   private val oToks2 = "string_split(lower(corpus.text), ' ')"
   private val oStop = "['the', 'a']"
 
+  /** The DuckDB twin of [[vocabGrowthPoints]]: the CTEs `tk`, `pd`,
+    * `fs`, `j`, `c` and `vg` `(doc_id, cum_tokens, vocab_size)` on the
+    * every-50-docs grid, with flat running sums. One line, to
+    * interpolate after a `WITH`.
+    */
+  private val oVocabGrowth: String =
+    s"""tk AS (SELECT doc_id, unnest($oToks) AS w FROM documents),
+       | pd AS (SELECT doc_id, count(*) AS n_tok FROM tk
+       |  GROUP BY doc_id),
+       | fs AS (SELECT first_doc, count(*) AS n_new FROM
+       |   (SELECT w, min(doc_id) AS first_doc FROM tk GROUP BY w)
+       |  GROUP BY first_doc),
+       | j AS (SELECT pd.doc_id, n_tok,
+       |   coalesce(n_new, 0) AS n_new
+       |  FROM pd LEFT JOIN fs ON pd.doc_id = fs.first_doc),
+       | c AS (SELECT doc_id,
+       |   CAST(sum(n_tok) OVER (ORDER BY doc_id
+       |     ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens,
+       |   CAST(sum(n_new) OVER (ORDER BY doc_id
+       |     ROWS UNBOUNDED PRECEDING) AS BIGINT) AS vocab_size
+       |  FROM j),
+       | vg AS (SELECT doc_id, cum_tokens, vocab_size FROM c
+       |  WHERE doc_id % 50 = 0)""".stripMargin.replaceAll("\n", " ")
+
+  /** The DuckDB twin of [[clippedPairs]]: the CTEs `dd`, `lens`, `uni`,
+    * `big`, `cu`, `ru`, `m1`, `cb`, `rb`, `m2`, `cl`, `rl` and `cp`
+    * `(p, m1, m2, c_len, r_len)`. One line, to interpolate after a
+    * `WITH`.
+    */
+  private val oClippedPairs: String =
+    s"""dd AS (SELECT doc_id, $oToks AS t FROM documents
+       |  WHERE doc_id < 51),
+       | lens AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS len
+       |  FROM dd),
+       | uni AS (SELECT doc_id, unnest(t) AS g FROM dd),
+       | big AS (SELECT doc_id, t[i] || ' ' || t[i+1] AS g FROM dd,
+       |  LATERAL unnest(generate_series(1, len(t) - 1)) u(i)
+       |  WHERE len(t) >= 2),
+       | cu AS (SELECT doc_id AS p, g, CAST(count(*) AS BIGINT) AS nc
+       |  FROM uni WHERE doc_id < 50 GROUP BY 1, 2),
+       | ru AS (SELECT doc_id - 1 AS p, g,
+       |   CAST(count(*) AS BIGINT) AS nr
+       |  FROM uni WHERE doc_id >= 1 GROUP BY 1, 2),
+       | m1 AS (SELECT p,
+       |   CAST(sum(least(nc, coalesce(nr, 0))) AS BIGINT) AS m1
+       |  FROM cu LEFT JOIN ru USING (p, g) GROUP BY p),
+       | cb AS (SELECT doc_id AS p, g, CAST(count(*) AS BIGINT) AS nc
+       |  FROM big WHERE doc_id < 50 GROUP BY 1, 2),
+       | rb AS (SELECT doc_id - 1 AS p, g,
+       |   CAST(count(*) AS BIGINT) AS nr
+       |  FROM big WHERE doc_id >= 1 GROUP BY 1, 2),
+       | m2 AS (SELECT p,
+       |   CAST(sum(least(nc, coalesce(nr, 0))) AS BIGINT) AS m2
+       |  FROM cb LEFT JOIN rb USING (p, g) GROUP BY p),
+       | cl AS (SELECT doc_id AS p, len AS c_len FROM lens
+       |  WHERE doc_id < 50),
+       | rl AS (SELECT doc_id - 1 AS p, len AS r_len FROM lens
+       |  WHERE doc_id >= 1),
+       | cp AS (SELECT * FROM m1 JOIN m2 USING (p) JOIN cl USING (p)
+       |  JOIN rl USING (p))""".stripMargin.replaceAll("\n", " ")
+
   val oracle: Map[String, String] = Map(
     "q_text_tokens" ->
       s"""SELECT doc_id, len($oToks) AS n_tok,
@@ -3912,37 +3926,9 @@ object Text {
          | FROM rnk WHERE rank <= 100 ORDER BY rank"""
         .stripMargin.replaceAll("\n", " "),
 
-    // Same clipped counts and lengths as the BLEU oracle; recall and
-    // F1 denominators swap in the reference side.
+    // Recall and F1 denominators swap in the reference side.
     "q_text_rouge" ->
-      s"""WITH dd AS (SELECT doc_id, $oToks AS t FROM documents
-         |  WHERE doc_id < 51),
-         | lens AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS len
-         |  FROM dd),
-         | uni AS (SELECT doc_id, unnest(t) AS g FROM dd),
-         | big AS (SELECT doc_id, t[i] || ' ' || t[i+1] AS g FROM dd,
-         |  LATERAL unnest(generate_series(1, len(t) - 1)) u(i)
-         |  WHERE len(t) >= 2),
-         | cu AS (SELECT doc_id AS p, g, CAST(count(*) AS BIGINT) AS nc
-         |  FROM uni WHERE doc_id < 50 GROUP BY 1, 2),
-         | ru AS (SELECT doc_id - 1 AS p, g,
-         |   CAST(count(*) AS BIGINT) AS nr
-         |  FROM uni WHERE doc_id >= 1 GROUP BY 1, 2),
-         | m1 AS (SELECT p,
-         |   CAST(sum(least(nc, coalesce(nr, 0))) AS BIGINT) AS m1
-         |  FROM cu LEFT JOIN ru USING (p, g) GROUP BY p),
-         | cb AS (SELECT doc_id AS p, g, CAST(count(*) AS BIGINT) AS nc
-         |  FROM big WHERE doc_id < 50 GROUP BY 1, 2),
-         | rb AS (SELECT doc_id - 1 AS p, g,
-         |   CAST(count(*) AS BIGINT) AS nr
-         |  FROM big WHERE doc_id >= 1 GROUP BY 1, 2),
-         | m2 AS (SELECT p,
-         |   CAST(sum(least(nc, coalesce(nr, 0))) AS BIGINT) AS m2
-         |  FROM cb LEFT JOIN rb USING (p, g) GROUP BY p),
-         | cl AS (SELECT doc_id AS p, len AS c_len FROM lens
-         |  WHERE doc_id < 50),
-         | rl AS (SELECT doc_id - 1 AS p, len AS r_len FROM lens
-         |  WHERE doc_id >= 1)
+      s"""WITH $oClippedPairs
          | SELECT p AS cand_id, p + 1 AS ref_id, c_len, r_len, m1, m2,
          |  round(m1 / r_len + 5e-10, 6) AS rouge1_r,
          |  CASE WHEN r_len > 1
@@ -3952,44 +3938,15 @@ object Text {
          |  CASE WHEN c_len + r_len > 2
          |   THEN round(m2 * 2 / (c_len + r_len - 2) + 5e-10, 6)
          |   ELSE CAST(0.0 AS DOUBLE) END AS f1_bi
-         | FROM m1 JOIN m2 USING (p) JOIN cl USING (p) JOIN rl USING (p)
-         | ORDER BY cand_id"""
+         | FROM cp ORDER BY cand_id"""
         .stripMargin.replaceAll("\n", " "),
 
     "q_text_bleu" ->
-      s"""WITH dd AS (SELECT doc_id, $oToks AS t FROM documents
-         |  WHERE doc_id < 51),
-         | lens AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS len
-         |  FROM dd),
-         | uni AS (SELECT doc_id, unnest(t) AS g FROM dd),
-         | big AS (SELECT doc_id, t[i] || ' ' || t[i+1] AS g FROM dd,
-         |  LATERAL unnest(generate_series(1, len(t) - 1)) u(i)
-         |  WHERE len(t) >= 2),
-         | cu AS (SELECT doc_id AS p, g, CAST(count(*) AS BIGINT) AS nc
-         |  FROM uni WHERE doc_id < 50 GROUP BY 1, 2),
-         | ru AS (SELECT doc_id - 1 AS p, g,
-         |   CAST(count(*) AS BIGINT) AS nr
-         |  FROM uni WHERE doc_id >= 1 GROUP BY 1, 2),
-         | m1 AS (SELECT p,
-         |   CAST(sum(least(nc, coalesce(nr, 0))) AS BIGINT) AS m1
-         |  FROM cu LEFT JOIN ru USING (p, g) GROUP BY p),
-         | cb AS (SELECT doc_id AS p, g, CAST(count(*) AS BIGINT) AS nc
-         |  FROM big WHERE doc_id < 50 GROUP BY 1, 2),
-         | rb AS (SELECT doc_id - 1 AS p, g,
-         |   CAST(count(*) AS BIGINT) AS nr
-         |  FROM big WHERE doc_id >= 1 GROUP BY 1, 2),
-         | m2 AS (SELECT p,
-         |   CAST(sum(least(nc, coalesce(nr, 0))) AS BIGINT) AS m2
-         |  FROM cb LEFT JOIN rb USING (p, g) GROUP BY p),
-         | cl AS (SELECT doc_id AS p, len AS c_len FROM lens
-         |  WHERE doc_id < 50),
-         | rl AS (SELECT doc_id - 1 AS p, len AS r_len FROM lens
-         |  WHERE doc_id >= 1),
+      s"""WITH $oClippedPairs,
          | f AS (SELECT p, c_len, r_len, m1, m2,
          |   CASE WHEN c_len >= r_len THEN CAST(1.0 AS DOUBLE)
          |    ELSE exp(1.0 - r_len / c_len) END AS bp
-         |  FROM m1 JOIN m2 USING (p) JOIN cl USING (p)
-         |  JOIN rl USING (p))
+         |  FROM cp)
          | SELECT p AS cand_id, p + 1 AS ref_id, c_len, r_len,
          |  m1 AS clip1, m2 AS clip2,
          |  round(m1 / c_len + 5e-10, 6) AS p1,
@@ -4246,23 +4203,8 @@ object Text {
         .stripMargin.replaceAll("\n", " "),
 
     "q_text_vocab_growth" ->
-      s"""WITH tk AS (SELECT doc_id, unnest($oToks) AS w FROM documents),
-         | pd AS (SELECT doc_id, count(*) AS n_tok FROM tk
-         |  GROUP BY doc_id),
-         | fs AS (SELECT first_doc, count(*) AS n_new FROM
-         |   (SELECT w, min(doc_id) AS first_doc FROM tk GROUP BY w)
-         |  GROUP BY first_doc),
-         | j AS (SELECT pd.doc_id, n_tok,
-         |   coalesce(n_new, 0) AS n_new
-         |  FROM pd LEFT JOIN fs ON pd.doc_id = fs.first_doc),
-         | c AS (SELECT doc_id,
-         |   CAST(sum(n_tok) OVER (ORDER BY doc_id
-         |     ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens,
-         |   CAST(sum(n_new) OVER (ORDER BY doc_id
-         |     ROWS UNBOUNDED PRECEDING) AS BIGINT) AS vocab_size
-         |  FROM j)
-         | SELECT doc_id, cum_tokens, vocab_size FROM c
-         | WHERE doc_id % 50 = 0 ORDER BY doc_id"""
+      s"""WITH $oVocabGrowth
+         | SELECT doc_id, cum_tokens, vocab_size FROM vg ORDER BY doc_id"""
         .stripMargin.replaceAll("\n", " "),
 
     "q_text_dedup_prefix" ->
@@ -5444,31 +5386,17 @@ object Text {
         | ORDER BY score_micros DESC, id_a, id_b LIMIT 20"""
         .stripMargin.replaceAll("\n", " "),
 
-    // The vocab-growth CTE verbatim, then ε-rounded log-log points and
+    // The vocab-growth CTEs, then ε-rounded log-log points and
     // exact decimal regression moments (one operand widened to
     // DECIMAL(19,9) before each product — the DuckDB 18-digit multiply
     // bound); β and K mirror the Spark double tree including the β
     // re-expansion inside K.
     "q_text_heaps_fit" ->
-      s"""WITH tk AS (SELECT doc_id, unnest($oToks) AS w FROM documents),
-         | pd AS (SELECT doc_id, count(*) AS n_tok FROM tk
-         |  GROUP BY doc_id),
-         | fs AS (SELECT first_doc, count(*) AS n_new FROM
-         |   (SELECT w, min(doc_id) AS first_doc FROM tk GROUP BY w)
-         |  GROUP BY first_doc),
-         | j AS (SELECT pd.doc_id, n_tok,
-         |   coalesce(n_new, 0) AS n_new
-         |  FROM pd LEFT JOIN fs ON pd.doc_id = fs.first_doc),
-         | c AS (SELECT doc_id,
-         |   CAST(sum(n_tok) OVER (ORDER BY doc_id
-         |     ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens,
-         |   CAST(sum(n_new) OVER (ORDER BY doc_id
-         |     ROWS UNBOUNDED PRECEDING) AS BIGINT) AS vocab_size
-         |  FROM j),
+      s"""WITH $oVocabGrowth,
          | pts AS (SELECT
          |   CAST(round(ln(cum_tokens) + 5e-10, 9) AS DECIMAL(18,9)) AS x,
          |   CAST(round(ln(vocab_size) + 5e-10, 9) AS DECIMAL(18,9)) AS y
-         |  FROM c WHERE doc_id % 50 = 0),
+         |  FROM vg),
          | m AS (SELECT CAST(count(*) AS BIGINT) AS n,
          |   sum(x) AS sx, sum(y) AS sy,
          |   sum(CAST(CAST(x AS DECIMAL(19,9)) * x AS DECIMAL(38,18)))

@@ -30,11 +30,12 @@ class CheckpointBudgetSpec extends SparkSuite {
     // encoded-corpus halves scale with |vectors|/|vocabulary|: the IVF
     // centroids+assignments, the PQ and IVF-PQ codebook+encoded pairs,
     // the PCA Gram frame, and the BPE merges+vocab pair — and the five
-    // k-core peel rounds, which scale with the support graph
+    // k-core peel rounds, which scale with the support graph, and the
+    // transformWithState fold, pinned from a child session
     val consumers = Seq("q_graph_closeness", "q_graph_hits", "q_ts_acf",
       "q_agg_ks_test", "q_dedup_near",
       "q_sim_topk_ivf", "q_vec_pq", "q_vec_ivfpq", "q_vec_pca_power",
-      "q_text_bpe_train", "q_graph_kcore")
+      "q_text_bpe_train", "q_graph_kcore", "q_stream_tws_replay")
     consumers.foreach { q =>
       SparkEntry.queries(q)(spark, sf01).count()
     }
@@ -43,7 +44,7 @@ class CheckpointBudgetSpec extends SparkSuite {
     val expected = Seq("baskets", "support", "sssp", "hits", "hourly",
       "cpcents", "nearband",
       "ivf_cents", "ivf_asg", "pq", "pq_enc", "ivfpq", "ivfpq_enc",
-      "pca", "bpeM", "bpeW") ++ (1 to 5).map(k => s"kcore$k")
+      "pca", "bpeM", "bpeW", "tws") ++ (1 to 5).map(k => s"kcore$k")
     expected.foreach { name =>
       assert(slots.contains(s"$name:$sf01"),
         s"memo slot $name:$sf01 was not populated — " +

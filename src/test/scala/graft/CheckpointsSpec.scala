@@ -106,4 +106,21 @@ class CheckpointsSpec extends SparkSuite {
     assert(mine.keys.forall(!_.contains('@')),
       "ledger keys are session-suffix-free")
   }
+
+  test("q_stream_tws_replay keeps one pinned frame per session " +
+      "however often it runs") {
+    val s = spark.newSession()
+    val sc = s.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    try {
+      (1 to 4).foreach(_ =>
+        SparkEntry.queries("q_stream_tws_replay")(s, sf).count())
+      val added = sc.getPersistentRDDs.keySet -- before
+      assert(added.size === 1,
+        s"4 runs left ${added.size} persisted RDDs, want 1")
+      assert(Checkpoints.storageBySlot(s).contains(s"tws:$sf"))
+    } finally Checkpoints.release(s)
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
+      "the release must free the tws pin")
+  }
 }

@@ -5,7 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{lit, raise_error}
 
 /** A query that throws must never pass as a result: Bench leaves it out
-  * of every timing and names it, Verify names it and writes the rest.
+  * of every timing and names it, Verify and PlanDump name it and write
+  * the rest.
   */
 class LoudFailureSpec extends SparkSuite {
   private type Q = (SparkSession, String) => DataFrame
@@ -34,5 +35,15 @@ class LoudFailureSpec extends SparkSuite {
     assert(failed === Seq("q_build_boom", "q_action_boom"))
     assert(spark.read.parquet(out.resolve("q_ok").toString).count() === 10L)
     assert(!Files.exists(out.resolve("q_build_boom")))
+  }
+
+  test("PlanDump names unknown and throwing rows and dumps the others") {
+    val out = Files.createTempDirectory("plandump-spec").toFile
+    val failed = PlanDump.dump(spark,
+      Seq("q_build_boom", "q_ok", "q_unknown"),
+      Map("q_build_boom" -> throwsAtBuild, "q_ok" -> ok), sf, out, "t")
+    assert(failed === Seq("q_build_boom", "q_unknown"))
+    assert(new java.io.File(out, "q_ok_t.txt").length() > 0)
+    assert(!new java.io.File(out, "q_build_boom_t.txt").exists)
   }
 }
