@@ -6,7 +6,10 @@ import graft.engine._
   *
   * One entry per implemented operator from SURVEY.md §2; each module under
   * graft.engine contributes its query builders and the matching DuckDB
-  * oracle SQL.
+  * oracle SQL. Builders need a session built with
+  * `graft.engine.functions.GraftExtensions` (as `Sessions.local` builds
+  * it, and its `newSession()` children): they call the native functions
+  * by name and do not register them.
   */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */

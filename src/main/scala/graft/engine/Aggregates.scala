@@ -2319,7 +2319,6 @@ object Aggregates {
     // No oracle (hash-algorithm-specific) — accuracy + partition-
     // independence asserted in ScalaTest.
     "q_agg_kmv_distinct" -> { (s, d) =>
-      graft.engine.functions.GraftFunctions.register(s)
       Tables.lineitem(s, d)
         .groupBy(col("l_returnflag"))
         .agg(graft.engine.functions.GraftFunctions
@@ -2347,7 +2346,6 @@ object Aggregates {
     // are algorithm-specific) — containment guarantee, error bound, and
     // partition-independence of the guarantees asserted in ScalaTest.
     "q_agg_heavy_hitters" -> { (s, d) =>
-      graft.engine.functions.GraftFunctions.register(s)
       Tables.documents(s, d)
         .select(explode(split(lower(col("text")), " ")).as("tok"))
         .select(length(col("tok")).cast("long").as("tok_len"))
@@ -2370,7 +2368,6 @@ object Aggregates {
     // tail. No oracle (bucket internals) — relative-error bound,
     // partition-independence, and quantile monotonicity in ScalaTest.
     "q_agg_quantile_sketch" -> { (s, d) =>
-      graft.engine.functions.GraftFunctions.register(s)
       Tables.lineitem(s, d)
         .groupBy(col("l_returnflag"))
         .agg(expr("dd_sketch(l_extendedprice)").as("sk"),
@@ -2383,7 +2380,6 @@ object Aggregates {
     },
 
     "q_agg_cms_freq" -> { (s, d) =>
-      graft.engine.functions.GraftFunctions.register(s)
       val probes = array((1 to 5).map(i => lit(i.toLong)): _*)
       Tables.lineitem(s, d)
         .groupBy(col("l_returnflag"))
@@ -2406,7 +2402,6 @@ object Aggregates {
     // state is partition-independent). No oracle (hash internals) —
     // error bounds + exactness-below-k in ScalaTest.
     "q_agg_kmv_setops" -> { (s, d) =>
-      graft.engine.functions.GraftFunctions.register(s)
       val sk = Tables.lineitem(s, d)
         .groupBy(col("l_returnflag"))
         .agg(expr("kmv_sketch(l_partkey)").as("sk"))

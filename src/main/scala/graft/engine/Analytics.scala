@@ -140,6 +140,27 @@ object Analytics {
         .localCheckpoint()
     }
 
+  /** The 30-minute sessionization of q_shape_paths and
+    * q_shape_concurrency: the events with `tus` (unix micros of `ts`),
+    * `new_s` = 1 where the gap to the user's previous event, ordered by
+    * (`order`, event_id), exceeds 30 minutes or there is none, and `sid`,
+    * the user's running sum of `new_s`. `order` is `ts` or `tus`.
+    */
+  private def sessionize(s: SparkSession, d: String, order: String)
+      : DataFrame = {
+    val wU = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("user_id")).orderBy(col(order), col("event_id"))
+    Tables.events(s, d)
+      .withColumn("tus", expr("unix_micros(ts)"))
+      .withColumn("new_s",
+        when(col("tus")
+          - lag(col("tus"), 1).over(wU) > 1800000000L, 1)
+          .when(lag(col("tus"), 1).over(wU).isNull, 1).otherwise(0))
+      .withColumn("sid", sum(col("new_s")).over(
+        wU.rowsBetween(org.apache.spark.sql.expressions.Window
+          .unboundedPreceding, 0)))
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Q3 shape: revenue of undelivered orders for one market segment.
     "q_shape_q3" -> { (s, d) =>
@@ -371,18 +392,7 @@ object Analytics {
     // is deterministic; collect_list order is not) — one user_id-
     // partitioned window chain + one small path-count aggregate.
     "q_shape_paths" -> { (s, d) =>
-      val wU = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      val sess = Tables.events(s, d)
-        .withColumn("tus", expr("unix_micros(ts)"))
-        .withColumn("new_s",
-          when(col("tus")
-            - lag(col("tus"), 1).over(wU) > 1800000000L, 1)
-            .when(lag(col("tus"), 1).over(wU).isNull, 1).otherwise(0))
-        .withColumn("sid", sum(col("new_s")).over(
-          wU.rowsBetween(org.apache.spark.sql.expressions.Window
-            .unboundedPreceding, 0)))
-      sess.groupBy(col("user_id"), col("sid"))
+      sessionize(s, d, "ts").groupBy(col("user_id"), col("sid"))
         .agg(array_join(transform(
           array_sort(collect_list(struct(col("ts"), col("event_id"),
             col("event_type")))),
@@ -458,18 +468,7 @@ object Analytics {
     // magnitude below the event stream); a production variant sub-buckets
     // each day by hour and merges hierarchical maxima.
     "q_shape_concurrency" -> { (s, d) =>
-      val wU = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("user_id")).orderBy(col("tus"), col("event_id"))
-      val sess = Tables.events(s, d)
-        .withColumn("tus", expr("unix_micros(ts)"))
-        .withColumn("new_s",
-          when(col("tus")
-            - lag(col("tus"), 1).over(wU) > 1800000000L, 1)
-            .when(lag(col("tus"), 1).over(wU).isNull, 1).otherwise(0))
-        .withColumn("sid", sum(col("new_s")).over(
-          wU.rowsBetween(org.apache.spark.sql.expressions.Window
-            .unboundedPreceding, 0)))
-      val iv = sess.groupBy(col("user_id"), col("sid"))
+      val iv = sessionize(s, d, "tus").groupBy(col("user_id"), col("sid"))
         .agg(min(col("tus")).as("s_us"), max(col("tus")).as("e_us"))
         .withColumn("day", explode(sequence(
           to_date(timestamp_micros(col("s_us"))),
@@ -2190,6 +2189,22 @@ object Analytics {
       |  GROUP BY u, v HAVING count(*) >= 2)"""
       .stripMargin.replaceAll("\n", " ")
 
+  /** Oracle twin of [[sessionize]] (ordering by `tus` equals ordering by
+    * the microsecond `ts`): CTEs `e`, `m` and `g`, where `g` holds each
+    * event's `user_id`, `event_id`, `ts`, `tus`, `event_type` and `sid`.
+    * Opens a `WITH` list.
+    */
+  private val oSessions: String =
+    """WITH e AS (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts,
+      |   epoch_us(CAST(ts AS TIMESTAMP)) AS tus, event_type FROM events),
+      | m AS (SELECT *, CASE WHEN lag(tus) OVER w IS NULL
+      |     OR tus - lag(tus) OVER w > 1800000000
+      |    THEN 1 ELSE 0 END AS new_s
+      |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tus, event_id)),
+      | g AS (SELECT *, sum(new_s) OVER (PARTITION BY user_id
+      |     ORDER BY tus, event_id ROWS UNBOUNDED PRECEDING) AS sid FROM m)"""
+      .stripMargin.replaceAll("\n", " ")
+
   val oracle: Map[String, String] = Map(
     "q_shape_q3" ->
       s"""SELECT o_orderkey, o_orderdate, o_orderpriority,
@@ -2374,16 +2389,7 @@ object Analytics {
         .stripMargin.replaceAll("\n", " "),
 
     "q_shape_paths" ->
-      """WITH e AS (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts,
-        |   event_type FROM events),
-        | m AS (SELECT user_id, event_id, ts, event_type,
-        |   CASE WHEN lag(ts) OVER w IS NULL
-        |     OR date_diff('us', lag(ts) OVER w, ts) > 1800000000
-        |    THEN 1 ELSE 0 END AS new_s
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        | g AS (SELECT user_id, event_id, ts, event_type,
-        |   sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |     ROWS UNBOUNDED PRECEDING) AS sid FROM m),
+      s"""$oSessions,
         | p AS (SELECT user_id, sid,
         |   string_agg(event_type, '>' ORDER BY ts, event_id) AS path
         |  FROM g GROUP BY user_id, sid)
@@ -2420,20 +2426,10 @@ object Analytics {
         | GROUP BY du.day ORDER BY du.day"""
         .stripMargin.replaceAll("\n", " "),
 
-    // Same sessionization CTEs as the paths oracle; the day split uses
-    // generate_series over dates and the boundary scan mirrors the
-    // Spark (tus, delta DESC) closed-interval ordering.
+    // The day split uses generate_series over dates and the boundary
+    // scan mirrors the Spark (tus, delta DESC) closed-interval ordering.
     "q_shape_concurrency" ->
-      """WITH e AS (SELECT user_id, event_id,
-        |   epoch_us(CAST(ts AS TIMESTAMP)) AS tus FROM events),
-        | m AS (SELECT user_id, event_id, tus,
-        |   CASE WHEN lag(tus) OVER w IS NULL
-        |     OR tus - lag(tus) OVER w > 1800000000
-        |    THEN 1 ELSE 0 END AS new_s
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tus, event_id)),
-        | g AS (SELECT user_id, tus,
-        |   sum(new_s) OVER (PARTITION BY user_id ORDER BY tus, event_id
-        |     ROWS UNBOUNDED PRECEDING) AS sid FROM m),
+      s"""$oSessions,
         | iv AS (SELECT user_id, sid, min(tus) AS s_us, max(tus) AS e_us
         |  FROM g GROUP BY user_id, sid),
         | dd AS (SELECT user_id, sid, s_us, e_us,
@@ -3257,16 +3253,7 @@ object Analytics {
     },
 
     "q_shape_cart_abandonment" ->
-      """WITH e AS (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts,
-        |   event_type FROM events),
-        | m AS (SELECT user_id, event_id, ts, event_type,
-        |   CASE WHEN lag(ts) OVER w IS NULL
-        |     OR date_diff('us', lag(ts) OVER w, ts) > 1800000000
-        |    THEN 1 ELSE 0 END AS new_s
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        | g AS (SELECT user_id, ts, event_type,
-        |   sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |     ROWS UNBOUNDED PRECEDING) AS sid FROM m),
+      s"""$oSessions,
         | sess AS (SELECT user_id, sid, CAST(min(ts) AS DATE) AS day,
         |   max(CASE WHEN event_type IN ('click', 'view') THEN 1 ELSE 0
         |    END) AS browsed,

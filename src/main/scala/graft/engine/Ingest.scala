@@ -585,7 +585,6 @@ object Ingest {
     // unclustered table, with the zkey recomputed by an explicit 32-term
     // shift/mask sum that is bit-identical to the native expression.
     "q_layout_zorder" -> { (s, d) =>
-      graft.engine.functions.GraftFunctions.register(s)
       val out = s"${staging(s, d)}/lineitem_zorder"
       val keyed = Tables.lineitem(s, d)
         .withColumn("zkey", expr("morton2(l_partkey, l_suppkey)"))

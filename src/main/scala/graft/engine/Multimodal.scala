@@ -9,18 +9,24 @@ import org.apache.spark.sql.types._
   * decode/feature-extract stage is a per-partition batch operator.
   *
   * Every codec here is REAL byte-level work, implemented in-repo with no
-  * media libraries: P6 PPM ([[Ppm]]), RIFF/PCM16 WAV ([[Wav]]), zlib PNG
-  * ([[Png]]), baseline T.81 JPEG ([[graft.engine.Jpeg]]) and IMA ADPCM
-  * compressed audio ([[Adpcm]]). Lossy formats keep byte-level oracles by
-  * construction (DC-constant JPEG blocks, constant ADPCM signals decode
-  * exactly); the general lossy paths are PSNR/SNR-tested in
-  * JpegCodecSpec/AdpcmCodecSpec.
+  * media libraries — nine of them: P6 PPM ([[Ppm]]), 24bpp BMP ([[Bmp]]),
+  * RIFF/PCM16 WAV ([[Wav]]), G.711 µ-law ([[Ulaw]]), RLE TGA ([[Tga]]),
+  * LZW GIF ([[Gif]]), IMA ADPCM ([[Adpcm]]), zlib PNG ([[Png]]) and
+  * baseline T.81 JPEG ([[graft.engine.Jpeg]]). The twelve codec rows share
+  * one frame, [[codecRows]]: each synthesizes its media from the
+  * document's characters ([[house]]), round-trips it through a codec in
+  * one `mapPartitions`, and reports statistics that its DuckDB oracle
+  * replays from the same characters ([[oHouse]]). Lossy formats keep
+  * byte-level oracles by construction (DC-constant JPEG blocks, constant
+  * ADPCM signals decode exactly); the general lossy paths are
+  * PSNR/SNR-tested in JpegCodecSpec/AdpcmCodecSpec.
   *
   * Scale posture: decode runs once per partition batch, never on the
   * driver; feature vectors are fixed-width arrays so downstream similarity
   * operators (Vectors.scala) apply unchanged.
   */
 object Multimodal {
+  import Fx.eround
 
   /** Minimal REAL P6 PPM codec — header parse + pixel plane, pure bytes,
     * no media libraries needed. This makes the decode stage genuine for
@@ -772,6 +778,64 @@ object Multimodal {
         length(col("text")).as("n_bytes"),
         col("source").as("origin")).as("meta"))
 
+  /** The house synthesis of every codec row: the 7-bit code of the
+    * document's character at `i`, wrapping around the text. Both engines
+    * mask to 7 bits (the oracle's [[oHouse]] is `ascii(...) % 128`):
+    * `charAt` is a UTF-16 unit, so `& 0xff` would silently diverge from
+    * the oracle's code-point `ascii()` on any non-ASCII input.
+    */
+  private def house(text: String, i: Int): Int =
+    text.charAt(i % text.length) & 0x7f
+
+  /** The first `n` house codes as bytes: the RGB planes of the ppm, png
+    * and bmp rows. */
+  private def housePlane(text: String, n: Int): Array[Byte] =
+    Array.tabulate(n)(house(text, _).toByte)
+
+  /** Block 0..3 of pixel `i` in a 16×16 plane of four 8×8 blocks. */
+  private def block(i: Int): Int = (i / (16 * 8)) * 2 + ((i % 16) / 8)
+
+  /** The 16×16 grayscale plane whose block `b` is constant at house code
+    * `b`: constant blocks are DC-only, so the jpeg, features and resize
+    * rows' JPEG round-trip reproduces it exactly. */
+  private def blockPlane(text: String): Array[Byte] =
+    Array.tabulate(16 * 16)(i => house(text, block(i)).toByte)
+
+  /** Sum of a decoded plane's unsigned bytes. */
+  private def byteSum(plane: Array[Byte]): Long =
+    plane.foldLeft(0L)((acc, b) => acc + (b & 0xff))
+
+  /** The PCM16 sample of house code `i`: (code − 64)·256 ≤ 16128 stays in
+    * Short range, so `.toShort` never wraps. */
+  private def pcm(text: String, i: Int): Short =
+    ((house(text, i) - 64) * 256).toShort
+
+  /** The 64-sample signal of the wav and mulaw rows. */
+  private def signal(text: String): Array[Short] =
+    Array.tabulate(64)(pcm(text, _))
+
+  /** The frame of the codec rows: each document's `(doc_id, text)`,
+    * spread over the cores when `spread` (`Tables.spread`), and one
+    * `mapPartitions` that maps the text through `f` to the output rows
+    * (the columns of `fields`, after `doc_id`). Every double column comes
+    * out ε-rounded to 4dp, as each oracle rounds it.
+    */
+  private def codecRows(s: SparkSession, d: String, spread: Boolean)(
+      fields: (String, DataType)*)(f: String => Seq[Row]): DataFrame = {
+    val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
+    val schema = StructType((("doc_id" -> LongType) +: fields).map {
+      case (n, t) => StructField(n, t)
+    })
+    (if (spread) Tables.spread(s, docs) else docs).mapPartitions(
+      _.flatMap(r => f(r.getString(1))
+        .map(v => Row.fromSeq(r.getLong(0) +: v.toSeq)))
+    )(org.apache.spark.sql.Encoders.row(schema))
+      .select(schema.map { c =>
+        if (c.dataType == DoubleType) eround(col(c.name), 4).as(c.name)
+        else col(c.name)
+      }: _*)
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Oracle-checked metadata path: binary length + md5 digest.
     "q_multimodal_meta" -> { (s, d) =>
@@ -784,46 +848,31 @@ object Multimodal {
         .orderBy(col("media_id"))
     },
 
-    // REAL decode -> feature-extract: a 16x16 4-block JPEG is synthesized
-    // per document, decoded through the genuine T.81 path, and features
-    // are spatial pooling over the DECODED plane (4 block means + global
-    // mean, normalized by the 7-bit max). Constant blocks decode exactly,
-    // so every feature is byte-level oracle-checkable.
+    // REAL decode -> feature-extract: the block plane is decoded through
+    // the genuine T.81 path, and features are spatial pooling over the
+    // DECODED plane (4 block means + global mean, normalized by the 7-bit
+    // max). Constant blocks decode exactly, so every feature is
+    // byte-level oracle-checkable.
     "q_multimodal_features" -> { (s, d) =>
-      val frame = Tables.spread(s,
-        Tables.documents(s, d).select(col("doc_id"), col("text")))
-      val outSchema = StructType(Seq(
-        StructField("doc_id", LongType),
-        StructField("features", ArrayType(DoubleType, containsNull = false))))
-      frame.mapPartitions { rows =>
-        rows.map { r =>
-          val text = r.getString(1)
-          val gray = new Array[Byte](16 * 16)
-          var i = 0
-          while (i < 256) {
-            val blk = (i / (16 * 8)) * 2 + ((i % 16) / 8)
-            gray(i) = (text.charAt(blk % text.length) & 0x7f).toByte
-            i += 1
-          }
-          val (w, h, _, plane) = Jpeg.decode(Jpeg.encodeGray(16, 16, gray))
-          // spatial pooling: per-block means + global mean, /127 normalized
-          val bsum = new Array[Long](4)
-          var j = 0
-          while (j < 256) {
-            bsum((j / (16 * 8)) * 2 + ((j % 16) / 8)) += (plane(j) & 0xff)
-            j += 1
-          }
-          val feats = Array(
-            bsum(0) / 64.0 / 127.0, bsum(1) / 64.0 / 127.0,
-            bsum(2) / 64.0 / 127.0, bsum(3) / 64.0 / 127.0,
-            (bsum(0) + bsum(1) + bsum(2) + bsum(3)) / 256.0 / 127.0)
-          Row(r.getLong(0), feats.toSeq)
+      codecRows(s, d, spread = true)(
+        "features" -> ArrayType(DoubleType, containsNull = false)) { text =>
+        val (_, _, _, plane) = Jpeg.decode(Jpeg.encodeGray(16, 16,
+          blockPlane(text)))
+        val bsum = new Array[Long](4)
+        var j = 0
+        while (j < 256) {
+          bsum(block(j)) += (plane(j) & 0xff)
+          j += 1
         }
-      }(org.apache.spark.sql.Encoders.row(outSchema))
-        .select(col("doc_id"),
-          round(element_at(col("features"), 1) + lit(5e-10), 6).as("f1"),
-          round(aggregate(col("features"), lit(0.0), (a, x) => a + x)
-            + lit(5e-10), 6).as("f_sum"))
+        val feats = Array(
+          bsum(0) / 64.0 / 127.0, bsum(1) / 64.0 / 127.0,
+          bsum(2) / 64.0 / 127.0, bsum(3) / 64.0 / 127.0,
+          (bsum(0) + bsum(1) + bsum(2) + bsum(3)) / 256.0 / 127.0)
+        Seq(Row(feats.toSeq))
+      }.select(col("doc_id"),
+          eround(element_at(col("features"), 1), 6).as("f1"),
+          eround(aggregate(col("features"), lit(0.0), (a, x) => a + x), 6)
+            .as("f_sum"))
         .orderBy(col("doc_id"))
     },
 
@@ -833,139 +882,69 @@ object Multimodal {
     // frame, and emits per-frame dimensions + the decoded mean — the
     // decode-side of frame extraction, fully oracle-checked.
     "q_multimodal_frames" -> { (s, d) =>
-      val frame = Tables.spread(s,
-        Tables.documents(s, d).select(col("doc_id"), col("text")))
-      val outSchema = StructType(Seq(
-        StructField("doc_id", LongType),
-        StructField("frame_idx", IntegerType),
-        StructField("fw", IntegerType),
-        StructField("fh", IntegerType),
-        StructField("y_mean", DoubleType)))
-      frame.mapPartitions { rows =>
-        rows.flatMap { r =>
-          val text = r.getString(1)
-          val stream = (0 until 4).flatMap { k =>
-            val v = (text.charAt(k % text.length) & 0x7f).toByte
-            Jpeg.encodeGray(8, 8, Array.fill(64)(v)).toSeq
-          }.toArray
-          Jpeg.splitStream(stream).zipWithIndex.map { case (f, i) =>
-            val (fw, fh, _, plane) = Jpeg.decode(f)
-            var sum = 0L
-            plane.foreach(b => sum += (b & 0xff))
-            Row(r.getLong(0), i, fw, fh, sum / 64.0)
-          }
+      codecRows(s, d, spread = true)("frame_idx" -> IntegerType,
+        "fw" -> IntegerType, "fh" -> IntegerType,
+        "y_mean" -> DoubleType) { text =>
+        val stream = (0 until 4).flatMap { k =>
+          Jpeg.encodeGray(8, 8, Array.fill(64)(house(text, k).toByte)).toSeq
+        }.toArray
+        Jpeg.splitStream(stream).zipWithIndex.map { case (f, i) =>
+          val (fw, fh, _, plane) = Jpeg.decode(f)
+          Row(i, fw, fh, byteSum(plane) / 64.0)
         }
-      }(org.apache.spark.sql.Encoders.row(outSchema))
-        .select(col("doc_id"), col("frame_idx"), col("fw"), col("fh"),
-          round(col("y_mean") + lit(5e-10), 4).as("y_mean"))
-        .orderBy(col("doc_id"), col("frame_idx"))
+      }.orderBy(col("doc_id"), col("frame_idx"))
     },
 
-    // REAL image path: deterministic 8x4 PPM images are synthesized from
-    // the document characters, then the genuine codec round-trips them —
-    // encode -> header-parse decode -> channel statistics -> real
-    // nearest-neighbor resize -> decode again. Fully oracle-checked (the
-    // oracle recomputes the channel means from the same characters).
+    // REAL image path: an 8x4 PPM image of house codes round-trips
+    // through the genuine codec — encode -> header-parse decode ->
+    // channel statistics -> real nearest-neighbor resize -> decode again.
+    // Fully oracle-checked (the oracle recomputes the channel means from
+    // the same characters).
     "q_multimodal_ppm" -> { (s, d) =>
-      val frame = Tables.documents(s, d).select(col("doc_id"), col("text"))
-      val outSchema = StructType(Seq(
-        StructField("doc_id", LongType),
-        StructField("w", IntegerType),
-        StructField("h", IntegerType),
-        StructField("r_mean", DoubleType),
-        StructField("g_mean", DoubleType),
-        StructField("b_mean", DoubleType),
-        StructField("rw", IntegerType),
-        StructField("rh", IntegerType)))
-      frame.mapPartitions { rows =>
-        rows.map { r =>
-          val text = r.getString(1)
-          // 7-bit mask on BOTH engines (oracle: ascii(...) % 128): charAt is
-          // a UTF-16 unit, so & 0xff would silently diverge from the
-          // oracle's code-point ascii() on any non-ASCII input.
-          val px = Array.tabulate(8 * 4 * 3)(i =>
-            (text.charAt(i % text.length) & 0x7f).toByte)
-          val img = Ppm.encode(8, 4, px)
-          val (w, h, rgb) = Ppm.decode(img)
-          val (rm, gm, bm) = Ppm.channelMeans(rgb)
-          val (rw, rh, _) = Ppm.decode(Ppm.resizeNearest(w, h, rgb, 4, 2))
-          Row(r.getLong(0), w, h, rm, gm, bm, rw, rh)
-        }
-      }(org.apache.spark.sql.Encoders.row(outSchema))
-        .select(col("doc_id"), col("w"), col("h"),
-          round(col("r_mean") + lit(5e-10), 4).as("r_mean"),
-          round(col("g_mean") + lit(5e-10), 4).as("g_mean"),
-          round(col("b_mean") + lit(5e-10), 4).as("b_mean"),
-          col("rw"), col("rh"))
-        .orderBy(col("doc_id"))
+      codecRows(s, d, spread = false)(
+        "w" -> IntegerType, "h" -> IntegerType, "r_mean" -> DoubleType,
+        "g_mean" -> DoubleType, "b_mean" -> DoubleType,
+        "rw" -> IntegerType, "rh" -> IntegerType) { text =>
+        val (w, h, rgb) = Ppm.decode(Ppm.encode(8, 4, housePlane(text, 96)))
+        val (rm, gm, bm) = Ppm.channelMeans(rgb)
+        val (rw, rh, _) = Ppm.decode(Ppm.resizeNearest(w, h, rgb, 4, 2))
+        Seq(Row(w, h, rm, gm, bm, rw, rh))
+      }.orderBy(col("doc_id"))
     },
 
     // REAL BMP path: the same synthesized plane as ppm/png but at 7×4 so
     // the row stride pads (21 → 24 bytes) — the decode must undo
     // bottom-up row order, BGR channel order, AND stride padding to
     // reproduce the plane; channel means then replay in the oracle from
-    // the same ascii()%128 construction, and the layout fields
-    // (file_size, row_stride) are closed-form header checks.
+    // the same house codes, and the layout fields (file_size, row_stride)
+    // are closed-form header checks.
     "q_multimodal_bmp" -> { (s, d) =>
-      val frame = Tables.documents(s, d).select(col("doc_id"), col("text"))
-      val outSchema = StructType(Seq(
-        StructField("doc_id", LongType),
-        StructField("w", IntegerType),
-        StructField("h", IntegerType),
-        StructField("r_mean", DoubleType),
-        StructField("g_mean", DoubleType),
-        StructField("b_mean", DoubleType),
-        StructField("file_size", IntegerType),
-        StructField("row_stride", IntegerType)))
-      frame.mapPartitions { rows =>
-        rows.map { r =>
-          val text = r.getString(1)
-          val px = Array.tabulate(7 * 4 * 3)(i =>
-            (text.charAt(i % text.length) & 0x7f).toByte)
-          val img = Bmp.encode(7, 4, px)
-          val (w, h, rgb) = Bmp.decode(img)
-          require(java.util.Arrays.equals(rgb, px),
-            "bmp round-trip must reproduce the plane bit-for-bit")
-          val (rm, gm, bm) = Ppm.channelMeans(rgb)
-          Row(r.getLong(0), w, h, rm, gm, bm, img.length, Bmp.stride(w))
-        }
-      }(org.apache.spark.sql.Encoders.row(outSchema))
-        .select(col("doc_id"), col("w"), col("h"),
-          round(col("r_mean") + lit(5e-10), 4).as("r_mean"),
-          round(col("g_mean") + lit(5e-10), 4).as("g_mean"),
-          round(col("b_mean") + lit(5e-10), 4).as("b_mean"),
-          col("file_size"), col("row_stride"))
-        .orderBy(col("doc_id"))
+      codecRows(s, d, spread = false)(
+        "w" -> IntegerType, "h" -> IntegerType, "r_mean" -> DoubleType,
+        "g_mean" -> DoubleType, "b_mean" -> DoubleType,
+        "file_size" -> IntegerType, "row_stride" -> IntegerType) { text =>
+        val px = housePlane(text, 7 * 4 * 3)
+        val img = Bmp.encode(7, 4, px)
+        val (w, h, rgb) = Bmp.decode(img)
+        require(java.util.Arrays.equals(rgb, px),
+          "bmp round-trip must reproduce the plane bit-for-bit")
+        val (rm, gm, bm) = Ppm.channelMeans(rgb)
+        Seq(Row(w, h, rm, gm, bm, img.length, Bmp.stride(w)))
+      }.orderBy(col("doc_id"))
     },
 
-    // REAL audio path (like q_multimodal_ppm for images): deterministic
-    // PCM16 waveforms are synthesized from document characters, encoded to
-    // canonical RIFF/WAV, then the genuine codec parses the header,
-    // extracts samples, and computes real signal statistics (RMS, peak).
-    // Fully oracle-checked.
+    // REAL audio path (like q_multimodal_ppm for images): the PCM16
+    // signal is encoded to canonical RIFF/WAV, then the genuine codec
+    // parses the header, extracts samples, and computes real signal
+    // statistics (RMS, peak). Fully oracle-checked.
     "q_multimodal_wav" -> { (s, d) =>
-      val frame = Tables.documents(s, d).select(col("doc_id"), col("text"))
-      val outSchema = StructType(Seq(
-        StructField("doc_id", LongType),
-        StructField("sample_rate", IntegerType),
-        StructField("n_samples", IntegerType),
-        StructField("rms", DoubleType),
-        StructField("peak", IntegerType)))
-      frame.mapPartitions { rows =>
-        rows.map { r =>
-          val text = r.getString(1)
-          // 7-bit mask (see q_multimodal_ppm): (0x7f - 64) * 256 = 16128
-          // stays within Short range, so the .toShort never wraps.
-          val samples = Array.tabulate(64)(i =>
-            (((text.charAt(i % text.length) & 0x7f) - 64) * 256).toShort)
-          val (rate, back) = Wav.decode(Wav.encode(8000, samples))
-          val (rms, peak) = Wav.stats(back)
-          Row(r.getLong(0), rate, back.length, rms, peak)
-        }
-      }(org.apache.spark.sql.Encoders.row(outSchema))
-        .select(col("doc_id"), col("sample_rate"), col("n_samples"),
-          round(col("rms") + lit(5e-10), 4).as("rms"), col("peak"))
-        .orderBy(col("doc_id"))
+      codecRows(s, d, spread = false)("sample_rate" -> IntegerType,
+        "n_samples" -> IntegerType, "rms" -> DoubleType,
+        "peak" -> IntegerType) { text =>
+        val (rate, back) = Wav.decode(Wav.encode(8000, signal(text)))
+        val (rms, peak) = Wav.stats(back)
+        Seq(Row(rate, back.length, rms, peak))
+      }.orderBy(col("doc_id"))
     },
 
     // REAL compressed-audio path: PCM16 -> IMA ADPCM (4 bits/sample) ->
@@ -974,69 +953,42 @@ object Multimodal {
     // the adaptive lossy path is SNR-tested in AdpcmCodecSpec. adpcm_bytes
     // pins the 4:1 compression concretely (header + n/2 nibble bytes).
     "q_multimodal_adpcm" -> { (s, d) =>
-      val frame = Tables.documents(s, d).select(col("doc_id"), col("text"))
-      val outSchema = StructType(Seq(
-        StructField("doc_id", LongType),
-        StructField("n_samples", IntegerType),
-        StructField("adpcm_bytes", IntegerType),
-        StructField("rms", DoubleType),
-        StructField("peak", IntegerType)))
-      frame.mapPartitions { rows =>
-        rows.map { r =>
-          val text = r.getString(1)
-          val c = (((text.charAt(0) & 0x7f) - 64) * 256).toShort
-          val samples = Array.fill(400)(c)
-          val enc = Adpcm.encode(samples)
-          val back = Adpcm.decode(enc)
-          val (rms, peak) = Wav.stats(back)
-          Row(r.getLong(0), back.length, enc.length, rms, peak)
-        }
-      }(org.apache.spark.sql.Encoders.row(outSchema))
-        .select(col("doc_id"), col("n_samples"), col("adpcm_bytes"),
-          round(col("rms") + lit(5e-10), 4).as("rms"), col("peak"))
-        .orderBy(col("doc_id"))
+      codecRows(s, d, spread = false)("n_samples" -> IntegerType,
+        "adpcm_bytes" -> IntegerType, "rms" -> DoubleType,
+        "peak" -> IntegerType) { text =>
+        val enc = Adpcm.encode(Array.fill(400)(pcm(text, 0)))
+        val back = Adpcm.decode(enc)
+        val (rms, peak) = Wav.stats(back)
+        Seq(Row(back.length, enc.length, rms, peak))
+      }.orderBy(col("doc_id"))
     },
 
     // REAL telephony-codec path: PCM16 -> G.711 µ-law (8 bits/sample,
-    // 2:1) -> decode, over the same synthesized 64-sample signal as
-    // q_multimodal_wav. Unlike ADPCM's adaptive state, µ-law is
-    // STATELESS integer companding, so the per-sample quantization
-    // error is an exact integer function of the sample and the whole
-    // round-trip is SQL-oracle-replayable — max_abs_err and the count
-    // columns are pure integers; rms_err takes the one sqrt at 4dp.
+    // 2:1) -> decode, over the same 64-sample signal as q_multimodal_wav.
+    // Unlike ADPCM's adaptive state, µ-law is STATELESS integer
+    // companding, so the per-sample quantization error is an exact
+    // integer function of the sample and the whole round-trip is
+    // SQL-oracle-replayable — max_abs_err and the count columns are pure
+    // integers; rms_err takes the one sqrt at 4dp.
     "q_multimodal_mulaw" -> { (s, d) =>
-      val frame = Tables.documents(s, d).select(col("doc_id"), col("text"))
-      val outSchema = StructType(Seq(
-        StructField("doc_id", LongType),
-        StructField("n_samples", IntegerType),
-        StructField("bytes_pcm", IntegerType),
-        StructField("bytes_ulaw", IntegerType),
-        StructField("max_abs_err", IntegerType),
-        StructField("rms_err", DoubleType)))
-      frame.mapPartitions { rows =>
-        rows.map { r =>
-          val text = r.getString(1)
-          val samples = Array.tabulate(64)(i =>
-            (((text.charAt(i % text.length) & 0x7f) - 64) * 256).toShort)
-          val enc = samples.map(Ulaw.encode)
-          val back = enc.map(Ulaw.decode)
-          var maxErr = 0
-          var sumSq = 0.0
-          var i = 0
-          while (i < samples.length) {
-            val e = back(i) - samples(i)
-            if (math.abs(e) > maxErr) maxErr = math.abs(e)
-            sumSq += e.toDouble * e
-            i += 1
-          }
-          Row(r.getLong(0), samples.length, samples.length * 2,
-            enc.length, maxErr, math.sqrt(sumSq / samples.length))
+      codecRows(s, d, spread = false)("n_samples" -> IntegerType,
+        "bytes_pcm" -> IntegerType, "bytes_ulaw" -> IntegerType,
+        "max_abs_err" -> IntegerType, "rms_err" -> DoubleType) { text =>
+        val samples = signal(text)
+        val enc = samples.map(Ulaw.encode)
+        val back = enc.map(Ulaw.decode)
+        var maxErr = 0
+        var sumSq = 0.0
+        var i = 0
+        while (i < samples.length) {
+          val e = back(i) - samples(i)
+          if (math.abs(e) > maxErr) maxErr = math.abs(e)
+          sumSq += e.toDouble * e
+          i += 1
         }
-      }(org.apache.spark.sql.Encoders.row(outSchema))
-        .select(col("doc_id"), col("n_samples"), col("bytes_pcm"),
-          col("bytes_ulaw"), col("max_abs_err"),
-          round(col("rms_err") + lit(5e-10), 4).as("rms_err"))
-        .orderBy(col("doc_id"))
+        Seq(Row(samples.length, samples.length * 2, enc.length, maxErr,
+          math.sqrt(sumSq / samples.length)))
+      }.orderBy(col("doc_id"))
     },
 
     // REAL RLE-image path: the 8×8 4-block grayscale plane through the
@@ -1047,154 +999,74 @@ object Multimodal {
     // oracle-gated, not just the decoded stats — the only codec row
     // where the compression ratio is hash-checked.
     "q_multimodal_tga" -> { (s, d) =>
-      val frame = Tables.documents(s, d).select(col("doc_id"), col("text"))
-      val outSchema = StructType(Seq(
-        StructField("doc_id", LongType),
-        StructField("w", IntegerType),
-        StructField("h", IntegerType),
-        StructField("tga_bytes", IntegerType),
-        StructField("px_sum", IntegerType),
-        StructField("mean_px", DoubleType),
-        StructField("roundtrip_ok", BooleanType)))
-      frame.mapPartitions { rows =>
-        rows.map { r =>
-          val text = r.getString(1)
-          def v(i: Int): Int = text.charAt(i % text.length) & 0x7f
-          val px = Array.tabulate(64) { p =>
-            val (y, x) = (p / 8, p % 8)
-            v(2 * (y / 4) + (x / 4))
-          }
-          val enc = Tga.encode(8, 8, px)
-          val (w, h, back) = Tga.decode(enc)
-          Row(r.getLong(0), w, h, enc.length, back.sum,
-            back.sum / 64.0, java.util.Arrays.equals(back, px))
-        }
-      }(org.apache.spark.sql.Encoders.row(outSchema))
-        .select(col("doc_id"), col("w"), col("h"), col("tga_bytes"),
-          col("px_sum"),
-          round(col("mean_px") + lit(5e-10), 4).as("mean_px"),
-          col("roundtrip_ok"))
-        .orderBy(col("doc_id"))
+      codecRows(s, d, spread = false)(
+        "w" -> IntegerType, "h" -> IntegerType, "tga_bytes" -> IntegerType,
+        "px_sum" -> IntegerType, "mean_px" -> DoubleType,
+        "roundtrip_ok" -> BooleanType) { text =>
+        val px = Array.tabulate(64)(p => house(text, 2 * (p / 32) + p % 8 / 4))
+        val enc = Tga.encode(8, 8, px)
+        val (w, h, back) = Tga.decode(enc)
+        Seq(Row(w, h, enc.length, back.sum, back.sum / 64.0,
+          java.util.Arrays.equals(back, px)))
+      }.orderBy(col("doc_id"))
     },
 
-    // REAL GIF89a path (r12): a 16x16 indexed plane (palette index =
-    // 7-bit char code, the house synthesis) round-tripped through the
-    // genuine LZW codec — variable-width codes, clear/EOI, dictionary
-    // width bumps, sub-block framing. GIF's LZW is lossless, so unlike
-    // JPEG the WHOLE plane oracle-checks: px_sum/mean replay as byte
-    // arithmetic while the stream exercises real dictionary dynamics
-    // (the 256-pixel plane pushes codes into 9-bit width). The encoded
-    // size is dictionary-path-dependent (not SQL-expressible) and is
-    // law-tested in GifCodecSpec instead, which also validates the
-    // encoder against the JDK's own ImageIO GIF reader — an independent
-    // implementation, not just our decoder.
+    // REAL GIF89a path: a 16x16 indexed plane (palette index = house
+    // code) round-tripped through the genuine LZW codec — variable-width
+    // codes, clear/EOI, dictionary width bumps, sub-block framing. GIF's
+    // LZW is lossless, so unlike JPEG the WHOLE plane oracle-checks:
+    // px_sum/mean replay as byte arithmetic while the stream exercises
+    // real dictionary dynamics (the 256-pixel plane pushes codes into
+    // 9-bit width). The encoded size is dictionary-path-dependent (not
+    // SQL-expressible) and is law-tested in GifCodecSpec instead, which
+    // also validates the encoder against the JDK's own ImageIO GIF
+    // reader — an independent implementation, not just our decoder.
     "q_multimodal_gif" -> { (s, d) =>
-      val frame = Tables.spread(s,
-        Tables.documents(s, d).select(col("doc_id"), col("text")))
-      val outSchema = StructType(Seq(
-        StructField("doc_id", LongType),
-        StructField("w", IntegerType),
-        StructField("h", IntegerType),
-        StructField("px_sum", IntegerType),
-        StructField("mean_px", DoubleType),
-        StructField("roundtrip_ok", BooleanType)))
-      frame.mapPartitions { rows =>
-        rows.map { r =>
-          val text = r.getString(1)
-          val px = Array.tabulate(256)(i =>
-            text.charAt(i % text.length) & 0x7f)
-          val enc = Gif.encode(16, 16, px)
-          val (w, h, back) = Gif.decode(enc)
-          Row(r.getLong(0), w, h, back.sum, back.sum / 256.0,
-            w == 16 && h == 16 && java.util.Arrays.equals(back, px))
-        }
-      }(org.apache.spark.sql.Encoders.row(outSchema))
-        .select(col("doc_id"), col("w"), col("h"), col("px_sum"),
-          round(col("mean_px") + lit(5e-10), 4).as("mean_px"),
-          col("roundtrip_ok"))
-        .orderBy(col("doc_id"))
+      codecRows(s, d, spread = true)(
+        "w" -> IntegerType, "h" -> IntegerType, "px_sum" -> IntegerType,
+        "mean_px" -> DoubleType, "roundtrip_ok" -> BooleanType) { text =>
+        val px = Array.tabulate(256)(house(text, _))
+        val (w, h, back) = Gif.decode(Gif.encode(16, 16, px))
+        Seq(Row(w, h, back.sum, back.sum / 256.0,
+          w == 16 && h == 16 && java.util.Arrays.equals(back, px)))
+      }.orderBy(col("doc_id"))
     },
 
-    // REAL PNG path: the same synthesized 8x4 pixel plane as
-    // q_multimodal_ppm, but round-tripped through the genuine PNG codec —
-    // zlib deflate/inflate, CRC-verified chunk framing, and
-    // Sub/Up/Average/Paeth scanline unfiltering — then channel statistics
-    // and a real resize. png_bytes (the compressed size) is emitted
-    // rows-only (deflate output isn't SQL-expressible); the
+    // REAL PNG path: the same 8x4 pixel plane as q_multimodal_ppm, but
+    // round-tripped through the genuine PNG codec — zlib deflate/inflate,
+    // CRC-verified chunk framing, and Sub/Up/Average/Paeth scanline
+    // unfiltering — then channel statistics and a real resize. The
     // oracle-checked columns recompute the channel means from the same
     // characters.
     "q_multimodal_png" -> { (s, d) =>
-      val frame = Tables.spread(s,
-        Tables.documents(s, d).select(col("doc_id"), col("text")))
-      val outSchema = StructType(Seq(
-        StructField("doc_id", LongType),
-        StructField("w", IntegerType),
-        StructField("h", IntegerType),
-        StructField("r_mean", DoubleType),
-        StructField("g_mean", DoubleType),
-        StructField("b_mean", DoubleType),
-        StructField("rw", IntegerType),
-        StructField("rh", IntegerType)))
-      frame.mapPartitions { rows =>
-        rows.map { r =>
-          val text = r.getString(1)
-          val px = Array.tabulate(8 * 4 * 3)(i =>
-            (text.charAt(i % text.length) & 0x7f).toByte)
-          val img = Png.encode(8, 4, px)
-          val (w, h, rgb) = Png.decode(img)
-          val (rm, gm, bm) = Ppm.channelMeans(rgb)
-          val (rw, rh, _) = Png.decode(
-            Png.encode(4, 2, Ppm.decode(
-              Ppm.resizeNearest(w, h, rgb, 4, 2))._3))
-          Row(r.getLong(0), w, h, rm, gm, bm, rw, rh)
-        }
-      }(org.apache.spark.sql.Encoders.row(outSchema))
-        .select(col("doc_id"), col("w"), col("h"),
-          round(col("r_mean") + lit(5e-10), 4).as("r_mean"),
-          round(col("g_mean") + lit(5e-10), 4).as("g_mean"),
-          round(col("b_mean") + lit(5e-10), 4).as("b_mean"),
-          col("rw"), col("rh"))
-        .orderBy(col("doc_id"))
+      codecRows(s, d, spread = true)(
+        "w" -> IntegerType, "h" -> IntegerType, "r_mean" -> DoubleType,
+        "g_mean" -> DoubleType, "b_mean" -> DoubleType,
+        "rw" -> IntegerType, "rh" -> IntegerType) { text =>
+        val (w, h, rgb) = Png.decode(Png.encode(8, 4, housePlane(text, 96)))
+        val (rm, gm, bm) = Ppm.channelMeans(rgb)
+        val (rw, rh, _) = Png.decode(
+          Png.encode(4, 2, Ppm.decode(
+            Ppm.resizeNearest(w, h, rgb, 4, 2))._3))
+        Seq(Row(w, h, rm, gm, bm, rw, rh))
+      }.orderBy(col("doc_id"))
     },
 
     // REAL JPEG path: a genuine baseline-sequential T.81 codec (FDCT,
     // Annex K Huffman tables, zigzag, byte stuffing — Jpeg.scala). JPEG is
-    // lossy in general, so the oracle-checkable surface is built from
-    // constant-color 8x8 blocks: those are DC-only and, with the DC quant
+    // lossy in general, so the oracle-checkable surface is the block
+    // plane: constant-color 8x8 blocks are DC-only and, with the DC quant
     // step pinned to 1, round-trip EXACTLY — the decoded plane mean is
     // byte-level SQL-expressible while the stream still exercises the full
     // DCT/Huffman/marker machinery. The lossy general path is PSNR-tested
     // in JpegCodecSpec.
     "q_multimodal_jpeg" -> { (s, d) =>
-      val frame = Tables.spread(s,
-        Tables.documents(s, d).select(col("doc_id"), col("text")))
-      val outSchema = StructType(Seq(
-        StructField("doc_id", LongType),
-        StructField("w", IntegerType),
-        StructField("h", IntegerType),
-        StructField("y_mean", DoubleType)))
-      frame.mapPartitions { rows =>
-        rows.map { r =>
-          val text = r.getString(1)
-          // 16x16 grayscale, one constant value per 8x8 block, 7-bit mask
-          // on BOTH engines (oracle: ascii(...) % 128)
-          val gray = new Array[Byte](16 * 16)
-          var i = 0
-          while (i < 256) {
-            val blk = (i / (16 * 8)) * 2 + ((i % 16) / 8)
-            gray(i) = (text.charAt(blk % text.length) & 0x7f).toByte
-            i += 1
-          }
-          val img = Jpeg.encodeGray(16, 16, gray)
-          val (w, h, _, plane) = Jpeg.decode(img)
-          var sum = 0L
-          plane.foreach(b => sum += (b & 0xff))
-          Row(r.getLong(0), w, h, sum / 256.0)
-        }
-      }(org.apache.spark.sql.Encoders.row(outSchema))
-        .select(col("doc_id"), col("w"), col("h"),
-          round(col("y_mean") + lit(5e-10), 4).as("y_mean"))
-        .orderBy(col("doc_id"))
+      codecRows(s, d, spread = true)("w" -> IntegerType,
+        "h" -> IntegerType, "y_mean" -> DoubleType) { text =>
+        val (w, h, _, plane) = Jpeg.decode(Jpeg.encodeGray(16, 16,
+          blockPlane(text)))
+        Seq(Row(w, h, byteSum(plane) / 256.0))
+      }.orderBy(col("doc_id"))
     },
 
     // REAL resize pipeline: decode JPEG -> nearest-neighbor downscale of
@@ -1203,126 +1075,91 @@ object Multimodal {
     // plane before re-encoding (exact for constant blocks), so the whole
     // row is oracle-checkable.
     "q_multimodal_resize" -> { (s, d) =>
-      val frame = Tables.spread(s,
-        Tables.documents(s, d).select(col("doc_id"), col("text")))
-      val outSchema = StructType(Seq(
-        StructField("doc_id", LongType),
-        StructField("w", IntegerType),
-        StructField("h", IntegerType),
-        StructField("rw", IntegerType),
-        StructField("rh", IntegerType),
-        StructField("resized_mean", DoubleType)))
-      frame.mapPartitions { rows =>
-        rows.map { r =>
-          val text = r.getString(1)
-          val gray = new Array[Byte](16 * 16)
-          var i = 0
-          while (i < 256) {
-            val blk = (i / (16 * 8)) * 2 + ((i % 16) / 8)
-            gray(i) = (text.charAt(blk % text.length) & 0x7f).toByte
-            i += 1
-          }
-          val (w, h, _, plane) = Jpeg.decode(Jpeg.encodeGray(16, 16, gray))
-          val resized = Array.tabulate(8 * 8)(j =>
-            plane((j / 8 * 2) * 16 + (j % 8) * 2))
-          var sum = 0L
-          resized.foreach(b => sum += (b & 0xff))
-          val (rw, rh, _, _) = Jpeg.decode(Jpeg.encodeGray(8, 8, resized))
-          Row(r.getLong(0), w, h, rw, rh, sum / 64.0)
-        }
-      }(org.apache.spark.sql.Encoders.row(outSchema))
-        .select(col("doc_id"), col("w"), col("h"), col("rw"), col("rh"),
-          round(col("resized_mean") + lit(5e-10), 4).as("resized_mean"))
-        .orderBy(col("doc_id"))
+      codecRows(s, d, spread = true)(
+        "w" -> IntegerType, "h" -> IntegerType, "rw" -> IntegerType,
+        "rh" -> IntegerType, "resized_mean" -> DoubleType) { text =>
+        val (w, h, _, plane) = Jpeg.decode(Jpeg.encodeGray(16, 16,
+          blockPlane(text)))
+        val resized = Array.tabulate(8 * 8)(j =>
+          plane((j / 8 * 2) * 16 + (j % 8) * 2))
+        val (rw, rh, _, _) = Jpeg.decode(Jpeg.encodeGray(8, 8, resized))
+        Seq(Row(w, h, rw, rh, byteSum(resized) / 64.0))
+      }.orderBy(col("doc_id"))
     },
 
   )
 
+  /** DuckDB twin of [[house]] at position expression `i`. */
+  private def oHouse(i: String): String =
+    s"ascii(substring(text, ($i % length(text)) + 1, 1)) % 128"
+
+  /** CTE `px(doc_id, i, v)`: house codes 0 until `n` per document, or
+    * with `pcm` their PCM16 samples ([[pcm]]). */
+  private def oPixels(n: Int, pcm: Boolean = false): String = {
+    val v = if (pcm) s"(${oHouse("i")} - 64) * 256" else oHouse("i")
+    s"px AS (SELECT doc_id, i, $v AS v FROM documents, " +
+      s"LATERAL unnest(generate_series(0, ${n - 1})) u(i))"
+  }
+
+  /** CTE `v(doc_id, v0..v3)`: the four block codes of [[blockPlane]]. */
+  private val oBlocks: String = "v AS (SELECT doc_id, " +
+    (0 to 3).map(b => s"${oHouse(b.toString)} AS v$b").mkString(", ") +
+    " FROM documents)"
+
+  /** The ppm/png/bmp oracle: channel means of a `w`×`h` RGB house plane,
+    * then the row's constant `tail` columns. */
+  private def oChannelMeans(w: Int, h: Int, tail: String): String =
+    s"""WITH ${oPixels(w * h * 3)}
+      | SELECT doc_id, $w AS w, $h AS h,
+      |  round(avg(v) FILTER (i % 3 = 0) + 5e-10, 4) AS r_mean,
+      |  round(avg(v) FILTER (i % 3 = 1) + 5e-10, 4) AS g_mean,
+      |  round(avg(v) FILTER (i % 3 = 2) + 5e-10, 4) AS b_mean,
+      |  $tail
+      | FROM px GROUP BY doc_id ORDER BY doc_id"""
+      .stripMargin.replaceAll("\n", " ")
+
   val oracle: Map[String, String] = Map(
-    "q_multimodal_ppm" ->
-      """WITH px AS (
-        | SELECT doc_id, i,
-        |  ascii(substring(text, (i % length(text)) + 1, 1)) % 128 AS v
-        | FROM documents, LATERAL unnest(generate_series(0, 95)) u(i))
-        | SELECT doc_id, 8 AS w, 4 AS h,
-        |  round(avg(v) FILTER (i % 3 = 0) + 5e-10, 4) AS r_mean,
-        |  round(avg(v) FILTER (i % 3 = 1) + 5e-10, 4) AS g_mean,
-        |  round(avg(v) FILTER (i % 3 = 2) + 5e-10, 4) AS b_mean,
-        |  4 AS rw, 2 AS rh
-        | FROM px GROUP BY doc_id ORDER BY doc_id"""
-        .stripMargin.replaceAll("\n", " "),
+    "q_multimodal_ppm" -> oChannelMeans(8, 4, "4 AS rw, 2 AS rh"),
 
     // Same plane at 7×4; file_size = 54 + 4 rows × 24-byte stride.
     "q_multimodal_bmp" ->
-      """WITH px AS (
-        | SELECT doc_id, i,
-        |  ascii(substring(text, (i % length(text)) + 1, 1)) % 128 AS v
-        | FROM documents, LATERAL unnest(generate_series(0, 83)) u(i))
-        | SELECT doc_id, 7 AS w, 4 AS h,
-        |  round(avg(v) FILTER (i % 3 = 0) + 5e-10, 4) AS r_mean,
-        |  round(avg(v) FILTER (i % 3 = 1) + 5e-10, 4) AS g_mean,
-        |  round(avg(v) FILTER (i % 3 = 2) + 5e-10, 4) AS b_mean,
-        |  150 AS file_size, 24 AS row_stride
-        | FROM px GROUP BY doc_id ORDER BY doc_id"""
-        .stripMargin.replaceAll("\n", " "),
+      oChannelMeans(7, 4, "150 AS file_size, 24 AS row_stride"),
 
     // Pixel-identical to the ppm oracle: the png codec must round-trip the
     // same synthesized plane bit-for-bit.
-    "q_multimodal_png" ->
-      """WITH px AS (
-        | SELECT doc_id, i,
-        |  ascii(substring(text, (i % length(text)) + 1, 1)) % 128 AS v
-        | FROM documents, LATERAL unnest(generate_series(0, 95)) u(i))
-        | SELECT doc_id, 8 AS w, 4 AS h,
-        |  round(avg(v) FILTER (i % 3 = 0) + 5e-10, 4) AS r_mean,
-        |  round(avg(v) FILTER (i % 3 = 1) + 5e-10, 4) AS g_mean,
-        |  round(avg(v) FILTER (i % 3 = 2) + 5e-10, 4) AS b_mean,
-        |  4 AS rw, 2 AS rh
-        | FROM px GROUP BY doc_id ORDER BY doc_id"""
-        .stripMargin.replaceAll("\n", " "),
+    "q_multimodal_png" -> oChannelMeans(8, 4, "4 AS rw, 2 AS rh"),
 
     // Constant signal reconstructs exactly: rms = peak = |c| (IEEE sqrt of
     // a perfect square is exact), adpcm_bytes = 7-byte header + n/2.
     "q_multimodal_adpcm" ->
-      """SELECT doc_id, 400 AS n_samples, 207 AS adpcm_bytes,
-        | round(CAST(abs((ascii(substring(text, 1, 1)) % 128 - 64) * 256)
-        |   AS DOUBLE) + 5e-10, 4) AS rms,
-        | abs((ascii(substring(text, 1, 1)) % 128 - 64) * 256) AS peak
+      s"""SELECT doc_id, 400 AS n_samples, 207 AS adpcm_bytes,
+        | round(CAST(abs((${oHouse("0")} - 64) * 256) AS DOUBLE)
+        |   + 5e-10, 4) AS rms,
+        | abs((${oHouse("0")} - 64) * 256) AS peak
         | FROM documents ORDER BY doc_id"""
         .stripMargin.replaceAll("\n", " "),
 
     // Decoded plane is exact for constant blocks, so the mean over the 4
     // block constants replicates the Spark-side decoded-plane mean.
     "q_multimodal_jpeg" ->
-      """WITH px AS (
-        | SELECT doc_id, b,
-        |  ascii(substring(text, (b % length(text)) + 1, 1)) % 128 AS v
-        | FROM documents, LATERAL unnest(generate_series(0, 3)) u(b))
+      s"""WITH ${oPixels(4)}
         | SELECT doc_id, 16 AS w, 16 AS h,
         |  round(avg(v) + 5e-10, 4) AS y_mean
         | FROM px GROUP BY doc_id ORDER BY doc_id"""
         .stripMargin.replaceAll("\n", " "),
 
     "q_multimodal_wav" ->
-      """WITH sm AS (
-        | SELECT doc_id,
-        |  (ascii(substring(text, (i % length(text)) + 1, 1)) % 128 - 64) * 256 AS v
-        | FROM documents, LATERAL unnest(generate_series(0, 63)) u(i))
+      s"""WITH ${oPixels(64, pcm = true)}
         | SELECT doc_id, 8000 AS sample_rate, 64 AS n_samples,
         |  round(sqrt(avg(CAST(v AS DOUBLE) * v)) + 5e-10, 4) AS rms,
         |  CAST(max(abs(v)) AS INT) AS peak
-        | FROM sm GROUP BY doc_id ORDER BY doc_id"""
+        | FROM px GROUP BY doc_id ORDER BY doc_id"""
         .stripMargin.replaceAll("\n", " "),
 
     // RLE byte math replayed: rows of a block pair cost 2 bytes when
     // the blocks match, 4 when they differ; 18-byte header.
     "q_multimodal_tga" ->
-      """WITH v AS (SELECT doc_id,
-        |  ascii(substring(text, (0 % length(text)) + 1, 1)) % 128 AS v0,
-        |  ascii(substring(text, (1 % length(text)) + 1, 1)) % 128 AS v1,
-        |  ascii(substring(text, (2 % length(text)) + 1, 1)) % 128 AS v2,
-        |  ascii(substring(text, (3 % length(text)) + 1, 1)) % 128 AS v3
-        | FROM documents)
+      s"""WITH $oBlocks
         | SELECT doc_id, 8 AS w, 8 AS h,
         |  18 + 4 * (CASE WHEN v0 = v1 THEN 2 ELSE 4 END)
         |     + 4 * (CASE WHEN v2 = v3 THEN 2 ELSE 4 END) AS tga_bytes,
@@ -1336,24 +1173,18 @@ object Multimodal {
     // and every stat is byte arithmetic; roundtrip_ok is the literal the
     // codec law suite earns.
     "q_multimodal_gif" ->
-      """WITH sm AS (SELECT doc_id,
-        |  ascii(substring(text, (i % length(text)) + 1, 1)) % 128 AS v
-        | FROM documents, LATERAL unnest(generate_series(0, 255)) u(i))
+      s"""WITH ${oPixels(256)}
         | SELECT doc_id, 16 AS w, 16 AS h,
         |  CAST(sum(v) AS INT) AS px_sum,
         |  round(CAST(sum(v) AS INT) / 256.0 + 5e-10, 4) AS mean_px,
         |  TRUE AS roundtrip_ok
-        | FROM sm GROUP BY doc_id ORDER BY doc_id"""
+        | FROM px GROUP BY doc_id ORDER BY doc_id"""
         .stripMargin.replaceAll("\n", " "),
 
     // Full integer replay of the G.711 µ-law round-trip: bias, segment
     // (CASE over the eight ranges), mantissa, midpoint reconstruction.
     "q_multimodal_mulaw" ->
-      """WITH sm AS (
-        | SELECT doc_id,
-        |  (ascii(substring(text, (i % length(text)) + 1, 1)) % 128 - 64)
-        |    * 256 AS v
-        | FROM documents, LATERAL unnest(generate_series(0, 63)) u(i)),
+      s"""WITH ${oPixels(64, pcm = true)},
         | en AS (SELECT doc_id, v,
         |  least(abs(v), 32635) + 132 AS mag,
         |  CASE WHEN least(abs(v), 32635) + 132 < 256 THEN 0
@@ -1364,7 +1195,7 @@ object Multimodal {
         |   WHEN least(abs(v), 32635) + 132 < 8192 THEN 5
         |   WHEN least(abs(v), 32635) + 132 < 16384 THEN 6
         |   ELSE 7 END AS seg
-        | FROM sm),
+        | FROM px),
         | de AS (SELECT doc_id, v,
         |  CASE WHEN v < 0 THEN -(((mag // (8 * (1 << seg))) % 16 * 8
         |     + 132) * (1 << seg) - 132)
@@ -1382,9 +1213,8 @@ object Multimodal {
     // Each demuxed frame is a constant-value JPEG, so the decoded mean is
     // exactly the frame's source character value.
     "q_multimodal_frames" ->
-      """SELECT doc_id, k AS frame_idx, 8 AS fw, 8 AS fh,
-        | round(CAST(ascii(substring(text, (k % length(text)) + 1, 1)) % 128
-        |   AS DOUBLE) + 5e-10, 4) AS y_mean
+      s"""SELECT doc_id, k AS frame_idx, 8 AS fw, 8 AS fh,
+        | round(CAST(${oHouse("k")} AS DOUBLE) + 5e-10, 4) AS y_mean
         | FROM documents, LATERAL unnest(generate_series(0, 3)) u(k)
         | ORDER BY doc_id, frame_idx"""
         .stripMargin.replaceAll("\n", " "),
@@ -1392,12 +1222,7 @@ object Multimodal {
     // Block means decode exactly; the fold order of f_sum mirrors the
     // Spark-side left-associative aggregate over the feature array.
     "q_multimodal_features" ->
-      """WITH v AS (SELECT doc_id,
-        |  ascii(substring(text, (0 % length(text)) + 1, 1)) % 128 AS v0,
-        |  ascii(substring(text, (1 % length(text)) + 1, 1)) % 128 AS v1,
-        |  ascii(substring(text, (2 % length(text)) + 1, 1)) % 128 AS v2,
-        |  ascii(substring(text, (3 % length(text)) + 1, 1)) % 128 AS v3
-        | FROM documents)
+      s"""WITH $oBlocks
         | SELECT doc_id,
         |  round(v0/127.0 + 5e-10, 6) AS f1,
         |  round(v0/127.0 + v1/127.0 + v2/127.0 + v3/127.0
@@ -1408,12 +1233,7 @@ object Multimodal {
     // Nearest-neighbor downscale at even coordinates stays inside the
     // source blocks, so the resized mean is the mean of the 4 block values.
     "q_multimodal_resize" ->
-      """WITH v AS (SELECT doc_id,
-        |  ascii(substring(text, (0 % length(text)) + 1, 1)) % 128 AS v0,
-        |  ascii(substring(text, (1 % length(text)) + 1, 1)) % 128 AS v1,
-        |  ascii(substring(text, (2 % length(text)) + 1, 1)) % 128 AS v2,
-        |  ascii(substring(text, (3 % length(text)) + 1, 1)) % 128 AS v3
-        | FROM documents)
+      s"""WITH $oBlocks
         | SELECT doc_id, 16 AS w, 16 AS h, 8 AS rw, 8 AS rh,
         |  round((v0+v1+v2+v3)/4.0 + 5e-10, 4) AS resized_mean
         | FROM v ORDER BY doc_id"""

@@ -797,7 +797,6 @@ object Relational {
     // broadcast: the bloom costs one pass over the dim + a KB-scale
     // value broadcast, and typically drops >90% of fact rows pre-shuffle.
     "q_join_bloom_prune" -> { (s, d) =>
-      graft.engine.functions.GraftFunctions.register(s)
       val g = d.replaceAll("[^A-Za-z0-9_]", "_")
       Tables.orders(s, d).createOrReplaceTempView(s"orders_bp_$g")
       Tables.lineitem(s, d).createOrReplaceTempView(s"lineitem_bp_$g")

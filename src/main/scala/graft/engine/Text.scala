@@ -2,7 +2,6 @@ package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.functions.GraftFunctions
 
 /** §2.10 Text analysis + deduplication for LLM-data pipelines (SURVEY.md;
   * north star /root/repo/BASELINE.json:6).
@@ -951,7 +950,6 @@ object Text {
     // fewer than 2 tokens have no bigrams and drop, exactly as the
     // explode dropped them.
     "q_text_repetition" -> { (s, d) =>
-      GraftFunctions.register(s)
       Tables.documents(s, d)
         .withColumn("t", toks(col("text")))
         .filter(size(col("t")) >= 2)
@@ -1019,7 +1017,6 @@ object Text {
     // suffixes are planted deterministically by doc_id residue — every
     // branch of the repair is exercised and oracle-checked. Map-only.
     "q_text_normalize" -> { (s, d) =>
-      GraftFunctions.register(s)
       // Planted suffixes (raw UTF-8 in source) by doc_id residue:
       // %7==3 NFD 'cafe'+U+0301, %7==4 NFC 'caf'+U+00E9 (the twins),
       // %11==5 mojibake 'caf'+U+00C3+U+00A9, %13==6 BEL + zero-width

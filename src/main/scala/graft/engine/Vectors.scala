@@ -30,7 +30,7 @@ object Vectors {
   /** Cosine via the native codegen'd CosineSimilarity expression —
     * bit-identical to the lambda fold formulation (same sequential
     * accumulation and final formula), but one fused loop inside
-    * whole-stage codegen. Callers must GraftFunctions.register(s) first.
+    * whole-stage codegen.
     */
   private def cosine(a: Column, b: Column): Column =
     GraftFunctions.cosine_sim(a, b)
@@ -278,7 +278,6 @@ object Vectors {
     // full corpus; ranking on the rounded score with vec_id tie-break keeps
     // both engines' orderings identical.
     "q_sim_topk" -> { (s, d) =>
-      GraftFunctions.register(s)
       val emb = Tables.embeddings(s, d).withColumn("v", vd(col("embedding")))
       val probes = emb.filter(col("vec_id") < 10)
         .select(col("vec_id").as("probe_id"), col("v").as("pv"))
@@ -305,7 +304,6 @@ object Vectors {
     // instead of the full scan. Rounded score + id ordering keeps both
     // engines identical.
     "q_sim_range_search" -> { (s, d) =>
-      GraftFunctions.register(s)
       val emb = Tables.embeddings(s, d).withColumn("v", vd(col("embedding")))
       val probes = emb.filter(col("vec_id") < 10)
         .select(col("vec_id").as("probe_id"), col("v").as("pv"))
@@ -329,7 +327,6 @@ object Vectors {
     // axis. Matrix = 1024-row broadcast; projection = explode + join +
     // (vec, out-dim) partial agg — linear in corpus size.
     "q_vec_rand_proj" -> { (s, d) =>
-      GraftFunctions.register(s)
       val qs = Tables.embeddings(s, d)
         .select(col("vec_id"), expr("int_micros(embedding)").as("q"))
       val signs = s.range(16).select(col("id").as("j"))
@@ -384,7 +381,6 @@ object Vectors {
     // Probes broadcast; the dim axis is a 3-way explode over the
     // bounded probe×corpus pair frame; one window per (probe, dim).
     "q_vec_mrl_curve" -> { (s, d) =>
-      GraftFunctions.register(s)
       val qs = Tables.embeddings(s, d)
         .select(col("vec_id"), expr("int_micros(embedding)").as("q"))
       val probes = qs.filter(col("vec_id") < 10)
@@ -431,7 +427,6 @@ object Vectors {
     // oracle-replayable — the rare eval whose numbers hash-match. One
     // broadcast probe pass per ranking + a 5-row-per-probe join.
     "q_sim_eval_recall" -> { (s, d) =>
-      GraftFunctions.register(s)
       def half(off: Int) = expr(
         s"""aggregate(sequence(0, 31), 0L, (acc, i) ->
            | acc + CASE WHEN element_at(embedding, i + ${off + 1}) > 0
@@ -541,7 +536,6 @@ object Vectors {
     // tiebreak determinism as q_sim_topk at both stages; WindowGroupLimit
     // bounds per-probe state at both ranks.
     "q_vec_matryoshka" -> { (s, d) =>
-      GraftFunctions.register(s)
       val emb = Tables.embeddings(s, d).withColumn("v", vd(col("embedding")))
       val probes = emb.filter(col("vec_id") < 10)
         .select(col("vec_id").as("probe_id"), col("v").as("pv"))
@@ -611,7 +605,6 @@ object Vectors {
     // same adversarial shape as q_dedup_near's. ScalaTest keeps the
     // planted-pair recall law (incl. at sf0.1) as the backstop.
     "q_sim_pairs_lsh" -> { (s, d) =>
-      GraftFunctions.register(s)
       lshPairs(lshCorpus(s, d))
         .select(col("id_a"), col("id_b"), col("cos_r"))
         .orderBy(col("id_a"), col("id_b"))
@@ -627,7 +620,6 @@ object Vectors {
     // ScalaTest additionally measures recall against the exact top-k at
     // BOTH the fixture and the sf0.1 bench scale.
     "q_sim_topk_ivf" -> { (s, d) =>
-      GraftFunctions.register(s)
       // routing and probing use the cosine of the bigint micros arrays,
       // which cosine_sim reads as their double casts
       val emb = Tables.embeddings(s, d)
@@ -700,7 +692,6 @@ object Vectors {
     // DECIMAL(38,0) (r15, closing the documented residual — the int64
     // Σqi·qj wrapped past ~2.7e7 vectors).
     "q_vec_pca_power" -> { (s, d) =>
-      GraftFunctions.register(s)
       val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
       val qs = Tables.embeddings(s, d)
         .select(col("vec_id"), expr("int_micros(embedding)").as("q"))
@@ -750,7 +741,6 @@ object Vectors {
     // q_dedup_ngram_jaccard for text; the unbounded scale path is the LSH
     // bucketing of q_sim_pairs_lsh).
     "q_dedup_embedding" -> { (s, d) =>
-      GraftFunctions.register(s)
       val emb = Tables.embeddings(s, d).filter(col("vec_id") < 300)
         .select(col("vec_id"), vd(col("embedding")).as("v"))
       val a = emb.select(col("vec_id").as("id_a"), col("v").as("va"))
@@ -771,7 +761,6 @@ object Vectors {
     // converges in a handful of rounds. The crossover of this quadratic
     // demo against the linear LSH twin is recorded in SURVEY §6.
     "q_dedup_groups" -> { (s, d) =>
-      GraftFunctions.register(s)
       val emb = Tables.embeddings(s, d).filter(col("vec_id") < 300L)
         .select(col("vec_id"), vd(col("embedding")).as("v"))
       val a = emb.select(col("vec_id").as("id_a"), col("v").as("va"))
@@ -793,7 +782,6 @@ object Vectors {
     // (the bucket is a deterministic function of the vector), so the LSH
     // edge set provably equals the oracle's exact edge set on this corpus.
     "q_dedup_groups_lsh" -> { (s, d) =>
-      GraftFunctions.register(s)
       val corpus = lshCorpus(s, d)
       val pairs = lshPairs(corpus)
         .select(col("id_a"), col("id_b"))
@@ -842,7 +830,6 @@ object Vectors {
 
     // k-NN majority-vote label prediction over the top-5 neighbor sets.
     "q_knn_label_vote" -> { (s, d) =>
-      GraftFunctions.register(s)
       val emb = Tables.embeddings(s, d).withColumn("v", vd(col("embedding")))
       val probes = emb.filter(col("vec_id") < 10)
         .select(col("vec_id").as("probe_id"), col("v").as("pv"))
@@ -881,7 +868,6 @@ object Vectors {
     // In a session without the rule the marker is identity and the same
     // plan runs exactly (cartesian) — semantics never silently change.
     "q_sim_join_rewrite" -> { (s, d) =>
-      GraftFunctions.register(s)
       val emb = Tables.embeddings(s, d).filter(col("vec_id") < 300)
         .select(col("vec_id"), vd(col("embedding")).as("v"))
       val corpus = emb.unionByName(emb.filter(col("vec_id") < 10)
@@ -925,7 +911,6 @@ object Vectors {
     // argmax comparator is a total order (score, then vec_id), so the
     // result is independent of collect_list order.
     "q_vec_mmr" -> { (s, d) =>
-      GraftFunctions.register(s)
       val emb = Tables.embeddings(s, d)
         .select(col("vec_id"), expr("int_micros(embedding)").as("q"))
       val probes = broadcast(emb.filter(col("vec_id") < 3)
@@ -989,7 +974,6 @@ object Vectors {
     // moment state. Per-cluster stats broadcast back; σ=0 clusters
     // degenerate safely (LHS = 0 → no outliers). Linear, two scans.
     "q_vec_outlier" -> { (s, d) =>
-      GraftFunctions.register(s)
       val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
       val dec19 = org.apache.spark.sql.types.DecimalType(19, 0)
       val emb = Tables.embeddings(s, d)
@@ -1022,7 +1006,6 @@ object Vectors {
     // k = 8 seeded from the first 8 vectors, 2 Lloyd iterations, then the
     // final assignment with its squared distance (see [[Lloyd]]).
     "q_vec_kmeans" -> { (s, d) =>
-      GraftFunctions.register(s)
       val emb = Tables.embeddings(s, d)
         .select(col("vec_id"), expr("int_micros(embedding)").as("q"))
       val rows = emb.select(lit(0).as("g"), col("vec_id").as("id"),
@@ -1056,7 +1039,6 @@ object Vectors {
     // over candidate scores (bounded probe set), mirroring q_sim_topk.
     // Subvector extraction is a per-row slice — no shuffle.
     "q_vec_pq" -> { (s, d) =>
-      GraftFunctions.register(s)
       val qs = Tables.embeddings(s, d)
         .select(col("vec_id"), expr("int_micros(embedding)").as("q"))
       val subs = qs
@@ -1142,7 +1124,6 @@ object Vectors {
     // fixture scale (at production list counts nprobe/nlists stays
     // ~1/100) — the IVF pruning that makes the PQ scan sub-linear.
     "q_vec_ivfpq" -> { (s, d) =>
-      GraftFunctions.register(s)
       val qs = Tables.embeddings(s, d)
         .select(col("vec_id"), expr("int_micros(embedding)").as("q"))
       val coarse = qs.filter(col("vec_id") < 8)
@@ -1240,7 +1221,6 @@ object Vectors {
     // k with corpus size (k = n/64 here) and assigning via the [[Lloyd]]
     // argmin against the driver-held seed book.
     "q_dedup_semantic" -> { (s, d) =>
-      GraftFunctions.register(s)
       val base = Tables.embeddings(s, d).filter(col("vec_id") < 300)
         .select(col("vec_id"), expr("int_micros(embedding)").as("q"))
       val corpus = base.unionByName(base.filter(col("vec_id") < 10)

@@ -1,11 +1,62 @@
 package graft.engine.functions
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
+
+/** An elementwise reduction over two arrays of equal length, the shape of
+  * the native array-pair kernels. The inputs must be arrays of one of
+  * `elems`; mismatched lengths return null, exactly like the `zip_with`
+  * fold each kernel replaces (it null-pads the shorter side and the sum
+  * goes null), with no silent min-length truncation. A kernel gives its
+  * SQL name (`prettyName`, also its error name), its result type and its
+  * loop over `n` elements, once interpreted and once as generated Java.
+  */
+abstract class ArrayPairKernel(elems: DataType*) extends BinaryExpression
+    with Serializable {
+  protected def loop(x: ArrayData, y: ArrayData, n: Int): Any
+  /** Java statements that set `out` from arrays `a`, `b` of length `n`. */
+  protected def loopCode(ctx: CodegenContext, a: String, b: String,
+      n: String, out: String): String
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (Seq(left, right).forall(_.dataType match {
+      case ArrayType(t, _) => elems.contains(t)
+      case _ => false
+    })) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName expects array<${elems.map(_.simpleString)
+        .mkString("|")}> inputs, got ${left.dataType.sql} / " +
+        right.dataType.sql)
+  override def nullable: Boolean = true
+
+  override def nullSafeEval(a: Any, b: Any): Any = {
+    val x = a.asInstanceOf[ArrayData]
+    val y = b.asInstanceOf[ArrayData]
+    if (x.numElements() != y.numElements()) null
+    else loop(x, y, x.numElements())
+  }
+
+  override protected def doGenCode(ctx: CodegenContext,
+      ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => {
+      val n = ctx.freshName("n")
+      s"""
+         |if ($a.numElements() != $b.numElements()) {
+         |  ${ev.isNull} = true;
+         |} else {
+         |  int $n = $a.numElements();
+         |  ${loopCode(ctx, a, b, n, ev.value)}
+         |}
+       """.stripMargin
+    })
+
+  override protected def withNewChildrenInternal(newLeft: Expression,
+      newRight: Expression): Expression =
+    makeCopy(Array(newLeft, newRight))
+}
 
 /** Native Catalyst expression for cosine similarity over two double arrays
   * (SURVEY §4.3 exception (c): the one scalar hot enough in the similarity
@@ -18,11 +69,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * implementations cannot change any query output. Unlike the lambda version
   * it participates in whole-stage codegen (single fused loop, no per-element
   * closure dispatch). Two guarded edges (neither occurs in any fixture, so
-  * parity is unaffected): mismatched lengths return null (the zip_with fold
-  * null-pads and its sum goes null too), and a zero-norm input returns 0.0
-  * instead of the fold's 0/0 = NaN — NaN inverts between `desc` sorts (NaN
-  * greatest) and `min(struct(-cos, id))` argmins (NaN last), so a defined
-  * "no similarity" value is the only ordering-stable choice.
+  * parity is unaffected): mismatched lengths return null, and a zero-norm
+  * input returns 0.0 instead of the fold's 0/0 = NaN — NaN inverts between
+  * `desc` sorts (NaN greatest) and `min(struct(-cos, id))` argmins (NaN
+  * last), so a defined "no similarity" value is the only ordering-stable
+  * choice.
   *
   * A bigint-array input is read as its elements' double casts (the
   * conversion `CAST(x AS DOUBLE)` makes), so cosine_sim over integer
@@ -31,9 +82,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * otherwise be rebuilt once per centroid.
   */
 case class CosineSimilarity(left: Expression, right: Expression)
-    extends BinaryExpression {
-  import org.apache.spark.sql.types.LongType
-
+    extends ArrayPairKernel(DoubleType, LongType) {
   private def isLong(e: Expression): Boolean = e.dataType match {
     case ArrayType(LongType, _) => true
     case _ => false
@@ -41,23 +90,10 @@ case class CosineSimilarity(left: Expression, right: Expression)
   @transient private lazy val lx = isLong(left)
   @transient private lazy val ly = isLong(right)
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (Seq(left, right).forall(_.dataType match {
-      case ArrayType(DoubleType | LongType, _) => true
-      case _ => false
-    })) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"cosine_sim expects array<double|bigint> inputs, got " +
-        s"${left.dataType.sql} / ${right.dataType.sql}")
   override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
   override def prettyName: String = "cosine_sim"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    if (x.numElements() != y.numElements()) return null
-    val n = x.numElements()
+  protected def loop(x: ArrayData, y: ArrayData, n: Int): Any = {
     var dot = 0.0
     var na = 0.0
     var nb = 0.0
@@ -74,37 +110,23 @@ case class CosineSimilarity(left: Expression, right: Expression)
     else dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val xi = ctx.freshName("xi")
-      val yi = ctx.freshName("yi")
-      def get(e: Expression, arr: String) =
-        if (isLong(e)) s"(double) $arr.getLong($i)" else s"$arr.getDouble($i)"
-      s"""
-         |if ($a.numElements() != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int $n = $a.numElements();
-         |  double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    double $xi = ${get(left, a)};
-         |    double $yi = ${get(right, b)};
-         |    $dot += $xi * $yi; $na += $xi * $xi; $nb += $yi * $yi;
-         |  }
-         |  ${ev.value} = ($na == 0.0 || $nb == 0.0) ? 0.0 : $dot /
-         |    (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression = copy(newLeft, newRight)
+  protected def loopCode(ctx: CodegenContext, a: String, b: String,
+      n: String, out: String): String = {
+    val Seq(i, dot, na, nb, xi, yi) =
+      Seq("i", "dot", "na", "nb", "xi", "yi").map(ctx.freshName)
+    def get(e: Expression, arr: String) =
+      if (isLong(e)) s"(double) $arr.getLong($i)" else s"$arr.getDouble($i)"
+    s"""
+       |double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
+       |for (int $i = 0; $i < $n; $i++) {
+       |  double $xi = ${get(left, a)};
+       |  double $yi = ${get(right, b)};
+       |  $dot += $xi * $yi; $na += $xi * $xi; $nb += $yi * $yi;
+       |}
+       |$out = ($na == 0.0 || $nb == 0.0) ? 0.0 : $dot /
+       |  (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
+     """.stripMargin
+  }
 }
 
 /** Native squared L2 distance over two bigint arrays — the hot scalar of
@@ -114,32 +136,14 @@ case class CosineSimilarity(left: Expression, right: Expression)
   * bit-identical to the `aggregate(zip_with(...))` fold and to DuckDB's
   * `list_reduce(list_transform(list_zip(...)))` — swapping in the native
   * expression cannot change any query output, it only moves the work from
-  * interpreted per-element closures into whole-stage codegen. Mismatched
-  * lengths return null, exactly like the fold (zip_with null-pads the
-  * shorter side and the sum goes null) — no silent min-length truncation.
+  * interpreted per-element closures into whole-stage codegen.
   */
 case class LongSqDist(left: Expression, right: Expression)
-    extends BinaryExpression {
-  import org.apache.spark.sql.types.LongType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (Seq(left, right).forall(_.dataType match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    })) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"int_sqdist expects array<bigint> inputs, got " +
-        s"${left.dataType.sql} / ${right.dataType.sql}")
-  override def dataType: DataType =
-    org.apache.spark.sql.types.LongType
-  override def nullable: Boolean = true
+    extends ArrayPairKernel(LongType) {
+  override def dataType: DataType = LongType
   override def prettyName: String = "int_sqdist"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    if (x.numElements() != y.numElements()) return null
-    val n = x.numElements()
+  protected def loop(x: ArrayData, y: ArrayData, n: Int): Any = {
     var acc = 0L
     var i = 0
     while (i < n) {
@@ -150,30 +154,18 @@ case class LongSqDist(left: Expression, right: Expression)
     acc
   }
 
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      val d = ctx.freshName("d")
-      s"""
-         |if ($a.numElements() != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int $n = $a.numElements();
-         |  long $acc = 0L;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    long $d = $a.getLong($i) - $b.getLong($i);
-         |    $acc += $d * $d;
-         |  }
-         |  ${ev.value} = $acc;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression = copy(newLeft, newRight)
+  protected def loopCode(ctx: CodegenContext, a: String, b: String,
+      n: String, out: String): String = {
+    val Seq(i, acc, d) = Seq("i", "acc", "d").map(ctx.freshName)
+    s"""
+       |long $acc = 0L;
+       |for (int $i = 0; $i < $n; $i++) {
+       |  long $d = $a.getLong($i) - $b.getLong($i);
+       |  $acc += $d * $d;
+       |}
+       |$out = $acc;
+     """.stripMargin
+  }
 }
 
 /** Native integer dot product over two bigint arrays — the exact
@@ -181,31 +173,14 @@ case class LongSqDist(left: Expression, right: Expression)
   * diversification, shortlist scoring). Products are exact longs at the
   * micros magnitudes (|x·y| ≤ 1e12, × 64 dims ≪ 2⁶³) and integer sums are
   * associative, so the fused loop is bit-identical to any fold order and
-  * to the oracle's unnest-join sum. Mismatched lengths return null like
-  * the zip_with fold.
+  * to the oracle's unnest-join sum.
   */
 case class LongDot(left: Expression, right: Expression)
-    extends BinaryExpression {
-  import org.apache.spark.sql.types.LongType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (Seq(left, right).forall(_.dataType match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    })) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"int_dot expects array<bigint> inputs, got " +
-        s"${left.dataType.sql} / ${right.dataType.sql}")
-  override def dataType: DataType =
-    org.apache.spark.sql.types.LongType
-  override def nullable: Boolean = true
+    extends ArrayPairKernel(LongType) {
+  override def dataType: DataType = LongType
   override def prettyName: String = "int_dot"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    if (x.numElements() != y.numElements()) return null
-    val n = x.numElements()
+  protected def loop(x: ArrayData, y: ArrayData, n: Int): Any = {
     var acc = 0L
     var i = 0
     while (i < n) {
@@ -215,30 +190,18 @@ case class LongDot(left: Expression, right: Expression)
     acc
   }
 
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      s"""
-         |if ($a.numElements() != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int $n = $a.numElements();
-         |  long $acc = 0L;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    $acc += $a.getLong($i) * $b.getLong($i);
-         |  }
-         |  ${ev.value} = $acc;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression = copy(newLeft, newRight)
+  protected def loopCode(ctx: CodegenContext, a: String, b: String,
+      n: String, out: String): String = {
+    val Seq(i, acc) = Seq("i", "acc").map(ctx.freshName)
+    s"""
+       |long $acc = 0L;
+       |for (int $i = 0; $i < $n; $i++) {
+       |  $acc += $a.getLong($i) * $b.getLong($i);
+       |}
+       |$out = $acc;
+     """.stripMargin
+  }
 }
-
 /** Per-row helper behind [[BigramTopCount]] — kept as a static method so
   * generated code calls straight into compiled bytecode (one invokestatic
   * inside the whole-stage loop, same pattern the JVM JITs for built-in
@@ -282,7 +245,7 @@ object BigramTop {
   */
 case class BigramTopCount(child: Expression)
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  import org.apache.spark.sql.types.{LongType, StringType}
+  import org.apache.spark.sql.types.StringType
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
@@ -302,110 +265,4 @@ case class BigramTopCount(child: Expression)
 
   override protected def withNewChildInternal(
       newChild: Expression): Expression = copy(newChild)
-}
-
-object GraftFunctions {
-  import org.apache.spark.sql.SparkSession
-  import org.apache.spark.sql.functions.call_function
-
-  /** Register the native functions in a session; idempotent (a no-op when
-    * the session already has them, e.g. via GraftExtensions — avoids the
-    * per-call replacement warning). After this, both
-    * `GraftFunctions.cosine_sim(a, b)` and SQL `cosine_sim(a, b)` resolve
-    * to the codegen'd expression.
-    */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("cosine_sim")))
-      reg.createOrReplaceTempFunction(
-        "cosine_sim", exprs => CosineSimilarity(exprs(0), exprs(1)),
-        "scala_udf")
-    if (!reg.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("kmv_distinct")))
-      reg.createOrReplaceTempFunction(
-        "kmv_distinct", exprs => KmvDistinct(exprs.head), "scala_udf")
-    if (!reg.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("cms_sketch")))
-      reg.createOrReplaceTempFunction(
-        "cms_sketch", exprs => CmsSketch(exprs.head), "scala_udf")
-    if (!reg.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("cms_query")))
-      reg.createOrReplaceTempFunction(
-        "cms_query", exprs => CmsQuery(exprs(0), exprs(1)), "scala_udf")
-    if (!reg.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("bloom_agg")))
-      reg.createOrReplaceTempFunction(
-        "bloom_agg", exprs => BloomAgg(exprs.head), "scala_udf")
-    if (!reg.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("bloom_contains")))
-      reg.createOrReplaceTempFunction(
-        "bloom_contains", exprs => BloomContains(exprs(0), exprs(1)),
-        "scala_udf")
-    if (!reg.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("morton2")))
-      reg.createOrReplaceTempFunction(
-        "morton2", exprs => Morton2(exprs(0), exprs(1)), "scala_udf")
-    if (!reg.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("heavy_hitters")))
-      reg.createOrReplaceTempFunction(
-        "heavy_hitters", exprs => MisraGries(exprs.head), "scala_udf")
-    if (!reg.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("dd_sketch")))
-      reg.createOrReplaceTempFunction(
-        "dd_sketch", exprs => DdSketch(exprs.head), "scala_udf")
-    if (!reg.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("dd_quantile")))
-      reg.createOrReplaceTempFunction(
-        "dd_quantile", exprs => DdQuantile(exprs(0), exprs(1)), "scala_udf")
-    if (!reg.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("graft_approx")))
-      reg.createOrReplaceTempFunction(
-        "graft_approx", exprs => GraftApprox(exprs.head), "scala_udf")
-    if (!reg.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("simhash_bucket")))
-      reg.createOrReplaceTempFunction(
-        "simhash_bucket", exprs => SimHashBucket(exprs.head), "scala_udf")
-    if (!reg.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("kmv_sketch")))
-      reg.createOrReplaceTempFunction(
-        "kmv_sketch", exprs => KmvSketchAgg(exprs.head), "scala_udf")
-    if (!reg.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("kmv_est")))
-      reg.createOrReplaceTempFunction(
-        "kmv_est", exprs => KmvEstimate(exprs.head), "scala_udf")
-    if (!reg.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("kmv_union_est")))
-      reg.createOrReplaceTempFunction(
-        "kmv_union_est", exprs => KmvUnionEstimate(exprs(0), exprs(1)),
-        "scala_udf")
-    if (!reg.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("int_sqdist")))
-      reg.createOrReplaceTempFunction(
-        "int_sqdist", exprs => LongSqDist(exprs(0), exprs(1)),
-        "scala_udf")
-    if (!reg.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("bigram_top_n")))
-      reg.createOrReplaceTempFunction(
-        "bigram_top_n", exprs => BigramTopCount(exprs.head), "scala_udf")
-    if (!reg.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("nfc_normalize")))
-      reg.createOrReplaceTempFunction(
-        "nfc_normalize", exprs => NfcNormalize(exprs.head), "scala_udf")
-    if (!reg.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("int_micros")))
-      reg.createOrReplaceTempFunction(
-        "int_micros", exprs => IntMicros(exprs.head), "scala_udf")
-    if (!reg.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("int_dot")))
-      reg.createOrReplaceTempFunction(
-        "int_dot", exprs => LongDot(exprs(0), exprs(1)), "scala_udf")
-  }
-
-  /** Column-level entry point (requires register(spark) in the session). */
-  def cosine_sim(a: Column, b: Column): Column =
-    call_function("cosine_sim", a, b)
-
-  /** KMV distinct-count sketch aggregate (requires register(spark)). */
-  def kmv_distinct(c: Column): Column = call_function("kmv_distinct", c)
 }

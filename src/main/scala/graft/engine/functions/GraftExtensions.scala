@@ -1,98 +1,68 @@
 package graft.engine.functions
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{Column, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.functions.call_function
+
+/** The engine's native functions, one row each: the SQL name, the
+  * expression class and its builder. [[GraftExtensions]] injects every
+  * row into each session it builds, so builders and SQL strings call
+  * them by name with no per-session registration.
+  */
+object GraftFunctions {
+  final case class Fn(name: String, cls: Class[_ <: Expression],
+      build: Seq[Expression] => Expression)
+
+  val table: Seq[Fn] = Seq(
+    Fn("cosine_sim", classOf[CosineSimilarity],
+      e => CosineSimilarity(e(0), e(1))),
+    Fn("kmv_distinct", classOf[KmvDistinct], e => KmvDistinct(e.head)),
+    Fn("cms_sketch", classOf[CmsSketch], e => CmsSketch(e.head)),
+    Fn("cms_query", classOf[CmsQuery], e => CmsQuery(e(0), e(1))),
+    Fn("bloom_agg", classOf[BloomAgg], e => BloomAgg(e.head)),
+    Fn("bloom_contains", classOf[BloomContains],
+      e => BloomContains(e(0), e(1))),
+    Fn("morton2", classOf[Morton2], e => Morton2(e(0), e(1))),
+    Fn("heavy_hitters", classOf[MisraGries], e => MisraGries(e.head)),
+    Fn("dd_sketch", classOf[DdSketch], e => DdSketch(e.head)),
+    Fn("dd_quantile", classOf[DdQuantile], e => DdQuantile(e(0), e(1))),
+    Fn("graft_approx", classOf[GraftApprox], e => GraftApprox(e.head)),
+    Fn("simhash_bucket", classOf[SimHashBucket], e => SimHashBucket(e.head)),
+    Fn("int_sqdist", classOf[LongSqDist], e => LongSqDist(e(0), e(1))),
+    Fn("kmv_sketch", classOf[KmvSketchAgg], e => KmvSketchAgg(e.head)),
+    Fn("kmv_est", classOf[KmvEstimate], e => KmvEstimate(e.head)),
+    Fn("nfc_normalize", classOf[NfcNormalize], e => NfcNormalize(e.head)),
+    Fn("int_micros", classOf[IntMicros], e => IntMicros(e.head)),
+    Fn("int_dot", classOf[LongDot], e => LongDot(e(0), e(1))),
+    Fn("bigram_top_n", classOf[BigramTopCount], e => BigramTopCount(e.head)),
+    Fn("kmv_union_est", classOf[KmvUnionEstimate],
+      e => KmvUnionEstimate(e(0), e(1))),
+    // the marker of the as-of join strategy below
+    Fn("graft_asof", classOf[graft.plans.AsOfMark],
+      e => graft.plans.AsOfMark(e.head)))
+
+  /** Column-level entry point of `cosine_sim`. */
+  def cosine_sim(a: Column, b: Column): Column =
+    call_function("cosine_sim", a, b)
+
+  /** Column-level entry point of the KMV distinct-count aggregate. */
+  def kmv_distinct(c: Column): Column = call_function("kmv_distinct", c)
+}
 
 /** SparkSessionExtensions injection point for the engine's native
-  * functions — the idiomatic way to ship them with a session
-  * (`SparkSession.builder.withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.engine.functions.GraftExtensions`).
-  * Equivalent to GraftFunctions.register but applied at session build
-  * time, so SQL strings can use the functions with no per-query setup.
+  * functions (`SparkSession.builder.withExtensions(new GraftExtensions)`
+  * or `spark.sql.extensions=graft.engine.functions.GraftExtensions`;
+  * `graft.Sessions.local` does the former). Applied at session build
+  * time, and again for every `newSession()` child, so SQL strings can use
+  * the functions with no per-query setup.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      (exprs: Seq[Expression]) => CosineSimilarity(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("kmv_distinct"),
-      new ExpressionInfo(classOf[KmvDistinct].getName, "kmv_distinct"),
-      (exprs: Seq[Expression]) => KmvDistinct(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("cms_sketch"),
-      new ExpressionInfo(classOf[CmsSketch].getName, "cms_sketch"),
-      (exprs: Seq[Expression]) => CmsSketch(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("cms_query"),
-      new ExpressionInfo(classOf[CmsQuery].getName, "cms_query"),
-      (exprs: Seq[Expression]) => CmsQuery(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("bloom_agg"),
-      new ExpressionInfo(classOf[BloomAgg].getName, "bloom_agg"),
-      (exprs: Seq[Expression]) => BloomAgg(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("bloom_contains"),
-      new ExpressionInfo(classOf[BloomContains].getName, "bloom_contains"),
-      (exprs: Seq[Expression]) => BloomContains(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("morton2"),
-      new ExpressionInfo(classOf[Morton2].getName, "morton2"),
-      (exprs: Seq[Expression]) => Morton2(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("heavy_hitters"),
-      new ExpressionInfo(classOf[MisraGries].getName, "heavy_hitters"),
-      (exprs: Seq[Expression]) => MisraGries(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("dd_sketch"),
-      new ExpressionInfo(classOf[DdSketch].getName, "dd_sketch"),
-      (exprs: Seq[Expression]) => DdSketch(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("dd_quantile"),
-      new ExpressionInfo(classOf[DdQuantile].getName, "dd_quantile"),
-      (exprs: Seq[Expression]) => DdQuantile(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_approx"),
-      new ExpressionInfo(classOf[GraftApprox].getName, "graft_approx"),
-      (exprs: Seq[Expression]) => GraftApprox(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("simhash_bucket"),
-      new ExpressionInfo(classOf[SimHashBucket].getName, "simhash_bucket"),
-      (exprs: Seq[Expression]) => SimHashBucket(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("int_sqdist"),
-      new ExpressionInfo(classOf[LongSqDist].getName, "int_sqdist"),
-      (exprs: Seq[Expression]) => LongSqDist(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("kmv_sketch"),
-      new ExpressionInfo(classOf[KmvSketchAgg].getName, "kmv_sketch"),
-      (exprs: Seq[Expression]) => KmvSketchAgg(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("kmv_est"),
-      new ExpressionInfo(classOf[KmvEstimate].getName, "kmv_est"),
-      (exprs: Seq[Expression]) => KmvEstimate(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("nfc_normalize"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "nfc_normalize"),
-      (exprs: Seq[Expression]) => NfcNormalize(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("int_micros"),
-      new ExpressionInfo(classOf[IntMicros].getName, "int_micros"),
-      (exprs: Seq[Expression]) => IntMicros(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("int_dot"),
-      new ExpressionInfo(classOf[LongDot].getName, "int_dot"),
-      (exprs: Seq[Expression]) => LongDot(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("bigram_top_n"),
-      new ExpressionInfo(classOf[BigramTopCount].getName, "bigram_top_n"),
-      (exprs: Seq[Expression]) => BigramTopCount(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("kmv_union_est"),
-      new ExpressionInfo(classOf[KmvUnionEstimate].getName, "kmv_union_est"),
-      (exprs: Seq[Expression]) => KmvUnionEstimate(exprs(0), exprs(1))))
+    GraftFunctions.table.foreach { f =>
+      ext.injectFunction((FunctionIdentifier(f.name),
+        new ExpressionInfo(f.cls.getName, f.name), f.build))
+    }
     // the one custom optimizer rule (SURVEY §4.3): opt-in rewrite of
     // marker-flagged brute-force similarity joins into LSH bucket
     // equi-joins; plans without the graft_approx marker are untouched
@@ -101,11 +71,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // LEFT joins plan as AsOfJoinExec — co-partitioned (key, time)
     // sorted merge with O(1) state instead of the union+window
     // composition; unmarked joins are untouched
-    ext.injectFunction((
-      FunctionIdentifier("graft_asof"),
-      new ExpressionInfo(classOf[graft.plans.AsOfMark].getName,
-        "graft_asof"),
-      (exprs: Seq[Expression]) => graft.plans.AsOfMark(exprs.head)))
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
   }
 }

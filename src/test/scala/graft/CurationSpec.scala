@@ -121,7 +121,6 @@ class CurationSpec extends SparkSuite {
   }
 
   test("int_sqdist: native expression equals the HOF fold on the corpus") {
-    graft.engine.functions.GraftFunctions.register(spark)
     val emb = graft.engine.Tables.embeddings(spark, sf)
       .select(col("vec_id"), transform(col("embedding"),
         x => round(x.cast("double") * 1e6).cast("long")).as("q"))
@@ -164,7 +163,6 @@ class CurationSpec extends SparkSuite {
   }
 
   test("int_micros: native expression equals the round-lambda spelling") {
-    graft.engine.functions.GraftFunctions.register(spark)
     val diff = graft.engine.Tables.embeddings(spark, sf)
       .withColumn("nat", expr("int_micros(embedding)"))
       .withColumn("hof", transform(col("embedding"),
@@ -225,7 +223,6 @@ class CurationSpec extends SparkSuite {
   }
 
   test("nfc_normalize: NFD/NFC twins dedup together in the exact-dedup shape") {
-    graft.engine.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val twins = Seq((1L, "resume café work"),
       (2L, "resume café work")).toDF("doc_id", "text")
@@ -242,7 +239,6 @@ class CurationSpec extends SparkSuite {
   }
 
   test("q_text_normalize: planted branches fire; normalization idempotent") {
-    graft.engine.functions.GraftFunctions.register(spark)
     val out = SparkEntry.queries("q_text_normalize")(spark, sf)
     val changed = out.filter(col("changed")).count()
     assert(changed > 0, "planted NFD/mojibake/control suffixes must change")
@@ -274,7 +270,6 @@ class CurationSpec extends SparkSuite {
   }
 
   test("native expression edges: mismatched length -> null, zero norm -> 0.0") {
-    graft.engine.functions.GraftFunctions.register(spark)
     val r = spark.sql(
       """SELECT int_sqdist(array(1L, 2L), array(1L)) AS sd_mismatch,
         |       cosine_sim(array(1.0D, 2.0D), array(1.0D)) AS cs_mismatch,
@@ -285,6 +280,54 @@ class CurationSpec extends SparkSuite {
     assert(r.isNullAt(1), "cosine_sim on mismatched lengths must be null")
     assert(r.getDouble(2) === 0.0, "zero-norm left must give 0.0, not NaN")
     assert(r.getDouble(3) === 0.0, "zero-norm right must give 0.0, not NaN")
+  }
+
+  test("native kernels over a frame: codegen and interpreted paths agree") {
+    // arrays built from `id` cannot be constant-folded, so the kernels run
+    // inside the plan: once in whole-stage codegen (no fallback) and once
+    // interpreted; a child session keeps the settings to this test
+    val s = spark.newSession()
+    val exprs = Seq(
+      "cosine_sim(array(CAST(id AS DOUBLE), 2.0D), array(CAST(id AS DOUBLE)))",
+      "int_sqdist(array(id, 2L), array(id))",
+      "int_dot(array(id, 2L), array(id))",
+      "cosine_sim(array(0.0D * id, 0.0D), array(CAST(id AS DOUBLE), 2.0D))",
+      "cosine_sim(array(CAST(id AS DOUBLE), 2.0D), array(0.0D * id, 0.0D))",
+      "cosine_sim(array(id, id + 1), array(id + 2, 3L))",
+      "int_sqdist(array(id, id + 1), array(id + 2, 3L))",
+      "int_dot(array(id, id + 1), array(id + 2, 3L))")
+    def run(codegen: Boolean): Seq[org.apache.spark.sql.Row] = {
+      s.conf.set("spark.sql.codegen.wholeStage", codegen.toString)
+      s.conf.set("spark.sql.codegen.fallback", (!codegen).toString)
+      s.conf.set("spark.sql.codegen.factoryMode",
+        if (codegen) "CODEGEN_ONLY" else "NO_CODEGEN")
+      val df = s.range(1, 4).selectExpr(exprs: _*)
+      val fused = df.queryExecution.executedPlan.exists(
+        _.isInstanceOf[org.apache.spark.sql.execution.WholeStageCodegenExec])
+      assert(fused === codegen)
+      df.collect().toSeq
+    }
+    for ((rows, mode) <- Seq(run(codegen = true) -> "codegen",
+        run(codegen = false) -> "interpreted")) {
+      assert(rows.length === 3)
+      rows.zip(1L to 3L).foreach { case (r, id) =>
+        Seq("cosine_sim", "int_sqdist", "int_dot").zipWithIndex.foreach {
+          case (f, i) =>
+            assert(r.isNullAt(i), s"$mode: $f on mismatched lengths is null")
+        }
+        assert(r.getDouble(3) === 0.0, s"$mode: zero-norm left gives 0.0")
+        assert(r.getDouble(4) === 0.0, s"$mode: zero-norm right gives 0.0")
+        // bigint elements read as their double casts, same fold order
+        val (x, y) = (Seq(id.toDouble, id + 1.0), Seq(id + 2.0, 3.0))
+        val dot = x(0) * y(0) + x(1) * y(1)
+        val na = x(0) * x(0) + x(1) * x(1)
+        val nb = y(0) * y(0) + y(1) * y(1)
+        assert(r.getDouble(5) === dot / (math.sqrt(na) * math.sqrt(nb)),
+          s"$mode: cosine_sim over bigint arrays")
+        assert(r.getLong(6) === 4L + (id - 2) * (id - 2), s"$mode: int_sqdist")
+        assert(r.getLong(7) === id * (id + 2) + 3 * (id + 1), s"$mode: int_dot")
+      }
+    }
   }
 
   test("semdedup: planted identical copies drop, originals survive") {

@@ -87,7 +87,6 @@ class DedupVectorSpec extends SparkSuite {
     * truth the PQ path approximates. */
   private def exactL2Top5(sfDir: String): Set[(Long, Long)] = {
     import org.apache.spark.sql.expressions.Window
-    graft.engine.functions.GraftFunctions.register(spark)
     val qs = graft.engine.Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), transform(col("embedding"),
         x => round(x.cast("double") * 1e6).cast("long")).as("q"))

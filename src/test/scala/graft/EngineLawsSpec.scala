@@ -212,7 +212,6 @@ class EngineLawsSpec extends SparkSuite {
 
   test("kmv sketch: accurate and independent of partitioning") {
     import graft.engine.functions.GraftFunctions
-    GraftFunctions.register(spark)
     val li = Tables.lineitem(spark, sf)
     val exact = li.groupBy(col("l_returnflag"))
       .agg(countDistinct(col("l_partkey")).as("n"))
@@ -308,7 +307,6 @@ class EngineLawsSpec extends SparkSuite {
     }
     // elementwise-sum merge commutes -> byte-identical sketch under any
     // partitioning
-    graft.engine.functions.GraftFunctions.register(spark)
     val li = Tables.lineitem(spark, sf).select(col("l_suppkey"))
     val s1 = li.repartition(1).agg(expr("cms_sketch(l_suppkey)"))
       .head().getAs[Array[Byte]](0)
@@ -319,7 +317,6 @@ class EngineLawsSpec extends SparkSuite {
   }
 
   test("bloom filter: no false negatives, bounded FPR, partition-independent") {
-    graft.engine.functions.GraftFunctions.register(spark)
     val keys = Tables.orders(spark, sf)
       .filter(col("o_orderpriority") === "1-URGENT")
       .select(col("o_orderkey"))
@@ -351,7 +348,6 @@ class EngineLawsSpec extends SparkSuite {
     // int and bigint hash to different xxhash64 values, so a mismatched
     // probe would silently drop present keys (false negatives) — the
     // serialized header carries the build type and the probe verifies it
-    graft.engine.functions.GraftFunctions.register(spark)
     val bf = spark.range(100).agg(expr("bloom_agg(id)"))
       .head().getAs[Array[Byte]](0)
     val ok = spark.range(100)
@@ -372,7 +368,6 @@ class EngineLawsSpec extends SparkSuite {
   }
 
   test("dd_sketch: non-double input is a clean analysis error") {
-    graft.engine.functions.GraftFunctions.register(spark)
     val e = intercept[Exception] {
       spark.range(10).agg(expr("dd_sketch(id)")).collect()
     }
@@ -412,7 +407,6 @@ class EngineLawsSpec extends SparkSuite {
   }
 
   test("kmv set algebra: union/intersection estimates near exact") {
-    graft.engine.functions.GraftFunctions.register(spark)
     val li = Tables.lineitem(spark, sf)
     def exactDistinct(flags: String*): Long =
       li.filter(col("l_returnflag").isin(flags: _*))
@@ -440,7 +434,6 @@ class EngineLawsSpec extends SparkSuite {
   }
 
   test("ddsketch: relative error <= alpha, partition-independent, monotone") {
-    graft.engine.functions.GraftFunctions.register(spark)
     val li = Tables.lineitem(spark, sf).select(col("l_extendedprice"))
     val qs = Seq(0.1, 0.5, 0.9, 0.95, 0.99)
     val exact = li.stat.approxQuantile("l_extendedprice",
@@ -465,7 +458,6 @@ class EngineLawsSpec extends SparkSuite {
   }
 
   test("misra-gries: containment guarantee, one-sided bounded error") {
-    graft.engine.functions.GraftFunctions.register(spark)
     val k = 32
     val tokens = Tables.documents(spark, sf)
       .select(explode(split(lower(col("text")), " ")).as("tok"))
@@ -507,7 +499,6 @@ class EngineLawsSpec extends SparkSuite {
     // bits >= 16 are ignored, so wide domains must be bucketed first
     assert(interleave(0x10001L, 5L) === interleave(1L, 5L))
     // the codegen'd SQL surface agrees with the JVM reference
-    graft.engine.functions.GraftFunctions.register(spark)
     val viaSql = spark.range(100)
       .selectExpr("id", "morton2(id, id * 3 % 64) AS z").collect()
     viaSql.foreach(r =>

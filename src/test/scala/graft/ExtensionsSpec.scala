@@ -37,8 +37,29 @@ class ExtensionsSpec extends SparkSuite {
     }
   }
 
+  test("every function of the table resolves with no registration call") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    for ((s, label) <- Seq(spark -> "suite session",
+        spark.newSession() -> "newSession() child");
+        f <- graft.engine.functions.GraftFunctions.table)
+      assert(s.sessionState.functionRegistry
+        .functionExists(FunctionIdentifier(f.name)),
+        s"${f.name} must resolve in the $label")
+  }
+
+  test("the function table holds exactly the 21 functions injected") {
+    import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+    // a newSession() child starts from the built-ins plus what the
+    // extensions inject, with none of the suite's temp functions
+    val injected = spark.newSession().sessionState.functionRegistry
+      .listFunction().map(_.funcName).toSet --
+      FunctionRegistry.builtin.listFunction().map(_.funcName)
+    val table = graft.engine.functions.GraftFunctions.table.map(_.name)
+    assert(table.distinct.length === 21)
+    assert(table.toSet === injected)
+  }
+
   test("round-4 native functions resolve and evaluate from raw SQL") {
-    graft.engine.functions.GraftFunctions.register(spark)
     // morton2: known interleave (x=3 -> bits 0,2; y=1 -> bit 1) = 7
     assert(spark.sql("SELECT morton2(3L, 1L) AS z").head().getLong(0) === 7L)
     // bloom generic (string) path: present key found, absent key (usually)
@@ -72,7 +93,6 @@ class ExtensionsSpec extends SparkSuite {
 
   test("rewrite is strictly opt-in: marker-free spelling stays untouched") {
     import org.apache.spark.sql.functions._
-    graft.engine.functions.GraftFunctions.register(spark)
     // identical query WITHOUT graft_approx: the optimizer must leave the
     // (bounded) cartesian plan alone — an optimizer rule that silently
     // degrades recall would be a correctness bug
@@ -95,7 +115,6 @@ class ExtensionsSpec extends SparkSuite {
 
   test("similarity-join rewrite: no cartesian, equals the exact spelling") {
     import org.apache.spark.sql.functions._
-    graft.engine.functions.GraftFunctions.register(spark)
     // the registry query is written as crossJoin + graft_approx filter;
     // with the rule injected (SparkSuite session) the physical plan must
     // contain an equi-join on the simhash bucket and NO cartesian/BNLJ
@@ -128,7 +147,6 @@ class ExtensionsSpec extends SparkSuite {
 
   test("similarity-join rewrite over bigint micros buckets their double casts") {
     import org.apache.spark.sql.functions._
-    graft.engine.functions.GraftFunctions.register(spark)
     val emb = graft.engine.Tables.embeddings(spark, sf)
       .filter(col("vec_id") < 300)
       .select(col("vec_id"), expr("int_micros(embedding)").as("q"))

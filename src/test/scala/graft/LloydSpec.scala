@@ -15,7 +15,6 @@ import graft.engine.functions.GraftFunctions
 class LloydSpec extends SparkSuite {
 
   private def corpus: DataFrame = {
-    GraftFunctions.register(spark)
     graft.engine.Tables.embeddings(spark, sf)
       .select(col("vec_id"), expr("int_micros(embedding)").as("q"))
   }

@@ -53,7 +53,6 @@ class SqlApiSpec extends SparkSuite {
 
   test("native cosine_sim is callable from raw SQL via extensions/registry") {
     registerViews()
-    graft.engine.functions.GraftFunctions.register(spark)
     val n = spark.sql(
       """SELECT vec_id, cosine_sim(
         |  transform(embedding, x -> CAST(x AS DOUBLE)),

@@ -16,10 +16,16 @@ every plan is stripped of what changes between two runs of the same code:
   - the 32-hex session scope id (staging paths, bucketed table names) and
     the temp dir in front of `graft_ingest/`.
 
-Prints the rows whose stripped plans still differ and the rows present
-on one side only. Exits 1 when any row differs or is missing, 0
-otherwise.
+Prints the rows whose stripped plans still differ, apart from them the
+rows whose stripped plans hold the same tokens in a different order
+(`reordered:`; Catalyst orders the groups of a distinct aggregate by
+expression hashes that include expression ids, so such a row can swap
+its groups depending on the rows dumped before it in the JVM: dump it
+alone on both sides before calling it a change), and the rows present on
+one side only. Exits 1 when any row differs, is reordered or is
+missing, 0 otherwise.
 """
+import collections
 import os
 import re
 import sys
@@ -43,6 +49,12 @@ def strip(text):
     return text
 
 
+def tokens(text):
+    """The multiset of a plan's tokens: the text split at whitespace,
+    brackets, parentheses and commas."""
+    return collections.Counter(re.findall(r"[^\s\[\](),]+", text))
+
+
 def load(d):
     """{query: path} for one dump dir; the suffix is the part after the
     last underscore and must be the same for every file."""
@@ -58,22 +70,25 @@ def main(argv):
         sys.exit(__doc__)
     a, b = load(argv[0]), load(argv[1])
     only_a, only_b = sorted(a.keys() - b.keys()), sorted(b.keys() - a.keys())
-    differ = []
+    differ, reordered = [], []
     for q in sorted(a.keys() & b.keys()):
         ta = strip(open(a[q], encoding="utf-8").read())
         tb = strip(open(b[q], encoding="utf-8").read())
         if ta != tb:
-            differ.append(q)
+            (reordered if tokens(ta) == tokens(tb) else differ).append(q)
     for q in differ:
         print(f"differs: {q}")
+    for q in reordered:
+        print(f"reordered: {q}")
     for q in only_a:
         print(f"only in A: {q}")
     for q in only_b:
         print(f"only in B: {q}")
-    same = len(a.keys() & b.keys()) - len(differ)
+    same = len(a.keys() & b.keys()) - len(differ) - len(reordered)
     print(f"== {same} identical, {len(differ)} differ, "
+          f"{len(reordered)} reordered, "
           f"{len(only_a)} only in A, {len(only_b)} only in B")
-    return 1 if differ or only_a or only_b else 0
+    return 1 if differ or reordered or only_a or only_b else 0
 
 
 if __name__ == "__main__":
