@@ -117,7 +117,8 @@ object Checkpoints {
     * session had pinned there before, which caps steady-state checkpoint
     * storage at one frame per slot per live session. The pinned frame
     * must stay pinned: the returned DataFrame reads its blocks lazily,
-    * after the builder returns. Returns `df` for chaining.
+    * after the builder returns. Re-pinning the frame a slot already
+    * holds frees nothing. Returns `df` for chaining.
     */
   def pin(slot: String, df: DataFrame): DataFrame =
     pin(df.sparkSession, slot, df)
@@ -127,7 +128,7 @@ object Checkpoints {
     * in `storageBySlot(s)` and is freed with `s`.
     */
   def pin(s: SparkSession, slot: String, df: DataFrame): DataFrame = {
-    scope(s).pins.put(slot, df).foreach(free)
+    scope(s).pins.put(slot, df).filterNot(_ eq df).foreach(free)
     df
   }
 
@@ -141,13 +142,23 @@ object Checkpoints {
     * mid-session is served stale, so restart the session after one.
     */
   def memo(slot: String, s: SparkSession)(build: => DataFrame): DataFrame =
-    serving(slot, s).getOrElse(pin(slot, build))
+    memo(Seq(slot), s)(Seq(build)).head
 
-  /** The frame `s` pinned under `slot`, for builders that pin several
-    * co-derived frames per fixture (the BPE walk's merges+vocab pair, the
-    * PQ/IVF codebook+encoded-corpus pairs) and serve them across
-    * invocations.
+  /** [[memo]] over co-derived frames, one per slot (an index's codebook
+    * and encoded corpus, the BPE walk's merges and vocabulary): the
+    * frames `s` pinned under `slots` when every slot holds one, else
+    * `build` runs and each of its frames is pinned under its slot, in
+    * order. A partial hit rebuilds and re-pins them all, so the frames
+    * served together always come from one build.
     */
+  def memo(slots: Seq[String], s: SparkSession)(
+      build: => Seq[DataFrame]): Seq[DataFrame] = {
+    val served = slots.flatMap(serving(_, s))
+    if (served.size == slots.size) served
+    else slots.zip(build).map { case (slot, df) => pin(slot, df) }
+  }
+
+  /** The frame `s` pinned under `slot`. */
   def serving(slot: String, s: SparkSession): Option[DataFrame] =
     scope(s).pins.get(slot)
 

@@ -148,25 +148,26 @@ object Text {
     * fixture until the next invocation replaces them.
     */
   private def bpeWalk(s: SparkSession, d: String)
-      : (DataFrame, DataFrame) =
+      : (DataFrame, DataFrame) = {
     // the learned merges + final vocab are a pure function of the
     // fixture and vocabulary-sized — served from the live pins across
-    // invocations (r14, the session-memo discipline): the 16-iteration
-    // walk (~33 eager checkpoint jobs) runs once per session instead of
-    // once per bench rep, for BOTH its consumers (train + apply)
-    (Checkpoints.serving(s"bpeM:$d", s),
-        Checkpoints.serving(s"bpeW:$d", s)) match {
-      case (Some(m), Some(w)) => (m, w)
-      case _ =>
-        val vocab = Tables.documents(s, d)
-          .select(explode(toks(col("text"))).as("w"))
-          .filter(col("w").rlike("^[a-z]+$"))
-          .groupBy(col("w")).agg(count(lit(1)).as("freq"))
-          .select(col("w"),
-            regexp_replace(col("w"), "(.)", "~$1~").as("repr"),
-            col("freq"))
-        bpeWalkFrom(vocab, d)
+    // invocations: the 16-iteration walk (~33 eager checkpoint jobs) runs
+    // once per session instead of once per bench rep, for BOTH its
+    // consumers (train + apply). bpeWalkFrom pins the same slots itself
+    // (its law test calls it directly), so the memo's re-pin is a no-op.
+    val Seq(m, w) = Checkpoints.memo(Seq(s"bpeM:$d", s"bpeW:$d"), s) {
+      val vocab = Tables.documents(s, d)
+        .select(explode(toks(col("text"))).as("w"))
+        .filter(col("w").rlike("^[a-z]+$"))
+        .groupBy(col("w")).agg(count(lit(1)).as("freq"))
+        .select(col("w"),
+          regexp_replace(col("w"), "(.)", "~$1~").as("repr"),
+          col("freq"))
+      val (m0, w0) = bpeWalkFrom(vocab, d)
+      Seq(m0, w0)
     }
+    (m, w)
+  }
 
   /** The merge loop over a pre-built (w, repr, freq) vocabulary —
     * split out so the exhaustion guard is law-testable on a sparse
@@ -2594,60 +2595,57 @@ object Text {
       // table and the Viterbi-segmented vocabulary are pure fixture
       // artifacts — served across invocations; the 12 intermediate DP
       // levels are freed as soon as the final frame materializes
-      val (lpF, finalsF) = (Checkpoints.serving(s"uniLp:$d", s),
-          Checkpoints.serving(s"uniF:$d", s)) match {
-        case (Some(a), Some(b)) => (a, b)
-        case _ =>
-          val vocab = Tables.documents(s, d)
-            .select(explode(toks(col("text"))).as("w"))
-            .filter(col("w").rlike("^[a-z]+$") && length(col("w")) <= 12)
-            .groupBy(col("w")).agg(count(lit(1)).as("freq"))
-          val pieces = vocab
-            .select(col("freq"), explode(expr(
-              "flatten(transform(sequence(1, length(w)), i ->" +
-                " transform(sequence(1, least(4, length(w) - i + 1))," +
-                " l -> substring(w, i, l))))")).as("p"))
-            .groupBy(col("p")).agg(sum(col("freq")).as("cnt"))
-            .filter(col("cnt") >= 2 || length(col("p")) === 1)
-          val tot = pieces.agg(sum(col("cnt")).as("tot"))
-          val lp = pieces.crossJoin(broadcast(tot))
-            .select(col("p"), col("cnt").as("seed_cnt"),
-              eround(log(col("cnt").cast("double"))
-                - log(col("tot").cast("double")), 6)
-                .cast("decimal(18,6)").as("lp"))
-            .coalesce(1).localCheckpoint()
-          // Viterbi over positions: byPos(i) = best (score, path) per
-          // word reaching char i; candidates extend byPos(i-l) with the
-          // length-l piece ending at i (the length(w) >= i guard keeps
-          // out-of-range substrings from matching shorter pieces)
-          val s0 = vocab.select(col("w"), col("freq"),
-            lit(0).cast("decimal(28,6)").as("sc"), lit("").as("pt"))
-            .coalesce(1).localCheckpoint()
-          val byPos = scala.collection.mutable.ArrayBuffer[DataFrame](s0)
-          for (i <- 1 to 12) {
-            val cands = (1 to math.min(4, i)).map { l =>
-              byPos(i - l).filter(length(col("w")) >= i)
-                .join(broadcast(lp),
-                  substring(col("w"), i - l + 1, l) === col("p"))
-                .select(col("w"), col("freq"),
-                  (col("sc") + col("lp")).as("sc"),
-                  when(col("pt") === "", col("p"))
-                    .otherwise(concat(col("pt"), lit("|"), col("p")))
-                    .as("pt"))
-            }.reduce(_.unionByName(_))
-            byPos += cands.groupBy(col("w"), col("freq"))
-              .agg(max(struct(col("sc"), col("pt"))).as("m"))
+      val Seq(lpF, finalsF) =
+          Checkpoints.memo(Seq(s"uniLp:$d", s"uniF:$d"), s) {
+        val vocab = Tables.documents(s, d)
+          .select(explode(toks(col("text"))).as("w"))
+          .filter(col("w").rlike("^[a-z]+$") && length(col("w")) <= 12)
+          .groupBy(col("w")).agg(count(lit(1)).as("freq"))
+        val pieces = vocab
+          .select(col("freq"), explode(expr(
+            "flatten(transform(sequence(1, length(w)), i ->" +
+              " transform(sequence(1, least(4, length(w) - i + 1))," +
+              " l -> substring(w, i, l))))")).as("p"))
+          .groupBy(col("p")).agg(sum(col("freq")).as("cnt"))
+          .filter(col("cnt") >= 2 || length(col("p")) === 1)
+        val tot = pieces.agg(sum(col("cnt")).as("tot"))
+        val lp = pieces.crossJoin(broadcast(tot))
+          .select(col("p"), col("cnt").as("seed_cnt"),
+            eround(log(col("cnt").cast("double"))
+              - log(col("tot").cast("double")), 6)
+              .cast("decimal(18,6)").as("lp"))
+          .coalesce(1).localCheckpoint()
+        // Viterbi over positions: byPos(i) = best (score, path) per
+        // word reaching char i; candidates extend byPos(i-l) with the
+        // length-l piece ending at i (the length(w) >= i guard keeps
+        // out-of-range substrings from matching shorter pieces)
+        val s0 = vocab.select(col("w"), col("freq"),
+          lit(0).cast("decimal(28,6)").as("sc"), lit("").as("pt"))
+          .coalesce(1).localCheckpoint()
+        val byPos = scala.collection.mutable.ArrayBuffer[DataFrame](s0)
+        for (i <- 1 to 12) {
+          val cands = (1 to math.min(4, i)).map { l =>
+            byPos(i - l).filter(length(col("w")) >= i)
+              .join(broadcast(lp),
+                substring(col("w"), i - l + 1, l) === col("p"))
               .select(col("w"), col("freq"),
-                col("m.sc").as("sc"), col("m.pt").as("pt"))
-              .coalesce(1).localCheckpoint()
-          }
-          val finalsCk = (1 to 12).map(i =>
-              byPos(i).filter(length(col("w")) === i))
-            .reduce(_.unionByName(_))
+                (col("sc") + col("lp")).as("sc"),
+                when(col("pt") === "", col("p"))
+                  .otherwise(concat(col("pt"), lit("|"), col("p")))
+                  .as("pt"))
+          }.reduce(_.unionByName(_))
+          byPos += cands.groupBy(col("w"), col("freq"))
+            .agg(max(struct(col("sc"), col("pt"))).as("m"))
+            .select(col("w"), col("freq"),
+              col("m.sc").as("sc"), col("m.pt").as("pt"))
             .coalesce(1).localCheckpoint()
-          byPos.foreach(Checkpoints.free)
-          (Checkpoints.pin(s"uniLp:$d", lp),
-            Checkpoints.pin(s"uniF:$d", finalsCk))
+        }
+        val finalsCk = (1 to 12).map(i =>
+            byPos(i).filter(length(col("w")) === i))
+          .reduce(_.unionByName(_))
+          .coalesce(1).localCheckpoint()
+        byPos.foreach(Checkpoints.free)
+        Seq(lp, finalsCk)
       }
       val em = finalsF
         .select(col("freq"), explode(split(col("pt"), "\\|")).as("p"))

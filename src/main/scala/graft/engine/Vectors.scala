@@ -14,6 +14,20 @@ import graft.engine.functions.GraftFunctions
   * bucket key instead of forming n² pairs. At 100 TB the same surfaces hold:
   * probes stay broadcastable, LSH bucket sizes are tunable via plane count.
   *
+  * Probe ranking has one skeleton, candidates then exact rerank: [[probes]]
+  * (vec_id < 10 as `probe_id`) → [[against]] (the broadcast candidate
+  * pairs, all of them or those sharing a list or code key) → a score →
+  * [[topK]] (per probe, vec_id tie-break) → for the two-stage rows
+  * [[rerank]] (the shortlist's exact integer-L2 top 5). Brute force,
+  * range, the evals, Matryoshka, Hamming ([[signBits]], [[hamming]]), IVF,
+  * PQ and IVF-PQ ([[pqSplit]], [[pqIndex]], [[shortlist]]) are spelled on
+  * it, with [[exactTop]] as the shared ground truth. The oracle twins are
+  * [[oCos]], [[oRank]], [[oScored]], [[oSigns]], [[oExactTop]] and
+  * [[oRerank]]; [[boundedPairs]] with its twins [[oPairs]] and [[oReach]]
+  * serves the bounded dedup rows. `q_vec_outlier` keeps its in-plan
+  * argmin, `q_vec_mmr` its fold, and `q_knn_label_vote` its vote window
+  * (an `= 1` filter).
+  *
   * Float discipline: embeddings are float32 at rest; every arithmetic path
   * first casts to double (`vd`), and dot products are sequential left folds
   * (`aggregate(zip_with(..))`) which match DuckDB's `list_dot_product`
@@ -27,13 +41,151 @@ object Vectors {
   private def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
 
-  /** Cosine via the native codegen'd CosineSimilarity expression —
-    * bit-identical to the lambda fold formulation (same sequential
-    * accumulation and final formula), but one fused loop inside
-    * whole-stage codegen.
+  /** The cosine ε-rounded to 6dp: every float ranking orders by it, so
+    * both engines rank identically. The cosine is the native codegen'd
+    * CosineSimilarity expression — bit-identical to the lambda fold
+    * formulation (same sequential accumulation and final formula), but
+    * one fused loop inside whole-stage codegen.
     */
-  private def cosine(a: Column, b: Column): Column =
-    GraftFunctions.cosine_sim(a, b)
+  private def cos6(a: Column, b: Column): Column =
+    eround(GraftFunctions.cosine_sim(a, b), 6)
+
+  /** The embeddings as integer micros `(vec_id, q)`. */
+  private def micros(s: SparkSession, d: String): DataFrame =
+    Tables.embeddings(s, d)
+      .select(col("vec_id"), expr("int_micros(embedding)").as("q"))
+
+  /** The probe set: the rows of `frame` with vec_id < 10, as `probe_id`
+    * followed by `cols`. */
+  private def probes(frame: DataFrame, cols: Column*): DataFrame =
+    frame.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("probe_id") +: cols: _*)
+
+  /** The candidate pairs: `corpus` against the broadcast `probes`, every
+    * pair or, with join keys `on`, the pairs that share them; a probe is
+    * never its own candidate.
+    */
+  private def against(corpus: DataFrame, probes: DataFrame,
+      on: String*): DataFrame =
+    (if (on.isEmpty) corpus.crossJoin(broadcast(probes))
+     else corpus.join(broadcast(probes), on))
+      .filter(col("vec_id") =!= col("probe_id"))
+
+  /** The first `k` rows of each `part` group in `order`, numbered 1..k in
+    * column `rank`. */
+  private def firstK(df: DataFrame, k: Int, rank: String, part: Seq[String],
+      order: Column*): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(part.map(col): _*).orderBy(order: _*)
+    df.withColumn(rank, row_number().over(w)).filter(col(rank) <= k)
+  }
+
+  /** Each probe's top `k` by `by`, ties broken on vec_id, numbered in
+    * `rank`; `within` splits each probe's ranking further (the prefix dim
+    * of the MRL curve). */
+  private def topK(df: DataFrame, k: Int, rank: String, by: Column,
+      within: String*): DataFrame =
+    firstK(df, k, rank, "probe_id" +: within, by, asc("vec_id"))
+
+  /** The exact ground truth over the micros `qs`: each probe's integer-L2
+    * top `k`, as (probe_id, vec_id). */
+  private def exactTop(qs: DataFrame, k: Int): DataFrame =
+    topK(against(qs, probes(qs, col("q").as("pq")))
+        .withColumn("d2", expr("int_sqdist(q, pq)")), k, "re", asc("d2"))
+      .select(col("probe_id"), col("vec_id"))
+
+  /** Sign-bit signatures `(vec_id, lo, hi)`: dim i sets a bit iff
+    * embedding[i] > 0, packed into two 32-bit halves (a single 64-bit pack
+    * would need 1L<<63, whose sign wrap invites engine drift). */
+  private def signBits(s: SparkSession, d: String): DataFrame = {
+    def half(off: Int) = expr(
+      s"""aggregate(sequence(0, 31), 0L, (acc, i) ->
+         | acc + CASE WHEN element_at(embedding, i + ${off + 1}) > 0
+         |  THEN shiftleft(1L, i) ELSE 0L END)""".stripMargin)
+    Tables.embeddings(s, d)
+      .select(col("vec_id"), half(0).as("lo"), half(32).as("hi"))
+  }
+
+  /** The candidate pairs of the signatures `sigs` with their `hamming`
+    * distance, popcount(xor(lo)) + popcount(xor(hi)). */
+  private def hamming(sigs: DataFrame): DataFrame =
+    against(sigs, probes(sigs, col("lo").as("plo"), col("hi").as("phi")))
+      .withColumn("hamming",
+        (bit_count(col("lo").bitwiseXOR(col("plo")))
+          + bit_count(col("hi").bitwiseXOR(col("phi")))).cast("long"))
+
+  /** The PQ split of array column `v`: 4 contiguous quarters, one row per
+    * `sub_id` 0–3 holding its quarter as `out`, after the columns `keep`. */
+  private def pqSplit(df: DataFrame, v: String, out: String,
+      keep: String*): DataFrame =
+    df.withColumn("sd", expr(s"size($v) DIV 4"))
+      .select(keep.map(col) ++ Seq(
+        explode(sequence(lit(0), lit(3))).as("sub_id"),
+        expr(s"slice($v, sub_id * sd + 1, sd)").as(out)): _*)
+
+  /** A PQ index over the subvectors `subs` (vec_id, sub_id, sv, ...):
+    * per-subspace 16-entry codebooks from `iters` [[Lloyd]] iterations on
+    * the vec_id < 256 sample, seeded from its first 16 rows, and every
+    * row's code. Returns the codebook (sub_id, c_id, cv) and the lazily
+    * checkpointed encoding (vec_id, sub_id, code, `keep`).
+    */
+  private def pqIndex(s: SparkSession, subs: DataFrame, iters: Int,
+      keep: Column*): Seq[DataFrame] = {
+    val rows = subs.filter(col("vec_id") < 256)
+      .select(col("sub_id").as("g"), col("vec_id").as("id"),
+        col("sv").as("x"))
+    val book = Lloyd.train(rows,
+      Lloyd.seed(rows.filter(col("id") < 16)), Lloyd.SqDist, iters)
+    val enc = subs.select(Seq(col("vec_id"), col("sub_id"),
+        Lloyd.nearest(book, Lloyd.SqDist, col("sv"), col("sub_id"))
+          .getField("id").as("code")) ++ keep: _*)
+      .localCheckpoint(false)
+    Seq(Lloyd.frame(s, book)
+      .select(col("g").as("sub_id"), col("c_id"), col("cv")), enc)
+  }
+
+  /** The ADC shortlist: each probe's `n` candidates in `cands` (probe_id,
+    * vec_id, pd per subspace) with the least summed table distance `ad2`.
+    * It is pinned under `slot` as a checkpoint: it is the candidate set
+    * handed to [[rerank]], generated once and then decoded, and the cut
+    * keeps the rerank query's AQE stages from carrying the whole
+    * encode+ADC lineage in every task binary (for q_vec_pq this one cut
+    * was measured to clear all ~1.1 MiB large-task-binary warnings;
+    * values unchanged).
+    */
+  private def shortlist(slot: String, cands: DataFrame, n: Int): DataFrame =
+    Checkpoints.pin(slot, topK(cands
+        .groupBy(col("probe_id"), col("vec_id"))
+        .agg(sum(col("pd")).as("ad2")), n, "rs", asc("ad2"))
+      .select(col("probe_id"), col("vec_id"), col("ad2"))
+      .localCheckpoint())
+
+  /** The exact rerank: the shortlisted originals of the micros `qs`
+    * against their probes' `pq`, each probe's integer-L2 top 5 with the
+    * ADC estimate it was shortlisted on. Only shortlisted vectors are
+    * decoded. */
+  private def rerank(qs: DataFrame, shortlist: DataFrame,
+      probes: DataFrame): DataFrame =
+    topK(qs.join(broadcast(shortlist), "vec_id")
+        .join(broadcast(probes), Seq("probe_id"))
+        .withColumn("d2", expr("int_sqdist(q, pq)")), 5, "rnk", asc("d2"))
+      .select(col("probe_id"), col("rnk"), col("vec_id"), col("d2"),
+        col("ad2"))
+      .orderBy(col("probe_id"), col("rnk"))
+
+  /** The bounded dedup corpus: vec_id < 300 as double vectors `v`. */
+  private def bounded(s: SparkSession, d: String): DataFrame =
+    Tables.embeddings(s, d).filter(col("vec_id") < 300)
+      .select(col("vec_id"), vd(col("embedding")).as("v"))
+
+  /** Every pair of the bounded corpus, id_a < id_b, with its `cos_r`. */
+  private def boundedPairs(s: SparkSession, d: String): DataFrame = {
+    val emb = bounded(s, d)
+    emb.select(col("vec_id").as("id_a"), col("v").as("va"))
+      .join(emb.select(col("vec_id").as("id_b"), col("v").as("vb")),
+        col("id_a") < col("id_b"))
+      .withColumn("cos_r", cos6(col("va"), col("vb")))
+  }
 
   /** Lloyd's k-means over a driver-held centroid book: the one training
     * loop behind q_vec_kmeans, the IVF lists of q_sim_topk_ivf, the PQ
@@ -82,7 +234,7 @@ object Vectors {
       */
     case object CosineMicros extends Metric {
       def key(x: Column, c: Column): Column =
-        -round(eround(cosine(x, c), 6) * 1e6).cast("long")
+        -round(cos6(x, c) * 1e6).cast("long")
     }
 
     /** Winning centroid of `x` within its `group`'s book, as
@@ -163,7 +315,7 @@ object Vectors {
     val r = bucketed.select(col("bucket"), col("vec_id").as("id_b"),
       col("v").as("vb"))
     l.join(r, Seq("bucket")).filter(col("id_a") < col("id_b"))
-      .withColumn("cos_r", eround(cosine(col("va"), col("vb")), 6))
+      .withColumn("cos_r", cos6(col("va"), col("vb")))
       .filter(col("cos_r") >= 0.99)
   }
 
@@ -174,8 +326,8 @@ object Vectors {
     * joins + one aggregate (no driver-side data, only a convergence count).
     * Lineage MUST be truncated between rounds: each round references the
     * previous labels three times, so without a checkpoint the logical plan
-    * grows 3^rounds and the analyzer OOMs. localCheckpoint (lazy, r16 —
-    * the per-round convergence count is the materializing action)
+    * grows 3^rounds and the analyzer OOMs. localCheckpoint (lazy — the
+    * per-round convergence count is the materializing action)
     * persists to executor storage; a cluster deployment would use
     * reliable checkpoint() on the same cadence. Superseded rounds' blocks
     * are freed as soon as the next round materializes.
@@ -186,21 +338,19 @@ object Vectors {
     */
   private def connectedComponents(nodes: DataFrame, pairs: DataFrame,
       slot: String): DataFrame = {
-    // r15: edges and every round's label frame are keyed-repartitioned
+    // Edges and every round's label frame are keyed-repartitioned
     // BEFORE their checkpoints. NOT exchange elimination — under AQE the
     // checkpoint leaf reports UnknownPartitioning (the PlanSpec
     // checkpoint-partitioning canary), so each round's joins still plan
-    // their ENSURE_REQUIREMENTS exchanges. The win is the r14
-    // betweenness COMPACTION effect: AQE coalesces the repartition
-    // output, so the pinned frames hold a few right-sized partitions
-    // (measured: 1 at fixture scale vs 32 round-robin blocks) and every
-    // per-round stage over them schedules proportionally fewer tasks.
-    // Measured −15% on q_dedup_groups_lsh; the bounded exact demo is
-    // flat. If the canary ever flips, the same spelling starts
-    // collapsing the per-round exchanges too.
-    // Lazy checkpoints (r16): round 0's convergence count is the first
-    // action over both frames, so their blocks persist as a side effect
-    // of that job instead of two dedicated setup materializations.
+    // their ENSURE_REQUIREMENTS exchanges. The win is compaction (as in
+    // betweenness): AQE coalesces the repartition output, so the pinned
+    // frames hold a few right-sized partitions and every per-round stage
+    // over them schedules proportionally fewer tasks (measurements in
+    // OPTIMIZATION_r15.md §6). If the canary ever flips, the same
+    // spelling starts collapsing the per-round exchanges too.
+    // Lazy checkpoints: round 0's convergence count is the first action
+    // over both frames, so their blocks persist as a side effect of that
+    // job instead of two dedicated setup materializations.
     val edges = pairs.unionByName(
         pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
       .select(col("id_a").as("src"), col("id_b").as("dst"))
@@ -227,9 +377,9 @@ object Vectors {
       // pre-round label rides along as `old` so the convergence check
       // below is a narrow filter-count over the checkpointed frame —
       // no extra join against the previous labels.
-      // r16 (VERDICT item 2): the checkpoint is LAZY and the convergence
-      // count is its materializing action — one job reads the round's
-      // rows as they persist, where the eager spelling paid a dedicated
+      // The checkpoint is LAZY and the convergence count is its
+      // materializing action — one job reads the round's rows as they
+      // persist, where the eager spelling paid a dedicated
       // materialization job AND a full block re-scan for the count.
       // (Under AQE the round's intermediate exchange stages still run at
       // plan time either way; this folds only the final stage + count.)
@@ -279,17 +429,10 @@ object Vectors {
     // both engines' orderings identical.
     "q_sim_topk" -> { (s, d) =>
       val emb = Tables.embeddings(s, d).withColumn("v", vd(col("embedding")))
-      val probes = emb.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("v").as("pv"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("probe_id"))
-        .orderBy(desc("cos_r"), asc("vec_id"))
-      emb.select(col("vec_id"), col("v"))
-        .crossJoin(broadcast(probes))
-        .filter(col("vec_id") =!= col("probe_id"))
-        .withColumn("cos_r", eround(cosine(col("pv"), col("v")), 6))
-        .withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= 5)
+      topK(against(emb.select(col("vec_id"), col("v")),
+            probes(emb, col("v").as("pv")))
+          .withColumn("cos_r", cos6(col("pv"), col("v"))),
+          5, "rnk", desc("cos_r"))
         .select(col("probe_id"), col("rnk"), col("vec_id"), col("cos_r"))
         .orderBy(col("probe_id"), col("rnk"))
     },
@@ -305,12 +448,9 @@ object Vectors {
     // engines identical.
     "q_sim_range_search" -> { (s, d) =>
       val emb = Tables.embeddings(s, d).withColumn("v", vd(col("embedding")))
-      val probes = emb.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("v").as("pv"))
-      emb.select(col("vec_id"), col("v"))
-        .crossJoin(broadcast(probes))
-        .filter(col("vec_id") =!= col("probe_id"))
-        .withColumn("cos_r", eround(cosine(col("pv"), col("v")), 6))
+      against(emb.select(col("vec_id"), col("v")),
+          probes(emb, col("v").as("pv")))
+        .withColumn("cos_r", cos6(col("pv"), col("v")))
         .filter(col("cos_r") >= 0.3)
         .select(col("probe_id"), col("vec_id"), col("cos_r"))
         .orderBy(col("probe_id"), col("vec_id"))
@@ -327,8 +467,7 @@ object Vectors {
     // axis. Matrix = 1024-row broadcast; projection = explode + join +
     // (vec, out-dim) partial agg — linear in corpus size.
     "q_vec_rand_proj" -> { (s, d) =>
-      val qs = Tables.embeddings(s, d)
-        .select(col("vec_id"), expr("int_micros(embedding)").as("q"))
+      val qs = micros(s, d)
       val signs = s.range(16).select(col("id").as("j"))
         .crossJoin(s.range(64).select(col("id").as("i")))
         .withColumn("sgn", when(pmod(conv(substring(md5(concat_ws(":",
@@ -340,30 +479,13 @@ object Vectors {
         .join(broadcast(signs), Seq("i"))
         .groupBy(col("vec_id"), col("j"))
         .agg(sum(col("sgn") * col("x")).as("r"))
-      val pproj = proj.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("j"),
-          col("r").as("pr"))
-      val wP = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("probe_id")).orderBy(asc("d2"), asc("vec_id"))
-      val approx = proj.join(broadcast(pproj), Seq("j"))
-        .filter(col("vec_id") =!= col("probe_id"))
-        .groupBy(col("probe_id"), col("vec_id"))
-        .agg(sum((col("r") - col("pr")) * (col("r") - col("pr")))
-          .as("d2"))
-        .withColumn("rp", row_number().over(wP))
-        .filter(col("rp") <= 5)
+      val approx = topK(
+          against(proj, probes(proj, col("j"), col("r").as("pr")), "j")
+            .groupBy(col("probe_id"), col("vec_id"))
+            .agg(sum((col("r") - col("pr")) * (col("r") - col("pr")))
+              .as("d2")), 5, "rp", asc("d2"))
         .select(col("probe_id"), col("vec_id"), lit(1).as("hit"))
-      val probes = qs.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("q").as("pq"))
-      val wF = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("probe_id")).orderBy(asc("d2"), asc("vec_id"))
-      val exact = qs.crossJoin(broadcast(probes))
-        .filter(col("vec_id") =!= col("probe_id"))
-        .withColumn("d2", expr("int_sqdist(q, pq)"))
-        .withColumn("re", row_number().over(wF))
-        .filter(col("re") <= 5)
-        .select(col("probe_id"), col("vec_id"))
-      exact.join(approx, Seq("probe_id", "vec_id"), "left")
+      exactTop(qs, 5).join(approx, Seq("probe_id", "vec_id"), "left")
         .groupBy(col("probe_id"))
         .agg(count(col("hit")).as("hits"))
         .select(col("probe_id"), col("hits"),
@@ -381,32 +503,17 @@ object Vectors {
     // Probes broadcast; the dim axis is a 3-way explode over the
     // bounded probe×corpus pair frame; one window per (probe, dim).
     "q_vec_mrl_curve" -> { (s, d) =>
-      val qs = Tables.embeddings(s, d)
-        .select(col("vec_id"), expr("int_micros(embedding)").as("q"))
-      val probes = qs.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("q").as("pq"))
-      val pairs = qs.crossJoin(broadcast(probes))
-        .filter(col("vec_id") =!= col("probe_id"))
-      val wF = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("probe_id")).orderBy(asc("d2"), asc("vec_id"))
-      val exact = pairs.withColumn("d2", expr("int_sqdist(q, pq)"))
-        .withColumn("re", row_number().over(wF))
-        .filter(col("re") <= 5)
-        .select(col("probe_id"), col("vec_id"))
-      val wP = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("probe_id"), col("dim"))
-        .orderBy(asc("d2"), asc("vec_id"))
-      val approx = pairs
-        .withColumn("dim", explode(array(lit(8), lit(16), lit(32))))
-        .withColumn("d2", expr(
-          "int_sqdist(slice(q, 1, dim), slice(pq, 1, dim))"))
-        .withColumn("rp", row_number().over(wP))
-        .filter(col("rp") <= 5)
+      val qs = micros(s, d)
+      val approx = topK(against(qs, probes(qs, col("q").as("pq")))
+          .withColumn("dim", explode(array(lit(8), lit(16), lit(32))))
+          .withColumn("d2", expr(
+            "int_sqdist(slice(q, 1, dim), slice(pq, 1, dim))")),
+          5, "rp", asc("d2"), "dim")
         .select(col("probe_id"), col("dim"), col("vec_id"))
       // LEFT join (not semi) so a (probe, dim) whose prefix ranking
       // shares NOTHING with the exact top-5 still emits a hits=0 row —
       // the curve must show the failure point, not drop it.
-      exact.crossJoin(broadcast(s.range(1)
+      exactTop(qs, 5).crossJoin(broadcast(s.range(1)
           .select(explode(array(lit(8), lit(16), lit(32))).as("dim"))))
         .join(approx.withColumn("hit", lit(1)),
           Seq("probe_id", "dim", "vec_id"), "left")
@@ -427,38 +534,9 @@ object Vectors {
     // oracle-replayable — the rare eval whose numbers hash-match. One
     // broadcast probe pass per ranking + a 5-row-per-probe join.
     "q_sim_eval_recall" -> { (s, d) =>
-      def half(off: Int) = expr(
-        s"""aggregate(sequence(0, 31), 0L, (acc, i) ->
-           | acc + CASE WHEN element_at(embedding, i + ${off + 1}) > 0
-           |  THEN shiftleft(1L, i) ELSE 0L END)""".stripMargin)
-      val sigs = Tables.embeddings(s, d)
-        .select(col("vec_id"), half(0).as("lo"), half(32).as("hi"))
-      val probesS = sigs.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"),
-          col("lo").as("plo"), col("hi").as("phi"))
-      val wH = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("probe_id")).orderBy(asc("hamming"), asc("vec_id"))
-      val ham = sigs.crossJoin(broadcast(probesS))
-        .filter(col("vec_id") =!= col("probe_id"))
-        .withColumn("hamming",
-          (bit_count(col("lo").bitwiseXOR(col("plo")))
-            + bit_count(col("hi").bitwiseXOR(col("phi")))).cast("long"))
-        .withColumn("rh", row_number().over(wH))
-        .filter(col("rh") <= 20)
+      val ham = topK(hamming(signBits(s, d)), 20, "rh", asc("hamming"))
         .select(col("probe_id"), col("vec_id"), col("rh"))
-      val qs = Tables.embeddings(s, d)
-        .select(col("vec_id"), expr("int_micros(embedding)").as("q"))
-      val probesE = qs.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("q").as("pq"))
-      val wE = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("probe_id")).orderBy(asc("d2"), asc("vec_id"))
-      val exact = qs.crossJoin(broadcast(probesE))
-        .filter(col("vec_id") =!= col("probe_id"))
-        .withColumn("d2", expr("int_sqdist(q, pq)"))
-        .withColumn("re", row_number().over(wE))
-        .filter(col("re") <= 5)
-        .select(col("probe_id"), col("vec_id"))
-      exact.join(ham, Seq("probe_id", "vec_id"), "left")
+      exactTop(micros(s, d), 5).join(ham, Seq("probe_id", "vec_id"), "left")
         .groupBy(col("probe_id"))
         .agg(count(lit(1)).as("n_exact"),
           count(when(col("rh") <= 5, 1)).as("hits_at_5"),
@@ -483,33 +561,27 @@ object Vectors {
     // never computed through libm at runtime (positions 1 and 3 yield
     // exactly 1.0 and 0.5, the on-the-decimal-grid class where a 1-ulp
     // log2 difference between engine builds flips the ε-round — the
-    // r10 q_dedup_fellegi failure mode). The literals reproduce
+    // failure mode q_dedup_fellegi hit). The literals reproduce
     // eround(1/log2(i+1), 9) bit-for-bit, so DCG/IDCG stay exact
     // order-free decimal sums; IDCG takes min(corpus relevant, 10)
     // ideal positions. Probe set broadcasts; one bounded top-k window.
     "q_sim_eval_ndcg" -> { (s, d) =>
       val dec = org.apache.spark.sql.types.DecimalType(18, 9)
       val emb = Tables.embeddings(s, d).withColumn("v", vd(col("embedding")))
-      val probes = emb.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("v").as("pv"),
-          col("label").as("plabel"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("probe_id")).orderBy(desc("cos_r"), asc("vec_id"))
+      val ps = probes(emb, col("v").as("pv"), col("label").as("plabel"))
       val warr = array(Fx.dcgWeights
         .map(x => lit(new java.math.BigDecimal(x)).cast(dec)): _*)
       val pw = element_at(warr, col("rnk").cast("int"))
-      val scored = emb.select(col("vec_id"), col("v"), col("label"))
-        .crossJoin(broadcast(probes))
-        .filter(col("vec_id") =!= col("probe_id"))
-        .withColumn("cos_r", eround(cosine(col("pv"), col("v")), 6))
-        .withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= 10)
+      val scored = topK(
+          against(emb.select(col("vec_id"), col("v"), col("label")), ps)
+            .withColumn("cos_r", cos6(col("pv"), col("v"))),
+          10, "rnk", desc("cos_r"))
         .withColumn("rel", (col("label") === col("plabel")).cast("int"))
         .groupBy(col("probe_id"), col("plabel"))
         .agg(sum(when(col("rel") === 1, pw)).as("dcg"),
           sum(col("rel")).as("n_rel_top10"),
           min(when(col("rel") === 1, col("rnk"))).as("first_rel"))
-      val idcg = probes
+      val idcg = ps
         .join(broadcast(emb.groupBy(col("label")).agg(count(lit(1))
           .as("lc"))), col("plabel") === col("label"))
         .select(col("probe_id"), (col("lc") - 1).as("nr"))
@@ -537,56 +609,27 @@ object Vectors {
     // bounds per-probe state at both ranks.
     "q_vec_matryoshka" -> { (s, d) =>
       val emb = Tables.embeddings(s, d).withColumn("v", vd(col("embedding")))
-      val probes = emb.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("v").as("pv"))
-      val wc = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("probe_id")).orderBy(desc("cos_c"), asc("vec_id"))
-      val wf = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("probe_id")).orderBy(desc("cos_f"), asc("vec_id"))
-      emb.select(col("vec_id"), col("v"))
-        .crossJoin(broadcast(probes))
-        .filter(col("vec_id") =!= col("probe_id"))
-        .withColumn("cos_c",
-          eround(cosine(slice(col("pv"), 1, 16), slice(col("v"), 1, 16)), 6))
-        .withColumn("rc", row_number().over(wc))
-        .filter(col("rc") <= 50)
-        .withColumn("cos_f", eround(cosine(col("pv"), col("v")), 6))
-        .withColumn("rnk", row_number().over(wf))
-        .filter(col("rnk") <= 5)
+      val coarse = topK(against(emb.select(col("vec_id"), col("v")),
+            probes(emb, col("v").as("pv")))
+          .withColumn("cos_c",
+            cos6(slice(col("pv"), 1, 16), slice(col("v"), 1, 16))),
+          50, "rc", desc("cos_c"))
+      topK(coarse.withColumn("cos_f", cos6(col("pv"), col("v"))),
+          5, "rnk", desc("cos_f"))
         .select(col("probe_id"), col("rnk"), col("vec_id"), col("cos_f"))
         .orderBy(col("probe_id"), col("rnk"))
     },
 
     // Hamming-space ANN over sign-binarized embeddings — the 1-bit
-    // quantization ANN family (binary embeddings à la ITQ): dim i sets a
-    // bit iff embedding[i] > 0, packed into two 32-bit halves (a single
-    // 64-bit pack would need 1L<<63, whose sign wrap invites engine
-    // drift), distance = popcount(xor(lo)) + popcount(xor(hi)). ALL
-    // integer ops — unlike float ANN this variant is fully oracle-able
-    // with exact hash parity. Signatures are 16 bytes/vector (64× smaller
-    // than the float vectors), the probe set broadcasts, and the xor+
-    // popcount inner loop is codegen'd arithmetic — the classic memory-
-    // bound rerank-filter layout at 100 TB.
+    // quantization ANN family (binary embeddings à la ITQ), packed by
+    // [[signBits]] and compared by [[hamming]]. ALL integer ops — unlike
+    // float ANN this variant is fully oracle-able with exact hash parity.
+    // Signatures are 16 bytes/vector (64× smaller than the float
+    // vectors), the probe set broadcasts, and the xor+popcount inner loop
+    // is codegen'd arithmetic — the classic memory-bound rerank-filter
+    // layout at 100 TB.
     "q_sim_topk_hamming" -> { (s, d) =>
-      def half(off: Int) = expr(
-        s"""aggregate(sequence(0, 31), 0L, (acc, i) ->
-           | acc + CASE WHEN element_at(embedding, i + ${off + 1}) > 0
-           |  THEN shiftleft(1L, i) ELSE 0L END)""".stripMargin)
-      val sigs = Tables.embeddings(s, d)
-        .select(col("vec_id"), half(0).as("lo"), half(32).as("hi"))
-      val probes = sigs.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"),
-          col("lo").as("plo"), col("hi").as("phi"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("probe_id"))
-        .orderBy(asc("hamming"), asc("vec_id"))
-      sigs.crossJoin(broadcast(probes))
-        .filter(col("vec_id") =!= col("probe_id"))
-        .withColumn("hamming",
-          (bit_count(col("lo").bitwiseXOR(col("plo")))
-            + bit_count(col("hi").bitwiseXOR(col("phi")))).cast("long"))
-        .withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= 5)
+      topK(hamming(signBits(s, d)), 5, "rnk", asc("hamming"))
         .select(col("probe_id"), col("rnk"), col("vec_id"), col("hamming"))
         .orderBy(col("probe_id"), col("rnk"))
     },
@@ -594,7 +637,7 @@ object Vectors {
     // All-pairs candidate generation via random-hyperplane LSH (the
     // native 16-bit SimHashBucket) + exact-cosine >= 0.99 confirm.
     // Corpus includes planted identical copies (vec_id + 1,000,000) so
-    // recall is testable. ORACLED (r12, the q_dedup_groups_lsh argument
+    // recall is testable. ORACLED (the q_dedup_groups_lsh argument
     // projected onto the pair set): at the 0.99 confirm threshold the
     // fixture's only qualifying pairs are the planted identical copies
     // (verified: zero natural pairs >= 0.99 at sf0.001/0.01/0.1), and
@@ -628,52 +671,37 @@ object Vectors {
       // learned centroids + corpus assignment are the train-once IVF
       // index: served from live pins so repeated invocations price the
       // probe/top-k query path, not training
-      val (learned, assigned) =
-        (Checkpoints.serving(s"ivf_cents:$d", s),
-            Checkpoints.serving(s"ivf_asg:$d", s)) match {
-          case (Some(c), Some(a)) => (c, a)
-          case _ =>
-            val rows = emb.select(lit(0).as("g"), col("vec_id").as("id"),
-              col("q").as("x"))
-            val book = Lloyd.train(rows,
-              Lloyd.seed(rows.filter(col("id") < 32)), Lloyd.CosineMicros, 2)
-            val assigned0 = emb.select(col("vec_id"), col("v"),
-                Lloyd.nearest(book, Lloyd.CosineMicros, col("q"))
-                  .getField("id").as("cluster"))
-              .localCheckpoint(false)
-            (Checkpoints.pin(s"ivf_cents:$d",
-                Lloyd.frame(s, book).select(col("c_id"), col("cv"))),
-              Checkpoints.pin(s"ivf_asg:$d", assigned0))
-        }
+      val Seq(learned, assigned) =
+          Checkpoints.memo(Seq(s"ivf_cents:$d", s"ivf_asg:$d"), s) {
+        val rows = emb.select(lit(0).as("g"), col("vec_id").as("id"),
+          col("q").as("x"))
+        val book = Lloyd.train(rows,
+          Lloyd.seed(rows.filter(col("id") < 32)), Lloyd.CosineMicros, 2)
+        Seq(Lloyd.frame(s, book).select(col("c_id"), col("cv")),
+          emb.select(col("vec_id"), col("v"),
+              Lloyd.nearest(book, Lloyd.CosineMicros, col("q"))
+                .getField("id").as("cluster"))
+            .localCheckpoint(false))
+      }
       // nprobe = 16 of 32 lists (~half the corpus per probe vs brute
       // force). The fixture embeddings are label-structureless (same-label
       // and cross-label mean cosine are both ~0), so recall at fixed scan
       // fraction is governed by how finely the list ranking resolves
-      // probe-alignment: the round-6 DedupVectorSpec bench-scale law
-      // showed the old 8-list layout saturating at 0.86–0.88 recall from
-      // nprobe 3–5 at sf0.1, while 32 lists at the same 50% scan fraction
-      // clear the >=0.9 gate at both scales. (probe, candidate) pairs stay
+      // probe-alignment: 8 lists saturated below the 0.9 recall gate at
+      // sf0.1 (OPTIMIZATION_r16.md), while 32 lists at the same 50% scan
+      // fraction clear it at both scales. (probe, candidate) pairs stay
       // unique because every candidate lives in exactly one cluster and
       // the probe rows carry distinct clusters — no dedup needed.
-      val wProbe = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("vec_id"))
-        .orderBy(desc("ci"), asc("c_id"))
-      val probes = emb.filter(col("vec_id") < 10)
-        .crossJoin(broadcast(learned))
-        .withColumn("c_cos", eround(cosine(col("q"), col("cv")), 6))
-        .withColumn("ci", round(col("c_cos") * 1e6).cast("long"))
-        .withColumn("pr", row_number().over(wProbe))
-        .filter(col("pr") <= 16)
+      val lists = firstK(emb.filter(col("vec_id") < 10)
+          .crossJoin(broadcast(learned))
+          .withColumn("c_cos", cos6(col("q"), col("cv")))
+          .withColumn("ci", round(col("c_cos") * 1e6).cast("long")),
+          16, "pr", Seq("vec_id"), desc("ci"), asc("c_id"))
         .select(col("vec_id").as("probe_id"), col("v").as("pv"),
           col("c_id").as("cluster"))
-      val wTop = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("probe_id"))
-        .orderBy(desc("cos_r"), asc("vec_id"))
-      assigned.join(broadcast(probes), Seq("cluster"))
-        .filter(col("vec_id") =!= col("probe_id"))
-        .withColumn("cos_r", eround(cosine(col("pv"), col("v")), 6))
-        .withColumn("rnk", row_number().over(wTop))
-        .filter(col("rnk") <= 5)
+      topK(against(assigned, lists, "cluster")
+          .withColumn("cos_r", cos6(col("pv"), col("v"))),
+          5, "rnk", desc("cos_r"))
         .select(col("probe_id"), col("rnk"), col("vec_id"), col("cos_r"))
         .orderBy(col("probe_id"), col("rnk"))
     },
@@ -689,17 +717,15 @@ object Vectors {
     // (‖v‖ = 1), reported per-sample in embedding units. Matvec cells
     // ride 4dp DECIMAL(28,4) sums (order-free); the rescaled 6dp norm
     // cells keep the squares inside DECIMAL(38,12). Gram cells ride
-    // DECIMAL(38,0) (r15, closing the documented residual — the int64
-    // Σqi·qj wrapped past ~2.7e7 vectors).
+    // DECIMAL(38,0): an int64 Σqi·qj would wrap past ~2.7e7 vectors.
     "q_vec_pca_power" -> { (s, d) =>
       val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
-      val qs = Tables.embeddings(s, d)
-        .select(col("vec_id"), expr("int_micros(embedding)").as("q"))
+      val qs = micros(s, d)
       val lng = qs.select(col("vec_id"),
         posexplode(col("q")).as(Seq("i", "qi")))
       // the 64x64 Gram matrix is a pure fixture artifact — served
-      // across invocations (r14, the train-once discipline), so bench
-      // reps price the matvec rounds, not the corpus self-join
+      // across invocations (the train-once discipline), so bench reps
+      // price the matvec rounds, not the corpus self-join
       val gram = Checkpoints.serving("pca:" + d, s).getOrElse(
         Checkpoints.pin("pca:" + d,
         lng.join(lng.select(col("vec_id"), col("i").as("j"),
@@ -741,12 +767,7 @@ object Vectors {
     // q_dedup_ngram_jaccard for text; the unbounded scale path is the LSH
     // bucketing of q_sim_pairs_lsh).
     "q_dedup_embedding" -> { (s, d) =>
-      val emb = Tables.embeddings(s, d).filter(col("vec_id") < 300)
-        .select(col("vec_id"), vd(col("embedding")).as("v"))
-      val a = emb.select(col("vec_id").as("id_a"), col("v").as("va"))
-      val b = emb.select(col("vec_id").as("id_b"), col("v").as("vb"))
-      a.join(b, col("id_a") < col("id_b"))
-        .withColumn("cos_r", eround(cosine(col("va"), col("vb")), 6))
+      boundedPairs(s, d)
         .filter(col("cos_r") >= 0.3)
         .select(col("id_a"), col("id_b"), col("cos_r"))
         .orderBy(col("id_a"), col("id_b"))
@@ -761,14 +782,10 @@ object Vectors {
     // converges in a handful of rounds. The crossover of this quadratic
     // demo against the linear LSH twin is recorded in SURVEY §6.
     "q_dedup_groups" -> { (s, d) =>
-      val emb = Tables.embeddings(s, d).filter(col("vec_id") < 300L)
-        .select(col("vec_id"), vd(col("embedding")).as("v"))
-      val a = emb.select(col("vec_id").as("id_a"), col("v").as("va"))
-      val b = emb.select(col("vec_id").as("id_b"), col("v").as("vb"))
-      val pairs = a.join(b, col("id_a") < col("id_b"))
-        .filter(eround(cosine(col("va"), col("vb")), 6) >= 0.3)
+      val pairs = boundedPairs(s, d).filter(col("cos_r") >= 0.3)
         .select(col("id_a"), col("id_b"))
-      connectedComponents(emb.select(col("vec_id")), pairs, s"cc_exact:$d")
+      connectedComponents(bounded(s, d).select(col("vec_id")), pairs,
+        s"cc_exact:$d")
     },
 
     // The 100 TB dedup-groups pipeline: connected components over the
@@ -831,20 +848,15 @@ object Vectors {
     // k-NN majority-vote label prediction over the top-5 neighbor sets.
     "q_knn_label_vote" -> { (s, d) =>
       val emb = Tables.embeddings(s, d).withColumn("v", vd(col("embedding")))
-      val probes = emb.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("v").as("pv"))
-      val wTop = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("probe_id"))
-        .orderBy(desc("cos_r"), asc("vec_id"))
+      // the vote keeps its own window: on [[firstK]] its `vr === 1`
+      // filter would become `vr <= 1`, which plans differently
       val wVote = org.apache.spark.sql.expressions.Window
         .partitionBy(col("probe_id"))
         .orderBy(desc("votes"), asc("label"))
-      emb.select(col("vec_id"), col("label"), col("v"))
-        .crossJoin(broadcast(probes))
-        .filter(col("vec_id") =!= col("probe_id"))
-        .withColumn("cos_r", eround(cosine(col("pv"), col("v")), 6))
-        .withColumn("rnk", row_number().over(wTop))
-        .filter(col("rnk") <= 5)
+      topK(against(emb.select(col("vec_id"), col("label"), col("v")),
+            probes(emb, col("v").as("pv")))
+          .withColumn("cos_r", cos6(col("pv"), col("v"))),
+          5, "rnk", desc("cos_r"))
         .groupBy(col("probe_id"), col("label"))
         .agg(count(lit(1)).as("votes"))
         .withColumn("vr", row_number().over(wVote))
@@ -868,8 +880,7 @@ object Vectors {
     // In a session without the rule the marker is identity and the same
     // plan runs exactly (cartesian) — semantics never silently change.
     "q_sim_join_rewrite" -> { (s, d) =>
-      val emb = Tables.embeddings(s, d).filter(col("vec_id") < 300)
-        .select(col("vec_id"), vd(col("embedding")).as("v"))
+      val emb = bounded(s, d)
       val corpus = emb.unionByName(emb.filter(col("vec_id") < 10)
         .select((col("vec_id") + 1000000L).as("vec_id"), col("v")))
       val a = corpus.select(col("vec_id").as("id_a"), col("v").as("va"))
@@ -911,8 +922,7 @@ object Vectors {
     // argmax comparator is a total order (score, then vec_id), so the
     // result is independent of collect_list order.
     "q_vec_mmr" -> { (s, d) =>
-      val emb = Tables.embeddings(s, d)
-        .select(col("vec_id"), expr("int_micros(embedding)").as("q"))
+      val emb = micros(s, d)
       val probes = broadcast(emb.filter(col("vec_id") < 3)
         .select(col("vec_id").as("p"), col("q").as("pq")))
       val wRel = org.apache.spark.sql.expressions.Window
@@ -976,8 +986,7 @@ object Vectors {
     "q_vec_outlier" -> { (s, d) =>
       val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
       val dec19 = org.apache.spark.sql.types.DecimalType(19, 0)
-      val emb = Tables.embeddings(s, d)
-        .select(col("vec_id"), expr("int_micros(embedding)").as("q"))
+      val emb = micros(s, d)
       // the seed stays in the plan, not in a driver-held [[Lloyd]] book:
       // collecting it adds a job to every invocation (+9% steady time in
       // graft.Bench at sf0.1 on a 4-core VM)
@@ -1006,8 +1015,7 @@ object Vectors {
     // k = 8 seeded from the first 8 vectors, 2 Lloyd iterations, then the
     // final assignment with its squared distance (see [[Lloyd]]).
     "q_vec_kmeans" -> { (s, d) =>
-      val emb = Tables.embeddings(s, d)
-        .select(col("vec_id"), expr("int_micros(embedding)").as("q"))
+      val emb = micros(s, d)
       val rows = emb.select(lit(0).as("g"), col("vec_id").as("id"),
         col("q").as("x"))
       val book = Lloyd.train(rows, Lloyd.seed(rows.filter(col("id") < 8)),
@@ -1039,71 +1047,23 @@ object Vectors {
     // over candidate scores (bounded probe set), mirroring q_sim_topk.
     // Subvector extraction is a per-row slice — no shuffle.
     "q_vec_pq" -> { (s, d) =>
-      val qs = Tables.embeddings(s, d)
-        .select(col("vec_id"), expr("int_micros(embedding)").as("q"))
-      val subs = qs
-        .withColumn("sd", expr("size(q) DIV 4"))
-        .select(col("vec_id"),
-          explode(sequence(lit(0), lit(3))).as("sub_id"),
-          expr("slice(q, sub_id * sd + 1, sd)").as("sv"))
+      val qs = micros(s, d)
+      val subs = pqSplit(qs, "q", "sv", "vec_id")
       // Codebooks train on a deterministic SAMPLE (vec_id < 256), not the
       // corpus: with a sample the corpus is touched exactly twice (encode
       // + rerank decode), the production PQ shape (train offline, encode
       // in one pass). The codebook and the encoded corpus are the trained
       // index, served across invocations from live pins.
-      val (cb, enc) = (Checkpoints.serving(s"pq:$d", s),
-          Checkpoints.serving(s"pq_enc:$d", s)) match {
-        case (Some(c), Some(e)) => (c, e)
-        case _ =>
-          val rows = subs.filter(col("vec_id") < 256)
-            .select(col("sub_id").as("g"), col("vec_id").as("id"),
-              col("sv").as("x"))
-          val book = Lloyd.train(rows,
-            Lloyd.seed(rows.filter(col("id") < 16)), Lloyd.SqDist, 2)
-          val enc0 = subs.select(col("vec_id"), col("sub_id"),
-              Lloyd.nearest(book, Lloyd.SqDist, col("sv"), col("sub_id"))
-                .getField("id").as("code"))
-            .localCheckpoint(false)
-          (Checkpoints.pin(s"pq:$d", Lloyd.frame(s, book)
-              .select(col("g").as("sub_id"), col("c_id"), col("cv"))),
-            Checkpoints.pin(s"pq_enc:$d", enc0))
-      }
+      val Seq(cb, enc) =
+        Checkpoints.memo(Seq(s"pq:$d", s"pq_enc:$d"), s)(pqIndex(s, subs, 2))
       // ADC: per-probe distance table over the learned codebooks
       val dt = subs.filter(col("vec_id") < 10)
         .join(broadcast(cb), Seq("sub_id"))
         .withColumn("pd", expr("int_sqdist(sv, cv)"))
         .select(col("vec_id").as("probe_id"), col("sub_id"),
           col("c_id").as("code"), col("pd"))
-      val wAdc = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("probe_id")).orderBy(asc("ad2"), asc("vec_id"))
-      // The ADC shortlist (probes x 200 rows) checkpoints too: it is the
-      // candidate set handed to the rerank — generated once, then decoded
-      // — and the cut keeps the rerank query's AQE stages from carrying
-      // the whole encode+ADC lineage in every task binary (this one cut
-      // was measured to clear ALL ~1.1 MiB large-task-binary warnings
-      // for this query; values unchanged).
-      val shortlist = Checkpoints.pin(s"pq_sl:$d",
-        enc.join(broadcast(dt), Seq("sub_id", "code"))
-        .filter(col("vec_id") =!= col("probe_id"))
-        .groupBy(col("probe_id"), col("vec_id"))
-        .agg(sum(col("pd")).as("ad2"))
-        .withColumn("rs", row_number().over(wAdc))
-        .filter(col("rs") <= 200)
-        .select(col("probe_id"), col("vec_id"), col("ad2"))
-        .localCheckpoint())
-      // exact rerank: decode only the shortlisted originals
-      val wTop = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("probe_id")).orderBy(asc("d2"), asc("vec_id"))
-      qs.join(broadcast(shortlist), "vec_id")
-        .join(broadcast(qs.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("probe_id"), col("q").as("pq"))),
-          Seq("probe_id"))
-        .withColumn("d2", expr("int_sqdist(q, pq)"))
-        .withColumn("rnk", row_number().over(wTop))
-        .filter(col("rnk") <= 5)
-        .select(col("probe_id"), col("rnk"), col("vec_id"), col("d2"),
-          col("ad2"))
-        .orderBy(col("probe_id"), col("rnk"))
+      val sl = shortlist(s"pq_sl:$d", against(enc, dt, "sub_id", "code"), 200)
+      rerank(qs, sl, probes(qs, col("q").as("pq")))
     },
 
     // IVF-PQ (Jégou et al.) — the production-standard billion-scale ANN
@@ -1124,8 +1084,7 @@ object Vectors {
     // fixture scale (at production list counts nprobe/nlists stays
     // ~1/100) — the IVF pruning that makes the PQ scan sub-linear.
     "q_vec_ivfpq" -> { (s, d) =>
-      val qs = Tables.embeddings(s, d)
-        .select(col("vec_id"), expr("int_micros(embedding)").as("q"))
+      val qs = micros(s, d)
       val coarse = qs.filter(col("vec_id") < 8)
         .select(col("vec_id").as("l_id"), col("q").as("lv"))
       // The codebook and the encoded corpus are the index a production
@@ -1133,80 +1092,37 @@ object Vectors {
       // invocations, so repeated invocations price the query path (route
       // probes + ADC + rerank), not training. Routing, residuals and the
       // encode fuse into one checkpointed pass over the corpus.
-      val (cb, enc) = (Checkpoints.serving(s"ivfpq:$d", s),
-          Checkpoints.serving(s"ivfpq_enc:$d", s)) match {
-        case (Some(c), Some(e)) => (c, e)
-        case _ =>
-          val router = Lloyd.seed(coarse
-            .select(lit(0).as("g"), col("l_id").as("id"), col("lv").as("x")))
-          val lv = map(router.flatMap(c =>
-            Seq(lit(c.id), lit(c.cv.toArray))): _*)
-          val subs = qs
-            .select(col("vec_id"), col("q"),
-              Lloyd.nearest(router, Lloyd.SqDist, col("q")).getField("id")
-                .as("list_id"))
-            .select(col("vec_id"), col("list_id"),
-              zip_with(col("q"), element_at(lv, col("list_id")), _ - _)
-                .as("r"))
-            .withColumn("sd", expr("size(r) DIV 4"))
-            .select(col("vec_id"), col("list_id"),
-              explode(sequence(lit(0), lit(3))).as("sub_id"),
-              expr("slice(r, sub_id * sd + 1, sd)").as("sv"))
-          val rows = subs.filter(col("vec_id") < 256)
-            .select(col("sub_id").as("g"), col("vec_id").as("id"),
-              col("sv").as("x"))
-          val book = Lloyd.train(rows,
-            Lloyd.seed(rows.filter(col("id") < 16)), Lloyd.SqDist, 1)
-          val enc0 = subs.select(col("vec_id"), col("sub_id"),
-              Lloyd.nearest(book, Lloyd.SqDist, col("sv"), col("sub_id"))
-                .getField("id").as("code"), col("list_id"))
-            .localCheckpoint(false)
-          (Checkpoints.pin(s"ivfpq:$d", Lloyd.frame(s, book)
-              .select(col("g").as("sub_id"), col("c_id"), col("cv"))),
-            Checkpoints.pin(s"ivfpq_enc:$d", enc0))
+      val Seq(cb, enc) =
+          Checkpoints.memo(Seq(s"ivfpq:$d", s"ivfpq_enc:$d"), s) {
+        val router = Lloyd.seed(coarse
+          .select(lit(0).as("g"), col("l_id").as("id"), col("lv").as("x")))
+        val lv = map(router.flatMap(c =>
+          Seq(lit(c.id), lit(c.cv.toArray))): _*)
+        val subs = pqSplit(qs
+          .select(col("vec_id"), col("q"),
+            Lloyd.nearest(router, Lloyd.SqDist, col("q")).getField("id")
+              .as("list_id"))
+          .select(col("vec_id"), col("list_id"),
+            zip_with(col("q"), element_at(lv, col("list_id")), _ - _)
+              .as("r")), "r", "sv", "vec_id", "list_id")
+        pqIndex(s, subs, 1, col("list_id"))
       }
-      val probes = qs.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("q").as("pq"))
-      val wl = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("probe_id")).orderBy(asc("cd"), asc("l_id"))
-      val plists = probes.crossJoin(broadcast(coarse))
-        .withColumn("cd", expr("int_sqdist(pq, lv)"))
-        .withColumn("rl", row_number().over(wl))
-        .filter(col("rl") <= 5)
+      val ps = probes(qs, col("q").as("pq"))
+      val plists = firstK(ps.crossJoin(broadcast(coarse))
+          .withColumn("cd", expr("int_sqdist(pq, lv)")),
+          5, "rl", Seq("probe_id"), asc("cd"), asc("l_id"))
         .select(col("probe_id"), col("l_id").as("list_id"),
           expr("zip_with(pq, lv, (a, b) -> a - b)").as("pr"))
-      val dt = plists.withColumn("sd", expr("size(pr) DIV 4"))
-        .select(col("probe_id"), col("list_id"),
-          explode(sequence(lit(0), lit(3))).as("sub_id"),
-          expr("slice(pr, sub_id * sd + 1, sd)").as("psv"))
+      val dt = pqSplit(plists, "pr", "psv", "probe_id", "list_id")
         .join(broadcast(cb), Seq("sub_id"))
         .withColumn("pd", expr("int_sqdist(psv, cv)"))
         .select(col("probe_id"), col("list_id"), col("sub_id"),
           col("c_id").as("code"), col("pd"))
-      val wAdc = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("probe_id")).orderBy(asc("ad2"), asc("vec_id"))
-      // shortlist ckpt = the q_vec_pq rule: cut the rerank query's
-      // lineage at the candidate-set artifact so its AQE stages don't
-      // carry the routing+encode+ADC plan in every task binary
-      val shortlist = Checkpoints.pin(s"ivfpq_sl:$d", enc
-        .join(broadcast(dt), Seq("list_id", "sub_id", "code"))
-        .filter(col("vec_id") =!= col("probe_id"))
-        .groupBy(col("probe_id"), col("vec_id"))
-        .agg(sum(col("pd")).as("ad2"))
-        .withColumn("rs", row_number().over(wAdc))
-        .filter(col("rs") <= 600)
-        .select(col("probe_id"), col("vec_id"), col("ad2"))
-        .localCheckpoint())
-      val wTop = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("probe_id")).orderBy(asc("d2"), asc("vec_id"))
-      qs.join(broadcast(shortlist), "vec_id")
-        .join(broadcast(probes), Seq("probe_id"))
-        .withColumn("d2", expr("int_sqdist(q, pq)"))
-        .withColumn("rnk", row_number().over(wTop))
-        .filter(col("rnk") <= 5)
-        .select(col("probe_id"), col("rnk"), col("vec_id"), col("d2"),
-          col("ad2"))
-        .orderBy(col("probe_id"), col("rnk"))
+      // the shortlist checkpoint cuts the rerank query's lineage at the
+      // candidate set, as in q_vec_pq
+      val sl = shortlist(s"ivfpq_sl:$d",
+        against(enc, dt, "list_id", "sub_id", "code"), 600)
+      rerank(qs, sl, ps)
     },
 
     // SemDeDup (Abbas et al. 2023) — semantic dedup via embedding
@@ -1249,6 +1165,133 @@ object Vectors {
   private val oVd =
     "list_transform(embedding, x -> CAST(x AS DOUBLE))"
 
+  /** The micros array of `embedding`, as [[micros]] computes it. */
+  private val oQ =
+    "list_transform(embedding, x -> CAST(round(x * 1e6) AS BIGINT))"
+
+  /** The long-format micros table `(vec_id, [sub_id,] dim, x)` the
+    * [[oLloyd]] stages read; `sub` adds each dim's PQ subspace. */
+  private def oLong(sub: Boolean): String = {
+    val sd =
+      if (sub) " CAST((i - 1) // (len(embedding) // 4) AS BIGINT) AS sub_id,"
+      else ""
+    s"""SELECT vec_id,$sd i AS dim,
+       |  CAST(round(embedding[i] * 1e6) AS BIGINT) AS x
+       | FROM embeddings,
+       | LATERAL unnest(generate_series(1, len(embedding))) u(i)"""
+      .stripMargin.replaceAll("\n", " ")
+  }
+
+  /** The oracle twin of [[cos6]]. */
+  private def oCos(a: String, b: String): String =
+    s"round(list_dot_product($a, $b) / (sqrt(list_dot_product($a, $a))" +
+      s" * sqrt(list_dot_product($b, $b))) + 5e-10, 6)"
+
+  /** The squared L2 distance of two micros arrays (`int_sqdist`). */
+  private def oL2(a: String, b: String): String =
+    s"list_reduce(list_transform(list_zip($a, $b)," +
+      " z -> (z[1]-z[2])*(z[1]-z[2])), (a, b) -> a + b)"
+
+  /** The oracle twin of [[topK]]'s numbering, as column `rank`. */
+  private def oRank(by: String, rank: String): String =
+    s"row_number() OVER (PARTITION BY probe_id ORDER BY $by, vec_id) AS $rank"
+
+  /** The brute-force candidate layer: CTEs `e` (vec_id, label, v), `p`
+    * (probe_id, pv, plabel) and `s`, every probe pair (probe_id, plabel,
+    * vec_id, label) with its `cos_r`. */
+  private val oScored =
+    s"""e AS (SELECT vec_id, label, $oVd AS v FROM embeddings),
+       | p AS (SELECT vec_id AS probe_id, v AS pv, label AS plabel
+       |  FROM e WHERE vec_id < 10),
+       | s AS (SELECT p.probe_id, p.plabel, e.vec_id, e.label,
+       |   ${oCos("p.pv", "e.v")} AS cos_r
+       |  FROM e, p WHERE e.vec_id <> p.probe_id)"""
+      .stripMargin.replaceAll("\n", " ")
+
+  /** The oracle twin of [[signBits]] and [[hamming]]: CTEs `s` (vec_id,
+    * lo, hi), `p` (probe_id, plo, phi) and `hd`, the probe pairs with
+    * their `hamming` distance. */
+  private val oSigns = {
+    def half(off: Int) =
+      s"""CAST(list_sum(list_transform(range(0, 32), i ->
+         |  CASE WHEN embedding[i + ${off + 1}] > 0
+         |   THEN (1::BIGINT << i) ELSE 0::BIGINT END)) AS BIGINT)"""
+    s"""s AS (SELECT vec_id, ${half(0)} AS lo, ${half(32)} AS hi
+       |  FROM embeddings),
+       | p AS (SELECT vec_id AS probe_id, lo AS plo, hi AS phi
+       |  FROM s WHERE vec_id < 10),
+       | hd AS (SELECT p.probe_id, s.vec_id,
+       |   CAST(bit_count(xor(s.lo, p.plo))
+       |     + bit_count(xor(s.hi, p.phi)) AS BIGINT) AS hamming
+       |  FROM s CROSS JOIN p WHERE s.vec_id <> p.probe_id)"""
+      .stripMargin.replaceAll("\n", " ")
+  }
+
+  /** The oracle twin of [[exactTop]]: CTEs `q` (vec_id, qv), `pe`
+    * (probe_id, pv), `pr` (the probe pairs with both vectors) and `ex`,
+    * each probe's integer-L2 top `k` as (probe_id, vec_id). */
+  private def oExactTop(k: Int): String =
+    s"""q AS (SELECT vec_id, $oQ AS qv FROM embeddings),
+       | pe AS (SELECT vec_id AS probe_id, qv AS pv FROM q
+       |  WHERE vec_id < 10),
+       | pr AS (SELECT q.vec_id, pe.probe_id, q.qv, pe.pv
+       |  FROM q CROSS JOIN pe WHERE q.vec_id <> pe.probe_id),
+       | ex AS (SELECT probe_id, vec_id FROM (SELECT probe_id, vec_id,
+       |   ${oRank(oL2("qv", "pv"), "re")} FROM pr) WHERE re <= $k)"""
+      .stripMargin.replaceAll("\n", " ")
+
+  /** The oracle twin of [[shortlist]] and [[rerank]], over a CTE `ad`
+    * (probe_id, vec_id, ad2): each probe's ADC top `n`, reranked by exact
+    * integer L2, the final top 5. */
+  private def oRerank(n: Int): String =
+    s"""sl AS (SELECT probe_id, vec_id, ad2 FROM (SELECT probe_id, vec_id,
+       |   ad2, ${oRank("ad2", "rs")} FROM ad) WHERE rs <= $n),
+       | q AS (SELECT vec_id, $oQ AS qv FROM embeddings),
+       | rr AS (SELECT sl.probe_id, sl.vec_id, sl.ad2,
+       |   ${oL2("cq.qv", "pq.qv")} AS d2
+       |  FROM sl JOIN q cq ON sl.vec_id = cq.vec_id
+       |  JOIN q pq ON sl.probe_id = pq.vec_id),
+       | top AS (SELECT probe_id, vec_id, CAST(d2 AS BIGINT) AS d2, ad2,
+       |   ${oRank("d2", "rnk")} FROM rr)
+       | SELECT probe_id, rnk, vec_id, d2, ad2 FROM top
+       | WHERE rnk <= 5 ORDER BY probe_id, rnk"""
+      .stripMargin.replaceAll("\n", " ")
+
+  /** The oracle twin of [[lshCorpus]]: CTE `e` (vec_id, v), the
+    * embeddings plus their planted identical copies. */
+  private val oLshCorpus =
+    s"""b AS (SELECT vec_id, $oVd AS v FROM embeddings),
+       | e AS (SELECT vec_id, v FROM b
+       |  UNION ALL SELECT vec_id + 1000000, v FROM b WHERE vec_id < 10)"""
+      .stripMargin.replaceAll("\n", " ")
+
+  /** The pairs of CTE `e` (vec_id, v), id_a < id_b, whose `cos_r` is at
+    * least `th`: the twin of [[boundedPairs]] and [[lshPairs]]. */
+  private def oPairs(th: String): String =
+    s"""SELECT * FROM (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+       |  ${oCos("a.v", "b.v")} AS cos_r
+       | FROM e a, e b WHERE a.vec_id < b.vec_id) WHERE cos_r >= $th"""
+      .stripMargin.replaceAll("\n", " ")
+
+  /** The oracle twin of [[connectedComponents]] over the [[oPairs]] graph
+    * at `th`, after a `WITH RECURSIVE` list that defines `e`: transitive
+    * closure by recursive CTE, comp = min reachable id, which replicates
+    * the component labels exactly; UNION (distinct) bounds the recursion.
+    */
+  private def oReach(th: String): String =
+    s"""p AS (SELECT id_a AS ia, id_b AS ib FROM (${oPairs(th)})),
+       | ed AS (SELECT ia, ib FROM p UNION ALL SELECT ib, ia FROM p),
+       | reach(src, dst) AS (
+       |   SELECT vec_id, vec_id FROM e
+       |   UNION
+       |   SELECT r.src, ed.ib FROM reach r JOIN ed ON r.dst = ed.ia),
+       | comp AS (SELECT src AS vec_id, min(dst) AS comp
+       |   FROM reach GROUP BY src)
+       | SELECT vec_id, comp,
+       |  count(*) OVER (PARTITION BY comp) AS comp_size
+       | FROM comp ORDER BY vec_id"""
+      .stripMargin.replaceAll("\n", " ")
+
   /** The oracle twin of one [[Lloyd]] step over a long-format micros
     * table `(vec_id, [sub_id,] dim, x)`, unrolled like the pagerank oracle
     * (grouping inside a recursive CTE is not portable): `a<i>` the squared
@@ -1285,174 +1328,94 @@ object Vectors {
 
   val oracle: Map[String, String] = Map(
     "q_vec_matryoshka" ->
-      s"""WITH e AS (SELECT vec_id, $oVd AS v FROM embeddings),
-         | p AS (SELECT vec_id AS probe_id, v AS pv FROM e
-         |  WHERE vec_id < 10),
-         | c AS (SELECT p.probe_id, e.vec_id, p.pv, e.v,
-         |   round(list_dot_product(p.pv[1:16], e.v[1:16])
-         |     / (sqrt(list_dot_product(p.pv[1:16], p.pv[1:16]))
-         |        * sqrt(list_dot_product(e.v[1:16], e.v[1:16])))
-         |    + 5e-10, 6) AS cos_c
+      s"""WITH $oScored,
+         | c AS (SELECT p.probe_id, e.vec_id,
+         |   ${oCos("p.pv[1:16]", "e.v[1:16]")} AS cos_c,
+         |   ${oCos("p.pv", "e.v")} AS cos_f
          |  FROM e, p WHERE e.vec_id <> p.probe_id),
-         | rc AS (SELECT *, row_number() OVER (PARTITION BY probe_id
-         |    ORDER BY cos_c DESC, vec_id ASC) AS rcn FROM c),
-         | f AS (SELECT probe_id, vec_id,
-         |   round(list_dot_product(pv, v)
-         |     / (sqrt(list_dot_product(pv, pv))
-         |        * sqrt(list_dot_product(v, v))) + 5e-10, 6) AS cos_f
-         |  FROM rc WHERE rcn <= 50),
-         | r AS (SELECT *, row_number() OVER (PARTITION BY probe_id
-         |    ORDER BY cos_f DESC, vec_id ASC) AS rnk FROM f)
+         | rc AS (SELECT *, ${oRank("cos_c DESC", "rcn")} FROM c),
+         | r AS (SELECT *, ${oRank("cos_f DESC", "rnk")} FROM rc
+         |  WHERE rcn <= 50)
          | SELECT probe_id, rnk, vec_id, cos_f FROM r WHERE rnk <= 5
          | ORDER BY probe_id, rnk"""
         .stripMargin.replaceAll("\n", " "),
 
     "q_sim_topk_hamming" ->
-      """WITH s AS (SELECT vec_id,
-        |   CAST(list_sum(list_transform(range(0, 32), i ->
-        |     CASE WHEN embedding[i + 1] > 0
-        |      THEN (1::BIGINT << i) ELSE 0::BIGINT END)) AS BIGINT) AS lo,
-        |   CAST(list_sum(list_transform(range(0, 32), i ->
-        |     CASE WHEN embedding[i + 33] > 0
-        |      THEN (1::BIGINT << i) ELSE 0::BIGINT END)) AS BIGINT) AS hi
-        |  FROM embeddings),
-        | p AS (SELECT vec_id AS probe_id, lo AS plo, hi AS phi
-        |  FROM s WHERE vec_id < 10),
-        | d AS (SELECT p.probe_id, s.vec_id,
-        |   CAST(bit_count(xor(s.lo, p.plo))
-        |     + bit_count(xor(s.hi, p.phi)) AS BIGINT) AS hamming
-        |  FROM s CROSS JOIN p WHERE s.vec_id <> p.probe_id),
-        | r AS (SELECT *, row_number() OVER (PARTITION BY probe_id
-        |    ORDER BY hamming, vec_id) AS rnk FROM d)
-        | SELECT probe_id, rnk, vec_id, hamming FROM r
-        | WHERE rnk <= 5 ORDER BY probe_id, rnk"""
+      s"""WITH $oSigns,
+         | r AS (SELECT *, ${oRank("hamming", "rnk")} FROM hd)
+         | SELECT probe_id, rnk, vec_id, hamming FROM r
+         | WHERE rnk <= 5 ORDER BY probe_id, rnk"""
         .stripMargin.replaceAll("\n", " "),
 
     // Both rankings mirror their parents (the hamming packing and the
     // integer-L2 micros distance), joined at the exact top-5.
     "q_sim_range_search" ->
-      s"""WITH e AS (SELECT vec_id, $oVd AS v FROM embeddings),
-         | p AS (SELECT vec_id AS probe_id, v AS pv FROM e WHERE vec_id < 10),
-         | s AS (SELECT p.probe_id, e.vec_id,
-         |   round(list_dot_product(p.pv, e.v)
-         |     / (sqrt(list_dot_product(p.pv, p.pv))
-         |        * sqrt(list_dot_product(e.v, e.v))) + 5e-10, 6) AS cos_r
-         |  FROM e, p WHERE e.vec_id <> p.probe_id)
+      s"""WITH $oScored
          | SELECT probe_id, vec_id, cos_r FROM s WHERE cos_r >= 0.3
          | ORDER BY probe_id, vec_id"""
         .stripMargin.replaceAll("\n", " "),
 
     "q_vec_rand_proj" ->
-      """WITH q AS (SELECT vec_id, list_transform(embedding,
-        |   x -> CAST(round(x * 1e6) AS BIGINT)) AS qv FROM embeddings),
-        | sg AS (SELECT j, i, CASE WHEN ('0x' || substr(md5(
-        |    CAST(j AS VARCHAR) || ':' || CAST(i AS VARCHAR)), 1, 8))
-        |    ::BIGINT % 2 = 0 THEN 1 ELSE -1 END AS sgn
-        |  FROM (SELECT unnest(range(16)) AS j),
-        |       (SELECT unnest(range(64)) AS i)),
-        | ex AS (SELECT vec_id, u.i AS i, qv[u.i + 1] AS x
-        |  FROM q, LATERAL (SELECT unnest(range(64)) AS i) u(i)),
-        | pj AS (SELECT vec_id, j, CAST(sum(sgn * x) AS BIGINT) AS r
-        |  FROM ex JOIN sg ON ex.i = sg.i GROUP BY vec_id, j),
-        | pp AS (SELECT vec_id AS probe_id, j, r AS pr FROM pj
-        |  WHERE vec_id < 10),
-        | ad AS (SELECT pp.probe_id, pj.vec_id,
-        |   CAST(sum((pj.r - pp.pr) * (pj.r - pp.pr)) AS BIGINT) AS d2
-        |  FROM pj JOIN pp ON pj.j = pp.j
-        |  WHERE pj.vec_id <> pp.probe_id GROUP BY 1, 2),
-        | ar AS (SELECT probe_id, vec_id, row_number() OVER
-        |   (PARTITION BY probe_id ORDER BY d2, vec_id) AS rp FROM ad),
-        | ap AS (SELECT probe_id, vec_id, 1 AS hit FROM ar WHERE rp <= 5),
-        | pe AS (SELECT vec_id AS probe_id, qv AS pv FROM q
-        |  WHERE vec_id < 10),
-        | ed AS (SELECT pe.probe_id, q.vec_id,
-        |   list_reduce(list_transform(list_zip(q.qv, pe.pv),
-        |     z -> (z[1]-z[2])*(z[1]-z[2])), (a, b) -> a + b) AS d2
-        |  FROM q CROSS JOIN pe WHERE q.vec_id <> pe.probe_id),
-        | er AS (SELECT probe_id, vec_id, row_number() OVER
-        |   (PARTITION BY probe_id ORDER BY d2, vec_id) AS re FROM ed),
-        | exa AS (SELECT probe_id, vec_id FROM er WHERE re <= 5)
-        | SELECT exa.probe_id, count(ap.hit) AS hits,
-        |  round(CAST(count(ap.hit) AS DOUBLE) / 5.0 + 5e-10, 4)
-        |   AS recall_at_5
-        | FROM exa LEFT JOIN ap ON exa.probe_id = ap.probe_id
-        |  AND exa.vec_id = ap.vec_id
-        | GROUP BY exa.probe_id ORDER BY exa.probe_id"""
+      s"""WITH ${oExactTop(5)},
+         | sg AS (SELECT j, i, CASE WHEN ('0x' || substr(md5(
+         |    CAST(j AS VARCHAR) || ':' || CAST(i AS VARCHAR)), 1, 8))
+         |    ::BIGINT % 2 = 0 THEN 1 ELSE -1 END AS sgn
+         |  FROM (SELECT unnest(range(16)) AS j),
+         |       (SELECT unnest(range(64)) AS i)),
+         | xs AS (SELECT vec_id, u.i AS i, qv[u.i + 1] AS x
+         |  FROM q, LATERAL (SELECT unnest(range(64)) AS i) u(i)),
+         | pj AS (SELECT vec_id, j, CAST(sum(sgn * x) AS BIGINT) AS r
+         |  FROM xs JOIN sg ON xs.i = sg.i GROUP BY vec_id, j),
+         | pp AS (SELECT vec_id AS probe_id, j, r AS pr FROM pj
+         |  WHERE vec_id < 10),
+         | ad AS (SELECT pp.probe_id, pj.vec_id,
+         |   CAST(sum((pj.r - pp.pr) * (pj.r - pp.pr)) AS BIGINT) AS d2
+         |  FROM pj JOIN pp ON pj.j = pp.j
+         |  WHERE pj.vec_id <> pp.probe_id GROUP BY 1, 2),
+         | ar AS (SELECT probe_id, vec_id, ${oRank("d2", "rp")} FROM ad),
+         | ap AS (SELECT probe_id, vec_id, 1 AS hit FROM ar WHERE rp <= 5)
+         | SELECT ex.probe_id, count(ap.hit) AS hits,
+         |  round(CAST(count(ap.hit) AS DOUBLE) / 5.0 + 5e-10, 4)
+         |   AS recall_at_5
+         | FROM ex LEFT JOIN ap ON ex.probe_id = ap.probe_id
+         |  AND ex.vec_id = ap.vec_id
+         | GROUP BY ex.probe_id ORDER BY ex.probe_id"""
         .stripMargin.replaceAll("\n", " "),
 
     "q_vec_mrl_curve" ->
-      """WITH q AS (SELECT vec_id, list_transform(embedding,
-        |   x -> CAST(round(x * 1e6) AS BIGINT)) AS qv FROM embeddings),
-        | pe AS (SELECT vec_id AS probe_id, qv AS pv FROM q
-        |  WHERE vec_id < 10),
-        | pr AS (SELECT q.vec_id, pe.probe_id, q.qv, pe.pv
-        |  FROM q CROSS JOIN pe WHERE q.vec_id <> pe.probe_id),
-        | ed AS (SELECT probe_id, vec_id,
-        |   list_reduce(list_transform(list_zip(qv, pv),
-        |     z -> (z[1]-z[2])*(z[1]-z[2])), (a, b) -> a + b) AS d2
-        |  FROM pr),
-        | er AS (SELECT probe_id, vec_id, row_number() OVER
-        |   (PARTITION BY probe_id ORDER BY d2, vec_id) AS re FROM ed),
-        | ex AS (SELECT probe_id, vec_id FROM er WHERE re <= 5),
-        | dims AS (SELECT unnest([8, 16, 32]) AS dim),
-        | ad AS (SELECT probe_id, vec_id, dim,
-        |   list_reduce(list_transform(
-        |     list_zip(list_slice(qv, 1, dim), list_slice(pv, 1, dim)),
-        |     z -> (z[1]-z[2])*(z[1]-z[2])), (a, b) -> a + b) AS d2
-        |  FROM pr CROSS JOIN dims),
-        | ar AS (SELECT probe_id, dim, vec_id, row_number() OVER
-        |   (PARTITION BY probe_id, dim ORDER BY d2, vec_id) AS rp FROM ad),
-        | ap AS (SELECT probe_id, dim, vec_id, 1 AS hit FROM ar
-        |  WHERE rp <= 5)
-        | SELECT ex.probe_id, dims.dim, count(ap.hit) AS hits,
-        |  round(CAST(count(ap.hit) AS DOUBLE) / 5.0 + 5e-10, 4)
-        |   AS recall_at_5
-        | FROM ex CROSS JOIN dims LEFT JOIN ap
-        |  ON ex.probe_id = ap.probe_id AND dims.dim = ap.dim
-        |   AND ex.vec_id = ap.vec_id
-        | GROUP BY ex.probe_id, dims.dim ORDER BY ex.probe_id, dims.dim"""
+      s"""WITH ${oExactTop(5)},
+         | dims AS (SELECT unnest([8, 16, 32]) AS dim),
+         | ad AS (SELECT probe_id, vec_id, dim,
+         |   ${oL2("list_slice(qv, 1, dim)", "list_slice(pv, 1, dim)")} AS d2
+         |  FROM pr CROSS JOIN dims),
+         | ar AS (SELECT probe_id, dim, vec_id, row_number() OVER
+         |   (PARTITION BY probe_id, dim ORDER BY d2, vec_id) AS rp FROM ad),
+         | ap AS (SELECT probe_id, dim, vec_id, 1 AS hit FROM ar
+         |  WHERE rp <= 5)
+         | SELECT ex.probe_id, dims.dim, count(ap.hit) AS hits,
+         |  round(CAST(count(ap.hit) AS DOUBLE) / 5.0 + 5e-10, 4)
+         |   AS recall_at_5
+         | FROM ex CROSS JOIN dims LEFT JOIN ap
+         |  ON ex.probe_id = ap.probe_id AND dims.dim = ap.dim
+         |   AND ex.vec_id = ap.vec_id
+         | GROUP BY ex.probe_id, dims.dim ORDER BY ex.probe_id, dims.dim"""
         .stripMargin.replaceAll("\n", " "),
 
     "q_sim_eval_recall" ->
-      """WITH s AS (SELECT vec_id,
-        |   CAST(list_sum(list_transform(range(0, 32), i ->
-        |     CASE WHEN embedding[i + 1] > 0
-        |      THEN (1::BIGINT << i) ELSE 0::BIGINT END)) AS BIGINT) AS lo,
-        |   CAST(list_sum(list_transform(range(0, 32), i ->
-        |     CASE WHEN embedding[i + 33] > 0
-        |      THEN (1::BIGINT << i) ELSE 0::BIGINT END)) AS BIGINT) AS hi
-        |  FROM embeddings),
-        | p AS (SELECT vec_id AS probe_id, lo AS plo, hi AS phi
-        |  FROM s WHERE vec_id < 10),
-        | hd AS (SELECT p.probe_id, s.vec_id,
-        |   bit_count(xor(s.lo, p.plo)) + bit_count(xor(s.hi, p.phi))
-        |    AS hamming
-        |  FROM s CROSS JOIN p WHERE s.vec_id <> p.probe_id),
-        | hr AS (SELECT probe_id, vec_id, row_number() OVER
-        |   (PARTITION BY probe_id ORDER BY hamming, vec_id) AS rh
-        |  FROM hd),
-        | ham AS (SELECT probe_id, vec_id, rh FROM hr WHERE rh <= 20),
-        | q AS (SELECT vec_id, list_transform(embedding,
-        |   x -> CAST(round(x * 1e6) AS BIGINT)) AS qv FROM embeddings),
-        | pe AS (SELECT vec_id AS probe_id, qv AS pv FROM q
-        |  WHERE vec_id < 10),
-        | ed AS (SELECT pe.probe_id, q.vec_id,
-        |   list_reduce(list_transform(list_zip(q.qv, pe.pv),
-        |     z -> (z[1]-z[2])*(z[1]-z[2])), (a, b) -> a + b) AS d2
-        |  FROM q CROSS JOIN pe WHERE q.vec_id <> pe.probe_id),
-        | er AS (SELECT probe_id, vec_id, row_number() OVER
-        |   (PARTITION BY probe_id ORDER BY d2, vec_id) AS re FROM ed),
-        | ex AS (SELECT probe_id, vec_id FROM er WHERE re <= 5)
-        | SELECT ex.probe_id, count(*) AS n_exact,
-        |  count(CASE WHEN ham.rh <= 5 THEN 1 END) AS hits_at_5,
-        |  count(ham.rh) AS hits_at_20,
-        |  round(CAST(count(CASE WHEN ham.rh <= 5 THEN 1 END) AS DOUBLE)
-        |    / count(*) + 5e-10, 4) AS recall_at_5,
-        |  round(CAST(count(ham.rh) AS DOUBLE) / count(*) + 5e-10, 4)
-        |   AS recall_at_20
-        | FROM ex LEFT JOIN ham
-        |  ON ex.probe_id = ham.probe_id AND ex.vec_id = ham.vec_id
-        | GROUP BY ex.probe_id ORDER BY ex.probe_id"""
+      s"""WITH $oSigns,
+         | ham AS (SELECT probe_id, vec_id, rh FROM (SELECT probe_id, vec_id,
+         |   ${oRank("hamming", "rh")} FROM hd) WHERE rh <= 20),
+         | ${oExactTop(5)}
+         | SELECT ex.probe_id, count(*) AS n_exact,
+         |  count(CASE WHEN ham.rh <= 5 THEN 1 END) AS hits_at_5,
+         |  count(ham.rh) AS hits_at_20,
+         |  round(CAST(count(CASE WHEN ham.rh <= 5 THEN 1 END) AS DOUBLE)
+         |    / count(*) + 5e-10, 4) AS recall_at_5,
+         |  round(CAST(count(ham.rh) AS DOUBLE) / count(*) + 5e-10, 4)
+         |   AS recall_at_20
+         | FROM ex LEFT JOIN ham
+         |  ON ex.probe_id = ham.probe_id AND ex.vec_id = ham.vec_id
+         | GROUP BY ex.probe_id ORDER BY ex.probe_id"""
         .stripMargin.replaceAll("\n", " "),
 
     "q_sim_join_rewrite" ->
@@ -1478,16 +1441,9 @@ object Vectors {
         .stripMargin.replaceAll("\n", " "),
 
     "q_sim_topk" ->
-      s"""WITH e AS (SELECT vec_id, $oVd AS v FROM embeddings),
-         | p AS (SELECT vec_id AS probe_id, v AS pv FROM e WHERE vec_id < 10),
-         | s AS (SELECT p.probe_id, e.vec_id,
-         |   round(list_dot_product(p.pv, e.v)
-         |     / (sqrt(list_dot_product(p.pv, p.pv))
-         |        * sqrt(list_dot_product(e.v, e.v))) + 5e-10, 6) AS cos_r
-         |  FROM e, p WHERE e.vec_id <> p.probe_id),
-         | r AS (SELECT probe_id, vec_id, cos_r, row_number() OVER
-         |   (PARTITION BY probe_id ORDER BY cos_r DESC, vec_id ASC) AS rnk
-         |  FROM s)
+      s"""WITH $oScored,
+         | r AS (SELECT probe_id, vec_id, cos_r,
+         |   ${oRank("cos_r DESC", "rnk")} FROM s)
          | SELECT probe_id, rnk, vec_id, cos_r FROM r WHERE rnk <= 5
          | ORDER BY probe_id, rnk"""
         .stripMargin.replaceAll("\n", " "),
@@ -1495,17 +1451,9 @@ object Vectors {
     // Mirrors the ε-rounded DECIMAL(18,9) position weights and the
     // min(corpus-relevant, 10) ideal ranking.
     "q_sim_eval_ndcg" ->
-      s"""WITH e AS (SELECT vec_id, $oVd AS v, label FROM embeddings),
-         | p AS (SELECT vec_id AS probe_id, v AS pv, label AS plabel
-         |  FROM e WHERE vec_id < 10),
-         | s AS (SELECT p.probe_id, p.plabel, e.vec_id, e.label,
-         |   round(list_dot_product(p.pv, e.v)
-         |     / (sqrt(list_dot_product(p.pv, p.pv))
-         |        * sqrt(list_dot_product(e.v, e.v))) + 5e-10, 6) AS cos_r
-         |  FROM e, p WHERE e.vec_id <> p.probe_id),
-         | r AS (SELECT probe_id, plabel, vec_id, label, row_number() OVER
-         |   (PARTITION BY probe_id ORDER BY cos_r DESC, vec_id ASC) AS rnk
-         |  FROM s),
+      s"""WITH $oScored,
+         | r AS (SELECT probe_id, plabel, vec_id, label,
+         |   ${oRank("cos_r DESC", "rnk")} FROM s),
          | t AS (SELECT *, ${Fx.oDcgW("rnk")} AS pw
          |  FROM r WHERE rnk <= 10),
          | sc AS (SELECT probe_id, plabel,
@@ -1532,56 +1480,19 @@ object Vectors {
     // Exact all-pairs cosine >= 0.99 over the planted-copy corpus — by
     // the documented equality argument (only planted identical-copy
     // pairs reach 0.99, and identical vectors always share a bucket)
-    // this IS the LSH-confirmed pair set; cosine spelled exactly as the
-    // q_dedup_embedding oracle.
+    // this IS the LSH-confirmed pair set.
     "q_sim_pairs_lsh" ->
-      s"""WITH b0 AS (SELECT vec_id, $oVd AS v FROM embeddings),
-         | e AS (SELECT vec_id, v FROM b0
-         |  UNION ALL SELECT vec_id + 1000000, v FROM b0 WHERE vec_id < 10)
-         | SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-         |  round(list_dot_product(a.v, b.v)
-         |    / (sqrt(list_dot_product(a.v, a.v))
-         |       * sqrt(list_dot_product(b.v, b.v))) + 5e-10, 6) AS cos_r
-         | FROM e a, e b WHERE a.vec_id < b.vec_id
-         |  AND round(list_dot_product(a.v, b.v)
-         |    / (sqrt(list_dot_product(a.v, a.v))
-         |       * sqrt(list_dot_product(b.v, b.v))) + 5e-10, 6) >= 0.99
-         | ORDER BY id_a, id_b"""
-        .stripMargin.replaceAll("\n", " "),
+      s"""WITH $oLshCorpus ${oPairs("0.99")} ORDER BY id_a, id_b""",
 
     "q_dedup_embedding" ->
       s"""WITH e AS (SELECT vec_id, $oVd AS v FROM embeddings WHERE vec_id < 300)
-         | SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-         |  round(list_dot_product(a.v, b.v)
-         |    / (sqrt(list_dot_product(a.v, a.v))
-         |       * sqrt(list_dot_product(b.v, b.v))) + 5e-10, 6) AS cos_r
-         | FROM e a, e b WHERE a.vec_id < b.vec_id
-         |  AND round(list_dot_product(a.v, b.v)
-         |    / (sqrt(list_dot_product(a.v, a.v))
-         |       * sqrt(list_dot_product(b.v, b.v))) + 5e-10, 6) >= 0.3
-         | ORDER BY id_a, id_b"""
+         | ${oPairs("0.3")} ORDER BY id_a, id_b"""
         .stripMargin.replaceAll("\n", " "),
 
-    // Transitive closure by recursive CTE replicates the component labels
-    // exactly: comp = min reachable id. UNION (distinct) bounds recursion.
     "q_dedup_groups" ->
       s"""WITH RECURSIVE
          | e AS (SELECT vec_id, $oVd AS v FROM embeddings WHERE vec_id < 300),
-         | p AS (SELECT a.vec_id AS ia, b.vec_id AS ib FROM e a, e b
-         |   WHERE a.vec_id < b.vec_id
-         |    AND round(list_dot_product(a.v, b.v)
-         |     / (sqrt(list_dot_product(a.v, a.v))
-         |        * sqrt(list_dot_product(b.v, b.v))) + 5e-10, 6) >= 0.3),
-         | ed AS (SELECT ia, ib FROM p UNION ALL SELECT ib, ia FROM p),
-         | reach(src, dst) AS (
-         |   SELECT vec_id, vec_id FROM e
-         |   UNION
-         |   SELECT r.src, ed.ib FROM reach r JOIN ed ON r.dst = ed.ia),
-         | comp AS (SELECT src AS vec_id, min(dst) AS comp
-         |   FROM reach GROUP BY src)
-         | SELECT vec_id, comp,
-         |  count(*) OVER (PARTITION BY comp) AS comp_size
-         | FROM comp ORDER BY vec_id"""
+         | ${oReach("0.3")}"""
         .stripMargin.replaceAll("\n", " "),
 
     // Oracle twin for the LSH-fed CC: exact transitive closure over the
@@ -1590,26 +1501,7 @@ object Vectors {
     // equals this exact edge set on the fixture: the only >= 0.99 pairs
     // are identical-vector pairs, which always share an LSH bucket.
     "q_dedup_groups_lsh" ->
-      s"""WITH RECURSIVE
-         | b AS (SELECT vec_id, $oVd AS v FROM embeddings),
-         | e AS (SELECT vec_id, v FROM b
-         |   UNION ALL SELECT vec_id + 1000000, v FROM b WHERE vec_id < 10),
-         | p AS (SELECT a.vec_id AS ia, b.vec_id AS ib FROM e a, e b
-         |   WHERE a.vec_id < b.vec_id
-         |    AND round(list_dot_product(a.v, b.v)
-         |     / (sqrt(list_dot_product(a.v, a.v))
-         |        * sqrt(list_dot_product(b.v, b.v))) + 5e-10, 6) >= 0.99),
-         | ed AS (SELECT ia, ib FROM p UNION ALL SELECT ib, ia FROM p),
-         | reach(src, dst) AS (
-         |   SELECT vec_id, vec_id FROM e
-         |   UNION
-         |   SELECT r.src, ed.ib FROM reach r JOIN ed ON r.dst = ed.ia),
-         | comp AS (SELECT src AS vec_id, min(dst) AS comp
-         |   FROM reach GROUP BY src)
-         | SELECT vec_id, comp,
-         |  count(*) OVER (PARTITION BY comp) AS comp_size
-         | FROM comp ORDER BY vec_id"""
-        .stripMargin.replaceAll("\n", " "),
+      s"""WITH RECURSIVE $oLshCorpus, ${oReach("0.99")}""",
 
     "q_vec_centroid" ->
       """WITH e AS (SELECT label, i AS dim, embedding[i] AS x
@@ -1640,15 +1532,8 @@ object Vectors {
         .stripMargin.replaceAll("\n", " "),
 
     "q_knn_label_vote" ->
-      s"""WITH e AS (SELECT vec_id, label, $oVd AS v FROM embeddings),
-         | p AS (SELECT vec_id AS probe_id, v AS pv FROM e WHERE vec_id < 10),
-         | s AS (SELECT p.probe_id, e.vec_id, e.label,
-         |   round(list_dot_product(p.pv, e.v)
-         |     / (sqrt(list_dot_product(p.pv, p.pv))
-         |        * sqrt(list_dot_product(e.v, e.v))) + 5e-10, 6) AS cos_r
-         |  FROM e, p WHERE e.vec_id <> p.probe_id),
-         | r AS (SELECT probe_id, label, row_number() OVER
-         |   (PARTITION BY probe_id ORDER BY cos_r DESC, vec_id ASC) AS rnk
+      s"""WITH $oScored,
+         | r AS (SELECT probe_id, label, ${oRank("cos_r DESC", "rnk")}
          |  FROM s),
          | votes AS (SELECT probe_id, label, count(*) AS votes
          |  FROM r WHERE rnk <= 5 GROUP BY 1, 2),
@@ -1676,10 +1561,7 @@ object Vectors {
            | sel$k AS (SELECT * FROM $prev UNION ALL
            |  SELECT p, rank, s, rel, pen FROM pk$k WHERE rn = 1)"""
           .stripMargin
-      s"""WITH el AS (SELECT vec_id, i AS dim,
-         |   CAST(round(embedding[i] * 1e6) AS BIGINT) AS x
-         |  FROM embeddings,
-         |  LATERAL unnest(generate_series(1, len(embedding))) u(i)),
+      s"""WITH el AS (${oLong(sub = false)}),
          | rel0 AS (SELECT pe.vec_id AS p, ce.vec_id AS c,
          |   sum(pe.x * ce.x) AS rel
          |  FROM el pe JOIN el ce ON pe.dim = ce.dim
@@ -1711,10 +1593,7 @@ object Vectors {
     // (int128) and Spark's DECIMAL(38,0) both hold every intermediate
     // exactly at fixture scale, so the boolean matches bit-for-bit.
     "q_vec_outlier" ->
-      s"""WITH e AS (SELECT vec_id, i AS dim,
-        |   CAST(round(embedding[i] * 1e6) AS BIGINT) AS x
-        |  FROM embeddings,
-        |  LATERAL unnest(generate_series(1, len(embedding))) u(i)),
+      s"""WITH e AS (${oLong(sub = false)}),
         | c0 AS (SELECT vec_id AS c_id, dim, x AS c FROM e
         |   WHERE vec_id < 8),
         | ${oLloyd(1, "c0", "e", sub = false)},
@@ -1731,10 +1610,7 @@ object Vectors {
         .stripMargin.replaceAll("\n", " "),
 
     "q_vec_kmeans" ->
-      s"""WITH e AS (SELECT vec_id, i AS dim,
-         |   CAST(round(embedding[i] * 1e6) AS BIGINT) AS x
-         |  FROM embeddings,
-         |  LATERAL unnest(generate_series(1, len(embedding))) u(i)),
+      s"""WITH e AS (${oLong(sub = false)}),
          | cb0 AS (SELECT vec_id AS c_id, dim, x AS c FROM e
          |   WHERE vec_id < 8),
          | ${oLloyd(1, "cb0", "e", sub = false, Some("e"))},
@@ -1749,11 +1625,7 @@ object Vectors {
     // identically to the Spark side's per-sub slices. Training reads the
     // `es` SAMPLE; only the final encode (step 3) reads the full table.
     "q_vec_pq" ->
-      s"""WITH e AS (SELECT vec_id,
-         |   CAST((i - 1) // (len(embedding) // 4) AS BIGINT) AS sub_id,
-         |   i AS dim, CAST(round(embedding[i] * 1e6) AS BIGINT) AS x
-         |  FROM embeddings,
-         |  LATERAL unnest(generate_series(1, len(embedding))) u(i)),
+      s"""WITH e AS (${oLong(sub = true)}),
          | es AS (SELECT * FROM e WHERE vec_id < 256),
          | cb0 AS (SELECT sub_id, vec_id AS c_id, dim, x AS c FROM e
          |   WHERE vec_id < 16),
@@ -1771,22 +1643,7 @@ object Vectors {
          |   ON g.sub_id = dt.sub_id AND g.c_id = dt.code
          |  WHERE g.vec_id <> dt.probe_id
          |  GROUP BY dt.probe_id, g.vec_id),
-         | sl AS (SELECT probe_id, vec_id, ad2 FROM (SELECT probe_id,
-         |   vec_id, ad2, row_number() OVER
-         |   (PARTITION BY probe_id ORDER BY ad2, vec_id) AS rs FROM ad)
-         |  WHERE rs <= 200),
-         | q AS (SELECT vec_id, list_transform(embedding,
-         |   x -> CAST(round(x * 1e6) AS BIGINT)) AS qv FROM embeddings),
-         | rr AS (SELECT sl.probe_id, sl.vec_id, sl.ad2,
-         |   list_reduce(list_transform(list_zip(cq.qv, pq.qv),
-         |     z -> (z[1]-z[2])*(z[1]-z[2])), (a, b) -> a + b) AS d2
-         |  FROM sl JOIN q cq ON sl.vec_id = cq.vec_id
-         |  JOIN q pq ON sl.probe_id = pq.vec_id),
-         | top AS (SELECT probe_id, vec_id, CAST(d2 AS BIGINT) AS d2, ad2,
-         |   row_number() OVER
-         |   (PARTITION BY probe_id ORDER BY d2, vec_id) AS rnk FROM rr)
-         | SELECT probe_id, rnk, vec_id, d2, ad2 FROM top
-         | WHERE rnk <= 5 ORDER BY probe_id, rnk"""
+         | ${oRerank(200)}"""
         .stripMargin.replaceAll("\n", " "),
 
     // Exact-integer Gram + three unrolled matvec rounds with the same
@@ -1806,8 +1663,7 @@ object Vectors {
            | v$k AS MATERIALIZED (SELECT i AS j,
            |  round(CAST(ws AS DOUBLE) / nrm + 5e-10, 6) AS v
            | FROM ws$k, nr$k)""".stripMargin
-      s"""WITH q AS (SELECT vec_id, list_transform(embedding,
-         |   x -> CAST(round(x * 1e6) AS BIGINT)) AS q FROM embeddings),
+      s"""WITH q AS (SELECT vec_id, $oQ AS q FROM embeddings),
          | lng AS MATERIALIZED (SELECT vec_id, i - 1 AS i, q[i] AS qi
          |  FROM q, LATERAL unnest(generate_series(1, len(q))) u(i)),
          | g AS MATERIALIZED (SELECT a.i, b.i AS j,
@@ -1831,14 +1687,9 @@ object Vectors {
     // tiebreak (the Spark side's min(struct(−ci, c_id)) winner), nprobe
     // 16, float-double exact rerank identical to the q_sim_topk oracle.
     "q_sim_topk_ivf" -> {
-      def cosM(a: String, b: String) =
-        s"""round(list_dot_product($a, $b)
-           | / (sqrt(list_dot_product($a, $a))
-           |    * sqrt(list_dot_product($b, $b))) + 5e-10, 6)"""
-          .stripMargin
       def asg(i: Int, cb: String) =
         s"""a$i AS (SELECT qd.vec_id, c.c_id, CAST(round(
-           |   ${cosM("qd.dq", "c.dv")} * 1e6) AS BIGINT) AS ci
+           |   ${oCos("qd.dq", "c.dv")} * 1e6) AS BIGINT) AS ci
            |  FROM qd, (SELECT c_id,
            |   list_transform(cv, x -> CAST(x AS DOUBLE)) AS dv
            |   FROM $cb) c),
@@ -1854,15 +1705,10 @@ object Vectors {
            | cb$i AS (SELECT cluster AS c_id, list(cx ORDER BY dim) AS cv
            |  FROM m$i GROUP BY cluster)"""
           .stripMargin
-      s"""WITH e AS (SELECT vec_id, $oVd AS v,
-         |   list_transform(embedding,
-         |     x -> CAST(round(x * 1e6) AS BIGINT)) AS q FROM embeddings),
+      s"""WITH e AS (SELECT vec_id, $oVd AS v, $oQ AS q FROM embeddings),
          | qd AS (SELECT vec_id,
          |   list_transform(q, x -> CAST(x AS DOUBLE)) AS dq FROM e),
-         | el AS (SELECT vec_id, i AS dim,
-         |   CAST(round(embedding[i] * 1e6) AS BIGINT) AS x
-         |  FROM embeddings,
-         |  LATERAL unnest(generate_series(1, len(embedding))) u(i)),
+         | el AS (${oLong(sub = false)}),
          | cb0 AS (SELECT vec_id AS c_id, q AS cv FROM e
          |  WHERE vec_id < 32),
          | ${asg(1, "cb0")}, ${mean(1, "g1")},
@@ -1876,12 +1722,11 @@ object Vectors {
          |  JOIN g3 ON g3.cluster = pl.cluster
          |  WHERE g3.vec_id <> pl.probe_id),
          | sc AS (SELECT cand.probe_id, cand.vec_id,
-         |   ${cosM("pe.v", "ce.v")} AS cos_r
+         |   ${oCos("pe.v", "ce.v")} AS cos_r
          |  FROM cand JOIN e pe ON pe.vec_id = cand.probe_id
          |  JOIN e ce ON ce.vec_id = cand.vec_id),
-         | top AS (SELECT probe_id, vec_id, cos_r, row_number() OVER
-         |   (PARTITION BY probe_id ORDER BY cos_r DESC, vec_id) AS rnk
-         |  FROM sc)
+         | top AS (SELECT probe_id, vec_id, cos_r,
+         |   ${oRank("cos_r DESC", "rnk")} FROM sc)
          | SELECT probe_id, rnk, vec_id, cos_r FROM top
          | WHERE rnk <= 5 ORDER BY probe_id, rnk"""
         .stripMargin.replaceAll("\n", " ")
@@ -1892,11 +1737,7 @@ object Vectors {
     // residual ADC → exact rerank. Same (dist, id) tiebreaks and
     // truncating centroid division as the Spark side.
     "q_vec_ivfpq" ->
-      s"""WITH e AS (SELECT vec_id,
-         |   CAST((i - 1) // (len(embedding) // 4) AS BIGINT) AS sub_id,
-         |   i AS dim, CAST(round(embedding[i] * 1e6) AS BIGINT) AS x
-         |  FROM embeddings,
-         |  LATERAL unnest(generate_series(1, len(embedding))) u(i)),
+      s"""WITH e AS (${oLong(sub = true)}),
          | cc AS (SELECT vec_id AS l_id, dim, x AS c FROM e
          |  WHERE vec_id < 8),
          | ca AS (SELECT e.vec_id, cc.l_id,
@@ -1934,22 +1775,7 @@ object Vectors {
          |   AND dt.code = g2.c_id
          |  WHERE g2.vec_id <> dt.probe_id
          |  GROUP BY dt.probe_id, g2.vec_id),
-         | sl AS (SELECT probe_id, vec_id, ad2 FROM (SELECT probe_id,
-         |   vec_id, ad2, row_number() OVER
-         |   (PARTITION BY probe_id ORDER BY ad2, vec_id) AS rsl FROM ad)
-         |  WHERE rsl <= 600),
-         | q AS (SELECT vec_id, list_transform(embedding,
-         |   x -> CAST(round(x * 1e6) AS BIGINT)) AS qv FROM embeddings),
-         | rr AS (SELECT sl.probe_id, sl.vec_id, sl.ad2,
-         |   list_reduce(list_transform(list_zip(cq.qv, pq.qv),
-         |     z -> (z[1]-z[2])*(z[1]-z[2])), (a, b) -> a + b) AS d2
-         |  FROM sl JOIN q cq ON sl.vec_id = cq.vec_id
-         |  JOIN q pq ON sl.probe_id = pq.vec_id),
-         | top AS (SELECT probe_id, vec_id, CAST(d2 AS BIGINT) AS d2, ad2,
-         |   row_number() OVER
-         |   (PARTITION BY probe_id ORDER BY d2, vec_id) AS rnk FROM rr)
-         | SELECT probe_id, rnk, vec_id, d2, ad2 FROM top
-         | WHERE rnk <= 5 ORDER BY probe_id, rnk"""
+         | ${oRerank(600)}"""
         .stripMargin.replaceAll("\n", " "),
 
     "q_dedup_semantic" ->
@@ -1957,14 +1783,12 @@ object Vectors {
          |   WHERE vec_id < 300),
          | c AS (SELECT vec_id, embedding FROM b UNION ALL
          |   SELECT vec_id + 1000000, embedding FROM b WHERE vec_id < 10),
-         | q AS (SELECT vec_id, list_transform(embedding,
-         |   x -> CAST(round(x * 1e6) AS BIGINT)) AS qv FROM c),
+         | q AS (SELECT vec_id, $oQ AS qv FROM c),
          | k AS (SELECT greatest(count(*) // 64, 1) AS k FROM b),
          | s AS (SELECT vec_id AS c_id, qv AS cv FROM q, k
          |   WHERE vec_id < k.k),
-         | d AS (SELECT q.vec_id, s.c_id, list_reduce(list_transform(
-         |     list_zip(q.qv, s.cv), z -> (z[1]-z[2])*(z[1]-z[2])),
-         |     (a, b) -> a + b) AS dist FROM q, s),
+         | d AS (SELECT q.vec_id, s.c_id, ${oL2("q.qv", "s.cv")} AS dist
+         |  FROM q, s),
          | asg AS (SELECT vec_id, c_id, row_number() OVER
          |   (PARTITION BY vec_id ORDER BY dist, c_id) AS rn FROM d),
          | g AS (SELECT vec_id, c_id AS cluster FROM asg WHERE rn = 1),
@@ -1972,9 +1796,7 @@ object Vectors {
          |   JOIN q ON g.vec_id = q.vec_id),
          | dr AS (SELECT DISTINCT y.vec_id FROM cl x JOIN cl y
          |   ON x.cluster = y.cluster AND x.vec_id < y.vec_id
-         |   WHERE list_reduce(list_transform(list_zip(x.qv, y.qv),
-         |     z -> (z[1]-z[2])*(z[1]-z[2])), (a, b) -> a + b)
-         |     <= 2000000000)
+         |   WHERE ${oL2("x.qv", "y.qv")} <= 2000000000)
          | SELECT g.vec_id, g.cluster, dr.vec_id IS NULL AS kept
          | FROM g LEFT JOIN dr ON g.vec_id = dr.vec_id ORDER BY g.vec_id"""
         .stripMargin.replaceAll("\n", " ")

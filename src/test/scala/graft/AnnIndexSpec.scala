@@ -3,10 +3,10 @@ package graft
 import org.apache.spark.sql.DataFrame
 import graft.engine.Checkpoints
 
-/** The trained ANN indexes (the IVF lists, the IVF-PQ codebook and encoded
-  * corpus): what their first build schedules, that later invocations serve
-  * them instead of training, and that two live sessions on one fixture
-  * keep their own pins (those and the k-core peel rounds).
+/** The trained ANN indexes (the IVF lists, the PQ and IVF-PQ codebooks and
+  * encoded corpora): what their first build schedules, that later
+  * invocations serve them instead of training, and that two live sessions
+  * on one fixture keep their own pins (those and the k-core peel rounds).
   */
 class AnnIndexSpec extends SparkSuite {
 
@@ -15,12 +15,14 @@ class AnnIndexSpec extends SparkSuite {
 
   for ((q, bound, slots) <- Seq(
       ("q_sim_topk_ivf", 8, Seq("ivf_cents", "ivf_asg")),
+      ("q_vec_pq", 11, Seq("pq", "pq_enc")),
       ("q_vec_ivfpq", 14, Seq("ivfpq", "ivfpq_enc"))))
     test(s"$q: the first build launches at most $bound jobs and a second " +
         "invocation trains nothing") {
       val s = spark.newSession()
       try {
         val first = jobsDuring(SparkEntry.queries(q)(s, sf))
+        info(s"first build: $first jobs")
         assert(first <= bound, s"first $q build launched $first jobs")
         val index = slots.map(k => Checkpoints.serving(s"$k:$sf", s))
         assert(index.forall(_.isDefined), s"$q pinned no index")
@@ -35,6 +37,7 @@ class AnnIndexSpec extends SparkSuite {
 
   private val pinnedBy = Seq(
     "q_sim_topk_ivf" -> Seq("ivf_cents", "ivf_asg"),
+    "q_vec_pq" -> Seq("pq", "pq_enc", "pq_sl"),
     "q_vec_ivfpq" -> Seq("ivfpq", "ivfpq_enc", "ivfpq_sl"),
     "q_graph_kcore" -> (1 to 5).map(k => s"kcore$k"))
 

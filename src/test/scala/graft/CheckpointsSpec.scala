@@ -22,6 +22,43 @@ class CheckpointsSpec extends SparkSuite {
     assert(b.count() === 10L)
   }
 
+  test("memo over a pair rebuilds and re-pins both slots when one is " +
+      "missing, then serves both") {
+    val s = spark.newSession()
+    try {
+      var builds = 0
+      def pair() = {
+        builds += 1
+        Seq(s.range(3).toDF("v").localCheckpoint(),
+          s.range(4).toDF("v").localCheckpoint())
+      }
+      def rdds(df: org.apache.spark.sql.DataFrame) =
+        df.queryExecution.analyzed.collect {
+          case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+        }.toSet
+      def live = s.sparkContext.getRDDStorageInfo.map(_.id).toSet
+      // the surviving half of a pair whose other slot was freed
+      val stale = Checkpoints.pin("spec:pa",
+        s.range(2).toDF("v").localCheckpoint())
+      val Seq(a, b) =
+        Checkpoints.memo(Seq("spec:pa", "spec:pb"), s)(pair())
+      assert(builds === 1, "a partial hit must rebuild")
+      assert(!(a eq stale), "the stale half must not be served")
+      assert(Checkpoints.serving("spec:pa", s).exists(_ eq a))
+      assert(Checkpoints.serving("spec:pb", s).exists(_ eq b))
+      assert(rdds(stale).intersect(live).isEmpty,
+        "the replaced half must be unpersisted")
+      val Seq(a2, b2) =
+        Checkpoints.memo(Seq("spec:pa", "spec:pb"), s)(pair())
+      assert(builds === 1, "a full hit must not rebuild")
+      assert((a2 eq a) && (b2 eq b))
+      // re-pinning the frame a slot already holds frees nothing
+      Checkpoints.pin("spec:pa", a)
+      assert(rdds(a).subsetOf(live))
+      assert(a.count() === 3L && b.count() === 4L)
+    } finally Checkpoints.release(s)
+  }
+
   test("two live sessions sharing a slot name never evict each other") {
     val s2 = spark.newSession()
     val a = Checkpoints.memo("spec:dual", spark)(

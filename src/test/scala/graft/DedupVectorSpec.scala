@@ -63,6 +63,29 @@ class DedupVectorSpec extends SparkSuite {
     assert(overlap > 0) // clusters restrict but never distort scores
   }
 
+  test("matryoshka top-5 recall vs exact cosine top-5; scores exact") {
+    val exact = SparkEntry.queries("q_sim_topk")(spark, sf)
+      .select("probe_id", "vec_id", "cos_r").collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    val mrl = SparkEntry.queries("q_vec_matryoshka")(spark, sf)
+      .select("probe_id", "vec_id", "cos_f").collect()
+    assert(mrl.length === 50) // 10 probes × top-5
+    val hits = mrl.count(r => exact.contains((r.getLong(0), r.getLong(1))))
+    val recall = hits.toDouble / exact.size
+    info(f"matryoshka recall vs exact top-5: $recall%.2f " +
+      f"($hits/${exact.size})")
+    // measured 0.54 (27/50) at sf0.001: the 16-dim prefix of these
+    // label-structureless embeddings is a weak coarse ranker, and the
+    // 50-wide candidate cut keeps about half of the exact top-5
+    assert(recall >= 0.5, f"matryoshka recall $recall%.2f below 0.5 floor")
+    // the rerank scores by the full-vector cosine, so a shared hit
+    // carries q_sim_topk's score exactly
+    mrl.foreach { r =>
+      exact.get((r.getLong(0), r.getLong(1))).foreach(c =>
+        assert(c === r.getDouble(2)))
+    }
+  }
+
   // ---- recall at the BENCH scale (sf0.1) — VERDICT r5 item 6: the
   // approximate paths carry a measured guarantee at the scale the driver
   // benches, not just the toy fixture. Guarded by assume() so the suite

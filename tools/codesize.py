@@ -3,6 +3,7 @@
 
 Usage:
   python3 tools/codesize.py [root]        (default root: src/main)
+  python3 tools/codesize.py --blocks FILE [root]
 
 For every `.scala` file under `root`, prints:
 
@@ -15,6 +16,12 @@ For every `.scala` file under `root`, prints:
 
 Then the totals, and the number of distinct environment options the
 sources read (`sys.env` keys).
+
+With `--blocks FILE`, prints instead the duplicated code of FILE (which
+must lie under `root`), one run of overlapping duplicated windows at a
+time: its first and last line numbers, the other places its first window
+occurs (`path:line`), and its code lines with their line numbers. The
+windows and the comment rules are the ones the totals count.
 """
 import collections
 import os
@@ -44,16 +51,63 @@ def code_lines(path):
     return out
 
 
+def windows(lines):
+    """[(index of first line, window)] of the 6-line windows of a file."""
+    texts = [t for _, t in lines]
+    return [(i, tuple(texts[i:i + WINDOW]))
+            for i in range(len(texts) - WINDOW + 1)]
+
+
+def blocks(target, root, code, where):
+    """Print the runs of duplicated windows of `target`."""
+    lines = code[target]
+    dup = [i for i, w in windows(lines) if len(where[w]) > 1]
+    runs = []
+    for i in dup:
+        if runs and i <= runs[-1][1]:
+            runs[-1][1] = i + WINDOW
+        else:
+            runs.append([i, i + WINDOW])
+    for a, b in runs:
+        first = tuple(t for _, t in lines[a:a + WINDOW])
+        others = [f"{os.path.relpath(p, root)}:{lines_[j][0]}"
+                  for p, j in where[first]
+                  for lines_ in [code[p]] if (p, j) != (target, a)]
+        print(f"lines {lines[a][0]}-{lines[b - 1][0]}"
+              f" ({b - a} code lines; first window also at "
+              f"{', '.join(others)})")
+        for n, t in lines[a:b]:
+            print(f"{n:>6}  {t}")
+    print(f"{len(runs)} runs, "
+          f"{len(set(j for i in dup for j in range(i, i + WINDOW)))}"
+          " duplicated lines")
+    return 0
+
+
 def main(argv):
+    target = None
+    if argv[:1] == ["--blocks"]:
+        if len(argv) < 2:
+            print(__doc__, file=sys.stderr)
+            return 2
+        target, argv = argv[1], argv[2:]
     root = argv[0] if argv else "src/main"
     files = sorted(os.path.join(d, f) for d, _, fs in os.walk(root)
                    for f in fs if f.endswith(".scala"))
     code = {p: code_lines(p) for p in files}
-    seen = collections.Counter()
-    for lines in code.values():
-        texts = [t for _, t in lines]
-        for i in range(len(texts) - WINDOW + 1):
-            seen[tuple(texts[i:i + WINDOW])] += 1
+    where = collections.defaultdict(list)
+    for p, lines in code.items():
+        for i, w in windows(lines):
+            where[w].append((p, i))
+    seen = collections.Counter({w: len(ps) for w, ps in where.items()})
+    if target is not None:
+        match = [p for p in files if os.path.exists(target)
+                 and os.path.samefile(p, target)]
+        if not match:
+            print(f"{target}: not a .scala file under {root}",
+                  file=sys.stderr)
+            return 2
+        return blocks(match[0], root, code, where)
     env = set()
     total_loc = total_dup = 0
     print(f"{'loc':>6} {'dup':>5}  file")
