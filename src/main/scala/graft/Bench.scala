@@ -159,6 +159,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // SPARK_GRAFT_BENCH_ONLY=a,b,c times just the named queries (dev aid
+    // for isolating one query's cost or chasing instability).
+    val only = SparkEntry.selection("SPARK_GRAFT_BENCH_ONLY",
+      sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
     val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     // Warm the session (JIT, codegen, parquet footer caches) with one small
     // untimed query so startup cost isn't attributed to the first query.
@@ -522,12 +526,6 @@ object Bench {
       "q_text_unigram_lm")
     headline.diff(SparkEntry.queries.keySet).foreach(k =>
       System.err.println(s"[bench] headline query missing from registry: $k"))
-    // SPARK_GRAFT_BENCH_ONLY=a,b,c times just the named queries (dev aid
-    // for isolating one query's cost or chasing instability).
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach(_.diff(SparkEntry.queries.keySet).foreach(k =>
-      System.err.println(s"[bench] BENCH_ONLY query missing from registry: $k")))
     val selected =
       if (only.isDefined)
         SparkEntry.queries.view.filterKeys(only.get).toMap

@@ -30,4 +30,31 @@ object SparkEntry {
       Events.oracle ++ Scalar.oracle ++ Text.oracle ++ Vectors.oracle ++
       Ingest.oracle ++ Multimodal.oracle ++ Analytics.oracle ++
       Subqueries.oracle
+
+  /** A comma-separated row selection: unset selects every row (None),
+    * otherwise the named rows. Left(reason) when the value is set but
+    * names no row, or names a row that is not in `known`: a selection
+    * must never shrink silently.
+    */
+  def parseSelection(value: Option[String],
+      known: collection.Set[String] = queries.keySet)
+      : Either[String, Option[Set[String]]] =
+    value.fold[Either[String, Option[Set[String]]]](Right(None)) { v =>
+      val names = v.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      val unknown = names.diff(known)
+      if (names.isEmpty) Left("is set but names no row")
+      else if (unknown.nonEmpty)
+        Left("names unregistered rows: " + unknown.toSeq.sorted.mkString(", "))
+      else Right(Some(names))
+    }
+
+  /** [[parseSelection]] of the environment variable `name`, whose value
+    * is `value`, for a main: exits 1 with a message naming the variable
+    * when the selection is malformed. Call it before any Spark work.
+    */
+  def selection(name: String, value: Option[String]): Option[Set[String]] =
+    parseSelection(value).fold({ why =>
+      System.err.println(s"$name $why")
+      sys.exit(1)
+    }, identity)
 }

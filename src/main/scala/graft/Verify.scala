@@ -28,23 +28,15 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // Optional comma-separated subset for the per-query pre-declare gate
+    // (unset, every row is dumped).
+    val only = SparkEntry.selection("SPARK_GRAFT_VERIFY_ONLY",
+      sys.env.get("SPARK_GRAFT_VERIFY_ONLY"))
     val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     new java.io.File(outDir).mkdirs()
     // warm the session (JIT, codegen, parquet footer caches) so the first
     // dumped query isn't billed several seconds of startup cost
     try SparkEntry.entry(spark).count() catch { case _: Throwable => }
-    // Optional comma-separated subset for the per-query pre-declare gate
-    // (full dumps stay the default; the driver sets nothing). Unknown
-    // names warn loudly instead of silently shrinking the selection.
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { sel =>
-      val unknown = sel.diff(SparkEntry.queries.keySet)
-      if (unknown.nonEmpty)
-        System.err.println(
-          s"[verify] WARNING: unknown names in SPARK_GRAFT_VERIFY_ONLY: " +
-            unknown.toSeq.sorted.mkString(", "))
-    }
     val failed = dump(spark, SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }, sfDir, outDir)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

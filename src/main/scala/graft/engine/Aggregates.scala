@@ -493,8 +493,7 @@ object Aggregates {
       val dec = "decimal(18,9)"
       val ev = Tables.events(s, d)
         .withColumn("c", round(col("value") * 100).cast("long"))
-        .withColumn("b", pmod(conv(substring(
-          md5(col("user_id").cast("string")), 1, 8), 16, 10).cast("long"),
+        .withColumn("b", pmod(md5Bits(col("user_id").cast("string"), 8),
           lit(8)))
       val g = ev.groupBy(col("b"))
         .agg(count(lit(1)).as("ng"), sum(col("c")).as("sg"))
@@ -677,9 +676,8 @@ object Aggregates {
           eround(col("sa").cast("double") / col("na") / 100.0
             - (col("sc") - col("sa")).cast("double")
               / (col("n") - col("na")) / 100.0, 6).as("t_obs"))
-      val coin = conv(substring(md5(concat_ws(":",
-        col("event_id"), lit("p"), col("b"))), 1, 13), 16, 10)
-        .cast("long") < lit(2251799813685248L) // 2^51: fair integer coin
+      val coin = md5Bits(concat_ws(":", col("event_id"), lit("p"), col("b")),
+        13) < lit(2251799813685248L) // 2^51: fair integer coin
       val perms = ev
         .select(col("event_id"), col("c"),
           explode(sequence(lit(0), lit(B - 1))).as("b"))
@@ -1899,9 +1897,8 @@ object Aggregates {
         .filter(col("event_type") === "purchase")
         .select(col("event_id"),
           round(col("value") * 100).cast("long").as("c"))
-      val u = conv(substring(md5(concat_ws(":",
-        col("event_id"), col("b"))), 1, 13), 16, 10)
-        .cast("long").cast("double") / lit(4503599627370496.0) // 2^52
+      val u = md5Bits(concat_ws(":", col("event_id"), col("b")), 13)
+        .cast("double") / lit(4503599627370496.0) // 2^52
       val wgt = cdf.zipWithIndex.foldRight(lit(8L): Column) {
         case ((p, k), acc) => when(col("u") < p, lit(k.toLong)).otherwise(acc)
       }
@@ -2933,27 +2930,26 @@ object Aggregates {
     // Mirrors the Spark expression tree 1:1; each leave-one-out mean is
     // ε-rounded to DECIMAL(18,9) before the exact order-free sums.
     "q_agg_jackknife" ->
-      """WITH e AS (SELECT CAST(round(value * 100) AS BIGINT) AS c,
-        |   ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 8))::BIGINT
-        |     % 8 AS b
-        |  FROM events),
-        | g AS (SELECT b, count(*) AS ng, CAST(sum(c) AS BIGINT) AS sg
-        |  FROM e GROUP BY b),
-        | t AS (SELECT CAST(sum(ng) AS BIGINT) AS n,
-        |   CAST(sum(sg) AS BIGINT) AS s, count(*) AS gcnt FROM g),
-        | loo AS (SELECT t.n, t.s, t.gcnt,
-        |   CAST(round(CAST(t.s - g.sg AS DOUBLE) / (t.n - g.ng) / 100.0
-        |     + 5e-10, 9) AS DECIMAL(18,9)) AS mi
-        |  FROM g, t),
-        | agg AS (SELECT n, s, gcnt, sum(mi) AS smi,
-        |   sum(mi * mi) AS smi2 FROM loo GROUP BY n, s, gcnt)
-        | SELECT n, gcnt AS n_groups,
-        |  round(CAST(s AS DOUBLE) / n / 100.0 + 5e-10, 6) AS mean,
-        |  round(sqrt(CAST(gcnt - 1 AS DOUBLE) / gcnt
-        |    * (CAST(smi2 AS DOUBLE)
-        |      - CAST(smi AS DOUBLE) * CAST(smi AS DOUBLE) / gcnt))
-        |    + 5e-10, 6) AS se_jack
-        | FROM agg"""
+      s"""WITH e AS (SELECT CAST(round(value * 100) AS BIGINT) AS c,
+         |   ${oMd5Bits("CAST(user_id AS VARCHAR)", 8)} % 8 AS b
+         |  FROM events),
+         | g AS (SELECT b, count(*) AS ng, CAST(sum(c) AS BIGINT) AS sg
+         |  FROM e GROUP BY b),
+         | t AS (SELECT CAST(sum(ng) AS BIGINT) AS n,
+         |   CAST(sum(sg) AS BIGINT) AS s, count(*) AS gcnt FROM g),
+         | loo AS (SELECT t.n, t.s, t.gcnt,
+         |   CAST(round(CAST(t.s - g.sg AS DOUBLE) / (t.n - g.ng) / 100.0
+         |     + 5e-10, 9) AS DECIMAL(18,9)) AS mi
+         |  FROM g, t),
+         | agg AS (SELECT n, s, gcnt, sum(mi) AS smi,
+         |   sum(mi * mi) AS smi2 FROM loo GROUP BY n, s, gcnt)
+         | SELECT n, gcnt AS n_groups,
+         |  round(CAST(s AS DOUBLE) / n / 100.0 + 5e-10, 6) AS mean,
+         |  round(sqrt(CAST(gcnt - 1 AS DOUBLE) / gcnt
+         |    * (CAST(smi2 AS DOUBLE)
+         |      - CAST(smi AS DOUBLE) * CAST(smi AS DOUBLE) / gcnt))
+         |    + 5e-10, 6) AS se_jack
+         | FROM agg"""
         .stripMargin.replaceAll("\n", " "),
 
     // Mirrors the Spark cell expression 1:1; per-cell ε-round to
@@ -3078,42 +3074,42 @@ object Aggregates {
     // uniform), same exact integer sums, ε-rounded statistics compared
     // at identical 6dp on both engines.
     "q_agg_permutation_test" ->
-      """WITH ev AS (SELECT event_id, event_type,
-        |   CAST(round(value * 100) AS BIGINT) AS c
-        |  FROM events WHERE event_type IN ('click', 'purchase')),
-        | obs AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |   CAST(sum(c) AS BIGINT) AS sc,
-        |   CAST(count(*) FILTER (event_type = 'click') AS BIGINT) AS na,
-        |   CAST(sum(CASE WHEN event_type = 'click' THEN c ELSE 0 END)
-        |     AS BIGINT) AS sa
-        |  FROM ev),
-        | obs2 AS (SELECT n, na,
-        |   round(CAST(sa AS DOUBLE) / na / 100.0
-        |     - CAST(sc - sa AS DOUBLE) / (n - na) / 100.0 + 5e-10, 6)
-        |     AS t_obs
-        |  FROM obs),
-        | flips AS (SELECT c, b,
-        |   ('0x' || substr(md5(event_id || ':p:' || b), 1, 13))::BIGINT
-        |     < 2251799813685248 AS ga
-        |  FROM ev, unnest(generate_series(0, 63)) u(b)),
-        | perms AS (SELECT b, CAST(count(*) AS BIGINT) AS nb,
-        |   CAST(sum(c) AS BIGINT) AS scb,
-        |   CAST(count(*) FILTER (ga) AS BIGINT) AS nab,
-        |   CAST(sum(CASE WHEN ga THEN c ELSE 0 END) AS BIGINT) AS sab
-        |  FROM flips GROUP BY b),
-        | tb AS (SELECT round(CAST(sab AS DOUBLE) / nab / 100.0
-        |    - CAST(scb - sab AS DOUBLE) / (nb - nab) / 100.0
-        |    + 5e-10, 6) AS tb
-        |  FROM perms),
-        | ex AS (SELECT
-        |   CAST(count(*) FILTER (abs(tb) >= abs(t_obs)) AS BIGINT)
-        |     AS n_extreme
-        |  FROM tb, obs2)
-        | SELECT obs2.n, obs2.na AS n_click, obs2.t_obs,
-        |  CAST(64 AS BIGINT) AS n_permutations, ex.n_extreme,
-        |  round(CAST(ex.n_extreme + 1 AS DOUBLE) / 65 + 5e-10, 6)
-        |    AS p_value
-        | FROM obs2, ex"""
+      s"""WITH ev AS (SELECT event_id, event_type,
+         |   CAST(round(value * 100) AS BIGINT) AS c
+         |  FROM events WHERE event_type IN ('click', 'purchase')),
+         | obs AS (SELECT CAST(count(*) AS BIGINT) AS n,
+         |   CAST(sum(c) AS BIGINT) AS sc,
+         |   CAST(count(*) FILTER (event_type = 'click') AS BIGINT) AS na,
+         |   CAST(sum(CASE WHEN event_type = 'click' THEN c ELSE 0 END)
+         |     AS BIGINT) AS sa
+         |  FROM ev),
+         | obs2 AS (SELECT n, na,
+         |   round(CAST(sa AS DOUBLE) / na / 100.0
+         |     - CAST(sc - sa AS DOUBLE) / (n - na) / 100.0 + 5e-10, 6)
+         |     AS t_obs
+         |  FROM obs),
+         | flips AS (SELECT c, b,
+         |   ${oMd5Bits("event_id || ':p:' || b", 13)}
+         |     < 2251799813685248 AS ga
+         |  FROM ev, unnest(generate_series(0, 63)) u(b)),
+         | perms AS (SELECT b, CAST(count(*) AS BIGINT) AS nb,
+         |   CAST(sum(c) AS BIGINT) AS scb,
+         |   CAST(count(*) FILTER (ga) AS BIGINT) AS nab,
+         |   CAST(sum(CASE WHEN ga THEN c ELSE 0 END) AS BIGINT) AS sab
+         |  FROM flips GROUP BY b),
+         | tb AS (SELECT round(CAST(sab AS DOUBLE) / nab / 100.0
+         |    - CAST(scb - sab AS DOUBLE) / (nb - nab) / 100.0
+         |    + 5e-10, 6) AS tb
+         |  FROM perms),
+         | ex AS (SELECT
+         |   CAST(count(*) FILTER (abs(tb) >= abs(t_obs)) AS BIGINT)
+         |     AS n_extreme
+         |  FROM tb, obs2)
+         | SELECT obs2.n, obs2.na AS n_click, obs2.t_obs,
+         |  CAST(64 AS BIGINT) AS n_permutations, ex.n_extreme,
+         |  round(CAST(ex.n_extreme + 1 AS DOUBLE) / 65 + 5e-10, 6)
+         |    AS p_value
+         | FROM obs2, ex"""
         .stripMargin.replaceAll("\n", " "),
 
     // Same dense day×type grid, rank()+(ties−1)/2 average ranks (exact
@@ -3984,36 +3980,36 @@ object Aggregates {
     // literal Poisson(1) CDF thresholds, integer num/den per replicate,
     // identical division order; CI picks sorted-list elements 2 and 63.
     "q_agg_bootstrap_ci" ->
-      """WITH pc AS (SELECT event_id,
-        |   CAST(round(value * 100) AS BIGINT) AS c
-        |  FROM events WHERE event_type = 'purchase'),
-        | rep AS (SELECT c,
-        |   CAST(('0x' || substr(md5(event_id || ':' || b), 1, 13))
-        |     AS BIGINT) / 4503599627370496.0 AS u, b
-        |  FROM pc, (SELECT unnest(range(0, 64)) AS b)),
-        | w AS (SELECT b, c,
-        |   CASE WHEN u < 0.36787944117144233 THEN 0
-        |    WHEN u < 0.7357588823428847 THEN 1
-        |    WHEN u < 0.9196986029286058 THEN 2
-        |    WHEN u < 0.9810118431238462 THEN 3
-        |    WHEN u < 0.9963401531726563 THEN 4
-        |    WHEN u < 0.9994058151824183 THEN 5
-        |    WHEN u < 0.999916758850712 THEN 6
-        |    WHEN u < 0.9999897508033253 THEN 7
-        |    ELSE 8 END AS w FROM rep),
-        | means AS (SELECT b,
-        |   CAST(sum(c * w) AS DOUBLE) / CAST(sum(w) AS BIGINT) / 100.0
-        |     AS m
-        |  FROM w GROUP BY b),
-        | ci AS (SELECT (list(m ORDER BY m))[2] AS ci_lo,
-        |   (list(m ORDER BY m))[63] AS ci_hi FROM means),
-        | pt AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |   CAST(sum(c) AS DOUBLE) / count(*) / 100.0 AS mean FROM pc)
-        | SELECT n, CAST(64 AS BIGINT) AS n_replicates,
-        |  round(mean + 5e-10, 6) AS mean,
-        |  round(ci_lo + 5e-10, 6) AS ci_lo,
-        |  round(ci_hi + 5e-10, 6) AS ci_hi
-        | FROM pt, ci"""
+      s"""WITH pc AS (SELECT event_id,
+         |   CAST(round(value * 100) AS BIGINT) AS c
+         |  FROM events WHERE event_type = 'purchase'),
+         | rep AS (SELECT c,
+         |   ${oMd5Bits("event_id || ':' || b", 13)}
+         |     / 4503599627370496.0 AS u, b
+         |  FROM pc, (SELECT unnest(range(0, 64)) AS b)),
+         | w AS (SELECT b, c,
+         |   CASE WHEN u < 0.36787944117144233 THEN 0
+         |    WHEN u < 0.7357588823428847 THEN 1
+         |    WHEN u < 0.9196986029286058 THEN 2
+         |    WHEN u < 0.9810118431238462 THEN 3
+         |    WHEN u < 0.9963401531726563 THEN 4
+         |    WHEN u < 0.9994058151824183 THEN 5
+         |    WHEN u < 0.999916758850712 THEN 6
+         |    WHEN u < 0.9999897508033253 THEN 7
+         |    ELSE 8 END AS w FROM rep),
+         | means AS (SELECT b,
+         |   CAST(sum(c * w) AS DOUBLE) / CAST(sum(w) AS BIGINT) / 100.0
+         |     AS m
+         |  FROM w GROUP BY b),
+         | ci AS (SELECT (list(m ORDER BY m))[2] AS ci_lo,
+         |   (list(m ORDER BY m))[63] AS ci_hi FROM means),
+         | pt AS (SELECT CAST(count(*) AS BIGINT) AS n,
+         |   CAST(sum(c) AS DOUBLE) / count(*) / 100.0 AS mean FROM pc)
+         | SELECT n, CAST(64 AS BIGINT) AS n_replicates,
+         |  round(mean + 5e-10, 6) AS mean,
+         |  round(ci_lo + 5e-10, 6) AS ci_lo,
+         |  round(ci_hi + 5e-10, 6) AS ci_hi
+         | FROM pt, ci"""
         .stripMargin.replaceAll("\n", " "),
 
     // Mirrors the Spark construction 1:1 (same medians, same threshold

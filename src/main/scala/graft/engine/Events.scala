@@ -627,18 +627,10 @@ object Events {
     // output is the raw (n_spans, n_hits) the update-mode sink would
     // hold per surviving document.
     "q_stream_decontaminate" -> { (s, d) =>
-      val n = 8
       val docs = Tables.documents(s, d)
-      val evalDg = docs.filter(pmod(col("doc_id"), lit(10)) === 7)
-        .withColumn("t", split(lower(col("text")), " "))
-        .filter(size(col("t")) >= n)
-        .select(col("t"),
-          explode(sequence(lit(1), size(col("t")) - (n - 1))).as("i"))
-        .select(conv(substring(
-          md5(concat_ws(" ", slice(col("t"), col("i"), lit(n)))), 1, 15),
-          16, 10).cast("long").as("dg"))
       Streaming.streamingDecontaminate(
-        docs.filter(pmod(col("doc_id"), lit(10)) =!= 7), evalDg)
+          docs.filter(pmod(col("doc_id"), lit(10)) =!= 7),
+          Text.spans(docs.filter(pmod(col("doc_id"), lit(10)) === 7), 8))
         .orderBy(col("doc_id"))
     },
 
@@ -652,7 +644,7 @@ object Events {
     // user within the following 30 minutes (the attribution shape).
     "q_stream_join_replay" -> { (s, d) =>
       Streaming.streamStreamJoin(joinSide(s, d, "click"),
-          joinSide(s, d, "purchase"))
+          joinSide(s, d, "purchase"), "inner")
         .select(col("l_user").as("user_id"), col("l_id").as("click_id"),
           col("r_id").as("purchase_id"), col("l_ts"), col("r_ts"))
         .orderBy(col("click_id"), col("purchase_id"))
@@ -675,9 +667,9 @@ object Events {
       val base = streamRoot(s, d)
       val (clicks, buys) =
         (joinSide(s, d, "click"), joinSide(s, d, "purchase"))
-      lazy val out = Streaming.streamStreamJoinOuter(
+      lazy val out = Streaming.streamStreamJoin(
         stagedStream(s, s"$base/sjo_l", clicks),
-        stagedStream(s, s"$base/sjo_r", buys))
+        stagedStream(s, s"$base/sjo_r", buys), "leftOuter")
       def run(): Unit = triggerOnce(s) {
         out.writeStream.format("parquet")
           .option("path", s"$base/sjo_out")
@@ -2087,6 +2079,16 @@ object Events {
       |   CAST(c AS DOUBLE) AS y FROM daily)"""
       .stripMargin.replaceAll("\n", " ")
 
+  /** The sink both stream-dedup rows must hold: the distinct rows of the
+    * events table with every 10th event delivered twice.
+    */
+  private val oDistinctEvents: String =
+    """WITH s AS (SELECT * FROM events UNION ALL
+      |   SELECT * FROM events WHERE event_id % 10 = 0)
+      | SELECT DISTINCT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id,
+      |  event_type, value
+      | FROM s ORDER BY event_id""".stripMargin.replaceAll("\n", " ")
+
   val oracle: Map[String, String] = Map(
     // Duplicates are byte-identical copies, so SELECT DISTINCT over the
     // re-delivered union replays whichever-survivor dedup exactly.
@@ -2106,41 +2108,23 @@ object Events {
         | GROUP BY user_id ORDER BY user_id"""
         .stripMargin.replaceAll("\n", " "),
 
-    "q_stream_dedup_replay" ->
-      """WITH s AS (SELECT * FROM events UNION ALL
-        |   SELECT * FROM events WHERE event_id % 10 = 0)
-        | SELECT DISTINCT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id,
-        |  event_type, value
-        | FROM s ORDER BY event_id"""
-        .stripMargin.replaceAll("\n", " "),
+    "q_stream_dedup_replay" -> oDistinctEvents,
 
     // The late protocol changes nothing the sink can see — the evicted
     // state can't block the re-delivery, so parity here proves the
     // LATE FILTER dropped every sub-W1 copy before it could append as
     // a "new" event.
-    "q_stream_dedup_late" ->
-      """WITH s AS (SELECT * FROM events UNION ALL
-        |   SELECT * FROM events WHERE event_id % 10 = 0)
-        | SELECT DISTINCT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id,
-        |  event_type, value
-        | FROM s ORDER BY event_id"""
-        .stripMargin.replaceAll("\n", " "),
+    "q_stream_dedup_late" -> oDistinctEvents,
 
     // The q_text_contaminate digest replay minus the derived columns —
     // the streaming builder emits only the raw span/hit counts.
     "q_stream_decontaminate" ->
-      """WITH t AS (SELECT doc_id, string_split(lower(text), ' ') AS tk
-        |   FROM documents),
-        | sh AS (SELECT doc_id, ('0x' ||
-        |   substr(md5(array_to_string(tk[i:i+7], ' ')), 1, 15))::BIGINT
-        |   AS dg
-        |  FROM t, LATERAL unnest(generate_series(1, len(tk) - 7)) u(i)
-        |  WHERE len(tk) >= 8),
-        | ev AS (SELECT DISTINCT dg FROM sh WHERE doc_id % 10 = 7)
-        | SELECT sh.doc_id, count(*) AS n_spans, count(ev.dg) AS n_hits
-        | FROM sh LEFT JOIN ev ON sh.dg = ev.dg
-        | WHERE sh.doc_id % 10 <> 7
-        | GROUP BY sh.doc_id ORDER BY doc_id"""
+      s"""WITH sh AS (${Text.oSpans("documents", 8)}),
+         | ev AS (SELECT DISTINCT dg FROM sh WHERE doc_id % 10 = 7)
+         | SELECT sh.doc_id, count(*) AS n_spans, count(ev.dg) AS n_hits
+         | FROM sh LEFT JOIN ev ON sh.dg = ev.dg
+         | WHERE sh.doc_id % 10 <> 7
+         | GROUP BY sh.doc_id ORDER BY doc_id"""
         .stripMargin.replaceAll("\n", " "),
 
     // The range comparison runs on microsecond-cast timestamps on both

@@ -68,35 +68,19 @@ object Streaming {
       .select(col("session_window.start").as("s_start"),
         col("session_window.end").as("s_end"), col("userId"), col("n"))
 
-  /** Stream-stream inner join: watermarks on BOTH sides plus a bounded
-    * event-time range condition, so each side buffers only its watermark
-    * horizon of state (join on user, right event within 30 minutes after
-    * the left event). Without the time bound Spark would have to retain
-    * unbounded state — this is the scale-safe shape.
-    */
-  def streamStreamJoin(left: DataFrame, right: DataFrame): DataFrame = {
-    val l = left.withWatermark("ts", "10 minutes")
-      .select(col("userId").as("l_user"), col("ts").as("l_ts"),
-        col("eventId").as("l_id"))
-    val r = right.withWatermark("ts", "10 minutes")
-      .select(col("userId").as("r_user"), col("ts").as("r_ts"),
-        col("eventId").as("r_id"))
-    l.join(r, col("l_user") === col("r_user")
-      && col("r_ts") >= col("l_ts")
-      && col("r_ts") <= col("l_ts") + expr("INTERVAL 30 MINUTES"))
-  }
-
-  /** Stream-stream LEFT OUTER join, same keys/time bound as
-    * [[streamStreamJoin]]: matches emit as they join, but a left row's
-    * NULL-match can only emit once the watermark proves no future right
-    * row can pair with it (watermark past l_ts + 30 min, the join
+  /** Stream-stream join, `how` = "inner" or "leftOuter": watermarks on
+    * BOTH sides plus a bounded event-time range condition (join on user,
+    * right event within 30 minutes after the left event), so each side
+    * buffers only its watermark horizon of state. Without the time bound
+    * Spark would have to retain unbounded state — this is the scale-safe
+    * shape. On the outer join, matches emit as they join, but a left
+    * row's NULL-match can only emit once the watermark proves no future
+    * right row can pair with it (watermark past l_ts + 30 min, the join
     * horizon) — the semantic that distinguishes outer from inner on
     * streams, exercised under the oracle gate by
-    * q_stream_join_outer_replay's watermark-advance protocol. Both
-    * sides watermarked + the bounded time range keeps per-side state at
-    * its horizon, exactly as the inner spelling.
+    * q_stream_join_outer_replay's watermark-advance protocol.
     */
-  def streamStreamJoinOuter(left: DataFrame, right: DataFrame)
+  def streamStreamJoin(left: DataFrame, right: DataFrame, how: String)
       : DataFrame = {
     val l = left.withWatermark("ts", "10 minutes")
       .select(col("userId").as("l_user"), col("ts").as("l_ts"),
@@ -106,8 +90,7 @@ object Streaming {
         col("eventId").as("r_id"))
     l.join(r, col("l_user") === col("r_user")
       && col("r_ts") >= col("l_ts")
-      && col("r_ts") <= col("l_ts") + expr("INTERVAL 30 MINUTES"),
-      "leftOuter")
+      && col("r_ts") <= col("l_ts") + expr("INTERVAL 30 MINUTES"), how)
   }
 
   /** Stream-static join: enrich a stream against a broadcast dimension
@@ -118,35 +101,28 @@ object Streaming {
     events.join(broadcast(dim), events("userId") === dim("c_custkey"))
       .select(col("eventId"), col("userId"), col("c_mktsegment"))
 
-  /** Streaming eval-set decontamination: the q_text_contaminate shape on
-    * an UNBOUNDED ingest stream — per micro-batch, each document's
-    * word-8-gram 60-bit digests explode and stream-static LEFT-join
+  /** Streaming eval-set decontamination: q_text_contaminate's
+    * [[spanHits]] on an UNBOUNDED ingest stream — per micro-batch, each
+    * document's word-8-gram [[Text.spans]] stream-static LEFT-join
     * against the broadcast eval digest set (`dg` column), then per-doc
     * span/hit counts aggregate in update mode. The static side loads
     * once; the stream side is never shuffled beyond the per-doc
     * aggregation, so ingest-time curation keeps the batch operator's
     * scale shape.
     */
-  def streamingDecontaminate(docs: DataFrame, evalDg: DataFrame): DataFrame = {
-    val n = 8
-    // exploded-index digest spelling (see q_text_dedup_span): codegen'd
-    // md5 per row instead of an interpreted transform() lambda
-    val sh = docs
-      .withColumn("t", split(lower(col("text")), " "))
-      .filter(size(col("t")) >= n)
-      .select(col("doc_id"), col("t"),
-        explode(sequence(lit(1), size(col("t")) - (n - 1))).as("i"))
-      .select(col("doc_id"), conv(substring(
-        md5(concat_ws(" ", slice(col("t"), col("i"), lit(n)))), 1, 15),
-        16, 10).cast("long").as("dg"))
-    // DISTINCT the static side like the batch twin (q_text_contaminate):
-    // duplicate eval digests would multiply stream rows through the left
-    // join and inflate both n_spans and n_hits.
+  def streamingDecontaminate(docs: DataFrame, evalDg: DataFrame): DataFrame =
+    spanHits(Text.spans(docs, 8), evalDg)
+
+  /** Per-document (n_spans, n_hits) of a span frame (doc_id, dg) against
+    * the broadcast eval digests. The static side is DISTINCTed:
+    * duplicate eval digests would multiply stream rows through the left
+    * join and inflate both counts.
+    */
+  def spanHits(sh: DataFrame, evalDg: DataFrame): DataFrame =
     sh.join(broadcast(evalDg.select(col("dg")).distinct()
         .withColumn("hit", lit(1))), Seq("dg"), "left")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_spans"), count(col("hit")).as("n_hits"))
-  }
 
   /** transformWithState (state API v2, Spark 4.x): running per-user value
     * sums in a typed ValueState. Requires the RocksDB state store provider

@@ -158,6 +158,14 @@ object Fx {
   /** Epsilon-round for deterministically-computed doubles. */
   def eround(c: Column, scale: Int): Column = round(c + lit(5e-10), scale)
 
+  /** The house hash: the first `hex` hex digits of `md5(c)` as a BIGINT
+    * (15 digits: the 60-bit n-gram digest; 13: the 52-bit uniform coin;
+    * 8: the 32-bit bucket hash). Integer-exact on both engines, so a
+    * collision, if any, collides in the oracle too. Twin: [[oMd5Bits]].
+    */
+  def md5Bits(c: Column, hex: Int): Column =
+    conv(substring(md5(c), 1, hex), 16, 10).cast("long")
+
   /** DCG position weights eround(1/log2(i+1), 9) for i = 1..10,
     * pre-rounded to 9dp literals so NEITHER engine computes log2 at
     * runtime: positions 1 and 3 are exactly 1.0 and 0.5 — on the decimal
@@ -237,4 +245,6 @@ object Fx {
   def oRound(x: String, scale: Int): String = s"round($x + 5e-10, $scale)"
   def oLsum(x: String): String =
     s"CAST(sum(CAST(round($x*100) AS BIGINT)) AS BIGINT) / 100.0"
+  def oMd5Bits(x: String, hex: Int): String =
+    s"('0x' || substr(md5($x), 1, $hex))::BIGINT"
 }

@@ -375,24 +375,109 @@ object Text {
     transform(sequence(lit(1), greatest(size(t) - 2, lit(1))),
       i => array_join(slice(t, i, lit(3)), " "))
 
-  /** Distinct word-`n`-gram digests per document, EXPLODED — one
-    * (doc_id, g) row per distinct shingle, with the 60-bit md5 digest
-    * computed on exploded index rows so it stays inside WholeStageCodegen
-    * (HOF lambdas evaluate interpreted — the q_text_containment rule).
-    * Shared by the cascade's containment stage and the minhash ledger;
-    * the DuckDB twin is the `('0x' || substr(md5(...), 1, 15))::BIGINT`
-    * list form — change BOTH in lockstep.
+  /** The n-gram digest family: word-`n`-gram frames carrying the 60-bit
+    * house digest ([[Fx.md5Bits]] of the space-joined tokens), and the
+    * pair stages built on them. The digest is computed on EXPLODED index
+    * rows, so md5/slice stay inside WholeStageCodegen: a transform()
+    * lambda evaluates interpreted at ~10 µs/element (q_text_containment's
+    * array spelling cost 3.9 s against 1.2 s at sf0.1). Each frame and
+    * stage has one DuckDB twin below the builders (`oSpans`,
+    * `oShingleSets`, `oMinhashSigs`, `oOverlap`, `oRarePairs`), digesting
+    * identically so a 60-bit collision, if any, collides on both engines.
     */
-  private def shingleDigests(docs: DataFrame, n: Int): DataFrame =
+  private def gramDigest(n: Int): Column =
+    md5Bits(concat_ws(" ", slice(col("t"), col("i"), lit(n))), 15)
+
+  /** Every word-`n`-gram occurrence of each document with at least `n`
+    * tokens, as (doc_id, dg): the span unit of span dedup,
+    * decontamination and the curation funnel. A shorter document has no
+    * span, where [[shingleRows]] keeps one. Twin: `oSpans`.
+    */
+  private[graft] def spans(docs: DataFrame, n: Int): DataFrame =
+    docs
+      .withColumn("t", toks(col("text")))
+      .filter(size(col("t")) >= n)
+      .select(col("doc_id"), col("t"),
+        explode(sequence(lit(1), size(col("t")) - (n - 1))).as("i"))
+      .select(col("doc_id"), gramDigest(n).as("dg"))
+
+  /** Every word-`n`-gram occurrence of each document, as (doc_id, g). A
+    * document shorter than `n` tokens keeps one gram (its whole token
+    * list), so every document has a non-empty shingle set.
+    */
+  private def shingleRows(docs: DataFrame, n: Int): DataFrame =
     docs
       .withColumn("t", toks(col("text")))
       .select(col("doc_id"), col("t"),
         explode(sequence(lit(1), greatest(size(col("t")) - (n - 1), lit(1))))
           .as("i"))
-      .select(col("doc_id"), conv(substring(
-        md5(concat_ws(" ", slice(col("t"), col("i"), lit(n)))), 1, 15),
-        16, 10).cast("long").as("g"))
-      .distinct()
+      .select(col("doc_id"), gramDigest(n).as("g"))
+
+  /** The distinct [[shingleRows]]: one (doc_id, g) row per distinct
+    * shingle. Twin: `oShingleSets`, the same set as a list per document.
+    */
+  private[graft] def shingleDigests(docs: DataFrame, n: Int): DataFrame =
+    shingleRows(docs, n).distinct()
+
+  /** 16-permutation MinHash signatures of a distinct-shingle frame
+    * (doc_id, g): permutation p hashes each digest as the house hash of
+    * "p:g", and the per-document minimum is the coordinate, as
+    * (doc_id, p, sig). Twin: `oMinhashSigs`.
+    */
+  private def minhashSigs(sh: DataFrame): DataFrame =
+    sh.select(col("doc_id"),
+        explode(sequence(lit(0), lit(15))).as("p"), col("g"))
+      .withColumn("h", md5Bits(concat(col("p").cast("string"), lit(":"),
+        col("g").cast("string")), 15))
+      .groupBy(col("doc_id"), col("p")).agg(min(col("h")).as("sig"))
+
+  /** Exact shingle overlap of every document pair sharing a shingle,
+    * from a distinct-shingle frame: (id_b, id_a, inter, na, nb), with
+    * `inter` the shared count and `na`/`nb` each side's set size, so
+    * [[exactJaccard]] reads it. Twin: `oOverlap`.
+    */
+  private def gramOverlap(sh: DataFrame): DataFrame = {
+    val nsz = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("nsz"))
+    sh.select(col("doc_id").as("id_a"), col("g"))
+      .join(sh.select(col("doc_id").as("id_b"), col("g")), Seq("g"))
+      .filter(col("id_a") < col("id_b"))
+      .groupBy(col("id_a"), col("id_b"))
+      .agg(count(lit(1)).as("inter"))
+      .join(nsz.select(col("doc_id").as("id_a"), col("nsz").as("na")),
+        Seq("id_a"))
+      .join(nsz.select(col("doc_id").as("id_b"), col("nsz").as("nb")),
+        Seq("id_b"))
+  }
+
+  /** |A∩B| / |A∪B| over a [[gramOverlap]] row, ε-rounded to 6dp. */
+  private val exactJaccard: Column =
+    eround(col("inter").cast("double")
+      / (col("na") + col("nb") - col("inter")).cast("double"), 6)
+
+  /** Rare-shingle blocking over a distinct-shingle frame (doc_id, g):
+    * only digests of document frequency ≤ 8 join (the hot-shingle drop,
+    * which also bounds each bucket, so candidate pairs stay linear in
+    * the corpus). Pairs are (id_b, id_a, n_common, n_b): `n_common`
+    * shared rare digests, `n_b` the later document's rare-digest count.
+    * Twin: `oRarePairs`, which keeps the [[blockable]] pairs only.
+    */
+  private def rarePairs(e: DataFrame): DataFrame = {
+    val rare = e.join(
+      e.groupBy(col("g")).agg(count(lit(1)).as("df"))
+        .filter(col("df") <= 8), Seq("g"))
+      .select(col("doc_id"), col("g"))
+    val nB = rare.groupBy(col("doc_id")).agg(count(lit(1)).as("n_b"))
+    rare.select(col("doc_id").as("id_a"), col("g"))
+      .join(rare.select(col("doc_id").as("id_b"), col("g")), Seq("g"))
+      .filter(col("id_a") < col("id_b"))
+      .groupBy(col("id_a"), col("id_b"))
+      .agg(count(lit(1)).as("n_common"))
+      .join(nB.select(col("doc_id").as("id_b"), col("n_b")), Seq("id_b"))
+  }
+
+  /** The [[rarePairs]] a later document can be dropped on: it has at
+    * least 5 rare digests. */
+  private val blockable: Column = col("n_b") >= 5
 
   /** Near-dup corpus: fixture documents plus deterministic planted
     * near-duplicates (first token dropped, doc_id + 1,000,000) generated
@@ -589,8 +674,7 @@ object Text {
       val W = org.apache.spark.sql.expressions.Window
       val tk = Tables.documents(s, d)
         .withColumn("held",
-          pmod(conv(substring(md5(col("doc_id").cast("string")), 1, 8),
-            16, 10).cast("long"), lit(5)) === 0)
+          pmod(md5Bits(col("doc_id").cast("string"), 8), lit(5)) === 0)
         .select(col("doc_id"), col("held"),
           posexplode(toks(col("text"))).as(Seq("pos", "tok")))
       val wd = W.partitionBy(col("doc_id")).orderBy(col("pos"))
@@ -1094,8 +1178,7 @@ object Text {
     "q_text_hash_embed" -> { (s, d) =>
       val bc = Tables.documents(s, d)
         .select(col("doc_id"), explode(toks(col("text"))).as("tok"))
-        .withColumn("b", pmod(conv(substring(md5(col("tok")), 1, 8),
-          16, 10).cast("long"), lit(32)))
+        .withColumn("b", pmod(md5Bits(col("tok"), 8), lit(32)))
         .groupBy(col("doc_id"), col("b"))
         .agg(count(lit(1)).as("cnt"))
       bc.groupBy(col("doc_id"))
@@ -1218,8 +1301,7 @@ object Text {
       val tk = Tables.spread(s, Tables.documents(s, d))
         .select(col("doc_id"), col("lang"),
           explode(toks(col("text"))).as("tok"))
-        .withColumn("b", pmod(conv(substring(md5(col("tok")), 1, 8),
-          16, 10).cast("long"), lit(64)))
+        .withColumn("b", pmod(md5Bits(col("tok"), 8), lit(64)))
       val cells0 = tk.groupBy(col("b"))
         .agg(sum(when(col("lang") === "en", 1L).otherwise(0L)).as("ct"),
           sum(when(col("lang") =!= "en", 1L).otherwise(0L)).as("cr"))
@@ -1278,11 +1360,8 @@ object Text {
     // Occurrence counts come from a partial-aggregating hash groupBy +
     // a shuffle-HASH join back (hinted: the default sort-merge would
     // sort BOTH full shingle streams; the r4 window formulation sorted
-    // one and couldn't map-side combine at all). The exploded shingle
-    // stream digests on EXPLODED index rows so md5/slice stay inside
-    // WholeStageCodegen — a transform() lambda evaluates interpreted at
-    // ~10 µs/element (measured on q_text_containment: 3.9 s vs 1.2 s at
-    // sf0.1). The two join inputs each recompute the scan+digest pass:
+    // one and couldn't map-side combine at all). The two join inputs
+    // each recompute the [[spans]] scan+digest pass:
     // at 100 TB two embarrassingly-parallel codegen scans beat pinning a
     // corpus-token-count × 16-byte stream in executor storage (the
     // previous persisted spelling also left a cross-invocation storage
@@ -1294,14 +1373,7 @@ object Text {
       // spread the scan (r15, guide §2.5): the tokenize+explode+md5 pass
       // runs twice over a single-task fixture scan; repartitioning the
       // KB-scale raw text first parallelizes both codegen passes
-      val sh = Tables.spread(s, Tables.documents(s, d))
-        .withColumn("t", toks(col("text")))
-        .filter(size(col("t")) >= n)
-        .select(col("doc_id"), col("t"),
-          explode(sequence(lit(1), size(col("t")) - (n - 1))).as("i"))
-        .select(col("doc_id"), conv(substring(
-          md5(concat_ws(" ", slice(col("t"), col("i"), lit(n)))), 1, 15),
-          16, 10).cast("long").as("dg"))
+      val sh = spans(Tables.spread(s, Tables.documents(s, d)), n)
       val counts = sh.groupBy(col("dg")).agg(count(lit(1)).as("c"))
       sh.join(counts.hint("shuffle_hash"), "dg")
         .groupBy(col("doc_id"))
@@ -1323,26 +1395,12 @@ object Text {
     // same 60-bit BIGINT form as q_text_dedup_span (mirrored in the
     // oracle, so collisions — if any — agree across engines).
     "q_text_contaminate" -> { (s, d) =>
-      val n = 8
-      // exploded-index digest spelling (see q_text_dedup_span): codegen'd
-      // md5 per row instead of an interpreted transform() lambda
-      val sh = Tables.documents(s, d)
-        .withColumn("t", toks(col("text")))
-        .filter(size(col("t")) >= n)
-        .select(col("doc_id"), col("t"),
-          explode(sequence(lit(1), size(col("t")) - (n - 1))).as("i"))
-        .select(col("doc_id"), conv(substring(
-          md5(concat_ws(" ", slice(col("t"), col("i"), lit(n)))), 1, 15),
-          16, 10).cast("long").as("dg"))
       // the doc_id predicate commutes with the explode, so each branch
       // scans only its own slice of the corpus — no shared subtree worth
       // persisting (eval reads ~1% of rows)
-      val evalSet = sh.filter(pmod(col("doc_id"), lit(10)) === 7)
-        .select(col("dg")).distinct().withColumn("hit", lit(1))
-      sh.filter(pmod(col("doc_id"), lit(10)) =!= 7)
-        .join(broadcast(evalSet), Seq("dg"), "left")
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_spans"), count(col("hit")).as("n_hits"))
+      val sh = spans(Tables.documents(s, d), 8)
+      Streaming.spanHits(sh.filter(pmod(col("doc_id"), lit(10)) =!= 7),
+          sh.filter(pmod(col("doc_id"), lit(10)) === 7))
         .withColumn("contam_frac",
           col("n_hits").cast("double") / col("n_spans"))
         .withColumn("flagged", col("n_hits") > 0)
@@ -1375,8 +1433,7 @@ object Text {
               concat_ws(" ", slice(col("t"), (ci - 1) * w + 1, lit(w)))
                 .as("chunk")))).as("c"))
         .select(col("doc_id"), col("c.ci").as("ci"), col("c.chunk").as("chunk"))
-        .withColumn("dg", conv(substring(md5(col("chunk")), 1, 15), 16, 10)
-          .cast("long"))
+        .withColumn("dg", md5Bits(col("chunk"), 15))
         .withColumn("occ", col("doc_id") * lit(1000000L) + col("ci"))
       val firsts = ch.groupBy(col("dg")).agg(min(col("occ")).as("first_occ"))
       ch.join(firsts.hint("shuffle_hash"), "dg")
@@ -1427,9 +1484,8 @@ object Text {
     // 0.5 / 1.0), so the coin comparison has no representation
     // boundary; u < 1.0 always holds, keeping full strata complete.
     "q_sample_stratified" -> { (s, d) =>
-      val u = conv(substring(md5(concat_ws(":", lit("strat"),
-        col("doc_id"))), 1, 13), 16, 10)
-        .cast("long").cast("double") / lit(4503599627370496.0) // 2^52
+      val u = md5Bits(concat_ws(":", lit("strat"), col("doc_id")), 13)
+        .cast("double") / lit(4503599627370496.0) // 2^52
       val frac = when(col("lang") === "en", 0.25)
         .when(col("lang") === "zh", 0.5).otherwise(1.0)
       Tables.documents(s, d)
@@ -1458,8 +1514,7 @@ object Text {
     "q_pipeline_manifest" -> { (s, d) =>
       Tables.documents(s, d)
         .withColumn("shard", expr("doc_id DIV 100"))
-        .withColumn("dg", pmod(conv(substring(md5(col("text")), 1, 15),
-          16, 10).cast("long"), lit(1000000007L)))
+        .withColumn("dg", pmod(md5Bits(col("text"), 15), lit(1000000007L)))
         .groupBy(col("shard"))
         .agg(count(lit(1)).as("n_docs"),
           sum(col("n_chars")).as("n_chars"),
@@ -1541,8 +1596,7 @@ object Text {
     // else is explode + join + count, linear in corpus size.
     "q_dedup_bloom_fpr" -> { (s, d) =>
       val dg = Tables.documents(s, d)
-        .select(col("doc_id"), conv(substring(md5(col("text")), 1, 15),
-          16, 10).cast("long").as("dg"))
+        .select(col("doc_id"), md5Bits(col("text"), 15).as("dg"))
       val members = dg.filter(pmod(col("doc_id"), lit(10)) < 5)
         .select(col("dg")).distinct()
       val probes = dg.filter(pmod(col("doc_id"), lit(10)) >= 5)
@@ -1550,8 +1604,8 @@ object Text {
         .join(members, Seq("dg"), "left_anti")
       def positions(df: DataFrame): DataFrame = df
         .withColumn("j", explode(sequence(lit(0), lit(2))))
-        .withColumn("p", pmod(conv(substring(md5(concat_ws(":",
-          col("j"), col("dg"))), 1, 8), 16, 10).cast("long"), lit(4096)))
+        .withColumn("p",
+          pmod(md5Bits(concat_ws(":", col("j"), col("dg")), 8), lit(4096)))
       val setbits = positions(members).select(col("p")).distinct()
       val probeHits = positions(probes)
         .join(broadcast(setbits.withColumn("hit", lit(1))), Seq("p"),
@@ -1940,8 +1994,7 @@ object Text {
           "transform(sequence(1, size(tk) - 1)," +
             " i -> concat(tk[i-1], '_', tk[i]))")).as("f"))
       uni.unionAll(bi)
-        .withColumn("bin",
-          conv(substring(md5(col("f")), 1, 4), 16, 10).cast("long") % 64)
+        .withColumn("bin", md5Bits(col("f"), 4) % 64)
         .withColumn("wt", (col("bin") * 31 + 7) % 97 - 48)
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_features"), sum(col("wt")).as("score"))
@@ -2096,8 +2149,8 @@ object Text {
           posexplode(toks(col("text"))).as(Seq("pos", "tok")))
         .withColumn("i", col("pos") + 1)
         .withColumn("m",
-          (pmod(conv(substring(md5(concat_ws(":", col("doc_id"),
-            col("i"))), 1, 8), 16, 10).cast("long"), lit(100)) < 15)
+          (pmod(md5Bits(concat_ws(":", col("doc_id"), col("i")), 8),
+            lit(100)) < 15)
             .cast("long"))
       val spans = tk.filter(col("m") === 1)
         .withColumn("isl", col("i") - row_number().over(
@@ -2129,8 +2182,7 @@ object Text {
     "q_pipeline_kfold" -> { (s, d) =>
       Tables.documents(s, d)
         .withColumn("fold",
-          pmod(conv(substring(md5(col("doc_id").cast("string")), 1, 8),
-            16, 10).cast("long"), lit(5)))
+          pmod(md5Bits(col("doc_id").cast("string"), 8), lit(5)))
         .groupBy(col("fold"), col("lang"))
         .agg(count(lit(1)).as("n_docs"),
           sum(col("n_chars")).as("n_chars"),
@@ -2342,8 +2394,7 @@ object Text {
     "q_pipeline_cap_domain" -> { (s, d) =>
       val docs = Tables.documents(s, d)
         .withColumn("n_tok", size(toks(col("text"))))
-        .withColumn("coin32", conv(substring(
-          md5(col("doc_id").cast("string")), 1, 8), 16, 10).cast("long"))
+        .withColumn("coin32", md5Bits(col("doc_id").cast("string"), 8))
       val bySrc = docs.groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"),
           sum(col("n_tok")).cast("long").as("n_tokens"))
@@ -2382,16 +2433,6 @@ object Text {
     // report is one partial-aggregating groupBy. Every stage linear at
     // 100 TB.
     "q_pipeline_curate" -> { (s, d) =>
-      val n = 8
-      // exploded-index digest spelling (see q_text_dedup_span): codegen'd
-      // md5 per row instead of an interpreted transform() lambda
-      val sh = (df: DataFrame) => df
-        .filter(size(col("t")) >= n)
-        .select(col("doc_id"), col("t"),
-          explode(sequence(lit(1), size(col("t")) - (n - 1))).as("i"))
-        .select(col("doc_id"), conv(substring(
-          md5(concat_ws(" ", slice(col("t"), col("i"), lit(n)))), 1, 15),
-          16, 10).cast("long").as("dg"))
       // STAGE 0 (round 6): web pages → text. The fixture corpus is plain
       // text, so each training doc is first wrapped in a deterministic
       // page (nav/ad/footer boilerplate around two content blocks) and
@@ -2422,11 +2463,10 @@ object Text {
           && length(col("text")) >= 40
           && size(array_distinct(col("t"))).cast("double")
             / col("n_tok") >= 0.5)
-      val evalSh = sh(Tables.documents(s, d)
-          .filter(pmod(col("doc_id"), lit(10)) === 7)
-          .withColumn("t", toks(col("text"))))
+      val evalSh = spans(Tables.documents(s, d)
+          .filter(pmod(col("doc_id"), lit(10)) === 7), 8)
         .select(col("dg")).distinct().withColumn("hit", lit(1))
-      val contam = sh(docs)
+      val contam = spans(docs, 8)
         .join(broadcast(evalSh), Seq("dg"), "left")
         .groupBy(col("doc_id")).agg(count(col("hit")).as("hits"))
         .filter(col("hits") > 0)
@@ -2765,19 +2805,7 @@ object Text {
       val e = Checkpoints.memo("thrcurve_e:" + d, s) {
         shingleDigests(corpus, 3).localCheckpoint()
       }
-      val rare = e.join(
-        e.groupBy(col("g")).agg(count(lit(1)).as("df"))
-          .filter(col("df") <= 8), Seq("g"))
-        .select(col("doc_id"), col("g"))
-      val nB = rare.groupBy(col("doc_id")).agg(count(lit(1)).as("n_b"))
-      val pairs = rare.select(col("doc_id").as("id_a"), col("g"))
-        .join(rare.select(col("doc_id").as("id_b"), col("g")), Seq("g"))
-        .filter(col("id_a") < col("id_b"))
-        .groupBy(col("id_a"), col("id_b"))
-        .agg(count(lit(1)).as("n_common"))
-        .join(nB.select(col("doc_id").as("id_b"), col("n_b")),
-          Seq("id_b"))
-        .filter(col("n_b") >= 5)
+      val pairs = rarePairs(e).filter(blockable)
       val taus = s.range(1).select(
         explode(array(lit(60L), lit(80L), lit(95L))).as("tau"))
       val drops = pairs.crossJoin(broadcast(taus))
@@ -2819,19 +2847,8 @@ object Text {
       val e = Checkpoints.memo("cascade_e:" + d, s) {
         shingleDigests(d2, 3).localCheckpoint()
       }
-      val rare = e.join(
-        e.groupBy(col("g")).agg(count(lit(1)).as("df"))
-          .filter(col("df") <= 8), Seq("g"))
-        .select(col("doc_id"), col("g"))
-      val nB = rare.groupBy(col("doc_id")).agg(count(lit(1)).as("n_b"))
-      val drops = rare.select(col("doc_id").as("id_a"), col("g"))
-        .join(rare.select(col("doc_id").as("id_b"), col("g")), Seq("g"))
-        .filter(col("id_a") < col("id_b"))
-        .groupBy(col("id_a"), col("id_b"))
-        .agg(count(lit(1)).as("n_common"))
-        .join(nB.select(col("doc_id").as("id_b"), col("n_b")), Seq("id_b"))
-        .filter(col("n_b") >= 5
-          && col("n_common") * 10 >= col("n_b") * 8)
+      val drops = rarePairs(e)
+        .filter(blockable && col("n_common") * 10 >= col("n_b") * 8)
         .select(col("id_b").as("doc_id")).distinct()
       val s3 = d2.join(drops, Seq("doc_id"), "left_anti")
       val counts = docs.agg(count(lit(1)).as("c0"))
@@ -2952,13 +2969,7 @@ object Text {
     "q_dedup_minhash_est" -> { (s, d) =>
       val sh = shingleDigests(
         Tables.documents(s, d).filter(col("doc_id") < 60), 3)
-      val sigs = sh
-        .select(col("doc_id"),
-          explode(sequence(lit(0), lit(15))).as("p"), col("g"))
-        .withColumn("h", conv(substring(md5(concat(
-          col("p").cast("string"), lit(":"), col("g").cast("string"))),
-          1, 15), 16, 10).cast("long"))
-        .groupBy(col("doc_id"), col("p")).agg(min(col("h")).as("sig"))
+      val sigs = minhashSigs(sh)
       val m = sigs.select(col("doc_id").as("id_a"), col("p"),
           col("sig").as("sa"))
         .join(sigs.select(col("doc_id").as("id_b"), col("p"),
@@ -2966,25 +2977,13 @@ object Text {
         .filter(col("id_a") < col("id_b"))
         .groupBy(col("id_a"), col("id_b"))
         .agg(sum(when(col("sa") === col("sb"), 1L).otherwise(0L)).as("m"))
-      val nsz = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("nsz"))
-      val inter = sh.select(col("doc_id").as("id_a"), col("g"))
-        .join(sh.select(col("doc_id").as("id_b"), col("g")), Seq("g"))
-        .filter(col("id_a") < col("id_b"))
-        .groupBy(col("id_a"), col("id_b"))
-        .agg(count(lit(1)).as("inter"))
-      inter
-        .join(nsz.select(col("doc_id").as("id_a"), col("nsz").as("na")),
-          Seq("id_a"))
-        .join(nsz.select(col("doc_id").as("id_b"), col("nsz").as("nb")),
-          Seq("id_b"))
+      gramOverlap(sh)
         .join(m, Seq("id_a", "id_b"), "left")
         .select(col("id_a"), col("id_b"),
           coalesce(col("m"), lit(0L)).as("n_match"),
           eround(coalesce(col("m"), lit(0L)) / lit(16.0), 6)
             .as("est_jaccard"),
-          eround(col("inter").cast("double")
-            / (col("na") + col("nb") - col("inter")).cast("double"), 6)
-            .as("jaccard"))
+          exactJaccard.as("jaccard"))
         .orderBy(col("id_a"), col("id_b"))
     },
 
@@ -3006,26 +3005,8 @@ object Text {
       val sh = shingleDigests(
         nearDupCorpus(s, d).filter(
           col("doc_id") < 60 || col("doc_id") >= 1000000L), 3)
-      val sigs = sh
-        .select(col("doc_id"),
-          explode(sequence(lit(0), lit(15))).as("p"), col("g"))
-        .withColumn("h", conv(substring(md5(concat(
-          col("p").cast("string"), lit(":"), col("g").cast("string"))),
-          1, 15), 16, 10).cast("long"))
-        .groupBy(col("doc_id"), col("p")).agg(min(col("h")).as("sig"))
-      val nsz = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("nsz"))
-      val high = sh.select(col("doc_id").as("id_a"), col("g"))
-        .join(sh.select(col("doc_id").as("id_b"), col("g")), Seq("g"))
-        .filter(col("id_a") < col("id_b"))
-        .groupBy(col("id_a"), col("id_b"))
-        .agg(count(lit(1)).as("inter"))
-        .join(nsz.select(col("doc_id").as("id_a"), col("nsz").as("na")),
-          Seq("id_a"))
-        .join(nsz.select(col("doc_id").as("id_b"), col("nsz").as("nb")),
-          Seq("id_b"))
-        .filter(eround(col("inter").cast("double")
-          / (col("na") + col("nb") - col("inter")).cast("double"), 6)
-          >= 0.5)
+      val sigs = minhashSigs(sh)
+      val high = gramOverlap(sh).filter(exactJaccard >= 0.5)
         .select(col("id_a"), col("id_b"), lit(1).as("hi"))
       val cfg = s.range(1).select(explode(array(
           struct(lit(16).as("b"), lit(1).as("r")),
@@ -3095,26 +3076,13 @@ object Text {
     // corpus×corpus variant swaps the probe broadcast for the
     // MinHash-LSH candidate join (q_dedup_near).
     "q_text_containment" -> { (s, d) =>
-      // Shingles as 60-bit BIGINT digests (the q_text_dedup_span form,
-      // mirrored in the oracle so a collision — if any — collides on
-      // both engines). CRITICALLY the digest is computed on EXPLODED
-      // index rows, not inside a transform() lambda: higher-order-
-      // function lambdas evaluate interpreted (~10 µs/element — the
-      // array spelling cost 3.2-3.9 s at sf0.1), while the exploded
-      // spelling keeps md5/concat_ws/slice inside WholeStageCodegen
-      // (~0.5 s). Per-doc distinctness moves from array_distinct into
-      // the countDistinct aggregates, which partial-aggregate map-side.
-      // (r15: probed Tables.spread here — the four re-derived branches
-      // each pay the repartition exchange and the measured total came out
-      // ~5% WORSE than the single-task scans; left as-is)
-      val sh = Tables.documents(s, d)
-        .withColumn("t", toks(col("text")))
-        .select(col("doc_id"), col("t"),
-          explode(sequence(lit(1), greatest(size(col("t")) - 2, lit(1))))
-            .as("i"))
-        .select(col("doc_id"), conv(substring(
-          md5(concat_ws(" ", slice(col("t"), col("i"), lit(3)))), 1, 15),
-          16, 10).cast("long").as("g"))
+      // Shingles as [[shingleRows]] 60-bit digests, NOT distinct: per-doc
+      // distinctness lives in the countDistinct aggregates, which
+      // partial-aggregate map-side. (r15: probed Tables.spread here — the
+      // four re-derived branches each pay the repartition exchange and
+      // the measured total came out ~5% WORSE than the single-task
+      // scans; left as-is)
+      val sh = shingleRows(Tables.documents(s, d), 3)
       val nDoc = sh.filter(col("doc_id") >= 20)
         .groupBy(col("doc_id")).agg(countDistinct(col("g")).as("n_doc"))
       val probes = sh.filter(col("doc_id") < 20)
@@ -3173,8 +3141,7 @@ object Text {
       val hashed = corpus
         .select(col("doc_id"), explode_outer(col("t")).as("tok"))
         .select(col("doc_id"),
-          conv(substring(md5(col("tok")), 1, 8), 16, 10)
-            .cast("long").as("h"))
+          md5Bits(col("tok"), 8).as("h"))
       val bitSums = hashed.groupBy(col("doc_id"))
         .agg(sum(shiftright(col("h"), 0).bitwiseAND(lit(1L)) * 2 - 1)
           .as("b0"),
@@ -3373,9 +3340,7 @@ object Text {
           explode(sequence(lit(1), size(col("t")) - (k - 1))).as("i"),
           col("t"))
         .select(col("doc_id"), col("n_grams"), col("i"),
-          conv(substring(
-            md5(concat_ws(" ", slice(col("t"), col("i"), lit(k)))),
-            1, 15), 16, 10).cast("long").as("h"))
+          gramDigest(k).as("h"))
       val frame = W.partitionBy(col("doc_id")).orderBy(col("i"))
         .rowsBetween(-(w - 1), 0)
       g.withColumn("m", min(col("h")).over(frame))
@@ -3532,9 +3497,8 @@ object Text {
         .groupBy(col("event_type"),
           pmod(col("user_id"), lit(4)).as("cohort"))
         .agg(count(lit(1)).as("n_true"))
-      val u = conv(substring(md5(concat_ws(":", col("event_type"),
-        col("cohort"), lit("dp"))), 1, 13), 16, 10)
-        .cast("long").cast("double") / lit(4503599627370496.0) // 2^52
+      val u = md5Bits(concat_ws(":", col("event_type"), col("cohort"),
+        lit("dp")), 13).cast("double") / lit(4503599627370496.0) // 2^52
       cells.withColumn("u", u)
         .withColumn("noise",
           when(col("u") < 0.5, log(col("u") * 2) / eps)
@@ -3547,9 +3511,74 @@ object Text {
   )
 
   private val oToks = "string_split(lower(text), ' ')"
-  /** oToks over an aliased/derived `text` column (CTE-safe twin). */
-  private val oToks2 = "string_split(lower(corpus.text), ' ')"
   private val oStop = "['the', 'a']"
+
+  /** DuckDB twins of the n-gram digest family. `from` is a FROM clause
+    * (a table or CTE, optionally with a WHERE) whose rows carry
+    * `doc_id` and `text`; each frame tokenizes `text` as [[toks]] does.
+    */
+  private def oTokens(from: String): String =
+    s"(SELECT doc_id, $oToks AS tk FROM $from) t"
+
+  private def oGram(n: Int): String =
+    oMd5Bits(s"array_to_string(tk[i:i+${n - 1}], ' ')", 15)
+
+  /** Twin of [[spans]]: the SELECT of (doc_id, dg). */
+  private[engine] def oSpans(from: String, n: Int): String =
+    s"SELECT doc_id, ${oGram(n)} AS dg FROM ${oTokens(from)}, " +
+      s"LATERAL unnest(generate_series(1, len(tk) - ${n - 1})) u(i) " +
+      s"WHERE len(tk) >= $n"
+
+  /** Twin of [[shingleDigests]] as a set per document: the SELECT of
+    * (doc_id, sh), `sh` the distinct digest list.
+    */
+  private def oShingleSets(from: String, n: Int): String =
+    s"SELECT doc_id, list_distinct(list_transform(generate_series(1, " +
+      s"greatest(len(tk) - ${n - 1}, 1)), i -> ${oGram(n)})) AS sh " +
+      s"FROM ${oTokens(from)}"
+
+  /** Twin of [[minhashSigs]] over a (doc_id, g) relation `e`: the SELECT
+    * of (doc_id, p, sig).
+    */
+  private def oMinhashSigs(e: String): String =
+    s"SELECT doc_id, p, min(${oMd5Bits(
+      "CAST(p AS VARCHAR) || ':' || CAST(g AS VARCHAR)", 15)}) AS sig " +
+      s"FROM $e CROSS JOIN (SELECT unnest(range(16)) AS p) GROUP BY 1, 2"
+
+  /** Twin of [[gramOverlap]]: the CTEs `ns` (doc_id, nsz) over the
+    * shingle lists `sets` (doc_id, sh) and `ov` (id_a, id_b, inter, na,
+    * nb) over their unnested rows `e` (doc_id, g). One line, to
+    * interpolate after a `WITH` or a comma.
+    */
+  private def oOverlap(sets: String, e: String): String =
+    s"ns AS (SELECT doc_id, CAST(len(sh) AS BIGINT) AS nsz FROM $sets), " +
+      "ov AS (SELECT i.id_a, i.id_b, i.inter, na.nsz AS na, nb.nsz AS nb " +
+      "FROM (SELECT a.doc_id AS id_a, b.doc_id AS id_b, " +
+      s"CAST(count(*) AS BIGINT) AS inter FROM $e a JOIN $e b " +
+      "ON a.g = b.g AND a.doc_id < b.doc_id GROUP BY 1, 2) i " +
+      "JOIN ns na ON i.id_a = na.doc_id JOIN ns nb ON i.id_b = nb.doc_id)"
+
+  /** Twin of [[exactJaccard]] over an `ov` row. */
+  private val oJaccard =
+    "round(CAST(inter AS DOUBLE) / CAST(na + nb - inter AS DOUBLE) " +
+      "+ 5e-10, 6)"
+
+  /** Twin of [[rarePairs]] filtered to [[blockable]] over a distinct
+    * (doc_id, g) relation `e`: the CTEs `re` (the rare rows), `nb`
+    * (doc_id, n_b) and `pairs` (id_a, id_b, n_common, n_b). One line, to
+    * interpolate after a `WITH` or a comma.
+    */
+  private def oRarePairs(e: String): String =
+    s"re AS (SELECT doc_id, g FROM $e WHERE g IN " +
+      s"(SELECT g FROM $e GROUP BY g HAVING count(*) <= 8)), " +
+      "nb AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_b FROM re " +
+      "GROUP BY 1), " +
+      "pairs AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, " +
+      "CAST(count(*) AS BIGINT) AS n_common, " +
+      "CAST(min(nb.n_b) AS BIGINT) AS n_b " +
+      "FROM re a JOIN re b ON a.g = b.g AND a.doc_id < b.doc_id " +
+      "JOIN nb ON nb.doc_id = b.doc_id " +
+      "GROUP BY 1, 2 HAVING min(nb.n_b) >= 5)"
 
   /** The DuckDB twin of [[vocabGrowthPoints]]: the CTEs `tk`, `pd`,
     * `fs`, `j`, `c` and `vg` `(doc_id, cum_tokens, vocab_size)` on the
@@ -3838,7 +3867,7 @@ object Text {
     "q_text_hash_embed" ->
       s"""WITH tk AS (SELECT doc_id, unnest($oToks) AS tok FROM documents),
          | hb AS (SELECT doc_id,
-         |   ('0x' || substr(md5(tok), 1, 8))::BIGINT % 32 AS b FROM tk),
+         |   ${oMd5Bits("tok", 8)} % 32 AS b FROM tk),
          | bc AS (SELECT doc_id, b, count(*) AS cnt FROM hb GROUP BY 1, 2)
          | SELECT doc_id, count(*) AS nnz, CAST(sum(cnt) AS BIGINT) AS l1,
          |  CAST(sum(cnt * cnt) AS BIGINT) AS l2sq,
@@ -3893,7 +3922,7 @@ object Text {
       s"""WITH tk AS (SELECT doc_id, lang, unnest($oToks) AS tok
          |  FROM documents),
          | hb AS (SELECT doc_id, lang,
-         |   ('0x' || substr(md5(tok), 1, 8))::BIGINT % 64 AS b FROM tk),
+         |   ${oMd5Bits("tok", 8)} % 64 AS b FROM tk),
          | cells0 AS (SELECT b,
          |   CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END)
          |     AS BIGINT) AS ct,
@@ -4118,15 +4147,14 @@ object Text {
     },
 
     "q_pipeline_shuffle" ->
-      """WITH k AS (SELECT doc_id, source,
-        |   md5(CAST(doc_id AS VARCHAR)) AS k,
-        |   ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 8
-        |     AS shard
-        |  FROM documents)
-        | SELECT doc_id, source, shard,
-        |  CAST(row_number() OVER (PARTITION BY shard ORDER BY k, doc_id)
-        |   AS INT) AS pos
-        | FROM k ORDER BY shard, pos"""
+      s"""WITH k AS (SELECT doc_id, source,
+         |   md5(CAST(doc_id AS VARCHAR)) AS k,
+         |   ${oMd5Bits("CAST(doc_id AS VARCHAR)", 8)} % 8 AS shard
+         |  FROM documents)
+         | SELECT doc_id, source, shard,
+         |  CAST(row_number() OVER (PARTITION BY shard ORDER BY k, doc_id)
+         |   AS INT) AS pos
+         | FROM k ORDER BY shard, pos"""
         .stripMargin.replaceAll("\n", " "),
 
     "q_sample_weighted" ->
@@ -4154,8 +4182,8 @@ object Text {
 
     "q_text_perplexity_eval" ->
       s"""WITH a AS (SELECT doc_id,
-         |   ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-         |    % 5 = 0 AS held, $oToks AS arr FROM documents),
+         |   ${oMd5Bits("CAST(doc_id AS VARCHAR)", 8)} % 5 = 0 AS held,
+         |   $oToks AS arr FROM documents),
          | t AS (SELECT doc_id, held, unnest(arr) AS tok,
          |   generate_subscripts(arr, 1) AS pos FROM a),
          | b AS (SELECT doc_id, held, tok AS w1,
@@ -4296,12 +4324,7 @@ object Text {
         .stripMargin.replaceAll("\n", " "),
 
     "q_text_dedup_span" ->
-      s"""WITH t AS (SELECT doc_id, $oToks AS tk FROM documents),
-         | sh AS (SELECT doc_id, ('0x' ||
-         |   substr(md5(array_to_string(tk[i:i+7], ' ')), 1, 15))::BIGINT
-         |   AS dg
-         |  FROM t, LATERAL unnest(generate_series(1, len(tk) - 7)) u(i)
-         |  WHERE len(tk) >= 8),
+      s"""WITH sh AS (${oSpans("documents", 8)}),
          | g AS (SELECT *, count(*) OVER (PARTITION BY dg) AS c FROM sh)
          | SELECT doc_id, count(*) AS n_spans,
          |  count(*) FILTER (WHERE c > 1) AS n_dup_spans,
@@ -4316,17 +4339,9 @@ object Text {
          |   (len(tk) BETWEEN 10 AND 500 AND length(text) >= 40
          |    AND CAST(len(list_distinct(tk)) AS DOUBLE) / len(tk) >= 0.5)
          |   AS q_ok FROM train),
-         | evs AS (SELECT DISTINCT ('0x' ||
-         |   substr(md5(array_to_string(tk[i:i+7], ' ')), 1, 15))::BIGINT
-         |   AS dg
-         |  FROM (SELECT $oToks AS tk FROM documents WHERE doc_id % 10 = 7)
-         |   e, LATERAL unnest(generate_series(1, len(tk) - 7)) u(i)
-         |  WHERE len(tk) >= 8),
-         | tsh AS (SELECT doc_id, ('0x' ||
-         |   substr(md5(array_to_string(tk[i:i+7], ' ')), 1, 15))::BIGINT
-         |   AS dg
-         |  FROM d, LATERAL unnest(generate_series(1, len(tk) - 7)) u(i)
-         |  WHERE len(tk) >= 8),
+         | evs AS (SELECT DISTINCT dg FROM
+         |  (${oSpans("documents WHERE doc_id % 10 = 7", 8)})),
+         | tsh AS (${oSpans("train", 8)}),
          | contam AS (SELECT DISTINCT tsh.doc_id FROM tsh
          |   JOIN evs ON tsh.dg = evs.dg),
          | f AS (SELECT d.*, (contam.doc_id IS NULL) AS c_ok
@@ -4347,12 +4362,7 @@ object Text {
         .stripMargin.replaceAll("\n", " "),
 
     "q_text_contaminate" ->
-      s"""WITH t AS (SELECT doc_id, $oToks AS tk FROM documents),
-         | sh AS (SELECT doc_id, ('0x' ||
-         |   substr(md5(array_to_string(tk[i:i+7], ' ')), 1, 15))::BIGINT
-         |   AS dg
-         |  FROM t, LATERAL unnest(generate_series(1, len(tk) - 7)) u(i)
-         |  WHERE len(tk) >= 8),
+      s"""WITH sh AS (${oSpans("documents", 8)}),
          | ev AS (SELECT DISTINCT dg FROM sh WHERE doc_id % 10 = 7)
          | SELECT sh.doc_id, count(*) AS n_spans, count(ev.dg) AS n_hits,
          |  CAST(count(ev.dg) AS DOUBLE) / count(*) AS contam_frac,
@@ -4369,7 +4379,7 @@ object Text {
          |  FROM t, LATERAL unnest(
          |    generate_series(1, (len(tk) + 9) // 10)) u(ci)),
          | dgd AS (SELECT doc_id, ci, chunk,
-         |   ('0x' || substr(md5(chunk), 1, 15))::BIGINT AS dg,
+         |   ${oMd5Bits("chunk", 15)} AS dg,
          |   doc_id * 1000000 + ci AS occ FROM ch),
          | f AS (SELECT dg, min(occ) AS first_occ FROM dgd GROUP BY dg)
          | SELECT doc_id, count(*) AS n_chunks,
@@ -4531,7 +4541,7 @@ object Text {
          |  WHERE len(tk) >= 2),
          | feats AS (SELECT * FROM uni UNION ALL SELECT * FROM bi),
          | sc AS (SELECT doc_id,
-         |   ('0x' || substr(md5(f), 1, 4))::BIGINT % 64 AS bin
+         |   ${oMd5Bits("f", 4)} % 64 AS bin
          |  FROM feats)
          | SELECT doc_id, count(*) AS n_features,
          |  CAST(sum((bin * 31 + 7) % 97 - 48) AS BIGINT) AS score,
@@ -4616,8 +4626,7 @@ object Text {
     "q_pipeline_span_mask" ->
       s"""WITH t AS (SELECT doc_id, $oToks AS tk FROM documents),
          | tok AS (SELECT doc_id, i,
-         |   CASE WHEN ('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':'
-         |     || CAST(i AS VARCHAR)), 1, 8))::BIGINT % 100 < 15
+         |   CASE WHEN ${oMd5Bits("doc_id || ':' || i", 8)} % 100 < 15
          |    THEN 1 ELSE 0 END AS m
          |  FROM t, LATERAL unnest(generate_series(1, len(tk))) u(i)),
          | mk AS (SELECT doc_id, i, i - row_number() OVER
@@ -4638,12 +4647,12 @@ object Text {
          | ORDER BY pd.doc_id""".stripMargin.replaceAll("\n", " "),
 
     "q_pipeline_manifest" ->
-      """SELECT doc_id // 100 AS shard, count(*) AS n_docs,
-        | CAST(sum(n_chars) AS BIGINT) AS n_chars,
-        | CAST(sum(('0x' || substr(md5(text), 1, 15))::BIGINT
-        |   % 1000000007) AS BIGINT) AS checksum,
-        | min(doc_id) AS min_id, max(doc_id) AS max_id
-        | FROM documents GROUP BY 1 ORDER BY shard"""
+      s"""SELECT doc_id // 100 AS shard, count(*) AS n_docs,
+         | CAST(sum(n_chars) AS BIGINT) AS n_chars,
+         | CAST(sum(${oMd5Bits("text", 15)} % 1000000007) AS BIGINT)
+         |   AS checksum,
+         | min(doc_id) AS min_id, max(doc_id) AS max_id
+         | FROM documents GROUP BY 1 ORDER BY shard"""
         .stripMargin.replaceAll("\n", " "),
 
     "q_pipeline_pad_waste" ->
@@ -4683,36 +4692,36 @@ object Text {
          | FROM agg ORDER BY doc_id""".stripMargin.replaceAll("\n", " "),
 
     "q_dedup_bloom_fpr" ->
-      """WITH dg AS (SELECT doc_id,
-        |   ('0x' || substr(md5(text), 1, 15))::BIGINT AS dg
-        |  FROM documents),
-        | mem AS (SELECT DISTINCT dg FROM dg WHERE doc_id % 10 < 5),
-        | prb AS (SELECT DISTINCT dg FROM dg WHERE doc_id % 10 >= 5
-        |   AND dg NOT IN (SELECT dg FROM mem)),
-        | ks AS (SELECT unnest([0, 1, 2]) AS j),
-        | setbits AS (SELECT DISTINCT
-        |   ('0x' || substr(md5(CAST(j AS VARCHAR) || ':' ||
-        |     CAST(dg AS VARCHAR)), 1, 8))::BIGINT % 4096 AS p
-        |  FROM mem CROSS JOIN ks),
-        | pp AS (SELECT dg,
-        |   ('0x' || substr(md5(CAST(j AS VARCHAR) || ':' ||
-        |     CAST(dg AS VARCHAR)), 1, 8))::BIGINT % 4096 AS p
-        |  FROM prb CROSS JOIN ks),
-        | ph AS (SELECT pp.dg, count(sb.p) AS k_hit FROM pp
-        |  LEFT JOIN setbits sb ON pp.p = sb.p GROUP BY pp.dg),
-        | st AS (SELECT count(*) AS n_probes,
-        |   CAST(sum(CASE WHEN k_hit = 3 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_fp FROM ph),
-        | ms AS (SELECT count(*) AS n_members FROM mem),
-        | bs AS (SELECT count(*) AS bits_set FROM setbits)
-        | SELECT n_members, bits_set, n_probes, n_fp,
-        |  round(CAST(n_fp AS DOUBLE) / n_probes + 5e-10, 6)
-        |   AS fpr_measured,
-        |  round((CAST(bits_set AS DOUBLE) / 4096.0)
-        |    * (CAST(bits_set AS DOUBLE) / 4096.0)
-        |    * (CAST(bits_set AS DOUBLE) / 4096.0) + 5e-10, 6)
-        |   AS fpr_expected
-        | FROM st, ms, bs""".stripMargin.replaceAll("\n", " "),
+      s"""WITH dg AS (SELECT doc_id,
+         |   ${oMd5Bits("text", 15)} AS dg
+         |  FROM documents),
+         | mem AS (SELECT DISTINCT dg FROM dg WHERE doc_id % 10 < 5),
+         | prb AS (SELECT DISTINCT dg FROM dg WHERE doc_id % 10 >= 5
+         |   AND dg NOT IN (SELECT dg FROM mem)),
+         | ks AS (SELECT unnest([0, 1, 2]) AS j),
+         | setbits AS (SELECT DISTINCT
+         |   ${oMd5Bits("CAST(j AS VARCHAR) || ':' || CAST(dg AS VARCHAR)", 8)}
+         |     % 4096 AS p
+         |  FROM mem CROSS JOIN ks),
+         | pp AS (SELECT dg,
+         |   ${oMd5Bits("CAST(j AS VARCHAR) || ':' || CAST(dg AS VARCHAR)", 8)}
+         |     % 4096 AS p
+         |  FROM prb CROSS JOIN ks),
+         | ph AS (SELECT pp.dg, count(sb.p) AS k_hit FROM pp
+         |  LEFT JOIN setbits sb ON pp.p = sb.p GROUP BY pp.dg),
+         | st AS (SELECT count(*) AS n_probes,
+         |   CAST(sum(CASE WHEN k_hit = 3 THEN 1 ELSE 0 END) AS BIGINT)
+         |    AS n_fp FROM ph),
+         | ms AS (SELECT count(*) AS n_members FROM mem),
+         | bs AS (SELECT count(*) AS bits_set FROM setbits)
+         | SELECT n_members, bits_set, n_probes, n_fp,
+         |  round(CAST(n_fp AS DOUBLE) / n_probes + 5e-10, 6)
+         |   AS fpr_measured,
+         |  round((CAST(bits_set AS DOUBLE) / 4096.0)
+         |    * (CAST(bits_set AS DOUBLE) / 4096.0)
+         |    * (CAST(bits_set AS DOUBLE) / 4096.0) + 5e-10, 6)
+         |   AS fpr_expected
+         | FROM st, ms, bs""".stripMargin.replaceAll("\n", " "),
 
     "q_pipeline_token_budget" ->
       s"""WITH docs AS (SELECT doc_id, lang,
@@ -4746,11 +4755,11 @@ object Text {
          | ORDER BY lang""".stripMargin.replaceAll("\n", " "),
 
     "q_pipeline_kfold" ->
-      """SELECT ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-        |  % 5 AS fold, lang,
-        | count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS n_chars,
-        | count(DISTINCT source) AS n_sources
-        | FROM documents GROUP BY 1, 2 ORDER BY fold, lang"""
+      s"""SELECT ${oMd5Bits("CAST(doc_id AS VARCHAR)", 8)} % 5 AS fold,
+         | lang,
+         | count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS n_chars,
+         | count(DISTINCT source) AS n_sources
+         | FROM documents GROUP BY 1, 2 ORDER BY fold, lang"""
         .stripMargin.replaceAll("\n", " "),
 
     "q_sample_hash_group" ->
@@ -4764,14 +4773,14 @@ object Text {
 
     // Same md5 coin and binary-exact fraction CASE.
     "q_sample_stratified" ->
-      """WITH u AS (SELECT lang,
-        |   CAST(('0x' || substr(md5('strat:' || doc_id), 1, 13))
-        |     AS BIGINT) / 4503599627370496.0 AS u
-        |  FROM documents)
-        | SELECT lang, CAST(count(*) AS BIGINT) AS n_kept FROM u
-        | WHERE u < CASE WHEN lang = 'en' THEN 0.25
-        |   WHEN lang = 'zh' THEN 0.5 ELSE 1.0 END
-        | GROUP BY lang ORDER BY lang"""
+      s"""WITH u AS (SELECT lang,
+         |   ${oMd5Bits("'strat:' || doc_id", 13)} / 4503599627370496.0
+         |     AS u
+         |  FROM documents)
+         | SELECT lang, CAST(count(*) AS BIGINT) AS n_kept FROM u
+         | WHERE u < CASE WHEN lang = 'en' THEN 0.25
+         |   WHEN lang = 'zh' THEN 0.5 ELSE 1.0 END
+         | GROUP BY lang ORDER BY lang"""
         .stripMargin.replaceAll("\n", " "),
 
     // Same md5 rank order and every-10th filter; counts stay BIGINT.
@@ -4910,8 +4919,7 @@ object Text {
     // (cap·2³²)//src_tokens threshold, same integer keep test.
     "q_pipeline_cap_domain" ->
       s"""WITH docs AS (SELECT doc_id, source, len($oToks) AS n_tok,
-         |   ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-         |     AS coin32
+         |   ${oMd5Bits("CAST(doc_id AS VARCHAR)", 8)} AS coin32
          |  FROM documents),
          | bysrc AS (SELECT source, count(*) AS n_docs,
          |   CAST(sum(n_tok) AS BIGINT) AS n_tokens FROM docs GROUP BY 1),
@@ -5009,18 +5017,9 @@ object Text {
          |    i -> array_to_string(($oToks)[i:i+2], ' '))) AS sh
          |  FROM corpus1),
          | e AS (SELECT doc_id, unnest(sh) AS g FROM d),
-         | inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |   count(*) AS n_inter
-         |  FROM e a JOIN e b ON a.g = b.g AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2),
-         | sz AS (SELECT doc_id, len(sh) AS n FROM d)
-         | SELECT id_a, id_b,
-         |  round(CAST(n_inter AS DOUBLE) / (na.n + nb.n - n_inter)
-         |    + 5e-10, 6) AS jaccard
-         | FROM inter JOIN sz na ON na.doc_id = id_a
-         |  JOIN sz nb ON nb.doc_id = id_b
-         | WHERE round(CAST(n_inter AS DOUBLE) / (na.n + nb.n - n_inter)
-         |    + 5e-10, 6) >= 0.5
+         | ${oOverlap("d", "e")}
+         | SELECT id_a, id_b, $oJaccard AS jaccard FROM ov
+         | WHERE $oJaccard >= 0.5
          | ORDER BY id_a, id_b""".stripMargin.replaceAll("\n", " "),
 
     // Bit-exact replay of the whole simhash pipeline: same 32-bit md5
@@ -5036,7 +5035,7 @@ object Text {
          | tk AS (SELECT doc_id, unnest(list_distinct($oToks)) AS tok
          |  FROM corpus0),
          | h AS (SELECT doc_id,
-         |   ('0x' || substr(md5(tok), 1, 8))::BIGINT AS h FROM tk),
+         |   ${oMd5Bits("tok", 8)} AS h FROM tk),
          | bits AS (SELECT doc_id, b,
          |   CAST(sum(((h >> b) & 1) * 2 - 1) AS BIGINT) AS v
          |  FROM h, unnest(generate_series(0, 31)) u(b)
@@ -5065,12 +5064,7 @@ object Text {
     // recipe); rank on the identical rounded score with the doc_id
     // tiebreak the Spark window uses.
     "q_text_containment" ->
-      s"""WITH d AS (SELECT doc_id,
-         |  list_distinct(list_transform(
-         |    generate_series(1, greatest(len($oToks) - 2, 1)),
-         |    i -> ('0x' || substr(md5(array_to_string($oToks[i:i+2], ' ')),
-         |      1, 15))::BIGINT)) AS sh
-         |  FROM documents),
+      s"""WITH d AS (${oShingleSets("documents", 3)}),
          | scored AS (SELECT p.doc_id AS id_p, c.doc_id AS doc_id,
          |   len(list_intersect(p.sh, c.sh)) AS n_common,
          |   round(CAST(len(list_intersect(p.sh, c.sh)) AS DOUBLE)
@@ -5139,26 +5133,12 @@ object Text {
          |  UNION ALL SELECT doc_id + 1000000,
          |    array_to_string(($oToks)[2:], ' ')
          |   FROM documents WHERE doc_id < 20),
-         | d AS (SELECT doc_id, list_distinct(list_transform(
-         |    generate_series(1, greatest(len($oToks2) - 2, 1)),
-         |    i -> ('0x' || substr(md5(array_to_string($oToks2[i:i+2], ' ')),
-         |      1, 15))::BIGINT)) AS sh
-         |  FROM corpus),
+         | d AS (${oShingleSets("corpus", 3)}),
          | e AS (SELECT doc_id, unnest(sh) AS g FROM d),
-         | perms AS (SELECT unnest(range(16)) AS p),
-         | sigs AS (SELECT doc_id, p,
-         |   min(('0x' || substr(md5(CAST(p AS VARCHAR) || ':' ||
-         |     CAST(g AS VARCHAR)), 1, 15))::BIGINT) AS sig
-         |  FROM e CROSS JOIN perms GROUP BY 1, 2),
-         | ns AS (SELECT doc_id, CAST(len(sh) AS BIGINT) AS nsz FROM d),
-         | high AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, 1 AS hi
-         |  FROM e a JOIN e b ON a.g = b.g AND a.doc_id < b.doc_id,
-         |   ns na, ns nb
-         |  WHERE na.doc_id = a.doc_id AND nb.doc_id = b.doc_id
-         |  GROUP BY 1, 2, na.nsz, nb.nsz
-         |  HAVING round(CAST(count(*) AS DOUBLE)
-         |    / CAST(na.nsz + nb.nsz - count(*) AS DOUBLE) + 5e-10, 6)
-         |   >= 0.5),
+         | sigs AS (${oMinhashSigs("e")}),
+         | ${oOverlap("d", "e")},
+         | high AS (SELECT id_a, id_b, 1 AS hi FROM ov
+         |  WHERE $oJaccard >= 0.5),
          | cfgs AS (SELECT * FROM (VALUES (16, 1), (8, 2), (4, 4))
          |   c(b, r)),
          | banded AS (SELECT c.b, c.r, s.doc_id, s.p // c.r AS band,
@@ -5187,38 +5167,21 @@ object Text {
         .stripMargin.replaceAll("\n", " "),
 
     "q_dedup_minhash_est" ->
-      s"""WITH d AS (SELECT doc_id, list_distinct(list_transform(
-         |    generate_series(1, greatest(len($oToks) - 2, 1)),
-         |    i -> ('0x' || substr(md5(array_to_string($oToks[i:i+2], ' ')),
-         |      1, 15))::BIGINT)) AS sh
-         |  FROM documents WHERE doc_id < 60),
+      s"""WITH d AS (${oShingleSets("documents WHERE doc_id < 60", 3)}),
          | e AS (SELECT doc_id, unnest(sh) AS g FROM d),
-         | perms AS (SELECT unnest(range(16)) AS p),
-         | sigs AS (SELECT doc_id, p,
-         |   min(('0x' || substr(md5(CAST(p AS VARCHAR) || ':' ||
-         |     CAST(g AS VARCHAR)), 1, 15))::BIGINT) AS sig
-         |  FROM e CROSS JOIN perms GROUP BY 1, 2),
+         | sigs AS (${oMinhashSigs("e")}),
          | m AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
          |   CAST(sum(CASE WHEN a.sig = b.sig THEN 1 ELSE 0 END)
          |     AS BIGINT) AS m
          |  FROM sigs a JOIN sigs b
          |   ON a.p = b.p AND a.doc_id < b.doc_id GROUP BY 1, 2),
-         | ns AS (SELECT doc_id, CAST(len(sh) AS BIGINT) AS nsz FROM d),
-         | inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |   CAST(count(*) AS BIGINT) AS inter
-         |  FROM e a JOIN e b ON a.g = b.g AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2)
+         | ${oOverlap("d", "e")}
          | SELECT id_a, id_b,
          |  coalesce(m.m, CAST(0 AS BIGINT)) AS n_match,
          |  round(coalesce(m.m, CAST(0 AS BIGINT)) / 16.0 + 5e-10, 6)
          |   AS est_jaccard,
-         |  round(CAST(inter AS DOUBLE)
-         |    / CAST(na.nsz + nb.nsz - inter AS DOUBLE) + 5e-10, 6)
-         |   AS jaccard
-         | FROM inter
-         | JOIN ns na ON id_a = na.doc_id
-         | JOIN ns nb ON id_b = nb.doc_id
-         | LEFT JOIN m USING (id_a, id_b)
+         |  $oJaccard AS jaccard
+         | FROM ov LEFT JOIN m USING (id_a, id_b)
          | ORDER BY id_a, id_b"""
         .stripMargin.replaceAll("\n", " "),
 
@@ -5227,22 +5190,9 @@ object Text {
          |  UNION ALL SELECT doc_id + 1000000,
          |    array_to_string(($oToks)[2:], ' ')
          |   FROM documents WHERE doc_id < 20),
-         | dd AS (SELECT doc_id, list_distinct(list_transform(
-         |    generate_series(1, greatest(len($oToks2) - 2, 1)),
-         |    i -> ('0x' || substr(md5(array_to_string($oToks2[i:i+2], ' ')),
-         |      1, 15))::BIGINT)) AS sh
-         |  FROM corpus),
+         | dd AS (${oShingleSets("corpus", 3)}),
          | e AS (SELECT doc_id, unnest(sh) AS g FROM dd),
-         | rare AS (SELECT e.doc_id, e.g FROM e JOIN
-         |   (SELECT g FROM e GROUP BY g HAVING count(*) <= 8) r
-         |  ON e.g = r.g),
-         | nb AS (SELECT doc_id, count(*) AS n_b FROM rare
-         |  GROUP BY doc_id),
-         | pairs AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |   count(*) AS n_common, CAST(min(nb.n_b) AS BIGINT) AS n_b
-         |  FROM rare a JOIN rare b ON a.g = b.g AND a.doc_id < b.doc_id
-         |  JOIN nb ON nb.doc_id = b.doc_id
-         |  GROUP BY 1, 2 HAVING min(nb.n_b) >= 5),
+         | ${oRarePairs("e")},
          | taus AS (SELECT CAST(unnest([60, 80, 95]) AS BIGINT) AS tau),
          | drops AS (SELECT tau, count(*) AS n_dropped FROM
          |   (SELECT DISTINCT t.tau, p.id_b FROM pairs p CROSS JOIN taus t
@@ -5271,23 +5221,11 @@ object Text {
          |  GROUP BY fp),
          | d2 AS (SELECT d.doc_id, d.text FROM docs d
          |  JOIN s2 USING (doc_id)),
-         | e AS (SELECT DISTINCT doc_id, g FROM
-         |  (SELECT doc_id, unnest(list_transform(
-         |    generate_series(1, greatest(len($oToks) - 2, 1)),
-         |    i -> ('0x' || substr(md5(array_to_string($oToks[i:i+2], ' ')),
-         |      1, 15))::BIGINT)) AS g FROM d2)),
-         | df AS (SELECT g, count(*) AS df FROM e GROUP BY 1),
-         | re AS (SELECT doc_id, g FROM e JOIN df USING (g)
-         |  WHERE df.df <= 8),
-         | nb AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_b
-         |  FROM re GROUP BY 1),
-         | pairs AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |   CAST(count(*) AS BIGINT) AS n_common
-         |  FROM re a JOIN re b ON a.g = b.g AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2),
+         | ss AS (${oShingleSets("d2", 3)}),
+         | e AS (SELECT doc_id, unnest(sh) AS g FROM ss),
+         | ${oRarePairs("e")},
          | drops AS (SELECT DISTINCT id_b FROM pairs
-         |  JOIN nb ON id_b = nb.doc_id
-         |  WHERE n_b >= 5 AND n_common * 10 >= n_b * 8),
+         |  WHERE n_common * 10 >= n_b * 8),
          | s3 AS (SELECT doc_id FROM d2
          |  WHERE doc_id NOT IN (SELECT id_b FROM drops)),
          | c AS (SELECT (SELECT count(*) FROM docs) AS c0,
@@ -5329,8 +5267,7 @@ object Text {
          |   unnest(range(1, len(t) - 2)) AS i, t
          |  FROM tk WHERE len(t) >= 8),
          | g AS (SELECT doc_id, n_grams, i,
-         |   ('0x' || substr(md5(array_to_string(t[i:i+3], ' ')), 1, 15))
-         |     ::BIGINT AS h
+         |   ${oMd5Bits("array_to_string(t[i:i+3], ' ')", 15)} AS h
          |  FROM base),
          | w1 AS (SELECT doc_id, n_grams, i, h,
          |   min(h) OVER (PARTITION BY doc_id ORDER BY i
@@ -5454,19 +5391,18 @@ object Text {
     // Replays every Laplace draw from the same md5 coin and inverse-CDF
     // branch; epsilon rides along as the release's budget label.
     "q_pipeline_dp_count" ->
-      """WITH cells AS (SELECT event_type, user_id % 4 AS cohort,
-        |   CAST(count(*) AS BIGINT) AS n_true
-        |  FROM events GROUP BY event_type, cohort),
-        | coin AS (SELECT event_type, cohort, n_true,
-        |   CAST(('0x' || substr(md5(event_type || ':' || cohort
-        |     || ':' || 'dp'), 1, 13)) AS BIGINT)
-        |    / 4503599627370496.0 AS u
-        |  FROM cells)
-        | SELECT event_type, cohort, n_true,
-        |  round(n_true + (CASE WHEN u < 0.5 THEN ln(u * 2) / 1.0
-        |    ELSE -ln((1.0 - u) * 2) / 1.0 END) + 5e-10, 4) AS n_noisy,
-        |  CAST(1.0 AS DOUBLE) AS epsilon
-        | FROM coin ORDER BY event_type, cohort"""
+      s"""WITH cells AS (SELECT event_type, user_id % 4 AS cohort,
+         |   CAST(count(*) AS BIGINT) AS n_true
+         |  FROM events GROUP BY event_type, cohort),
+         | coin AS (SELECT event_type, cohort, n_true,
+         |   ${oMd5Bits("event_type || ':' || cohort || ':' || 'dp'", 13)}
+         |    / 4503599627370496.0 AS u
+         |  FROM cells)
+         | SELECT event_type, cohort, n_true,
+         |  round(n_true + (CASE WHEN u < 0.5 THEN ln(u * 2) / 1.0
+         |    ELSE -ln((1.0 - u) * 2) / 1.0 END) + 5e-10, 4) AS n_noisy,
+         |  CAST(1.0 AS DOUBLE) AS epsilon
+         | FROM coin ORDER BY event_type, cohort"""
         .stripMargin.replaceAll("\n", " ")
   )
 }

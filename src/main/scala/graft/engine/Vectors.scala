@@ -470,8 +470,8 @@ object Vectors {
       val qs = micros(s, d)
       val signs = s.range(16).select(col("id").as("j"))
         .crossJoin(s.range(64).select(col("id").as("i")))
-        .withColumn("sgn", when(pmod(conv(substring(md5(concat_ws(":",
-          col("j"), col("i"))), 1, 8), 16, 10).cast("long"), lit(2))
+        .withColumn("sgn", when(pmod(
+          md5Bits(concat_ws(":", col("j"), col("i")), 8), lit(2))
           === 0, 1L).otherwise(-1L))
       val proj = qs
         .select(col("vec_id"), posexplode(col("q")).as(Seq("pos", "x")))
@@ -1357,9 +1357,9 @@ object Vectors {
 
     "q_vec_rand_proj" ->
       s"""WITH ${oExactTop(5)},
-         | sg AS (SELECT j, i, CASE WHEN ('0x' || substr(md5(
-         |    CAST(j AS VARCHAR) || ':' || CAST(i AS VARCHAR)), 1, 8))
-         |    ::BIGINT % 2 = 0 THEN 1 ELSE -1 END AS sgn
+         | sg AS (SELECT j, i,
+         |   CASE WHEN ${oMd5Bits("j || ':' || i", 8)} % 2 = 0 THEN 1 ELSE -1
+         |   END AS sgn
          |  FROM (SELECT unnest(range(16)) AS j),
          |       (SELECT unnest(range(64)) AS i)),
          | xs AS (SELECT vec_id, u.i AS i, qv[u.i + 1] AS x

@@ -37,6 +37,57 @@ class LoudFailureSpec extends SparkSuite {
     assert(!Files.exists(out.resolve("q_build_boom")))
   }
 
+  test("a row selection must name registered rows, or be unset") {
+    val known = Set("q_a", "q_b")
+    def parse(v: Option[String]) = SparkEntry.parseSelection(v, known)
+    assert(parse(None) === Right(None))
+    assert(parse(Some("q_a, q_b,")) === Right(Some(known)))
+    assert(parse(Some("")).isLeft)
+    assert(parse(Some(" , ")).isLeft)
+    assert(parse(Some("q_a,q_zz,q_yy")) ===
+      Left("names unregistered rows: q_yy, q_zz"))
+    assert(SparkEntry.parseSelection(Some("q_agg_group")) ===
+      Right(Some(Set("q_agg_group"))))
+  }
+
+  /** Runs `main` of `cls` in a fresh JVM with one extra environment
+    * variable; returns (exit code, stderr).
+    */
+  private def runMain(cls: String, env: (String, String), args: String*)
+      : (Int, String) = {
+    val dir = Files.createTempDirectory("loud-main")
+    val java = s"${System.getProperty("java.home")}/bin/java"
+    val cmd = Seq(java, "-Xmx256m", "-cp",
+      System.getProperty("java.class.path"), cls) ++ args
+    val pb = new ProcessBuilder(cmd: _*).directory(dir.toFile)
+      .redirectErrorStream(false)
+      .redirectOutput(ProcessBuilder.Redirect.DISCARD)
+    pb.environment().put(env._1, env._2)
+    pb.environment().put("SPARK_GRAFT_BENCH_OUT",
+      dir.resolve("bench_out.json").toString)
+    val p = pb.start()
+    val err = new String(p.getErrorStream.readAllBytes())
+    (p.waitFor(), err)
+  }
+
+  test("Verify and Bench exit 1 on a malformed selection before Spark starts") {
+    val out = Files.createTempDirectory("verify-empty")
+    for ((v, why) <- Seq("" -> "is set but names no row",
+        "q_agg_group,q_nope" -> "names unregistered rows: q_nope")) {
+      val (code, err) = runMain("graft.Verify",
+        "SPARK_GRAFT_VERIFY_ONLY" -> v, sf, out.toString)
+      assert(code === 1)
+      assert(err.contains(s"SPARK_GRAFT_VERIFY_ONLY $why"))
+      assert(!err.contains("SparkContext"))
+      assert(!Files.exists(out.resolve("oracle_sql.json")))
+    }
+    val (code, err) = runMain("graft.Bench",
+      "SPARK_GRAFT_BENCH_ONLY" -> "q_nope")
+    assert(code === 1)
+    assert(err.contains("SPARK_GRAFT_BENCH_ONLY names unregistered rows"))
+    assert(!err.contains("SparkContext"))
+  }
+
   test("PlanDump names unknown and throwing rows and dumps the others") {
     val out = Files.createTempDirectory("plandump-spec").toFile
     val failed = PlanDump.dump(spark,

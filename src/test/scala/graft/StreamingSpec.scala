@@ -267,7 +267,7 @@ class StreamingSpec extends SparkSuite {
     val msL = MemoryStream[Ev]
     val msR = MemoryStream[Ev]
     val tbl = freshTable()
-    val q = Streaming.streamStreamJoin(msL.toDF(), msR.toDF())
+    val q = Streaming.streamStreamJoin(msL.toDF(), msR.toDF(), "inner")
       .writeStream.format("memory").queryName(tbl)
       .outputMode("append").start()
     try {
@@ -290,7 +290,7 @@ class StreamingSpec extends SparkSuite {
     val msL = MemoryStream[Ev]
     val msR = MemoryStream[Ev]
     val tbl = freshTable()
-    val q = Streaming.streamStreamJoinOuter(msL.toDF(), msR.toDF())
+    val q = Streaming.streamStreamJoin(msL.toDF(), msR.toDF(), "leftOuter")
       .writeStream.format("memory").queryName(tbl)
       .outputMode("append").start()
     try {

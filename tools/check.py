@@ -131,10 +131,10 @@ def audit_schemas(exp_types, got_types):
                         f"spark {got_types[c]}")
     return None
 
-def main():
-    sf_dir, out_dir = sys.argv[1], sys.argv[2]
-    con = duckdb.connect()
+def connect(sf_dir):
+    """A DuckDB connection with one view per fixture table in sf_dir."""
     import os
+    con = duckdb.connect()
     for t in TABLES:
         # driver fixtures are single parquet FILES; ScaleFixture output
         # (Spark writes) are DIRECTORIES of part files — glob those
@@ -142,6 +142,11 @@ def main():
         if os.path.isdir(path):
             path = f"{path}/*.parquet"
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
+    return con
+
+def main():
+    sf_dir, out_dir = sys.argv[1], sys.argv[2]
+    con = connect(sf_dir)
     with open(f"{out_dir}/oracle_sql.json") as f:
         oracle = json.load(f)
     fails, ok = [], 0
