@@ -602,41 +602,6 @@ object Bench {
     // wherever the repo is checked out; SPARK_GRAFT_BENCH_OUT overrides.
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       new java.io.File("bench_out.json").getAbsolutePath)
-    // Self-adjudicating regression flag (the r9 control-run lesson:
-    // medians swing up to ±1.8x on an identical binary, so min-of-reps
-    // is the only floor worth comparing round over round): read the
-    // PRIOR committed bench_out.json before overwriting it and flag
-    // every query whose fresh min exceeds 1.5x its previous min. A
-    // flagged query on an unchanged plan means a contention window ate
-    // ALL reps (it self-clears next run); on a changed plan it is a
-    // real regression to chase. Regex pull of "queries_min" keeps the
-    // library dependency-free. The prior file must have been measured
-    // at the SAME sf dir — a dev smoke run at sf0.001 left in place
-    // would otherwise flag every fact-scale query ~5x (observed r10);
-    // on sf mismatch the comparison is skipped entirely.
-    val prevMins: Map[String, Double] =
-      try {
-        val src = scala.io.Source.fromFile(outPath)
-        val txt = try src.mkString finally src.close()
-        val prevSf = """"sf"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(txt)
-          .map(_.group(1))
-        if (!prevSf.contains(sfDir))
-          Map.empty[String, Double]
-        else
-          // whitespace-tolerant so a hand- or tool-rewritten prior file
-          // (pretty-printed JSON) still parses
-          """"queries_min"\s*:\s*\{""".r.findFirstMatchIn(txt) match {
-            case None => Map.empty[String, Double]
-            case Some(m) =>
-              val body = txt.substring(m.end, txt.indexOf('}', m.end))
-              """"([^"]+)"\s*:\s*([-+0-9.eE]+)""".r.findAllMatchIn(body)
-                .map(g => g.group(1) -> g.group(2).toDouble).toMap
-          }
-      } catch { case _: Throwable => Map.empty }
-    val regressed = rows.flatMap { r =>
-      prevMins.get(r.name).filter(p => p > 0 && r.min > 1.5 * p).map(p =>
-        s""""${r.name}":{"prev_min":${f3(p)},"min":${f3(r.min)},"ratio":${f3(r.min / p)}}""")
-    }.mkString("{", ",", "}")
     // Per-slot pinned-checkpoint storage ledger (bytes, mem+disk): a
     // future memo addition that pins a fact-scale frame shows up here at
     // the bench instead of at 100 TB. CheckpointBudgetSpec asserts the
@@ -649,7 +614,7 @@ object Bench {
     val calibAfter = calibSec()
     val calibParAfter = calibParSec()
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","total_min":$totalMin,"queries":$qs,"queries_min":$mins,"telemetry":$telem,"regressed_vs_prev":$regressed,"storage_by_slot":$slotLedger,"calib_sec_before":${f3(calibBefore)},"calib_sec_after":${f3(calibAfter)},"calib_par_sec_before":${f3(calibParBefore)},"calib_par_sec_after":${f3(calibParAfter)},"failed":$failedJs,"reps":$reps,"rep_order":"interleaved_visits_$reps","sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","total_min":$totalMin,"queries":$qs,"queries_min":$mins,"telemetry":$telem,"storage_by_slot":$slotLedger,"calib_sec_before":${f3(calibBefore)},"calib_sec_after":${f3(calibAfter)},"calib_par_sec_before":${f3(calibParBefore)},"calib_par_sec_after":${f3(calibParAfter)},"failed":$failedJs,"reps":$reps,"rep_order":"interleaved_visits_$reps","sf":"$sfDir"}"""
     try {
       val w = new java.io.PrintWriter(outPath)
       try w.println(full) finally w.close()

@@ -2,8 +2,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Dev aid: dump `.explain("formatted")` for a set of registered rows
-  * into one file per row, all from a single session — the batch form of
-  * [[Explain]]. Usage:
+  * into one file per row, all from a single session. Usage:
   *   runMain graft.PlanDump <outDir> <suffix> [q1,q2,...]
   * With no query list, dumps every registered row. Each file is
   * `<outDir>/<query>_<suffix>.txt`. The dump is the pre-execution plan

@@ -42,8 +42,7 @@ object Aggregates {
     Checkpoints.memo("cpcents:" + d, s) {
       Tables.events(s, d)
         .filter(col("event_type").isin("click", "purchase"))
-        .select(col("event_type"),
-          round(col("value") * 100).cast("long").as("c"))
+        .select(col("event_type"), cents(col("value")).as("c"))
         .groupBy(col("c"))
         .agg(sum(when(col("event_type") === "click", 1L).otherwise(0L))
           .as("a1"),
@@ -51,6 +50,23 @@ object Aggregates {
             .as("a2"))
         .localCheckpoint()
     }
+
+  /** The (key, cents) count cells of the rank tests: the events `ev`
+    * counted per `by` keys and per [[cents]] value `c`, as `n`. Twin:
+    * the `cells` CTE of [[oCentsCells]].
+    */
+  private[graft] def centsCells(ev: DataFrame, by: Column*): DataFrame =
+    ev.select(by :+ cents(col("value")).as("c"): _*)
+      .groupBy(by :+ col("c"): _*).agg(count(lit(1)).as("n"))
+
+  /** The (cents, hour) count cells of the rank correlations: the events
+    * `ev` counted per [[cents]] value `x` and hour of day `y`, as `nc`.
+    * Twin: [[oCentsHourCells]].
+    */
+  private def centsHourCells(ev: DataFrame): DataFrame =
+    ev.select(cents(col("value")).as("x"),
+        hour(col("ts")).cast("long").as("y"))
+      .groupBy(col("x"), col("y")).agg(count(lit(1)).as("nc"))
 
   /** The Kruskal–Wallis H statistic from the per-group rank sums `rj`
     * `(nj, rj)` and the per-value tie counts `perC` `(kc)`: one row
@@ -468,7 +484,7 @@ object Aggregates {
     // (price-in-cents * 1e7 + orderkey) so ties are impossible and both
     // engines pick the same row deterministically.
     "q_agg_median" -> { (s, d) =>
-      val byVal = round(col("o_totalprice") * 100).cast("long") *
+      val byVal = cents(col("o_totalprice")) *
         lit(10000000L) + col("o_orderkey")
       Tables.orders(s, d)
         .groupBy(col("o_orderpriority"))
@@ -492,7 +508,7 @@ object Aggregates {
     "q_agg_jackknife" -> { (s, d) =>
       val dec = "decimal(18,9)"
       val ev = Tables.events(s, d)
-        .withColumn("c", round(col("value") * 100).cast("long"))
+        .withColumn("c", cents(col("value")))
         .withColumn("b", pmod(md5Bits(col("user_id").cast("string"), 8),
           lit(8)))
       val g = ev.groupBy(col("b"))
@@ -564,11 +580,7 @@ object Aggregates {
     "q_agg_conover" -> { (s, d) =>
       val W = org.apache.spark.sql.expressions.Window
       val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
-      val ev = Tables.events(s, d)
-        .select(col("event_type"),
-          round(col("value") * 100).cast("long").as("c"))
-      val cells = ev.groupBy(col("event_type"), col("c"))
-        .agg(count(lit(1)).as("n"))
+      val cells = centsCells(Tables.events(s, d), col("event_type"))
       val perC = cells.groupBy(col("c")).agg(sum(col("n")).as("kc"))
       val w = W.orderBy(col("c"))
         .rowsBetween(W.unboundedPreceding, -1)
@@ -621,7 +633,7 @@ object Aggregates {
     // then a tiny pair cross join.
     "q_agg_ttest" -> { (s, d) =>
       val st = Tables.events(s, d)
-        .withColumn("c", round(col("value") * 100).cast("long"))
+        .withColumn("c", cents(col("value")))
         .transform(centsMoments(col("event_type")))
       def mean(sc: Column, n: Column): Column =
         sc.cast("double") / n / 100.0
@@ -664,7 +676,7 @@ object Aggregates {
       val ev = Tables.events(s, d)
         .filter(col("event_type").isin("click", "purchase"))
         .select(col("event_id"), col("event_type"),
-          round(col("value") * 100).cast("long").as("c"))
+          cents(col("value")).as("c"))
       val obs = ev.groupBy()
         .agg(count(lit(1)).as("n"),
           sum(col("c")).as("sc"),
@@ -905,12 +917,8 @@ object Aggregates {
     // pinned (type, cents) frame.
     "q_agg_kruskal_wallis" -> { (s, d) =>
       val W = org.apache.spark.sql.expressions.Window
-      val cells = Checkpoints.pin("kw:" + d, Tables.events(s, d)
-        .select(col("event_type"),
-          round(col("value") * 100).cast("long").as("c"))
-        .groupBy(col("event_type"), col("c"))
-        .agg(count(lit(1)).as("n"))
-        .localCheckpoint())
+      val cells = Checkpoints.pin("kw:" + d,
+        centsCells(Tables.events(s, d), col("event_type")).localCheckpoint())
       val perC = cells.groupBy(col("c")).agg(sum(col("n")).as("kc"))
       val w = W.orderBy(col("c"))
         .rowsBetween(W.unboundedPreceding, -1)
@@ -990,10 +998,9 @@ object Aggregates {
     "q_agg_median_ci" -> { (s, d) =>
       val W = org.apache.spark.sql.expressions.Window
       val ev = Tables.events(s, d)
-        .select(col("event_type"),
-          round(col("value") * 100).cast("long").as("c"))
-      val cells = ev.groupBy(col("event_type"), col("c"))
-        .agg(count(lit(1)).as("k"))
+        .select(col("event_type"), cents(col("value")).as("c"))
+      val cells = centsCells(Tables.events(s, d), col("event_type"))
+        .withColumnRenamed("n", "k")
       val w = W.partitionBy(col("event_type")).orderBy(col("c"))
         .rowsBetween(W.unboundedPreceding, W.currentRow)
       val cum = cells.withColumn("cum", sum(col("k")).over(w))
@@ -1032,7 +1039,7 @@ object Aggregates {
     "q_agg_grubbs" -> { (s, d) =>
       val ev = Tables.events(s, d)
         .select(col("event_type"), col("event_id"),
-          round(col("value") * 100).cast("long").as("c"))
+          cents(col("value")).as("c"))
       val st = ev.groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), sum(col("c")).as("sx"),
           sum(col("c") * col("c")).as("qx"))
@@ -1071,8 +1078,7 @@ object Aggregates {
     // ROUNDED F.
     "q_agg_levene" -> { (s, d) =>
       val cust = Tables.customer(s, d)
-        .select(col("c_mktsegment").as("seg"),
-          round(col("c_acctbal") * 100).cast("long").as("c"))
+        .select(col("c_mktsegment").as("seg"), cents(col("c_acctbal")).as("c"))
       val med = cust.groupBy(col("seg"))
         .agg(round(median(col("c")) * 2).cast("long").as("med2"))
       val z = cust.join(broadcast(med), "seg")
@@ -1199,8 +1205,7 @@ object Aggregates {
     // χ²crit(4,.05) = 9.488 decides on the rounded statistic.
     "q_agg_bartlett" -> { (s, d) =>
       val cust = Tables.customer(s, d)
-        .select(col("c_mktsegment").as("seg"),
-          round(col("c_acctbal") * 100).cast("long").as("c"))
+        .select(col("c_mktsegment").as("seg"), cents(col("c_acctbal")).as("c"))
       val st = cust.transform(centsMoments(col("seg")))
       val nD = col("n").cast("double")
       val s2 = (nD * col("qc").cast("double")
@@ -1237,7 +1242,7 @@ object Aggregates {
     // sqrt(MSW/2·(1/na+1/nb)); significance decided on the ROUNDED q.
     "q_agg_tukey_hsd" -> { (s, d) =>
       val st = Tables.events(s, d)
-        .withColumn("c", round(col("value") * 100).cast("long"))
+        .withColumn("c", cents(col("value")))
         .transform(centsMoments(col("event_type")))
       val termW = eround((col("qc").cast("double")
         - col("sc").cast("double") * col("sc").cast("double") / col("n"))
@@ -1276,7 +1281,7 @@ object Aggregates {
     "q_agg_cohens_d" -> { (s, d) =>
       val st = Tables.events(s, d)
         .filter(col("event_type").isin("click", "purchase"))
-        .withColumn("c", round(col("value") * 100).cast("long"))
+        .withColumn("c", cents(col("value")))
         .transform(centsMoments(col("event_type")))
       val a = st.filter(col("event_type") === "click")
         .select(col("n").as("n_click"), col("sc").as("sc_a"),
@@ -1317,8 +1322,8 @@ object Aggregates {
     "q_agg_lognormal_fit" -> { (s, d) =>
       val cells = Tables.orders(s, d)
         .select(col("o_orderstatus"),
-          eround(log(round(col("o_totalprice") * 100).cast("long")
-            / 100.0), 6).cast("decimal(18,6)").as("x"))
+          eround(log(cents(col("o_totalprice")) / 100.0), 6)
+            .cast("decimal(18,6)").as("x"))
       val m = cells.groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
           sum(col("x") * col("x")).as("sxx"))
@@ -1473,11 +1478,8 @@ object Aggregates {
       val W = org.apache.spark.sql.expressions.Window
       // the cell frame backs three consumers (two rank maps + the join
       // source) — pin one checkpoint so the corpus scans exactly once
-      val cell = Checkpoints.pin("spearman:" + d, Tables.events(s, d)
-        .select(round(col("value") * 100).cast("long").as("x"),
-          hour(col("ts")).cast("long").as("y"))
-        .groupBy(col("x"), col("y")).agg(count(lit(1)).as("nc"))
-        .localCheckpoint())
+      val cell = Checkpoints.pin("spearman:" + d,
+        centsHourCells(Tables.events(s, d)).localCheckpoint())
       def rankMap(axis: String, out: String): DataFrame = {
         val w = W.orderBy(col(axis))
           .rowsBetween(W.unboundedPreceding, W.currentRow)
@@ -1527,11 +1529,8 @@ object Aggregates {
     // scale argument).
     "q_agg_kendall_tau" -> { (s, d) =>
       val W = org.apache.spark.sql.expressions.Window
-      val cell = Checkpoints.pin("kendall:" + d, Tables.events(s, d)
-        .select(round(col("value") * 100).cast("long").as("x"),
-          hour(col("ts")).cast("long").as("y"))
-        .groupBy(col("x"), col("y")).agg(count(lit(1)).as("nc"))
-        .localCheckpoint())
+      val cell = Checkpoints.pin("kendall:" + d,
+        centsHourCells(Tables.events(s, d)).localCheckpoint())
       val dense = cell.select(col("x")).distinct()
         .select(col("x"), explode(sequence(lit(0L), lit(23L))).as("y"))
         .join(cell, Seq("x", "y"), "left")
@@ -1602,7 +1601,7 @@ object Aggregates {
     // frame; the corpus is never shuffled.
     "q_agg_anova" -> { (s, d) =>
       anovaF(Tables.events(s, d)
-        .withColumn("c", round(col("value") * 100).cast("long"))
+        .withColumn("c", cents(col("value")))
         .transform(centsMoments(col("event_type"))))
     },
 
@@ -1675,8 +1674,8 @@ object Aggregates {
     // constant-size arithmetic after.
     "q_agg_benford" -> { (s, d) =>
       val obs = Checkpoints.pin("benford:" + d, Tables.orders(s, d)
-        .select(substring(round(col("o_totalprice") * 100).cast("long")
-          .cast("string"), 1, 1).cast("long").as("digit"))
+        .select(substring(cents(col("o_totalprice")).cast("string"), 1, 1)
+          .cast("long").as("digit"))
         .groupBy(col("digit")).agg(count(lit(1)).as("n"))
         .localCheckpoint())
       val tot = obs.agg(sum(col("n")).as("nn"))
@@ -1711,21 +1710,14 @@ object Aggregates {
     // sort-free AUC at any scale.
     "q_agg_auc" -> { (s, d) =>
       val W = org.apache.spark.sql.expressions.Window
-      val pv = Checkpoints.pin("auc:" + d, Tables.events(s, d)
-        .filter(col("event_type").isin("click", "purchase"))
-        .select(col("event_type"),
-          round(col("value") * 100).cast("long").as("c"))
-        .groupBy(col("c"))
-        .agg(sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
-          .as("ap"),
-          sum(when(col("event_type") === "click", 1L).otherwise(0L))
-            .as("an")).localCheckpoint())
-      val tot = pv.agg(sum(col("ap")).as("np"), sum(col("an")).as("nn"))
+      // purchases are the positives (a2), clicks the negatives (a1)
+      val pv = cpCentsFrame(s, d)
+      val tot = pv.agg(sum(col("a2")).as("np"), sum(col("a1")).as("nn"))
       val w = W.orderBy(col("c"))
         .rowsBetween(W.unboundedPreceding, W.currentRow)
-      val t = col("ap") + col("an")
+      val t = col("a2") + col("a1")
       // rank-sum lift on DECIMAL(38,0) and the n-products in double:
-      // the int64 contrib (~ap·2N) and np·nn wrap at scale where DuckDB
+      // the int64 contrib (~a2·2N) and np·nn wrap at scale where DuckDB
       // errors (r14 conover discipline); u_num stays an exact decimal
       val aucDec38 = org.apache.spark.sql.types.DecimalType(38, 0)
       val npD = col("np").cast("double")
@@ -1733,7 +1725,7 @@ object Aggregates {
       val uNum = col("two_rp") -
         col("np").cast(aucDec38) * (col("np") + 1)
       pv.withColumn("cumAll", sum(t).over(w))
-        .select((col("ap").cast(aucDec38)
+        .select((col("a2").cast(aucDec38)
           * (lit(2) * col("cumAll") - t + 1)).as("contrib"))
         .crossJoin(broadcast(tot))
         .groupBy(col("np"), col("nn"))
@@ -1825,10 +1817,8 @@ object Aggregates {
     // corpus scan, one bounded exchange, zero sort of raw rows.
     "q_agg_percentile_grid" -> { (s, d) =>
       val W = org.apache.spark.sql.expressions.Window
-      val pv = Checkpoints.pin("pctgrid:" + d, Tables.events(s, d)
-        .select(round(col("value") * 100).cast("long").as("c"))
-        .groupBy(col("c")).agg(count(lit(1)).as("cnt"))
-        .localCheckpoint())
+      val pv = Checkpoints.pin("pctgrid:" + d, centsCells(Tables.events(s, d))
+        .withColumnRenamed("n", "cnt").localCheckpoint())
       val tot = pv.agg(sum(col("cnt")).as("n"))
       val w = W.orderBy(col("c"))
         .rowsBetween(W.unboundedPreceding, W.currentRow)
@@ -1860,7 +1850,7 @@ object Aggregates {
           .select(col("c_custkey").as("o_custkey"),
             col("c_mktsegment").as("segment"))), "o_custkey")
         .groupBy(col("segment"), col("o_custkey"))
-        .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("ci"))
+        .agg(sum(cents(col("o_totalprice"))).as("ci"))
       perCust.groupBy(col("segment"))
         .agg(count(lit(1)).as("n_cust"),
           sum(col("ci").cast(dec38)).as("t"),
@@ -1895,8 +1885,7 @@ object Aggregates {
         0.9994058151824183, 0.999916758850712, 0.9999897508033253)
       val pc = Tables.events(s, d)
         .filter(col("event_type") === "purchase")
-        .select(col("event_id"),
-          round(col("value") * 100).cast("long").as("c"))
+        .select(col("event_id"), cents(col("value")).as("c"))
       val u = md5Bits(concat_ws(":", col("event_id"), col("b")), 13)
         .cast("double") / lit(4503599627370496.0) // 2^52
       val wgt = cdf.zipWithIndex.foldRight(lit(8L): Column) {
@@ -1950,7 +1939,7 @@ object Aggregates {
       val li = Tables.lineitem(s, d)
         .select(col("l_returnflag"), col("l_orderkey"),
           col("l_linenumber"),
-          round(col("l_extendedprice") * 100).cast("long").as("c"),
+          cents(col("l_extendedprice")).as("c"),
           col("l_quantity").cast("long").as("q"))
         .withColumn("b", expr("c DIV 8192"))
       val lvl1 = li.groupBy(col("l_returnflag"), col("b"))
@@ -2009,7 +1998,7 @@ object Aggregates {
       val W = org.apache.spark.sql.expressions.Window
       val li = Tables.orders(s, d)
         .select(col("o_orderpriority"),
-          round(col("o_totalprice") * 100).cast("long").as("c"),
+          cents(col("o_totalprice")).as("c"),
           col("o_orderkey"))
         .withColumn("b", expr("c DIV 8192"))
       val lvl1 = li.groupBy(col("o_orderpriority"), col("b"))
@@ -2074,9 +2063,9 @@ object Aggregates {
         "dc" -> "discount", "tx" -> "tax")
       val v = Tables.lineitem(s, d).select(
         col("l_quantity").cast("long").as("q"),
-        round(col("l_extendedprice") * 100).cast("long").as("p"),
-        round(col("l_discount") * 100).cast("long").as("dc"),
-        round(col("l_tax") * 100).cast("long").as("tx"))
+        cents(col("l_extendedprice")).as("p"),
+        cents(col("l_discount")).as("dc"),
+        cents(col("l_tax")).as("tx"))
       val sums = vars.map(x => sum(col(x).cast(dec38)).as(s"s_$x")) ++
         (for (i <- vars.indices; j <- i until vars.length) yield {
           val (x, y) = (vars(i), vars(j))
@@ -2224,8 +2213,7 @@ object Aggregates {
     // TakeOrderedAndProject — no full sort at any scale.
     "q_agg_hill_tail" -> { (s, d) =>
       val top = Tables.orders(s, d)
-        .select(col("o_orderkey"),
-          round(col("o_totalprice") * 100).cast("long").as("c"))
+        .select(col("o_orderkey"), cents(col("o_totalprice")).as("c"))
         .orderBy(desc("c"), asc("o_orderkey")).limit(100)
       val xk = top.agg(min(col("c")).as("ck"))
       top.crossJoin(broadcast(xk))
@@ -2248,8 +2236,7 @@ object Aggregates {
     // (broadcast back), then one filtered count aggregate.
     "q_profile_tukey" -> { (s, d) =>
       val ev = Tables.events(s, d)
-        .select(col("event_type"),
-          round(col("value") * 100).cast("long").as("c"))
+        .select(col("event_type"), cents(col("value")).as("c"))
       val pct = ev.groupBy(col("event_type"))
         .agg(eround(percentile(col("c"), lit(0.25)), 4).as("p25"),
           eround(percentile(col("c"), lit(0.75)), 4).as("p75"))
@@ -2496,7 +2483,7 @@ object Aggregates {
     "q_agg_theil" -> { (s, d) =>
       val rev = Tables.orders(s, d)
         .groupBy(col("o_custkey"))
-        .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("c"))
+        .agg(sum(cents(col("o_totalprice"))).as("c"))
       val tot = rev.agg(count(lit(1)).as("n"), sum(col("c")).as("sx"))
       val mu = col("sx").cast("double") / col("n")
       val ratio = col("c") / mu
@@ -2523,7 +2510,7 @@ object Aggregates {
       val W = org.apache.spark.sql.expressions.Window
       val rev = Tables.orders(s, d)
         .groupBy(col("o_custkey"))
-        .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("c"))
+        .agg(sum(cents(col("o_totalprice"))).as("c"))
         .withColumn("decile",
           ntile(10).over(W.orderBy(asc("c"), asc("o_custkey"))))
       val dec = rev.groupBy(col("decile"))
@@ -2545,7 +2532,7 @@ object Aggregates {
       val W = org.apache.spark.sql.expressions.Window
       val rev = Tables.orders(s, d)
         .groupBy(col("o_custkey"))
-        .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("c"))
+        .agg(sum(cents(col("o_totalprice"))).as("c"))
       rev
         .withColumn("i", row_number().over(
           W.orderBy(asc("c"), asc("o_custkey"))).cast(dec))
@@ -2643,12 +2630,34 @@ object Aggregates {
     * value c. One line, to interpolate after a `WITH`.
     */
   private val oCentsCells: String =
-    """ev AS (SELECT event_type,
-      |   CAST(round(value * 100) AS BIGINT) AS c FROM events),
+    s"""ev AS (SELECT event_type,
+      |   ${oCents("value")} AS c FROM events),
       | cells AS (SELECT event_type, c, CAST(count(*) AS BIGINT) AS n
       |  FROM ev GROUP BY event_type, c),
       | perc AS (SELECT c, CAST(sum(n) AS BIGINT) AS kc
       |  FROM cells GROUP BY c)""".stripMargin.replaceAll("\n", " ")
+
+  /** The DuckDB twin of [[cpCentsFrame]]: the CTEs `ev` and `pv`
+    * `(c, a1, a2)`, the clicks and purchases at cents value c. One line,
+    * to interpolate after a `WITH`.
+    */
+  private val oCpCents: String =
+    s"""ev AS (SELECT event_type,
+      |   ${oCents("value")} AS c
+      |  FROM events WHERE event_type IN ('click', 'purchase')),
+      | pv AS (SELECT c,
+      |   CAST(count(*) FILTER (event_type = 'click') AS BIGINT) AS a1,
+      |   CAST(count(*) FILTER (event_type = 'purchase') AS BIGINT) AS a2
+      |  FROM ev GROUP BY c)""".stripMargin.replaceAll("\n", " ")
+
+  /** The DuckDB twin of [[centsHourCells]]: the CTE `cell` `(x, y, nc)`.
+    * One line, to interpolate after a `WITH`.
+    */
+  private val oCentsHourCells: String =
+    s"""cell AS (SELECT ${oCents("value")} AS x,
+      |   CAST(hour(CAST(ts AS TIMESTAMP)) AS BIGINT) AS y,
+      |   CAST(count(*) AS BIGINT) AS nc
+      |  FROM events GROUP BY x, y)""".stripMargin.replaceAll("\n", " ")
 
   /** The DuckDB twin of [[kwStat]] over the CTEs `perc` and `rj`
     * `(nj, rj)`: `ties`, `h` and `stat` `(nn, tc, k, h_adj)`. One line,
@@ -2672,8 +2681,6 @@ object Aggregates {
       |    + 5e-10, 6) AS h_adj
       |  FROM h)""".stripMargin.replaceAll("\n", " ")
 
-  /** An event's value in integer cents, the DuckDB spelling. */
-  private val oCents = "CAST(round(value * 100) AS BIGINT)"
   private val oClickPurchase =
     "events WHERE event_type IN ('click', 'purchase')"
 
@@ -2734,8 +2741,8 @@ object Aggregates {
     // Identical ratio tree c/(sx/n); cells ε-rounded to DECIMAL(18,6)
     // (6dp ulp margin) before the exact sums.
     "q_agg_theil" ->
-      """WITH rev AS (SELECT o_custkey,
-        |   CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+      s"""WITH rev AS (SELECT o_custkey,
+        |   CAST(sum(${oCents("o_totalprice")}) AS BIGINT)
         |     AS c
         |  FROM orders GROUP BY o_custkey),
         | tot AS (SELECT CAST(count(*) AS BIGINT) AS n,
@@ -2758,8 +2765,8 @@ object Aggregates {
     // Same deterministic (cents, custkey) ranking as the Gini oracle;
     // ntile buckets agree (both engines front-load the remainder rows).
     "q_shape_lorenz" ->
-      """WITH rev AS (SELECT o_custkey,
-        |   CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+      s"""WITH rev AS (SELECT o_custkey,
+        |   CAST(sum(${oCents("o_totalprice")}) AS BIGINT)
         |     AS c
         |  FROM orders GROUP BY o_custkey),
         | rk AS (SELECT c,
@@ -2776,8 +2783,8 @@ object Aggregates {
         .stripMargin.replaceAll("\n", " "),
 
     "q_agg_gini" ->
-      """WITH rev AS (SELECT o_custkey,
-        |   CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+      s"""WITH rev AS (SELECT o_custkey,
+        |   CAST(sum(${oCents("o_totalprice")}) AS BIGINT)
         |    AS c
         |  FROM orders GROUP BY o_custkey),
         | r AS (SELECT c, CAST(row_number() OVER (ORDER BY c, o_custkey)
@@ -2918,11 +2925,11 @@ object Aggregates {
         .stripMargin.replaceAll("\n", " "),
 
     "q_agg_median" ->
-      """SELECT o_orderpriority,
+      s"""SELECT o_orderpriority,
         | round(median(o_totalprice) + 5e-10, 4) AS med_price,
-        | max_by(o_orderkey, CAST(round(o_totalprice * 100) AS BIGINT)
+        | max_by(o_orderkey, ${oCents("o_totalprice")}
         |   * 10000000 + o_orderkey) AS top_order,
-        | min_by(o_orderkey, CAST(round(o_totalprice * 100) AS BIGINT)
+        | min_by(o_orderkey, ${oCents("o_totalprice")}
         |   * 10000000 + o_orderkey) AS bottom_order
         | FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority"""
         .stripMargin.replaceAll("\n", " "),
@@ -2930,7 +2937,7 @@ object Aggregates {
     // Mirrors the Spark expression tree 1:1; each leave-one-out mean is
     // ε-rounded to DECIMAL(18,9) before the exact order-free sums.
     "q_agg_jackknife" ->
-      s"""WITH e AS (SELECT CAST(round(value * 100) AS BIGINT) AS c,
+      s"""WITH e AS (SELECT ${oCents("value")} AS c,
          |   ${oMd5Bits("CAST(user_id AS VARCHAR)", 8)} % 8 AS b
          |  FROM events),
          | g AS (SELECT b, count(*) AS ng, CAST(sum(c) AS BIGINT) AS sg
@@ -3031,7 +3038,7 @@ object Aggregates {
     // exact integer moments through the identical op sequence (division
     // order matters and is copied exactly).
     "q_agg_ttest" ->
-      s"""WITH ${oCentsMoments("event_type", oCents, "events")}
+      s"""WITH ${oCentsMoments("event_type", oCents("value"), "events")}
         | SELECT a.event_type AS type_a, b.event_type AS type_b,
         |  a.n AS n_a, b.n AS n_b,
         |  round(CAST(a.sc AS DOUBLE) / a.n / 100.0 + 5e-10, 6) AS mean_a,
@@ -3075,7 +3082,7 @@ object Aggregates {
     // at identical 6dp on both engines.
     "q_agg_permutation_test" ->
       s"""WITH ev AS (SELECT event_id, event_type,
-         |   CAST(round(value * 100) AS BIGINT) AS c
+         |   ${oCents("value")} AS c
          |  FROM events WHERE event_type IN ('click', 'purchase')),
          | obs AS (SELECT CAST(count(*) AS BIGINT) AS n,
          |   CAST(sum(c) AS BIGINT) AS sc,
@@ -3168,8 +3175,8 @@ object Aggregates {
     // Same bounded cents-domain frame, cumulative-window doubled
     // median, tie-dropped 2x2 counts, double-cast chi-square chain.
     "q_agg_mood_median" ->
-      """WITH ev AS (SELECT event_type,
-        |   CAST(round(value * 100) AS BIGINT) AS c FROM events
+      s"""WITH ev AS (SELECT event_type,
+        |   ${oCents("value")} AS c FROM events
         |  WHERE event_type IN ('click', 'purchase')),
         | pv AS (SELECT c,
         |   CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
@@ -3405,8 +3412,8 @@ object Aggregates {
     // Same normal-approximation ranks (identical sqrt/floor/ceil), the
     // same bounded cents-domain cumulative lookup, exact median.
     "q_agg_median_ci" ->
-      """WITH ev AS (SELECT event_type,
-        |   CAST(round(value * 100) AS BIGINT) AS c FROM events),
+      s"""WITH ev AS (SELECT event_type,
+        |   ${oCents("value")} AS c FROM events),
         | cells AS (SELECT event_type, c, CAST(count(*) AS BIGINT) AS k
         |  FROM ev GROUP BY event_type, c),
         | cum AS (SELECT event_type, c,
@@ -3439,8 +3446,8 @@ object Aggregates {
     // Same integer-lifted deviations |n·c − Σc|, same composite-key
     // argmax tiebreak, one sqrt.
     "q_agg_grubbs" ->
-      """WITH ev AS (SELECT event_type, event_id,
-        |   CAST(round(value * 100) AS BIGINT) AS c FROM events),
+      s"""WITH ev AS (SELECT event_type, event_id,
+        |   ${oCents("value")} AS c FROM events),
         | st AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
         |   CAST(sum(c) AS BIGINT) AS sx,
         |   CAST(sum(c * c) AS BIGINT) AS qx
@@ -3467,7 +3474,7 @@ object Aggregates {
     // cells, decimal term sums, identical correction-factor chain.
     "q_agg_bartlett" ->
       s"""WITH cust AS (SELECT c_mktsegment AS seg,
-        |   CAST(round(c_acctbal * 100) AS BIGINT) AS c FROM customer),
+        |   ${oCents("c_acctbal")} AS c FROM customer),
         | ${oCentsMoments("seg", "c", "cust")},
         | s2t AS (SELECT n,
         |   (CAST(n AS DOUBLE) * CAST(qc AS DOUBLE)
@@ -3501,7 +3508,7 @@ object Aggregates {
     // the ANOVA exact-moment oracle verbatim; F vs the 2.372 literal.
     "q_agg_levene" ->
       s"""WITH cust AS (SELECT c_mktsegment AS seg,
-        |   CAST(round(c_acctbal * 100) AS BIGINT) AS c FROM customer),
+        |   ${oCents("c_acctbal")} AS c FROM customer),
         | med AS (SELECT seg, CAST(round(median(c) * 2) AS BIGINT)
         |    AS med2 FROM cust GROUP BY seg),
         | z AS (SELECT cust.seg, abs(cust.c * 2 - med.med2) AS z
@@ -3516,7 +3523,7 @@ object Aggregates {
     // Same ANOVA integer moments; q vs the 3.858 literal on the
     // rounded statistic.
     "q_agg_tukey_hsd" ->
-      s"""WITH ${oCentsMoments("event_type", oCents, "events")},
+      s"""WITH ${oCentsMoments("event_type", oCents("value"), "events")},
         | tw AS (SELECT n,
         |   CAST(round((CAST(qc AS DOUBLE) - CAST(sc AS DOUBLE)
         |      * CAST(sc AS DOUBLE) / n) / 10000.0 + 5e-10, 6)
@@ -3542,7 +3549,7 @@ object Aggregates {
     // Same exact integer moments as the ttest oracle; the single
     // pooled-SD sqrt is the only libm, mirrored op-for-op.
     "q_agg_cohens_d" ->
-      s"""WITH ${oCentsMoments("event_type", oCents, oClickPurchase)},
+      s"""WITH ${oCentsMoments("event_type", oCents("value"), oClickPurchase)},
         | a AS (SELECT n AS n_click, sc AS sc_a, qc AS qc_a FROM st
         |  WHERE event_type = 'click'),
         | b AS (SELECT n AS n_purchase, sc AS sc_b, qc AS qc_b FROM st
@@ -3571,8 +3578,8 @@ object Aggregates {
     // Same 6dp ln cells; exact decimal Σx/Σx²; identical IEEE μ/σ/exp
     // trees.
     "q_agg_lognormal_fit" ->
-      """WITH cells AS (SELECT o_orderstatus,
-        |   CAST(round(ln(CAST(round(o_totalprice * 100) AS BIGINT)
+      s"""WITH cells AS (SELECT o_orderstatus,
+        |   CAST(round(ln(${oCents("o_totalprice")}
         |     / 100.0) + 5e-10, 6) AS DECIMAL(18,6)) AS x FROM orders),
         | m AS (SELECT o_orderstatus, CAST(count(*) AS BIGINT) AS n,
         |   sum(x) AS sx, sum(x * x) AS sxx FROM cells GROUP BY 1)
@@ -3592,13 +3599,7 @@ object Aggregates {
     // Integer ECDF-difference numerator, one float division at the end;
     // every count CAST to BIGINT (sum/window-sum widen to HUGEINT).
     "q_agg_ks_test" ->
-      """WITH ev AS (SELECT event_type,
-        |   CAST(round(value * 100) AS BIGINT) AS c
-        |  FROM events WHERE event_type IN ('click', 'purchase')),
-        | pv AS (SELECT c,
-        |   CAST(count(*) FILTER (event_type = 'click') AS BIGINT) AS a1,
-        |   CAST(count(*) FILTER (event_type = 'purchase') AS BIGINT) AS a2
-        |  FROM ev GROUP BY c),
+      s"""WITH $oCpCents,
         | cm AS (SELECT c,
         |   CAST(sum(a1) OVER (ORDER BY c) AS BIGINT) AS cum1,
         |   CAST(sum(a2) OVER (ORDER BY c) AS BIGINT) AS cum2 FROM pv),
@@ -3615,13 +3616,7 @@ object Aggregates {
     // arithmetic on integers, and the winner sorts by the identical
     // integer-nanos key with the threshold tiebreak.
     "q_agg_split_gini" ->
-      """WITH ev AS (SELECT event_type,
-        |   CAST(round(value * 100) AS BIGINT) AS c
-        |  FROM events WHERE event_type IN ('click', 'purchase')),
-        | pv AS (SELECT c,
-        |   CAST(count(*) FILTER (event_type = 'click') AS BIGINT) AS a1,
-        |   CAST(count(*) FILTER (event_type = 'purchase') AS BIGINT) AS a2
-        |  FROM ev GROUP BY c),
+      s"""WITH $oCpCents,
         | tot AS (SELECT CAST(sum(a1) AS BIGINT) AS n1,
         |   CAST(sum(a2) AS BIGINT) AS n2 FROM pv),
         | cum AS (SELECT c,
@@ -3652,13 +3647,7 @@ object Aggregates {
     // correction; u1/u2 are exact half-grid doubles, z mirrors the Spark
     // division order exactly.
     "q_agg_mannwhitney" ->
-      """WITH ev AS (SELECT event_type,
-        |   CAST(round(value * 100) AS BIGINT) AS c
-        |  FROM events WHERE event_type IN ('click', 'purchase')),
-        | pv AS (SELECT c,
-        |   CAST(count(*) FILTER (event_type = 'click') AS BIGINT) AS a1,
-        |   CAST(count(*) FILTER (event_type = 'purchase') AS BIGINT) AS a2
-        |  FROM ev GROUP BY c),
+      s"""WITH $oCpCents,
         | cm AS (SELECT a1, a2,
         |   CAST(sum(a1 + a2) OVER (ORDER BY c) AS BIGINT) AS cumAll
         |  FROM pv),
@@ -3689,10 +3678,7 @@ object Aggregates {
     // the cell frame; Pearson over exact integer moments with the
     // identical double tree.
     "q_agg_spearman" ->
-      """WITH cell AS (SELECT CAST(round(value * 100) AS BIGINT) AS x,
-        |   CAST(hour(CAST(ts AS TIMESTAMP)) AS BIGINT) AS y,
-        |   CAST(count(*) AS BIGINT) AS nc
-        |  FROM events GROUP BY x, y),
+      s"""WITH $oCentsHourCells,
         | xm AS (SELECT x, 2 * (CAST(sum(t) OVER (ORDER BY x) AS BIGINT)
         |    - t) + t + 1 AS rx
         |  FROM (SELECT x, CAST(sum(nc) AS BIGINT) AS t FROM cell
@@ -3722,10 +3708,7 @@ object Aggregates {
     // prefix/suffix per cents value, integer C/D/tie terms, and the
     // sqrt·sqrt denominator (the long product would overflow).
     "q_agg_kendall_tau" ->
-      """WITH cell AS (SELECT CAST(round(value * 100) AS BIGINT) AS x,
-        |   CAST(hour(CAST(ts AS TIMESTAMP)) AS BIGINT) AS y,
-        |   CAST(count(*) AS BIGINT) AS nc
-        |  FROM events GROUP BY x, y),
+      s"""WITH $oCentsHourCells,
         | grid AS (SELECT xs.x, CAST(h.y AS BIGINT) AS y
         |  FROM (SELECT DISTINCT x FROM cell) xs,
         |   (SELECT unnest(generate_series(0, 23)) AS y) h),
@@ -3782,7 +3765,7 @@ object Aggregates {
     // the exact k-term sum (the chi² cell recipe); F mirrors the Spark
     // division order.
     "q_agg_anova" ->
-      s"""WITH ${oCentsMoments("event_type", oCents, "events")},
+      s"""WITH ${oCentsMoments("event_type", oCents("value"), "events")},
         | $oAnovaF
         | SELECT k, n, ss_between, ss_within, f_stat FROM res"""
         .stripMargin.replaceAll("\n", " "),
@@ -3790,21 +3773,14 @@ object Aggregates {
     // The Mann–Whitney doubled-rank integers verbatim; AUC and Gini are
     // single divisions of the exact u_num.
     "q_agg_auc" ->
-      """WITH ev AS (SELECT event_type,
-        |   CAST(round(value * 100) AS BIGINT) AS c
-        |  FROM events WHERE event_type IN ('click', 'purchase')),
-        | pv AS (SELECT c,
-        |   CAST(count(*) FILTER (event_type = 'purchase') AS BIGINT)
-        |     AS ap,
-        |   CAST(count(*) FILTER (event_type = 'click') AS BIGINT) AS an
-        |  FROM ev GROUP BY c),
-        | cm AS (SELECT ap, an,
-        |   CAST(sum(ap + an) OVER (ORDER BY c) AS BIGINT) AS cumAll
+      s"""WITH $oCpCents,
+        | cm AS (SELECT a2, a1,
+        |   CAST(sum(a2 + a1) OVER (ORDER BY c) AS BIGINT) AS cumAll
         |  FROM pv),
-        | tot AS (SELECT CAST(sum(ap) AS BIGINT) AS np,
-        |   CAST(sum(an) AS BIGINT) AS nn FROM pv),
+        | tot AS (SELECT CAST(sum(a2) AS BIGINT) AS np,
+        |   CAST(sum(a1) AS BIGINT) AS nn FROM pv),
         | ag AS (SELECT np, nn,
-        |   sum(CAST(ap AS HUGEINT) * (2 * cumAll - (ap + an) + 1))
+        |   sum(CAST(a2 AS HUGEINT) * (2 * cumAll - (a2 + a1) + 1))
         |     AS two_rp
         |  FROM cm, tot GROUP BY np, nn),
         | un AS (SELECT np, nn,
@@ -3879,7 +3855,7 @@ object Aggregates {
     // Same bounded cumsum; every percentile threshold is the integer
     // test cum·100 ≥ p·n (ceil without floats); BIGINT throughout.
     "q_agg_percentile_grid" ->
-      """WITH pv AS (SELECT CAST(round(value * 100) AS BIGINT) AS c,
+      s"""WITH pv AS (SELECT ${oCents("value")} AS c,
         |   CAST(count(*) AS BIGINT) AS cnt FROM events GROUP BY c),
         | cm AS (SELECT c,
         |   CAST(sum(cnt) OVER (ORDER BY c) AS BIGINT) AS cum FROM pv),
@@ -3894,8 +3870,8 @@ object Aggregates {
     // Identical integer-moment walk (ci exact cents, q = Σci² widening
     // to HUGEINT); the double tree for hhi/effective_n mirrors Spark.
     "q_agg_hhi" ->
-      """WITH pc AS (SELECT c.c_mktsegment AS segment, o.o_custkey,
-        |   CAST(sum(CAST(round(o.o_totalprice * 100) AS BIGINT))
+      s"""WITH pc AS (SELECT c.c_mktsegment AS segment, o.o_custkey,
+        |   CAST(sum(${oCents("o.o_totalprice")})
         |     AS BIGINT) AS ci
         |  FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
         |  GROUP BY segment, o.o_custkey),
@@ -3951,7 +3927,7 @@ object Aggregates {
     // the exact 9-term sums.
     "q_agg_benford" ->
       s"""WITH obs AS (SELECT
-        |   CAST(substr(CAST(CAST(round(o_totalprice * 100) AS BIGINT)
+        |   CAST(substr(CAST(${oCents("o_totalprice")}
         |     AS VARCHAR), 1, 1) AS BIGINT) AS digit,
         |   CAST(count(*) AS BIGINT) AS n
         |  FROM orders GROUP BY digit),
@@ -3981,7 +3957,7 @@ object Aggregates {
     // identical division order; CI picks sorted-list elements 2 and 63.
     "q_agg_bootstrap_ci" ->
       s"""WITH pc AS (SELECT event_id,
-         |   CAST(round(value * 100) AS BIGINT) AS c
+         |   ${oCents("value")} AS c
          |  FROM events WHERE event_type = 'purchase'),
          | rep AS (SELECT c,
          |   ${oMd5Bits("event_id || ':' || b", 13)}
@@ -4097,8 +4073,8 @@ object Aggregates {
     // Same deterministic top-100, zero-contributing threshold rows,
     // 6dp decimal ln cells.
     "q_agg_hill_tail" ->
-      """WITH top AS (SELECT o_orderkey,
-        |   CAST(round(o_totalprice * 100) AS BIGINT) AS c
+      s"""WITH top AS (SELECT o_orderkey,
+        |   ${oCents("o_totalprice")} AS c
         |  FROM orders ORDER BY c DESC, o_orderkey LIMIT 100),
         | xk AS (SELECT CAST(min(c) AS BIGINT) AS ck FROM top),
         | cells AS (SELECT ck,
@@ -4112,8 +4088,8 @@ object Aggregates {
     // Quartiles ε-round at 4dp BEFORE the fences derive so both
     // engines compare against identical doubles; counts stay BIGINT.
     "q_profile_tukey" ->
-      """WITH ev AS (SELECT event_type,
-        |   CAST(round(value * 100) AS BIGINT) AS c FROM events),
+      s"""WITH ev AS (SELECT event_type,
+        |   ${oCents("value")} AS c FROM events),
         | pct AS (SELECT event_type,
         |   round(CAST(quantile_cont(c, 0.25) AS DOUBLE) + 5e-10, 4)
         |     AS p25,
@@ -4196,8 +4172,8 @@ object Aggregates {
     // Mirrors the integer threshold crossing; the min(struct) argmin
     // spells as a rank window.
     "q_agg_median_weighted" ->
-      """WITH li AS (SELECT l_returnflag, l_orderkey, l_linenumber,
-        |   CAST(round(l_extendedprice * 100) AS BIGINT) AS c,
+      s"""WITH li AS (SELECT l_returnflag, l_orderkey, l_linenumber,
+        |   ${oCents("l_extendedprice")} AS c,
         |   CAST(l_quantity AS BIGINT) AS q FROM lineitem),
         | r AS (SELECT l_returnflag, l_orderkey, l_linenumber, c,
         |   CAST(sum(q) OVER wr AS BIGINT) AS cw,
@@ -4217,8 +4193,8 @@ object Aggregates {
         .stripMargin.replaceAll("\n", " "),
 
     "q_agg_trimmed_mean" ->
-      """WITH o AS (SELECT o_orderpriority,
-        |   CAST(round(o_totalprice * 100) AS BIGINT) AS c, o_orderkey
+      s"""WITH o AS (SELECT o_orderpriority,
+        |   ${oCents("o_totalprice")} AS c, o_orderkey
         |  FROM orders),
         | r AS (SELECT o_orderpriority, c,
         |   CAST(row_number() OVER (PARTITION BY o_orderpriority
@@ -4255,9 +4231,9 @@ object Aggregates {
              |  + 5e-10, 6) AS corr FROM m""".stripMargin
         }).mkString(" UNION ALL ")
       s"""WITH v AS (SELECT CAST(l_quantity AS BIGINT) AS q,
-         |  CAST(round(l_extendedprice * 100) AS BIGINT) AS p,
-         |  CAST(round(l_discount * 100) AS BIGINT) AS dc,
-         |  CAST(round(l_tax * 100) AS BIGINT) AS tx FROM lineitem),
+         |  ${oCents("l_extendedprice")} AS p,
+         |  ${oCents("l_discount")} AS dc,
+         |  ${oCents("l_tax")} AS tx FROM lineitem),
          | m AS (SELECT CAST(count(*) AS HUGEINT) AS n,
          |  CAST(count(*) AS BIGINT) AS n_rows, ${moments.mkString(", ")}
          |  FROM v)

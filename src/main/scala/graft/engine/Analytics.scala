@@ -66,10 +66,7 @@ object Analytics {
         .localCheckpoint()
     }
 
-  private def supportEdges(s: SparkSession, d: String, slot: String)
-      : DataFrame =
-    // `slot` is kept for call-site documentation only; the frame is
-    // keyed by dataset alone and reused across queries and reps.
+  private def supportEdges(s: SparkSession, d: String): DataFrame =
     supportFrame(s, d).select(col("u"), col("v"))
 
   /** Sampled-closeness per-node estimate from the `k` smallest node
@@ -647,7 +644,7 @@ object Analytics {
       // The edge set is referenced five times below (degrees, orientation,
       // closure probe, node/edge counts) — it is the family's shared
       // memoized support frame (r13), derived once per session.
-      val und = supportEdges(s, d, "tri")
+      val und = supportEdges(s, d)
       val deg = und.select(col("u").as("n"))
         .unionAll(und.select(col("v").as("n")))
         .groupBy(col("n")).agg(count(lit(1)).as("deg"))
@@ -717,8 +714,7 @@ object Analytics {
         else col("o_orderdate") >= lit("1997-01-01").cast("timestamp")
         Tables.orders(s, d).filter(f)
           .groupBy(col("o_custkey"))
-          .agg(sum(round(col("o_totalprice") * 100).cast("long"))
-            .as("c"))
+          .agg(sum(cents(col("o_totalprice"))).as("c"))
           .withColumn(out, concat(lit("T"), ntile(3).over(
             W.orderBy(desc("c"), asc("o_custkey")))))
           .select(col("o_custkey"), col(out))
@@ -837,7 +833,7 @@ object Analytics {
       val W = org.apache.spark.sql.expressions.Window
       val rev = Tables.orders(s, d)
         .groupBy(col("o_custkey"))
-        .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("c"))
+        .agg(sum(cents(col("o_totalprice"))).as("c"))
       val cum = rev
         .withColumn("cum", sum(col("c")).over(
           W.orderBy(desc("c"), asc("o_custkey"))
@@ -1017,7 +1013,7 @@ object Analytics {
     // wedge-explosion shuffle. Zero-common edges are filtered to match
     // the oracle's inner common-neighbor join.
     "q_graph_jaccard" -> { (s, d) =>
-      val und = supportEdges(s, d, "jac")
+      val und = supportEdges(s, d)
       val adjSet = und.select(col("u").as("n"), col("v").as("nb"))
         .unionAll(und.select(col("v").as("n"), col("u").as("nb")))
         .groupBy(col("n"))
@@ -1051,7 +1047,7 @@ object Analytics {
     // then one broadcast degree join + one pair-keyed partial agg —
     // no wedge-explosion shuffle.
     "q_graph_adamic_adar" -> { (s, d) =>
-      val und = supportEdges(s, d, "aa")
+      val und = supportEdges(s, d)
       val adjSet = und.select(col("u").as("n"), col("v").as("nb"))
         .unionAll(und.select(col("v").as("n"), col("u").as("nb")))
         .groupBy(col("n"))
@@ -1089,7 +1085,7 @@ object Analytics {
         .groupBy((year(col("o_orderdate")) * 12
           + month(col("o_orderdate")) - 1).cast("long").as("mk"))
         .agg(count(lit(1)).as("n_orders"),
-          sum(round(col("o_totalprice") * 100).cast("long")).as("sc"))
+          sum(cents(col("o_totalprice"))).as("sc"))
         .localCheckpoint())
       val prev = m.select((col("mk") + 12).as("mk"), col("sc").as("scp"))
       val w = W.partitionBy(expr("mk DIV 12")).orderBy(col("mk"))
@@ -1116,7 +1112,7 @@ object Analytics {
     // join; the moment agg collapses to a single row.
     "q_graph_assortativity" -> { (s, d) =>
       val dec19 = org.apache.spark.sql.types.DecimalType(19, 0)
-      val und = supportEdges(s, d, "assort")
+      val und = supportEdges(s, d)
       val deg = und.select(col("u").as("node"))
         .unionAll(und.select(col("v").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("dg"))
@@ -1267,7 +1263,7 @@ object Analytics {
         .select(
           when(dayofweek(col("o_orderdate")) === 1, 7)
             .otherwise(dayofweek(col("o_orderdate")) - 1).as("iso_dow"),
-          round(col("o_totalprice") * 100).cast("long").as("c"))
+          cents(col("o_totalprice")).as("c"))
       val tot = o.agg(count(lit(1)).as("n"), sum(col("c")).as("sc"))
       o.groupBy(col("iso_dow"))
         .agg(count(lit(1)).as("n_orders"), sum(col("c")).as("sg"))
@@ -1295,7 +1291,7 @@ object Analytics {
           .select(col("p_partkey"), col("p_brand"))),
           col("l_partkey") === col("p_partkey"))
         .select(col("p_brand"),
-          round(col("l_discount") * 100).cast("long").as("x"),
+          cents(col("l_discount")).as("x"),
           col("l_quantity").cast("long").as("y"))
       val m = li.groupBy(col("p_brand"))
         .agg(count(lit(1)).as("n"),
@@ -1347,7 +1343,7 @@ object Analytics {
         .withColumn("k",
           expr("datediff(to_date(w), to_date(cw)) DIV 7"))
         .groupBy(col("cw"), col("k"))
-        .agg(sum(round(col("value") * 100).cast("long")).as("cents"))
+        .agg(sum(cents(col("value"))).as("cents"))
       rev
         .withColumn("cum_cents", sum(col("cents")).over(
           W.partitionBy(col("cw")).orderBy(col("k"))
@@ -1415,7 +1411,7 @@ object Analytics {
       val user = Tables.events(s, d)
         .groupBy(pmod(col("user_id"), lit(2)).as("arm"), col("user_id"))
         .agg(sum(when(col("event_type") === "purchase",
-          round(col("value") * 100).cast("long")).otherwise(0L)).as("x"),
+          cents(col("value"))).otherwise(0L)).as("x"),
           count(lit(1)).as("y"))
       val m = user.groupBy(col("arm"))
         .agg(count(lit(1)).as("n"),
@@ -1616,7 +1612,7 @@ object Analytics {
     // materialization); the histogram is a second tiny aggregate. Linear
     // in edges at any scale.
     "q_graph_degree" -> { (s, d) =>
-      val und = supportEdges(s, d, "deg")
+      val und = supportEdges(s, d)
       und.select(col("u").as("n")).unionAll(und.select(col("v").as("n")))
         .groupBy(col("n")).agg(count(lit(1)).as("deg"))
         .groupBy(col("deg")).agg(count(lit(1)).as("n_nodes"))
@@ -1631,7 +1627,7 @@ object Analytics {
     // size × avg degree work per hop, edge list shuffled on src once);
     // distinct-per-seed partial-aggregates before its exchange.
     "q_graph_khop" -> { (s, d) =>
-      val und = supportEdges(s, d, "khop")
+      val und = supportEdges(s, d)
       val bidir = und.select(col("u").as("src"), col("v").as("dst"))
         .unionAll(und.select(col("v").as("src"), col("u").as("dst")))
       val hop1 = bidir.filter(col("src") < 10)
@@ -1955,7 +1951,7 @@ object Analytics {
         e.select(col("u").as("n"))
           .unionAll(e.select(col("v").as("n")))
           .groupBy(col("n")).agg(count(lit(1)).as("dg"))
-      val states = (1 to 5).scanLeft(supportEdges(s, d, "kcore")) {
+      val states = (1 to 5).scanLeft(supportEdges(s, d)) {
         (e, k) =>
           val keep = degrees(e).filter(col("dg") >= 2).select(col("n"))
           val peeled = e
@@ -1990,7 +1986,7 @@ object Analytics {
     // integers. Sorted-merge/hash joins over the checkpointed edge list;
     // nothing quadratic in degree beyond the wedge set itself.
     "q_graph_cluster_coeff" -> { (s, d) =>
-      val und = supportEdges(s, d, "lcc")
+      val und = supportEdges(s, d)
       val deg = und.select(col("u").as("n"))
         .unionAll(und.select(col("v").as("n")))
         .groupBy(col("n")).agg(count(lit(1)).as("deg"))
@@ -2022,7 +2018,7 @@ object Analytics {
     // no checkpoint needed at this depth), each one edge-shuffle — the
     // Pregel superstep shape. Output is the community-size histogram.
     "q_graph_label_prop" -> { (s, d) =>
-      val und = supportEdges(s, d, "lprop")
+      val und = supportEdges(s, d)
       val bidir = und.select(col("u").as("src"), col("v").as("dst"))
         .unionAll(und.select(col("v").as("src"), col("u").as("dst")))
       var labels = bidir.select(col("src").as("n")).distinct()
@@ -2605,8 +2601,8 @@ object Analytics {
         .stripMargin.replaceAll("\n", " "),
 
     "q_shape_pareto" ->
-      """WITH rev AS (SELECT o_custkey,
-        |   CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+      s"""WITH rev AS (SELECT o_custkey,
+        |   CAST(sum(${oCents("o_totalprice")}) AS BIGINT)
         |    AS c
         |  FROM orders GROUP BY o_custkey),
         | t AS (SELECT CAST(sum(c) AS BIGINT) AS tot,
@@ -2674,13 +2670,13 @@ object Analytics {
     // Same tercile ranking (ntile front-loads remainders identically
     // in both engines — the Lorenz precedent) and full-join matrix.
     "q_shape_rfm_migration" ->
-      """WITH e AS (SELECT o_custkey,
-        |   CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
+      s"""WITH e AS (SELECT o_custkey,
+        |   CAST(sum(${oCents("o_totalprice")})
         |    AS BIGINT) AS c
         |  FROM orders WHERE o_orderdate < TIMESTAMP '1997-01-01'
         |  GROUP BY o_custkey),
         | l AS (SELECT o_custkey,
-        |   CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
+        |   CAST(sum(${oCents("o_totalprice")})
         |    AS BIGINT) AS c
         |  FROM orders WHERE o_orderdate >= TIMESTAMP '1997-01-01'
         |  GROUP BY o_custkey),
@@ -3028,10 +3024,10 @@ object Analytics {
     // Integer month-ordinal key; YoY join on mk−12; window sum widens to
     // HUGEINT, cast back before the /100.0.
     "q_shape_yoy_growth" ->
-      """WITH m AS (SELECT CAST(year(o_orderdate) * 12
+      s"""WITH m AS (SELECT CAST(year(o_orderdate) * 12
         |    + month(o_orderdate) - 1 AS BIGINT) AS mk,
         |   CAST(count(*) AS BIGINT) AS n_orders,
-        |   CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+        |   CAST(sum(${oCents("o_totalprice")}) AS BIGINT)
         |     AS sc
         |  FROM orders GROUP BY mk)
         | SELECT make_date(CAST(m.mk // 12 AS INT),
@@ -3115,10 +3111,10 @@ object Analytics {
 
     // DuckDB dayofweek is Sunday=0; remap to ISO like the Spark side.
     "q_shape_seasonality" ->
-      """WITH o AS (SELECT
+      s"""WITH o AS (SELECT
         |   CASE WHEN dayofweek(CAST(o_orderdate AS TIMESTAMP)) = 0 THEN 7
         |    ELSE dayofweek(CAST(o_orderdate AS TIMESTAMP)) END AS iso_dow,
-        |   CAST(round(o_totalprice * 100) AS BIGINT) AS c FROM orders),
+        |   ${oCents("o_totalprice")} AS c FROM orders),
         | tot AS (SELECT CAST(count(*) AS BIGINT) AS n,
         |   CAST(sum(c) AS BIGINT) AS sc FROM o),
         | g AS (SELECT iso_dow, CAST(count(*) AS BIGINT) AS n_orders,
@@ -3130,8 +3126,8 @@ object Analytics {
         .stripMargin.replaceAll("\n", " "),
 
     "q_shape_elasticity" ->
-      """WITH li AS (SELECT p_brand,
-        |   CAST(round(l_discount * 100) AS BIGINT) AS x,
+      s"""WITH li AS (SELECT p_brand,
+        |   ${oCents("l_discount")} AS x,
         |   CAST(l_quantity AS BIGINT) AS y
         |  FROM lineitem JOIN part ON l_partkey = p_partkey),
         | m AS (SELECT p_brand, CAST(count(*) AS BIGINT) AS n,
@@ -3156,7 +3152,7 @@ object Analytics {
 
     // The q_shape_paths sessionization with per-session flag reduction.
     "q_shape_ltv_curve" ->
-      """WITH ev AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts,
+      s"""WITH ev AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts,
         |   event_type, value FROM events),
         | fw AS (SELECT user_id, date_trunc('week', min(ts)) AS cw
         |  FROM ev GROUP BY user_id),
@@ -3164,7 +3160,7 @@ object Analytics {
         | rv AS (SELECT fw.cw,
         |   CAST((CAST(date_trunc('week', ev.ts) AS DATE)
         |     - CAST(fw.cw AS DATE)) // 7 AS BIGINT) AS k,
-        |   CAST(sum(CAST(round(ev.value * 100) AS BIGINT)) AS BIGINT)
+        |   CAST(sum(${oCents("ev.value")}) AS BIGINT)
         |    AS cents
         |  FROM ev JOIN fw ON ev.user_id = fw.user_id
         |  WHERE ev.event_type = 'purchase'
@@ -3225,7 +3221,7 @@ object Analytics {
           .stripMargin
       s"""WITH u AS (SELECT user_id % 2 AS arm, user_id,
          |   CAST(sum(CASE WHEN event_type = 'purchase'
-         |     THEN CAST(round(value * 100) AS BIGINT)
+         |     THEN ${oCents("value")}
          |     ELSE 0 END) AS BIGINT) AS x,
          |   CAST(count(*) AS BIGINT) AS y
          |  FROM events GROUP BY arm, user_id),

@@ -241,7 +241,7 @@ object Events {
   private def dailySeries(s: SparkSession, d: String): DataFrame =
     Tables.events(s, d)
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(sum(round(col("value") * 100).cast("long")).as("c"))
+      .agg(sum(cents(col("value"))).as("c"))
       .groupBy(col("event_type"))
       .agg(sort_array(collect_list(struct(col("day"), col("c")))).as("sc"))
       .select(col("event_type"),
@@ -262,7 +262,7 @@ object Events {
   private def seasonalFrame(s: SparkSession, d: String): DataFrame = {
     val hourly = Tables.events(s, d)
       .select(date_trunc("hour", col("ts")).as("h"),
-        round(col("value") * 100).cast("long").as("c"))
+        cents(col("value")).as("c"))
       .groupBy(col("h")).agg(sum(col("c")).as("c"))
     val grid = hourly.agg(min(col("h")).as("h0"), max(col("h")).as("h1"))
       .select(explode(sequence(col("h0"), col("h1"),
@@ -946,7 +946,7 @@ object Events {
           col("value"))
         .groupBy(col("user_id"), col("h"))
         .agg(lsum(col("value")).as("v"))
-        .withColumn("c", round(col("v") * 100).cast("long"))
+        .withColumn("c", cents(col("v")))
       val terms = (0 until 16).map { j =>
         val c = if (j == 0) col("c") else lag(col("c"), j).over(w)
         val wt = 1L << (15 - j)
@@ -1013,8 +1013,7 @@ object Events {
     "q_ts_anomaly" -> { (s, d) =>
       val dec = org.apache.spark.sql.types.DecimalType(38, 0)
       val ev = Tables.events(s, d)
-        .select(col("event_type"),
-          round(col("value") * 100).cast("long").as("c"))
+        .select(col("event_type"), cents(col("value")).as("c"))
       val stats = ev
         .groupBy(col("event_type").as("et"))
         .agg(count(lit(1)).cast(dec).as("n"),
@@ -1049,7 +1048,7 @@ object Events {
       val ordered = Tables.events(s, d)
         .filter(col("event_type").isin("purchase", "error"))
         .select(col("user_id"),
-          (round(col("value") * 100).cast("long") *
+          (cents(col("value")) *
             when(col("event_type") === "purchase", 1L).otherwise(-1L))
             .as("dc"),
           col("ts"), col("event_id"))
@@ -1103,7 +1102,7 @@ object Events {
         .rowsBetween(org.apache.spark.sql.expressions.Window
           .unboundedPreceding, 0)
       val ev = Tables.events(s, d)
-        .withColumn("c", round(col("value") * 100).cast("long"))
+        .withColumn("c", cents(col("value")))
         .withColumn("tus", expr("unix_micros(ts)"))
       val st = ev.groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), sum(col("c").cast(dec38)).as("sc"))
@@ -1522,7 +1521,7 @@ object Events {
       val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
       val daily = Tables.events(s, d)
         .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(sum(round(col("value") * 100).cast("long")).as("c"))
+        .agg(sum(cents(col("value"))).as("c"))
       val w = W.partitionBy(col("event_type")).orderBy(col("day"))
       val tot = daily.groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), sum(col("c").cast(dec38)).as("tc"))
@@ -1948,7 +1947,7 @@ object Events {
     "q_ts_diurnal" -> { (s, d) =>
       val ev = Tables.events(s, d)
         .select(col("event_type"), hour(col("ts")).as("hod"),
-          round(col("value") * 100).cast("long").as("c"))
+          cents(col("value")).as("c"))
       val st = ev.groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), sum(col("c")).as("sc"))
       ev.groupBy(col("event_type"), col("hod"))
@@ -2048,9 +2047,9 @@ object Events {
     * One line, to interpolate after a `WITH`.
     */
   private val oSeasonalFrame: String =
-    """hourly AS (SELECT
+    s"""hourly AS (SELECT
       |   date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h,
-      |   CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS c
+      |   CAST(sum(${oCents("value")}) AS BIGINT) AS c
       |  FROM events GROUP BY 1),
       | grid AS (SELECT g.h, coalesce(c, 0) AS c FROM
       |   (SELECT unnest(generate_series(min(h), max(h),
@@ -2070,9 +2069,9 @@ object Events {
     * interpolate after a `WITH`.
     */
   private val oDailySeries: String =
-    """daily AS (SELECT event_type,
+    s"""daily AS (SELECT event_type,
       |   CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-      |   CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS c
+      |   CAST(sum(${oCents("value")}) AS BIGINT) AS c
       |  FROM events GROUP BY event_type, day),
       | ser AS (SELECT event_type,
       |   row_number() OVER (PARTITION BY event_type ORDER BY day) AS j,
@@ -2501,7 +2500,7 @@ object Events {
          |   ${oLsum("value")} AS v
          |  FROM events WHERE user_id < 20 GROUP BY user_id, h),
          | hc AS (SELECT user_id, h, v,
-         |   CAST(round(v * 100) AS BIGINT) AS c FROM hourly),
+         |   ${oCents("v")} AS c FROM hourly),
          | t AS (SELECT user_id, h, v,
          |   ${terms.map(_._1).mkString(" + ")} AS num,
          |   ${terms.map(_._2).mkString(" + ")} AS den
@@ -2545,8 +2544,8 @@ object Events {
         .stripMargin.replaceAll("\n", " "),
 
     "q_ts_anomaly" ->
-      """WITH e AS (SELECT event_type,
-        |   CAST(round(value * 100) AS BIGINT) AS c FROM events),
+      s"""WITH e AS (SELECT event_type,
+        |   ${oCents("value")} AS c FROM events),
         | st AS (SELECT event_type AS et,
         |   CAST(count(*) AS HUGEINT) AS n,
         |   sum(CAST(c AS HUGEINT)) AS sv,
@@ -2563,8 +2562,8 @@ object Events {
         .stripMargin.replaceAll("\n", " "),
 
     "q_shape_inventory" ->
-      """WITH RECURSIVE e AS (SELECT user_id,
-        |   CAST(round(value * 100) AS BIGINT)
+      s"""WITH RECURSIVE e AS (SELECT user_id,
+        |   ${oCents("value")}
         |     * (CASE WHEN event_type = 'purchase' THEN 1 ELSE -1 END)
         |    AS dc,
         |   row_number() OVER (PARTITION BY user_id
@@ -2590,8 +2589,8 @@ object Events {
     // Mirrors the integer n-scaled cusum and the (−|scaled|, tus,
     // event_id) argmin tie rule exactly.
     "q_ts_cusum" ->
-      """WITH e AS (SELECT event_type, event_id,
-        |   CAST(round(value * 100) AS BIGINT) AS c,
+      s"""WITH e AS (SELECT event_type, event_id,
+        |   ${oCents("value")} AS c,
         |   epoch_us(CAST(ts AS TIMESTAMP)) AS tus FROM events),
         | st AS (SELECT event_type, count(*) AS n,
         |   CAST(sum(c) AS BIGINT) AS sc FROM e GROUP BY 1),
@@ -2759,9 +2758,9 @@ object Events {
     // Same centered-cumsum integers; argmax replayed as a window rank
     // on (−|s|, t); identical division order for the two means.
     "q_ts_changepoint" ->
-      """WITH daily AS (SELECT event_type,
+      s"""WITH daily AS (SELECT event_type,
         |   CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-        |   CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS c
+        |   CAST(sum(${oCents("value")}) AS BIGINT) AS c
         |  FROM events GROUP BY event_type, day),
         | tot AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
         |   CAST(sum(c) AS BIGINT) AS tc FROM daily GROUP BY 1),
@@ -3217,9 +3216,9 @@ object Events {
         .stripMargin.replaceAll("\n", " "),
 
     "q_ts_diurnal" ->
-      """WITH e AS (SELECT event_type,
+      s"""WITH e AS (SELECT event_type,
         |   hour(CAST(ts AS TIMESTAMP)) AS hod,
-        |   CAST(round(value * 100) AS BIGINT) AS c FROM events),
+        |   ${oCents("value")} AS c FROM events),
         | st AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
         |   CAST(sum(c) AS BIGINT) AS sc FROM e GROUP BY 1),
         | g AS (SELECT event_type, hod, CAST(count(*) AS BIGINT) AS ng,

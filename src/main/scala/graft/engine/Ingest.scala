@@ -428,8 +428,7 @@ object Ingest {
           lpad(col("o_orderkey").cast("string"), 12, "0"),
           lpad(col("o_custkey").cast("string"), 12, "0"),
           rpad(col("o_orderstatus"), 1, " "),
-          lpad(round(col("o_totalprice") * 100).cast("long").cast("string"),
-            12, "0"),
+          lpad(Fx.cents(col("o_totalprice")).cast("string"), 12, "0"),
           date_format(col("o_orderdate"), "yyyyMMdd"),
           rpad(col("o_orderpriority"), 15, " ")).as("value"))
         .write.mode("overwrite").text(out)
@@ -862,8 +861,8 @@ object Ingest {
     // priority, both keys); sums stay BIGINT (never bare sum(BIGINT)
     // which widens to HUGEINT)
     "q_scan_fixed_width" ->
-      """SELECT o_orderstatus AS status, CAST(count(*) AS BIGINT) AS n,
-        | CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+      s"""SELECT o_orderstatus AS status, CAST(count(*) AS BIGINT) AS n,
+        | CAST(sum(${Fx.oCents("o_totalprice")}) AS BIGINT)
         |   AS sum_cents,
         | CAST(count(DISTINCT o_custkey) AS BIGINT) AS n_cust,
         | CAST(count(DISTINCT o_orderpriority) AS BIGINT) AS n_prios,

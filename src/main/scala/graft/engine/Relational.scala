@@ -411,8 +411,7 @@ object Relational {
       }: _*)
       val pts = Tables.events(s, d).select(col("event_type"),
         col("event_id"),
-        pmod(round(col("value") * 100).cast("long"), lit(2000L))
-          .as("px"),
+        pmod(cents(col("value")), lit(2000L)).as("px"),
         pmod(col("event_id"), lit(1000L)).as("py"))
       val dy = col("e.y2") - col("e.y1")
       val lhs = (col("px") - col("e.x1")) * dy
@@ -450,8 +449,7 @@ object Relational {
         (col("py") - col("h.hy")) * (col("py") - col("h.hy"))
       Tables.events(s, d)
         .select(col("event_id"),
-          pmod(round(col("value") * 100).cast("long"), lit(2000L))
-            .as("px"),
+          pmod(cents(col("value")), lit(2000L)).as("px"),
           pmod(col("event_id"), lit(1000L)).as("py"))
         .select(col("event_id"), col("px"), col("py"),
           explode(harr).as("h"))
@@ -895,6 +893,17 @@ object Relational {
   private val setA = "SELECT o_custkey AS k FROM orders WHERE o_orderstatus = 'F'"
   private val setB = "SELECT o_custkey AS k FROM orders WHERE o_totalprice > 350000"
 
+  /** Each event's latest order of its user on or before the event, the
+    * oracle of both as-of join spellings.
+    */
+  private val oAsOfOrders: String =
+    """SELECT e.event_id, e.user_id, o.o_orderkey
+      | FROM (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts FROM events) e
+      | ASOF LEFT JOIN (SELECT o_custkey, o_orderdate, max(o_orderkey) AS o_orderkey
+      |   FROM orders GROUP BY 1, 2) o
+      | ON e.user_id = o.o_custkey AND o.o_orderdate <= e.ts
+      | ORDER BY e.event_id""".stripMargin.replaceAll("\n", " ")
+
   val oracle: Map[String, String] = Map(
     "q_project" ->
       """SELECT c_custkey, upper(c_name) AS name_u,
@@ -1024,25 +1033,11 @@ object Relational {
         | GROUP BY s_suppkey ORDER BY s_suppkey"""
         .stripMargin.replaceAll("\n", " "),
 
-    "q_join_asof" ->
-      """SELECT e.event_id, e.user_id, o.o_orderkey
-        | FROM (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts FROM events) e
-        | ASOF LEFT JOIN (SELECT o_custkey, o_orderdate, max(o_orderkey) AS o_orderkey
-        |   FROM orders GROUP BY 1, 2) o
-        | ON e.user_id = o.o_custkey AND o.o_orderdate <= e.ts
-        | ORDER BY e.event_id"""
-        .stripMargin.replaceAll("\n", " "),
+    "q_join_asof" -> oAsOfOrders,
 
     // identical semantics to q_join_asof — the Spark side differs only
     // in the physical operator (AsOfJoinExec vs union+window)
-    "q_join_asof_exec" ->
-      """SELECT e.event_id, e.user_id, o.o_orderkey
-        | FROM (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts FROM events) e
-        | ASOF LEFT JOIN (SELECT o_custkey, o_orderdate, max(o_orderkey) AS o_orderkey
-        |   FROM orders GROUP BY 1, 2) o
-        | ON e.user_id = o.o_custkey AND o.o_orderdate <= e.ts
-        | ORDER BY e.event_id"""
-        .stripMargin.replaceAll("\n", " "),
+    "q_join_asof_exec" -> oAsOfOrders,
 
     "q_join_asof_exec_str" ->
       """SELECT e.event_id, e.uk, o.o_orderkey
@@ -1216,8 +1211,8 @@ object Relational {
     // Same integer argmin (row_number over (d2, hub_id)) against the
     // identical 5-hub VALUES table.
     "q_join_nearest_hub" ->
-      """WITH pts AS (SELECT event_id,
-        |   CAST(round(value * 100) AS BIGINT) % 2000 AS px,
+      s"""WITH pts AS (SELECT event_id,
+        |   ${oCents("value")} % 2000 AS px,
         |   event_id % 1000 AS py FROM events),
         | hb(hub_id, hx, hy) AS (VALUES (1, 300, 300), (2, 1000, 200),
         |  (3, 1700, 500), (4, 900, 800), (5, 200, 900)),
@@ -1240,8 +1235,8 @@ object Relational {
     // Same integer crossing-number test (cross-multiplied, direction
     // follows sign(dy)) against the identical 5-edge VALUES polygon.
     "q_join_point_in_polygon" ->
-      """WITH pts AS (SELECT event_type, event_id,
-        |   CAST(round(value * 100) AS BIGINT) % 2000 AS px,
+      s"""WITH pts AS (SELECT event_type, event_id,
+        |   ${oCents("value")} % 2000 AS px,
         |   event_id % 1000 AS py FROM events),
         | pe(x1, y1, x2, y2) AS (VALUES
         |  (200, 100, 1800, 200), (1800, 200, 1600, 800),

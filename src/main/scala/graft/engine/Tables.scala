@@ -144,16 +144,21 @@ object Fx {
       + lit(5e-10), scale)
 
   /** Order-independent exact sum with cheap BIGINT aggregation state: the
-    * 2dp source value is lifted to exact integer cents (`round(v*100)` —
-    * both engines compute the identical double product and the residual is
-    * ~1e-12, far from any .5 boundary), summed as long, and divided back.
+    * 2dp source value is lifted to exact integer cents ([[cents]]),
+    * summed as long, and divided back.
     * Same hash parity as [[dsum]] but the per-group state is one 8-byte
     * long instead of a Decimal+isEmpty pair — use in aggregation-dense hot
     * paths (e.g. event-time windows with many groups). Headroom: at 49_002
     * max cents/row, overflow needs >1.8e14 rows per group.
     */
-  def lsum(c: Column): Column =
-    (sum(round(c * 100).cast("long")) / 100.0).cast("double")
+  def lsum(c: Column): Column = (sum(cents(c)) / 100.0).cast("double")
+
+  /** The house cents cast: a 2dp double as exact integer cents, BIGINT.
+    * Both engines compute the identical double product and round it
+    * half away from zero; the residual of a 2dp value times 100 is
+    * ~1e-12, far from any .5 boundary. Twin: [[oCents]].
+    */
+  def cents(c: Column): Column = round(c * 100).cast("long")
 
   /** Epsilon-round for deterministically-computed doubles. */
   def eround(c: Column, scale: Int): Column = round(c + lit(5e-10), scale)
@@ -243,8 +248,8 @@ object Fx {
   def oAvg(x: String, scale: Int = 4): String =
     s"round(CAST(sum(CAST($x AS DECIMAL(18,2))) AS DOUBLE) / count($x) + 5e-10, $scale)"
   def oRound(x: String, scale: Int): String = s"round($x + 5e-10, $scale)"
-  def oLsum(x: String): String =
-    s"CAST(sum(CAST(round($x*100) AS BIGINT)) AS BIGINT) / 100.0"
+  def oLsum(x: String): String = s"CAST(sum(${oCents(x)}) AS BIGINT) / 100.0"
+  def oCents(x: String): String = s"CAST(round($x * 100) AS BIGINT)"
   def oMd5Bits(x: String, hex: Int): String =
     s"('0x' || substr(md5($x), 1, $hex))::BIGINT"
 }

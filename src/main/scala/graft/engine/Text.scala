@@ -2244,7 +2244,7 @@ object Text {
       val W = org.apache.spark.sql.expressions.Window
       val ev = Tables.events(s, d)
         .select(col("event_type"), col("event_id"),
-          round(col("value") * 100).cast("long").as("c"))
+          cents(col("value")).as("c"))
       val st = ev.groupBy(col("event_type"))
         .agg(count(lit(1)).as("nh"), sum(col("c")).as("sx"),
           sum(col("c") * col("c")).as("qx"))
@@ -3384,7 +3384,7 @@ object Text {
       val cust = Tables.customer(s, d).select(
         col("c_custkey").as("id"), col("c_name").as("nm"),
         col("c_nationkey").cast("long").as("nk"),
-        round(col("c_acctbal") * 100).cast("long").as("bal"),
+        cents(col("c_acctbal")).as("bal"),
         col("c_mktsegment").as("seg"))
         .withColumn("blk", concat_ws(":", col("nk"),
           floor(col("bal").cast("double") / 100000).cast("long")))
@@ -4800,8 +4800,8 @@ object Text {
     // weight total, nudged half-up allocation, md5-order membership —
     // the sampled-id checksum is therefore exact on both engines.
     "q_sample_neyman" ->
-      """WITH ev AS (SELECT event_type, event_id,
-        |   CAST(round(value * 100) AS BIGINT) AS c FROM events),
+      s"""WITH ev AS (SELECT event_type, event_id,
+        |   ${oCents("value")} AS c FROM events),
         | st AS (SELECT event_type, CAST(count(*) AS BIGINT) AS nh,
         |   CAST(sum(c) AS BIGINT) AS sx,
         |   CAST(sum(c * c) AS BIGINT) AS qx
@@ -5294,9 +5294,9 @@ object Text {
     // round-mode, or scale surface left for the driver's hash to
     // canonicalize differently (the r11/r10 failure class).
     "q_dedup_fellegi" ->
-      """WITH cust AS (SELECT c_custkey AS id, c_name AS nm,
+      s"""WITH cust AS (SELECT c_custkey AS id, c_name AS nm,
         |   CAST(c_nationkey AS BIGINT) AS nk,
-        |   CAST(round(c_acctbal * 100) AS BIGINT) AS bal,
+        |   ${oCents("c_acctbal")} AS bal,
         |   c_mktsegment AS seg FROM customer),
         | blocked AS (SELECT *, nk || ':' ||
         |   CAST(floor(CAST(bal AS DOUBLE) / 100000) AS BIGINT) AS blk

@@ -113,7 +113,7 @@ object Windows {
         .orderBy(col("tus"), col("event_id"))
         .rowsBetween(-19, Window.currentRow)
       Tables.events(s, d)
-        .withColumn("c", round(col("value") * 100).cast("long"))
+        .withColumn("c", cents(col("value")))
         .withColumn("tus", expr("unix_micros(ts)"))
         .withColumn("nw", count(lit(1)).over(w))
         .withColumn("sw", sum(col("c")).over(w))
@@ -290,7 +290,7 @@ object Windows {
         .orderBy(col("ts"), col("event_id"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       Tables.events(s, d)
-        .withColumn("c", round(col("value") * 100).cast("long"))
+        .withColumn("c", cents(col("value")))
         .withColumn("peak", max(col("c")).over(w))
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_events"),
@@ -333,7 +333,7 @@ object Windows {
       val tot = Window.partitionBy(col("o_orderpriority"))
       Tables.orders(s, d)
         .select(col("o_orderpriority"), col("o_orderkey"),
-          round(col("o_totalprice") * 100).cast("long").as("c"))
+          cents(col("o_totalprice")).as("c"))
         .select(col("o_orderpriority"), col("o_orderkey"), col("c"),
           row_number().over(w).as("rn"),
           sum(col("c")).over(run).as("cum_c"),
@@ -365,7 +365,7 @@ object Windows {
         .orderBy(col("tus"), col("event_id"))
       val f = w.rowsBetween(-23, Window.currentRow)
       Tables.events(s, d)
-        .withColumn("c", round(col("value") * 100).cast("long"))
+        .withColumn("c", cents(col("value")))
         .withColumn("tus", expr("unix_micros(ts)"))
         .withColumn("i", row_number().over(w).cast("long"))
         // all five frame aggregates in ONE projection so CollapseWindow
@@ -436,27 +436,24 @@ object Windows {
     }
   )
 
+  /** The running count of distinct order priorities per customer, the
+    * oracle of the exact and the sketch spelling.
+    */
+  private val oDistinctPrio: String =
+    """SELECT o_custkey, o_orderkey, o_orderdate,
+      | CAST(count(DISTINCT o_orderpriority) OVER (
+      |   PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
+      |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS INT)
+      |  AS n_distinct_prio
+      | FROM orders WHERE o_custkey < 200
+      | ORDER BY o_custkey, o_orderdate, o_orderkey"""
+      .stripMargin.replaceAll("\n", " ")
+
   val oracle: Map[String, String] = Map(
     // the sketch spelling is exact at this fixture's 5-value domain
     // (coupon-list mode), so it shares the exact row's oracle verbatim
-    "q_win_distinct_running_hll" ->
-      """SELECT o_custkey, o_orderkey, o_orderdate,
-        | CAST(count(DISTINCT o_orderpriority) OVER (
-        |   PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-        |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS INT)
-        |  AS n_distinct_prio
-        | FROM orders WHERE o_custkey < 200
-        | ORDER BY o_custkey, o_orderdate, o_orderkey"""
-        .stripMargin.replaceAll("\n", " "),
-    "q_win_distinct_running" ->
-      """SELECT o_custkey, o_orderkey, o_orderdate,
-        | CAST(count(DISTINCT o_orderpriority) OVER (
-        |   PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-        |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS INT)
-        |  AS n_distinct_prio
-        | FROM orders WHERE o_custkey < 200
-        | ORDER BY o_custkey, o_orderdate, o_orderkey"""
-        .stripMargin.replaceAll("\n", " "),
+    "q_win_distinct_running_hll" -> oDistinctPrio,
+    "q_win_distinct_running" -> oDistinctPrio,
     "q_win_rank" ->
       """SELECT o_orderpriority, o_orderkey, o_totalprice,
         | row_number() OVER wu AS rn,
@@ -500,7 +497,7 @@ object Windows {
     // Mirrors the integer frame moments and the 3σ comparison exactly;
     // window sums cast back from HUGEINT to BIGINT.
     "q_win_roll_anomaly" ->
-      """SELECT event_id, event_type, value, nw AS n_window,
+      s"""SELECT event_id, event_type, value, nw AS n_window,
         | ((nw * c - sw) * (nw * c - sw) > 9 * (nw * qw - sw * sw)
         |   AND nw >= 10) AS is_outlier
         | FROM (SELECT event_id, event_type, value, c,
@@ -508,7 +505,7 @@ object Windows {
         |   CAST(sum(c) OVER w AS BIGINT) AS sw,
         |   CAST(sum(c * c) OVER w AS BIGINT) AS qw
         |  FROM (SELECT event_id, event_type, value,
-        |    CAST(round(value * 100) AS BIGINT) AS c,
+        |    ${oCents("value")} AS c,
         |    epoch_us(CAST(ts AS TIMESTAMP)) AS tus FROM events)
         |  WINDOW w AS (PARTITION BY event_type ORDER BY tus, event_id
         |    ROWS BETWEEN 19 PRECEDING AND CURRENT ROW))
@@ -633,9 +630,9 @@ object Windows {
         .stripMargin.replaceAll("\n", " "),
 
     "q_win_drawdown" ->
-      """WITH e AS (SELECT user_id, event_id,
+      s"""WITH e AS (SELECT user_id, event_id,
         |   CAST(ts AS TIMESTAMP) AS ts,
-        |   CAST(round(value * 100) AS BIGINT) AS c FROM events),
+        |   ${oCents("value")} AS c FROM events),
         | f AS (SELECT user_id, c,
         |   max(c) OVER (PARTITION BY user_id ORDER BY ts, event_id
         |     ROWS UNBOUNDED PRECEDING) AS peak FROM e)
@@ -658,8 +655,8 @@ object Windows {
         .stripMargin.replaceAll("\n", " "),
 
     "q_win_ratio_to_report" ->
-      """WITH o AS (SELECT o_orderpriority, o_orderkey,
-        |   CAST(round(o_totalprice * 100) AS BIGINT) AS c FROM orders),
+      s"""WITH o AS (SELECT o_orderpriority, o_orderkey,
+        |   ${oCents("o_totalprice")} AS c FROM orders),
         | r AS (SELECT o_orderpriority, o_orderkey, c,
         |   row_number() OVER w AS rn,
         |   CAST(sum(c) OVER wr AS BIGINT) AS cum_c,
@@ -677,10 +674,10 @@ object Windows {
 
     // Mirrors the integer frame sums and the single final division.
     "q_win_slope" ->
-      """WITH e AS (SELECT event_type, event_id,
+      s"""WITH e AS (SELECT event_type, event_id,
         |   CAST(ts AS TIMESTAMP) AS ts, value,
         |   epoch_us(CAST(ts AS TIMESTAMP)) AS tus,
-        |   CAST(round(value * 100) AS BIGINT) AS c FROM events),
+        |   ${oCents("value")} AS c FROM events),
         | i AS (SELECT *, CAST(row_number() OVER
         |   (PARTITION BY event_type ORDER BY tus, event_id) AS BIGINT)
         |   AS i FROM e),
