@@ -163,7 +163,7 @@ object Bench {
     // for isolating one query's cost or chasing instability).
     val only = SparkEntry.selection("SPARK_GRAFT_BENCH_ONLY",
       sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
-    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val spark = Sessions.local()
     // Warm the session (JIT, codegen, parquet footer caches) with one small
     // untimed query so startup cost isn't attributed to the first query.
     try SparkEntry.entry(spark).count() catch { case _: Throwable => }

@@ -4,24 +4,25 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Dev aid: dump `.explain("formatted")` for a set of registered rows
   * into one file per row, all from a single session. Usage:
   *   runMain graft.PlanDump <outDir> <suffix> [q1,q2,...]
-  * With no query list, dumps every registered row. Each file is
-  * `<outDir>/<query>_<suffix>.txt`. The dump is the pre-execution plan
-  * (AdaptiveSparkPlan isFinalPlan=false where AQE applies), which is what
-  * the plan-diff evidence in OPTIMIZATION_r*.md cites; `tools/plandiff.py`
-  * compares two dumps. Exits 1, after dumping everything else, when a
-  * name is unknown or a builder threw.
+  * With no query list, dumps every registered row, in name order. Each
+  * file is `<outDir>/<query>_<suffix>.txt`. The dump is the pre-execution
+  * plan (AdaptiveSparkPlan isFinalPlan=false where AQE applies), which is
+  * what the plan-diff evidence in OPTIMIZATION_r*.md cites;
+  * `tools/plandiff.py` compares two dumps. A list that names no row or an
+  * unregistered one exits 1 before Spark starts; a builder that throws
+  * exits 1 after everything else is dumped.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val outDir = new java.io.File(args(0))
-    outDir.mkdirs()
     val suffix = args(1)
+    val only = SparkEntry.selection("PlanDump's row list", args.lift(2))
+    outDir.mkdirs()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Sessions.local()
     spark.sparkContext.setLogLevel("ERROR")
-    val names: Seq[String] =
-      if (args.length > 2) args(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      else SparkEntry.queries.keys.toSeq.sorted
+    val names = SparkEntry.queries.keys.toSeq.sorted
+      .filter(n => only.forall(_.contains(n)))
     val failed =
       dump(spark, names, SparkEntry.queries, sfDir, outDir, suffix)
     spark.stop()

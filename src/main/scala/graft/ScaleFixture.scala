@@ -38,7 +38,7 @@ object ScaleFixture {
     val src = args(0)
     val dst = args(1)
     val k = if (args.length > 2) args(2).toInt else 10
-    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
+    val spark = Sessions.local()
 
     def replicas(table: String)(f: (DataFrame, Int) => DataFrame): Unit = {
       val base = spark.read.parquet(s"$src/$table.parquet")

@@ -42,6 +42,9 @@ object Sessions {
     }
   }
 
+  /** The local core count: `SPARK_GRAFT_CPUS`, else 4. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+
   /** A `local[cpus]` session with `cpus` shuffle partitions, the graft
     * extensions (registered once, so per-query temp-function replacement
     * warnings don't fire), UTC session time, no UI, and WARN logging
@@ -50,7 +53,7 @@ object Sessions {
     * events.parquet carries nanosecond timestamps (INT64 nanos); they
     * surface as long so Tables.events can DIV to micros exactly.
     */
-  def local(cpus: String): SparkSession = {
+  def local(cpus: String = Sessions.cpus): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cpus]")
       .withExtensions(new graft.engine.functions.GraftExtensions)

@@ -32,7 +32,7 @@ object Verify {
     // (unset, every row is dumped).
     val only = SparkEntry.selection("SPARK_GRAFT_VERIFY_ONLY",
       sys.env.get("SPARK_GRAFT_VERIFY_ONLY"))
-    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val spark = Sessions.local()
     new java.io.File(outDir).mkdirs()
     // warm the session (JIT, codegen, parquet footer caches) so the first
     // dumped query isn't billed several seconds of startup cost

@@ -2310,12 +2310,6 @@ object Aggregates {
         .orderBy(col("l_returnflag"))
     },
 
-    // Mergeable Count-Min frequency sketch (second TypedImperativeAggregate
-    // surface): build one 64 KiB sketch per group — elementwise-sum merge,
-    // so the merged grid is identical under any partitioning — then answer
-    // point frequency queries for a probe set in the projection above.
-    // No oracle (hash-grid internals) — one-sidedness, error bound, and
-    // partition-independence asserted in ScalaTest.
     // Misra–Gries heavy hitters (third TypedImperativeAggregate surface):
     // which values dominate a 100 TB stream, answered with 32 counters
     // of state instead of an all-distinct-values shuffle. The summary
@@ -2363,6 +2357,12 @@ object Aggregates {
         .orderBy(col("l_returnflag"))
     },
 
+    // Mergeable Count-Min frequency sketch (second TypedImperativeAggregate
+    // surface): build one 64 KiB sketch per group — elementwise-sum merge,
+    // so the merged grid is identical under any partitioning — then answer
+    // point frequency queries for a probe set in the projection above.
+    // No oracle (hash-grid internals) — one-sidedness, error bound, and
+    // partition-independence asserted in ScalaTest.
     "q_agg_cms_freq" -> { (s, d) =>
       val probes = array((1 to 5).map(i => lit(i.toLong)): _*)
       Tables.lineitem(s, d)

@@ -140,8 +140,7 @@ object Fx {
     * results are unaffected.
     */
   def davg(c: Column, scale: Int = 4): Column =
-    round(sum(c.cast(DecimalType(18, 2))).cast("double") / count(c)
-      + lit(5e-10), scale)
+    eround(sum(c.cast(DecimalType(18, 2))).cast("double") / count(c), scale)
 
   /** Order-independent exact sum with cheap BIGINT aggregation state: the
     * 2dp source value is lifted to exact integer cents ([[cents]]),
@@ -202,13 +201,6 @@ object Fx {
     "0.057991946977686726", "0.051152522447381284",
     "0.04575749056067514")
 
-  /** Oracle-side twin of [[benfordP]]: CASE over the same double
-    * literals. */
-  def oBenfordP(digit: String): String =
-    benfordP.zipWithIndex.map { case (p, i) =>
-      s"WHEN ${i + 1} THEN CAST($p AS DOUBLE)"
-    }.mkString(s"CASE $digit ", " ", " END")
-
   /** cos/sin(2πk/24) for k = 0..23 as shortest-repr double literals —
     * the one trig table behind q_ts_dft_power's four divisor periods
     * (24/12/8/6h share it via index (t mod 24)·(24/P) mod 24). Same
@@ -247,7 +239,6 @@ object Fx {
     s"CAST(sum(CAST($x AS DECIMAL(18,$scale))) AS DOUBLE)"
   def oAvg(x: String, scale: Int = 4): String =
     s"round(CAST(sum(CAST($x AS DECIMAL(18,2))) AS DOUBLE) / count($x) + 5e-10, $scale)"
-  def oRound(x: String, scale: Int): String = s"round($x + 5e-10, $scale)"
   def oLsum(x: String): String = s"CAST(sum(${oCents(x)}) AS BIGINT) / 100.0"
   def oCents(x: String): String = s"CAST(round($x * 100) AS BIGINT)"
   def oMd5Bits(x: String, hex: Int): String =

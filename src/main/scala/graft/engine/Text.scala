@@ -870,7 +870,7 @@ object Text {
           eround(col("n_docs").cast("double") / col("tot_n"), 6)
             .as("raw_share"),
           eround(ratio, 6).as("weight"),
-          round(ratio * 10000 + lit(5e-10), 0).cast("long").as("quota_10k"))
+          eround(ratio * 10000, 0).cast("long").as("quota_10k"))
         .orderBy(col("lang"))
     },
 
@@ -2259,8 +2259,8 @@ object Text {
       val tot = st.agg(sum(col("wd")).as("wtot"))
       val alloc = st.crossJoin(broadcast(tot))
         .withColumn("n_alloc",
-          round(lit(1000.0) * col("wd").cast("double")
-            / col("wtot").cast("double") + lit(5e-10), 0).cast("long"))
+          eround(lit(1000.0) * col("wd").cast("double")
+            / col("wtot").cast("double"), 0).cast("long"))
         .select(col("event_type"), col("nh"), col("sh"), col("n_alloc"))
       val ranked = ev
         .withColumn("rn", row_number().over(

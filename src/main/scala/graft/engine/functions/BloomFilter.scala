@@ -1,12 +1,9 @@
 package graft.engine.functions
 
-import java.nio.ByteBuffer
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, XxHash64Function}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BinaryType, BooleanType, DataType, LongType}
+import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
 
 /** Bloom-filter membership sketch as a TypedImperativeAggregate (SURVEY
   * §4.3 exception (b)): the 100 TB runtime-filter primitive — build a
@@ -34,13 +31,10 @@ case class BloomAgg(
     numHashes: Int = 5,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] {
+  extends BinarySketch[Array[Long]] {
 
   require(Integer.bitCount(numBits) == 1, "numBits must be a power of two")
 
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
   override def prettyName: String = "bloom_agg"
 
   override def createAggregationBuffer(): Array[Long] =
@@ -49,11 +43,11 @@ case class BloomAgg(
   override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
     val v = child.eval(input)
     if (v != null) {
-      val h1 = XxHash64Function.hash(v, child.dataType, BloomBits.seedA)
-      val h2 = XxHash64Function.hash(v, child.dataType, BloomBits.seedB) | 1L
+      val h1 = BloomBits.h1(v, child.dataType)
+      val h2 = BloomBits.h2(v, child.dataType)
       var i = 0
       while (i < numHashes) {
-        val bit = java.lang.Math.floorMod(h1 + i * h2, numBits.toLong).toInt
+        val bit = BloomBits.bit(h1, h2, i, numBits)
         buf(bit >>> 6) |= 1L << (bit & 63)
         i += 1
       }
@@ -61,31 +55,13 @@ case class BloomAgg(
     buf
   }
 
-  override def merge(buf: Array[Long], other: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i < buf.length) { buf(i) |= other(i); i += 1 }
-    buf
-  }
+  override def merge(buf: Array[Long], other: Array[Long]): Array[Long] =
+    LongCells.merge(buf, other)(_ | _)
 
-  override def eval(buf: Array[Long]): Any = serialize(buf)
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(12 + buf.length * 8)
-    bb.putInt(numBits).putInt(numHashes)
-      .putInt(BloomBits.typeTag(child.dataType))
-    var i = 0
-    while (i < buf.length) { bb.putLong(buf(i)); i += 1 }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = ByteBuffer.wrap(bytes)
-    val m = bb.getInt; bb.getInt; bb.getInt
-    val buf = new Array[Long](m / 64)
-    var i = 0
-    while (i < buf.length) { buf(i) = bb.getLong; i += 1 }
-    buf
-  }
+  override def serialize(buf: Array[Long]): Array[Byte] =
+    BloomBits.toBytes(numBits, numHashes, child.dataType, buf)
+  override def deserialize(bytes: Array[Byte]): Array[Long] =
+    BloomBits.words(bytes)
 
   override def withNewMutableAggBufferOffset(newOffset: Int): BloomAgg =
     copy(mutableAggBufferOffset = newOffset)
@@ -96,16 +72,32 @@ case class BloomAgg(
     copy(child = newChildren.head)
 }
 
-/** Static probe helpers shared by the interpreted and generated paths.
-  * Operate directly on the serialized bytes with manual offset math — no
-  * ByteBuffer allocation per row. (Production note: Spark's own
-  * BloomFilterMightContain binds the deserialized filter once per task
-  * from a scalar subquery; per-row byte math here is the simpler shape and
-  * still ~ns-scale since the header reads are constant-folded by JIT.)
+/** The Bloom codec, and the probe helpers shared by the interpreted and
+  * generated paths. Layout ([[LongCells]]): a header of (numBits,
+  * numHashes, build type tag) ints, then the bit set as longs; bit b is
+  * bit `b & 63` of word `b >>> 6`. The probe reads the header and words
+  * in place with manual offset math — no ByteBuffer allocation per row.
+  * (Production note: Spark's own BloomFilterMightContain binds the
+  * deserialized filter once per task from a scalar subquery; per-row
+  * byte math here is the simpler shape and still ~ns-scale since the
+  * header reads are constant-folded by JIT.)
   */
 object BloomBits {
   val seedA = 0x9E3779B97F4A7C15L
   val seedB = 0xC2B2AE3D27D4EB4FL
+  private val Fields = 3
+
+  def h1(v: Any, dt: DataType): Long = XxHash64Function.hash(v, dt, seedA)
+  def h2(v: Any, dt: DataType): Long = XxHash64Function.hash(v, dt, seedB) | 1L
+
+  /** The i-th of a key's bits among m: idx_i = h1 + i·h2 mod m. */
+  def bit(h1: Long, h2: Long, i: Int, m: Int): Int =
+    java.lang.Math.floorMod(h1 + i * h2, m.toLong).toInt
+
+  def toBytes(m: Int, k: Int, dt: DataType, words: Array[Long]): Array[Byte] =
+    LongCells.write(m, k, typeTag(dt))(words)
+  def words(b: Array[Byte]): Array[Long] =
+    LongCells.read(b, Fields, LongCells.field(b, 0) / 64)
 
   /** Stable tag for the Catalyst type a sketch was built over, carried in
     * the serialized header. xxhash64 hashes an int and a long to DIFFERENT
@@ -118,7 +110,7 @@ object BloomBits {
 
   private def checkTag(ser: Array[Byte], expected: Int,
       probeType: String): Unit = {
-    val tag = readInt(ser, 8)
+    val tag = LongCells.field(ser, 2)
     if (tag != expected)
       throw new IllegalArgumentException(
         s"bloom_contains: probe type $probeType does not match the type " +
@@ -127,24 +119,13 @@ object BloomBits {
           "to the build key's type")
   }
 
-  private def readInt(b: Array[Byte], off: Int): Int =
-    ((b(off) & 0xFF) << 24) | ((b(off + 1) & 0xFF) << 16) |
-      ((b(off + 2) & 0xFF) << 8) | (b(off + 3) & 0xFF)
-
-  private def readLong(b: Array[Byte], off: Int): Long = {
-    var v = 0L
-    var i = 0
-    while (i < 8) { v = (v << 8) | (b(off + i) & 0xFFL); i += 1 }
-    v
-  }
-
-  private def test(ser: Array[Byte], h1: Long, h2odd: Long): Boolean = {
-    val m = readInt(ser, 0)
-    val k = readInt(ser, 4)
+  private def test(ser: Array[Byte], h1: Long, h2: Long): Boolean = {
+    val m = LongCells.field(ser, 0)
+    val k = LongCells.field(ser, 1)
     var i = 0
     while (i < k) {
-      val bit = java.lang.Math.floorMod(h1 + i * h2odd, m.toLong).toInt
-      if ((readLong(ser, 12 + (bit >>> 6) * 8) & (1L << (bit & 63))) == 0L)
+      val b = bit(h1, h2, i, m)
+      if ((LongCells.cell(ser, Fields, b >>> 6) & (1L << (b & 63))) == 0L)
         return false
       i += 1
     }
@@ -159,17 +140,13 @@ object BloomBits {
     */
   def mightContainLong(ser: Array[Byte], v: Long): Boolean = {
     checkTag(ser, longTag, "bigint")
-    val h1 = XxHash64Function.hash(v, LongType, seedA)
-    val h2 = XxHash64Function.hash(v, LongType, seedB) | 1L
-    test(ser, h1, h2)
+    test(ser, h1(v, LongType), h2(v, LongType))
   }
 
   /** Generic path: hashes the boxed value under its Catalyst type. */
   def mightContain(ser: Array[Byte], v: Any, dt: DataType): Boolean = {
     checkTag(ser, typeTag(dt), dt.catalogString)
-    val h1 = XxHash64Function.hash(v, dt, seedA)
-    val h2 = XxHash64Function.hash(v, dt, seedB) | 1L
-    test(ser, h1, h2)
+    test(ser, h1(v, dt), h2(v, dt))
   }
 }
 

@@ -1,16 +1,13 @@
 package graft.engine.functions
 
-import java.nio.ByteBuffer
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, XxHash64Function}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
+import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Count-Min Sketch frequency aggregate (SURVEY §4.3 exception (b)): the
   * 100 TB build-once / point-query-many frequency primitive that pairs
-  * with [[KmvDistinct]] (distincts) the way `cms_query` pairs with
+  * with [[KmvSketchAgg]] (distincts) the way `cms_query` pairs with
   * `hll_sketch_estimate`.
   *
   * The buffer is a d×w grid of longs; update increments one counter per
@@ -30,11 +27,8 @@ case class CmsSketch(
     width: Int = 2048,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] {
+  extends BinarySketch[Array[Long]] {
 
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
   override def prettyName: String = "cms_sketch"
 
   override def createAggregationBuffer(): Array[Long] =
@@ -45,38 +39,20 @@ case class CmsSketch(
     if (v != null) {
       var r = 0
       while (r < depth) {
-        val h = XxHash64Function.hash(v, child.dataType, CmsSketch.seed(r))
-        buf(r * width + java.lang.Math.floorMod(h, width.toLong).toInt) += 1
+        buf(CmsSketch.cell(v, child.dataType, r, width)) += 1
         r += 1
       }
     }
     buf
   }
 
-  override def merge(buf: Array[Long], other: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i < buf.length) { buf(i) += other(i); i += 1 }
-    buf
-  }
+  override def merge(buf: Array[Long], other: Array[Long]): Array[Long] =
+    LongCells.merge(buf, other)(_ + _)
 
-  override def eval(buf: Array[Long]): Any = serialize(buf)
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(8 + buf.length * 8)
-    bb.putInt(depth).putInt(width)
-    var i = 0
-    while (i < buf.length) { bb.putLong(buf(i)); i += 1 }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = ByteBuffer.wrap(bytes)
-    val d = bb.getInt; val w = bb.getInt
-    val buf = new Array[Long](d * w)
-    var i = 0
-    while (i < buf.length) { buf(i) = bb.getLong; i += 1 }
-    buf
-  }
+  override def serialize(buf: Array[Long]): Array[Byte] =
+    CmsSketch.toBytes(depth, width, buf)
+  override def deserialize(bytes: Array[Byte]): Array[Long] =
+    CmsSketch.grid(bytes)
 
   override def withNewMutableAggBufferOffset(newOffset: Int): CmsSketch =
     copy(mutableAggBufferOffset = newOffset)
@@ -87,9 +63,34 @@ case class CmsSketch(
     copy(child = newChildren.head)
 }
 
+/** The Count-Min codec: a header of (depth, width) ints, then the grid's
+  * longs row by row ([[LongCells]]); a value counts in one cell per row.
+  */
 object CmsSketch {
   /** Independent row seeds (arbitrary fixed odd constants). */
   def seed(r: Int): Long = 0x9E3779B97F4A7C15L * (2 * r + 1)
+
+  /** The grid index of value `v` of type `dt` in row `r`. */
+  def cell(v: Any, dt: DataType, r: Int, width: Int): Int =
+    r * width + java.lang.Math.floorMod(
+      XxHash64Function.hash(v, dt, seed(r)), width.toLong).toInt
+
+  def toBytes(depth: Int, width: Int, grid: Array[Long]): Array[Byte] =
+    LongCells.write(depth, width)(grid)
+  def grid(b: Array[Byte]): Array[Long] =
+    LongCells.read(b, 2, LongCells.field(b, 0) * LongCells.field(b, 1))
+
+  /** The point estimate of `v`: the least of its d counters, read in place. */
+  def estimate(b: Array[Byte], v: Any, dt: DataType): Long = {
+    val (d, w) = (LongCells.field(b, 0), LongCells.field(b, 1))
+    var best = Long.MaxValue
+    var r = 0
+    while (r < d) {
+      best = math.min(best, LongCells.cell(b, 2, cell(v, dt, r, w)))
+      r += 1
+    }
+    best
+  }
 }
 
 /** Point query over a serialized [[CmsSketch]]: min over the d counters
@@ -109,20 +110,7 @@ case class CmsQuery(sketch: Expression, probe: Expression)
     val sk = sketch.eval(input)
     val v = probe.eval(input)
     if (sk == null || v == null) null
-    else {
-      val bb = ByteBuffer.wrap(sk.asInstanceOf[Array[Byte]])
-      val d = bb.getInt; val w = bb.getInt
-      var best = Long.MaxValue
-      var r = 0
-      while (r < d) {
-        val h = XxHash64Function.hash(v, probe.dataType, CmsSketch.seed(r))
-        val idx = 8 + (r * w + java.lang.Math.floorMod(h, w.toLong).toInt) * 8
-        val c = bb.getLong(idx)
-        if (c < best) best = c
-        r += 1
-      }
-      best
-    }
+    else CmsSketch.estimate(sk.asInstanceOf[Array[Byte]], v, probe.dataType)
   }
 
   override protected def withNewChildrenInternal(

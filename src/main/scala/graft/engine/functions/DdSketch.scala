@@ -6,9 +6,8 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType}
+import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** DDSketch-style relative-error quantile sketch as a
   * TypedImperativeAggregate — the mergeable percentile primitive for
@@ -35,29 +34,13 @@ case class DdSketch(
     alpha: Double = 0.01,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[mutable.HashMap[Int, Long]] {
+  extends BinarySketch[mutable.HashMap[Int, Long]] {
 
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
   override def prettyName: String = "dd_sketch"
+  override protected def accepts: Option[(Set[DataType], String)] =
+    Some(Set[DataType](DoubleType) -> "requires a double input (cast first)")
 
-  // update() casts to Double; without this check `dd_sketch(int_col)`
-  // would die at RUNTIME with ClassCastException instead of a clean
-  // analysis error (same discipline as MisraGries)
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case DoubleType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-          .TypeCheckFailure(
-            s"dd_sketch requires a double input (cast first), got ${other.sql}")
-    }
-
-  private val gamma = (1 + alpha) / (1 - alpha)
-  private val logGamma = math.log(gamma)
+  private val logGamma = math.log(DdSketch.gamma(alpha))
 
   override def createAggregationBuffer(): mutable.HashMap[Int, Long] =
     mutable.HashMap.empty
@@ -66,10 +49,7 @@ case class DdSketch(
       input: InternalRow): mutable.HashMap[Int, Long] = {
     val v = child.eval(input)
     if (v != null) {
-      val x = v.asInstanceOf[Double]
-      val idx =
-        if (x > 0) math.ceil(math.log(x) / logGamma).toInt
-        else DdSketch.ZeroBucket
+      val idx = DdSketch.bucket(v.asInstanceOf[Double], logGamma)
       buf.update(idx, buf.getOrElse(idx, 0L) + 1)
     }
     buf
@@ -81,27 +61,11 @@ case class DdSketch(
     buf
   }
 
-  override def eval(buf: mutable.HashMap[Int, Long]): Any = serialize(buf)
-
-  /** Bucket entries sorted by index — canonical bytes for a given
-    * dataset regardless of hash-map iteration order.
-    */
-  override def serialize(buf: mutable.HashMap[Int, Long]): Array[Byte] = {
-    val entries = buf.toArray.sortBy(_._1)
-    val bb = ByteBuffer.allocate(12 + entries.length * 12)
-    bb.putDouble(alpha).putInt(entries.length)
-    entries.foreach { case (i, c) => bb.putInt(i).putLong(c) }
-    bb.array()
-  }
-
+  override def serialize(buf: mutable.HashMap[Int, Long]): Array[Byte] =
+    DdSketch.toBytes(alpha, buf)
   override def deserialize(bytes: Array[Byte]): mutable.HashMap[Int, Long] = {
-    val bb = ByteBuffer.wrap(bytes)
-    bb.getDouble
-    val n = bb.getInt
-    val buf = mutable.HashMap.empty[Int, Long]
-    var i = 0
-    while (i < n) { buf.update(bb.getInt, bb.getLong); i += 1 }
-    buf
+    val b = DdSketch.fromBytes(bytes)
+    mutable.HashMap.from(b.idx.zip(b.cnt))
   }
 
   override def withNewMutableAggBufferOffset(newOffset: Int): DdSketch =
@@ -113,9 +77,45 @@ case class DdSketch(
     copy(child = newChildren.head)
 }
 
+/** The DDSketch codec. Layout: α as a double, the bucket count as an int,
+  * then one (index int, count long) entry per occupied bucket in index
+  * order — canonical bytes for a given dataset regardless of hash-map
+  * iteration order.
+  */
 object DdSketch {
   /** Sentinel bucket for non-positive inputs (below every log bucket). */
   val ZeroBucket: Int = Int.MinValue
+
+  def gamma(alpha: Double): Double = (1 + alpha) / (1 - alpha)
+
+  /** The bucket of `x`: ceil(log_γ x), or [[ZeroBucket]] when x ≤ 0. */
+  def bucket(x: Double, logGamma: Double): Int =
+    if (x > 0) math.ceil(math.log(x) / logGamma).toInt else ZeroBucket
+
+  /** The value bucket `b` answers: its midpoint 2γ^b/(γ+1), within α. */
+  def value(b: Int, gamma: Double): Double =
+    if (b == ZeroBucket) 0.0 else 2.0 * math.pow(gamma, b) / (gamma + 1)
+
+  def toBytes(alpha: Double, buckets: collection.Map[Int, Long]): Array[Byte] = {
+    val entries = buckets.toArray.sortBy(_._1)
+    val bb = ByteBuffer.allocate(12 + entries.length * 12)
+    bb.putDouble(alpha).putInt(entries.length)
+    entries.foreach { case (i, c) => bb.putInt(i).putLong(c) }
+    bb.array()
+  }
+
+  /** A sketch's α and its buckets in index order. */
+  final case class Buckets(alpha: Double, idx: Array[Int], cnt: Array[Long])
+
+  def fromBytes(bytes: Array[Byte]): Buckets = {
+    val bb = ByteBuffer.wrap(bytes)
+    val alpha = bb.getDouble
+    val n = bb.getInt
+    val b = Buckets(alpha, new Array[Int](n), new Array[Long](n))
+    var i = 0
+    while (i < n) { b.idx(i) = bb.getInt; b.cnt(i) = bb.getLong; i += 1 }
+    b
+  }
 }
 
 /** `dd_quantile(sketch, q)` — quantile estimate from a serialized
@@ -137,26 +137,15 @@ case class DdQuantile(sketch: Expression, q: Expression)
     val qv = q.eval(input)
     if (sk == null || qv == null) null
     else {
-      val bb = ByteBuffer.wrap(sk.asInstanceOf[Array[Byte]])
-      val alpha = bb.getDouble
-      val gamma = (1 + alpha) / (1 - alpha)
-      val n = bb.getInt
+      val b = DdSketch.fromBytes(sk.asInstanceOf[Array[Byte]])
+      val n = b.idx.length
       if (n == 0) null
       else {
-        val idx = new Array[Int](n)
-        val cnt = new Array[Long](n)
-        var i = 0
-        var total = 0L
-        while (i < n) {
-          idx(i) = bb.getInt; cnt(i) = bb.getLong; total += cnt(i); i += 1
-        }
-        val rank = (qv.asInstanceOf[Double] * (total - 1)).toLong
+        val rank = (qv.asInstanceOf[Double] * (b.cnt.sum - 1)).toLong
         var seen = 0L
-        i = 0
-        while (i < n && seen + cnt(i) <= rank) { seen += cnt(i); i += 1 }
-        val b = idx(math.min(i, n - 1))
-        if (b == DdSketch.ZeroBucket) 0.0
-        else 2.0 * math.pow(gamma, b) / (gamma + 1)
+        var i = 0
+        while (i < n && seen + b.cnt(i) <= rank) { seen += b.cnt(i); i += 1 }
+        DdSketch.value(b.idx(math.min(i, n - 1)), DdSketch.gamma(b.alpha))
       }
     }
   }

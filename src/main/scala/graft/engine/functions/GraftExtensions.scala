@@ -17,7 +17,8 @@ object GraftFunctions {
   val table: Seq[Fn] = Seq(
     Fn("cosine_sim", classOf[CosineSimilarity],
       e => CosineSimilarity(e(0), e(1))),
-    Fn("kmv_distinct", classOf[KmvDistinct], e => KmvDistinct(e.head)),
+    Fn("kmv_distinct", classOf[KmvEstimate],
+      e => KmvEstimate(KmvSketchAgg(e.head).toAggregateExpression())),
     Fn("cms_sketch", classOf[CmsSketch], e => CmsSketch(e.head)),
     Fn("cms_query", classOf[CmsQuery], e => CmsQuery(e(0), e(1))),
     Fn("bloom_agg", classOf[BloomAgg], e => BloomAgg(e.head)),

@@ -6,7 +6,6 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -37,25 +36,16 @@ case class MisraGries(
     k: Int = 32,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[mutable.HashMap[Any, Long]] {
+  extends SketchAggregate[mutable.HashMap[Any, Long]] {
 
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("item", child.dataType),
     StructField("est", LongType))))
   override def prettyName: String = "heavy_hitters"
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case LongType | IntegerType | StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-          .TypeCheckFailure(
-            s"heavy_hitters supports bigint/int/string, got ${other.sql}")
-    }
+  override protected def accepts: Option[(Set[DataType], String)] =
+    Some(Set[DataType](LongType, IntegerType, StringType) ->
+      "supports bigint/int/string")
 
   override def createAggregationBuffer(): mutable.HashMap[Any, Long] =
     mutable.HashMap.empty

@@ -88,6 +88,19 @@ class LoudFailureSpec extends SparkSuite {
     assert(!err.contains("SparkContext"))
   }
 
+  test("PlanDump exits 1 on a malformed row list before Spark starts") {
+    val out = Files.createTempDirectory("plandump-empty")
+    for ((v, why) <- Seq("" -> "is set but names no row",
+        "q_agg_group,q_nope" -> "names unregistered rows: q_nope")) {
+      val (code, err) = runMain("graft.PlanDump",
+        "SPARK_GRAFT_SF_DIR" -> sf, out.toString, "t", v)
+      assert(code === 1)
+      assert(err.contains(s"PlanDump's row list $why"))
+      assert(!err.contains("SparkContext"))
+      assert(out.toFile.list().isEmpty)
+    }
+  }
+
   test("PlanDump names unknown and throwing rows and dumps the others") {
     val out = Files.createTempDirectory("plandump-spec").toFile
     val failed = PlanDump.dump(spark,

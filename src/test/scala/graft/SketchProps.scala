@@ -3,14 +3,14 @@ package graft
 import org.scalacheck.{Prop, Properties}
 import org.scalacheck.Prop.{forAll, propBoolean}
 import graft.engine.Multimodal
-import graft.engine.functions.KmvDistinct
+import graft.engine.functions.{Kmv, KmvSketchAgg}
 
 /** Generative (ScalaCheck) properties over the engine's pure primitives:
   * sketch buffer algebra and the multimodal decoder stub (SURVEY §5.2.3).
   */
 object SketchProps extends Properties("sketches") {
 
-  private val kmv = KmvDistinct(
+  private val kmv = KmvSketchAgg(
     org.apache.spark.sql.catalyst.expressions.Literal(1L), k = 64)
 
   private def buf(xs: Seq[Long]) = {
@@ -38,7 +38,7 @@ object SketchProps extends Properties("sketches") {
   property("eval is exact below k distinct values") = forAll {
     (xs: Set[Long]) =>
       (xs.size < 64) ==>
-        (kmv.eval(buf(xs.toSeq)).asInstanceOf[Long] == xs.size.toLong)
+        (Kmv.estimate(buf(xs.toSeq), 64) == xs.size.toLong)
   }
 
   private def bloomOf(xs: Seq[Long]): Array[Byte] = {
